@@ -30,8 +30,12 @@ object Bench {
         case c => c.toString
       } + "\""
 
-    // warmup: JVM/codegen/parquet-footer costs land here, not on the first
-    // timed query
+    // warmup: JVM start, class loading and parquet-footer costs land here,
+    // not on the first timed query. Each query's own generated classes do
+    // not: its first run compiles them, and best-of-N keeps a later run of
+    // the same query, back to back, which finds them in the codegen cache.
+    // (An interleaved mix of queries recompiles whatever that cache
+    // evicted — GraftConf.CodegenCacheEntries, RUNBOOK §7.)
     try {
       Tables.lineitem(spark, sfDir).limit(1000)
         .groupBy("l_returnflag").count().count()

@@ -45,11 +45,32 @@ object GraftConf {
     */
   val JoinPushdownConf = "spark.sql.optimizer.datasourceV2JoinPushdown"
 
+  /** Entries in Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is
+    * keyed by the generated source text, so it holds compiled code, never
+    * data or results, and `clearCache` leaves it alone. At the default a
+    * session serving a mix of catalog queries recompiles nearly every
+    * class it reuses: seven queries already need ~121 classes, so LRU
+    * eviction drops each one before its next use and every warm pass
+    * re-runs Janino on ~107 classes. The bound is at least twice the
+    * measured working set: one cold cycle of the whole 183-query catalog
+    * at sf0.001 compiles ~1,650 distinct classes, and the next cycle
+    * 36-48 (2,260 at the default). A cached class holds ~37 KB of heap
+    * after GC, plus ~10 KB of metaspace, so a full cache is ~190 MB.
+    */
+  val CodegenCacheEntries: Int = 4096
+
+  /** Static SQL conf: it only takes effect at session construction, and
+    * the one JVM-wide cache is sized by whichever session compiles first.
+    */
+  val CodegenCacheConf = "spark.sql.codegen.cache.maxEntries"
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       PackedIndexFallbackThreshold.toString)
       .config("spark.sql.files.openCostInBytes", ScanOpenCostBytes.toString)
       .config(JoinPushdownConf, "true")
+      .config(CodegenCacheConf, CodegenCacheEntries.toString)
       // the engine's optimizer rules + SQL functions (r14: includes
       // ResidualJoinHoist, which must run in the operator-optimization
       // batch — experimental.extraOptimizations would be too late, it
@@ -59,6 +80,9 @@ object GraftConf {
   /** For sessions built elsewhere (e.g. a user session passed straight
     * into the query registry): apply the same tuning explicitly, by
     * choice rather than as a hidden side effect of building a query.
+    * The runtime confs only: [[CodegenCacheConf]] is static, so a live
+    * session cannot take it (Spark refuses the set). Give it to the
+    * builder of such a session yourself, before it is first created.
     */
   def tune(s: SparkSession): Unit = {
     s.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",

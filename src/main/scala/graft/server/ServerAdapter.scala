@@ -1074,7 +1074,8 @@ final class FakeServerClient(rootDir: Option[String] = None)
     * hundreds of batches at one collection. Duplicate-key detection uses
     * a JVM-wide per-collection `_id` set — the unique-index stand-in —
     * seeded by one file read and invalidated whenever the staged path
-    * (updates/upserts, which can mint ids) runs.
+    * (updates/upserts, which can mint ids) runs, or the data file is gone
+    * or no longer the size the set was taken at.
     */
   override def bulkWrite(ns: String, models: Iterator[WriteModel], ordered: Boolean): BulkResult = {
     tick("bulkWrite")
@@ -1101,13 +1102,21 @@ final class FakeServerClient(rootDir: Option[String] = None)
       ordered: Boolean): BulkResult = {
     import java.nio.file.{Files => F}
     val dataPath = BsonCollection.shardPath(c.dir, 1, 0)
-    val ids = FakeServerClient.knownIds.computeIfAbsent(c.dir, _ => {
-      val s = scala.collection.mutable.HashSet.empty[BsonValue]
-      if (F.exists(dataPath))
-        graft.files.BsonFiles.readAll(dataPath.toString)
-          .foreach(d => d.get("_id").foreach(s += _))
-      s
-    })
+    def fileSize: Long = if (F.exists(dataPath)) F.size(dataPath) else -1L
+    // the set is only good for the file it was read from: a collection
+    // directory deleted and re-created in this JVM (or a file rewritten
+    // behind the set) shows as a missing file or a different size
+    val known = FakeServerClient.knownIds.get(c.dir) match {
+      case k if k != null && k.fileBytes == fileSize => k
+      case _ =>
+        val k = new FakeServerClient.KnownIds(fileSize)
+        if (k.fileBytes >= 0)
+          graft.files.BsonFiles.readAll(dataPath.toString)
+            .foreach(d => d.get("_id").foreach(k.ids += _))
+        FakeServerClient.knownIds.put(c.dir, k)
+        k
+    }
+    val ids = known.ids
     val out = new java.io.BufferedOutputStream(
       new java.io.FileOutputStream(dataPath.toString, true), 1 << 20)
     var inserted = 0L
@@ -1127,6 +1136,7 @@ final class FakeServerClient(rootDir: Option[String] = None)
       }
     } finally {
       out.close()
+      known.fileBytes = fileSize
       // the .splits side file (written by staged applies) no longer covers
       // the appended tail — drop it; readers fall back to header walks
       F.deleteIfExists(
@@ -1349,10 +1359,19 @@ object FakeServerClient {
   private[server] def lockFor(dir: String): Object =
     writeLocks.computeIfAbsent(dir, _ => new Object)
 
+  /** The `_id`s in a collection's data file, and that file's size when
+    * they were last in step with it (-1: no file). */
+  private[server] final class KnownIds(var fileBytes: Long) {
+    val ids: scala.collection.mutable.HashSet[BsonValue] =
+      scala.collection.mutable.HashSet.empty[BsonValue]
+  }
+
   /** Unique-index stand-in: `_id`s present per collection dir, shared
     * JVM-wide so every client instance (one per task) sees one index —
-    * valid under local[k] exactly like the write lock above.
+    * valid under local[k] exactly like the write lock above. Read and
+    * replaced only under that lock; reseeded from the file whenever its
+    * recorded size no longer matches.
     */
   private[server] val knownIds =
-    new java.util.concurrent.ConcurrentHashMap[String, scala.collection.mutable.HashSet[BsonValue]]()
+    new java.util.concurrent.ConcurrentHashMap[String, KnownIds]()
 }

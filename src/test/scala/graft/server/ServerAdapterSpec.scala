@@ -126,4 +126,29 @@ class ServerAdapterSpec extends AnyFunSuite {
     }
     c.close()
   }
+
+  test("a collection directory deleted and re-created takes the same _ids again") {
+    // one client per write, sharing a root, as DirServerFactory hands out
+    // per task: the JVM-wide _id set must follow the files, not outlive them
+    val root = java.nio.file.Files.createTempDirectory("graft-knownids")
+    def client = new FakeServerClient(Some(root.toString))
+    def insert(ordered: Boolean) = client.bulkWrite("test.ids",
+      (1 to 50).iterator.map(i => InsertOne(BDoc("_id" -> BInt32(i), "v" -> BInt64(i.toLong)))),
+      ordered)
+    def deleteRoot(): Unit = {
+      val stream = java.nio.file.Files.walk(root)
+      try stream.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally stream.close()
+    }
+    try {
+      assert(insert(ordered = true).inserted === 50)
+      // the same ids into the live collection are still duplicates
+      val dup = insert(ordered = false)
+      assert(dup.inserted === 0 && dup.errors.size === 50)
+      deleteRoot()
+      assert(insert(ordered = true).inserted === 50)
+      assert(client.find("test.ids", Find()).size === 50)
+    } finally deleteRoot()
+  }
 }
