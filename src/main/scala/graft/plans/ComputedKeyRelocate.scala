@@ -91,7 +91,7 @@ object ComputedKeyRelocate extends Rule[LogicalPlan] {
   }
 
   private def eligible(rel: DataSourceV2Relation): Boolean =
-    Option(rel.options.get("assume_uniform_storage")).exists(_.toBoolean) &&
+    graft.source.Pushdown.uniformStorage(rel.options.asScala.toMap) &&
       !rel.options.containsKey("unwind_path")
       // multi-collection file scans ADMIT since r18: entries share the
       // scan-level schema/column_mapping (CollectionConf has no mapping

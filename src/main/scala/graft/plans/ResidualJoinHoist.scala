@@ -270,8 +270,7 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
   private def docFieldOf(opts: Map[String, String],
       x: Expression): Option[String] = x match {
     case a: Attribute =>
-      val mapping = opts.get("column_mapping")
-        .map(graft.source.ColumnMapping.parse).getOrElse(Map.empty[String, String])
+      val mapping = graft.source.ColumnMapping.fromOptions(opts)
       Some(mapping.getOrElse(a.name, a.name))
     case _ => None
   }
@@ -281,7 +280,7 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
     import org.apache.spark.sql.types._
     val ordered = Set[DataType](IntegerType, LongType, DoubleType,
       TimestampType, DateType)
-    val uniform = opts.get("assume_uniform_storage").exists(_.toBoolean)
+    val uniform = graft.source.Pushdown.uniformStorage(opts)
     // STRING range operands (r18): admitted only under the side's
     // ascii_columns declaration — mirror of rangeKeySafe's reasoning
     // (ASCII makes UTF-8-byte, UTF-16-unit, and server-binary orders
@@ -306,7 +305,7 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
     val always = Set[DataType](IntegerType, DoubleType, BooleanType)
     val uniform = Set[DataType](LongType, TimestampType, StringType, DateType)
     always.contains(dt) || (uniform.contains(dt) &&
-      opts.get("assume_uniform_storage").exists(_.toBoolean))
+      graft.source.Pushdown.uniformStorage(opts))
   }
 
   // ---- source-translatability probe ----

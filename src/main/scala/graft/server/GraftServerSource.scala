@@ -1,13 +1,12 @@
 package graft.server
 
 import graft.bson._
-import graft.query.{BQuery, BQueryJson, FilterTranslator}
-import graft.source.{FieldResolve, GroupAggParse, Planners}
+import graft.query.{BQuery, BQueryJson}
+import graft.source.{AggPush, FieldResolve, GroupAggParse, GroupedAgg, Planners, Pushdown, SamplePush}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.aggregate
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
@@ -231,17 +230,33 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   private[server] def joinOptions: Map[String, String] = options
   private[server] def joinMapping: Map[String, String] = mapping
 
-  /** Column-name remapping: Spark column -> (dotted) document field, the
-    * `mongo.columns.mapping` analog (HiveMongoInputFormat.java:211-240),
-    * r14 on the SERVER transport too — pushed filters, sample keys,
-    * top-n orders, group keys, probes, and join keys all resolve through
-    * it (FieldResolve composes a mapped HEAD with a verbatim nested
-    * tail), and the readers decode by document path. Mapped columns need
-    * an explicit read schema (inference samples document names).
+  // `limit` is graftbson's per-partition cursor cap; no server cursor or
+  // reader honours it, so accepting it would silently ignore it
+  if (options.contains("limit"))
+    throw new IllegalArgumentException(
+      "graftserver does not support the `limit` option (graftbson's " +
+        "per-partition cursor cap): use Spark's .limit(n) on the DataFrame")
+
+  /** Column-name remapping (`column_mapping`: Spark column -> dotted
+    * document field, the `mongo.columns.mapping` analog,
+    * HiveMongoInputFormat.java:211-240, r14 on the SERVER transport too)
+    * — pushed filters, sample keys, top-n orders, group keys, probes, and
+    * join keys all resolve through it (FieldResolve composes a mapped
+    * HEAD with a verbatim nested tail), and the readers decode by
+    * document path. Mapped columns need an explicit read schema
+    * (inference samples document names).
+    *
+    * DERIVED columns (r17, `computed_columns` — absorbed by
+    * ComputedKeyRelocate): materialized by a `$set` in pipeline-rendered
+    * paths (grouped aggregates, join legs) and injected by the readers
+    * on plain cursor reads. Pushdowns that would address the synthetic
+    * field in FIND-land (no `$set` exists there) refuse: filters on a
+    * computed column stay residual (Spark re-checks over the injected
+    * value — exact), plain-scan TopN / MIN-MAX probes / sample keys /
+    * split keys refuse outright.
     */
-  private val mapping: Map[String, String] =
-    options.get("column_mapping").map(graft.source.ColumnMapping.parse)
-      .getOrElse(Map.empty)
+  private[server] val cols = Pushdown.Columns.of(tableSchema, options)
+  private val mapping = cols.mapping
 
   /** `$unwind` directive (r14, injected by the UnwindRelocate rule when
     * an explode() sits directly over this relation): the scan emits one
@@ -265,22 +280,8 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       // MAP explode (r15): $objectToArray + $unwind of the synthetic kv
       // field; key/value columns read __graft_kv.k/.v via their mapping
       mapKv = options.get("unwind_kind").contains("map")))
-  private val unwindElement: Option[String] = options.get("unwind_element")
   /** POST-unwind query (accepted element-column filters). */
   private var unwindPost: BQuery = BQuery.True
-
-  /** DERIVED columns (r17, `computed_columns` — absorbed by
-    * ComputedKeyRelocate): materialized by a `$set` in pipeline-rendered
-    * paths (grouped aggregates, join legs) and injected by the readers
-    * on plain cursor reads. Pushdowns that would address the synthetic
-    * field in FIND-land (no `$set` exists there) refuse: filters on a
-    * computed column stay residual (Spark re-checks over the injected
-    * value — exact), plain-scan TopN / MIN-MAX probes / sample keys /
-    * split keys refuse outright.
-    */
-  private[server] val computedCols: Seq[graft.query.ComputedCol] =
-    graft.query.ComputedCol.fromOptions(options)
-  private val computedOuts: Set[String] = computedCols.map(_.out).toSet
 
   private var required: StructType = tableSchema
   private var pushedQuery: BQuery = BQuery.True
@@ -290,12 +291,12 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   private var offset: Option[Int] = None
   // compound order spec (col, descending)+ and the limit
   private var topN: Option[(Seq[(String, Boolean)], Int)] = None
-  private var aggPushed: Option[Seq[graft.source.AggPush]] = None
-  private var groupedAgg: Option[ServerGroupedAgg] = None
-  private var sample: Option[graft.source.SamplePush] = None
+  private var aggPushed: Option[Seq[AggPush]] = None
+  private var groupedAgg: Option[GroupedAgg] = None
+  private var sample: Option[SamplePush] = None
 
   /** Pushed TABLESAMPLE — the same deterministic keyed Bernoulli as the
-    * file source ([[graft.source.SamplePush]]), evaluated client-side by
+    * file source ([[SamplePush]]), evaluated client-side by
     * the partition reader over the cursor's documents (MQL has no md5,
     * so the docs still cross the wire; the win is reproducibility — the
     * server's own `$sample` stage is random — plus the removal of
@@ -313,23 +314,13 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       withReplacement: Boolean, seed: Long): Boolean = {
     // `sample_key` may name a nested subfield — the keep-predicate and
     // the cursor projection both work on dotted paths
-    val keyCol = options.get("sample_key")
-      .flatMap(k => FieldResolve.resolveName(tableSchema, k, mapping))
-      .filter(r => graft.source.SamplePush.KeyTypes.contains(r.dataType))
-      // a COMPUTED sample key refuses (r17): a derived bin is a poor
-      // sampling key by construction (it collides all rows of a bin),
-      // and the hidden-carry machinery would need the $set on every
-      // path — refuse loudly rather than sample a missing field
-      .filterNot(r => computedOuts.contains(r.docPath.split('.').head))
-    val keyOk = keyCol.exists(k => graft.source.SamplePush
-      .keyAllowedUnderUnwind(k.docPath, unwind.map(_.path)))
-    val eligible = !withReplacement && keyOk &&
-      !options.contains("limit") &&
+    val keyCol = Pushdown.sampleKey(cols, options, unwind.map(_.path))
+    val eligible = !withReplacement && keyCol.isDefined &&
       limit.isEmpty && offset.isEmpty && topN.isEmpty &&
       aggPushed.isEmpty && groupedAgg.isEmpty && joined.isEmpty
     if (!eligible) false
     else {
-      sample = Some(graft.source.SamplePush(keyCol.get.docPath, lower, upper, seed))
+      sample = Some(SamplePush(keyCol.get.docPath, lower, upper, seed))
       sampleKeyType = keyCol.get.dataType
       true
     }
@@ -343,29 +334,29 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   private[server] var sampleKeyType: org.apache.spark.sql.types.DataType =
     org.apache.spark.sql.types.LongType
 
+  /** `_ns` metadata predicates are not document queries (residual); the
+    * rest is [[Pushdown.splitFilters]], with two wire-only steps around
+    * it. Before: null tests on ARRAY-typed columns stay residual (r15
+    * latent-divergence hunt): the wire form `{$eq/$ne: null}`
+    * element-matches on a live server (`{p: null}` matches `p=[1,null]`
+    * and missing fields), while Spark's IsNull/IsNotNull test the column
+    * value itself — Spark re-checks residuals, so the cost is one
+    * codegen'd row test, never correctness. This also covers an
+    * ARRAY-typed unwound ELEMENT (nested arrays) in the post-unwind
+    * $match. After: under uniform storage every Long/Timestamp/String is
+    * stored as the ONE type this engine writes, so the read-semantics
+    * ReadLong / ReadTime / ReadStr (eq, regex) nodes rewrite to their exact
+    * BRACKET forms — renderable server-side (a $match/cursor query)
+    * instead of client-side residual re-checks, and the grouped/join
+    * pushdowns' fully-renderable gates then accept those filters too (a
+    * plain `WHERE _id > 5` no longer blocks the `$group` pipeline).
+    * Posexplode POS filters are element-scoped: post-unwind the
+    * synthetic pos field exists (includeArrayIndex on pipelines, a
+    * reader-injected match doc on the parent cursor), and int32 literals
+    * compare numerically against its int64 values on both the wire and
+    * this matcher.
+    */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // `_ns` metadata predicates are not document queries — residual; a
-    // filter touching the UNWOUND element column becomes the POST-unwind
-    // query (after `$unwind` the path holds the ELEMENT, so the normal
-    // translation carries exactly Spark's row semantics; parent-column
-    // conjuncts inside it commute, their values are per-parent constants)
-    val (metaFilters, rest) = filters.partition(
-      _.references.contains(GraftServerSource.NsMetaCol))
-    // posexplode POS filters join the element filters: post-unwind the
-    // synthetic pos field exists (includeArrayIndex on pipelines, a
-    // reader-injected match doc on the parent cursor), and int32
-    // literals compare numerically against its int64 values on both
-    // the wire and this matcher. Struct-element SUBFIELD references
-    // (`entry.lang` for explode(array<struct>)) are element-scoped too:
-    // translated pre-unwind they would carry ∃-element semantics
-    // null tests on ARRAY-typed columns stay residual (r15 latent-
-    // divergence hunt): the wire form `{$eq/$ne: null}` element-matches
-    // on a live server (`{p: null}` matches `p=[1,null]` and missing
-    // fields), while Spark's IsNull/IsNotNull test the column value
-    // itself — Spark re-checks residuals, so the cost is one codegen'd
-    // row test, never correctness. Checked BEFORE the element split: an
-    // ARRAY-typed unwound ELEMENT (nested arrays) has the same problem
-    // in the post-unwind $match
     def arrayNullTest(f: Filter): Boolean = f match {
       case org.apache.spark.sql.sources.IsNull(a) =>
         FieldResolve.resolveName(tableSchema, a, mapping)
@@ -375,66 +366,14 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
           .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
       case _ => false
     }
-    val (arrayNullFilters, rest0) = rest.partition(arrayNullTest)
-    // COMPUTED columns (r17): find-land has no `$set`, so a pushed
-    // filter on a derived field would match nothing on the wire.
-    // EXCEPTION — null tests: `mod`/`pmod` are null exactly when their
-    // INPUT is null/missing (never otherwise; a non-numeric storage
-    // fails loud on both sides), so IsNull/IsNotNull on a computed
-    // column rewrite EXACTLY to the same test on its SOURCE field and
-    // push (Spark's join-key isnotnull inference lands here — without
-    // the rewrite one inferred conjunct would block every derived-key
-    // join push). Everything else stays residual; Spark re-checks over
-    // the reader-injected value (exact).
-    // The rewrite substitutes the SPARK column that reads the source
-    // field, NOT the raw doc path: the translator below re-applies the
-    // column_mapping, so a doc path that happens to equal another
-    // MAPPED spark column's name would translate to the wrong stored
-    // field (ADVICE r17). No unambiguous spark-side reader (hand-set
-    // options) → the test stays residual (exact over injected values).
-    def sourceSparkCol(out: String): Option[String] = {
-      val f = computedCols.find(_.out == out).get.field
-      mapping.collectFirst { case (s, d) if d == f => s }
-        .orElse(if (!mapping.contains(f)) Some(f) else None)
-    }
-    val rest1 = rest0.map {
-      case f @ org.apache.spark.sql.sources.IsNotNull(a)
-          if computedOuts.contains(a) =>
-        sourceSparkCol(a).map(org.apache.spark.sql.sources.IsNotNull(_))
-          .getOrElse(f)
-      case f @ org.apache.spark.sql.sources.IsNull(a)
-          if computedOuts.contains(a) =>
-        sourceSparkCol(a).map(org.apache.spark.sql.sources.IsNull(_))
-          .getOrElse(f)
-      case other => other
-    }
-    val (computedFilters, rest2) = rest1.partition(
-      _.references.exists(r => computedOuts.contains(r.split('.').head)))
-    val (elementFilters, docFilters) = rest2.partition(f =>
-      f.references.exists(r => graft.plans.UnwindRelocate.elementScoped(
-        r, unwindElement, options.get("unwind_pos"),
-        options.get("unwind_key"))))
-    val (postQ, postAccepted, postResidual) =
-      FilterTranslator.split(elementFilters, mapping)
-    unwindPost =
-      if (options.get("assume_uniform_storage").exists(_.toBoolean))
-        BQuery.uniformReadBracket(postQ)
-      else postQ
-    val (query, accepted, residual) = FilterTranslator.split(docFilters, mapping)
-    // under uniform storage every Long/Timestamp/String is stored as
-    // the ONE type this engine writes, so the read-semantics ReadLong*/
-    // ReadTime*/ReadStr(eq/regex) nodes rewrite to their exact BRACKET
-    // forms — renderable server-side (a $match/cursor query) instead of
-    // client-side residual re-checks, and the grouped/join pushdowns'
-    // fully-renderable gates then accept those filters too (a plain
-    // `WHERE _id > 5` no longer blocks the `$group` pipeline)
-    pushedQuery =
-      if (options.get("assume_uniform_storage").exists(_.toBoolean))
-        BQuery.uniformReadBracket(query)
-      else query
-    pushed = accepted ++ postAccepted
-    residuals = residual ++ postResidual ++ metaFilters ++
-      arrayNullFilters ++ computedFilters
+    val split = Pushdown.splitFilters(cols, options, filters,
+      GraftServerSource.NsMetaCol, keepResidual = arrayNullTest)
+    def bracketed(q: BQuery): BQuery =
+      if (Pushdown.uniformStorage(options)) BQuery.uniformReadBracket(q) else q
+    unwindPost = bracketed(split.post)
+    pushedQuery = bracketed(split.query)
+    pushed = split.pushed
+    residuals = split.residual
     residuals
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -523,9 +462,8 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   override def pushTopN(
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       n: Int): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection}
     if (joined.isDefined) return pushJoinedTopN(orders, n)
-    if (orders.isEmpty || aggPushed.isDefined || groupedAgg.isDefined ||
+    if (aggPushed.isDefined || groupedAgg.isDefined ||
         limit.isDefined || offset.isDefined || residuals.nonEmpty ||
         sample.isDefined) return false
     // over an unwound scan the top-n selects among UNWOUND rows: the
@@ -536,25 +474,14 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     // order keys may be NESTED subfields: `{"meta.score": -1}` is a
     // legal cursor sort doc (dotted-path key extraction is core server
     // behavior — the reference's MongoPathRetriever convention); the
-    // bracket-safety gate applies to the LEAF type
-    val spec: Seq[Option[(String, Boolean)]] = orders.toSeq.map { o =>
-      import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
-      graft.source.FieldResolve.resolve(tableSchema, o.expression, mapping).flatMap { r =>
-        val typeOk = GraftServerScanBuilder.cursorOrderSafe(r.dataType, options,
-          Some(r.docPath))
-        val desc = o.direction == SortDirection.DESCENDING
-        val nullsOk =
-          if (desc) o.nullOrdering == NullOrdering.NULLS_LAST
-          else o.nullOrdering == NullOrdering.NULLS_FIRST
-        // a COMPUTED order key has no stored field a cursor sort could
-        // walk (find-land has no $set) — refuse; the joined arm's
-        // pipeline $sort runs after the $set and accepts them
-        val storedOk = !computedOuts.contains(r.docPath.split('.').head)
-        if (typeOk && nullsOk && storedOk) Some((r.docPath, desc)) else None
-      }
-    }
-    if (spec.contains(None)) false
-    else { topN = Some((spec.flatten, n)); true }
+    // bracket-safety gate applies to the LEAF type. A COMPUTED order key
+    // has no stored field a cursor sort could walk (find-land has no
+    // $set) — refused; the joined arm's pipeline $sort runs after the
+    // $set and accepts them
+    topN = Pushdown.topNOrder(cols, orders, r =>
+        GraftServerScanBuilder.cursorOrderSafe(r.dataType, options, Some(r.docPath)))
+      .map(keys => (keys.map { case (r, desc) => (r.docPath, desc) }, n))
+    topN.isDefined
   }
 
   /** `ORDER BY ... LIMIT n` over a PUSHED JOIN: a `$sort`+`$limit` tail
@@ -568,24 +495,15 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   private def pushJoinedTopN(
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       n: Int): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
     val j = joined.get
-    if (orders.isEmpty || joinedAgg.isDefined || joinLimit.isDefined ||
+    if (joinedAgg.isDefined || joinLimit.isDefined ||
         joinTopN.isDefined || joinSamples.nonEmpty || joinOffset.isDefined)
       return false
-    val spec: Seq[Option[(String, Boolean)]] = orders.toSeq.map { o =>
-      FieldResolve.resolve(j.schema, o.expression).flatMap { r =>
-        val sideOpts = joinedColOpts.getOrElse(r.docPath.split('.').head, options)
-        val typeOk = GraftServerScanBuilder.cursorOrderSafe(r.dataType, sideOpts)
-        val desc = o.direction == SortDirection.DESCENDING
-        val nullsOk =
-          if (desc) o.nullOrdering == NullOrdering.NULLS_LAST
-          else o.nullOrdering == NullOrdering.NULLS_FIRST
-        if (typeOk && nullsOk) Some((r.docPath, desc)) else None
-      }
-    }
-    if (spec.contains(None)) false
-    else { joinTopN = Some((spec.flatten, n)); true }
+    joinTopN = Pushdown.topNOrder(Pushdown.Columns(j.schema), orders, r =>
+        GraftServerScanBuilder.cursorOrderSafe(r.dataType,
+          joinedColOpts.getOrElse(r.docPath.split('.').head, options)))
+      .map(keys => (keys.map { case (r, desc) => (r.docPath, desc) }, n))
+    joinTopN.isDefined
   }
 
   /** Aggregate pushdown, two strategies in preference order:
@@ -632,45 +550,23 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     // pick the top-level vs `__j.` home (QueryDocs.lookupTail)
     def sideOpts(r: FieldResolve.Ref): Map[String, String] =
       joinedColOpts.getOrElse(r.docPath.split('.').head, options)
-    GroupAggParse.parse(aggregation,
-      e => graft.source.FieldResolve.resolve(j.schema, e),
+    joinedAgg = GroupAggParse.parse(aggregation, Pushdown.Columns(j.schema).resolve,
       r => GraftServerScanBuilder.GroupKeyTypes.contains(r.dataType),
       r => GraftServerScanBuilder.aggValueSafe(r.dataType, sideOpts(r)),
-      r => GraftServerScanBuilder.sumValueSafe(r.dataType, sideOpts(r))) match {
-      case Some(p) =>
-        joinedAgg = Some(ServerGroupedAgg(
-          p.groupCols.map(r => (r.docPath, r.dataType)), p.items))
-        true
-      case None => false
-    }
+      r => GraftServerScanBuilder.sumValueSafe(r.dataType, sideOpts(r))).map(GroupedAgg.of)
+    joinedAgg.isDefined
   }
 
   private def tryProbeAggregation(aggregation: Aggregation): Boolean = {
-    import graft.source.AggPush
     val eligible =
       pushedQuery == BQuery.True && !options.contains("query") &&
         limit.isEmpty && sample.isEmpty && joined.isEmpty && unwind.isEmpty
     if (!eligible) return false
     // probe columns may be nested subfields — the sorted limit-1 probe
     // cursor sorts and projects by dotted path natively
-    def named(e: org.apache.spark.sql.connector.expressions.Expression):
-        Option[(String, org.apache.spark.sql.types.DataType)] =
-      FieldResolve.resolve(tableSchema, e, mapping)
-        .filter(r => GraftServerScanBuilder.aggValueSafe(r.dataType, options,
-          Some(r.docPath)))
-        // a COMPUTED column has no stored field the sorted limit-1
-        // probe could walk (r17) — the grouped pipeline path (with its
-        // $set) handles aggregates over derived fields instead
-        .filterNot(r => computedOuts.contains(r.docPath.split('.').head))
-        .map(r => (r.docPath, r.dataType))
-    val items = aggregation.aggregateExpressions.toSeq.map {
-      case _: aggregate.CountStar => Some(AggPush.RowCount)
-      case m: aggregate.Min => named(m.column).map { case (c, t) => AggPush.MinOf(c, t) }
-      case m: aggregate.Max => named(m.column).map { case (c, t) => AggPush.MaxOf(c, t) }
-      case _ => None
-    }
-    if (items.isEmpty || items.contains(None)) false
-    else { aggPushed = Some(items.flatten); true }
+    aggPushed = Pushdown.globalAgg(cols, aggregation, r =>
+      GraftServerScanBuilder.aggValueSafe(r.dataType, options, Some(r.docPath)))
+    aggPushed.isDefined
   }
 
   /** GROUPED / filtered-global aggregate pushdown — translated to one
@@ -698,31 +594,22 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
         topN.isDefined || residuals.nonEmpty ||
         // the server-side $group computes over the UNSAMPLED collection
         sample.isDefined || joined.isDefined) return false
-    val fullQuery = BQuery.and(GraftServerSource.optionQuery(options), pushedQuery)
-    val planned = QueryDocs.plan(fullQuery)
-    if (!planned.isExact || planned.keyBounds.isDefined) return false
     // the POST-unwind $match sits between $unwind and $group — it must
     // render fully too (its rows are gone after grouping)
-    val postPlanned = QueryDocs.plan(unwindPost)
-    if (!postPlanned.isExact || postPlanned.keyBounds.isDefined) return false
+    if (!QueryDocs.plan(builderQuery).rendersFully ||
+        !QueryDocs.plan(unwindPost).rendersFully) return false
     // group keys and aggregate inputs may be NESTED subfields — the
     // resolver walks the nested StructType; `$group: {_id: "$meta.lang"}`
     // is native MQL, and [[QueryDocs.groupStageDoc]] sanitizes the
     // dotted names a compound `_id` / accumulator FIELD cannot carry.
     // Zero aggregates + >=1 group key = SELECT DISTINCT: a `$group`
     // with only `_id` answers it in #distinct-keys docs per namespace.
-    GroupAggParse.parse(aggregation,
-      e => graft.source.FieldResolve.resolve(tableSchema, e, mapping),
+    groupedAgg = GroupAggParse.parse(aggregation, cols.resolve,
       r => GraftServerScanBuilder.GroupKeyTypes.contains(r.dataType),
       r => GraftServerScanBuilder.aggValueSafe(r.dataType, options,
         Some(r.docPath)),
-      r => GraftServerScanBuilder.sumValueSafe(r.dataType, options)) match {
-      case Some(p) =>
-        groupedAgg = Some(ServerGroupedAgg(
-          p.groupCols.map(r => (r.docPath, r.dataType)), p.items))
-        true
-      case None => false
-    }
+      r => GraftServerScanBuilder.sumValueSafe(r.dataType, options)).map(GroupedAgg.of)
+    groupedAgg.isDefined
   }
 
   // ---- join pushdown (SupportsPushDownJoin) ----
@@ -746,7 +633,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   private var joined: Option[ServerJoin] = None
   // join-arm extensions, mutually exclusive: a $group, a partial
   // $limit, or a partial $sort+$limit appended to the lookup pipeline
-  private var joinedAgg: Option[ServerGroupedAgg] = None
+  private var joinedAgg: Option[GroupedAgg] = None
   private var joinLimit: Option[Long] = None
   private var joinTopN: Option[(Seq[(String, Boolean)], Int)] = None
   /** Pushed TABLESAMPLEs carried INTO the join (r14): deterministic
@@ -757,7 +644,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * joined rows by the sampled side's key window. Lookup-side samples
     * compose only under INNER (a LEFT OUTER's null-extended row must
     * stay, not drop). */
-  private var joinSamples: Seq[graft.source.SamplePush] = Nil
+  private var joinSamples: Seq[SamplePush] = Nil
   /** OFFSET over the joined pipeline: a `$skip` tail on the FINAL joined
     * rows — single-pipeline (`splitter=single`) only, like the plain
     * scan's offset. */
@@ -789,8 +676,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   private def cleanAsDriving: Boolean =
     residuals.isEmpty && limit.isEmpty && offset.isEmpty && topN.isEmpty &&
       aggPushed.isEmpty && groupedAgg.isEmpty &&
-      joined.isEmpty && !options.contains("limit") &&
-      !options.contains("sort") &&
+      joined.isEmpty && !options.contains("sort") &&
       GraftServerSource.nsList(options).size == 1 &&
       // the WHOLE query must render server-side: rows are joined away,
       // so there is no client re-check point for an unrenderable
@@ -799,23 +685,23 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       // lookupJoin `require`s exactly this). Builder-time keyBounds are
       // fine on the DRIVING side (the pipeline renders split KeyRanges
       // bracket-style); the lookup side re-checks below.
-      preQueryPlan.isExact &&
-      (unwind.isEmpty || {
-        val post = QueryDocs.plan(unwindPost)
-        post.isExact && post.keyBounds.isEmpty
-      })
+      QueryDocs.plan(builderQuery).isExact &&
+      (unwind.isEmpty || QueryDocs.plan(unwindPost).rendersFully)
 
-  /** The server-render split of this side's full builder-time query
-    * (option-level AND pushed) — the join gates' renderability input. */
-  private def preQueryPlan: QueryDocs.ServerPlan =
-    QueryDocs.plan(BQuery.and(GraftServerSource.optionQuery(options), pushedQuery))
+  /** This side's full builder-time query: option-level AND pushed. */
+  private def builderQuery: BQuery =
+    BQuery.and(GraftServerSource.optionQuery(options), pushedQuery)
+
+  /** The query a plain scan or driving pipeline runs: [[builderQuery]]
+    * AND the pre-unwind parent prune (True without one). */
+  private def scanQuery: BQuery = BQuery.and(builderQuery, unwindPrune)
 
   // The LOOKUP side additionally needs no `$unwind` (element rows are
   // not parent-atomic across the join boundary) — pushDownJoin gates
   // that per join type once roles are known (`o.unwind.isDefined &&
   // !mirrored`); builder-time queries never carry KeyRange (split
   // ranges are injected per partition), so no extra bounds gate is
-  // needed beyond preQueryPlan.isExact above.
+  // needed beyond the isExact test above.
 
   /** An already-joined builder may CHAIN one more lookup stage (3-way+
     * star queries) as long as no tail pushdown claimed the pipeline yet.
@@ -844,8 +730,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     // millis within one day read as the same Spark date but never $eq —
     // engine writes store canonical midnight millis, so the opt-in holds
     val uniform = Set[DataType](LongType, TimestampType, StringType, DateType)
-    always.contains(dt) || (uniform.contains(dt) &&
-      opts.get("assume_uniform_storage").exists(_.toBoolean))
+    always.contains(dt) || (uniform.contains(dt) && Pushdown.uniformStorage(opts))
   }
 
   /** The condition as a conjunction of column equalities and RANGE
@@ -966,7 +851,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     import org.apache.spark.sql.types._
     val ordered = Set[DataType](IntegerType, LongType, DoubleType,
       TimestampType, DateType)
-    val uniform = opts.get("assume_uniform_storage").exists(_.toBoolean)
+    val uniform = Pushdown.uniformStorage(opts)
     if (dt == StringType)
       uniform && docField.exists(f =>
         GraftServerScanBuilder.asciiCols(opts).contains(f))
@@ -1059,10 +944,10 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
             // from join.output so decode never reads it, but the
             // projection tuple carries the true type for any later
             // type-consulting gate
-            def rekey(sp: graft.source.SamplePush,
+            def rekey(sp: SamplePush,
                 proj: Seq[(String, String, org.apache.spark.sql.types.DataType)],
                 keyType: org.apache.spark.sql.types.DataType):
-                (graft.source.SamplePush,
+                (SamplePush,
                   Option[(String, String, org.apache.spark.sql.types.DataType)]) =
               proj.find(_._1 == sp.key) match {
                 case Some(t) => (sp.copy(key = t._2), None)
@@ -1094,29 +979,21 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
               // sides and FLIP: `l < r` becomes `r > l` from the
               // mirrored pipeline's perspective.
               joined = Some(ServerJoin(rpFull,
-                GraftServerSource.ns(options),
-                BQuery.and(GraftServerSource.optionQuery(options),
-                  pushedQuery),
+                GraftServerSource.ns(options), builderQuery,
                 lpFull, keys.map(_.swap), leftOuter = true, output,
                 unwind = o.unwind, unwindPost = o.unwindPost,
                 ranges = rngRefs.map { case (l, op, r) =>
                   LookupJoin.RangeKey(r.name, flipOp(op), l.name) },
-                leftComputed = o.computedCols, rightComputed = computedCols))
-              joinDriving = Some((o.joinOptions,
-                BQuery.and(
-                  BQuery.and(GraftServerSource.optionQuery(o.joinOptions),
-                    o.pushedQuery),
-                  o.unwindPrune)))
+                leftComputed = o.cols.computed, rightComputed = cols.computed))
+              joinDriving = Some((o.joinOptions, o.scanQuery))
             } else {
               joined = Some(ServerJoin(lpFull,
-                GraftServerSource.ns(o.joinOptions),
-                BQuery.and(GraftServerSource.optionQuery(o.joinOptions),
-                  o.pushedQuery),
+                GraftServerSource.ns(o.joinOptions), o.builderQuery,
                 rpFull, keys, leftOuter, output,
                 unwind = unwind, unwindPost = unwindPost,
                 ranges = rngRefs.map { case (l, op, r) =>
                   LookupJoin.RangeKey(l.name, op, r.name) },
-                leftComputed = computedCols, rightComputed = o.computedCols))
+                leftComputed = cols.computed, rightComputed = o.cols.computed))
             }
             joinedColOpts = lp.map(p => p._2 -> options).toMap ++
               rp.map(p => p._2 -> o.joinOptions).toMap
@@ -1150,7 +1027,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     // never composes (element rows are not parent-atomic there), and a
     // chained COMPUTED side refuses too (r17: the chain renderer has no
     // $set slot; the base pipeline keeps its own computed columns)
-    if (o.unwind.isDefined || o.computedCols.nonEmpty) return false
+    if (o.unwind.isDefined || o.cols.computed.nonEmpty) return false
     val joinedOut: Map[String, org.apache.spark.sql.types.DataType] = j.output.toMap
     // (previous OUTPUT name, new alias, type) over the joined output
     val lpO: Option[Seq[(String, String, org.apache.spark.sql.types.DataType)]] = {
@@ -1210,7 +1087,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
             }
             val renames = lp.map(t => (t._1, t._2)).toMap
             // (rekeyed window, hidden flatten-project pair)
-            val remapped: Seq[(graft.source.SamplePush, Option[(String, String)])] =
+            val remapped: Seq[(SamplePush, Option[(String, String)])] =
               joinSamples.map { sp =>
                 renames.get(sp.key) match {
                   case Some(n) => (sp.copy(key = n), None)
@@ -1222,7 +1099,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
             // the chained collection's own sample: lookup side of this
             // stage — INNER only; an unprojected key rides hidden too
             if (o.sample.isDefined && leftOuter) return false
-            val oSample: Option[(graft.source.SamplePush, Option[(String, String)])] =
+            val oSample: Option[(SamplePush, Option[(String, String)])] =
               o.sample.map { sp =>
                 rp.find(_._1 == sp.key) match {
                   case Some(t) => (sp.copy(key = t._2), None)
@@ -1235,9 +1112,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
             val keys = refs.map { case (l, r) => (l.name, r.name) }
             val stage = ChainStage(
               lp.map(p => (p._1, p._2)) ++ remapped.flatMap(_._2),
-              GraftServerSource.ns(o.joinOptions),
-              BQuery.and(GraftServerSource.optionQuery(o.joinOptions),
-                o.pushedQuery),
+              GraftServerSource.ns(o.joinOptions), o.builderQuery,
               rp.map(p => (p._1, p._2)) ++ oSample.flatMap(_._2).toSeq,
               keys, leftOuter,
               ranges = rngRefs.map { case (l, op, r) =>
@@ -1259,18 +1134,12 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       // non-mirrored driving side: the pre-unwind PARENT prune (derived
       // from the post-unwind element match) rides the pipeline's first
       // $match, exactly as on the plain unwound scan (True without one)
-      val (drivingOpts, drivingQuery) = joinDriving.getOrElse(
-        (options, BQuery.and(
-          BQuery.and(GraftServerSource.optionQuery(options), pushedQuery),
-          unwindPrune)))
+      val (drivingOpts, drivingQuery) = joinDriving.getOrElse((options, scanQuery))
       new GraftServerJoinScan(j, drivingQuery, drivingOpts, joinedAgg, joinLimit,
         joinTopN.map { case (s, n) => (s, n.toLong) }, joinSamples, joinOffset)
     case None =>
-      new GraftServerScan(required,
-        BQuery.and(
-          BQuery.and(GraftServerSource.optionQuery(options), pushedQuery),
-          unwindPrune),
-        limit, options, aggPushed, topN, groupedAgg, offset, sample,
+      new GraftServerScan(required, scanQuery, limit, options, aggPushed, topN,
+        groupedAgg, offset, sample,
         nsMeta = required.fieldNames.contains(GraftServerSource.NsMetaCol) &&
           !tableSchema.fieldNames.contains(GraftServerSource.NsMetaCol),
         unwind = unwind, unwindPost = unwindPost,
@@ -1283,18 +1152,12 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * the [[ServerClient.unwoundRead]] aggregate pipeline — which needs
     * BOTH queries fully server-renderable (rows are gone after the
     * tail; no client-side residual or post re-check is possible) and no
-    * option-level cursor knobs (`sort`/`limit` are PARENT-cursor
-    * semantics the pipeline cannot honor).
+    * option-level cursor `sort` (a PARENT-cursor semantic the pipeline
+    * cannot honor).
     */
   private def unwoundTailOk: Boolean =
-    unwind.isDefined && residuals.isEmpty &&
-      !options.contains("sort") && !options.contains("limit") && {
-        val pre = QueryDocs.plan(
-          BQuery.and(GraftServerSource.optionQuery(options), pushedQuery))
-        val post = QueryDocs.plan(unwindPost)
-        pre.isExact && pre.keyBounds.isEmpty &&
-          post.isExact && post.keyBounds.isEmpty
-      }
+    unwind.isDefined && residuals.isEmpty && !options.contains("sort") &&
+      QueryDocs.plan(builderQuery).rendersFully && QueryDocs.plan(unwindPost).rendersFully
 
   /** Pre-unwind PARENT pruning ([[BQuery.parentPrune]]): under a
     * non-outer `$unwind` with a pushed post-unwind match, parents with
@@ -1309,40 +1172,10 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * to a null-matching post query).
     */
   private def unwindPrune: BQuery = {
-    val safe = unwind.exists(u => !u.preserveNullAndEmpty && !u.mapKv) &&
-      unwindElement.forall(e => tableSchema.fields.find(_.name == e).forall(
-        _.dataType match {
-          case _: org.apache.spark.sql.types.ArrayType |
-               _: org.apache.spark.sql.types.MapType => false
-          case _ => true
-        }))
-    if (!safe || unwindPost == BQuery.True) BQuery.True
-    else {
-      val prune = BQuery.parentPrune(unwindPost, unwind.get.path)
-      val planned = QueryDocs.plan(prune)
-      if (planned.isExact && planned.keyBounds.isEmpty) prune else BQuery.True
-    }
+    val prune = Pushdown.unwindPrune(tableSchema, options,
+      unwind.filter(u => !u.preserveNullAndEmpty && !u.mapKv).map(_.path), unwindPost)
+    if (QueryDocs.plan(prune).rendersFully) prune else BQuery.True
   }
-}
-
-/** A pushed grouped aggregation: the group columns (and their Spark
-  * types — empty for the filtered-GLOBAL `_id: null` pipeline) plus each
-  * aggregate with its partial-result Spark type — answered by one
-  * `$group` pipeline round-trip per namespace.
-  */
-final case class ServerGroupedAgg(
-    groupCols: Seq[(String, org.apache.spark.sql.types.DataType)],
-    items: Seq[(GroupAgg, org.apache.spark.sql.types.DataType)]) {
-  def schema: StructType = StructType(
-    groupCols.map { case (c, dt) =>
-      org.apache.spark.sql.types.StructField(c, dt)
-    } ++ items.map { case (g, dt) =>
-      org.apache.spark.sql.types.StructField(g.alias, dt)
-    })
-  override def toString: String =
-    (if (groupCols.isEmpty) "GLOBAL"
-     else s"GROUP BY ${groupCols.map(_._1).mkString(", ")}") +
-      s" [${items.map(_._1.alias).mkString(", ")}]"
 }
 
 /** A pushed equi-join, held by the LEFT (driving) builder after
@@ -1423,10 +1256,10 @@ final case class ServerJoin(
   */
 final class GraftServerJoinScan(join: ServerJoin, leftQuery: BQuery,
     options: Map[String, String],
-    grouped: Option[ServerGroupedAgg] = None,
+    grouped: Option[GroupedAgg] = None,
     joinLimit: Option[Long] = None,
     joinTopN: Option[(Seq[(String, Boolean)], Long)] = None,
-    samples: Seq[graft.source.SamplePush] = Nil,
+    samples: Seq[SamplePush] = Nil,
     joinOffset: Option[Long] = None)
     extends Scan with Batch with SupportsReportStatistics {
 
@@ -1478,8 +1311,7 @@ final class GraftServerJoinScan(join: ServerJoin, leftQuery: BQuery,
   override def planInputPartitions(): Array[InputPartition] = {
     val ns = GraftServerSource.ns(options)
     val key = options.getOrElse("key", "_id")
-    val uniform = options.get("assume_uniform_storage").exists(_.toBoolean)
-    if (!uniform || options.get("splitter").contains("single") ||
+    if (!Pushdown.uniformStorage(options) || options.get("splitter").contains("single") ||
         // a COMPUTED split key has no stored field to probe (r17)
         join.leftComputed.exists(_.out == key))
       return Array(GraftServerPartition(ns,
@@ -1500,10 +1332,10 @@ final class GraftServerJoinScan(join: ServerJoin, leftQuery: BQuery,
 
 final class GraftServerJoinReaderFactory(join: ServerJoin, leftQuery: BQuery,
     options: Map[String, String],
-    grouped: Option[ServerGroupedAgg] = None,
+    grouped: Option[GroupedAgg] = None,
     joinLimit: Option[Long] = None,
     joinTopN: Option[(Seq[(String, Boolean)], Long)] = None,
-    samples: Seq[graft.source.SamplePush] = Nil,
+    samples: Seq[SamplePush] = Nil,
     joinOffset: Option[Long] = None)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -1519,10 +1351,10 @@ final class GraftServerJoinReaderFactory(join: ServerJoin, leftQuery: BQuery,
   */
 final class GraftServerJoinReader(p: GraftServerPartition, join: ServerJoin,
     leftQuery: BQuery, options: Map[String, String],
-    grouped: Option[ServerGroupedAgg] = None,
+    grouped: Option[GroupedAgg] = None,
     joinLimit: Option[Long] = None,
     joinTopN: Option[(Seq[(String, Boolean)], Long)] = None,
-    samples: Seq[graft.source.SamplePush] = Nil,
+    samples: Seq[SamplePush] = Nil,
     joinOffset: Option[Long] = None)
     extends PartitionReader[InternalRow] {
 
@@ -1708,7 +1540,7 @@ object GraftServerScanBuilder {
     import org.apache.spark.sql.types._
     val always = Set[DataType](IntegerType, DoubleType, BooleanType, DateType)
     val uniform = Set[DataType](LongType, TimestampType)
-    val uniformOk = options.get("assume_uniform_storage").exists(_.toBoolean)
+    val uniformOk = Pushdown.uniformStorage(options)
     if (dt == StringType)
       uniformOk && docField.exists(f => asciiCols(options).contains(f))
     else always.contains(dt) || (uniform.contains(dt) && uniformOk)
@@ -1756,7 +1588,7 @@ object GraftServerScanBuilder {
       options: Map[String, String]): Boolean = {
     import org.apache.spark.sql.types._
     dt == IntegerType || dt == DoubleType ||
-      (dt == LongType && options.get("assume_uniform_storage").exists(_.toBoolean))
+      (dt == LongType && Pushdown.uniformStorage(options))
   }
 
   val AggTypes: Set[org.apache.spark.sql.types.DataType] = {
@@ -1808,7 +1640,7 @@ object GraftServerScanBuilder {
     // LIMIT's inherent nondeterminism, same as Spark's own TakeOrdered)
     val always = Set[DataType](IntegerType, DoubleType, BooleanType, DateType)
     val uniform = Set[DataType](LongType, TimestampType)
-    val uniformOk = options.get("assume_uniform_storage").exists(_.toBoolean)
+    val uniformOk = Pushdown.uniformStorage(options)
     if (dt == StringType)
       uniformOk && docField.exists(f => asciiCols(options).contains(f))
     else always.contains(dt) || (uniform.contains(dt) && uniformOk)
@@ -1817,11 +1649,11 @@ object GraftServerScanBuilder {
 
 final class GraftServerScan(requiredSchema: StructType, query: BQuery,
     limit: Option[Int], options: Map[String, String],
-    pushedAgg: Option[Seq[graft.source.AggPush]] = None,
+    pushedAgg: Option[Seq[AggPush]] = None,
     topN: Option[(Seq[(String, Boolean)], Int)] = None,
-    grouped: Option[ServerGroupedAgg] = None,
+    grouped: Option[GroupedAgg] = None,
     offset: Option[Int] = None,
-    sample: Option[graft.source.SamplePush] = None,
+    sample: Option[SamplePush] = None,
     nsMeta: Boolean = false,
     unwind: Option[ServerClient.Unwind] = None,
     unwindPost: BQuery = BQuery.True,
@@ -1830,21 +1662,13 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
     unwoundTails: Boolean = false)
     extends Scan with Batch with SupportsRuntimeV2Filtering
     with SupportsReportStatistics with SupportsReportOrdering {
-  import graft.source.{AggPush, RuntimeFilters}
 
   /** Spark column -> document field (column_mapping, r14 on the server
-    * transport); pushdown resolution happened in the builder — the scan
-    * only needs it for runtime filters, ordering reports, and the
-    * readers' path-based decode. */
-  private val mapping: Map[String, String] =
-    options.get("column_mapping").map(graft.source.ColumnMapping.parse)
-      .getOrElse(Map.empty)
-
-
-  /** The Spark column that READS doc field `f` (mapping-aware inverse). */
-  private def sparkColFor(f: String): Option[String] =
-    mapping.find(_._2 == f).map(_._1)
-      .orElse(if (mapping.contains(f)) None else Some(f))
+    * transport) and the computed columns; pushdown resolution happened
+    * in the builder — the scan only needs them for runtime filters,
+    * ordering reports, description, and split planning. */
+  private val cols = Pushdown.Columns.of(requiredSchema, options)
+  private def sparkColFor(f: String) = graft.source.ColumnMapping.sparkColFor(cols.mapping, f)
 
   /** collStats-based size report — the stats role collstats plays in the
     * reference's planning (MongoSplitterFactory.java:66-83), surfaced to
@@ -1906,46 +1730,16 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
     if (pushedAgg.isDefined || limit.isDefined || offset.isDefined ||
         topN.isDefined || grouped.isDefined) Array.empty
     else if (unwind.isDefined) Array.empty
-    else Seq(options.getOrElse("key", "_id"), "_id").distinct
-      // never advertise a COMPUTED column (r17): the runtime IN-set
-      // ANDs into the CURSOR query, which evaluates on STORED docs
-      // where the synthetic field does not exist — it would silently
-      // match nothing
-      .filterNot(k => graft.query.ComputedCol.fromOptions(options)
-        .exists(_.out == k))
-      .flatMap(sparkColFor)
-      .filter(requiredSchema.fieldNames.contains)
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
+    else Pushdown.runtimeFilterAttributes(cols, options, requiredSchema)
 
-  override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    val parsed = predicates.toSeq.flatMap(RuntimeFilters.parse)
-    val merged = parsed.groupBy(_._1).map { case (c, vs) =>
-      c -> vs.flatMap(_._2).distinct
-    }
-    // a degenerate giant IN-set costs more per row than it prunes
-    runtimeIn =
-      if (merged.valuesIterator.map(_.size).sum > 10000) Map.empty else merged
-  }
+  override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
+    runtimeIn = Pushdown.runtimeIn(predicates)
 
   /** The cursor query with runtime IN-sets AND-composed, read-semantics
     * string/long forms first (the join compares READ values).
     */
-  private def queryWithRuntime: BQuery =
-    runtimeIn.foldLeft(query) { case (acc, (col, vs)) =>
-      val f = mapping.getOrElse(col, col)
-      val strs = vs.collect { case BString(s) => s }
-      val longs = vs.collect { case BInt64(x) => x }
-      // TimestampType runtime values arrive as BDate millis; the join
-      // compares READ values, so match BOTH timestamp storages
-      val dates = vs.collect { case BDate(ms) => ms }
-      BQuery.and(acc,
-        if (strs.size == vs.size) BQuery.ReadStrIn(f, strs)
-        else if (longs.size == vs.size) BQuery.ReadLongIn(f, longs)
-        else if (dates.size == vs.size && vs.nonEmpty)
-          BQuery.ReadTimeIn(f, dates.map(_ * 1000L))
-        else BQuery.In(f, vs))
-    }
+  private def queryWithRuntime: BQuery = Pushdown.withRuntimeIn(query,
+    runtimeIn.toSeq.map { case (c, vs) => cols.mapping.getOrElse(c, c) -> vs })
 
   /** Structured Streaming entry: the micro-batch TAILING stream
     * ([[GraftServerMicroBatchStream]]). Pushed filters carry over to the
@@ -1962,33 +1756,18 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
     // seam — refuse loudly rather than stream an all-null derived
     // column (the batch-only capture rule never fires on streaming
     // relations; this guards a hand-set option)
-    require(graft.query.ComputedCol.fromOptions(options).isEmpty,
+    require(cols.computed.isEmpty,
       "graftserver streaming read does not support computed_columns")
     new GraftServerMicroBatchStream(requiredSchema, query, options)
   }
 
-  override def readSchema(): StructType = (grouped, pushedAgg) match {
-    case (Some(g), _) =>
-      // Spark's grouped-pushdown layout: group columns first, then the
-      // aggregate columns, matching its zip in V2ScanRelationPushDown
-      g.schema
-    case (None, Some(items)) =>
-      import org.apache.spark.sql.types._
-      StructType(items.map {
-        case AggPush.RowCount => StructField("count(*)", LongType, nullable = false)
-        case AggPush.MinOf(c, t) => StructField(s"min($c)", t)
-        case AggPush.MaxOf(c, t) => StructField(s"max($c)", t)
-      })
-    case _ => requiredSchema
-  }
+  override def readSchema(): StructType =
+    Pushdown.aggReadSchema(grouped, pushedAgg, requiredSchema)
   override def toBatch: Batch = this
   override def description(): String =
     s"graftserver ns=${options.getOrElse("ns", "?")} query=$query" +
-      locally {
-        val cc = graft.query.ComputedCol.fromOptions(options)
-        if (cc.isEmpty) ""
-        else s" PushedComputed: [${cc.map(_.describe).mkString(", ")}]"
-      } +
+      (if (cols.computed.isEmpty) ""
+       else s" PushedComputed: [${cols.computed.map(_.describe).mkString(", ")}]") +
       pushedAgg.map(a => s" PushedAggregates: [${a.mkString(", ")}]").getOrElse("") +
       grouped.map(g => s" PushedGroupedAggregate: $g").getOrElse("") +
       sample.map(sp => s" PushedSample: $sp").getOrElse("") +
@@ -2015,7 +1794,7 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
     // a COMPUTED split key has no stored field the planners could probe
     // (r17) — a key-range $match on it would silently match nothing;
     // plan ONE full-range cursor per namespace instead
-    if (graft.query.ComputedCol.fromOptions(options).exists(_.out == key))
+    if (cols.computed.exists(_.out == key))
       return GraftServerSource.nsList(options).map(ns =>
         GraftServerPartition(ns, BQuery.KeyRange(key, None, None),
           Seq.empty): InputPartition).toArray
@@ -2079,11 +1858,11 @@ final case class GraftServerPartition(ns: String, range: BQuery.KeyRange,
 
 final class GraftServerReaderFactory(requiredSchema: StructType, query: BQuery,
     limit: Option[Int], options: Map[String, String],
-    pushedAgg: Option[Seq[graft.source.AggPush]] = None,
+    pushedAgg: Option[Seq[AggPush]] = None,
     topN: Option[(Seq[(String, Boolean)], Int)] = None,
-    grouped: Option[ServerGroupedAgg] = None,
+    grouped: Option[GroupedAgg] = None,
     offset: Option[Int] = None,
-    sample: Option[graft.source.SamplePush] = None,
+    sample: Option[SamplePush] = None,
     nsMeta: Boolean = false,
     unwind: Option[ServerClient.Unwind] = None,
     unwindPost: BQuery = BQuery.True,
@@ -2110,7 +1889,7 @@ final class GraftServerReaderFactory(requiredSchema: StructType, query: BQuery,
   * the union).
   */
 final class ServerGroupedAggReader(options: Map[String, String],
-    query: BQuery, grouped: ServerGroupedAgg, ns: String,
+    query: BQuery, grouped: GroupedAgg, ns: String,
     unwind: Option[ServerClient.Unwind] = None,
     unwindPost: BQuery = BQuery.True)
     extends PartitionReader[InternalRow] {
@@ -2173,9 +1952,8 @@ final class ServerGroupedAggReader(options: Map[String, String],
   * an all-null column folds to NULL via the empty probe.
   */
 final class ServerAggReader(options: Map[String, String],
-    items: Seq[graft.source.AggPush])
+    items: Seq[AggPush])
     extends PartitionReader[InternalRow] {
-  import graft.source.AggPush
 
   private val client = GraftServerSource.factory(options).create(options)
   private val nss = GraftServerSource.nsList(options)
@@ -2267,7 +2045,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
     options: Map[String, String],
     topN: Option[(Seq[(String, Boolean)], Int)] = None,
     offset: Option[Int] = None,
-    sample: Option[graft.source.SamplePush] = None,
+    sample: Option[SamplePush] = None,
     nsMeta: Boolean = false,
     unwind: Option[ServerClient.Unwind] = None,
     unwindPost: BQuery = BQuery.True,
@@ -2321,9 +2099,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
 
   // Spark column -> document field (column_mapping): decode and the
   // cursor projection address DOCUMENT paths
-  private val mapping: Map[String, String] =
-    options.get("column_mapping").map(graft.source.ColumnMapping.parse)
-      .getOrElse(Map.empty)
+  private val mapping = graft.source.ColumnMapping.fromOptions(options)
 
   // DERIVED columns (r17): injected into each fetched document before
   // decode — the client-side mirror of the pipeline `$set`; only the
@@ -2632,38 +2408,15 @@ final class GraftServerDataWriter(partitionId: Int, writeSchema: StructType,
 
   private val client = GraftServerSource.factory(options).create(options)
   private val ns = GraftServerSource.ns(options)
-  private val mode = options.getOrElse("mode", "insert")
-  private val keys = options.getOrElse("keys", "_id").split(',').toSeq
-  private val updateOp = options.getOrElse("update_op", "set")
-  private val multi = options.get("multi").exists(_.toBoolean)
-  private val idColumn = options.get("id_column")
+  private val conf = WriteModels.WriteConf.fromOptions(options)
   private val ordered = options.get("bulk_ordered").forall(_.toBoolean)
   private val batchSize = options.get("batch_size").map(_.toInt).getOrElse(512)
-
-  // write-side column remapping (r14, parity with the file sink): Spark
-  // column -> (possibly dotted) document field, applied BEFORE key
-  // extraction so `keys`/`id_column` address document-space names
-  private val writeMapping: Map[String, String] =
-    options.get("column_mapping").map(graft.source.ColumnMapping.parse)
-      .getOrElse(Map.empty)
-  private def remap(d: BDoc): BDoc =
-    if (writeMapping.isEmpty) d
-    else writeMapping.foldLeft(d) { case (acc, (sparkCol, path)) =>
-      acc.get(sparkCol) match {
-        case Some(v) if sparkCol != path =>
-          graft.query.Updates.setField(
-            BDoc(acc.fields.removed(sparkCol)), path, v)
-        case _ => acc
-      }
-    }
 
   private val buf = scala.collection.mutable.ArrayBuffer.empty[graft.store.WriteModel]
   private var written = 0L
 
   override def write(row: InternalRow): Unit = {
-    val doc = remap(RowCodec.toBson(row, writeSchema))
-    buf += WriteModels.fromDoc(
-      WriteModels.toDoc(mode, doc, keys, updateOp, multi, idColumn))
+    buf += WriteModels.fromDoc(conf.model(RowCodec.toBson(row, writeSchema)))
     written += 1
     if (buf.size >= batchSize) flush()
   }

@@ -67,6 +67,10 @@ object QueryDocs {
       serverQuery: BDoc,
       residual: Option[BQuery]) {
     def isExact: Boolean = residual.isEmpty
+    /** Exact AND without cursor bounds: the whole query renders as a
+      * pipeline `$match` (rows are gone after a `$group`/`$lookup`/tail,
+      * so no client re-check point remains). */
+    def rendersFully: Boolean = isExact && keyBounds.isEmpty
   }
 
   def plan(q: BQuery): ServerPlan = {

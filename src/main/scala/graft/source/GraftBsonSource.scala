@@ -2,13 +2,12 @@ package graft.source
 
 import graft.bson._
 import graft.files.BsonFiles
-import graft.query.{BQuery, BQueryJson, FilterTranslator, NumericNullEdge, RegexDialect, UpdateModel}
+import graft.query.{BQuery, BQueryJson, NumericNullEdge, RegexDialect}
 import graft.store.BsonCollection
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.aggregate
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
@@ -19,7 +18,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.nio.file.{Files, Paths}
 import java.util
-import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 connector for BSON dump collections: schema inference by
@@ -270,150 +268,23 @@ final class GraftTable(tableSchema: StructType, properties: Map[String, String])
       properties ++ info.options().asScala)
 }
 
-/** A scan-level aggregate accepted by [[GraftScanBuilder.pushAggregation]]
-  * — the collstats/$sample analog (SURVEY §4): COUNT(*) is answered from
-  * `.splits` side files / 4-byte header walks without touching document
-  * bodies; MIN/MAX stream one single-field projected decode.
-  */
-sealed trait AggPush extends Serializable
-object AggPush {
-  case object RowCount extends AggPush {
-    override def toString = "COUNT(*)"
-  }
-  final case class MinOf(col: String, dt: org.apache.spark.sql.types.DataType)
-      extends AggPush {
-    override def toString = s"MIN($col)"
-  }
-  final case class MaxOf(col: String, dt: org.apache.spark.sql.types.DataType)
-      extends AggPush {
-    override def toString = s"MAX($col)"
-  }
-}
-
-/** A pushed TABLESAMPLE (SupportsPushDownTableSample), shared by both
-  * sources: DETERMINISTIC keyed Bernoulli over the `sample_key` option's
-  * column — keep a document iff the 60-bit md5 prefix of
-  * `"<seed>:<canonical key rendering>"` falls in
-  * `[floor(lower·2^60), floor(upper·2^60))`. Source-defined sampling
-  * semantics (the same latitude JDBC sources use to map TABLESAMPLE onto
-  * dialect clauses): repeatable across runs, partitionings and engines —
-  * the DuckDB oracle computes the identical predicate as
-  * `CAST(concat('0x', substr(md5(concat('<seed>:', CAST(k AS VARCHAR))),
-  * 1, 15)) AS BIGINT)` — unlike Spark's own per-partition-seeded Sample,
-  * at the price of requiring an explicit key. The [lower, upper) window
-  * form also serves `randomSplit` (disjoint windows = disjoint,
-  * exhaustive splits). Null/missing keys never sample in. The reference
-  * has no row sampling; its `$sample` splitter
-  * (core/.../splitter/SampleSplitter.java:79-88) samples split BOUNDS —
-  * this is the row-level counterpart with reproducibility the server's
-  * random `$sample` stage cannot give.
-  */
-final case class SamplePush(key: String, lower: Double, upper: Double,
-    seed: Long) extends Serializable {
-  /** Inclusive-lower / exclusive-upper 60-bit thresholds; floor(x·2^60)
-    * in IEEE double, identical in DuckDB's `CAST(floor(x *
-    * 1152921504606846976.0) AS BIGINT)`. */
-  val lowerBound: Long = math.floor(lower * SamplePush.Unit60).toLong
-  val upperBound: Long = math.floor(upper * SamplePush.Unit60).toLong
-
-  def keep(doc: graft.bson.BDoc): Boolean =
-    doc.getPath(key).flatMap(SamplePush.render) match {
-      case Some(s) =>
-        val h = graft.functions.Md5Util.prefix60(
-          (seed.toString + ":" + s).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        h >= lowerBound && h < upperBound
-      case None => false
-    }
-
-  override def toString = s"SAMPLE($key, [$lower, $upper), seed=$seed)"
-}
-object SamplePush {
-  /** 2^60 — the hash universe of [[graft.functions.Md5Util.prefix60]]. */
-  val Unit60: Double = 1152921504606846976.0d
-
-  /** Under a pushed unwind the window keys PARENTS (kept/dropped with
-    * all their element rows — the keyed-window sampling unit, applied
-    * pre-unwind): a key at or under the unwound path (the ELEMENT) or
-    * the synthetic posexplode field cannot be evaluated per parent.
-    * Shared by both transports so their sampling units stay in
-    * lockstep. */
-  def keyAllowedUnderUnwind(docPath: String, unwindPath: Option[String]): Boolean =
-    unwindPath.forall(p =>
-      docPath != p && !docPath.startsWith(p + ".") &&
-        docPath != graft.plans.UnwindRelocate.PosDocField &&
-        docPath != graft.plans.UnwindRelocate.KvDocField &&
-        !docPath.startsWith(graft.plans.UnwindRelocate.KvDocField + "."))
-
-  /** Canonical key rendering: integers in decimal (int32 and int64
-    * storages of one value render identically — SQL `CAST(k AS VARCHAR)`
-    * parity), strings raw. Anything else (null, missing, double, date,
-    * ...) refuses — the builder only accepts Int/Long/String sample keys.
-    */
-  def render(v: graft.bson.BsonValue): Option[String] = v match {
-    case graft.bson.BInt32(x) => Some(x.toString)
-    case graft.bson.BInt64(x) => Some(x.toString)
-    case graft.bson.BString(s) => Some(s)
-    case _ => None
-  }
-
-  /** Spark types a sample key may have: exact canonical rendering on
-    * every storage either source can read into them (int32/int64 decimal
-    * for the numeric types, raw bytes for strings). */
-  val KeyTypes: Set[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    Set(IntegerType, LongType, StringType)
-  }
-}
-
-/** One aggregate inside a pushed GROUPED aggregation — shared by the
-  * file source (folded into per-split partial rows by
-  * [[GroupedAggPartitionReader]]) and the server source (rendered into
-  * the `$group` pipeline, `graft.server.QueryDocs.groupStages`).
-  */
-sealed trait GroupAgg extends Serializable { def alias: String }
-object GroupAgg {
-  final case class CountAll(alias: String) extends GroupAgg
-  /** COUNT(col): non-null, non-missing values only (Spark semantics; the
-    * server renders it as `$sum` of a `$cond` on the value's `$type`). */
-  final case class CountCol(col: String, alias: String) extends GroupAgg
-  final case class MinOf(col: String, alias: String) extends GroupAgg
-  final case class MaxOf(col: String, alias: String) extends GroupAgg
-  final case class SumOf(col: String, alias: String) extends GroupAgg
-}
-
-/** A pushed grouped aggregation on the FILE source: group columns (with
-  * their Spark types — empty for a filtered-GLOBAL aggregate), the TABLE
-  * types of every aggregate input column (for the projected decode), and
-  * each aggregate with its partial-result Spark type. Each byte-split
-  * folds its rows into per-group partial rows; the pushdown is PARTIAL,
-  * so Spark's final aggregate re-groups and merges them — the same
-  * protocol as the global per-file partials and the server's `$group`
-  * pipeline.
-  */
-final case class FileGroupedAgg(
-    groupCols: Seq[(String, org.apache.spark.sql.types.DataType)],
-    inputTypes: Map[String, org.apache.spark.sql.types.DataType],
-    items: Seq[(GroupAgg, org.apache.spark.sql.types.DataType)]) {
-  def schema: StructType = StructType(
-    groupCols.map { case (c, dt) => StructField(c, dt) } ++
-      items.map { case (g, dt) => StructField(g.alias, dt) })
-  override def toString: String =
-    (if (groupCols.isEmpty) "GLOBAL"
-     else s"GROUP BY ${groupCols.map(_._1).mkString(", ")}") +
-      s" [${items.map(_._1.alias).mkString(", ")}]"
-}
-
 final class GraftScanBuilder(tableSchema: StructType, options: Map[String, String])
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownOffset with SupportsPushDownAggregates
     with SupportsPushDownTopN with SupportsPushDownTableSample {
 
-  /** Column-name remapping: Spark column -> (dotted) document field, the
-    * `mongo.columns.mapping` analog (HiveMongoInputFormat.java:211-240).
-    */
-  private val mapping: Map[String, String] =
-    options.get("column_mapping").map(ColumnMapping.parse).getOrElse(Map.empty)
+  /** Column-name remapping (`column_mapping`: Spark column -> dotted
+    * document field, the `mongo.columns.mapping` analog,
+    * HiveMongoInputFormat.java:211-240) and the DERIVED columns (r17,
+    * `computed_columns` — ComputedKeyRelocate, the file-transport arm):
+    * injected by the readers right after the pushed-query match —
+    * grouped-aggregate partials fold over them like any column. The
+    * pushed query itself evaluates on STORED docs, so [[Pushdown]] keeps
+    * filters on a computed column residual and refuses it as a TopN /
+    * min-max / sample key, mirroring the server transport's gates. */
+  private val cols = Pushdown.Columns.of(tableSchema, options)
+  private val mapping = cols.mapping
 
   /** `$unwind` directive (r14): same contract as the server source —
     * element/pos filters push as the POST-unwind match, LIMIT / TopN /
@@ -434,69 +305,16 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
   private var pushedQuery: BQuery = BQuery.True
   private var pushed: Array[Filter] = Array.empty
   private var limit: Option[Int] = None
-
-  /** DERIVED columns (r17, `computed_columns` — ComputedKeyRelocate,
-    * the file-transport arm): injected by the readers right after the
-    * pushed-query match — grouped-aggregate partials fold over them
-    * like any column. The pushed query itself evaluates on STORED docs,
-    * so filters on a computed column stay residual (null tests rewrite
-    * exactly to the source field — pmod/mod are null iff their input
-    * is); TopN / min-max probes / sample keys refuse the synthetic
-    * field, mirroring the server transport's gates. */
-  private val computedCols: Seq[graft.query.ComputedCol] =
-    graft.query.ComputedCol.fromOptions(options)
-  private val computedOuts: Set[String] = computedCols.map(_.out).toSet
-
   private var residualFilters: Array[Filter] = Array.empty
 
+  /** A predicate on the `_file` metadata column is not a document query
+    * (residual); the rest is [[Pushdown.splitFilters]]. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // a predicate on the `_file` metadata column is NOT a document
-    // query — residual; one touching the UNWOUND element column becomes
-    // the POST-unwind query (after the unwind the path holds the
-    // ELEMENT, so the normal translation carries Spark's row semantics)
-    val (metaFilters, rest0) = filters.partition(
-      _.references.contains(GraftBsonSource.FileMetaCol))
-    // COMPUTED columns: null tests rewrite to the SOURCE field (exact);
-    // everything else on a derived field is residual (the reader's
-    // query match runs on STORED docs, before injection)
-    // rewrite to the SPARK column that reads the source field, never
-    // the raw doc path — the translator re-applies the column_mapping,
-    // so a colliding doc path would address the wrong stored field
-    // (ADVICE r17); no unambiguous reader → stays residual
-    def sourceSparkCol(out: String): Option[String] = {
-      val f = computedCols.find(_.out == out).get.field
-      mapping.collectFirst { case (s, d) if d == f => s }
-        .orElse(if (!mapping.contains(f)) Some(f) else None)
-    }
-    val rest1 = rest0.map {
-      case f @ org.apache.spark.sql.sources.IsNotNull(a)
-          if computedOuts.contains(a) =>
-        sourceSparkCol(a).map(org.apache.spark.sql.sources.IsNotNull(_))
-          .getOrElse(f)
-      case f @ org.apache.spark.sql.sources.IsNull(a)
-          if computedOuts.contains(a) =>
-        sourceSparkCol(a).map(org.apache.spark.sql.sources.IsNull(_))
-          .getOrElse(f)
-      case other => other
-    }
-    val (computedFilters, rest) = rest1.partition(
-      _.references.exists(r => computedOuts.contains(r.split('.').head)))
-    // a filter touching the element (or a struct-element SUBFIELD —
-    // `entry.lang` for explode(array<struct>), which pre-unwind would
-    // carry ∃-element semantics) — or the posexplode POS column, whose
-    // injected field also exists only post-unwind — becomes the
-    // POST-unwind query (the reader injects pos before evaluating it)
-    val (elementFilters, docFilters) = rest.partition(f =>
-      f.references.exists(r => graft.plans.UnwindRelocate.elementScoped(
-        r, options.get("unwind_element"), options.get("unwind_pos"),
-        options.get("unwind_key"))))
-    val (postQ, postAccepted, postResidual) =
-      FilterTranslator.split(elementFilters, mapping)
-    unwindPost = postQ
-    val (query, accepted, residual) = FilterTranslator.split(docFilters, mapping)
-    pushedQuery = query
-    pushed = accepted ++ postAccepted
-    residualFilters = residual ++ postResidual ++ metaFilters ++ computedFilters
+    val split = Pushdown.splitFilters(cols, options, filters, GraftBsonSource.FileMetaCol)
+    unwindPost = split.post
+    pushedQuery = split.query
+    pushed = split.pushed
+    residualFilters = split.residual
     residualFilters
   }
 
@@ -520,17 +338,8 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
 
   override def pushTableSample(lower: Double, upper: Double,
       withReplacement: Boolean, seed: Long): Boolean = {
-    // `sample_key` may name a NESTED subfield (`meta.id`): resolve
-    // through the nested StructType; the keep-predicate extracts by
-    // dotted path either way
-    val keyCol = options.get("sample_key")
-      .flatMap(k => FieldResolve.resolveName(tableSchema, k, mapping))
-      .filter(r => SamplePush.KeyTypes.contains(r.dataType))
-      // a COMPUTED sample key refuses (r17 — mirrors the server gate)
-      .filterNot(r => computedOuts.contains(r.docPath.split('.').head))
-    val keyOk = keyCol.exists(k =>
-      SamplePush.keyAllowedUnderUnwind(k.docPath, unwind.map(_.path)))
-    val eligible = !withReplacement && keyOk &&
+    val keyCol = Pushdown.sampleKey(cols, options, unwind.map(_.path))
+    val eligible = !withReplacement && keyCol.isDefined &&
       !options.contains("collections") && !options.contains("limit") &&
       limit.isEmpty && offset.isEmpty && topN.isEmpty &&
       aggPushed.isEmpty && groupedAgg.isEmpty
@@ -589,51 +398,32 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
 
   override def pushTopN(orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       n: Int): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
     // option-level `limit` is a PER-PARTITION cursor limit over cursor
     // order; a pushed top-n would re-sort before it and change which
     // rows it keeps — refuse rather than reorder an explicit option
     // over an unwound scan the top-n selects among UNWOUND rows (the
     // reader's bounded heap runs post-unwind; element-column keys read
     // the element through its array-path mapping)
-    val eligible = orders.nonEmpty && residualFilters.isEmpty &&
+    val eligible = residualFilters.isEmpty &&
       aggPushed.isEmpty && groupedAgg.isEmpty && offset.isEmpty &&
       sample.isEmpty &&
       !options.contains("sort") && !options.contains("collections") &&
       !options.contains("limit")
     if (!eligible) return false
-    // order keys may be NESTED subfields (`meta.score` arrives as a
-    // multi-part FieldReference): resolve through the nested StructType
-    // to the leaf type; the reader's selection and the projected decoder
-    // already work on full dotted paths
-    val spec: Seq[Option[(String, Boolean, org.apache.spark.sql.types.DataType)]] =
-      orders.toSeq.map { o =>
-        val desc = o.direction == SortDirection.DESCENDING
-        val nullsOk =
-          if (desc) o.nullOrdering == NullOrdering.NULLS_LAST
-          else o.nullOrdering == NullOrdering.NULLS_FIRST
-        // STRING order keys (r18): admitted under uniform storage alone
-        // — the reader's bounded heap compares READ values itself, and
-        // its string comparator is CODE-POINT order (exactly Spark's
-        // UTF8String/UTF-8-byte order, GraftPartitionReader.cmpStrings),
-        // so the selection is Spark-exact for ANY strings — no
-        // ascii_columns declaration needed on this transport (unlike
-        // the server arm, where the CURSOR owns the order). Uniform
-        // storage is still required: a non-uniform string read spans
-        // four storage brackets the heap's BString-only key read
-        // rejects.
-        val stringOk =
-          options.get("assume_uniform_storage").exists(_.toBoolean)
-        FieldResolve.resolve(tableSchema, o.expression, mapping)
-          .filter(r => nullsOk && (TopNTypes.contains(r.dataType) ||
-            (r.dataType == org.apache.spark.sql.types.StringType && stringOk)))
-          // a COMPUTED order key refuses (r17): the bounded heap reads
-          // STORED docs before injection — mirrors the server gate
-          .filterNot(r => computedOuts.contains(r.docPath.split('.').head))
-          .map(r => (r.docPath, desc, r.dataType))
-      }
-    if (spec.contains(None)) false
-    else { topN = Some((spec.flatten, n)); true }
+    // STRING order keys (r18): admitted under uniform storage alone —
+    // the reader's bounded heap compares READ values itself, and its
+    // string comparator is CODE-POINT order (exactly Spark's
+    // UTF8String/UTF-8-byte order, GraftPartitionReader.cmpStrings), so
+    // the selection is Spark-exact for ANY strings — no ascii_columns
+    // declaration needed on this transport (unlike the server arm, where
+    // the CURSOR owns the order). Uniform storage is still required: a
+    // non-uniform string read spans four storage brackets the heap's
+    // BString-only key read rejects.
+    val stringOk = Pushdown.uniformStorage(options)
+    topN = Pushdown.topNOrder(cols, orders, r => TopNTypes.contains(r.dataType) ||
+        (r.dataType == org.apache.spark.sql.types.StringType && stringOk))
+      .map(keys => (keys.map { case (r, desc) => (r.docPath, desc, r.dataType) }, n))
+    topN.isDefined
   }
 
   /** Offset (skip) pushdown — the mongo.input.skip analog
@@ -676,7 +466,7 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
     * of files and partitions.
     */
   private var aggPushed: Option[Seq[AggPush]] = None
-  private var groupedAgg: Option[FileGroupedAgg] = None
+  private var groupedAgg: Option[GroupedAgg] = None
 
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     if (aggregation.groupByExpressions.isEmpty && tryGlobalAggregation(aggregation))
@@ -692,24 +482,10 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
       // the option-level PER-PARTITION cursor limit changes row counts
       !options.contains("limit")
     if (!eligible) return false
-    // MIN/MAX columns may be nested subfields — resolve to the dotted
-    // doc path; the single-field scan below decodes just that subpath
-    def named(e: org.apache.spark.sql.connector.expressions.Expression):
-        Option[(String, org.apache.spark.sql.types.DataType)] =
-      FieldResolve.resolve(tableSchema, e, mapping)
-        .filter(r => AggPushTypes.contains(r.dataType))
-        // a COMPUTED column has no stored field the single-field probe
-        // scan could walk (r17) — the grouped partial path handles it
-        .filterNot(r => computedOuts.contains(r.docPath.split('.').head))
-        .map(r => (r.docPath, r.dataType))
-    val items = aggregation.aggregateExpressions.toSeq.map {
-      case _: aggregate.CountStar => Some(AggPush.RowCount)
-      case m: aggregate.Min => named(m.column).map { case (c, t) => AggPush.MinOf(c, t) }
-      case m: aggregate.Max => named(m.column).map { case (c, t) => AggPush.MaxOf(c, t) }
-      case _ => None
-    }
-    if (items.isEmpty || items.contains(None)) false
-    else { aggPushed = Some(items.flatten); true }
+    // MIN/MAX columns may be nested subfields — the single-field scan
+    // decodes just that subpath
+    aggPushed = Pushdown.globalAgg(cols, aggregation, r => AggPushTypes.contains(r.dataType))
+    aggPushed.isDefined
   }
 
   /** GROUPED / filtered-global aggregate pushdown: per-split partial
@@ -735,18 +511,10 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
     // path; the reader's projected decode (Proj trie) then materializes
     // ONLY those subpaths. Zero aggregates + >=1 group key = SELECT
     // DISTINCT (each split emits its distinct keys as partial rows).
-    GroupAggParse.parse(aggregation,
-      e => FieldResolve.resolve(tableSchema, e, mapping),
+    groupedAgg = GroupAggParse.parse(aggregation, cols.resolve,
       r => GroupKeyTypes.contains(r.dataType),
-      r => GroupMinMaxTypes.contains(r.dataType)) match {
-      case Some(p) =>
-        groupedAgg = Some(FileGroupedAgg(
-          p.groupCols.map(r => (r.docPath, r.dataType)),
-          p.inputRefs.map(r => r.docPath -> r.dataType).toMap,
-          p.items))
-        true
-      case None => false
-    }
+      r => GroupMinMaxTypes.contains(r.dataType)).map(GroupedAgg.of)
+    groupedAgg.isDefined
   }
 
   /** Spark-type domains where the fold in [[AggPartitionReader]] is
@@ -796,24 +564,11 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
     // with Spark's own .limit for the global semantic)
     val optionLimit = options.get("limit").map(_.toInt)
     val effLimit = (limit ++ optionLimit ++ topN.map(_._2)).reduceOption(math.min)
-    // pre-unwind PARENT pruning (BQuery.parentPrune): under a non-outer
-    // unwind with a pushed post-unwind match, parents with no satisfying
-    // element drop BEFORE the per-element flatten — a prune, never the
-    // filter (the exact post match still runs on unwound docs). Skipped
-    // for ARRAY/MAP elements (nested-array ElemMatch traversal is a
-    // documented divergence) and OUTER unwinds (a never-matching array
-    // still owes its null-element row to a null-matching post query).
-    val unwindPrune: BQuery = {
-      val safe = unwind.exists(!_.outer) &&
-        options.get("unwind_element").forall(e =>
-          tableSchema.fields.find(_.name == e).forall(_.dataType match {
-            case _: org.apache.spark.sql.types.ArrayType |
-                 _: org.apache.spark.sql.types.MapType => false
-            case _ => true
-          }))
-      if (!safe || unwindPost == BQuery.True) BQuery.True
-      else BQuery.parentPrune(unwindPost, unwind.get.path)
-    }
+    // pre-unwind PARENT pruning: under a non-outer unwind with a pushed
+    // post-unwind match, parents with no satisfying element drop BEFORE
+    // the per-element flatten
+    val unwindPrune = Pushdown.unwindPrune(tableSchema, options,
+      unwind.filterNot(_.outer).map(_.path), unwindPost)
     new GraftScan(required,
       BQuery.and(BQuery.and(optionQuery, pushedQuery), unwindPrune),
       options, effLimit, mapping,
@@ -980,26 +735,13 @@ final case class UnwindSpec(path: String, element: String, outer: Boolean,
       * fail-loud rule). */
     mapKv: Boolean = false)
 
-object ColumnMapping {
-  /** Parse {"sparkCol": "doc.field", ...}. */
-  def parse(json: String): Map[String, String] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    JsonMethods.parse(json).asInstanceOf[JObject].obj.map {
-      case (k, JString(v)) => k -> v
-      case (k, other) => throw new IllegalArgumentException(
-        s"column_mapping value for $k must be a string, got $other")
-    }.toMap
-  }
-}
-
 final class GraftScan(requiredSchema: StructType, query: BQuery,
     options: Map[String, String], limit: Option[Int] = None,
     mapping: Map[String, String] = Map.empty,
     offset: Option[Int] = None,
     pushedAgg: Option[Seq[AggPush]] = None,
     topNSort: Option[Seq[(String, Boolean, org.apache.spark.sql.types.DataType)]] = None,
-    grouped: Option[FileGroupedAgg] = None,
+    grouped: Option[GroupedAgg] = None,
     sample: Option[SamplePush] = None,
     unwind: Option[UnwindSpec] = None,
     unwindPost: BQuery = BQuery.True,
@@ -1023,10 +765,10 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
     */
   @volatile private var runtimeIn: Map[String, Seq[BsonValue]] = Map.empty
 
-  /** The Spark column that READS doc field `f` (column_mapping aware). */
-  private def sparkColFor(f: String): Option[String] =
-    mapping.find(_._2 == f).map(_._1)
-      .orElse(if (mapping.contains(f)) None else Some(f))
+  /** The mapping and the DERIVED columns (r17), which every partition's
+    * reader injects. */
+  private val cols = Pushdown.Columns(requiredSchema, mapping,
+    graft.query.ComputedCol.fromOptions(options))
 
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     // a pushed limit/offset counts rows of the UNFILTERED stream — any
@@ -1034,28 +776,13 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
     if (pushedAgg.isDefined || grouped.isDefined ||
         options.contains("collections") ||
         limit.isDefined || offset.isDefined) Array.empty
-    else Seq(options.getOrElse("key", "_id"), "_id").distinct
-      // never advertise a COMPUTED column (r17): the runtime values
-      // would drive key-range planning / query narrowing over STORED
-      // docs, where the synthetic field does not exist
-      .filterNot(k => computedCols.exists(_.out == k))
-      .flatMap(sparkColFor)
-      .filter(readSchema().fieldNames.contains)
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-      .toArray
+    else Pushdown.runtimeFilterAttributes(cols, options, readSchema())
 
-  override def filter(predicates: Array[Predicate]): Unit = {
-    val parsed = predicates.toSeq.flatMap(RuntimeFilters.parse)
-    val merged = parsed.groupBy(_._1).map { case (col, vs) =>
-      // spark column -> doc field (column_mapping analog of the pushed
-      // filter translator)
-      mapping.getOrElse(col, col) -> vs.flatMap(_._2).distinct
-    }
-    // a degenerate giant IN-set would cost more to evaluate per row /
-    // per split than it prunes; scan everything instead
-    runtimeIn =
-      if (merged.valuesIterator.map(_.size).sum > 10000) Map.empty else merged
-  }
+  // spark column -> doc field (column_mapping analog of the pushed
+  // filter translator)
+  override def filter(predicates: Array[Predicate]): Unit =
+    runtimeIn = Pushdown.runtimeIn(predicates).map { case (c, vs) =>
+      mapping.getOrElse(c, c) -> vs }
 
   /** Structured Streaming entry: new dump FILES landing under `path`
     * stream in as micro-batches ([[GraftBsonMicroBatchStream]]). Pushed
@@ -1070,25 +797,13 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
         "sample/unwind pushdowns or multi-collection mode")
     // COMPUTED columns (r17): no injection seam in the streaming
     // reader — refuse loudly rather than stream an all-null column
-    require(computedCols.isEmpty,
+    require(cols.computed.isEmpty,
       "graftbson streaming read does not support computed_columns")
     new GraftBsonMicroBatchStream(requiredSchema, query, options, mapping)
   }
 
-  override def readSchema(): StructType = (grouped, pushedAgg) match {
-    case (Some(g), _) =>
-      // Spark's grouped-pushdown layout: group columns first, then the
-      // aggregate columns (V2ScanRelationPushDown's zip order)
-      g.schema
-    case (None, Some(items)) =>
-      import org.apache.spark.sql.types._
-      StructType(items.map {
-        case AggPush.RowCount => StructField("count(*)", LongType, nullable = false)
-        case AggPush.MinOf(c, t) => StructField(s"min($c)", t)
-        case AggPush.MaxOf(c, t) => StructField(s"max($c)", t)
-      })
-    case _ => requiredSchema
-  }
+  override def readSchema(): StructType =
+    Pushdown.aggReadSchema(grouped, pushedAgg, requiredSchema)
   override def toBatch: Batch = this
 
   /** Report the per-partition cursor sort (`sort` option) to Catalyst so
@@ -1115,12 +830,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
       case Some(docKey) if unwind.exists(u =>
           docKey == u.path || docKey.startsWith(u.path + ".")) => Array.empty
       case Some(docKey) if !options.contains("collections") =>
-        // the Spark column that READS doc field docKey: an explicit
-        // mapping entry wins; the bare name is only valid when that
-        // column is not itself remapped to a different doc field
-        val sparkCol = mapping.find(_._2 == docKey).map(_._1)
-          .orElse(if (mapping.contains(docKey)) None else Some(docKey))
-        sparkCol match {
+        ColumnMapping.sparkColFor(mapping, docKey) match {
           case Some(c) if requiredSchema.fieldNames.contains(c) =>
             Array(org.apache.spark.sql.connector.expressions.Expressions.sort(
               org.apache.spark.sql.connector.expressions.Expressions.column(c),
@@ -1132,8 +842,8 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
 
   override def description(): String =
     s"GraftScan PushedQuery: $query, ReadSchema: ${readSchema().simpleString}" +
-      (if (computedCols.isEmpty) ""
-       else s", PushedComputed: [${computedCols.map(_.describe).mkString(", ")}]") +
+      (if (cols.computed.isEmpty) ""
+       else s", PushedComputed: [${cols.computed.map(_.describe).mkString(", ")}]") +
       pushedAgg.map(a => s", PushedAggregates: [${a.mkString(", ")}]").getOrElse("") +
       grouped.map(g => s", PushedGroupedAggregate: $g").getOrElse("") +
       sample.map(sp => s", PushedSample: $sp").getOrElse("") +
@@ -1177,9 +887,6 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
     */
   private val sortKey: Option[String] = options.get("sort")
 
-  /** DERIVED columns (r17) — injected by every partition's reader. */
-  private val computedCols: Seq[graft.query.ComputedCol] =
-    graft.query.ComputedCol.fromOptions(options)
 
   /** Plan one collection's partitions under a given strategy — shared by
     * the single-collection path and each entry of multi-collection mode
@@ -1200,7 +907,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
             topNSpec = topNSort, sample = sample,
             unwind = unwind, unwindPost = unwindPost,
             tailsPostUnwind = tailsPostUnwind,
-            computed = computedCols): InputPartition
+            computed = cols.computed): InputPartition
         }
       }
     case "single" =>
@@ -1209,7 +916,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
           offset = off, topNSpec = topNSort, sample = sample,
           unwind = unwind, unwindPost = unwindPost,
           tailsPostUnwind = tailsPostUnwind,
-          computed = computedCols): InputPartition)
+          computed = cols.computed): InputPartition)
     case other =>
       // key-range strategies via the pure planners + file-backed stats;
       // chunk/shard maps arrive as option-level JSON (the config.chunks /
@@ -1229,7 +936,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
               sample = sample, unwind = unwind,
               unwindPost = unwindPost,
               tailsPostUnwind = tailsPostUnwind,
-              computed = computedCols): InputPartition
+              computed = cols.computed): InputPartition
           }
       }
     }
@@ -1250,7 +957,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
           BsonFiles.planByteSplits(f, splitSize).map { case (s, e) =>
             GroupedAggPartition(f, s, e, query, g, mapping,
               sample, unwind, unwindPost,
-              computed = computedCols): InputPartition
+              computed = cols.computed): InputPartition
           })
         return (
           if (parts.nonEmpty || g.groupCols.nonEmpty) parts.toArray
@@ -1258,7 +965,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
           // so the final fold sees a count-0 partial, not zero rows
           // (the q58 zero-partition COUNT lesson)
           else Array(GroupedAggPartition("", 0L, 0L, query, g,
-            mapping, sample, computed = computedCols): InputPartition))
+            mapping, sample, computed = cols.computed): InputPartition))
       case None => ()
     }
     pushedAgg match {
@@ -1344,26 +1051,11 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
               .foldLeft(files)((fs, owned) => fs.filter(owned))
           }
         }
-        // row-level runtime narrowing: the IN-set joins AND-composed into
-        // the per-partition query (rows it drops are exactly the rows the
-        // join above would drop); the split-key values additionally prune
-        // whole key-range partitions inside Planners.plan. String values
-        // use Spark-read semantics (the join compares READ values)
-        val rtQuery = rt.foldLeft(BQuery.True: BQuery) { case (acc, (f, vs)) =>
-          val strs = vs.collect { case BString(s) => s }
-          val longs = vs.collect { case BInt64(x) => x }
-          // TimestampType runtime values arrive as BDate millis; the
-          // join compares READ values, so match BOTH timestamp storages
-          val dates = vs.collect { case graft.bson.BDate(ms) => ms }
-          BQuery.and(acc,
-            if (strs.size == vs.size) BQuery.ReadStrIn(f, strs)
-            else if (longs.size == vs.size) BQuery.ReadLongIn(f, longs)
-            else if (dates.size == vs.size && vs.nonEmpty)
-              BQuery.ReadTimeIn(f, dates.map(_ * 1000L))
-            else BQuery.In(f, vs))
-        }
+        // row-level runtime narrowing: the IN-sets AND-compose into the
+        // per-partition query; the split-key values additionally prune
+        // whole key-range partitions inside Planners.plan
         planCollection(routed, defStrategy, defSplitSize, defKey, defMinDocs,
-          defFilterEmpty, BQuery.and(query, rtQuery), limit, sortKey, offset,
+          defFilterEmpty, Pushdown.withRuntimeIn(query, rt), limit, sortKey, offset,
           runtimeKeyValues = rt.get(defKey)).toArray
     }
   }
@@ -1695,7 +1387,7 @@ final class GraftReaderFactory(requiredSchema: StructType,
 /** One byte-split of a pushed grouped aggregation: path "" is the
   * empty-collection sentinel (GLOBAL aggregates only). */
 final case class GroupedAggPartition(path: String, start: Long, end: Long,
-    query: BQuery, grouped: FileGroupedAgg,
+    query: BQuery, grouped: GroupedAgg,
     mapping: Map[String, String],
     sample: Option[SamplePush] = None,
     unwind: Option[UnwindSpec] = None,
@@ -2454,32 +2146,11 @@ final class GraftDataWriter(partitionId: Int, taskId: Long,
     extends DataWriter[InternalRow] {
   import graft.store.{ShardRouting, WriteModels}
 
-  private val mode = options.getOrElse("mode", "insert")
-  private val keys = options.getOrElse("keys", "_id").split(',').toSeq
-  private val updateOp = options.getOrElse("update_op", "set")
-  private val multi = options.get("multi").exists(_.toBoolean)
-  private val idColumn = options.get("id_column")
+  private val conf = WriteModels.WriteConf.fromOptions(options)
   // templated update DSL (JSONPigReplace analog): overrides keys/update_op
   private val templates: Option[(graft.query.UpdateDsl.Template, graft.query.UpdateDsl.Template)] =
     for (q <- options.get("query_template"); u <- options.get("update_template"))
       yield (graft.query.UpdateDsl.parse(q), graft.query.UpdateDsl.parse(u))
-  // write-side column remapping (the reverse of the read-side
-  // mongo.columns.mapping analog): Spark column -> (possibly dotted)
-  // document field, applied BEFORE key extraction so `keys`/`id_column`
-  // address document-space names
-  private val writeMapping: Map[String, String] =
-    options.get("column_mapping").map(ColumnMapping.parse).getOrElse(Map.empty)
-
-  private def remap(d: BDoc): BDoc =
-    if (writeMapping.isEmpty) d
-    else writeMapping.foldLeft(d) { case (acc, (sparkCol, path)) =>
-      acc.get(sparkCol) match {
-        case Some(v) if sparkCol != path =>
-          graft.query.Updates.setField(
-            BDoc(acc.fields.removed(sparkCol)), path, v)
-        case _ => acc
-      }
-    }
 
   // attempt temp files live in the job dir on the SHARED collection path
   // (never executor-local java.io.tmpdir — the apply tasks must be able to
@@ -2505,16 +2176,17 @@ final class GraftDataWriter(partitionId: Int, taskId: Long,
     appenders.getOrElseUpdate(k, new BsonFiles.Appender(tmpFile(k).toString))
 
   override def write(record: InternalRow): Unit = {
-    val doc = remap(RowCodec.toBson(record, writeSchema))
+    val doc = conf.remap(RowCodec.toBson(record, writeSchema))
     val model = templates match {
       case Some((qt, ut)) =>
         BDoc(
-          "__op" -> BString(mode),
+          "__op" -> BString(conf.mode),
           "q" -> qt.bind(doc),
           "u" -> ut.bind(doc),
-          "upsert" -> BBool(mode == "upsert"),
-          "multi" -> BBool(multi))
-      case None => WriteModels.toDoc(mode, doc, keys, updateOp, multi, idColumn)
+          "upsert" -> BBool(conf.mode == "upsert"),
+          "multi" -> BBool(conf.multi))
+      case None => WriteModels.toDoc(conf.mode, doc, conf.keys, conf.updateOp,
+        conf.multi, conf.idColumn)
     }
     seq += 1
     // route through the SAME decision the store's local bulkWrite uses —

@@ -12,6 +12,42 @@ import scala.collection.immutable.ListMap
   * its task temp files (core/.../io/MongoUpdateWritable.java:38-64).
   */
 object WriteModels {
+  /** The write options both sinks read: `mode`
+    * (insert|replace|update|upsert), `keys`, `update_op`, `multi`,
+    * `id_column`, and the write-side `column_mapping` (Spark column ->
+    * possibly dotted document field, the reverse of the read-side
+    * mongo.columns.mapping analog). */
+  final case class WriteConf(mode: String, keys: Seq[String], updateOp: String,
+      multi: Boolean, idColumn: Option[String], mapping: Map[String, String]) {
+
+    /** Move each mapped column to its document field — applied BEFORE key
+      * extraction, so `keys`/`id_column` address document-space names.
+      * Every source value is read before any field moves: a chained
+      * (`{"a": "b", "b": "c"}`) or swapped (`{"a": "b", "b": "a"}`)
+      * mapping must not let one column's value overwrite another's
+      * before that one has moved. */
+    def remap(d: BDoc): BDoc = {
+      val moves = mapping.toSeq.filter { case (col, path) => col != path }
+        .flatMap { case (col, path) => d.get(col).map(v => (col, path, v)) }
+      if (moves.isEmpty) d
+      else moves.foldLeft(BDoc(d.fields -- moves.map(_._1))) { case (acc, (_, path, v)) =>
+        graft.query.Updates.setField(acc, path, v)
+      }
+    }
+
+    /** The write-model doc ([[toDoc]]) of one encoded row. */
+    def model(row: BDoc): BDoc = toDoc(mode, remap(row), keys, updateOp, multi, idColumn)
+  }
+  object WriteConf {
+    def fromOptions(options: Map[String, String]): WriteConf = WriteConf(
+      options.getOrElse("mode", "insert"),
+      options.getOrElse("keys", "_id").split(',').toSeq,
+      options.getOrElse("update_op", "set"),
+      options.get("multi").exists(_.toBoolean),
+      options.get("id_column"),
+      graft.source.ColumnMapping.fromOptions(options))
+  }
+
   def toDoc(mode: String, row: BDoc, keys: Seq[String], updateOp: String,
       multi: Boolean, idColumn: Option[String]): BDoc = {
     val doc = idColumn match {

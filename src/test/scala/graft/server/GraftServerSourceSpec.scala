@@ -796,6 +796,33 @@ class GraftServerSourceSpec extends SparkSpec {
     assert(nonAscii.collect().isEmpty)
   }
 
+  test("a chained or swapped write-side column_mapping keeps every value") {
+    import spark.implicits._
+    val dir = freshDir()
+    for ((mapping, k) <- Seq("""{"a": "b", "b": "c"}""", """{"a": "b", "b": "a"}""").zipWithIndex) {
+      Seq((1L, "A", "B")).toDF("_id", "a", "b").write.format("graftserver")
+        .options(serverOpts(dir, s"db.remap$k")).option("column_mapping", mapping)
+        .mode("append").save()
+      val back = spark.read.format("graftserver").options(serverOpts(dir, s"db.remap$k"))
+        .schema("_id LONG, a STRING, b STRING").option("column_mapping", mapping).load()
+      assert(back.select($"a", $"b").as[(String, String)].collect().toSeq ==
+        Seq(("A", "B")), mapping)
+    }
+  }
+
+  test("the graftbson-only `limit` option is rejected, pointing to Spark's .limit") {
+    import spark.implicits._
+    val dir = freshDir()
+    Seq((1L, 1), (2L, 2)).toDF("_id", "v").write.format("graftserver")
+      .options(serverOpts(dir, "db.lim")).mode("append").save()
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graftserver").options(serverOpts(dir, "db.lim"))
+        .option("limit", "1").load().collect()
+    }
+    assert(e.getMessage.contains("`limit` option") && e.getMessage.contains(".limit(n)"),
+      e.getMessage)
+  }
+
   test("column_mapping on the SERVER transport: write remap, path decode, pushdowns resolve (r14)") {
     import spark.implicits._
     val dir = freshDir()

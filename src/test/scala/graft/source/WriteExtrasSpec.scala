@@ -34,6 +34,19 @@ class WriteExtrasSpec extends SparkSpec {
     assert(back.agg(org.apache.spark.sql.functions.sum("score")).head.getLong(0) === 30)
   }
 
+  test("a chained or swapped write-side column_mapping keeps every value") {
+    import spark.implicits._
+    for (mapping <- Seq("""{"a": "b", "b": "c"}""", """{"a": "b", "b": "a"}""")) {
+      val dir = freshDir()
+      Seq((1, "A", "B")).toDF("_id", "a", "b").write.format("graftbson")
+        .option("column_mapping", mapping).mode("append").save(dir)
+      val back = spark.read.format("graftbson").schema("_id INT, a STRING, b STRING")
+        .option("column_mapping", mapping).load(dir)
+      assert(back.select($"a", $"b").as[(String, String)].collect().toSeq ==
+        Seq(("A", "B")), mapping)
+    }
+  }
+
   test("write-side mapping applies before key extraction (keys in doc space)") {
     import spark.implicits._
     val dir = freshDir()
