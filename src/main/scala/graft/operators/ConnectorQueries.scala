@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -41,6 +42,38 @@ object ConnectorQueries {
     d
   }
 
+  /** Where a query's seeded collection lives: a graftbson dump dir, or
+    * (`ns` set) a graftserver namespace under a server dir. */
+  private final case class Coll(dir: String, ns: String = "") {
+    def format: String = if (ns.isEmpty) "graftbson" else "graftserver"
+    def server: Map[String, String] =
+      if (ns.isEmpty) Map.empty else Map("server_dir" -> dir, "ns" -> ns)
+  }
+
+  private implicit class Seed(df: DataFrame) {
+    /** Appends the frame to a collection, `_id` taken from `idCol` (none
+      * when empty): by default a FRESH one — a new graftbson dump dir, or
+      * namespace `ns` of a new server dir. */
+    def seed(idCol: String = "", ns: String = "", dir: String = freshDir(),
+        opts: Map[String, String] = Map.empty): Coll = {
+      val c = Coll(dir, ns)
+      val w = df.write.format(c.format).options(c.server ++ opts).mode("append")
+      val withId = if (idCol.isEmpty) w else w.option("id_column", idCol)
+      if (ns.isEmpty) withId.save(dir) else withId.save()
+      c
+    }
+  }
+
+  /** Opens a seeded collection with `schema`; `uniform` sets
+    * `assume_uniform_storage`, honest wherever this engine wrote every
+    * doc. */
+  private def open(s: SparkSession, c: Coll, schema: String, uniform: Boolean = false,
+      opts: Map[String, String] = Map.empty): DataFrame = {
+    val r = s.read.format(c.format).options(c.server ++ opts ++
+      (if (uniform) Map("assume_uniform_storage" -> "true") else Map.empty)).schema(schema)
+    if (c.ns.isEmpty) r.load(c.dir) else r.load()
+  }
+
   val all: Seq[CatalogQuery] = Seq(
 
     // Round-trip: parquet -> BSON collection (insert, _id merge) -> DSv2
@@ -49,18 +82,14 @@ object ConnectorQueries {
       "q31_bson_source_roundtrip",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.customer(s, d)
+        val c = Tables.customer(s, d)
           .select($"c_custkey", $"c_name", $"c_nationkey", $"c_acctbal", $"c_mktsegment")
-          .write.format("graftbson").option("id_column", "c_custkey")
-          .mode("append").save(dir)
+          .seed("c_custkey")
         // carry the writer's schema (the q100 deployment pattern): an
         // EMPTY input corpus leaves nothing to sample, and a read must
         // degrade to an empty result, not die in schema inference
-        s.read.format("graftbson")
-          .schema("_id LONG, c_name STRING, c_nationkey INT, " +
-            "c_acctbal DOUBLE, c_mktsegment STRING")
-          .load(dir)
+        open(s, c, "_id LONG, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, " +
+          "c_mktsegment STRING")
           .filter($"c_acctbal" > 0.0)
           .groupBy($"c_mktsegment")
           .agg(count(lit(1)).as("n"), dsum($"c_acctbal").as("sum_bal"))
@@ -79,13 +108,10 @@ object ConnectorQueries {
       "q32_write_upsert_inc",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.events(s, d)
+        val c = Tables.events(s, d)
           .groupBy($"user_id".as("_id")).agg(count(lit(1)).as("n"))
-          .write.format("graftbson")
-          .option("mode", "upsert").option("update_op", "inc")
-          .mode("append").save(dir)
-        s.read.format("graftbson").schema("_id LONG, n LONG").load(dir)
+          .seed(opts = Map("mode" -> "upsert", "update_op" -> "inc"))
+        open(s, c, "_id LONG, n LONG")
           .select($"_id", $"n")
           .orderBy($"_id")
       },
@@ -98,17 +124,13 @@ object ConnectorQueries {
       "q33_write_update_set",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
         val byYear = Tables.orders(s, d)
           .groupBy(year($"o_orderdate").as("_id"))
-        byYear.agg(count(lit(1)).as("n_orders"))
-          .write.format("graftbson").mode("append").save(dir)
+        val c = byYear.agg(count(lit(1)).as("n_orders"))
+          .seed()
         byYear.agg(davg($"o_totalprice").as("avg_price"))
-          .write.format("graftbson")
-          .option("mode", "update").option("update_op", "set")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id INT, n_orders LONG, avg_price DOUBLE").load(dir)
+          .seed(dir = c.dir, opts = Map("mode" -> "update", "update_op" -> "set"))
+        open(s, c, "_id INT, n_orders LONG, avg_price DOUBLE")
           .select($"_id", $"n_orders", $"avg_price")
           .orderBy($"_id")
       },
@@ -156,18 +178,14 @@ object ConnectorQueries {
       "q58_agg_pushdown",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice")
           // sharded store: the staged applies run as one executor task per
           // shard in parallel (a single-shard collection serializes the
           // whole apply through one task — the write, not the pushed
           // aggregate, dominates this query's wall time)
-          .write.format("graftbson").option("id_column", "o_orderkey")
-          .option("shards", "8")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, o_custkey LONG, o_totalprice DOUBLE").load(dir)
+          .seed("o_orderkey", opts = Map("shards" -> "8"))
+        open(s, c, "_id LONG, o_custkey LONG, o_totalprice DOUBLE")
           .agg(
             count(lit(1)).as("n"),
             min($"o_custkey").as("min_cust"),
@@ -190,17 +208,13 @@ object ConnectorQueries {
       "q66_runtime_prune",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.customer(s, d)
+        val c = Tables.customer(s, d)
           .select($"c_custkey", $"c_name", $"c_acctbal", $"c_mktsegment")
-          .write.format("graftbson").option("id_column", "c_custkey")
-          .option("shards", "8").mode("append").save(dir)
+          .seed("c_custkey", opts = Map("shards" -> "8"))
         val hot = Tables.orders(s, d)
           .filter($"o_orderpriority" === "1-URGENT" && $"o_totalprice" > 400000.0)
           .select($"o_custkey").distinct()
-        val fact = s.read.format("graftbson")
-          .schema("_id LONG, c_name STRING, c_acctbal DOUBLE, c_mktsegment STRING")
-          .load(dir)
+        val fact = open(s, c, "_id LONG, c_name STRING, c_acctbal DOUBLE, c_mktsegment STRING")
         fact.join(hot, fact("_id") === hot("o_custkey"))
           .groupBy($"c_mktsegment")
           .agg(count(lit(1)).as("n"), dsum($"c_acctbal").as("sum_bal"))
@@ -225,22 +239,15 @@ object ConnectorQueries {
       "q69_server_roundtrip",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.orders")
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice", $"o_orderstatus")
-          .write.format("graftserver").options(opts)
-          .option("id_column", "o_orderkey")
-          .mode("append").save()
+          .seed("o_orderkey", ns = "db.orders")
         // 2 MB target splits: several cursor partitions at sf0.01+ without
         // asking the file-rooted fake transport (whose every cursor is a
         // full-store scan, unlike a real server's index-ranged cursors)
         // for dozens of passes
-        s.read.format("graftserver").options(opts)
-          .option("split_size", (2L * 1024 * 1024).toString)
-          .schema("_id LONG, o_custkey LONG, o_totalprice DOUBLE, " +
-            "o_orderstatus STRING")
-          .load()
+        open(s, c, "_id LONG, o_custkey LONG, o_totalprice DOUBLE, o_orderstatus STRING",
+          opts = Map("split_size" -> (2L * 1024 * 1024).toString))
           .filter($"o_totalprice" > 1000.0)
           .groupBy($"o_orderstatus")
           .agg(count(lit(1)).as("n"), dsum($"o_totalprice").as("sum_price"))
@@ -261,15 +268,10 @@ object ConnectorQueries {
       "q70_server_agg_probes",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.cust")
-        Tables.customer(s, d)
+        val c = Tables.customer(s, d)
           .select($"c_custkey", $"c_nationkey", $"c_acctbal")
-          .write.format("graftserver").options(opts)
-          .option("id_column", "c_custkey")
-          .mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, c_nationkey INT, c_acctbal DOUBLE").load()
+          .seed("c_custkey", ns = "db.cust")
+        open(s, c, "_id LONG, c_nationkey INT, c_acctbal DOUBLE")
           .agg(
             count(lit(1)).as("n"),
             min($"c_nationkey").as("min_nat"),
@@ -296,20 +298,13 @@ object ConnectorQueries {
       "q121_server_group_pushdown",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.gcust")
-        Tables.customer(s, d)
+        val c = Tables.customer(s, d)
           .select($"c_custkey", $"c_nationkey", $"c_acctbal")
-          .write.format("graftserver").options(opts)
-          .option("id_column", "c_custkey")
-          .mode("append").save()
-        s.read.format("graftserver").options(opts)
-          // SUM over the Long _id needs the uniform opt-in (r13 gate:
-          // $sum would skip a date-backed long) — honest here, this
-          // engine wrote the collection
-          .option("assume_uniform_storage", "true")
-          .schema("_id LONG, c_nationkey INT, c_acctbal DOUBLE")
-          .load()
+          .seed("c_custkey", ns = "db.gcust")
+        // SUM over the Long _id needs the uniform opt-in (r13 gate: $sum
+        // would skip a date-backed long) — honest here, this engine wrote
+        // the collection
+        open(s, c, "_id LONG, c_nationkey INT, c_acctbal DOUBLE", uniform = true)
           .groupBy($"c_nationkey")
           .agg(count(lit(1)).as("n"),
             count($"c_acctbal").as("n_bal"),
@@ -339,18 +334,11 @@ object ConnectorQueries {
       "q122_server_topn",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.topn")
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_totalprice")
-          .write.format("graftserver").options(opts)
-          .option("id_column", "o_orderkey")
-          .mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .option("assume_uniform_storage", "true")
-          .option("split_size", (1L * 1024 * 1024).toString)
-          .schema("_id LONG, o_totalprice DOUBLE")
-          .load()
+          .seed("o_orderkey", ns = "db.topn")
+        open(s, c, "_id LONG, o_totalprice DOUBLE", uniform = true,
+          opts = Map("split_size" -> (1L * 1024 * 1024).toString))
           .orderBy($"_id".desc)
           .limit(20)
           .select($"_id", $"o_totalprice")
@@ -373,18 +361,11 @@ object ConnectorQueries {
       "q123_server_topn_tiebreak",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.mtopn")
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-          .write.format("graftserver").options(opts)
-          .option("id_column", "o_orderkey")
-          .mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .option("assume_uniform_storage", "true")
-          .option("split_size", (1L * 1024 * 1024).toString)
-          .schema("_id LONG, o_custkey LONG, o_totalprice DOUBLE")
-          .load()
+          .seed("o_orderkey", ns = "db.mtopn")
+        open(s, c, "_id LONG, o_custkey LONG, o_totalprice DOUBLE", uniform = true,
+          opts = Map("split_size" -> (1L * 1024 * 1024).toString))
           .orderBy($"o_custkey".desc, $"_id".asc)
           .limit(25)
           .select($"_id", $"o_custkey", $"o_totalprice")
@@ -408,24 +389,17 @@ object ConnectorQueries {
       "q124_server_filtered_agg",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.fagg")
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-          .write.format("graftserver").options(opts)
-          .option("id_column", "o_orderkey")
-          .mode("append").save()
+          .seed("o_orderkey", ns = "db.fagg")
         // exact aggregates only, so the oracle hash-matches: COUNT, a
         // LONG-column SUM/AVG (integer-exact partials; the IEEE division
         // of exact sums is the same op in both engines), and double
         // MIN/MAX (order-independent). A double SUM would either refuse
         // the pushdown (dsum's decimal cast is not a bare column) or
-        // float-drift against the oracle.
-        s.read.format("graftserver").options(opts)
-          // SUM/AVG over Long columns ride the uniform opt-in (r13 gate)
-          .option("assume_uniform_storage", "true")
-          .schema("_id LONG, o_custkey LONG, o_totalprice DOUBLE")
-          .load()
+        // float-drift against the oracle. SUM/AVG over Long columns ride
+        // the uniform opt-in (r13 gate).
+        open(s, c, "_id LONG, o_custkey LONG, o_totalprice DOUBLE", uniform = true)
           .filter($"o_totalprice" > 50000.0)
           .agg(count(lit(1)).as("n"),
             sum($"o_custkey").as("sum_cust"),
@@ -452,20 +426,13 @@ object ConnectorQueries {
       "q125_server_multikey_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.mkg")
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_orderstatus", $"o_orderpriority",
             $"o_totalprice")
-          .write.format("graftserver").options(opts)
-          .option("id_column", "o_orderkey")
-          .mode("append").save()
-        s.read.format("graftserver").options(opts)
-          // SUM/AVG over the Long _id ride the uniform opt-in (r13 gate)
-          .option("assume_uniform_storage", "true")
-          .schema("_id LONG, o_orderstatus STRING, o_orderpriority STRING, " +
-            "o_totalprice DOUBLE")
-          .load()
+          .seed("o_orderkey", ns = "db.mkg")
+        // SUM/AVG over the Long _id ride the uniform opt-in (r13 gate)
+        open(s, c, "_id LONG, o_orderstatus STRING, o_orderpriority STRING, o_totalprice DOUBLE",
+          uniform = true)
           .filter($"o_totalprice" > 1000.0)
           .groupBy($"o_orderstatus", $"o_orderpriority")
           .agg(count(lit(1)).as("n"),
@@ -496,14 +463,10 @@ object ConnectorQueries {
       "q126_file_group_pushdown",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.customer(s, d)
+        val c = Tables.customer(s, d)
           .select($"c_custkey", $"c_nationkey", $"c_acctbal")
-          .write.format("graftbson").option("id_column", "c_custkey")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, c_nationkey INT, c_acctbal DOUBLE")
-          .load(dir)
+          .seed("c_custkey")
+        open(s, c, "_id LONG, c_nationkey INT, c_acctbal DOUBLE")
           .filter($"c_acctbal" > 0.0)
           .groupBy($"c_nationkey")
           .agg(count(lit(1)).as("n"),
@@ -533,14 +496,10 @@ object ConnectorQueries {
       "q127_file_topn_desc",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_totalprice")
-          .write.format("graftbson").option("id_column", "o_orderkey")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, o_totalprice DOUBLE")
-          .load(dir)
+          .seed("o_orderkey")
+        open(s, c, "_id LONG, o_totalprice DOUBLE")
           .orderBy($"o_totalprice".desc, $"_id".asc)
           .limit(25)
           .select($"_id", $"o_totalprice")
@@ -560,18 +519,11 @@ object ConnectorQueries {
       "q128_server_distinct",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.dist")
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_orderstatus", $"o_orderpriority",
             $"o_totalprice")
-          .write.format("graftserver").options(opts)
-          .option("id_column", "o_orderkey")
-          .mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, o_orderstatus STRING, o_orderpriority STRING, " +
-            "o_totalprice DOUBLE")
-          .load()
+          .seed("o_orderkey", ns = "db.dist")
+        open(s, c, "_id LONG, o_orderstatus STRING, o_orderpriority STRING, o_totalprice DOUBLE")
           .filter($"o_totalprice" > 10000.0)
           .select($"o_orderstatus", $"o_orderpriority").distinct()
           .orderBy($"o_orderstatus", $"o_orderpriority")
@@ -589,14 +541,10 @@ object ConnectorQueries {
       "q129_file_distinct",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.customer(s, d)
+        val c = Tables.customer(s, d)
           .select($"c_custkey", $"c_nationkey", $"c_acctbal")
-          .write.format("graftbson").option("id_column", "c_custkey")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, c_nationkey INT, c_acctbal DOUBLE")
-          .load(dir)
+          .seed("c_custkey")
+        open(s, c, "_id LONG, c_nationkey INT, c_acctbal DOUBLE")
           .filter($"c_acctbal" > 0.0)
           .select($"c_nationkey").distinct()
           .orderBy($"c_nationkey".asc_nulls_first)
@@ -618,17 +566,13 @@ object ConnectorQueries {
       "q130_stream_tail_ingest",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
         val ckpt = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.tail")
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
-          .write.format("graftserver").options(opts)
-          .option("id_column", "o_orderkey")
-          .mode("append").save()
+          .seed("o_orderkey", ns = "db.tail")
         val sink = "q130_sink_" +
           java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = s.readStream.format("graftserver").options(opts)
+        val q = s.readStream.format("graftserver").options(c.server)
           .schema("_id LONG, o_orderstatus STRING, o_totalprice DOUBLE")
           .load()
           .writeStream.format("memory").queryName(sink)
@@ -662,16 +606,13 @@ object ConnectorQueries {
       "q131_stream_file_ingest",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
         val ckpt = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", $"lang", $"n_chars")
-          .write.format("graftbson").option("id_column", "doc_id")
-          .option("shards", "4")
-          .mode("append").save(dir)
+          .seed("doc_id", opts = Map("shards" -> "4"))
         val sink = "q131_sink_" +
           java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = s.readStream.format("graftbson").option("path", dir)
+        val q = s.readStream.format("graftbson").option("path", c.dir)
           .schema("_id LONG, lang STRING, n_chars LONG")
           .load()
           .writeStream.format("memory").queryName(sink)
@@ -707,15 +648,11 @@ object ConnectorQueries {
       "q132_file_sample_pushdown",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
-          .write.format("graftbson").option("id_column", "o_orderkey")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, o_orderstatus STRING, o_totalprice DOUBLE")
-          .option("sample_key", "_id")
-          .load(dir)
+          .seed("o_orderkey")
+        open(s, c, "_id LONG, o_orderstatus STRING, o_totalprice DOUBLE",
+          opts = Map("sample_key" -> "_id"))
           .sample(withReplacement = false, 0.25, seed = 42L)
           .filter($"o_totalprice" > 1000.0)
           .groupBy($"o_orderstatus")
@@ -749,26 +686,15 @@ object ConnectorQueries {
       "q133_server_lookup_join",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.orders(s, d)
+        val c1 = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.jorders"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        Tables.customer(s, d)
+          .seed("o_orderkey", ns = "db.jorders")
+        val c2 = Tables.customer(s, d)
           .select($"c_custkey", $"c_mktsegment", $"c_acctbal")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.jcust"))
-          .option("id_column", "c_custkey").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.jorders"))
-          .schema("_id LONG, o_custkey LONG, o_totalprice DOUBLE").load()
+          .seed("c_custkey", ns = "db.jcust", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, o_custkey LONG, o_totalprice DOUBLE", uniform = true)
           .filter($"o_totalprice" > 1000.0)
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.jcust"))
-          .schema("_id LONG, c_mktsegment STRING, c_acctbal DOUBLE").load()
+        val c = open(s, c2, "_id LONG, c_mktsegment STRING, c_acctbal DOUBLE", uniform = true)
           .filter($"c_acctbal" > 0.0)
         o.join(c, o("o_custkey") === c("_id"))
           .groupBy($"c_mktsegment")
@@ -799,26 +725,15 @@ object ConnectorQueries {
       "q134_server_join_agg",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.orders(s, d)
+        val c1 = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.gorders"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        Tables.customer(s, d)
+          .seed("o_orderkey", ns = "db.gorders")
+        val c2 = Tables.customer(s, d)
           .select($"c_custkey", $"c_mktsegment", $"c_acctbal")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.gcust"))
-          .option("id_column", "c_custkey").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.gorders"))
-          .schema("_id LONG, o_custkey LONG, o_totalprice DOUBLE").load()
+          .seed("c_custkey", ns = "db.gcust", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, o_custkey LONG, o_totalprice DOUBLE", uniform = true)
           .filter($"o_totalprice" > 1000.0)
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.gcust"))
-          .schema("_id LONG, c_mktsegment STRING, c_acctbal DOUBLE").load()
+        val c = open(s, c2, "_id LONG, c_mktsegment STRING, c_acctbal DOUBLE", uniform = true)
         o.join(c, o("o_custkey") === c("_id"))
           .groupBy($"c_mktsegment")
           .agg(count(lit(1)).as("n"),
@@ -850,15 +765,11 @@ object ConnectorQueries {
       "q139_nested_prune",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", $"lang",
             struct($"n_chars".as("small"), $"text".as("blob")).as("meta"))
-          .write.format("graftbson").option("id_column", "doc_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, lang STRING, meta STRUCT<small: BIGINT, blob: STRING>")
-          .load(dir)
+          .seed("doc_id")
+        open(s, c, "_id LONG, lang STRING, meta STRUCT<small: BIGINT, blob: STRING>")
           .select($"_id", $"lang", $"meta.small".as("n_chars"))
           .groupBy($"lang")
           .agg(count(lit(1)).as("n"), sum($"n_chars").as("sum_chars"),
@@ -887,14 +798,9 @@ object ConnectorQueries {
         val dir = freshDir()
         val rows = Tables.orders(s, d)
           .select($"o_orderkey", $"o_totalprice")
-        rows.filter($"o_orderkey" % 2 === 0)
-          .write.format("graftbson").option("id_column", "o_orderkey")
-          .mode("append").save(s"$dir/even.bson")
-        rows.filter($"o_orderkey" % 2 === 1)
-          .write.format("graftbson").option("id_column", "o_orderkey")
-          .mode("append").save(s"$dir/odd.bson")
-        s.read.format("graftbson")
-          .schema("_id LONG, o_totalprice DOUBLE").load(dir)
+        rows.filter($"o_orderkey" % 2 === 0).seed("o_orderkey", dir = s"$dir/even.bson")
+        rows.filter($"o_orderkey" % 2 === 1).seed("o_orderkey", dir = s"$dir/odd.bson")
+        open(s, Coll(dir), "_id LONG, o_totalprice DOUBLE")
           // each write lands a COLLECTION DIR (shard files inside), so
           // the per-source label is the parent directory of `_file`
           .groupBy(element_at(split(col("_file"), "/"), -2).as("src"))
@@ -924,15 +830,12 @@ object ConnectorQueries {
       "q137_stream_sink_build",
       (s, d) => {
         import s.implicits._
-        val landing = freshDir()
         val coll = freshDir()
         val ckpt = freshDir()
-        Tables.documents(s, d)
+        val landing = Tables.documents(s, d)
           .select($"doc_id", $"lang", $"n_chars")
-          .write.format("graftbson").option("id_column", "doc_id")
-          .option("shards", "4")
-          .mode("append").save(landing)
-        val q = s.readStream.format("graftbson").option("path", landing)
+          .seed("doc_id", opts = Map("shards" -> "4"))
+        val q = s.readStream.format("graftbson").option("path", landing.dir)
           .schema("_id LONG, lang STRING, n_chars LONG")
           .load()
           .writeStream.format("graftbson")
@@ -941,8 +844,7 @@ object ConnectorQueries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.read.format("graftbson")
-          .schema("_id LONG, lang STRING, n_chars LONG").load(coll)
+        open(s, Coll(coll), "_id LONG, lang STRING, n_chars LONG")
           .groupBy($"lang")
           .agg(count(lit(1)).as("n"), sum($"_id").as("sum_key"),
             sum($"n_chars").as("sum_chars"))
@@ -968,25 +870,20 @@ object ConnectorQueries {
       "q136_query_array_ops",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey",
             array(($"o_orderkey" % 7).cast("int"),
               ($"o_orderkey" % 5).cast("int"),
               ($"o_orderkey" % 3).cast("int")).as("arr"),
             $"o_totalprice")
-          .write.format("graftbson").option("id_column", "o_orderkey")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, arr ARRAY<INT>, o_totalprice DOUBLE")
-          .option("query",
-            """{"$and": [
+          .seed("o_orderkey")
+        open(s, c, "_id LONG, arr ARRAY<INT>, o_totalprice DOUBLE",
+          opts = Map("query" -> """{"$and": [
               |  {"arr": {"$all": [1, 2]}},
               |  {"arr": {"$size": 3}},
               |  {"arr": {"$elemMatch": {"$gte": 4, "$lte": 6}}},
               |  {"_id": {"$mod": [2, 0]}}
-              |]}""".stripMargin)
-          .load(dir)
+              |]}""".stripMargin))
           .agg(count(lit(1)).as("n"), sum($"_id").as("sum_key"),
             dsum($"o_totalprice").as("sum_price"))
       },
@@ -1020,7 +917,6 @@ object ConnectorQueries {
       "q100_clean_corpus_build",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
         val base = Tables.documents(s, d)
           .select($"doc_id", $"source", $"text",
             TextQueries.qualityPass(
@@ -1032,13 +928,11 @@ object ConnectorQueries {
           .join(winners, Seq("h", "doc_id"))
           .filter($"pass")
           .select($"doc_id", $"source", $"text")
-        kept.write.format("graftbson")
-          .option("id_column", "doc_id").option("shards", "4")
-          .mode("append").save(dir)
+        val c = kept.seed("doc_id", opts = Map("shards" -> "4"))
         // read back with the writer's schema: schema inference over a
         // possibly-EMPTY collection (everything gated out) has nothing
         // to sample — the deployment pattern is to carry the schema
-        s.read.format("graftbson").schema(kept.schema).load(dir)
+        s.read.format("graftbson").schema(kept.schema).load(c.dir)
           .groupBy($"source").agg(count(lit(1)).as("n_kept"))
           .orderBy($"source")
       },
@@ -1073,20 +967,13 @@ object ConnectorQueries {
       "q140_server_nested_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.nestg")
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey",
             struct($"o_orderstatus".as("status"), $"o_totalprice".as("price"))
               .as("meta"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "o_orderkey")
-          .mode("append").save()
-        s.read.format("graftserver").options(opts)
-          // SUM over the Long _id rides the uniform opt-in (r13 gate)
-          .option("assume_uniform_storage", "true")
-          .schema("_id LONG, meta STRUCT<status: STRING, price: DOUBLE>")
-          .load()
+          .seed("o_orderkey", ns = "db.nestg")
+        // SUM over the Long _id rides the uniform opt-in (r13 gate)
+        open(s, c, "_id LONG, meta STRUCT<status: STRING, price: DOUBLE>", uniform = true)
           .filter($"meta.price" > 1000.0)
           .groupBy($"meta.status")
           .agg(count(lit(1)).as("n"), sum($"_id").as("sum_key"),
@@ -1112,15 +999,11 @@ object ConnectorQueries {
       "q141_file_nested_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.customer(s, d)
+        val c = Tables.customer(s, d)
           .select($"c_custkey",
             struct($"c_nationkey".as("nat"), $"c_acctbal".as("bal")).as("meta"))
-          .write.format("graftbson").option("id_column", "c_custkey")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, meta STRUCT<nat: INT, bal: DOUBLE>")
-          .load(dir)
+          .seed("c_custkey")
+        open(s, c, "_id LONG, meta STRUCT<nat: INT, bal: DOUBLE>")
           .filter($"meta.bal" > 0.0)
           .groupBy($"meta.nat")
           .agg(count(lit(1)).as("n"), count($"meta.bal").as("n_bal"),
@@ -1148,19 +1031,12 @@ object ConnectorQueries {
       "q142_server_nested_topn",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.nestt")
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey",
             struct($"o_totalprice".as("price")).as("meta"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "o_orderkey")
-          .mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .option("assume_uniform_storage", "true")
-          .option("split_size", (1L * 1024 * 1024).toString)
-          .schema("_id LONG, meta STRUCT<price: DOUBLE>")
-          .load()
+          .seed("o_orderkey", ns = "db.nestt")
+        open(s, c, "_id LONG, meta STRUCT<price: DOUBLE>", uniform = true,
+          opts = Map("split_size" -> (1L * 1024 * 1024).toString))
           .orderBy($"meta.price".desc, $"_id".asc)
           .limit(25)
           .select($"_id", $"meta.price".as("price"))
@@ -1184,29 +1060,18 @@ object ConnectorQueries {
       "q143_server_join_chain",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir)
-        Tables.orders(s, d)
+        val c1 = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-          .write.format("graftserver").options(base ++ Map("ns" -> "db.ord3"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        Tables.customer(s, d)
+          .seed("o_orderkey", ns = "db.ord3")
+        val c2 = Tables.customer(s, d)
           .select($"c_custkey", $"c_nationkey")
-          .write.format("graftserver").options(base ++ Map("ns" -> "db.cust3"))
-          .option("id_column", "c_custkey").mode("append").save()
-        Tables.nation(s, d)
+          .seed("c_custkey", ns = "db.cust3", dir = c1.dir)
+        val c3 = Tables.nation(s, d)
           .select($"n_nationkey", $"n_name")
-          .write.format("graftserver").options(base ++ Map("ns" -> "db.nat3"))
-          .option("id_column", "n_nationkey").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ord3", "assume_uniform_storage" -> "true"))
-          .schema("_id LONG, o_custkey LONG, o_totalprice DOUBLE").load()
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.cust3", "assume_uniform_storage" -> "true"))
-          .schema("_id LONG, c_nationkey INT").load()
-        val n = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.nat3"))
-          .schema("_id INT, n_name STRING").load()
+          .seed("n_nationkey", ns = "db.nat3", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, o_custkey LONG, o_totalprice DOUBLE", uniform = true)
+        val c = open(s, c2, "_id LONG, c_nationkey INT", uniform = true)
+        val n = open(s, c3, "_id INT, n_name STRING")
         o.join(c, o("o_custkey") === c("_id"))
           .join(n, c("c_nationkey") === n("_id"))
           .filter(o("o_totalprice") > 500.0)
@@ -1236,23 +1101,15 @@ object ConnectorQueries {
       "q144_server_join_topn",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir)
-        Tables.orders(s, d)
+        val c1 = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-          .write.format("graftserver").options(base ++ Map("ns" -> "db.ordt"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        Tables.customer(s, d)
+          .seed("o_orderkey", ns = "db.ordt")
+        val c2 = Tables.customer(s, d)
           .select($"c_custkey", $"c_name")
-          .write.format("graftserver").options(base ++ Map("ns" -> "db.custt"))
-          .option("id_column", "c_custkey").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ordt", "assume_uniform_storage" -> "true"))
-          .option("split_size", (1L * 1024 * 1024).toString)
-          .schema("_id LONG, o_custkey LONG, o_totalprice DOUBLE").load()
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.custt", "assume_uniform_storage" -> "true"))
-          .schema("_id LONG, c_name STRING").load()
+          .seed("c_custkey", ns = "db.custt", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, o_custkey LONG, o_totalprice DOUBLE", uniform = true,
+          opts = Map("split_size" -> (1L * 1024 * 1024).toString))
+        val c = open(s, c2, "_id LONG, c_name STRING", uniform = true)
         o.join(c, o("o_custkey") === c("_id"))
           .select(o("_id").as("okey"), $"o_totalprice".as("price"), $"c_name")
           .orderBy($"price".desc, $"okey".asc)
@@ -1274,24 +1131,16 @@ object ConnectorQueries {
       "q145_server_nested_join_key",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir)
-        Tables.orders(s, d)
+        val c1 = Tables.orders(s, d)
           .select($"o_orderkey",
             struct($"o_custkey".as("custkey")).as("ref"), $"o_totalprice")
-          .write.format("graftserver").options(base ++ Map("ns" -> "db.ordn"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        Tables.customer(s, d)
+          .seed("o_orderkey", ns = "db.ordn")
+        val c2 = Tables.customer(s, d)
           .select($"c_custkey", $"c_mktsegment")
-          .write.format("graftserver").options(base ++ Map("ns" -> "db.custn"))
-          .option("id_column", "c_custkey").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ordn", "assume_uniform_storage" -> "true"))
-          .schema("_id LONG, ref STRUCT<custkey: LONG>, o_totalprice DOUBLE")
-          .load()
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.custn", "assume_uniform_storage" -> "true"))
-          .schema("_id LONG, c_mktsegment STRING").load()
+          .seed("c_custkey", ns = "db.custn", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, ref STRUCT<custkey: LONG>, o_totalprice DOUBLE",
+          uniform = true)
+        val c = open(s, c2, "_id LONG, c_mktsegment STRING", uniform = true)
         o.join(c, o("ref.custkey") === c("_id"))
           .groupBy($"c_mktsegment")
           .agg(count(lit(1)).as("n"), sum(o("_id")).as("sum_key"))
@@ -1316,17 +1165,11 @@ object ConnectorQueries {
       "q146_server_date_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.dateg")
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_orderpriority",
             to_date($"o_orderdate").as("od"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "o_orderkey")
-          .mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, o_orderpriority STRING, od DATE")
-          .load()
+          .seed("o_orderkey", ns = "db.dateg")
+        open(s, c, "_id LONG, o_orderpriority STRING, od DATE")
           .groupBy($"o_orderpriority")
           .agg(count(lit(1)).as("n"), min($"od").as("first_day"),
             max($"od").as("last_day"))
@@ -1353,25 +1196,14 @@ object ConnectorQueries {
       "q147_server_join_recheck",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.orders(s, d)
+        val c1 = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.rjorders"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        Tables.customer(s, d)
+          .seed("o_orderkey", ns = "db.rjorders")
+        val c2 = Tables.customer(s, d)
           .select($"c_custkey", $"c_mktsegment", $"c_acctbal")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.rjcust"))
-          .option("id_column", "c_custkey").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.rjorders"))
-          .schema("_id LONG, o_custkey LONG, o_totalprice DOUBLE").load()
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.rjcust"))
-          .schema("_id LONG, c_mktsegment STRING, c_acctbal DOUBLE").load()
+          .seed("c_custkey", ns = "db.rjcust", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, o_custkey LONG, o_totalprice DOUBLE", uniform = true)
+        val c = open(s, c2, "_id LONG, c_mktsegment STRING, c_acctbal DOUBLE", uniform = true)
         o.join(c, o("o_custkey") === c("_id"))
           .filter(o("o_totalprice") + c("c_acctbal") > 2000.0)
           .groupBy($"c_mktsegment")
@@ -1397,16 +1229,10 @@ object ConnectorQueries {
       "q148_server_string_range_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.strrange",
-          "assume_uniform_storage" -> "true")
-        Tables.customer(s, d)
+        val c = Tables.customer(s, d)
           .select($"c_custkey", $"c_name", $"c_mktsegment")
-          .write.format("graftserver").options(opts)
-          .option("id_column", "c_custkey").mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, c_name STRING, c_mktsegment STRING")
-          .load()
+          .seed("c_custkey", ns = "db.strrange")
+        open(s, c, "_id LONG, c_name STRING, c_mktsegment STRING", uniform = true)
           .filter($"c_name" >= "Customer#000000500" &&
             $"c_name" < "Customer#000001000")
           .groupBy($"c_mktsegment")
@@ -1434,28 +1260,17 @@ object ConnectorQueries {
       "q149_server_join_nested_topn",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.orders(s, d)
+        val c1 = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey",
             struct($"o_totalprice".as("score"), $"o_orderpriority".as("prio"))
               .as("meta"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.ntorders"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        Tables.customer(s, d)
+          .seed("o_orderkey", ns = "db.ntorders")
+        val c2 = Tables.customer(s, d)
           .select($"c_custkey", $"c_mktsegment")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.ntcust"))
-          .option("id_column", "c_custkey").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ntorders"))
-          .schema("_id LONG, o_custkey LONG, meta STRUCT<score: DOUBLE, prio: STRING>")
-          .load()
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ntcust"))
-          .schema("_id LONG, c_mktsegment STRING").load()
+          .seed("c_custkey", ns = "db.ntcust", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, o_custkey LONG, meta STRUCT<score: DOUBLE, prio: STRING>",
+          uniform = true)
+        val c = open(s, c2, "_id LONG, c_mktsegment STRING", uniform = true)
         o.join(c, o("o_custkey") === c("_id"))
           .select(o("_id").as("okey"), $"c_mktsegment".as("seg"),
             o("meta")("score").as("score"))
@@ -1482,17 +1297,11 @@ object ConnectorQueries {
       "q150_server_unwind_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.uwdocs",
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", $"n_chars",
             array($"lang", $"source").as("tags"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, n_chars LONG, tags ARRAY<STRING>")
-          .load()
+          .seed("doc_id", ns = "db.uwdocs")
+        open(s, c, "_id LONG, n_chars LONG, tags ARRAY<STRING>", uniform = true)
           .filter($"n_chars" > 100L)
           .select(explode($"tags").as("tag"))
           .groupBy($"tag").agg(count(lit(1)).as("n"))
@@ -1513,15 +1322,11 @@ object ConnectorQueries {
       "q151_file_unwind_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", $"lang",
             array($"source", $"lang").as("tags"))
-          .write.format("graftbson").option("id_column", "doc_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, lang STRING, tags ARRAY<STRING>")
-          .load(dir)
+          .seed("doc_id")
+        open(s, c, "_id LONG, lang STRING, tags ARRAY<STRING>")
           .filter($"lang" === "en")
           .select(explode($"tags").as("tag"))
           .groupBy($"tag").agg(count(lit(1)).as("n"))
@@ -1547,26 +1352,16 @@ object ConnectorQueries {
       "q152_server_join_sample",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.orders(s, d)
+        val c1 = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.sjorders"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        Tables.customer(s, d)
+          .seed("o_orderkey", ns = "db.sjorders")
+        val c2 = Tables.customer(s, d)
           .select($"c_custkey", $"c_mktsegment")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.sjcust"))
-          .option("id_column", "c_custkey").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.sjorders", "sample_key" -> "_id"))
-          .schema("_id LONG, o_custkey LONG, o_totalprice DOUBLE").load()
+          .seed("c_custkey", ns = "db.sjcust", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, o_custkey LONG, o_totalprice DOUBLE", uniform = true,
+          opts = Map("sample_key" -> "_id"))
           .sample(withReplacement = false, 0.25, seed = 42L)
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.sjcust"))
-          .schema("_id LONG, c_mktsegment STRING").load()
+        val c = open(s, c2, "_id LONG, c_mktsegment STRING", uniform = true)
         o.join(c, o("o_custkey") === c("_id"))
           .groupBy($"c_mktsegment")
           .agg(count(lit(1)).as("n"), sum(o("_id")).as("sum_key"))
@@ -1594,17 +1389,11 @@ object ConnectorQueries {
       "q153_server_unwind_filter_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.uwfdocs",
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c1 = Tables.documents(s, d)
           .select($"doc_id", $"n_chars",
             array($"lang", $"source").as("tags"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, n_chars LONG, tags ARRAY<STRING>")
-          .load()
+          .seed("doc_id", ns = "db.uwfdocs")
+        open(s, c1, "_id LONG, n_chars LONG, tags ARRAY<STRING>", uniform = true)
           .filter($"n_chars" > 100L)
           .select(explode($"tags").as("tag"))
           .filter($"tag" >= "c" && $"tag" < "t")
@@ -1632,17 +1421,11 @@ object ConnectorQueries {
       "q154_server_unwind_topn",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.uwtop",
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c1 = Tables.documents(s, d)
           .select($"doc_id", $"n_chars",
             array($"lang", $"source").as("tags"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, n_chars LONG, tags ARRAY<STRING>")
-          .load()
+          .seed("doc_id", ns = "db.uwtop")
+        open(s, c1, "_id LONG, n_chars LONG, tags ARRAY<STRING>", uniform = true)
           .select($"_id".as("doc_id"), explode($"tags").as("tag"))
           .filter($"tag" >= "c" && $"tag" < "t")
           .orderBy($"doc_id".desc).limit(37)
@@ -1667,15 +1450,11 @@ object ConnectorQueries {
       "q155_file_unwind_topn",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c1 = Tables.documents(s, d)
           .select($"doc_id", $"n_chars",
             array($"lang", $"source").as("tags"))
-          .write.format("graftbson").option("id_column", "doc_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, n_chars LONG, tags ARRAY<STRING>")
-          .load(dir)
+          .seed("doc_id")
+        open(s, c1, "_id LONG, n_chars LONG, tags ARRAY<STRING>")
           .select($"_id".as("doc_id"), explode($"tags").as("tag"))
           .filter($"tag" >= "c" && $"tag" < "t")
           .orderBy($"doc_id".desc).limit(37)
@@ -1705,16 +1484,11 @@ object ConnectorQueries {
       "q156_file_unwind_sample",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", $"n_chars",
             array($"lang", $"source").as("tags"))
-          .write.format("graftbson").option("id_column", "doc_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, n_chars LONG, tags ARRAY<STRING>")
-          .option("sample_key", "_id")
-          .load(dir)
+          .seed("doc_id")
+        open(s, c, "_id LONG, n_chars LONG, tags ARRAY<STRING>", opts = Map("sample_key" -> "_id"))
           .select($"_id", explode($"tags").as("tag"))
           .sample(withReplacement = false, 0.25, seed = 42L)
           .groupBy($"tag")
@@ -1743,14 +1517,10 @@ object ConnectorQueries {
       "q157_file_posexplode_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", array($"lang", $"source").as("tags"))
-          .write.format("graftbson").option("id_column", "doc_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, tags ARRAY<STRING>")
-          .load(dir)
+          .seed("doc_id")
+        open(s, c, "_id LONG, tags ARRAY<STRING>")
           .select(posexplode($"tags"))
           .groupBy($"pos", $"col").agg(count(lit(1)).as("n"))
           .orderBy($"pos".asc_nulls_first, $"col".asc_nulls_first)
@@ -1773,15 +1543,10 @@ object ConnectorQueries {
       "q158_server_posexplode",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.uwpos")
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", array($"lang", $"source").as("tags"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, tags ARRAY<STRING>")
-          .load()
+          .seed("doc_id", ns = "db.uwpos")
+        open(s, c, "_id LONG, tags ARRAY<STRING>")
           .select($"_id".as("doc_id"), posexplode($"tags"))
           .filter($"pos" === 1)
           .orderBy($"doc_id".asc)
@@ -1803,15 +1568,10 @@ object ConnectorQueries {
       "q159_server_posexplode_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.uwposg")
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", array($"lang", $"source").as("tags"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, tags ARRAY<STRING>")
-          .load()
+          .seed("doc_id", ns = "db.uwposg")
+        open(s, c, "_id LONG, tags ARRAY<STRING>")
           .select(posexplode($"tags"))
           .groupBy($"pos", $"col").agg(count(lit(1)).as("n"))
           .orderBy($"pos".asc_nulls_first, $"col".asc_nulls_first)
@@ -1838,19 +1598,13 @@ object ConnectorQueries {
       "q160_server_unwind_struct",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.uwstruct",
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", array(
             struct($"lang".as("lang"), $"n_chars".as("n")),
             struct($"source".as("lang"), (length($"text") % 97L).as("n")))
             .as("entries"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, entries ARRAY<STRUCT<lang: STRING, n: LONG>>")
-          .load()
+          .seed("doc_id", ns = "db.uwstruct")
+        open(s, c, "_id LONG, entries ARRAY<STRUCT<lang: STRING, n: LONG>>", uniform = true)
           .select(explode($"entries").as("entry"))
           .filter($"entry.n" >= 10L)
           .groupBy($"entry.lang".as("lang"))
@@ -1874,17 +1628,13 @@ object ConnectorQueries {
       "q161_file_unwind_struct",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", array(
             struct($"lang".as("lang"), $"n_chars".as("n")),
             struct($"source".as("lang"), (length($"text") % 97L).as("n")))
             .as("entries"))
-          .write.format("graftbson").option("id_column", "doc_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, entries ARRAY<STRUCT<lang: STRING, n: LONG>>")
-          .load(dir)
+          .seed("doc_id")
+        open(s, c, "_id LONG, entries ARRAY<STRUCT<lang: STRING, n: LONG>>")
           .select(explode($"entries").as("entry"))
           .filter($"entry.n" >= 10L)
           .groupBy($"entry.lang".as("lang"))
@@ -1912,26 +1662,15 @@ object ConnectorQueries {
       "q162_server_unwind_join",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.orders(s, d)
+        val c1 = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey",
             array($"o_orderpriority", $"o_orderstatus").as("tags"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.ujorders"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        Tables.customer(s, d)
+          .seed("o_orderkey", ns = "db.ujorders")
+        val c2 = Tables.customer(s, d)
           .select($"c_custkey", $"c_mktsegment")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.ujcust"))
-          .option("id_column", "c_custkey").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ujorders"))
-          .schema("_id LONG, o_custkey LONG, tags ARRAY<STRING>").load()
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ujcust"))
-          .schema("_id LONG, c_mktsegment STRING").load()
+          .seed("c_custkey", ns = "db.ujcust", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, o_custkey LONG, tags ARRAY<STRING>", uniform = true)
+        val c = open(s, c2, "_id LONG, c_mktsegment STRING", uniform = true)
         o.join(c, o("o_custkey") === c("_id"))
           .select($"c_mktsegment", explode($"tags").as("tag"))
           .groupBy($"c_mktsegment", $"tag").agg(count(lit(1)).as("n"))
@@ -1959,26 +1698,15 @@ object ConnectorQueries {
       "q163_server_unwind_join_key",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.orders(s, d)
+        val c1 = Tables.orders(s, d)
           .select($"o_orderkey",
             array($"o_custkey", ($"o_orderkey" % 1000L)).as("refs"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.ukorders"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        Tables.customer(s, d)
+          .seed("o_orderkey", ns = "db.ukorders")
+        val c2 = Tables.customer(s, d)
           .select($"c_custkey", $"c_mktsegment")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.ukcust"))
-          .option("id_column", "c_custkey").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ukorders"))
-          .schema("_id LONG, refs ARRAY<LONG>").load()
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ukcust"))
-          .schema("_id LONG, c_mktsegment STRING").load()
+          .seed("c_custkey", ns = "db.ukcust", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, refs ARRAY<LONG>", uniform = true)
+        val c = open(s, c2, "_id LONG, c_mktsegment STRING", uniform = true)
         val e = o.select(explode($"refs").as("ref"))
         e.join(c, e("ref") === c("_id"))
           .groupBy($"c_mktsegment")
@@ -2007,18 +1735,12 @@ object ConnectorQueries {
       "q164_server_unwind_map",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.uwmap",
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", map(
             lit("nc"), $"n_chars",
             lit("lt"), (length($"text") % 97L).cast("long")).as("metrics"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, metrics MAP<STRING, LONG>")
-          .load()
+          .seed("doc_id", ns = "db.uwmap")
+        open(s, c, "_id LONG, metrics MAP<STRING, LONG>", uniform = true)
           .select(explode($"metrics"))
           .filter($"value" >= 10L)
           .groupBy($"key".as("metric"))
@@ -2040,16 +1762,12 @@ object ConnectorQueries {
       "q165_file_unwind_map",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", map(
             lit("nc"), $"n_chars",
             lit("lt"), (length($"text") % 97L).cast("long")).as("metrics"))
-          .write.format("graftbson").option("id_column", "doc_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .schema("_id LONG, metrics MAP<STRING, LONG>")
-          .load(dir)
+          .seed("doc_id")
+        open(s, c, "_id LONG, metrics MAP<STRING, LONG>")
           .select(explode($"metrics"))
           .filter($"value" >= 10L)
           .groupBy($"key".as("metric"))
@@ -2075,27 +1793,16 @@ object ConnectorQueries {
       "q166_server_unwind_map_join",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c1 = Tables.documents(s, d)
           .select($"doc_id", $"lang", map(
             lit("nc"), $"n_chars",
             lit("lt"), (length($"text") % 97L).cast("long")).as("metrics"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.mjdocs"))
-          .option("id_column", "doc_id").mode("append").save()
-        Tables.documents(s, d).select($"lang").distinct()
+          .seed("doc_id", ns = "db.mjdocs")
+        val c2 = Tables.documents(s, d).select($"lang").distinct()
           .select($"lang".as("_id"), upper($"lang").as("lbl"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.mjdim"))
-          .option("id_column", "_id").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.mjdocs"))
-          .schema("_id LONG, lang STRING, metrics MAP<STRING, LONG>").load()
-        val dm = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.mjdim"))
-          .schema("_id STRING, lbl STRING").load()
+          .seed("_id", ns = "db.mjdim", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, lang STRING, metrics MAP<STRING, LONG>", uniform = true)
+        val dm = open(s, c2, "_id STRING, lbl STRING", uniform = true)
         o.join(dm, o("lang") === dm("_id"))
           .select($"lbl", explode($"metrics"))
           .filter($"value" >= 10L)
@@ -2125,15 +1832,10 @@ object ConnectorQueries {
       "q167_server_regex_wire",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d).select($"doc_id", $"source")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.redocs"))
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.redocs",
-            "query" -> """{"source": {"$regex": "^src1[0-9]$"}}"""))
-          .schema("_id LONG, source STRING").load()
+        val c = Tables.documents(s, d).select($"doc_id", $"source")
+          .seed("doc_id", ns = "db.redocs")
+        open(s, c, "_id LONG, source STRING",
+          opts = Map("query" -> """{"source": {"$regex": "^src1[0-9]$"}}"""))
           .groupBy($"source").agg(count(lit(1)).as("n"))
           .orderBy($"source".asc_nulls_first)
       },
@@ -2153,17 +1855,12 @@ object ConnectorQueries {
       "q168_server_unwind_map_topn",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val opts = Map("server_dir" -> dir, "ns" -> "db.tkmap",
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", map(
             lit("nc"), ($"n_chars" * 2L).cast("long"),
             lit("lt"), (length($"text") % 97L * 2L + 1L).cast("long")).as("metrics"))
-          .write.format("graftserver").options(opts)
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver").options(opts)
-          .schema("_id LONG, metrics MAP<STRING, LONG>").load()
+          .seed("doc_id", ns = "db.tkmap")
+        open(s, c, "_id LONG, metrics MAP<STRING, LONG>", uniform = true)
           .select($"_id", $"metrics")
           .select($"_id", explode($"metrics"))
           .select($"_id", $"key".as("metric"), $"value".as("v"))
@@ -2190,15 +1887,10 @@ object ConnectorQueries {
       "q169_regex_java_dialect",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d).select($"doc_id", $"source")
-          .write.format("graftbson").option("id_column", "doc_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .options(Map(
-            "query" -> """{"source": {"$regex": "\\d\\d"}}""",
-            "regex_dialect" -> "java"))
-          .schema("_id LONG, source STRING").load(dir)
+        val c = Tables.documents(s, d).select($"doc_id", $"source")
+          .seed("doc_id")
+        open(s, c, "_id LONG, source STRING",
+          opts = Map("query" -> """{"source": {"$regex": "\\d\\d"}}""", "regex_dialect" -> "java"))
           .groupBy($"source").agg(count(lit(1)).as("n"))
           .orderBy($"source".asc_nulls_first)
       },
@@ -2220,18 +1912,13 @@ object ConnectorQueries {
       "q170_server_interval_join",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c1 = Tables.documents(s, d)
           .select($"doc_id", $"lang", $"n_chars")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.ivdocs"))
-          .option("id_column", "doc_id").mode("append").save()
+          .seed("doc_id", ns = "db.ivdocs")
         // dim `_id` must be COLLISION-FREE (a truncated hash could
         // collide across langs — duplicate `_id` on insert, ADVICE r17):
         // dense_rank over distinct langs is dense and deterministic
-        Tables.documents(s, d).select($"lang").distinct()
+        val c2 = Tables.documents(s, d).select($"lang").distinct()
           .withColumn("li", dense_rank().over(
             org.apache.spark.sql.expressions.Window
               .orderBy($"lang".asc_nulls_first)).cast("long"))
@@ -2239,15 +1926,9 @@ object ConnectorQueries {
           .select(
             ($"li" * 10L + $"k").as("_id"),
             $"lang", ($"k" * 120L).as("lo"), ($"k" * 120L + 180L).as("hi"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.ivdim"))
-          .option("id_column", "_id").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ivdocs"))
-          .schema("_id LONG, lang STRING, n_chars LONG").load()
-        val dm = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.ivdim"))
-          .schema("_id LONG, lang STRING, lo LONG, hi LONG").load()
+          .seed("_id", ns = "db.ivdim", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, lang STRING, n_chars LONG", uniform = true)
+        val dm = open(s, c2, "_id LONG, lang STRING, lo LONG, hi LONG", uniform = true)
         o.join(dm, o("lang") === dm("lang") &&
             o("n_chars") >= dm("lo") && o("n_chars") < dm("hi"))
           .groupBy(o("lang").as("lang"), dm("lo").as("lo"))
@@ -2276,17 +1957,12 @@ object ConnectorQueries {
       "q171_server_asof_join",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c1 = Tables.documents(s, d)
           .select($"doc_id", $"lang", $"n_chars")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.aodocs"))
-          .option("id_column", "doc_id").mode("append").save()
+          .seed("doc_id", ns = "db.aodocs")
         // collision-free dim `_id` (dense_rank, not a truncated hash —
         // ADVICE r17; see q170)
-        Tables.documents(s, d).select($"lang").distinct()
+        val c2 = Tables.documents(s, d).select($"lang").distinct()
           .withColumn("li", dense_rank().over(
             org.apache.spark.sql.expressions.Window
               .orderBy($"lang".asc_nulls_first)).cast("long"))
@@ -2294,15 +1970,9 @@ object ConnectorQueries {
           .select(
             ($"li" * 10L + $"k").as("_id"),
             $"lang", ($"k" * 150L).as("ts"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.aockpt"))
-          .option("id_column", "_id").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.aodocs"))
-          .schema("_id LONG, lang STRING, n_chars LONG").load()
-        val c = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.aockpt"))
-          .schema("_id LONG, lang STRING, ts LONG").load()
+          .seed("_id", ns = "db.aockpt", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, lang STRING, n_chars LONG", uniform = true)
+        val c = open(s, c2, "_id LONG, lang STRING, ts LONG", uniform = true)
         o.join(c, o("lang") === c("lang") && c("ts") <= o("n_chars"))
           .groupBy(o("_id").as("doc"))
           .agg(max(c("ts")).as("asof_ts"), count(lit(1)).as("n"))
@@ -2330,27 +2000,16 @@ object ConnectorQueries {
       "q172_server_map_join_topn",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c1 = Tables.documents(s, d)
           .select($"doc_id", $"lang", map(
             lit("nc"), ($"n_chars" * 2L).cast("long"),
             lit("lt"), (length($"text") % 97L * 2L + 1L).cast("long")).as("metrics"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.tkmjo"))
-          .option("id_column", "doc_id").mode("append").save()
-        Tables.documents(s, d).select($"lang").distinct()
+          .seed("doc_id", ns = "db.tkmjo")
+        val c2 = Tables.documents(s, d).select($"lang").distinct()
           .select($"lang".as("_id"), upper($"lang").as("lbl"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.tkmjd"))
-          .option("id_column", "_id").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.tkmjo"))
-          .schema("_id LONG, lang STRING, metrics MAP<STRING, LONG>").load()
-        val dm = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.tkmjd"))
-          .schema("_id STRING, lbl STRING").load()
+          .seed("_id", ns = "db.tkmjd", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, lang STRING, metrics MAP<STRING, LONG>", uniform = true)
+        val dm = open(s, c2, "_id STRING, lbl STRING", uniform = true)
         o.join(dm, o("lang") === dm("_id"))
           .select(o("_id").as("doc"), $"lbl", explode($"metrics"))
           .select($"doc", $"lbl", $"key".as("metric"), $"value".as("v"))
@@ -2379,26 +2038,15 @@ object ConnectorQueries {
       "q173_server_computed_bin_join",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c1 = Tables.documents(s, d)
           .select($"doc_id", $"n_chars",
             (length($"text") % 31L).cast("long").as("lt"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.cbdocs"))
-          .option("id_column", "doc_id").mode("append").save()
-        s.range(0, 7).select($"id".as("_id"),
+          .seed("doc_id", ns = "db.cbdocs")
+        val c2 = s.range(0, 7).select($"id".as("_id"),
             concat(lit("bin"), $"id").as("lbl"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.cbdim"))
-          .option("id_column", "_id").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.cbdocs"))
-          .schema("_id LONG, n_chars LONG, lt LONG").load()
-        val dm = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.cbdim"))
-          .schema("_id LONG, lbl STRING").load()
+          .seed("_id", ns = "db.cbdim", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, n_chars LONG, lt LONG", uniform = true)
+        val dm = open(s, c2, "_id LONG, lbl STRING", uniform = true)
         o.withColumn("bkt", pmod($"n_chars", lit(7L)))
           .join(dm, $"bkt" === dm("_id"))
           .groupBy($"lbl")
@@ -2424,15 +2072,10 @@ object ConnectorQueries {
       "q174_file_computed_bin",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", $"n_chars", $"lang")
-          .write.format("graftbson").option("id_column", "doc_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .option("assume_uniform_storage", "true")
-          .schema("_id LONG, n_chars LONG, lang STRING")
-          .load(dir)
+          .seed("doc_id")
+        open(s, c, "_id LONG, n_chars LONG, lang STRING", uniform = true)
           .withColumn("bkt", pmod($"n_chars", lit(5L)))
           .groupBy($"lang", $"bkt")
           .agg(count(lit(1)).as("n"), sum($"n_chars").as("total"))
@@ -2460,16 +2103,10 @@ object ConnectorQueries {
       "q175_server_year_bin_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_orderdate")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.ybo"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        s.read.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.ybo",
-            "assume_uniform_storage" -> "true"))
-          .schema("_id LONG, o_custkey LONG, o_orderdate TIMESTAMP").load()
+          .seed("o_orderkey", ns = "db.ybo")
+        open(s, c, "_id LONG, o_custkey LONG, o_orderdate TIMESTAMP", uniform = true)
           .groupBy(year($"o_orderdate").as("o_year"),
             month($"o_orderdate").as("o_month"))
           .agg(count(lit(1)).as("n_orders"),
@@ -2498,15 +2135,10 @@ object ConnectorQueries {
       "q176_file_date_trunc_bin",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.events(s, d)
+        val c = Tables.events(s, d)
           .select($"event_id", $"ts", $"user_id")
-          .write.format("graftbson").option("id_column", "event_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .option("assume_uniform_storage", "true")
-          .schema("_id LONG, ts TIMESTAMP, user_id LONG")
-          .load(dir)
+          .seed("event_id")
+        open(s, c, "_id LONG, ts TIMESTAMP, user_id LONG", uniform = true)
           .groupBy(date_trunc("hour", $"ts").as("h"))
           .agg(count(lit(1)).as("n"), sum($"user_id").as("users"))
           .orderBy($"h".asc_nulls_first)
@@ -2527,37 +2159,22 @@ object ConnectorQueries {
       "q177_server_chained_range_join",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c1 = Tables.documents(s, d)
           .select($"doc_id", $"lang", $"n_chars")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.crdocs"))
-          .option("id_column", "doc_id").mode("append").save()
+          .seed("doc_id", ns = "db.crdocs")
         val langs = Tables.documents(s, d).select($"lang").distinct()
           .withColumn("li", dense_rank().over(
             org.apache.spark.sql.expressions.Window
               .orderBy($"lang".asc_nulls_first)).cast("long"))
-        langs.select($"li".as("_id"), $"lang", upper($"lang").as("lbl"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.crlang"))
-          .option("id_column", "_id").mode("append").save()
-        langs.crossJoin(s.range(0, 4).select($"id".as("k")))
+        val c2 = langs.select($"li".as("_id"), $"lang", upper($"lang").as("lbl"))
+          .seed("_id", ns = "db.crlang", dir = c1.dir)
+        val c3 = langs.crossJoin(s.range(0, 4).select($"id".as("k")))
           .select(($"li" * 10L + $"k").as("_id"), $"lang",
             ($"k" * 120L).as("lo"), ($"k" * 120L + 180L).as("hi"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.crbr"))
-          .option("id_column", "_id").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.crdocs"))
-          .schema("_id LONG, lang STRING, n_chars LONG").load()
-        val dl = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.crlang"))
-          .schema("_id LONG, lang STRING, lbl STRING").load()
-        val db = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.crbr"))
-          .schema("_id LONG, lang STRING, lo LONG, hi LONG").load()
+          .seed("_id", ns = "db.crbr", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, lang STRING, n_chars LONG", uniform = true)
+        val dl = open(s, c2, "_id LONG, lang STRING, lbl STRING", uniform = true)
+        val db = open(s, c3, "_id LONG, lang STRING, lo LONG, hi LONG", uniform = true)
         o.join(dl, o("lang") === dl("lang"))
           .join(db, o("lang") === db("lang") &&
             o("n_chars") >= db("lo") && o("n_chars") < db("hi"))
@@ -2591,28 +2208,17 @@ object ConnectorQueries {
       "q178_server_string_range_join",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        val base = Map("server_dir" -> dir,
-          "assume_uniform_storage" -> "true")
-        Tables.documents(s, d)
+        val c1 = Tables.documents(s, d)
           .select($"doc_id", $"lang", (pmod($"n_chars", lit(3L))).as("bkt"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.srdocs"))
-          .option("id_column", "doc_id").mode("append").save()
-        s.range(0, 6).select($"id".as("_id"), ($"id" % 3L).as("bkt"),
+          .seed("doc_id", ns = "db.srdocs")
+        val c2 = s.range(0, 6).select($"id".as("_id"), ($"id" % 3L).as("bkt"),
             when($"id" < 3L, lit("a")).otherwise(lit("f")).as("s_lo"),
             when($"id" < 3L, lit("f")).otherwise(lit("zz")).as("s_hi"))
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.srdim"))
-          .option("id_column", "_id").mode("append").save()
-        val o = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.srdocs",
-            "ascii_columns" -> "lang"))
-          .schema("_id LONG, lang STRING, bkt LONG").load()
-        val dm = s.read.format("graftserver")
-          .options(base ++ Map("ns" -> "db.srdim",
-            "ascii_columns" -> "s_lo,s_hi"))
-          .schema("_id LONG, bkt LONG, s_lo STRING, s_hi STRING").load()
+          .seed("_id", ns = "db.srdim", dir = c1.dir)
+        val o = open(s, c1, "_id LONG, lang STRING, bkt LONG", uniform = true,
+          opts = Map("ascii_columns" -> "lang"))
+        val dm = open(s, c2, "_id LONG, bkt LONG, s_lo STRING, s_hi STRING", uniform = true,
+          opts = Map("ascii_columns" -> "s_lo,s_hi"))
         o.join(dm, o("bkt") === dm("bkt") &&
             o("lang") >= dm("s_lo") && o("lang") < dm("s_hi"))
           .groupBy(dm("s_lo").as("s_lo"))
@@ -2642,18 +2248,11 @@ object ConnectorQueries {
       "q179_server_string_topn",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", $"lang", $"source", $"n_chars")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.sto"))
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.sto",
-            "assume_uniform_storage" -> "true",
-            "ascii_columns" -> "lang,source"))
-          .schema("_id LONG, lang STRING, source STRING, n_chars LONG")
-          .load()
+          .seed("doc_id", ns = "db.sto")
+        open(s, c, "_id LONG, lang STRING, source STRING, n_chars LONG", uniform = true,
+          opts = Map("ascii_columns" -> "lang,source"))
           .orderBy($"lang".asc_nulls_first, $"source".asc_nulls_first,
             $"_id".asc)
           .limit(15)
@@ -2674,15 +2273,10 @@ object ConnectorQueries {
       "q180_file_string_topn",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", $"text", $"n_chars")
-          .write.format("graftbson").option("id_column", "doc_id")
-          .mode("append").save(dir)
-        s.read.format("graftbson")
-          .option("assume_uniform_storage", "true")
-          .schema("_id LONG, text STRING, n_chars LONG")
-          .load(dir)
+          .seed("doc_id")
+        open(s, c, "_id LONG, text STRING, n_chars LONG", uniform = true)
           .orderBy($"text".desc_nulls_last, $"_id".desc)
           .limit(10)
           .select($"_id", $"n_chars")
@@ -2700,18 +2294,11 @@ object ConnectorQueries {
       "q181_server_string_minmax_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.documents(s, d)
+        val c = Tables.documents(s, d)
           .select($"doc_id", $"lang", $"source", $"n_chars")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.smm"))
-          .option("id_column", "doc_id").mode("append").save()
-        s.read.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.smm",
-            "assume_uniform_storage" -> "true",
-            "ascii_columns" -> "lang,source"))
-          .schema("_id LONG, lang STRING, source STRING, n_chars LONG")
-          .load()
+          .seed("doc_id", ns = "db.smm")
+        open(s, c, "_id LONG, lang STRING, source STRING, n_chars LONG", uniform = true,
+          opts = Map("ascii_columns" -> "lang,source"))
           .withColumn("bkt", pmod($"n_chars", lit(5L)))
           .groupBy($"bkt")
           .agg(min($"lang").as("lo_lang"), max($"lang").as("hi_lang"),
@@ -2735,16 +2322,10 @@ object ConnectorQueries {
       "q182_server_hour_dow_bin_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.events(s, d)
+        val c = Tables.events(s, d)
           .select($"event_id", $"ts", $"user_id")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.hdw"))
-          .option("id_column", "event_id").mode("append").save()
-        s.read.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.hdw",
-            "assume_uniform_storage" -> "true"))
-          .schema("_id LONG, ts TIMESTAMP, user_id LONG").load()
+          .seed("event_id", ns = "db.hdw")
+        open(s, c, "_id LONG, ts TIMESTAMP, user_id LONG", uniform = true)
           .groupBy(hour($"ts").as("h"), dayofweek($"ts").as("dw"))
           .agg(count(lit(1)).as("n"), sum($"user_id").as("users"))
           .orderBy($"h".asc_nulls_first, $"dw".asc_nulls_first)
@@ -2764,16 +2345,10 @@ object ConnectorQueries {
       "q183_server_trunc_month_group",
       (s, d) => {
         import s.implicits._
-        val dir = freshDir()
-        Tables.orders(s, d)
+        val c = Tables.orders(s, d)
           .select($"o_orderkey", $"o_custkey", $"o_orderdate")
-          .write.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.trm"))
-          .option("id_column", "o_orderkey").mode("append").save()
-        s.read.format("graftserver")
-          .options(Map("server_dir" -> dir, "ns" -> "db.trm",
-            "assume_uniform_storage" -> "true"))
-          .schema("_id LONG, o_custkey LONG, o_orderdate TIMESTAMP").load()
+          .seed("o_orderkey", ns = "db.trm")
+        open(s, c, "_id LONG, o_custkey LONG, o_orderdate TIMESTAMP", uniform = true)
           .groupBy(trunc($"o_orderdate", "month").as("mo"))
           .agg(count(lit(1)).as("n"), max($"o_custkey").as("hi_cust"))
           .orderBy($"mo".asc_nulls_first)

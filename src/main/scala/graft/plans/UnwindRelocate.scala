@@ -216,72 +216,9 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     rewrite(g, arr, outer, elOut, posOut, mapKey)
       .orElse(rewriteOverJoin(g, arr, outer, elOut, posOut, mapKey))
 
-  /** The synthetic doc field the file reader injects the element INDEX
-    * into for a pushed posexplode (the `$unwind includeArrayIndex`
-    * analog); the pos column rides `column_mapping` to it. */
-  val PosDocField = "__graft_pos"
-
-  /** The synthetic doc field a pushed MAP explode materializes each
-    * entry into — the wire form is `$set: {__graft_kv: {$objectToArray:
-    * "$m"}}` then `$unwind: "$__graft_kv"`, so the key column rides
-    * `column_mapping` to `__graft_kv.k` and the value column to
-    * `__graft_kv.v`; the readers inject the same shape per entry. */
-  val KvDocField = "__graft_kv"
-
-  /** The ONE `$objectToArray`+`$unwind` expansion both transports'
-    * readers share (a duplicated copy would let the two silently
-    * diverge): per subdocument field, the parent doc with one
-    * `__graft_kv = {k, v}` entry; empty/null/missing maps keep one
-    * entry-less row under OUTER (preserve) or drop; a non-document
-    * value THROWS — a real server's `$objectToArray` rule, the
-    * engine's fail-loud mixed-storage stance. `withPos` lets each
-    * caller inject its posexplode index encoding (int32 file-side,
-    * int64-then-narrow server-side; None = off-map row).
-    *
-    * Duplicate-key FOREIGN storage (no engine write can produce it —
-    * the codec refuses): BSON parse collapses it LAST-wins before this
-    * expansion (ListMap builder semantics — the same collapse the
-    * reference's BasicBSONObject.put applies,
-    * core/.../BSONWritable readFields path), while a live server's
-    * `$objectToArray` emits every stored entry. The live gate's
-    * raw-bytes probe (RealMongoIntegrationSpec r16) records the
-    * server's actual arity; on a live transport the pipeline runs
-    * server-side, so its rule applies there — engine parity holds for
-    * everything either writer can produce.
-    */
-  def mapEntries(d: graft.bson.BDoc, path: String, preserve: Boolean,
-      withPos: (graft.bson.BDoc, Option[Int]) => graft.bson.BDoc):
-      Seq[graft.bson.BDoc] = {
-    import graft.bson._
-    d.getPath(path) match {
-      case Some(sub: BDoc) if sub.fields.nonEmpty =>
-        sub.fields.toSeq.zipWithIndex.map { case ((k, v), i) =>
-          withPos(graft.query.Updates.setField(d, KvDocField,
-            BDoc("k" -> BString(k), "v" -> v)), Some(i))
-        }
-      case Some(_: BDoc) => // empty map: $objectToArray -> [] -> $unwind
-        if (preserve) Seq(withPos(d, None)) else Nil
-      case Some(BNull) | None =>
-        if (preserve) Seq(withPos(d, None)) else Nil
-      case Some(other) =>
-        throw new IllegalArgumentException(
-          s"$$objectToArray requires a document at $path, got $other")
-    }
-  }
-
-  /** True when a pushed-filter reference is scoped to the unwound
-    * ELEMENT: the element column itself, one of its struct subfields
-    * (for `explode(array<struct>)` a filter arrives on `entry.lang`),
-    * or the posexplode pos column. Such filters must become the
-    * POST-unwind query on both transports — post-unwind the doc path
-    * holds the element, so the normal translation carries Spark's row
-    * semantics; translated PRE-unwind the same path would carry mongo's
-    * ∃-element match semantics and keep every element of any parent
-    * with one matching element. */
-  def elementScoped(ref: String, element: Option[String],
-      pos: Option[String], key: Option[String] = None): Boolean =
-    element.exists(e => ref == e || ref.startsWith(e + ".")) ||
-      pos.contains(ref) || key.contains(ref)
+  /** The synthetic pos and kv doc fields ([[graft.query.Unwind]]). */
+  val PosDocField: String = graft.query.Unwind.PosDocField
+  val KvDocField: String = graft.query.Unwind.KvDocField
 
   private def rewrite(g: Generate, arr0: Expression, outer: Boolean,
       elOut: Attribute, posOut: Option[Attribute],
@@ -316,7 +253,7 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     val isServer = rel.table.isInstanceOf[graft.server.GraftServerTable]
     val isFile = rel.table.isInstanceOf[graft.source.GraftTable]
     if (!isServer && !isFile) return None
-    if (rel.options.containsKey("unwind_path")) return None
+    if (rel.options.containsKey(graft.query.Unwind.PathKey)) return None
     // COMPUTED columns (r17) and unwinds never combine: the unwound
     // readers/pipelines have no injection seam for derived fields —
     // the Generate stays in Spark (retainJoinPush may still keep a
@@ -354,7 +291,7 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     // the explode, the unwound document cannot carry both the element
     // and the original array at one path — leave the Generate to Spark
     if (g.requiredChildOutput.exists(a =>
-        arrPath == a.name || arrPath.startsWith(a.name + "."))) return None
+        graft.query.Unwind.atOrUnder(arrPath, a.name))) return None
     val existing = Option(rel.options.get("column_mapping"))
       .map(graft.source.ColumnMapping.parse)
       .getOrElse(Map.empty[String, String])
@@ -362,6 +299,8 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     val mappedPath = existing.get(head)
       .map(h => (h +: arrPath.split('.').toSeq.tail).mkString("."))
       .getOrElse(arrPath)
+    val unwind = graft.query.Unwind(mappedPath, outer, mapKv = mapKey.isDefined,
+      element = Some(elOut.name), pos = posOut.map(_.name), key = mapKey.map(_.name))
     // the Sample gate: mirror pushTableSample's eligibility against the
     // POST-relocation unwind path — a qualifying parent key means the V2
     // sample pushdown will claim the window (deterministic, md5-keyed,
@@ -371,8 +310,7 @@ object UnwindRelocate extends Rule[LogicalPlan] {
         graft.source.FieldResolve.resolveName(rel.schema, k, existing)
           .exists(ref =>
             graft.source.SamplePush.KeyTypes.contains(ref.dataType) &&
-              graft.source.SamplePush.keyAllowedUnderUnwind(
-                ref.docPath, Some(mappedPath)))
+              !unwind.postOnly(ref.docPath))
       }
       // mirror EVERY option-level condition of the transports'
       // pushTableSample (ADVICE r15): a multi-collection file scan
@@ -396,8 +334,7 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     // free, same clobber rules as the pos field
     if (mapKey.exists(k => rel.schema.fieldNames.contains(k.name) ||
         k.name == elOut.name ||
-        existing.valuesIterator.exists(v =>
-          v == KvDocField || v.startsWith(KvDocField + ".")) ||
+        existing.valuesIterator.exists(graft.query.Unwind.atOrUnder(_, KvDocField)) ||
         rel.schema.fieldNames.contains(KvDocField)))
       return None
 
@@ -420,7 +357,7 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     // not need the array's own column (same one-path constraint)
     if (!keepConjuncts.forall(_.references.subsetOf(rel.outputSet))) return None
     if (keepConjuncts.exists(_.references.exists(a =>
-        arrPath == a.name || arrPath.startsWith(a.name + ".")))) return None
+        graft.query.Unwind.atOrUnder(arrPath, a.name)))) return None
 
     // the parent columns surviving above + any the kept filter needs +
     // (under a carried Sample) the sample key's HEAD column — the later
@@ -471,14 +408,8 @@ object UnwindRelocate extends Rule[LogicalPlan] {
         newMapping.foldLeft(org.json4s.JObject()) { case (o, (k, v)) =>
           o ~ (k -> v) }))
     }
-    val newOpts = new CaseInsensitiveStringMap((rel.options.asScala.toMap ++ Map(
-      "column_mapping" -> mappingJson,
-      "unwind_path" -> mappedPath,
-      "unwind_element" -> elOut.name,
-      "unwind_outer" -> outer.toString) ++
-      posOut.map(p => "unwind_pos" -> p.name) ++
-      mapKey.map(k => "unwind_kind" -> "map") ++
-      mapKey.map(k => "unwind_key" -> k.name)).asJava)
+    val newOpts = new CaseInsensitiveStringMap((rel.options.asScala.toMap ++
+      unwind.options + ("column_mapping" -> mappingJson)).asJava)
     val newTable: org.apache.spark.sql.connector.catalog.Table =
       if (isServer) new graft.server.GraftServerTable(newSchema, newOpts.asScala.toMap)
       else new graft.source.GraftTable(newSchema, newOpts.asScala.toMap)

@@ -1,7 +1,7 @@
 package graft.server
 
 import graft.bson._
-import graft.query.{BQuery, BQueryJson}
+import graft.query.{BQuery, BQueryJson, Unwind}
 import graft.source.{AggPush, FieldResolve, GroupAggParse, GroupedAgg, Planners, Pushdown, SamplePush}
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -126,16 +126,6 @@ object GraftServerSource {
   def factory(opts: Map[String, String]): ServerClientFactory =
     Class.forName(opts.getOrElse("client_factory", classOf[DirServerFactory].getName))
       .getDeclaredConstructor().newInstance().asInstanceOf[ServerClientFactory]
-
-  /** posexplode read shim: `includeArrayIndex` yields int64 indexes but
-    * the pos column reads IntegerType — narrow the synthetic field
-    * before decode (array indexes always fit; null/missing pass). */
-  private[server] def narrowPos(d: BDoc): BDoc =
-    d.get(graft.plans.UnwindRelocate.PosDocField) match {
-      case Some(BInt64(x)) => graft.query.Updates.setField(d,
-        graft.plans.UnwindRelocate.PosDocField, BInt32(x.toInt))
-      case _ => d
-    }
 
   /** Option-level JSON query (mongo.input.query analog). The
     * `regex_dialect` gate applies here (r16): out-of-subset `$regex`
@@ -268,18 +258,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * row-position pushdowns (limit/offset/top-n/sample/probes) refuse:
     * they would count/sort PARENT docs, not post-unwind rows.
     */
-  private val unwind: Option[ServerClient.Unwind] =
-    options.get("unwind_path").map(p => ServerClient.Unwind(p,
-      options.get("unwind_outer").exists(_.toBoolean),
-      // posexplode: pipelines render includeArrayIndex into the
-      // synthetic pos field, so pos filters/groups/tails push like any
-      // other post-unwind field (readers remap its int64 to the pos
-      // column's IntegerType)
-      options.get("unwind_pos").map(_ =>
-        graft.plans.UnwindRelocate.PosDocField),
-      // MAP explode (r15): $objectToArray + $unwind of the synthetic kv
-      // field; key/value columns read __graft_kv.k/.v via their mapping
-      mapKv = options.get("unwind_kind").contains("map")))
+  private val unwind: Option[Unwind] = Unwind.fromOptions(options)
   /** POST-unwind query (accepted element-column filters). */
   private var unwindPost: BQuery = BQuery.True
 
@@ -314,7 +293,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       withReplacement: Boolean, seed: Long): Boolean = {
     // `sample_key` may name a nested subfield — the keep-predicate and
     // the cursor projection both work on dotted paths
-    val keyCol = Pushdown.sampleKey(cols, options, unwind.map(_.path))
+    val keyCol = Pushdown.sampleKey(cols, options, unwind)
     val eligible = !withReplacement && keyCol.isDefined &&
       limit.isEmpty && offset.isEmpty && topN.isEmpty &&
       aggPushed.isEmpty && groupedAgg.isEmpty && joined.isEmpty
@@ -366,7 +345,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
           .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
       case _ => false
     }
-    val split = Pushdown.splitFilters(cols, options, filters,
+    val split = Pushdown.splitFilters(cols, unwind, filters,
       GraftServerSource.NsMetaCol, keepResidual = arrayNullTest)
     def bracketed(q: BQuery): BQuery =
       if (Pushdown.uniformStorage(options)) BQuery.uniformReadBracket(q) else q
@@ -670,7 +649,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * away; no client re-check point remains). A pushed TABLESAMPLE is
     * ALLOWED: pushDownJoin re-keys it onto the joined output (or
     * refuses where it cannot commute); under an unwind the sample key
-    * is a PARENT field (keyAllowedUnderUnwind), constant across a
+    * is a PARENT field (never [[Unwind.postOnly]]), constant across a
     * parent's element rows, so the joined-row window still keeps/drops
     * parents atomically. */
   private def cleanAsDriving: Boolean =
@@ -1172,8 +1151,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * to a null-matching post query).
     */
   private def unwindPrune: BQuery = {
-    val prune = Pushdown.unwindPrune(tableSchema, options,
-      unwind.filter(u => !u.preserveNullAndEmpty && !u.mapKv).map(_.path), unwindPost)
+    val prune = Pushdown.unwindPrune(tableSchema, unwind, unwindPost)
     if (QueryDocs.plan(prune).rendersFully) prune else BQuery.True
   }
 }
@@ -1209,7 +1187,7 @@ final case class ServerJoin(
       * `unwindPost` = the pushed post-unwind element `$match`. Only the
       * DRIVING side may unwind (lookup-side element rows are not
       * parent-atomic across the join; mirrored joins refuse). */
-    unwind: Option[ServerClient.Unwind] = None,
+    unwind: Option[Unwind] = None,
     unwindPost: BQuery = BQuery.True,
     /** RANGE conjuncts of the join condition (r17): `leftOut OP
       * rightOut` rendered into the `$lookup` `$expr` — the binned
@@ -1274,11 +1252,7 @@ final class GraftServerJoinScan(join: ServerJoin, leftQuery: BQuery,
         if (cc.isEmpty) ""
         else s" PushedComputed: [${cc.map(_.describe).mkString(", ")}]"
       } +
-      join.unwind.map(u => s" PushedUnwind: ${u.path}" +
-        (if (u.mapKv) " MAP" else "") +
-        (if (u.preserveNullAndEmpty) " OUTER" else "") +
-        (if (join.unwindPost == BQuery.True) ""
-         else s" PostUnwindMatch: ${join.unwindPost}")).getOrElse("") +
+      join.unwind.map(u => " " + u.describe(join.unwindPost)).getOrElse("") +
       s" PushedJoin: $join" +
       grouped.map(g => s" PushedGroupedAggregate: $g").getOrElse("") +
       joinLimit.map(n => s" PushedLimit: $n").getOrElse("") +
@@ -1374,11 +1348,7 @@ final class GraftServerJoinReader(p: GraftServerPartition, join: ServerJoin,
     * exists only POST-unwind — its INNER non-null prune joins the
     * post-unwind `$match`; pre-unwind the same path would match nothing
     * (kv/pos) or carry ∃-element semantics (array paths). */
-  private def elementScopedField(f: String): Boolean =
-    join.unwind.exists(u => f == u.path || f.startsWith(u.path + ".") ||
-      u.posField.contains(f) ||
-      (u.mapKv && (f == graft.plans.UnwindRelocate.KvDocField ||
-        f.startsWith(graft.plans.UnwindRelocate.KvDocField + "."))))
+  private def elementScopedField(f: String): Boolean = join.unwind.exists(_.postOnly(f))
   // range LEFT operands prune like key operands under INNER (a null
   // operand never range-matches — Spark's null comparison); under LEFT
   // OUTER they must SURVIVE to null-extend, and the pipeline's per-var
@@ -1425,21 +1395,11 @@ final class GraftServerJoinReader(p: GraftServerPartition, join: ServerJoin,
         })
   }
 
-  // posexplode over a join: includeArrayIndex yields int64 indexes but
-  // the pos column reads IntegerType — narrow the pos OUTPUT field of
-  // each joined doc before decode (the un-joined path narrows the
-  // injected doc field the same way, GraftServerSource.narrowPos)
+  // posexplode over a join: the pos OUTPUT field of each joined doc
+  // narrows to the pos column's int32 before decode
   private val posOutName: Option[String] = join.unwind.flatMap(u =>
     u.posField.flatMap(pf => join.leftProject.collectFirst {
       case (f, o, _) if f == pf => o }))
-  private def narrowPosOut(d: BDoc): BDoc = posOutName match {
-    case Some(o) => d.get(o) match {
-      case Some(graft.bson.BInt64(x)) =>
-        graft.query.Updates.setField(d, o, graft.bson.BInt32(x.toInt))
-      case _ => d
-    }
-    case None => d
-  }
 
   private val cursor: Iterator[BDoc] = {
     val raw0 = client.lookupJoin(p.ns, LookupJoin(
@@ -1459,7 +1419,7 @@ final class GraftServerJoinReader(p: GraftServerPartition, join: ServerJoin,
       ranges = join.ranges,
       leftComputed = join.leftComputed,
       rightComputed = join.rightComputed))
-    val raw = if (posOutName.isEmpty) raw0 else raw0.map(narrowPosOut)
+    val raw = posOutName.fold(raw0)(o => raw0.map(Unwind.narrowPos(_, o)))
     // carried TABLESAMPLE windows, re-keyed to joined OUTPUT names by
     // the builder: keyed sampling commutes with the $lookup, so keeping
     // joined rows by the sampled side's key window equals sampling that
@@ -1655,7 +1615,7 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
     offset: Option[Int] = None,
     sample: Option[SamplePush] = None,
     nsMeta: Boolean = false,
-    unwind: Option[ServerClient.Unwind] = None,
+    unwind: Option[Unwind] = None,
     unwindPost: BQuery = BQuery.True,
     /** A LIMIT/TopN/OFFSET tail counts UNWOUND rows: the read runs as
       * the [[ServerClient.unwoundRead]] pipeline, one per namespace. */
@@ -1777,11 +1737,7 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
           s"$c ${if (d) "DESC" else "ASC"}" }.mkString(", ")
         s" PushedTopN: ORDER BY $order LIMIT $n"
       }.getOrElse("") +
-      unwind.map(u => s" PushedUnwind: ${u.path}" +
-        (if (u.mapKv) " MAP" else "") +
-        (if (u.preserveNullAndEmpty) " OUTER" else "") +
-        (if (unwindPost == BQuery.True) ""
-         else s" PostUnwindMatch: $unwindPost") +
+      unwind.map(u => " " + u.describe(unwindPost) +
         (if (unwoundTails) " UnwoundTails" else "")).getOrElse("")
 
   /** Driver-side planning: one bounded probe sequence through the shared
@@ -1864,7 +1820,7 @@ final class GraftServerReaderFactory(requiredSchema: StructType, query: BQuery,
     offset: Option[Int] = None,
     sample: Option[SamplePush] = None,
     nsMeta: Boolean = false,
-    unwind: Option[ServerClient.Unwind] = None,
+    unwind: Option[Unwind] = None,
     unwindPost: BQuery = BQuery.True,
     unwoundTails: Boolean = false)
     extends PartitionReaderFactory {
@@ -1890,7 +1846,7 @@ final class GraftServerReaderFactory(requiredSchema: StructType, query: BQuery,
   */
 final class ServerGroupedAggReader(options: Map[String, String],
     query: BQuery, grouped: GroupedAgg, ns: String,
-    unwind: Option[ServerClient.Unwind] = None,
+    unwind: Option[Unwind] = None,
     unwindPost: BQuery = BQuery.True)
     extends PartitionReader[InternalRow] {
 
@@ -1915,7 +1871,7 @@ final class ServerGroupedAggReader(options: Map[String, String],
           unwindPost,
           computed = graft.query.ComputedCol.fromOptions(options)),
         asciiAggAliases)
-        .map(d => RowCodec.toRow(GraftServerSource.narrowPos(d), grouped.schema))
+        .map(d => RowCodec.toRow(Unwind.narrowPos(d), grouped.schema))
     if (grouped.groupCols.nonEmpty || base.hasNext) base
     else {
       // filtered-GLOBAL pipeline with nothing matched: $group emits no
@@ -2047,7 +2003,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
     offset: Option[Int] = None,
     sample: Option[SamplePush] = None,
     nsMeta: Boolean = false,
-    unwind: Option[ServerClient.Unwind] = None,
+    unwind: Option[Unwind] = None,
     unwindPost: BQuery = BQuery.True,
     unwoundTails: Boolean = false)
     extends PartitionReader[InternalRow] {
@@ -2061,30 +2017,18 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
   // ([[ServerClient.unwoundRead]]) and the cursor streams PER-ELEMENT
   // docs — the reader decodes them like a plain scan
   private val pipelineMode: Boolean = unwoundTails && unwind.isDefined
-  private val unwindElement: Option[String] = options.get("unwind_element")
-  /** posexplode: the pos COLUMN binds the local element index (no doc
-    * field crosses the wire; null for null/empty/non-array parents). */
-  private val unwindPos: Option[String] = options.get("unwind_pos")
-  /** The post match references only the element/pos of a TOP-LEVEL
-    * unwound path: the per-element evaluation can use a tiny doc
-    * instead of copying the parent (hot path — once per element). */
-  private val postElementOnly: Boolean = unwind.exists(u =>
-    !u.path.contains('.') &&
-      BQuery.fieldPaths(unwindPost).forall(p =>
-        p == u.path || p.startsWith(u.path + ".") || u.posField.contains(p)))
 
   // `_ns` provenance: splice this partition's namespace in at the
   // requested position — constant per cursor
-  private val nsIdx: Int =
-    if (nsMeta) requiredSchema.fieldNames.indexOf(GraftServerSource.NsMetaCol)
-    else -1
-  private val decodeSchema: StructType =
-    if (nsIdx < 0) requiredSchema
-    else StructType(requiredSchema.fields.patch(nsIdx, Nil, 1))
+  private val nsCol =
+    new graft.source.MetaColumn(requiredSchema, GraftServerSource.NsMetaCol, nsMeta, p.ns)
+  private val decodeSchema: StructType = nsCol.decodeSchema
   // under unwind, the element column decodes per ELEMENT, not per doc
-  private val elIdx: Int = unwindElement
+  // posexplode: the pos COLUMN binds the element index (null for rows
+  // that are not elements)
+  private val elIdx: Int = unwind.flatMap(_.element)
     .map(decodeSchema.fieldNames.indexOf(_)).getOrElse(-1)
-  private val posIdx: Int = unwindPos
+  private val posIdx: Int = unwind.flatMap(_.pos)
     .map(decodeSchema.fieldNames.indexOf(_)).getOrElse(-1)
   private val parentSchema: StructType = StructType(
     decodeSchema.fields.zipWithIndex
@@ -2093,9 +2037,6 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
   private val elType: org.apache.spark.sql.types.DataType =
     if (elIdx < 0) org.apache.spark.sql.types.NullType
     else decodeSchema.fields(elIdx).dataType
-  private val nsValue: org.apache.spark.unsafe.types.UTF8String =
-    if (nsIdx < 0) null
-    else org.apache.spark.unsafe.types.UTF8String.fromString(p.ns)
 
   // Spark column -> document field (column_mapping): decode and the
   // cursor projection address DOCUMENT paths
@@ -2131,15 +2072,13 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
       limit = topN.map(_._2.toLong).orElse(limit.map(_.toLong)).getOrElse(-1L),
       projection = Some(GraftServerSource.pruneProjection(
         parentSchema.fieldNames.map(n => mapping.getOrElse(n, n)).toSeq ++
-        // MAP unwind (r16): the per-entry docs carry the synthetic
-        // __graft_kv entry the key/value mappings read — the original
-        // map path is never a column post-unwind (the relocation
-        // refuses a surviving map column)
-        (if (unwind.exists(_.mapKv)) Seq(graft.plans.UnwindRelocate.KvDocField)
-         else unwind.map(_.path).toSeq) ++
+        // the per-element docs carry the element at its element field
+        // (a MAP unwind's kv entry, which the key/value mappings read —
+        // the map path itself is never a column post-unwind)
+        Seq(unwind.get.elementField) ++
         (if (posIdx >= 0) unwind.get.posField else None) ++
         asciiOrderFields)))
-      .map(GraftServerSource.narrowPos)
+      .map(Unwind.narrowPos(_))
   else
     client.find(p.ns,
       Find(BQuery.and(p.range, query),
@@ -2147,10 +2086,13 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
         // match reads (a mixed element-or-parent disjunction may
         // reference parents Spark pruned from the output) — must ride
         // the projection even when the column itself was pruned away.
-        // Paths AT/UNDER the unwound array (the projected array already
-        // carries its subfields) and the reader-injected pos field are
-        // excluded, then ancestor-overlaps pruned: a live server rejects
-        // prefix-overlapping inclusion projections ("Path collision")
+        // Paths bound per unwound row are excluded — those at/under the
+        // unwound path (the projected path already carries them) and
+        // the reader-injected pos and kv fields, never stored (under an
+        // ARRAY unwind a stored field named __graft_kv is a legitimate
+        // parent column) — then ancestor-overlaps pruned: a live server
+        // rejects prefix-overlapping inclusion projections ("Path
+        // collision")
         projection = Some(GraftServerSource.pruneProjection(
           // a COMPUTED column's value is reader-injected; the cursor
           // fetches its SOURCE field instead of the synthetic name
@@ -2159,19 +2101,10 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
             .map(n => mapping.getOrElse(n, n)) ++
           computedCols.map(_.field) ++
           unwind.map(_.path) ++
-          BQuery.fieldPaths(unwindPost).toSeq.sorted.filterNot(fp =>
-            unwind.exists(u => fp == u.path || fp.startsWith(u.path + ".") ||
-              fp == graft.plans.UnwindRelocate.PosDocField)) ++
+          BQuery.fieldPaths(unwindPost).toSeq.sorted ++
           sample.map(_.key) ++
           asciiOrderFields)
-          // the synthetic kv entry of a MAP unwind is injected
-          // reader-side — never a stored field a find() could project.
-          // Gated on mapKv: under an ARRAY unwind a stored field that
-          // happens to be named __graft_kv is a legitimate parent
-          // column (the MAP relocation refuses that name outright)
-          .filterNot(p => unwind.exists(_.mapKv) &&
-            (p == graft.plans.UnwindRelocate.KvDocField ||
-             p.startsWith(graft.plans.UnwindRelocate.KvDocField + "."))))),
+          .filterNot(p => unwind.exists(u => p != u.path && u.postOnly(p))))),
         // a pushed top-n's (compound) order wins; else the option-level
         // cursor sort
         sortAscBy = topN.map(_._1.head._1).orElse(options.get("sort")),
@@ -2196,11 +2129,9 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
     else sampled.map(d => graft.query.ComputedCol.injectAll(computedCols, d))
   }
 
-  /** Post-unwind row stream: parent slots decode ONCE, the element slot
-    * is re-bound per element; element decode honors the array's element
-    * semantics (null/missing -> null under OUTER, row dropped
-    * otherwise; a non-array value is a one-element array, mongo's
-    * `$unwind` rule).
+  /** Post-unwind row stream: parent slots decode ONCE, the element and
+    * pos slots are bound per row of the shared enumerator
+    * ([[Unwind.elements]]), which also decides the post-unwind match.
     */
   private val decoded: Iterator[InternalRow] =
       (if (pipelineMode) None else unwind) match {
@@ -2208,82 +2139,29 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
     // element AT the unwound path (the element column's mapping entry
     // points there, so the plain decode reads it)
     case None => cursor.map(d => RowCodec.toRow(d, decodeSchema, mapping))
-    // MAP explode (r15): per-entry kv docs via the shared expansion
-    // (key/value columns decode through their __graft_kv.k/.v mapping
-    // entries); the post-unwind match evaluates on the same docs, and
-    // a posexplode's injected int64 index narrows to the pos column's
-    // IntegerType before decode
+    // MAP explode (r15): per-entry kv docs (key/value columns decode
+    // through their __graft_kv.k/.v mapping entries)
     case Some(u) if u.mapKv =>
-      cursor.flatMap { d =>
-        FakeServerClient.unwindDocs(d, u)
-          .filter(kd => unwindPost == BQuery.True || unwindPost.matches(kd))
-          .map(kd => RowCodec.toRow(
-            GraftServerSource.narrowPos(kd), decodeSchema, mapping))
-      }
+      cursor.flatMap(u.expander(unwindPost, narrow = true))
+        .map(RowCodec.toRow(_, decodeSchema, mapping))
     case Some(u) =>
+      val keep = u.postFilter(unwindPost)
+      val elSchema = StructType(Seq(org.apache.spark.sql.types.StructField("e", elType)))
+      def decodeEl(v: BsonValue): Any =
+        if (v == BNull) null else RowCodec.toRow(BDoc("e" -> v), elSchema).get(0, elType)
       cursor.flatMap { d =>
         val parent = RowCodec.toRow(d, parentSchema, mapping)
-        def withEl(el: Any, pos: Any = null): InternalRow = {
+        u.elements(d).filter(keep(d, _)).map { e =>
           val vals = new Array[Any](decodeSchema.length)
           var i = 0
           var j = 0
           while (i < decodeSchema.length) {
-            if (i == elIdx) vals(i) = el
-            else if (i == posIdx) vals(i) = pos
+            if (i == elIdx) vals(i) = decodeEl(e.value.orElse(d.getPath(u.path)).getOrElse(BNull))
+            else if (i == posIdx) vals(i) = if (e.index < 0) null else e.index
             else { vals(i) = parent.get(j, parentSchema.fields(j).dataType); j += 1 }
             i += 1
           }
           new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-        }
-        def decodeEl(v: BsonValue): Any =
-          if (v == BNull) null else RowCodec.toRow(BDoc("e" -> v),
-            StructType(Seq(org.apache.spark.sql.types.StructField("e", elType)))).get(0, elType)
-        // POST-unwind $match: evaluated on the per-element doc (the
-        // path holds the ELEMENT; pos filters see the injected
-        // includeArrayIndex shape — int64 index, NULL off-array),
-        // mirroring the fake transport's unwindDoc exactly. The common
-        // case — element/pos-only conjuncts over a TOP-LEVEL path —
-        // evaluates against a tiny two-field doc instead of rebuilding
-        // the parent once per element.
-        def posVal(i: Option[Int]): BsonValue =
-          i.map(x => BInt64(x.toLong): BsonValue).getOrElse(BNull)
-        def withPosDoc(doc: BDoc, i: Option[Int]): BDoc = u.posField match {
-          case Some(f) => graft.query.Updates.setField(doc, f, posVal(i))
-          case None => doc
-        }
-        def postOk(el: BsonValue, i: Option[Int]): Boolean =
-          unwindPost == BQuery.True || {
-            val doc =
-              if (postElementOnly) u.posField match {
-                case Some(f) => BDoc(u.path -> el, f -> posVal(i))
-                case None => BDoc(u.path -> el)
-              }
-              else withPosDoc(graft.query.Updates.setField(d, u.path, el), i)
-            unwindPost.matches(doc)
-          }
-        def postOkAsIs: Boolean =
-          unwindPost == BQuery.True ||
-            unwindPost.matches(withPosDoc(d, None))
-        d.getPath(u.path) match {
-          case Some(BArray(items)) if items.nonEmpty =>
-            // pos = the element's ORIGINAL index (post-match drops keep
-            // their indices, mongo's includeArrayIndex rule)
-            val kept = items.zipWithIndex
-              .filter { case (el, i) => postOk(el, Some(i)) }
-            kept.map { case (el, i) =>
-              withEl(if (elIdx < 0) null else decodeEl(el), i) }
-          case Some(BArray(_)) =>
-            if (u.preserveNullAndEmpty && postOk(BNull, None)) Seq(withEl(null))
-            else Seq.empty
-          case Some(BNull) | None =>
-            if (u.preserveNullAndEmpty && postOkAsIs) Seq(withEl(null))
-            else Seq.empty
-          case Some(other) =>
-            // a non-array value passes through with a NULL pos
-            // (mongo's includeArrayIndex rule for non-arrays)
-            if (postOk(other, None))
-              Seq(withEl(if (elIdx < 0) null else decodeEl(other)))
-            else Seq.empty
         }
       }
   }
@@ -2292,20 +2170,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
 
   override def next(): Boolean =
     if (decoded.hasNext) {
-      val base = decoded.next()
-      row =
-        if (nsIdx < 0) base
-        else {
-          val vals = new Array[Any](requiredSchema.length)
-          var i = 0
-          var j = 0
-          while (i < requiredSchema.length) {
-            if (i == nsIdx) vals(i) = nsValue
-            else { vals(i) = base.get(j, decodeSchema.fields(j).dataType); j += 1 }
-            i += 1
-          }
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-        }
+      row = nsCol.splice(decoded.next())
       true
     }
     else false

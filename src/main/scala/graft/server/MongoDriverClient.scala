@@ -201,7 +201,7 @@ final class MongoDriverClient(uri: String, allowDiskUse: Boolean = false)
     */
   override def groupAggregate(ns: String, query: BQuery, groupKeys: Seq[String],
       aggs: Seq[GroupAgg],
-      unwind: Option[ServerClient.Unwind] = None,
+      unwind: Option[graft.query.Unwind] = None,
       postQuery: BQuery = BQuery.True,
       computed: Seq[graft.query.ComputedCol] = Nil): Iterator[BDoc] = {
     val coll = collection(ns)
@@ -231,7 +231,7 @@ final class MongoDriverClient(uri: String, allowDiskUse: Boolean = false)
     * rendering before pushing the tail). A large post-match `$sort` can
     * exceed the server's per-stage memory; honor the disk-use opt-in.
     */
-  override def unwoundRead(ns: String, query: BQuery, u: ServerClient.Unwind,
+  override def unwoundRead(ns: String, query: BQuery, u: graft.query.Unwind,
       postQuery: BQuery, sortSpec: Seq[(String, Boolean)],
       skip: Long, limit: Long,
       projection: Option[Seq[String]]): Iterator[BDoc] = {

@@ -437,37 +437,9 @@ object QueryDocs {
     * `{k1: "$k1", k2: "$k2", ...}`. Every plain SUM also renders its
     * [[sumPresenceAlias]] companion (see there).
     */
-  /** The `$unwind` stage body; `includeArrayIndex` renders the element's
-    * original index (int64 on a real server, NULL for null/empty/
-    * non-array parents) into `posField` — posexplode's pos source. */
-  def unwindBody(u: ServerClient.Unwind): BDoc = BDoc(
-    (Seq("path" -> (BString("$" + u.path): BsonValue),
-      "preserveNullAndEmptyArrays" -> (BBool(u.preserveNullAndEmpty): BsonValue)) ++
-      u.posField.map(f => "includeArrayIndex" -> (BString(f): BsonValue))): _*)
-
-  /** The unwind as a STAGE SEQUENCE: one `$unwind` for arrays; for a
-    * MAP explode (r15), `$set: {__graft_kv: {$objectToArray: "$path"}}`
-    * followed by `$unwind: "$__graft_kv"` — each result doc carries one
-    * `{k, v}` entry, which the key/value columns read through their
-    * column_mapping entries. */
-  def unwindStageSeq(u: ServerClient.Unwind): Seq[BDoc] =
-    if (!u.mapKv) Seq(BDoc("$unwind" -> unwindBody(u)))
-    else {
-      val kv = graft.plans.UnwindRelocate.KvDocField
-      Seq(
-        BDoc("$set" -> BDoc(kv ->
-          BDoc("$objectToArray" -> BString("$" + u.path)))),
-        BDoc("$unwind" -> BDoc(
-          (Seq("path" -> (BString("$" + kv): BsonValue),
-            "preserveNullAndEmptyArrays" ->
-              (BBool(u.preserveNullAndEmpty): BsonValue)) ++
-            u.posField.map(f =>
-              "includeArrayIndex" -> (BString(f): BsonValue))): _*)))
-    }
-
   def groupStages(matchDoc: BDoc, groupKeys: Seq[String],
       aggs: Seq[GroupAgg],
-      unwind: Option[ServerClient.Unwind] = None,
+      unwind: Option[graft.query.Unwind] = None,
       postMatchDoc: BDoc = BDoc.empty,
       /** derived columns (r17): a `$set` after the pre-`$match` (which
         * never references them — computed filters stay residual at the
@@ -483,11 +455,7 @@ object QueryDocs {
     // with $unwind and runs FIRST — fewer docs enter the unwind; the
     // POST $match filters the element itself (post-unwind the path
     // holds the element) between $unwind and $group
-    val uw = unwind.toSeq.flatMap(unwindStageSeq)
-    val post =
-      if (postMatchDoc.fields.isEmpty) Seq.empty
-      else Seq(BDoc("$match" -> postMatchDoc))
-    pre ++ setStage ++ uw ++ post :+ group
+    pre ++ setStage ++ unwind.toSeq.flatMap(_.stages(postMatchDoc)) :+ group
   }
 
   /** `[$match(pre), $unwind, $match(post), $sort?, $skip?, $limit?,
@@ -498,23 +466,19 @@ object QueryDocs {
     * semantic order; `$project` runs LAST so the sort sees stored
     * documents and only surviving rows pay the reshape.
     */
-  def unwoundStages(matchDoc: BDoc, u: ServerClient.Unwind,
+  def unwoundStages(matchDoc: BDoc, u: graft.query.Unwind,
       postMatchDoc: BDoc, sortSpec: Seq[(String, Boolean)],
       skip: Long, limit: Long, projection: Option[Seq[String]]): Seq[BDoc] = {
     val pre =
       if (matchDoc.fields.isEmpty) Seq.empty
       else Seq(BDoc("$match" -> matchDoc))
-    val uw = unwindStageSeq(u)
-    val post =
-      if (postMatchDoc.fields.isEmpty) Seq.empty
-      else Seq(BDoc("$match" -> postMatchDoc))
     val sort =
       if (sortSpec.isEmpty) Seq.empty else Seq(BDoc("$sort" -> sortDoc(sortSpec)))
     val sk = if (skip > 0) Seq(BDoc("$skip" -> BInt64(skip))) else Seq.empty
     val lim = if (limit >= 0) Seq(BDoc("$limit" -> BInt64(limit))) else Seq.empty
     val proj = projection.filter(_.nonEmpty)
       .map(f => BDoc("$project" -> projectionDoc(f))).toSeq
-    pre ++ uw ++ post ++ sort ++ sk ++ lim ++ proj
+    pre ++ u.stages(postMatchDoc) ++ sort ++ sk ++ lim ++ proj
   }
 
   /** `$project` doc renaming each doc field to its output name —
@@ -670,7 +634,7 @@ object QueryDocs {
       /** driving-side `$unwind` + its post-unwind element `$match`
         * (r15): rendered between the pre-`$match` and the left
         * `$project`, so per-ELEMENT rows feed the `$lookup`. */
-      unwind: Option[ServerClient.Unwind] = None,
+      unwind: Option[graft.query.Unwind] = None,
       unwindPostDoc: BDoc = BDoc.empty,
       ranges: Seq[LookupJoin.RangeKey] = Nil,
       /** derived columns (r17): the DRIVING side's `$set` renders after
@@ -684,9 +648,7 @@ object QueryDocs {
     (if (leftMatch.fields.isEmpty) Seq.empty
      else Seq(BDoc("$match" -> leftMatch))) ++
       graft.query.ComputedCol.setStage(leftComputed).toSeq ++
-      unwind.toSeq.flatMap(unwindStageSeq) ++
-      (if (unwindPostDoc.fields.isEmpty) Seq.empty
-       else Seq(BDoc("$match" -> unwindPostDoc))) ++
+      unwind.toSeq.flatMap(_.stages(unwindPostDoc)) ++
       Seq(BDoc("$project" -> aliasProjection(leftProject))) ++
       lookupUnwind(rightColl, rightMatch, rightProject, keys, leftOuter,
         ranges, rightComputed)

@@ -1,7 +1,7 @@
 package graft.server
 
 import graft.bson._
-import graft.query.BQuery
+import graft.query.{BQuery, Unwind}
 import graft.source.Planners
 import graft.store.{BsonCollection, BulkResult, InsertOne, WriteModel}
 
@@ -109,7 +109,7 @@ trait ServerClient {
     */
   def groupAggregate(ns: String, query: BQuery, groupKeys: Seq[String],
       aggs: Seq[GroupAgg],
-      unwind: Option[ServerClient.Unwind] = None,
+      unwind: Option[Unwind] = None,
       postQuery: BQuery = BQuery.True,
       /** DERIVED columns (r17, [[graft.query.ComputedCol]]) the group
         * keys/aggregates may reference: materialized by a `$set` stage
@@ -129,7 +129,7 @@ trait ServerClient {
     * `$sort` order — callers gate bracket safety); both queries must
     * render fully server-side (rows may be gone after the tail).
     */
-  def unwoundRead(ns: String, query: BQuery, unwind: ServerClient.Unwind,
+  def unwoundRead(ns: String, query: BQuery, unwind: Unwind,
       postQuery: BQuery, sortSpec: Seq[(String, Boolean)],
       skip: Long, limit: Long,
       projection: Option[Seq[String]]): Iterator[BDoc]
@@ -229,7 +229,7 @@ final case class LookupJoin(
       * untranslatable predicates never push this far). Lookup-side
       * arrays never unwind here (element rows are not parent-atomic
       * across the join boundary). */
-    unwind: Option[ServerClient.Unwind] = None,
+    unwind: Option[Unwind] = None,
     unwindPost: BQuery = BQuery.True,
     /** RANGE conjuncts of the join condition (r17): `left OP right`
       * over OUTPUT names, rendered into the `$lookup` pipeline's
@@ -267,17 +267,9 @@ final case class LookupJoin(
 object ServerClient {
   final case class CollStats(count: Long, avgObjSizeBytes: Long)
 
-  /** One `$unwind` stage: the (possibly dotted) array field to unwind
-    * and mongo's `preserveNullAndEmptyArrays` flag (explode_outer).
-    * `posField` = mongo's `includeArrayIndex` — the element's ORIGINAL
-    * index lands in that field as int64 (NumberLong), null for
-    * null/empty/non-array parents; posexplode's pos column reads it.
-    * `mapKv` (r15) = a MAP explode: the wire renders `$set:
-    * {__graft_kv: {$objectToArray: "$path"}}` then unwinds THAT field
-    * — each entry doc carries `{k, v}`, which the key/value columns
-    * read through their column_mapping entries. */
-  final case class Unwind(path: String, preserveNullAndEmpty: Boolean,
-      posField: Option[String] = None, mapKv: Boolean = false)
+  /** The `$unwind` a pipeline carries — [[graft.query.Unwind]], under
+    * the name client wrappers spell it with. */
+  type Unwind = graft.query.Unwind
 }
 
 object LookupJoin {
@@ -692,7 +684,7 @@ final class FakeServerClient(rootDir: Option[String] = None)
     */
   override def groupAggregate(ns: String, query: BQuery, groupKeys: Seq[String],
       aggs: Seq[GroupAgg],
-      unwind: Option[ServerClient.Unwind] = None,
+      unwind: Option[Unwind] = None,
       postQuery: BQuery = BQuery.True,
       computed: Seq[graft.query.ComputedCol] = Nil): Iterator[BDoc] = {
     tick("groupAggregate")
@@ -721,20 +713,15 @@ final class FakeServerClient(rootDir: Option[String] = None)
     // the derived fields), mirroring the wire stage order
     val matched = coll(ns).readAll(Some(needed)).filter(query.matches)
       .map(d => graft.query.ComputedCol.injectAll(computed, d))
-    val rows = unwind match {
-      case Some(u) => matched.flatMap(d => FakeServerClient.unwindDocs(d, u))
-      case None => matched
-    }
-    val post =
-      if (postQuery == BQuery.True) rows else rows.filter(postQuery.matches)
-    FakeServerClient.groupFold(post, groupKeys, aggs)
+    FakeServerClient.groupFold(Unwind.expandAll(unwind, postQuery, matched),
+      groupKeys, aggs)
   }
 
   /** The unwound ROW pipeline, evaluated over the store with the same
     * `$unwind` shapes as [[groupAggregate]] and find()'s `$sort`
     * semantics (stored values, BSON cross-type order, compound keys
     * tie-breaking in their own directions). */
-  override def unwoundRead(ns: String, query: BQuery, u: ServerClient.Unwind,
+  override def unwoundRead(ns: String, query: BQuery, u: Unwind,
       postQuery: BQuery, sortSpec: Seq[(String, Boolean)],
       skip: Long, limit: Long,
       projection: Option[Seq[String]]): Iterator[BDoc] = {
@@ -751,11 +738,8 @@ final class FakeServerClient(rootDir: Option[String] = None)
     val needed: Option[Set[String]] = projection.map(p =>
       p.toSet ++ BQuery.fieldPaths(query) ++ BQuery.fieldPaths(postQuery) +
         u.path ++ sortSpec.map(_._1))
-    val unwound = coll(ns).readAll(needed).filter(query.matches)
-      .flatMap(d => FakeServerClient.unwindDocs(d, u))
-    val post =
-      if (postQuery == BQuery.True) unwound
-      else unwound.filter(postQuery.matches)
+    val post = coll(ns).readAll(needed).filter(query.matches)
+      .flatMap(u.expander(postQuery))
     val sorted = sortSpec match {
       case Seq() => post
       case spec =>
@@ -831,15 +815,8 @@ final class FakeServerClient(rootDir: Option[String] = None)
         j.leftComputed.map(_.field)
     val matched = coll(ns).readAll(Some(leftNeeded)).filter(j.leftQuery.matches)
       .map(d => graft.query.ComputedCol.injectAll(j.leftComputed, d))
-    val driving = j.unwind match {
-      case Some(u) =>
-        val unwound = matched.flatMap(d => FakeServerClient.unwindDocs(d, u))
-        if (j.unwindPost == BQuery.True) unwound
-        else unwound.filter(j.unwindPost.matches)
-      case None => matched
-    }
     var rows: Iterator[BDoc] = stageJoin(
-      driving,
+      Unwind.expandAll(j.unwind, j.unwindPost, matched),
       j.leftProject, j.rightNs, j.rightQuery, j.rightProject,
       j.keys, j.leftOuter, j.ranges, j.rightComputed)
     // chained stages drive off the previous stage's flat joined rows —
@@ -1305,52 +1282,6 @@ object FakeServerClient {
           a -> (if (st(i) == null) BNull else st(i).asInstanceOf[SumState].result)
       }
       BDoc(ListMap(groupKeys.zip(gvs) ++ fields: _*))
-    }
-  }
-
-  /** What a real server's `$unwind` emits for one document: one doc per
-    * array element with the field REPLACED by the element; null/missing/
-    * empty-array docs drop (or pass with a null/absent field under
-    * `preserveNullAndEmptyArrays`); a NON-array value passes the doc
-    * unchanged (mongo treats it as a one-element array).
-    */
-  /** [[ServerClient.Unwind]]-dispatched unwind: the array form or the
-    * MAP form (`$objectToArray` + `$unwind` — one entry doc per field,
-    * `__graft_kv = {k, v}`; a non-document value at the path throws,
-    * exactly like a real server's `$objectToArray`). */
-  private[server] def unwindDocs(d: BDoc, u: ServerClient.Unwind): Seq[BDoc] =
-    if (!u.mapKv) unwindDoc(d, u.path, u.preserveNullAndEmpty, u.posField)
-    else graft.plans.UnwindRelocate.mapEntries(d, u.path,
-      u.preserveNullAndEmpty,
-      // posexplode of a map: the entry index rides includeArrayIndex on
-      // the kv $unwind — int64 on entries (NumberLong, like a real
-      // server), explicit NULL otherwise
-      (doc, i) => u.posField match {
-        case Some(f) => graft.query.Updates.setField(doc, f,
-          i.map(x => BInt64(x.toLong): BsonValue).getOrElse(BNull))
-        case None => doc
-      })
-
-  private[server] def unwindDoc(d: BDoc, path: String,
-      preserve: Boolean, posField: Option[String] = None): Seq[BDoc] = {
-    // includeArrayIndex: int64 index on array elements (a real server
-    // emits NumberLong), explicit NULL otherwise — mongo's rule
-    def withPos(doc: BDoc, i: Option[Int]): BDoc = posField match {
-      case Some(f) => graft.query.Updates.setField(doc, f,
-        i.map(x => BInt64(x.toLong): BsonValue).getOrElse(BNull))
-      case None => doc
-    }
-    d.getPath(path) match {
-      case Some(BArray(items)) if items.nonEmpty =>
-        items.zipWithIndex.map { case (el, i) =>
-          withPos(graft.query.Updates.setField(d, path, el), Some(i)) }
-      case Some(BArray(_)) => // empty array
-        if (preserve)
-          Seq(withPos(graft.query.Updates.setField(d, path, BNull), None))
-        else Nil
-      case Some(BNull) | None =>
-        if (preserve) Seq(withPos(d, None)) else Nil
-      case Some(_) => Seq(withPos(d, None)) // non-array passes (server rule)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.source
 
 import graft.bson._
 import graft.files.BsonFiles
-import graft.query.{BQuery, BQueryJson, NumericNullEdge, RegexDialect}
+import graft.query.{BQuery, BQueryJson, NumericNullEdge, RegexDialect, Unwind}
 import graft.store.BsonCollection
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -291,13 +291,7 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
     * OFFSET tails count unwound rows (the reader's tail stage), the
     * parent prune drops non-contributing parents pre-unwind, and
     * grouped-aggregate partials fold over unwound rows. */
-  private val unwind: Option[UnwindSpec] =
-    options.get("unwind_path").map(pth => UnwindSpec(pth,
-      options.getOrElse("unwind_element", pth),
-      options.get("unwind_outer").exists(_.toBoolean),
-      // the pos COLUMN maps to the injected doc field (PosDocField)
-      options.get("unwind_pos").map(c => mapping.getOrElse(c, c)),
-      mapKv = options.get("unwind_kind").contains("map")))
+  private val unwind: Option[Unwind] = Unwind.fromOptions(options)
   /** POST-unwind query (accepted element-column filters). */
   private var unwindPost: BQuery = BQuery.True
 
@@ -310,7 +304,7 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
   /** A predicate on the `_file` metadata column is not a document query
     * (residual); the rest is [[Pushdown.splitFilters]]. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val split = Pushdown.splitFilters(cols, options, filters, GraftBsonSource.FileMetaCol)
+    val split = Pushdown.splitFilters(cols, unwind, filters, GraftBsonSource.FileMetaCol)
     unwindPost = split.post
     pushedQuery = split.query
     pushed = split.pushed
@@ -338,7 +332,7 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
 
   override def pushTableSample(lower: Double, upper: Double,
       withReplacement: Boolean, seed: Long): Boolean = {
-    val keyCol = Pushdown.sampleKey(cols, options, unwind.map(_.path))
+    val keyCol = Pushdown.sampleKey(cols, options, unwind)
     val eligible = !withReplacement && keyCol.isDefined &&
       !options.contains("collections") && !options.contains("limit") &&
       limit.isEmpty && offset.isEmpty && topN.isEmpty &&
@@ -567,8 +561,7 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
     // pre-unwind PARENT pruning: under a non-outer unwind with a pushed
     // post-unwind match, parents with no satisfying element drop BEFORE
     // the per-element flatten
-    val unwindPrune = Pushdown.unwindPrune(tableSchema, options,
-      unwind.filterNot(_.outer).map(_.path), unwindPost)
+    val unwindPrune = Pushdown.unwindPrune(tableSchema, unwind, unwindPost)
     new GraftScan(required,
       BQuery.and(BQuery.and(optionQuery, pushedQuery), unwindPrune),
       options, effLimit, mapping,
@@ -715,26 +708,6 @@ object RuntimeFilters {
   }
 }
 
-/** `$unwind` directive on a scan (r14, injected by the UnwindRelocate
-  * rule when an explode() sits directly over the relation): emit one row
-  * per element of the array at `path`; `element` names the element
-  * COLUMN in the read schema (for the grouped-agg inner scan it IS the
-  * doc path); `outer` = explode_outer (null/empty parents keep one
-  * null-element row).
-  */
-final case class UnwindSpec(path: String, element: String, outer: Boolean,
-    /** posexplode: the synthetic doc field the reader injects the element
-      * INDEX into (`$unwind includeArrayIndex` analog) — the pos column
-      * reads it through its `column_mapping` entry. Missing (→ null) for
-      * null/empty/non-array parents, mongo's rule. */
-    posField: Option[String] = None,
-    /** MAP explode (r15): the reader injects one `__graft_kv = {k, v}`
-      * entry doc per field of the subdocument at `path`; key/value
-      * columns read it through their `column_mapping` entries. A
-      * non-document value at the path throws (the `$objectToArray`
-      * fail-loud rule). */
-    mapKv: Boolean = false)
-
 final class GraftScan(requiredSchema: StructType, query: BQuery,
     options: Map[String, String], limit: Option[Int] = None,
     mapping: Map[String, String] = Map.empty,
@@ -743,7 +716,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
     topNSort: Option[Seq[(String, Boolean, org.apache.spark.sql.types.DataType)]] = None,
     grouped: Option[GroupedAgg] = None,
     sample: Option[SamplePush] = None,
-    unwind: Option[UnwindSpec] = None,
+    unwind: Option[Unwind] = None,
     unwindPost: BQuery = BQuery.True,
     /** Pushed limit/top-n/offset count UNWOUND rows: the reader's tail
       * stage runs post-unwind (an option-level PARENT-scoped cursor
@@ -827,8 +800,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
       // under a pushed unwind, a sort keyed at (or under) the unwound
       // path resolves to the ELEMENT column, whose per-element values do
       // not carry the parent-cursor order — no claim
-      case Some(docKey) if unwind.exists(u =>
-          docKey == u.path || docKey.startsWith(u.path + ".")) => Array.empty
+      case Some(docKey) if unwind.exists(_.postOnly(docKey)) => Array.empty
       case Some(docKey) if !options.contains("collections") =>
         ColumnMapping.sparkColFor(mapping, docKey) match {
           case Some(c) if requiredSchema.fieldNames.contains(c) =>
@@ -851,11 +823,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
         val order = spec.map { case (k, desc, _) =>
           s"$k ${if (desc) "DESC" else "ASC"}" }.mkString(", ")
         s", PushedTopN: $order LIMIT ${limit.getOrElse(-1)}" }.getOrElse("") +
-      unwind.map(u => s", PushedUnwind: ${u.path}" +
-        (if (u.mapKv) " MAP" else "") +
-        (if (u.outer) " OUTER" else "") +
-        (if (unwindPost == BQuery.True) ""
-         else s" PostUnwindMatch: $unwindPost")).getOrElse("")
+      unwind.map(u => ", " + u.describe(unwindPost)).getOrElse("")
 
   /** Size estimate from the data files so Catalyst can pick broadcast
     * joins for small collections (the stats role collstats plays in the
@@ -1352,9 +1320,8 @@ final case class GraftInputPartition(path: String, start: Long, end: Long,
     /** Set for a pushed TABLESAMPLE: deterministic keyed Bernoulli,
       * applied right after the pushed query (commutes with it). */
     sample: Option[SamplePush] = None,
-    /** Set for a pushed `$unwind`: one row per element of the array at
-      * `unwind.path`, the element bound at the `unwind.element` column. */
-    unwind: Option[UnwindSpec] = None,
+    /** Set for a pushed `$unwind`: one row per element (or map entry). */
+    unwind: Option[Unwind] = None,
     /** Accepted element-column filters, evaluated POST-unwind. */
     unwindPost: BQuery = BQuery.True,
     /** Pushed limit/top-n/offset count UNWOUND rows (tail stage runs
@@ -1390,7 +1357,7 @@ final case class GroupedAggPartition(path: String, start: Long, end: Long,
     query: BQuery, grouped: GroupedAgg,
     mapping: Map[String, String],
     sample: Option[SamplePush] = None,
-    unwind: Option[UnwindSpec] = None,
+    unwind: Option[Unwind] = None,
     unwindPost: BQuery = BQuery.True,
     computed: Seq[graft.query.ComputedCol] = Nil) extends InputPartition
 
@@ -1437,9 +1404,7 @@ final class GroupedAggPartitionReader(p: GroupedAggPartition)
       GraftInputPartition(p.path, p.start, p.end, p.query,
         mapping = innerSchema.fieldNames.map(c => c -> c).toMap,
         sample = p.sample,
-        // inner columns ARE doc paths: the unwound element column is the
-        // array path itself (post-unwind the path holds the element)
-        unwind = p.unwind.map(u => u.copy(element = u.path)),
+        unwind = p.unwind,
         unwindPost = p.unwindPost,
         computed = p.computed),
       innerSchema)
@@ -1557,16 +1522,10 @@ final class GraftPartitionReader(p: GraftInputPartition,
     requiredSchema: StructType, fileMeta: Boolean = false)
     extends PartitionReader[InternalRow] {
   // `_file` provenance: decoded rows splice this partition's path in at
-  // the requested position — constant per partition, one UTF8String
-  private val fileIdx: Int =
-    if (fileMeta) requiredSchema.fieldNames.indexOf(GraftBsonSource.FileMetaCol)
-    else -1
-  private val decodeSchema: StructType =
-    if (fileIdx < 0) requiredSchema
-    else StructType(requiredSchema.fields.patch(fileIdx, Nil, 1))
-  private val fileValue: org.apache.spark.unsafe.types.UTF8String =
-    if (fileIdx < 0) null
-    else org.apache.spark.unsafe.types.UTF8String.fromString(p.path)
+  // the requested position — constant per partition
+  private val fileCol =
+    new MetaColumn(requiredSchema, GraftBsonSource.FileMetaCol, fileMeta, p.path)
+  private val decodeSchema: StructType = fileCol.decodeSchema
   // projected decode: only required columns, remapped paths and query
   // fields are materialized; everything else is byte-skipped — at EVERY
   // document level (dotted paths prune subdocument interiors too: a
@@ -1619,44 +1578,11 @@ final class GraftPartitionReader(p: GraftInputPartition,
     if (p.unwind.isDefined && !p.tailsPostUnwind)
       p.limit.map(sortedParents.take).getOrElse(sortedParents)
     else sortedParents
-  // `$unwind` (r14): emit one doc per array element; element semantics
-  // mirror the server's $unwind — null/missing/empty drop (or keep one
-  // null-element row under OUTER), a non-array value passes unchanged
-  private val unwoundDocs: Iterator[BDoc] = p.unwind match {
-    case None => parents
-    case Some(u) =>
-      // posexplode: inject the element INDEX at u.posField — only for
-      // real array elements (null/empty/non-array parents keep it
-      // missing → a null pos, mongo's includeArrayIndex rule)
-      def withPos(d: BDoc, i: Int): BDoc = u.posField match {
-        case Some(f) => graft.query.Updates.setField(d, f, BInt32(i))
-        case None => d
-      }
-      val unwound = parents.flatMap { d =>
-        // MAP explode: the SHARED $objectToArray expansion (one kv
-        // entry doc per subdocument field; key/value columns read
-        // __graft_kv.k/.v via column_mapping); posexplode's entry index
-        // injects int32 like this reader's array branch
-        if (u.mapKv) graft.plans.UnwindRelocate.mapEntries(
-          d, u.path, u.outer,
-          (doc, i) => i.map(withPos(doc, _)).getOrElse(doc)).iterator
-        else d.getPath(u.path) match {
-          case Some(BArray(items)) if items.nonEmpty =>
-            items.iterator.zipWithIndex.map { case (el, i) =>
-              withPos(graft.query.Updates.setField(d, u.path, el), i) }
-          case Some(BArray(_)) =>
-            if (u.outer) Iterator.single(graft.query.Updates.setField(d, u.path, BNull))
-            else Iterator.empty
-          case Some(BNull) | None =>
-            if (u.outer) Iterator.single(d) else Iterator.empty
-          case Some(_) => Iterator.single(d)
-        }
-      }
-      // POST-unwind $match: accepted element-column filters run on the
-      // per-element docs (the path now holds the element)
-      if (p.unwindPost == BQuery.True) unwound
-      else unwound.filter(p.unwindPost.matches)
-  }
+  // `$unwind` (r14): the shared rule emits one doc per element or map
+  // entry and applies the post-unwind match; the pos lands as the int32
+  // the pos column decodes
+  private val unwoundDocs: Iterator[BDoc] =
+    Unwind.expandAll(p.unwind, p.unwindPost, parents, narrow = true)
   // pushed tail stage — top-n (READ-value bounded heap), then offset
   // (skip; single-partition plans only), then limit. Counts UNWOUND
   // rows when the unwind is pushed with tails, rows otherwise.
@@ -1676,20 +1602,7 @@ final class GraftPartitionReader(p: GraftInputPartition,
 
   override def next(): Boolean =
     if (docs.hasNext) {
-      val base = RowCodec.toRow(docs.next(), decodeSchema, p.mapping)
-      current =
-        if (fileIdx < 0) base
-        else {
-          val vals = new Array[Any](requiredSchema.length)
-          var i = 0
-          var j = 0
-          while (i < requiredSchema.length) {
-            if (i == fileIdx) vals(i) = fileValue
-            else { vals(i) = base.get(j, decodeSchema.fields(j).dataType); j += 1 }
-            i += 1
-          }
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-        }
+      current = fileCol.splice(RowCodec.toRow(docs.next(), decodeSchema, p.mapping))
       true
     } else false
 

@@ -81,7 +81,7 @@ object Pushdown {
     *     would carry ∃-element semantics;
     *  4. [[FilterTranslator.split]] on the element and document filters.
     */
-  def splitFilters(cols: Columns, options: Map[String, String],
+  def splitFilters(cols: Columns, unwind: Option[graft.query.Unwind],
       filters: Array[Filter], metaCol: String,
       keepResidual: Filter => Boolean = _ => false): FilterSplit = {
     val (metaFilters, rest0) = filters.partition(_.references.contains(metaCol))
@@ -96,9 +96,7 @@ object Pushdown {
     }
     val (computedFilters, rest) = rest2.partition(_.references.exists(cols.isComputed))
     val (elementFilters, docFilters) = rest.partition(f =>
-      f.references.exists(r => graft.plans.UnwindRelocate.elementScoped(
-        r, options.get("unwind_element"), options.get("unwind_pos"),
-        options.get("unwind_key"))))
+      f.references.exists(r => unwind.exists(_.scopes(r))))
     val (postQ, postAccepted, postResidual) =
       FilterTranslator.split(elementFilters, cols.mapping)
     val (query, accepted, residual) = FilterTranslator.split(docFilters, cols.mapping)
@@ -111,14 +109,17 @@ object Pushdown {
     * dotted path. Refused: a key outside [[SamplePush.KeyTypes]], a
     * COMPUTED key (a derived bin collides all rows of a bin, and no
     * stored field exists to sample), and under an unwind a key that is
-    * not a per-PARENT field ([[SamplePush.keyAllowedUnderUnwind]]). */
+    * not a per-PARENT field: under a pushed unwind the window keeps or
+    * drops PARENTS with all their element rows, so a key bound per row
+    * ([[graft.query.Unwind.postOnly]]) cannot be evaluated. The
+    * relocation rule applies the same test before it unwinds a sampled
+    * relation. */
   def sampleKey(cols: Columns, options: Map[String, String],
-      unwindPath: Option[String]): Option[FieldResolve.Ref] =
+      unwind: Option[graft.query.Unwind]): Option[FieldResolve.Ref] =
     options.get("sample_key")
       .flatMap(k => FieldResolve.resolveName(cols.schema, k, cols.mapping))
       .filter(r => SamplePush.KeyTypes.contains(r.dataType) &&
-        !cols.isComputed(r.docPath) &&
-        SamplePush.keyAllowedUnderUnwind(r.docPath, unwindPath))
+        !cols.isComputed(r.docPath) && !unwind.exists(_.postOnly(r.docPath)))
 
   /** ORDER BY k1[, k2, ...] of a TopN: each key resolved (possibly a
     * NESTED subfield — `meta.score` arrives as a multi-part reference)
@@ -176,21 +177,22 @@ object Pushdown {
   /** Pre-unwind PARENT prune ([[BQuery.parentPrune]]) of a pushed
     * post-unwind match: parents with no satisfying element drop BEFORE
     * the per-element flatten — a prune, never the filter (the exact post
-    * match still runs on unwound docs). `unwindPath` is given only for
-    * an unwind kind the caller allows to prune (never OUTER: a
-    * never-matching array still owes its null-element row to a
-    * null-matching post query). Skipped for ARRAY/MAP elements
-    * (nested-array ElemMatch traversal is a documented divergence). */
-  def unwindPrune(schema: StructType, options: Map[String, String],
-      unwindPath: Option[String], post: BQuery): BQuery = {
-    val safe = unwindPath.isDefined &&
-      options.get("unwind_element").forall(e =>
+    * match still runs on unwound docs). Only for a non-OUTER array
+    * unwind (an OUTER parent with no matching element still owes its
+    * null-element row to a null-matching post query; a map's entries
+    * live at the kv field, never under its path). Skipped for ARRAY/MAP
+    * elements (nested-array ElemMatch traversal is a documented
+    * divergence). */
+  def unwindPrune(schema: StructType, unwind: Option[graft.query.Unwind],
+      post: BQuery): BQuery = {
+    val safe = unwind.exists(u => !u.outer && !u.mapKv &&
+      u.element.forall(e =>
         schema.fields.find(_.name == e).forall(_.dataType match {
           case _: ArrayType | _: MapType => false
           case _ => true
-        }))
+        })))
     if (!safe || post == BQuery.True) BQuery.True
-    else BQuery.parentPrune(post, unwindPath.get)
+    else BQuery.parentPrune(post, unwind.get.path)
   }
 
   /** Columns a scan advertises for runtime (dynamic) filtering: the
@@ -319,19 +321,6 @@ final case class SamplePush(key: String, lower: Double, upper: Double,
 object SamplePush {
   /** 2^60 — the hash universe of [[graft.functions.Md5Util.prefix60]]. */
   val Unit60: Double = 1152921504606846976.0d
-
-  /** Under a pushed unwind the window keys PARENTS (kept/dropped with
-    * all their element rows — the keyed-window sampling unit, applied
-    * pre-unwind): a key at or under the unwound path (the ELEMENT) or
-    * the synthetic posexplode field cannot be evaluated per parent.
-    * Shared by both transports so their sampling units stay in
-    * lockstep. */
-  def keyAllowedUnderUnwind(docPath: String, unwindPath: Option[String]): Boolean =
-    unwindPath.forall(p =>
-      docPath != p && !docPath.startsWith(p + ".") &&
-        docPath != graft.plans.UnwindRelocate.PosDocField &&
-        docPath != graft.plans.UnwindRelocate.KvDocField &&
-        !docPath.startsWith(graft.plans.UnwindRelocate.KvDocField + "."))
 
   /** Canonical key rendering: integers in decimal (int32 and int64
     * storages of one value render identically — SQL `CAST(k AS VARCHAR)`
