@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session-level tuning the graft operators are designed for. Applied at
-  * session CONSTRUCTION by every entry point (Bench/Verify/PlanDump/DiagChain,
+  * session CONSTRUCTION by every entry point (Bench/Verify/PlanDump,
   * the test fixture) — never mutated from inside a query builder, so
   * building a graft query has no side effect on unrelated work sharing
   * the session. Queries stay correct without these; they only run the

@@ -55,17 +55,7 @@ import scala.jdk.CollectionConverters._
   */
 object ComputedKeyRelocate extends Rule[LogicalPlan] {
 
-  /** Escape hatch + A/B toggle (DiagChain measures pushed vs unpushed). */
-  val ConfKey = "spark.graft.computed_key_pushdown"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      try conf.getConfString(ConfKey, "true").toBoolean
-      catch { case _: Exception => true }
-    if (!enabled) plan else rewrite(plan)
-  }
-
-  private def rewrite(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     // a surviving computed alias: Project(..., bkt = pmod(col, n), ...)
     // over [Filter]* over the relation (join legs, plain selects)
     case p @ Project(projectList, child) =>

@@ -85,10 +85,7 @@ case class RetainedGenerateInput(child: Expression) extends UnaryExpression {
   */
 object UnwindRelocate extends Rule[LogicalPlan] {
 
-  /** Escape hatch + A/B toggle (DiagChain measures pushed vs unpushed). */
-  val ConfKey = "spark.graft.unwind_pushdown"
-
-  /** Separate escape hatch for the OVER-JOIN transpose (r16). The
+  /** Escape hatch for the OVER-JOIN transpose (r16). The
     * transpose is clearly right whenever something bounds the element
     * rows server-side — a post-unwind `$match`, a folding `$group`, an
     * element join key, a row tail — which is every shape the catalog
@@ -106,36 +103,30 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     * cannot see the later V2 aggregate pushdown from this rule. */
   val JoinConfKey = "spark.graft.unwind_join_pushdown"
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      try conf.getConfString(ConfKey, "true").toBoolean
-      catch { case _: Exception => true }
-    if (!enabled) plan
-    else plan.transformUp {
-      case g @ Generate(Explode(arr), _, outer, _, Seq(elOut), _) =>
-        relocate(g, arr, outer, elOut, None)
-          .orElse(retainJoinPush(g, arr)).getOrElse(g)
-      case g @ Generate(PosExplode(arr), _, outer, _, Seq(posOut, elOut), _)
-          if !arr.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] =>
-        relocate(g, arr, outer, elOut, Some(posOut))
-          .orElse(retainJoinPush(g, arr)).getOrElse(g)
-      // MAP explode (r15): two generator outputs (key, value) — the
-      // scan's `$objectToArray`+`$unwind` directive; over a pushed join
-      // the same transpose arrays get applies (r16 — the map is computed
-      // from the preserved driving leg, so k entries × m joined copies
-      // commute exactly like array elements)
-      case g @ Generate(Explode(m), _, outer, _, Seq(keyOut, valOut), _)
-          if m.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] =>
-        relocate(g, m, outer, valOut, None, mapKey = Some(keyOut))
-          .orElse(retainJoinPush(g, m)).getOrElse(g)
-      // posexplode of a MAP: the entry INDEX rides includeArrayIndex on
-      // the kv `$unwind` (entry order = document field order =
-      // $objectToArray order = Spark's map iteration order)
-      case g @ Generate(PosExplode(m), _, outer, _, Seq(posOut, keyOut, valOut), _)
-          if m.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] =>
-        relocate(g, m, outer, valOut, Some(posOut), mapKey = Some(keyOut))
-          .orElse(retainJoinPush(g, m)).getOrElse(g)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case g @ Generate(Explode(arr), _, outer, _, Seq(elOut), _) =>
+      relocate(g, arr, outer, elOut, None)
+        .orElse(retainJoinPush(g, arr)).getOrElse(g)
+    case g @ Generate(PosExplode(arr), _, outer, _, Seq(posOut, elOut), _)
+        if !arr.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] =>
+      relocate(g, arr, outer, elOut, Some(posOut))
+        .orElse(retainJoinPush(g, arr)).getOrElse(g)
+    // MAP explode (r15): two generator outputs (key, value) — the
+    // scan's `$objectToArray`+`$unwind` directive; over a pushed join
+    // the same transpose arrays get applies (r16 — the map is computed
+    // from the preserved driving leg, so k entries × m joined copies
+    // commute exactly like array elements)
+    case g @ Generate(Explode(m), _, outer, _, Seq(keyOut, valOut), _)
+        if m.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] =>
+      relocate(g, m, outer, valOut, None, mapKey = Some(keyOut))
+        .orElse(retainJoinPush(g, m)).getOrElse(g)
+    // posexplode of a MAP: the entry INDEX rides includeArrayIndex on
+    // the kv `$unwind` (entry order = document field order =
+    // $objectToArray order = Spark's map iteration order)
+    case g @ Generate(PosExplode(m), _, outer, _, Seq(posOut, keyOut, valOut), _)
+        if m.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] =>
+      relocate(g, m, outer, valOut, Some(posOut), mapKey = Some(keyOut))
+        .orElse(retainJoinPush(g, m)).getOrElse(g)
   }
 
   /** Fallback when the unwind can NOT relocate (a refusal-matrix shape,

@@ -153,7 +153,7 @@ object GraftServerSource {
   def withClient[A](opts: Map[String, String])(f: (ServerClient, String) => A): A = {
     val client = factory(opts).create(opts)
     try f(client, ns(opts))
-    finally client match { case c: AutoCloseable => c.close(); case _ => () }
+    finally client.close()
   }
 
   /** `ensure_index` write option: comma-separated fields of ONE compound
@@ -300,18 +300,9 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     if (!eligible) false
     else {
       sample = Some(SamplePush(keyCol.get.docPath, lower, upper, seed))
-      sampleKeyType = keyCol.get.dataType
       true
     }
   }
-
-  /** Resolved Spark type of the pushed sample's key — only consulted
-    * when pushDownJoin carries the sample as a HIDDEN extra projection
-    * (the decode by visible schema drops hidden extras, but the
-    * projection tuple should still carry the true type for any later
-    * type-consulting gate). */
-  private[server] var sampleKeyType: org.apache.spark.sql.types.DataType =
-    org.apache.spark.sql.types.LongType
 
   /** `_ns` metadata predicates are not document queries (residual); the
     * rest is [[Pushdown.splitFilters]], with two wire-only steps around
@@ -400,11 +391,10 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       // rows — sound only as ONE pipeline (`splitter=single` on the
       // DRIVING side guarantees it: the joined scan partitions by the
       // driving side's options, which for a mirrored RIGHT OUTER join
-      // are the OTHER builder's, already recorded in joinDriving), with
+      // are the OTHER builder's, already recorded in drivingOpts), with
       // no other tail claimed and no carried sample (the skip would
       // count unsampled rows)
-      if (joinDriving.map(_._1).getOrElse(options)
-            .get("splitter").contains("single") &&
+      if (drivingOpts.get("splitter").contains("single") &&
           joinedAgg.isEmpty && joinLimit.isEmpty && joinTopN.isEmpty &&
           joinSamples.isEmpty && joinOffset.isEmpty) {
         joinOffset = Some(n.toLong); true
@@ -474,11 +464,10 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   private def pushJoinedTopN(
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       n: Int): Boolean = {
-    val j = joined.get
     if (joinedAgg.isDefined || joinLimit.isDefined ||
         joinTopN.isDefined || joinSamples.nonEmpty || joinOffset.isDefined)
       return false
-    joinTopN = Pushdown.topNOrder(Pushdown.Columns(j.schema), orders, r =>
+    joinTopN = Pushdown.topNOrder(Pushdown.Columns(joinedSchema), orders, r =>
         GraftServerScanBuilder.cursorOrderSafe(r.dataType,
           joinedColOpts.getOrElse(r.docPath.split('.').head, options)))
       .map(keys => (keys.map { case (r, desc) => (r.docPath, desc) }, n))
@@ -519,7 +508,6 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * path; columns resolve against the JOINED output schema.
     */
   private def pushJoinedAggregation(aggregation: Aggregation): Boolean = {
-    val j = joined.get
     if (joinLimit.isDefined || joinedAgg.isDefined || joinTopN.isDefined ||
         joinSamples.nonEmpty || joinOffset.isDefined)
       return false
@@ -529,7 +517,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     // pick the top-level vs `__j.` home (QueryDocs.lookupTail)
     def sideOpts(r: FieldResolve.Ref): Map[String, String] =
       joinedColOpts.getOrElse(r.docPath.split('.').head, options)
-    joinedAgg = GroupAggParse.parse(aggregation, Pushdown.Columns(j.schema).resolve,
+    joinedAgg = GroupAggParse.parse(aggregation, Pushdown.Columns(joinedSchema).resolve,
       r => GraftServerScanBuilder.GroupKeyTypes.contains(r.dataType),
       r => GraftServerScanBuilder.aggValueSafe(r.dataType, sideOpts(r)),
       r => GraftServerScanBuilder.sumValueSafe(r.dataType, sideOpts(r))).map(GroupedAgg.of)
@@ -609,7 +597,14 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * date bracket; ObjectId/symbol storages read as strings but never
     * `$eq` a BSON string).
     */
-  private var joined: Option[ServerJoin] = None
+  private var joined: Option[LookupJoin] = None
+  /** The joined scan's VISIBLE read schema in Spark's expected column
+    * order — for a RIGHT OUTER join the driving orientation is MIRRORED
+    * (the right relation drives the pipeline) while Spark still expects
+    * the original left++right column order; rows are flat by output
+    * name, so order is presentation only. Hidden sample carries are not
+    * in it. */
+  private var joinedSchema: StructType = new StructType()
   // join-arm extensions, mutually exclusive: a $group, a partial
   // $limit, or a partial $sort+$limit appended to the lookup pipeline
   private var joinedAgg: Option[GroupedAgg] = None
@@ -633,9 +628,9 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * orders) — a Long column is only order/equality-safe under ITS
     * collection's `assume_uniform_storage` opt-in. */
   private var joinedColOpts: Map[String, Map[String, String]] = Map.empty
-  // set for a MIRRORED (right outer) join: the driving side's options
-  // and full query are the OTHER builder's
-  private var joinDriving: Option[(Map[String, String], BQuery)] = None
+  // the driving side's read options — the OTHER builder's for a
+  // MIRRORED (right outer) join
+  private var drivingOpts: Map[String, String] = options
 
   private def connectionId: (String, String, String) = (
     options.getOrElse("client_factory", classOf[DirServerFactory].getName),
@@ -837,6 +832,23 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     else ordered.contains(dt) && uniform
   }
 
+  /** Push one `$lookup` stage: stage 0 over this plain scan, or — on an
+    * already-joined builder — one more stage CHAINED above the pushed
+    * join, so a 3-way+ star query stays ONE pipeline per split with zero
+    * Spark join operators. The other side is always a plain scan on the
+    * same connection. Every stage runs the same body over a LEFT VIEW:
+    * stage 0's is this scan (doc fields through `column_mapping`, this
+    * side's options), a chained stage's is the joined output (previous
+    * output names, each column's ORIGIN side's options).
+    *
+    * Rules that depend on the stage's role: a RIGHT OUTER join mirrors
+    * (the right relation drives the pipeline and the join is LEFT OUTER
+    * from its perspective) only at stage 0 — a chained stage would have
+    * to re-drive the pipeline; the driving side's `$unwind` and
+    * computed columns ride stage 0 only, and a chained lookup side
+    * refuses computed columns; a chained left operand refuses string
+    * ranges (its doc field, which `ascii_columns` names, is not known).
+    */
   override def pushDownJoin(other: SupportsPushDownJoin,
       joinType: org.apache.spark.sql.connector.join.JoinType,
       leftReq: Array[SupportsPushDownJoin.ColumnWithAlias],
@@ -850,11 +862,10 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     // the other side must be a PLAIN scan (its own join would need
     // whole-pipeline merging); an already-joined THIS side chains
     if (o.joined.isDefined) return false
-    if (joined.isDefined) return pushChainJoin(o, joinType, leftReq, rightReq, condition)
+    val chained = joined.isDefined
+    if (chained && !chainableForJoin) return false
     val leftOuter = joinType == V2JoinType.LEFT_OUTER_JOIN
-    // RIGHT OUTER mirrors: the RIGHT relation drives the pipeline and
-    // the join becomes a LEFT OUTER from its perspective
-    val mirrored = joinType == V2JoinType.RIGHT_OUTER_JOIN
+    val mirrored = !chained && joinType == V2JoinType.RIGHT_OUTER_JOIN
     if (joinType != V2JoinType.INNER_JOIN && !leftOuter && !mirrored)
       return false
     // an unwound scan composes only as the DRIVING side — under a
@@ -865,19 +876,24 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     // right-outer join — no transpose involved, the plan is exact)
     if (unwind.isDefined && mirrored) return false
     if (o.unwind.isDefined && !mirrored) return false
+    if (chained && o.cols.computed.nonEmpty) return false
+    // (source, output name, type) per requested column: the source is
+    // the DOCUMENT field the pipeline addresses (remapped), or for a
+    // chained left view the previous output name
     def proj(req: Array[SupportsPushDownJoin.ColumnWithAlias],
         schema: StructType, m: Map[String, String]):
         Option[Seq[(String, String, org.apache.spark.sql.types.DataType)]] = {
       val items = req.toSeq.map { c =>
         schema.fields.find(_.name == c.colName())
-          // _1 is the DOCUMENT field the pipeline addresses — remapped
           .map(f => (m.getOrElse(f.name, f.name),
             Option(c.alias()).getOrElse(f.name), f.dataType))
       }
       if (items.contains(None)) None else Some(items.flatten)
     }
-    (proj(leftReq, tableSchema, mapping),
-        proj(rightReq, o.joinSchema, o.joinMapping)) match {
+    val leftView =
+      if (chained) proj(leftReq, joinedSchema, Map.empty)
+      else proj(leftReq, tableSchema, mapping)
+    (leftView, proj(rightReq, o.joinSchema, o.joinMapping)) match {
       case (Some(lp), Some(rp)) =>
         val leftOut = lp.map(p => p._2 -> p._3).toMap
         val rightOut = rp.map(p => p._2 -> p._3).toMap
@@ -888,219 +904,84 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
         // SILENT) — refuse the join rather than corrupt that column
         if (leftOut.contains(QueryDocs.JoinedField) ||
             rightOut.contains(QueryDocs.JoinedField)) return false
+        def pairs(p: Seq[(String, String, org.apache.spark.sql.types.DataType)]) =
+          p.map(t => (t._1, t._2))
+        // a left source's read options: its ORIGIN side's for a chained view
+        def sourceOpts(src: String): Map[String, String] =
+          if (chained) joinedColOpts.getOrElse(src, options) else options
+        // a left operand's options — a nested ref by its HEAD column
+        def leftOpts(out: String): Map[String, String] = lp.collectFirst {
+          case (src, name, _) if name == out.split('.').head => sourceOpts(src)
+        }.getOrElse(options)
+        // string range admission needs the operand's DOC field (the
+        // ascii_columns declaration names stored paths)
+        def docField(p: Seq[(String, String, org.apache.spark.sql.types.DataType)],
+            out: String): Option[String] =
+          scala.util.Try(LookupJoin.fieldOf(pairs(p), out)).toOption
         orientCond(condition, lp, rp) match {
           case Some((refs, rngRefs)) if refs.forall { case (l, r) =>
-              joinKeySafe(l.dataType, options) &&
+              joinKeySafe(l.dataType, leftOpts(l.name)) &&
                 joinKeySafe(r.dataType, o.joinOptions) } &&
               rngRefs.forall { case (l, _, r) =>
-                // string admission needs the operand's DOC field (the
-                // ascii_columns declaration names stored paths)
-                rangeKeySafe(l.dataType, options, scala.util.Try(
-                  LookupJoin.fieldOf(lp.map(p => (p._1, p._2)), l.name)).toOption) &&
-                  rangeKeySafe(r.dataType, o.joinOptions, scala.util.Try(
-                    LookupJoin.fieldOf(rp.map(p => (p._1, p._2)), r.name)).toOption) } =>
+                rangeKeySafe(l.dataType, leftOpts(l.name),
+                  if (chained) None else docField(lp, l.name)) &&
+                  rangeKeySafe(r.dataType, o.joinOptions, docField(rp, r.name)) } =>
+            // roles: the driving builder feeds the pipeline, the lookup
+            // builder is the stage's right side
+            val (driving, lookup) = if (mirrored) (o, this) else (this, o)
+            val (drivingProj, lookupProj) = if (mirrored) (rp, lp) else (lp, rp)
             // carried TABLESAMPLEs: re-key onto the joined OUTPUT names
             // where keyed sampling commutes with the $lookup; the
             // LOOKUP side's sample cannot commute under an outer join
-            // (its null-extended rows must stay). A key Spark did not
-            // request is carried as a HIDDEN extra projection — the
-            // pipeline projects it, the reader checks the window on it,
-            // and the row decode (by visible schema) drops it.
-            val effOuter = leftOuter || mirrored
-            val drivingSp = if (mirrored) o.sample else sample
-            val lookupSp = if (mirrored) sample else o.sample
-            if (lookupSp.isDefined && effOuter) return false
+            // (its null-extended rows must stay). A key the stage's
+            // projection lacks is carried as a HIDDEN extra projection
+            // under a fresh `__sampleN` alias — the pipeline projects
+            // it, the reader checks the window on it, and the row decode
+            // (by visible schema) drops it.
+            val drivingSamples = if (chained) joinSamples else driving.sample.toSeq
+            if (lookup.sample.isDefined && (leftOuter || mirrored)) return false
             val taken = scala.collection.mutable.Set[String](
               (lp ++ rp).map(_._2): _*) += QueryDocs.JoinedField
-            def hiddenAlias(): String = {
-              var i = 0
-              while (taken.contains(s"__sample$i")) i += 1
-              val a = s"__sample$i"; taken += a; a
-            }
-            // (rekeyed window, extra projection tuple for that side);
-            // keyType is the key's RESOLVED Spark type from its origin
-            // builder's pushTableSample — hidden extras are excluded
-            // from join.output so decode never reads it, but the
-            // projection tuple carries the true type for any later
-            // type-consulting gate
+            // (re-keyed window, hidden (source, alias) extra)
             def rekey(sp: SamplePush,
-                proj: Seq[(String, String, org.apache.spark.sql.types.DataType)],
-                keyType: org.apache.spark.sql.types.DataType):
-                (SamplePush,
-                  Option[(String, String, org.apache.spark.sql.types.DataType)]) =
-              proj.find(_._1 == sp.key) match {
+                p: Seq[(String, String, org.apache.spark.sql.types.DataType)]):
+                (SamplePush, Option[(String, String)]) =
+              p.find(_._1 == sp.key) match {
                 case Some(t) => (sp.copy(key = t._2), None)
                 case None =>
-                  val a = hiddenAlias()
-                  (sp.copy(key = a), Some((sp.key, a, keyType)))
+                  val a = Iterator.from(0).map(i => s"__sample$i").filterNot(taken).next()
+                  taken += a
+                  (sp.copy(key = a), Some((sp.key, a)))
               }
-            val drivingRk = drivingSp.map(sp => rekey(sp,
-              if (mirrored) rp else lp,
-              if (mirrored) o.sampleKeyType else sampleKeyType))
-            val lookupRk = lookupSp.map(sp => rekey(sp,
-              if (mirrored) lp else rp,
-              if (mirrored) sampleKeyType else o.sampleKeyType))
-            joinSamples = (drivingRk.map(_._1) ++ lookupRk.map(_._1)).toSeq
-            // hidden extras attach to their side's PROJECTION, never to
-            // the visible output
-            val (exL, exR) =
-              if (mirrored) (lookupRk.flatMap(_._2).toSeq, drivingRk.flatMap(_._2).toSeq)
-              else (drivingRk.flatMap(_._2).toSeq, lookupRk.flatMap(_._2).toSeq)
-            val lpFull = lp ++ exL
-            val rpFull = rp ++ exR
-            val keys = refs.map { case (l, r) => (l.name, r.name) }
-            val output = (lp ++ rp).map(p => (p._2, p._3))
-            if (mirrored) {
-              // drive from the RIGHT side; THIS side becomes the lookup.
-              // A driving-side unwind (the user unwound the right
-              // relation before the right-outer join) rides the
-              // pipeline with ITS pre-unwind parent prune. Ranges swap
-              // sides and FLIP: `l < r` becomes `r > l` from the
-              // mirrored pipeline's perspective.
-              joined = Some(ServerJoin(rpFull,
-                GraftServerSource.ns(options), builderQuery,
-                lpFull, keys.map(_.swap), leftOuter = true, output,
-                unwind = o.unwind, unwindPost = o.unwindPost,
-                ranges = rngRefs.map { case (l, op, r) =>
-                  LookupJoin.RangeKey(r.name, flipOp(op), l.name) },
-                leftComputed = o.cols.computed, rightComputed = cols.computed))
-              joinDriving = Some((o.joinOptions, o.scanQuery))
-            } else {
-              joined = Some(ServerJoin(lpFull,
-                GraftServerSource.ns(o.joinOptions), o.builderQuery,
-                rpFull, keys, leftOuter, output,
-                unwind = unwind, unwindPost = unwindPost,
-                ranges = rngRefs.map { case (l, op, r) =>
-                  LookupJoin.RangeKey(l.name, op, r.name) },
-                leftComputed = cols.computed, rightComputed = o.cols.computed))
-            }
-            joinedColOpts = lp.map(p => p._2 -> options).toMap ++
+            val drivingRk = drivingSamples.map(rekey(_, drivingProj))
+            val lookupRk = lookup.sample.map(rekey(_, lookupProj)).toSeq
+            joinSamples = (drivingRk ++ lookupRk).map(_._1)
+            // a mirrored stage swaps the key sides and FLIPS the range
+            // ops: `l < r` becomes `r > l` from the driving perspective
+            val keys = refs.map { case (l, r) =>
+              if (mirrored) (r.name, l.name) else (l.name, r.name) }
+            val ranges = rngRefs.map { case (l, op, r) =>
+              if (mirrored) LookupJoin.RangeKey(r.name, flipOp(op), l.name)
+              else LookupJoin.RangeKey(l.name, op, r.name) }
+            val stage = LookupStage(
+              pairs(drivingProj) ++ drivingRk.flatMap(_._2),
+              GraftServerSource.ns(lookup.joinOptions), lookup.builderQuery,
+              pairs(lookupProj) ++ lookupRk.flatMap(_._2),
+              keys, leftOuter || mirrored, ranges, lookup.cols.computed)
+            // stage 0 carries the driving side: its full query (with the
+            // pre-unwind PARENT prune, exactly as on the plain unwound
+            // scan), its unwind and its computed columns
+            joined = Some(joined match {
+              case Some(j) => j.copy(stages = j.stages :+ stage)
+              case None => LookupJoin(driving.scanQuery, Seq(stage),
+                unwind = driving.unwind, unwindPost = driving.unwindPost,
+                leftComputed = driving.cols.computed)
+            })
+            if (mirrored) drivingOpts = o.joinOptions
+            joinedSchema = StructType((lp ++ rp).map(p =>
+              org.apache.spark.sql.types.StructField(p._2, p._3)))
+            joinedColOpts = lp.map(p => p._2 -> sourceOpts(p._1)).toMap ++
               rp.map(p => p._2 -> o.joinOptions).toMap
-            true
-          case _ => false
-        }
-      case _ => false
-    }
-  }
-
-  /** CHAIN a second (third, ...) `$lookup` above an already-pushed join:
-    * the new stage re-projects the previous join's flattened outputs to
-    * the requested aliases, joins the other (plain, same-connection)
-    * collection, and the whole 3-way+ star query stays ONE pipeline per
-    * split — zero Spark join operators. INNER / LEFT OUTER only (a
-    * mirrored chain would have to re-drive the pipeline from the new
-    * side); key safety gates use each key column's ORIGIN-side options.
-    */
-  private def pushChainJoin(o: GraftServerScanBuilder,
-      joinType: org.apache.spark.sql.connector.join.JoinType,
-      leftReq: Array[SupportsPushDownJoin.ColumnWithAlias],
-      rightReq: Array[SupportsPushDownJoin.ColumnWithAlias],
-      condition: org.apache.spark.sql.connector.expressions.filter.Predicate): Boolean = {
-    import org.apache.spark.sql.connector.join.{JoinType => V2JoinType}
-    val j = joined.get
-    if (joinedAgg.isDefined || joinLimit.isDefined || joinTopN.isDefined)
-      return false
-    val leftOuter = joinType == V2JoinType.LEFT_OUTER_JOIN
-    if (joinType != V2JoinType.INNER_JOIN && !leftOuter) return false
-    // a chain stage's other side is always the LOOKUP leg — its unwind
-    // never composes (element rows are not parent-atomic there), and a
-    // chained COMPUTED side refuses too (r17: the chain renderer has no
-    // $set slot; the base pipeline keeps its own computed columns)
-    if (o.unwind.isDefined || o.cols.computed.nonEmpty) return false
-    val joinedOut: Map[String, org.apache.spark.sql.types.DataType] = j.output.toMap
-    // (previous OUTPUT name, new alias, type) over the joined output
-    val lpO: Option[Seq[(String, String, org.apache.spark.sql.types.DataType)]] = {
-      val items = leftReq.toSeq.map { c =>
-        joinedOut.get(c.colName()).map(dt =>
-          (c.colName(), Option(c.alias()).getOrElse(c.colName()), dt))
-      }
-      if (items.contains(None)) None else Some(items.flatten)
-    }
-    val rpO: Option[Seq[(String, String, org.apache.spark.sql.types.DataType)]] = {
-      val items = rightReq.toSeq.map { c =>
-        o.joinSchema.fields.find(_.name == c.colName())
-          .map(f => (o.joinMapping.getOrElse(f.name, f.name),
-            Option(c.alias()).getOrElse(f.name), f.dataType))
-      }
-      if (items.contains(None)) None else Some(items.flatten)
-    }
-    (lpO, rpO) match {
-      case (Some(lp), Some(rp)) =>
-        val leftOut = lp.map(p => p._2 -> p._3).toMap
-        val rightOut = rp.map(p => p._2 -> p._3).toMap
-        if (leftOut.keySet.intersect(rightOut.keySet).nonEmpty) return false
-        if (leftOut.contains(QueryDocs.JoinedField) ||
-            rightOut.contains(QueryDocs.JoinedField)) return false
-        orientCond(condition, lp, rp) match {
-          // r18: a chained stage carries its own RANGE conjuncts — the
-          // per-stage `$expr` rendering is the base join's; safety gates
-          // resolve each LEFT operand to its ORIGIN side's options (a
-          // nested ref by its HEAD column), the right side to the
-          // chained collection's
-          case Some((refs, rngRefs)) if refs.forall { case (l, r) =>
-              // a nested key's safety is its HEAD column's origin side
-              val srcOpts = lp.collectFirst {
-                case (src, out, _) if out == l.name.split('.').head =>
-                  joinedColOpts.getOrElse(src, options) }.getOrElse(options)
-              joinKeySafe(l.dataType, srcOpts) &&
-                joinKeySafe(r.dataType, o.joinOptions) } &&
-              rngRefs.forall { case (l, _, r) =>
-                val srcOpts = lp.collectFirst {
-                  case (src, out, _) if out == l.name.split('.').head =>
-                    joinedColOpts.getOrElse(src, options) }.getOrElse(options)
-                rangeKeySafe(l.dataType, srcOpts) &&
-                  rangeKeySafe(r.dataType, o.joinOptions) } =>
-            // remap carried sample keys through the chain's re-projection
-            // (prev output -> new alias); a key the new projection
-            // DROPPED rides as a HIDDEN extra instead (r15) — appended
-            // to the stage's flatten-project under a fresh __sampleN
-            // alias the visible output never sees, exactly like the
-            // base join's hidden carry — so a sampled 3-way chain keeps
-            // the whole pushed pipeline
-            val chainTaken = scala.collection.mutable.Set[String](
-              (lp ++ rp).map(_._2): _*) += QueryDocs.JoinedField
-            def chainHiddenAlias(): String = {
-              var i = 0
-              while (chainTaken.contains(s"__sample$i")) i += 1
-              val a = s"__sample$i"; chainTaken += a; a
-            }
-            val renames = lp.map(t => (t._1, t._2)).toMap
-            // (rekeyed window, hidden flatten-project pair)
-            val remapped: Seq[(SamplePush, Option[(String, String)])] =
-              joinSamples.map { sp =>
-                renames.get(sp.key) match {
-                  case Some(n) => (sp.copy(key = n), None)
-                  case None =>
-                    val a = chainHiddenAlias()
-                    (sp.copy(key = a), Some((sp.key, a)))
-                }
-              }
-            // the chained collection's own sample: lookup side of this
-            // stage — INNER only; an unprojected key rides hidden too
-            if (o.sample.isDefined && leftOuter) return false
-            val oSample: Option[(SamplePush, Option[(String, String)])] =
-              o.sample.map { sp =>
-                rp.find(_._1 == sp.key) match {
-                  case Some(t) => (sp.copy(key = t._2), None)
-                  case None =>
-                    val a = chainHiddenAlias()
-                    (sp.copy(key = a), Some((sp.key, a)))
-                }
-              }
-            joinSamples = remapped.map(_._1) ++ oSample.map(_._1)
-            val keys = refs.map { case (l, r) => (l.name, r.name) }
-            val stage = ChainStage(
-              lp.map(p => (p._1, p._2)) ++ remapped.flatMap(_._2),
-              GraftServerSource.ns(o.joinOptions), o.builderQuery,
-              rp.map(p => (p._1, p._2)) ++ oSample.flatMap(_._2).toSeq,
-              keys, leftOuter,
-              ranges = rngRefs.map { case (l, op, r) =>
-                LookupJoin.RangeKey(l.name, op, r.name) })
-            joined = Some(j.copy(chain = j.chain :+ stage,
-              output = (lp ++ rp).map(p => (p._2, p._3))))
-            joinedColOpts =
-              lp.map(p => p._2 -> joinedColOpts.getOrElse(p._1, options)).toMap ++
-                rp.map(p => p._2 -> o.joinOptions).toMap
             true
           case _ => false
         }
@@ -1110,12 +991,11 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
 
   override def build(): Scan = joined match {
     case Some(j) =>
-      // non-mirrored driving side: the pre-unwind PARENT prune (derived
-      // from the post-unwind element match) rides the pipeline's first
-      // $match, exactly as on the plain unwound scan (True without one)
-      val (drivingOpts, drivingQuery) = joinDriving.getOrElse((options, scanQuery))
-      new GraftServerJoinScan(j, drivingQuery, drivingOpts, joinedAgg, joinLimit,
-        joinTopN.map { case (s, n) => (s, n.toLong) }, joinSamples, joinOffset)
+      new GraftServerJoinScan(
+        j.copy(group = joinedAgg.map(g => (g.groupCols.map(_._1), g.items.map(_._1))),
+          limit = joinLimit, topN = joinTopN.map { case (s, n) => (s, n.toLong) },
+          skip = joinOffset),
+        joinedSchema, drivingOpts, joinedAgg, joinSamples)
     case None =>
       new GraftServerScan(required, scanQuery, limit, options, aggPushed, topN,
         groupedAgg, offset, sample,
@@ -1156,70 +1036,6 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   }
 }
 
-/** A pushed equi-join, held by the LEFT (driving) builder after
-  * [[GraftServerScanBuilder.pushDownJoin]]: both sides' projections as
-  * (doc field, output name, Spark type) in output order — the joined
-  * read schema IS leftProject ++ rightProject — the right side's
-  * namespace and fully-pushed query, the key pairs as OUTPUT names, and
-  * the flavor.
-  */
-final case class ServerJoin(
-    leftProject: Seq[(String, String, org.apache.spark.sql.types.DataType)],
-    rightNs: String,
-    rightQuery: BQuery,
-    rightProject: Seq[(String, String, org.apache.spark.sql.types.DataType)],
-    keys: Seq[(String, String)],
-    leftOuter: Boolean,
-    /** The VISIBLE read schema in Spark's expected column order — for a
-      * RIGHT OUTER join the driving orientation is MIRRORED (the right
-      * relation drives the pipeline) while Spark still expects the
-      * original left++right column order; rows are flat by output name,
-      * so order is presentation only. */
-    output: Seq[(String, org.apache.spark.sql.types.DataType)],
-    /** CHAINED lookup stages above the base join (3-way+ star queries) —
-      * each flatten-projects the previous output and joins one more
-      * same-server collection; the whole chain is ONE pipeline. */
-    chain: Seq[ChainStage] = Nil,
-    /** DRIVING-side `$unwind` (r15): `explode(driving.arr)` composed
-      * with the pushed join — per-element rows feed the `$lookup`, all
-      * one pipeline. The element column rides `leftProject` (its doc
-      * field is the unwound path, which post-unwind holds the element).
-      * `unwindPost` = the pushed post-unwind element `$match`. Only the
-      * DRIVING side may unwind (lookup-side element rows are not
-      * parent-atomic across the join; mirrored joins refuse). */
-    unwind: Option[Unwind] = None,
-    unwindPost: BQuery = BQuery.True,
-    /** RANGE conjuncts of the join condition (r17): `leftOut OP
-      * rightOut` rendered into the `$lookup` `$expr` — the binned
-      * interval / as-of shape. Gated on `assume_uniform_storage` and
-      * orderable types on BOTH sides (rangeKeySafe); chained stages
-      * carry their own per-stage ranges since r18 ([[ChainStage]]). */
-    ranges: Seq[LookupJoin.RangeKey] = Nil,
-    /** DERIVED columns of each side (r17, `computed_columns` —
-      * [[graft.query.ComputedCol]]): `$set`-materialized in the
-      * pipeline so derived bin keys join without Spark ever computing
-      * them. Base join only (chained stages refuse computed sides). */
-    leftComputed: Seq[graft.query.ComputedCol] = Nil,
-    rightComputed: Seq[graft.query.ComputedCol] = Nil) {
-  def schema: StructType = StructType(
-    output.map { case (o, t) => org.apache.spark.sql.types.StructField(o, t) })
-  /** right OUTPUT name -> right doc field (nested outputs resolve by
-    * head, [[LookupJoin.fieldOf]]). */
-  def rightField(out: String): String =
-    LookupJoin.fieldOf(rightProject.map(p => (p._1, p._2)), out)
-  /** left OUTPUT name -> left doc field. */
-  def leftField(out: String): String =
-    LookupJoin.fieldOf(leftProject.map(p => (p._1, p._2)), out)
-  override def toString: String =
-    s"${if (leftOuter) "LEFT OUTER" else "INNER"} $rightNs ON " +
-      (keys.map { case (l, r) => s"$l = $r" } ++
-        ranges.map(_.toString)).mkString(" AND ") +
-      chain.map(st =>
-        s" THEN ${if (st.leftOuter) "LEFT OUTER" else "INNER"} ${st.rightNs} ON " +
-          (st.keys.map { case (l, r) => s"$l = $r" } ++
-            st.ranges.map(_.toString)).mkString(" AND ")).mkString
-}
-
 /** The joined scan: one `$lookup`+`$unwind` pipeline per split of the
   * DRIVING collection ([[ServerClient.lookupJoin]]) — the join itself
   * never reaches Spark, no shuffle, no broadcast; only joined rows
@@ -1232,45 +1048,41 @@ final case class ServerJoin(
   * server-side hash/index lookup makes against shipping both
   * collections through a Spark exchange.
   */
-final class GraftServerJoinScan(join: ServerJoin, leftQuery: BQuery,
+final class GraftServerJoinScan(join: LookupJoin, schema: StructType,
     options: Map[String, String],
     grouped: Option[GroupedAgg] = None,
-    joinLimit: Option[Long] = None,
-    joinTopN: Option[(Seq[(String, Boolean)], Long)] = None,
-    samples: Seq[SamplePush] = Nil,
-    joinOffset: Option[Long] = None)
+    samples: Seq[SamplePush] = Nil)
     extends Scan with Batch with SupportsReportStatistics {
 
-  override def readSchema(): StructType =
-    grouped.map(_.schema).getOrElse(join.schema)
+  override def readSchema(): StructType = grouped.map(_.schema).getOrElse(schema)
   override def toBatch: Batch = this
 
   override def description(): String =
-    s"graftserver ns=${options.getOrElse("ns", "?")} query=$leftQuery" +
+    s"graftserver ns=${options.getOrElse("ns", "?")} query=${join.leftQuery}" +
       locally {
-        val cc = join.leftComputed ++ join.rightComputed
+        val cc = join.leftComputed ++ join.stages.flatMap(_.rightComputed)
         if (cc.isEmpty) ""
         else s" PushedComputed: [${cc.map(_.describe).mkString(", ")}]"
       } +
       join.unwind.map(u => " " + u.describe(join.unwindPost)).getOrElse("") +
-      s" PushedJoin: $join" +
+      s" PushedJoin: ${join.stages.mkString(" THEN ")}" +
       grouped.map(g => s" PushedGroupedAggregate: $g").getOrElse("") +
-      joinLimit.map(n => s" PushedLimit: $n").getOrElse("") +
-      joinTopN.map { case (spec, n) =>
+      join.limit.map(n => s" PushedLimit: $n").getOrElse("") +
+      join.topN.map { case (spec, n) =>
         val order = spec.map { case (c, d) =>
           s"$c ${if (d) "DESC" else "ASC"}" }.mkString(", ")
         s" PushedTopN: ORDER BY $order LIMIT $n"
       }.getOrElse("") +
       (if (samples.isEmpty) ""
        else s" PushedSample: ${samples.mkString(", ")}") +
-      joinOffset.map(n => s" PushedOffset: $n").getOrElse("")
+      join.skip.map(n => s" PushedOffset: $n").getOrElse("")
 
   /** All sides' collStats — the joined size estimate is conservative
     * (inner joins usually shrink), but keeps a small joined scan
     * broadcast-able in an OUTER Spark join above it. */
   override def estimateStatistics(): Statistics = new Statistics {
     private lazy val bytes = GraftServerSource.withClient(options) { (client, ns) =>
-      (ns +: join.rightNs +: join.chain.map(_.rightNs))
+      (ns +: join.stages.map(_.rightNs))
         .map { n => val s = client.collStats(n); s.count * s.avgObjSizeBytes }
         .sum
     }
@@ -1300,36 +1112,29 @@ final class GraftServerJoinScan(join: ServerJoin, leftQuery: BQuery,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftServerJoinReaderFactory(join, leftQuery, options, grouped,
-      joinLimit, joinTopN, samples, joinOffset)
+    new GraftServerJoinReaderFactory(join, readSchema(), options, grouped, samples)
 }
 
-final class GraftServerJoinReaderFactory(join: ServerJoin, leftQuery: BQuery,
+final class GraftServerJoinReaderFactory(join: LookupJoin, schema: StructType,
     options: Map[String, String],
-    grouped: Option[GroupedAgg] = None,
-    joinLimit: Option[Long] = None,
-    joinTopN: Option[(Seq[(String, Boolean)], Long)] = None,
-    samples: Seq[SamplePush] = Nil,
-    joinOffset: Option[Long] = None)
+    grouped: Option[GroupedAgg],
+    samples: Seq[SamplePush])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new GraftServerJoinReader(p.asInstanceOf[GraftServerPartition], join,
-      leftQuery, options, grouped, joinLimit, joinTopN, samples, joinOffset)
+      schema, options, grouped, samples)
 }
 
 /** One `$lookup` pipeline for this split's driving range. Null/missing
   * join keys are filtered where equi-join semantics require it: the
-  * LOOKUP side always (a null right key must never match), the driving
-  * side only under INNER (a LEFT OUTER keeps those rows, and a null
-  * driving key looks up nothing either way).
+  * LOOKUP side of every stage always (a null right key must never
+  * match), the driving side only under an INNER stage 0 (a LEFT OUTER
+  * keeps those rows, and a null driving key looks up nothing either
+  * way).
   */
-final class GraftServerJoinReader(p: GraftServerPartition, join: ServerJoin,
-    leftQuery: BQuery, options: Map[String, String],
-    grouped: Option[GroupedAgg] = None,
-    joinLimit: Option[Long] = None,
-    joinTopN: Option[(Seq[(String, Boolean)], Long)] = None,
-    samples: Seq[SamplePush] = Nil,
-    joinOffset: Option[Long] = None)
+final class GraftServerJoinReader(p: GraftServerPartition, join: LookupJoin,
+    schema: StructType, options: Map[String, String],
+    grouped: Option[GroupedAgg], samples: Seq[SamplePush])
     extends PartitionReader[InternalRow] {
 
   private val client = GraftServerSource.factory(options).create(options)
@@ -1338,11 +1143,8 @@ final class GraftServerJoinReader(p: GraftServerPartition, join: ServerJoin,
   // equivalent `{$ne: null}` on the wire (QueryDocs.render)
   private def nonNull(field: String): BQuery = BQuery.Exists(field, yes = true)
 
-  private val rightWithKeys: BQuery =
-    (join.keys.map(_._2) ++ join.ranges.map(_.rightOut))
-      .foldLeft(join.rightQuery) { case (acc, ro) =>
-        BQuery.and(acc, nonNull(join.rightField(ro)))
-      }
+  private val base = join.stages.head
+
   /** A driving key whose doc field sits AT/UNDER the unwound path (or is
     * the injected pos field, or a MAP unwind's synthetic kv entry)
     * exists only POST-unwind — its INNER non-null prune joins the
@@ -1358,78 +1160,59 @@ final class GraftServerJoinReader(p: GraftServerPartition, join: ServerJoin,
   // computed key still never joins (the $expr $eq against a non-null-
   // pruned right side is false; ranges carry their own null guard)
   private def leftOperandOuts: Seq[String] =
-    join.keys.map(_._1) ++ join.ranges.map(_.leftOut)
+    base.keys.map(_._1) ++ base.ranges.map(_.leftOut)
   private def computedLeftField(f: String): Boolean =
     join.leftComputed.exists(_.out == f)
   private val leftFull: BQuery = {
-    val base = BQuery.and(p.range, leftQuery)
-    if (join.leftOuter) base
-    else leftOperandOuts.foldLeft(base) { case (acc, lo) =>
+    val q = BQuery.and(p.range, join.leftQuery)
+    if (base.leftOuter) q
+    else leftOperandOuts.foldLeft(q) { case (acc, lo) =>
       val f = join.leftField(lo)
       if (elementScopedField(f) || computedLeftField(f)) acc
       else BQuery.and(acc, nonNull(f))
     }
   }
   private val postFull: BQuery =
-    if (join.leftOuter) join.unwindPost
+    if (base.leftOuter) join.unwindPost
     else leftOperandOuts.foldLeft(join.unwindPost) { case (acc, lo) =>
       val f = join.leftField(lo)
       if (computedLeftField(f)) acc
       else if (elementScopedField(f)) BQuery.and(acc, nonNull(f)) else acc
     }
 
-  /** Each CHAIN stage's lookup side also filters null/missing keys —
-    * `$expr` `$eq` would otherwise match a null driving key against a
-    * null-keyed right doc (equi-join semantics forbid it) — and (r18)
-    * null/missing RANGE operands, whose BSON-total-order comparison
-    * would otherwise match against the per-var guard's surviving side
-    * (the base join's `rightWithKeys` discipline, stage-local here;
-    * the driving side's null operands fail the rendered `$gt: [$$rN,
+  /** Every stage's lookup side filters null/missing keys — `$expr`
+    * `$eq` would otherwise match a null driving key against a
+    * null-keyed right doc (equi-join semantics forbid it) — and null/
+    * missing RANGE operands, whose BSON-total-order comparison would
+    * otherwise match against the per-var guard's surviving side (the
+    * driving side's null operands fail the rendered `$gt: [$$rN,
     * null]` guard — INNER drops, LEFT OUTER null-extends, both Spark's
     * null-comparison behavior). */
-  private val chainWithKeys: Seq[ChainStage] = join.chain.map { st =>
-    st.copy(rightQuery =
-      (st.keys.map(_._2) ++ st.ranges.map(_.rightOut))
-        .foldLeft(st.rightQuery) { case (acc, ro) =>
-          BQuery.and(acc, nonNull(LookupJoin.fieldOf(st.rightProject, ro)))
-        })
+  private val stagesWithKeys: Seq[LookupStage] = join.stages.map { st =>
+    st.copy(rightQuery = (st.keys.map(_._2) ++ st.ranges.map(_.rightOut))
+      .foldLeft(st.rightQuery) { case (acc, ro) => BQuery.and(acc, nonNull(st.rightField(ro))) })
   }
 
   // posexplode over a join: the pos OUTPUT field of each joined doc
   // narrows to the pos column's int32 before decode
   private val posOutName: Option[String] = join.unwind.flatMap(u =>
-    u.posField.flatMap(pf => join.leftProject.collectFirst {
-      case (f, o, _) if f == pf => o }))
+    u.posField.flatMap(pf => base.leftProject.collectFirst {
+      case (f, o) if f == pf => o }))
 
   private val cursor: Iterator[BDoc] = {
-    val raw0 = client.lookupJoin(p.ns, LookupJoin(
-      leftFull,
-      join.leftProject.map { case (f, o, _) => (f, o) },
-      join.rightNs,
-      rightWithKeys,
-      join.rightProject.map { case (f, o, _) => (f, o) },
-      join.keys, join.leftOuter,
-      chain = chainWithKeys,
-      group = grouped.map(g => (g.groupCols.map(_._1), g.items.map(_._1))),
-      limit = joinLimit,
-      topN = joinTopN,
-      skip = joinOffset,
-      unwind = join.unwind,
-      unwindPost = postFull,
-      ranges = join.ranges,
-      leftComputed = join.leftComputed,
-      rightComputed = join.rightComputed))
+    val raw0 = client.lookupJoin(p.ns, join.copy(leftQuery = leftFull,
+      stages = stagesWithKeys, unwindPost = postFull))
     val raw = posOutName.fold(raw0)(o => raw0.map(Unwind.narrowPos(_, o)))
     // carried TABLESAMPLE windows, re-keyed to joined OUTPUT names by
     // the builder: keyed sampling commutes with the $lookup, so keeping
     // joined rows by the sampled side's key window equals sampling that
     // side before the join (MQL has no md5 — the window is evaluated
     // here, exactly like the plain scan's sample)
-    val base =
+    val kept =
       if (samples.isEmpty) raw
       else raw.filter(d => samples.forall(_.keep(d)))
     grouped match {
-      case Some(g) if g.groupCols.isEmpty && !base.hasNext =>
+      case Some(g) if g.groupCols.isEmpty && !kept.hasNext =>
         // GLOBAL aggregate over a join that matched nothing: $group
         // emits no doc, but Spark's final fold rewrites COUNT(*) as a
         // SUM of partials — zero partials would fold to NULL instead
@@ -1439,11 +1222,10 @@ final class GraftServerJoinReader(p: GraftServerPartition, join: ServerJoin,
           case (GroupAgg.CountCol(_, a), _) => a -> (BInt64(0L): BsonValue)
           case (other, _) => other.alias -> (BNull: BsonValue)
         }): _*))
-      case _ => base
+      case _ => kept
     }
   }
 
-  private val schema = grouped.map(_.schema).getOrElse(join.schema)
   private var row: InternalRow = _
 
   override def next(): Boolean =
@@ -1452,10 +1234,7 @@ final class GraftServerJoinReader(p: GraftServerPartition, join: ServerJoin,
 
   override def get(): InternalRow = row
 
-  override def close(): Unit = client match {
-    case c: AutoCloseable => c.close()
-    case _ => ()
-  }
+  override def close(): Unit = client.close()
 }
 
 object GraftServerScanBuilder {
@@ -1893,10 +1672,7 @@ final class ServerGroupedAggReader(options: Map[String, String],
 
   override def get(): InternalRow = row
 
-  override def close(): Unit = client match {
-    case c: AutoCloseable => c.close()
-    case _ => ()
-  }
+  override def close(): Unit = client.close()
 }
 
 /** The pushed-aggregate reader: COUNT(*) from one collStats call (what
@@ -1986,10 +1762,7 @@ final class ServerAggReader(options: Map[String, String],
 
   override def get(): InternalRow = row
 
-  override def close(): Unit = client match {
-    case c: AutoCloseable => c.close()
-    case _ => ()
-  }
+  override def close(): Unit = client.close()
 }
 
 /** Holds exactly one server cursor for its split — the executor-side
@@ -2177,10 +1950,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
 
   override def get(): InternalRow = row
 
-  override def close(): Unit = client match {
-    case c: AutoCloseable => c.close()
-    case _ => ()
-  }
+  override def close(): Unit = client.close()
 }
 
 // ---- write path ----
@@ -2298,8 +2068,5 @@ final class GraftServerDataWriter(partitionId: Int, writeSchema: StructType,
 
   override def abort(): Unit = ()
 
-  override def close(): Unit = client match {
-    case c: AutoCloseable => c.close()
-    case _ => ()
-  }
+  override def close(): Unit = client.close()
 }

@@ -47,7 +47,7 @@ import java.lang.reflect.{InvocationTargetException, Method}
   * [[Find]] evaluation.
   */
 final class MongoDriverClient(uri: String, allowDiskUse: Boolean = false)
-    extends ServerClient with AutoCloseable {
+    extends ServerClient {
   import MongoDriverClient.Rf
 
   private val client = Rf.createClient(uri)
@@ -248,56 +248,17 @@ final class MongoDriverClient(uri: String, allowDiskUse: Boolean = false)
     Rf.cursor(it)
   }
 
-  /** The `$lookup`+`$unwind` equi-join pipeline ([[QueryDocs
-    * .lookupStages]]), one aggregate() round-trip per call; the `__j`
-    * subdocument is flattened client-side per the
-    * [[ServerClient.lookupJoin]] contract. A KeyRange conjunct (a split
-    * range) renders bracket-style (`$gte`/`$lt`) into the `$match` —
-    * exact only over uniformly-stored keys, which the joined scan
-    * guarantees by gating range splits on `assume_uniform_storage`.
+  /** The `$lookup`+`$unwind` join pipeline
+    * ([[QueryDocs.lookupPipeline]]), one aggregate() round-trip per call
+    * however many stages it chains; the `__j` subdocument is flattened
+    * client-side per the [[ServerClient.lookupJoin]] contract. A
+    * KeyRange conjunct (a split range) renders bracket-style
+    * (`$gte`/`$lt`) into the `$match` — exact only over uniformly-stored
+    * keys, which the joined scan guarantees by gating range splits on
+    * `assume_uniform_storage`.
     */
   override def lookupJoin(ns: String, j: LookupJoin): Iterator[BDoc] = {
-    val coll = collection(ns)
-    val (db, _) = QueryDocs.nsParts(ns)
-    val (rdb, rcoll) = QueryDocs.nsParts(j.rightNs)
-    require(rdb == db, s"$$lookup joins within one database: $ns vs ${j.rightNs}")
-    val lp = QueryDocs.plan(j.leftQuery)
-    require(lp.isExact,
-      s"lookupJoin left query not fully server-renderable: ${j.leftQuery}")
-    val leftMatch = lp.keyBounds.flatMap { case (k, lo, hi) =>
-      QueryDocs.rangeMatchDoc(k, lo, hi)
-    } match {
-      case Some(r) => QueryDocs.andDocs(Seq(r, lp.serverQuery))
-      case None => lp.serverQuery
-    }
-    val rp = QueryDocs.plan(j.rightQuery)
-    require(rp.isExact && rp.keyBounds.isEmpty,
-      s"lookupJoin right query not fully server-renderable: ${j.rightQuery}")
-    // driving-side $unwind (r15): the post-unwind element $match must
-    // render fully (element rows are joined away — no re-check point)
-    val up = QueryDocs.plan(j.unwindPost)
-    require(up.isExact && up.keyBounds.isEmpty,
-      s"lookupJoin post-unwind query not fully server-renderable: ${j.unwindPost}")
-    var stages = QueryDocs.lookupStages(
-      leftMatch, j.leftProject, rcoll, rp.serverQuery, j.rightProject,
-      j.keys, j.leftOuter, unwind = j.unwind, unwindPostDoc = up.serverQuery,
-      ranges = j.ranges,
-      leftComputed = j.leftComputed, rightComputed = j.rightComputed)
-    var leftOuts = j.leftProject.map(_._2).toSet
-    // chained stages: flatten-project + lookup + unwind each, still ONE
-    // aggregate() round-trip for the whole 3-way+ pipeline
-    j.chain.foreach { st =>
-      val (cdb, ccoll) = QueryDocs.nsParts(st.rightNs)
-      require(cdb == db, s"$$lookup joins within one database: $ns vs ${st.rightNs}")
-      val cp = QueryDocs.plan(st.rightQuery)
-      require(cp.isExact && cp.keyBounds.isEmpty,
-        s"lookupJoin chained right query not fully server-renderable: ${st.rightQuery}")
-      stages ++= QueryDocs.chainStages(leftOuts, st.leftProject, ccoll,
-        cp.serverQuery, st.rightProject, st.keys, st.leftOuter, st.ranges)
-      leftOuts = st.leftProject.map(_._2).toSet
-    }
-    val it = Rf.aggregate(coll,
-      stages ++ QueryDocs.lookupTail(leftOuts, j.group, j.limit, j.topN, j.skip))
+    val it = Rf.aggregate(collection(ns), QueryDocs.lookupPipeline(ns, j))
     // a $lookup over a large right side can exceed the 100 MB stage cap
     if (allowDiskUse) Rf.allowDiskUse(it, b = true)
     j.group match {

@@ -530,11 +530,6 @@ object QueryDocs {
     */
   val JoinedField = "__j"
 
-  /** Tail stages for the join's optional group/limit arm: the `$group`
-    * references left outputs at the top level and right outputs at
-    * their pre-flatten `__j.` home; the `$limit` is the partial
-    * per-pipeline row cap. `leftOuts` = the left side's output names.
-    */
   /** The joined-output home of a column name relative to the CURRENT
     * flatten boundary: a left output (matched by HEAD — a nested ref
     * `meta.lang` lives where its top-level output `meta` does) sits at
@@ -542,11 +537,17 @@ object QueryDocs {
   private def joinedHome(leftOuts: Set[String])(c: String): String =
     if (leftOuts(c.split('.').head)) c else JoinedField + "." + c
 
-  def lookupTail(leftOuts: Set[String],
+  /** Tail stages for the join's optional skip/group/limit/top-n arm: the
+    * `$group` and `$sort` reference left outputs at the top level and
+    * right outputs at their pre-flatten `__j.` home; the `$limit` is the
+    * partial per-pipeline row cap. `leftOuts` = the last stage's left
+    * output names.
+    */
+  private def lookupTail(leftOuts: Set[String],
       group: Option[(Seq[String], Seq[GroupAgg])],
       limit: Option[Long],
-      topN: Option[(Seq[(String, Boolean)], Long)] = None,
-      skip: Option[Long] = None): Seq[BDoc] =
+      topN: Option[(Seq[(String, Boolean)], Long)],
+      skip: Option[Long]): Seq[BDoc] =
     skip.map(n => BDoc("$skip" -> BInt64(n))).toSeq ++ ((group, topN) match {
       case (Some((keys, aggs)), _) =>
         Seq(groupStageDoc(joinedHome(leftOuts), keys, aggs))
@@ -562,115 +563,120 @@ object QueryDocs {
       case (None, None) => limit.map(n => BDoc("$limit" -> BInt64(n))).toSeq
     })
 
-  /** The `$lookup`+`$unwind` pair joining `rightColl` on let-var key
-    * equalities — the per-stage core shared by the base pipeline and
-    * every [[ChainStage]]. `keys` are (left OUTPUT, right OUTPUT) pairs;
-    * the `$expr` references right DOC fields (equality runs before the
-    * right projection), `let` vars bind the driving side's
-    * already-projected output names.
+  /** The checks one pushed join must pass before either transport runs
+    * it: every query renders fully server-side (rows are joined away,
+    * so no client re-check point remains; only the driving query may
+    * carry a split range, rendered bracket-style), every stage joins
+    * within the driving database (a `$lookup` cannot leave it), and
+    * computed columns never combine with an unwind (capture rule).
     */
-  private def lookupUnwind(rightColl: String, rightMatch: BDoc,
-      rightProject: Seq[(String, String)],
-      keys: Seq[(String, String)], leftOuter: Boolean,
-      /** range conjuncts (r17): `leftOut OP rightOut` rendered as
-        * further `$expr` comparisons — `{$lt: ["$$rK", "$rField"]}` —
-        * with a `{$gt: ["$$rK", null]}` guard per driving operand
-        * (aggregation comparisons use BSON TOTAL order, where
-        * null/missing sort below every value: an unguarded null left
-        * operand would `$lt`-match where Spark's null comparison drops
-        * the row — the guard makes a LEFT OUTER row with a null range
-        * operand null-extend exactly like Spark; under INNER the
-        * driving `$match` already filtered it, the guard is then
-        * vacuous). Right-side operands are null-filtered by the
-        * caller's rightMatch, mirroring the key non-null conjuncts. */
-      ranges: Seq[LookupJoin.RangeKey] = Nil,
-      rightComputed: Seq[graft.query.ComputedCol] = Nil): Seq[BDoc] = {
-    val letVars = keys.zipWithIndex.map { case ((lo, _), i) => s"v$i" -> lo } ++
-      ranges.zipWithIndex.map { case (r, i) => s"r$i" -> r.leftOut }
+  def checkLookup(ns: String, j: LookupJoin): Unit = {
+    require(plan(j.leftQuery).isExact,
+      s"lookupJoin left query not fully server-renderable: ${j.leftQuery}")
+    j.stages.foreach { st =>
+      require(nsParts(st.rightNs)._1 == nsParts(ns)._1,
+        s"$$lookup joins within one database: $ns vs ${st.rightNs}")
+      val rp = plan(st.rightQuery)
+      require(rp.isExact && rp.keyBounds.isEmpty,
+        s"lookupJoin right query not fully server-renderable: ${st.rightQuery}")
+    }
+    val up = plan(j.unwindPost)
+    require(up.isExact && up.keyBounds.isEmpty,
+      s"lookupJoin post-unwind query not fully server-renderable: ${j.unwindPost}")
+    require(j.leftComputed.isEmpty || j.unwind.isEmpty,
+      "computed columns never combine with an unwind (capture rule)")
+  }
+
+  /** The whole pipeline of one pushed join, after [[checkLookup]]: the
+    * driving `$match` (a split range bracket-style), the driving
+    * computed columns' `$set` and the driving `$unwind` with its
+    * post-unwind `$match` (r15 — per-ELEMENT rows feed the `$lookup`),
+    * then each stage's [[lookupStage]], then the tail.
+    */
+  def lookupPipeline(ns: String, j: LookupJoin): Seq[BDoc] = {
+    checkLookup(ns, j)
+    val lp = plan(j.leftQuery)
+    val leftMatch = lp.keyBounds.flatMap { case (k, lo, hi) =>
+      rangeMatchDoc(k, lo, hi)
+    } match {
+      case Some(r) => andDocs(Seq(r, lp.serverQuery))
+      case None => lp.serverQuery
+    }
+    val driving =
+      (if (leftMatch.fields.isEmpty) Seq.empty else Seq(BDoc("$match" -> leftMatch))) ++
+        graft.query.ComputedCol.setStage(j.leftComputed).toSeq ++
+        j.unwind.toSeq.flatMap(_.stages(plan(j.unwindPost).serverQuery))
+    // stage 0's $project reads doc fields; a later stage's flattens the
+    // previous stage's outputs from their joined home
+    val (stages, _) = j.stages.foldLeft((driving, identity[String] _)) {
+      case ((acc, home), st) =>
+        (acc ++ lookupStage(st, home), joinedHome(st.leftProject.map(_._2).toSet))
+    }
+    stages ++ lookupTail(j.stages.last.leftProject.map(_._2).toSet,
+      j.group, j.limit, j.topN, j.skip)
+  }
+
+  /** One [[LookupStage]]: a `$project` of the driving rows to the
+    * stage's left output names (each source read at `home(source)`),
+    * then the `$lookup`+`$unwind` pair joining the stage's collection on
+    * let-var key equalities. The `$expr` references right DOC fields
+    * (equality runs before the right projection), `let` vars bind the
+    * driving side's already-projected output names.
+    *
+    * Range conjuncts (r17) render as further `$expr` comparisons —
+    * `{$lt: ["$$rK", "$rField"]}` — with a `{$gt: ["$$rK", null]}` guard
+    * per driving operand (aggregation comparisons use BSON TOTAL order,
+    * where null/missing sort below every value: an unguarded null left
+    * operand would `$lt`-match where Spark's null comparison drops the
+    * row — the guard makes a LEFT OUTER row with a null range operand
+    * null-extend exactly like Spark; under INNER the driving `$match`
+    * already filtered it, the guard is then vacuous). Right-side
+    * operands are null-filtered by the caller's right query, mirroring
+    * the key non-null conjuncts.
+    */
+  private def lookupStage(st: LookupStage, home: String => String): Seq[BDoc] = {
+    val letVars = st.keys.zipWithIndex.map { case ((lo, _), i) => s"v$i" -> lo } ++
+      st.ranges.zipWithIndex.map { case (r, i) => s"r$i" -> r.leftOut }
     // key outputs may be nested under a projected struct column —
     // resolve to the document field path ($expr runs pre-projection)
-    val eqs: Vector[BsonValue] = keys.zipWithIndex.map { case ((_, ro), i) =>
+    val eqs: Vector[BsonValue] = st.keys.zipWithIndex.map { case ((_, ro), i) =>
       BDoc("$eq" -> BArray(Vector(
-        BString("$" + LookupJoin.fieldOf(rightProject, ro)),
+        BString("$" + st.rightField(ro)),
         BString("$$v" + i)))): BsonValue
     }.toVector
     val rangeOps = Map("<" -> "$lt", "<=" -> "$lte", ">" -> "$gt", ">=" -> "$gte")
-    val rngs: Vector[BsonValue] = ranges.zipWithIndex.flatMap { case (r, i) =>
+    val rngs: Vector[BsonValue] = st.ranges.zipWithIndex.flatMap { case (r, i) =>
       Vector[BsonValue](
         BDoc("$gt" -> BArray(Vector(BString("$$r" + i), BNull))),
         BDoc(rangeOps(r.op) -> BArray(Vector(
           BString("$$r" + i),
-          BString("$" + LookupJoin.fieldOf(rightProject, r.rightOut))))))
+          BString("$" + st.rightField(r.rightOut))))))
     }.toVector
     val conds = eqs ++ rngs
     val exprDoc = BDoc("$expr" ->
       (if (conds.size == 1) conds.head else BDoc("$and" -> BArray(conds))))
+    val rightMatch = plan(st.rightQuery).serverQuery
     val innerPipeline: Vector[BsonValue] =
-      // lookup-side derived columns materialize FIRST: the rightMatch
+      // lookup-side derived columns materialize FIRST: the right query
       // may carry the non-null key prune on a computed field (r17)
-      graft.query.ComputedCol.setStage(rightComputed)
+      graft.query.ComputedCol.setStage(st.rightComputed)
         .toVector.map(identity[BsonValue]) ++
       (if (rightMatch.fields.isEmpty) Vector.empty[BsonValue]
        else Vector(BDoc("$match" -> rightMatch): BsonValue)) ++
         Vector[BsonValue](
           BDoc("$match" -> exprDoc),
-          BDoc("$project" -> aliasProjection(rightProject)))
+          BDoc("$project" -> aliasProjection(st.rightProject)))
     val lookup = BDoc("$lookup" -> BDoc(
-      "from" -> BString(rightColl),
+      "from" -> BString(nsParts(st.rightNs)._2),
       "let" -> BDoc(ListMap(letVars.map { case (v, lo) =>
         v -> (BString("$" + lo): BsonValue) }: _*)),
       "pipeline" -> BArray(innerPipeline),
       "as" -> BString(JoinedField)))
     val unwind = BDoc("$unwind" -> BDoc(
       "path" -> BString("$" + JoinedField),
-      "preserveNullAndEmptyArrays" -> BBool(leftOuter)))
-    Seq(lookup, unwind)
-  }
-
-  def lookupStages(leftMatch: BDoc, leftProject: Seq[(String, String)],
-      rightColl: String, rightMatch: BDoc,
-      rightProject: Seq[(String, String)],
-      keys: Seq[(String, String)], leftOuter: Boolean,
-      /** driving-side `$unwind` + its post-unwind element `$match`
-        * (r15): rendered between the pre-`$match` and the left
-        * `$project`, so per-ELEMENT rows feed the `$lookup`. */
-      unwind: Option[graft.query.Unwind] = None,
-      unwindPostDoc: BDoc = BDoc.empty,
-      ranges: Seq[LookupJoin.RangeKey] = Nil,
-      /** derived columns (r17): the DRIVING side's `$set` renders after
-        * its `$match` (which never references them — the scan keeps the
-        * non-null key prune off computed fields under INNER, the `$expr`
-        * equality/guards handle nulls); the LOOKUP side's `$set` renders
-        * FIRST in the sub-pipeline (its `$match` may carry the non-null
-        * prune on a computed key). */
-      leftComputed: Seq[graft.query.ComputedCol] = Nil,
-      rightComputed: Seq[graft.query.ComputedCol] = Nil): Seq[BDoc] =
-    (if (leftMatch.fields.isEmpty) Seq.empty
-     else Seq(BDoc("$match" -> leftMatch))) ++
-      graft.query.ComputedCol.setStage(leftComputed).toSeq ++
-      unwind.toSeq.flatMap(_.stages(unwindPostDoc)) ++
-      Seq(BDoc("$project" -> aliasProjection(leftProject))) ++
-      lookupUnwind(rightColl, rightMatch, rightProject, keys, leftOuter,
-        ranges, rightComputed)
-
-  /** One CHAINED stage: a `$project` that FLATTENS the previous join
-    * (each previous output re-aliased from its joined home to this
-    * stage's output name), then the stage's own `$lookup`+`$unwind` —
-    * the 3-way+ star query stays ONE pipeline.
-    */
-  def chainStages(prevLeftOuts: Set[String], leftProject: Seq[(String, String)],
-      rightColl: String, rightMatch: BDoc,
-      rightProject: Seq[(String, String)],
-      keys: Seq[(String, String)], leftOuter: Boolean,
-      /** range conjuncts of THIS stage (r18): rendered into its `$expr`
-        * with the same per-var null guards as the base join's. */
-      ranges: Seq[LookupJoin.RangeKey] = Nil): Seq[BDoc] = {
-    val flatten = aliasProjection(leftProject.map { case (prev, out) =>
-      (joinedHome(prevLeftOuts)(prev), out)
-    })
-    Seq(BDoc("$project" -> flatten)) ++
-      lookupUnwind(rightColl, rightMatch, rightProject, keys, leftOuter,
-        ranges)
+      "preserveNullAndEmptyArrays" -> BBool(st.leftOuter)))
+    Seq(BDoc("$project" -> aliasProjection(st.leftProject.map { case (src, out) =>
+      (home(src), out) })), lookup, unwind)
   }
 
   /** Apply a projection client-side (the residual-query path cannot push

@@ -41,9 +41,10 @@ final case class Find(
   * engine is unchanged: [[ServerStats]] plugs this into the SAME
   * [[Planners.CollectionStats]] planning interface the file provider
   * implements, and [[ServerCollection]] mirrors the per-split cursor
-  * read and bulk-write entry points.
+  * read and bulk-write entry points. `close()` releases the client's
+  * connection.
   */
-trait ServerClient {
+trait ServerClient extends AutoCloseable {
 
   /** collStats essentials (count + avgObjSize), the reference's sizing
     * input (core/.../splitter/MongoSplitterFactory.java:66-83).
@@ -134,61 +135,78 @@ trait ServerClient {
       skip: Long, limit: Long,
       projection: Option[Seq[String]]): Iterator[BDoc]
 
-  /** One server-executed equi-join — the `$lookup`+`$unwind` pipeline
-    * ([[QueryDocs.lookupStages]] is the wire rendering): driving docs of
-    * `ns` matching `j.leftQuery` are projected to `j.leftProject`'s
-    * output names, joined against `j.rightNs` docs matching
-    * `j.rightQuery` (projected to `j.rightProject`) on the AND of
-    * `j.keys` output-name equalities, and stream back FLATTENED — one
-    * doc per joined pair carrying every left and right output field at
-    * the top level. `j.leftOuter` keeps unmatched driving docs with the
-    * right fields missing (they read back as NULL). Null/missing keys
-    * never match on either side (SQL equi-join semantics; the right
-    * side's pipeline filters them, a null driving key looks up nothing).
-    * A [[BQuery.KeyRange]] conjunct in `j.leftQuery` (a split range) is
-    * rendered BRACKET-style (`$gte`/`$lt`) inside the pipeline's
-    * `$match` — unlike a cursor's min/max bounds this is only exact
-    * over uniformly-stored keys, so callers must pass one only under
-    * the `assume_uniform_storage` opt-in (the joined scan does).
+  /** One server-executed join — the `$lookup`+`$unwind` pipeline
+    * ([[QueryDocs.lookupPipeline]] is the wire rendering): driving docs
+    * of `ns` matching `j.leftQuery` feed `j.stages` in order, each stage
+    * joining one more collection ([[LookupStage]]), and stream back
+    * FLATTENED — one doc per joined row carrying every output field of
+    * the last stage at the top level. A LEFT OUTER stage keeps unmatched
+    * rows with its right fields missing (they read back as NULL).
+    * Null/missing keys never match on either side (SQL equi-join
+    * semantics; the right side's pipeline filters them, a null driving
+    * key looks up nothing). A [[BQuery.KeyRange]] conjunct in
+    * `j.leftQuery` (a split range) is rendered BRACKET-style
+    * (`$gte`/`$lt`) inside the pipeline's `$match` — unlike a cursor's
+    * min/max bounds this is only exact over uniformly-stored keys, so
+    * callers must pass one only under the `assume_uniform_storage`
+    * opt-in (the joined scan does).
     */
   def lookupJoin(ns: String, j: LookupJoin): Iterator[BDoc]
 }
 
-/** One CHAINED `$lookup` stage above an already-joined pipeline (the
-  * 3-way+ star query): `leftProject` re-projects the PREVIOUS stage's
-  * flattened output names to this stage's output names (the renderer
-  * resolves each to its top-level or pre-flatten `__j.` home), then the
-  * usual lookup+unwind joins `rightNs` on `keys` — (new left OUTPUT,
-  * right OUTPUT) pairs.
+/** One `$lookup`+`$unwind` stage of a pushed join: `leftProject` maps
+  * the rows driving this stage to their output names — for stage 0 the
+  * driving collection's DOC fields, for a later stage the previous
+  * stage's output names (the renderer flattens each from its joined
+  * home) — then `rightNs` docs matching `rightQuery` (projected to
+  * `rightProject`) join on the AND of `keys`, (left OUTPUT, right
+  * OUTPUT) equalities.
   */
-final case class ChainStage(
+final case class LookupStage(
     leftProject: Seq[(String, String)],
     rightNs: String,
     rightQuery: BQuery,
     rightProject: Seq[(String, String)],
     keys: Seq[(String, String)],
     leftOuter: Boolean,
-    /** RANGE conjuncts of THIS stage's join condition (r18): `leftOut OP
-      * rightOut` over the stage's output names, rendered into its
-      * `$lookup` `$expr` exactly like the base join's ([[LookupJoin]]
-      * `ranges`) — so a 3-way star with one interval edge keeps the
-      * WHOLE chain pushed. Same dialect gates (uniform storage +
-      * orderable types on both sides, per-var null guards; the reader
-      * null-prunes the stage's right operands); a null driving operand
-      * fails the guard and INNER drops / LEFT OUTER null-extends,
-      * matching Spark's null comparison. */
-    ranges: Seq[LookupJoin.RangeKey] = Nil) {
+    /** RANGE conjuncts of the stage's join condition (r17, chained stages
+      * r18): `leftOut OP rightOut` over OUTPUT names, rendered into the
+      * `$lookup` pipeline's `$expr` alongside the key equalities — the
+      * binned interval / as-of join shape (equi-key on the bin, range
+      * residual in the pipeline), never all-pairs. The caller gates
+      * operand types on `assume_uniform_storage` (aggregation `$lt`/`$gt`
+      * compare in BSON TOTAL order — cross-bracket foreign storage would
+      * compare by type where Spark's typed comparison returns null) and
+      * null-filters the right operands (null/missing sort below every
+      * real value in `$expr`; a null driving operand fails the per-var
+      * guard, so INNER drops and LEFT OUTER null-extends, matching
+      * Spark's null comparison). */
+    ranges: Seq[LookupJoin.RangeKey] = Nil,
+    /** DERIVED columns (r17, [[graft.query.ComputedCol]]) of the lookup
+      * side, materialized by a `$set` FIRST in the sub-pipeline (its
+      * `$match` may carry the non-null key prune on a computed field).
+      * Stage 0 only: a chained stage refuses computed sides. */
+    rightComputed: Seq[graft.query.ComputedCol] = Nil) {
   require(ranges.forall(r => LookupJoin.RangeOps.contains(r.op)),
     s"unknown range op in $ranges")
   require(ranges.isEmpty || keys.nonEmpty,
-    "a chained range stage needs at least one key equality (never all-pairs)")
+    "a range join needs at least one key equality (never all-pairs)")
+
+  /** right OUTPUT name -> right doc field (nested outputs resolve by
+    * head, [[LookupJoin.fieldOf]]). */
+  def rightField(out: String): String = LookupJoin.fieldOf(rightProject, out)
+
+  /** The plan spelling: flavor, lookup namespace and condition. */
+  override def toString: String =
+    s"${if (leftOuter) "LEFT OUTER" else "INNER"} $rightNs ON " +
+      (keys.map { case (l, r) => s"$l = $r" } ++ ranges.map(_.toString)).mkString(" AND ")
 }
 
-/** One pushed equi-join, transport-agnostic: field→output-name
-  * projections for both sides, the key pairs AS OUTPUT NAMES, and the
-  * join flavor; `chain` appends further lookup stages (3-way+ joins) —
-  * the whole chain is still ONE pipeline round-trip. Plain data —
-  * serializes into the scan's partitions.
+/** One pushed join, transport-agnostic: the driving side's query and
+  * stage-0 extras, then the lookup stages — a 2-way join has one, each
+  * further collection of a 3-way+ chain adds one, and the whole chain is
+  * ONE pipeline round-trip. Plain data — serializes into the scan's
+  * partitions.
   *
   * Exactly one tail may be set:
   *  - `group`: a server-side `$group` over the FINAL joined output
@@ -204,25 +222,19 @@ final case class ChainStage(
   *    descending) pairs in precedence order; PARTIAL like `limit`
   *    (each pipeline's local top-n is a superset of its contribution
   *    to the global one, which Spark's TakeOrdered folds).
+  *  - `skip`: a `$skip` over the FINAL joined rows (single-pipeline
+  *    OFFSET pushdown — globally exact only when the caller plans one
+  *    pipeline, which the `splitter=single` gate guarantees).
   */
 final case class LookupJoin(
     leftQuery: BQuery,
-    leftProject: Seq[(String, String)],
-    rightNs: String,
-    rightQuery: BQuery,
-    rightProject: Seq[(String, String)],
-    keys: Seq[(String, String)],
-    leftOuter: Boolean,
-    chain: Seq[ChainStage] = Nil,
+    stages: Seq[LookupStage],
     group: Option[(Seq[String], Seq[GroupAgg])] = None,
     limit: Option[Long] = None,
     topN: Option[(Seq[(String, Boolean)], Long)] = None,
-    /** `$skip` tail over the FINAL joined rows (single-pipeline OFFSET
-      * pushdown — globally exact only when the caller plans one
-      * pipeline, which the `splitter=single` gate guarantees). */
     skip: Option[Long] = None,
     /** DRIVING-side `$unwind` (r15): rendered between the left `$match`
-      * and the left `$project`, so the per-ELEMENT rows feed the
+      * and stage 0's `$project`, so the per-ELEMENT rows feed the
       * `$lookup` — `explode(driving.arr)` then join runs as ONE
       * pipeline. `unwindPost` is the post-unwind element `$match`
       * (must be fully server-renderable; element rows with
@@ -231,37 +243,17 @@ final case class LookupJoin(
       * across the join boundary). */
     unwind: Option[Unwind] = None,
     unwindPost: BQuery = BQuery.True,
-    /** RANGE conjuncts of the join condition (r17): `left OP right`
-      * over OUTPUT names, rendered into the `$lookup` pipeline's
-      * `$expr` alongside the key equalities — the binned interval /
-      * as-of join shape (equi-key on the bin, range residual in the
-      * pipeline), never all-pairs. The caller gates operand types on
-      * `assume_uniform_storage` (aggregation `$lt`/`$gt` compare in
-      * BSON TOTAL order — cross-bracket foreign storage would compare
-      * by type where Spark's typed comparison returns null) and
-      * null-filters both operands (null/missing sort below every real
-      * value in `$expr`, so an unguarded `$lt: [null, x]` would MATCH
-      * where Spark's null comparison drops). */
-    ranges: Seq[LookupJoin.RangeKey] = Nil,
-    /** DERIVED columns (r17, [[graft.query.ComputedCol]]) each side's
-      * keys/projections may reference: the driving side's materialize
-      * via a `$set` after the left `$match` (which never references
-      * them), the lookup side's via a `$set` FIRST in the sub-pipeline
-      * (its `$match` may carry the non-null key prune on a computed
-      * field). Base join only; chained stages refuse computed sides. */
-    leftComputed: Seq[graft.query.ComputedCol] = Nil,
-    rightComputed: Seq[graft.query.ComputedCol] = Nil) {
+    /** DERIVED columns (r17, [[graft.query.ComputedCol]]) of the driving
+      * side, materialized via a `$set` after the left `$match` (which
+      * never references them). Never combined with an unwind. */
+    leftComputed: Seq[graft.query.ComputedCol] = Nil) {
+  require(stages.nonEmpty, "a lookup join has at least one stage")
   require(Seq(group.isDefined, limit.isDefined, topN.isDefined,
       skip.isDefined).count(identity) <= 1,
     "a lookup join takes at most one of group/limit/topN/skip")
-  require(ranges.forall(r => LookupJoin.RangeOps.contains(r.op)),
-    s"unknown range op in $ranges")
-  require(ranges.isEmpty || keys.nonEmpty,
-    "a range join needs at least one key equality (never all-pairs)")
-  /** Output names of the FINAL stage's left projection — where the
-    * flatten boundary sits for tail stages and result re-nesting. */
-  def finalLeftOuts: Set[String] =
-    (chain.lastOption.map(_.leftProject).getOrElse(leftProject)).map(_._2).toSet
+
+  /** left OUTPUT name -> driving doc field (stage 0's projection). */
+  def leftField(out: String): String = LookupJoin.fieldOf(stages.head.leftProject, out)
 }
 
 object ServerClient {
@@ -474,7 +466,7 @@ final class DirServerFactory extends ServerClientFactory {
   * are reproducible.
   */
 final class FakeServerClient(rootDir: Option[String] = None)
-    extends ServerClient with AutoCloseable {
+    extends ServerClient {
   private val ownsRoot = rootDir.isEmpty
   private val root = rootDir match {
     case Some(d) =>
@@ -770,7 +762,8 @@ final class FakeServerClient(rootDir: Option[String] = None)
   }
 
   /** The `$lookup` equi-join, evaluated as a hash join over the store
-    * (what a real server computes from [[QueryDocs.lookupStages]]).
+    * (what a real server computes from [[QueryDocs.lookupPipeline]]),
+    * one [[stageJoin]] per stage over the previous stage's flat rows.
     * Key equality is `$expr` `$eq`'s VALUE equality across numeric
     * storages — int32/int64/integral-double of one value match — via a
     * canonical key form; the right side is indexed in memory (the fake
@@ -779,27 +772,11 @@ final class FakeServerClient(rootDir: Option[String] = None)
     */
   override def lookupJoin(ns: String, j: LookupJoin): Iterator[BDoc] = {
     tick("lookupJoin")
-    // mirror the REAL transport's renderability requires (r16): the
-    // fake evaluates BQuery nodes directly, so without these a gate
-    // hole (an unrenderable conjunct reaching a pipeline) would pass
-    // silently in-sandbox and crash only on a live server
-    require(QueryDocs.plan(j.leftQuery).isExact,
-      s"lookupJoin left query not fully server-renderable: ${j.leftQuery}")
-    locally {
-      val rp = QueryDocs.plan(j.rightQuery)
-      require(rp.isExact && rp.keyBounds.isEmpty,
-        s"lookupJoin right query not fully server-renderable: ${j.rightQuery}")
-      val up = QueryDocs.plan(j.unwindPost)
-      require(up.isExact && up.keyBounds.isEmpty,
-        s"lookupJoin post-unwind query not fully server-renderable: ${j.unwindPost}")
-      j.chain.foreach { st =>
-        val cp = QueryDocs.plan(st.rightQuery)
-        require(cp.isExact && cp.keyBounds.isEmpty,
-          s"lookupJoin chained right query not fully server-renderable: ${st.rightQuery}")
-      }
-    }
-    require(j.leftComputed.isEmpty || j.unwind.isEmpty,
-      "computed columns never combine with an unwind (capture rule)")
+    // the REAL transport's checks (r16): the fake evaluates BQuery nodes
+    // directly, so without them a gate hole (an unrenderable conjunct
+    // reaching a pipeline) would pass silently in-sandbox and crash only
+    // on a live server
+    QueryDocs.checkLookup(ns, j)
     // driving-side $unwind runs between the pre-match and the
     // projection/join — the same per-element expansion the wire
     // pipeline renders ($match → $unwind → $match(post) → $project →
@@ -811,21 +788,12 @@ final class FakeServerClient(rootDir: Option[String] = None)
     // never match stored fields)
     val leftNeeded: Set[String] =
       BQuery.fieldPaths(j.leftQuery) ++ BQuery.fieldPaths(j.unwindPost) ++
-        j.leftProject.map(_._1) ++ j.unwind.map(_.path) ++
+        j.stages.head.leftProject.map(_._1) ++ j.unwind.map(_.path) ++
         j.leftComputed.map(_.field)
     val matched = coll(ns).readAll(Some(leftNeeded)).filter(j.leftQuery.matches)
       .map(d => graft.query.ComputedCol.injectAll(j.leftComputed, d))
-    var rows: Iterator[BDoc] = stageJoin(
-      Unwind.expandAll(j.unwind, j.unwindPost, matched),
-      j.leftProject, j.rightNs, j.rightQuery, j.rightProject,
-      j.keys, j.leftOuter, j.ranges, j.rightComputed)
-    // chained stages drive off the previous stage's flat joined rows —
-    // the same pipeline a real server runs ($project flatten + $lookup
-    // per stage), evaluated stage-wise here
-    j.chain.foreach { st =>
-      rows = stageJoin(rows, st.leftProject, st.rightNs, st.rightQuery,
-        st.rightProject, st.keys, st.leftOuter, st.ranges)
-    }
+    var rows: Iterator[BDoc] =
+      j.stages.foldLeft(Unwind.expandAll(j.unwind, j.unwindPost, matched))(stageJoin)
     j.skip.foreach(n => rows = rows.drop(math.min(n, Int.MaxValue.toLong).toInt))
     (j.group, j.limit, j.topN) match {
       case (Some((keys, aggs)), _, _) =>
@@ -855,27 +823,20 @@ final class FakeServerClient(rootDir: Option[String] = None)
     }
   }
 
-  /** One lookup stage as a hash join: project the driving docs to their
+  /** One lookup stage as a hash join: project the driving rows to their
     * output names, index the right side in memory (the fake is a
     * transport stand-in — a real server walks the right collection's
     * index per driving doc), match on `$expr`-`$eq` VALUE equality
-    * across numeric storages via a canonical key form.
+    * across numeric storages via a canonical key form. Range conjuncts
+    * are evaluated on the hash-equality hits with
+    * [[LookupJoin.rangeMatches]], the same BSON-order comparison the
+    * wire pipeline runs; null/missing operands never match, so a LEFT
+    * OUTER row whose range operand is null null-extends exactly like
+    * Spark. Lookup-side derived columns materialize first, before the
+    * right query (which may carry the non-null prune on a computed key).
     */
-  private def stageJoin(driving: Iterator[BDoc],
-      leftProject: Seq[(String, String)], rightNs: String,
-      rightQuery: BQuery, rightProject: Seq[(String, String)],
-      keys: Seq[(String, String)], leftOuter: Boolean,
-      /** range conjuncts of the `$expr` (base join r17, chained stages
-        * r18): evaluated on the hash-equality hits with
-        * [[LookupJoin.rangeMatches]], the same
-        * BSON-order comparison the wire pipeline runs; null/missing
-        * operands never match, so a LEFT OUTER row whose range operand
-        * is null null-extends exactly like Spark. */
-      ranges: Seq[LookupJoin.RangeKey] = Nil,
-      /** lookup-side derived columns: `$set` FIRST in the sub-pipeline
-        * (before the rightQuery `$match`, which may carry the non-null
-        * prune on a computed key). */
-      rightComputed: Seq[graft.query.ComputedCol] = Nil): Iterator[BDoc] = {
+  private def stageJoin(driving: Iterator[BDoc], st: LookupStage): Iterator[BDoc] = {
+    import st.{keys, leftOuter, ranges, rightComputed, rightProject, rightQuery}
     def canon(v: BsonValue): Any = v match {
       case BInt32(x) => x.toLong
       case BInt64(x) => x
@@ -884,26 +845,22 @@ final class FakeServerClient(rootDir: Option[String] = None)
         x.toLong
       case other => other
     }
-    // key outputs may be NESTED under a projected struct column
-    val rightKeyFields = keys.map { case (_, ro) =>
-      LookupJoin.fieldOf(rightProject, ro) }.toArray
+    // key outputs may be NESTED under a projected struct column; range
+    // operands reference right DOC fields ($expr runs before the right
+    // projection), like the key equalities
+    val rightKeyFields = keys.map(k => st.rightField(k._2)).toArray
     val nKeys = rightKeyFields.length
+    val rangeRightFields = ranges.map(r => st.rightField(r.rightOut)).toArray
     // projected decode of the lookup side: query/projection/key/range/
     // computed fields only
     val rightNeeded: Set[String] =
       BQuery.fieldPaths(rightQuery) ++ rightProject.map(_._1) ++
-        rightKeyFields ++
-        ranges.map(r => LookupJoin.fieldOf(rightProject, r.rightOut)) ++
-        rightComputed.map(_.field)
-    // range operands reference right DOC fields ($expr runs before the
-    // right projection), like the key equalities
-    val rangeRightFields = ranges.map(r =>
-      LookupJoin.fieldOf(rightProject, r.rightOut)).toArray
+        rightKeyFields ++ rangeRightFields ++ rightComputed.map(_.field)
     val rangeOps = ranges.map(_.op).toArray
     val rangeLeftOuts = ranges.map(_.leftOut).toArray
     val keyLeftOuts = keys.map(_._1).toArray
     val nRanges = rangeOps.length
-    val leftSpec = leftProject.toArray
+    val leftSpec = st.leftProject.toArray
     val rightSpec = rightProject.toArray
     // the (String, BsonValue) output fields of one side of one row,
     // filled once and copied straight into the joined doc — missing
@@ -942,7 +899,7 @@ final class FakeServerClient(rootDir: Option[String] = None)
         val rangeVals: Array[Option[BsonValue]])
     val index = new java.util.HashMap[Any, scala.collection.mutable.ArrayBuffer[REntry]]()
     locally {
-      val rit = coll(rightNs).readAll(Some(rightNeeded))
+      val rit = coll(st.rightNs).readAll(Some(rightNeeded))
       while (rit.hasNext) {
         val rd = graft.query.ComputedCol.injectAll(rightComputed, rit.next())
         if (rightQuery.matches(rd)) {

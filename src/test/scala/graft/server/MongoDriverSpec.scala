@@ -760,16 +760,15 @@ class MongoDriverSpec extends AnyFunSuite {
       val tags = (1 to 10).map(i => BDoc(
         "_id" -> BInt32(i * 2), "tag" -> BString(s"t${i % 3}")))
       client.bulkWrite("db.tags", tags.map(InsertOne(_)).iterator, ordered = true)
-      val join = LookupJoin(
-        leftQuery = BQuery.Eq("status", BString("A")),
+      val stage = LookupStage(
         leftProject = Seq("_id" -> "pid", "name" -> "name"),
         rightNs = "db.tags",
         rightQuery = BQuery.True,
-        rightProject = Seq("tag" -> "tag"),
+        // right key field rides the projection: rid <- _id
+        rightProject = Seq("_id" -> "rid", "tag" -> "tag"),
         keys = Seq(("pid", "rid")),
         leftOuter = false)
-      // right key field rides the projection: rid <- _id
-      val j = join.copy(rightProject = Seq("_id" -> "rid", "tag" -> "tag"))
+      val j = LookupJoin(BQuery.Eq("status", BString("A")), Seq(stage))
       val got = client.lookupJoin(Ns, j).toVector
       val exp = fake.lookupJoin(Ns, j).toVector
       assert(got.map(_.fields).sortBy(_.toString) ===
@@ -780,7 +779,7 @@ class MongoDriverSpec extends AnyFunSuite {
       // odd ids (status B is odd) never match a tag and keep missing
       // right fields
       val outer = j.copy(leftQuery = BQuery.Eq("status", BString("B")),
-        leftOuter = true)
+        stages = Seq(stage.copy(leftOuter = true)))
       val gotOuter = client.lookupJoin(Ns, outer).toVector
       assert(gotOuter === fake.lookupJoin(Ns, outer).toVector)
       assert(gotOuter.size === 10 &&

@@ -167,7 +167,7 @@ final class StubDriverBackend(val fake: FakeServerClient) {
   }
 
   /** `[$match?, $project, $lookup, $unwind]` — the equi-join pipeline
-    * the driver binding renders (QueryDocs.lookupStages), parsed back
+    * the driver binding renders (QueryDocs.lookupPipeline), parsed back
     * into a [[LookupJoin]] and evaluated through the fake; results
     * re-nest the right side under the `$unwind` path (what a real
     * server streams — the binding flattens it client-side).
@@ -265,30 +265,25 @@ final class StubDriverBackend(val fake: FakeServerClient) {
         val q = StubDriverBackend.parseQueryDoc(bdoc(st(i).get("$match"), "$match"))
         i += 1; q
       } else BQuery.True
-    val leftProject = projOf(bdoc(st(i).get("$project"), "left $project")); i += 1
-    val (from, rightQuery, rightProject, keys, leftOuter, joinedField0,
-        baseRanges) =
-      parseLookupUnwind(bdoc(st(i).get("$lookup"), "$lookup"),
-        bdoc(st(i + 1).get("$unwind"), "$unwind"))
-    i += 2
-    var joinedField = joinedField0
-    var leftOuts = leftProject.map(_._2).toSet
-    // CHAINED stages: each is [$project flatten, $lookup, $unwind]
-    val chain = Seq.newBuilder[ChainStage]
+    // stages: each is [$project, $lookup, $unwind]; stage 0's $project
+    // reads doc fields, a later stage's flattens the previous output's
+    // home path (top-level or "__j.x") to the stage's output name
+    var joinedField = QueryDocs.JoinedField
+    var leftOuts = Set.empty[String]
+    val stages = Seq.newBuilder[LookupStage]
     while (i + 2 < st.length &&
         st(i).fields.contains("$project") &&
         st(i + 1).fields.contains("$lookup")) {
-      // flatten entries re-alias the previous output's home path
-      // (top-level or "__j.x") to the stage's output name
-      val flat = projOf(bdoc(st(i).get("$project"), "chain $project"))
-        .map { case (path, out) => (outCol("$" + path), out) }
-      val (cfrom, crq, crp, ckeys, couter, cpath, cranges) =
+      val proj = projOf(bdoc(st(i).get("$project"), "stage $project"))
+      val leftProject =
+        if (leftOuts.isEmpty) proj
+        else proj.map { case (path, out) => (outCol("$" + path), out) }
+      val (from, rq, rp, keys, outer, path, ranges) =
         parseLookupUnwind(bdoc(st(i + 1).get("$lookup"), "$lookup"),
           bdoc(st(i + 2).get("$unwind"), "$unwind"))
-      chain += ChainStage(flat, s"$db.$cfrom", crq, crp, ckeys, couter,
-        ranges = cranges)
-      joinedField = cpath
-      leftOuts = flat.map(_._2).toSet
+      stages += LookupStage(leftProject, s"$db.$from", rq, rp, keys, outer, ranges)
+      joinedField = path
+      leftOuts = leftProject.map(_._2).toSet
       i += 3
     }
     // optional tail: a $group (aggregate pushed through the join), a
@@ -313,11 +308,9 @@ final class StubDriverBackend(val fake: FakeServerClient) {
         i += 1
       case other => throw new IllegalArgumentException(s"bad tail stage: $other")
     }
-    val results = fake.lookupJoin(ns, LookupJoin(leftQuery, leftProject,
-      s"$db.$from", rightQuery, rightProject, keys, leftOuter,
-      chain = chain.result(),
+    val results = fake.lookupJoin(ns, LookupJoin(leftQuery, stages.result(),
       group = tailGroup.map { case (ks, as) => (ks.map(_._2), as) },
-      limit = tailLimit, topN = tailTopN, ranges = baseRanges))
+      limit = tailLimit, topN = tailTopN))
     tailGroup match {
       case Some((gKeys, gAggs)) => serverizeGroups(results, gKeys, gAggs)
       case None =>

@@ -11,6 +11,9 @@ marker, sbt log lines other than `[info]`, and the `[info] ` prefix are
 dropped. Then, in every line:
 
   - expression ids `#123`         become `#N`;
+  - exchange ids `plan_id=123`    become `plan_id=N` (a JVM-wide counter
+    that the plans of the seeding writes also advance, so two runs of the
+    same code can differ in it);
   - temp dirs `graft-conn123...`  become `graft-*`;
   - UUIDs                         become `<uuid>`.
 
@@ -25,6 +28,7 @@ import sys
 MARKER = "######## "
 SBT_PREFIX = re.compile(r"^\[(info|warn|error|success|debug)\] ?")
 EXPR_ID = re.compile(r"#\d+")
+PLAN_ID = re.compile(r"plan_id=\d+")
 TEMP_DIR = re.compile(r"graft-[A-Za-z_]*-?\d+")
 UUID = re.compile(
     r"[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}")
@@ -32,6 +36,7 @@ UUID = re.compile(
 
 def normalize(line):
     line = EXPR_ID.sub("#N", line)
+    line = PLAN_ID.sub("plan_id=N", line)
     line = TEMP_DIR.sub("graft-*", line)
     return UUID.sub("<uuid>", line)
 
