@@ -967,7 +967,9 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
               pairs(drivingProj) ++ drivingRk.flatMap(_._2),
               GraftServerSource.ns(lookup.joinOptions), lookup.builderQuery,
               pairs(lookupProj) ++ lookupRk.flatMap(_._2),
-              keys, leftOuter || mirrored, ranges, lookup.cols.computed)
+              keys, leftOuter || mirrored, ranges, lookup.cols.computed,
+              doubleKeys = refs.indices.filter(i =>
+                refs(i)._1.dataType == org.apache.spark.sql.types.DoubleType).toSet)
             // stage 0 carries the driving side: its full query (with the
             // pre-unwind PARENT prune, exactly as on the plain unwound
             // scan), its unwind and its computed columns

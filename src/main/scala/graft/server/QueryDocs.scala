@@ -639,10 +639,13 @@ object QueryDocs {
       st.ranges.zipWithIndex.map { case (r, i) => s"r$i" -> r.leftOut }
     // key outputs may be nested under a projected struct column —
     // resolve to the document field path ($expr runs pre-projection)
+    // a DOUBLE key compares the values Spark reads: `$toDouble` of both
+    // operands (an Int64 above 2^53 rounds to the double it reads as)
     val eqs: Vector[BsonValue] = st.keys.zipWithIndex.map { case ((_, ro), i) =>
-      BDoc("$eq" -> BArray(Vector(
-        BString("$" + st.rightField(ro)),
-        BString("$$v" + i)))): BsonValue
+      val operands = Vector[BsonValue](BString("$" + st.rightField(ro)), BString("$$v" + i))
+      BDoc("$eq" -> BArray(
+        if (st.doubleKeys.contains(i)) operands.map(o => BDoc("$toDouble" -> o): BsonValue)
+        else operands)): BsonValue
     }.toVector
     val rangeOps = Map("<" -> "$lt", "<=" -> "$lte", ">" -> "$gt", ">=" -> "$gte")
     val rngs: Vector[BsonValue] = st.ranges.zipWithIndex.flatMap { case (r, i) =>

@@ -186,7 +186,12 @@ final case class LookupStage(
       * side, materialized by a `$set` FIRST in the sub-pipeline (its
       * `$match` may carry the non-null key prune on a computed field).
       * Stage 0 only: a chained stage refuses computed sides. */
-    rightComputed: Seq[graft.query.ComputedCol] = Nil) {
+    rightComputed: Seq[graft.query.ComputedCol] = Nil,
+    /** Indices into `keys` whose Spark type is DOUBLE: those compare the
+      * values Spark reads — `$toDouble` of both operands on the wire,
+      * [[LookupJoin.doubleKey]] in the fake — so an Int64 above 2^53
+      * joins the double it reads as. Every other key compares exactly. */
+    doubleKeys: Set[Int] = Set.empty) {
   require(ranges.forall(r => LookupJoin.RangeOps.contains(r.op)),
     s"unknown range op in $ranges")
   require(ranges.isEmpty || keys.nonEmpty,
@@ -274,6 +279,17 @@ object LookupJoin {
   }
 
   val RangeOps: Set[String] = Set("<", "<=", ">", ">=")
+
+  /** The hash key of a DOUBLE join operand: the double Spark reads from a
+    * numeric storage (an Int64 above 2^53 rounds as `$toDouble` rounds
+    * it), with -0.0 equal to 0.0 and every NaN equal to NaN, as Spark's
+    * join keys normalize them. A non-numeric storage keys as itself. */
+  def doubleKey(v: BsonValue): Any = v match {
+    case BInt32(x) => x.toDouble
+    case BInt64(x) => x.toDouble
+    case BDouble(x) => if (x == 0.0) 0.0 else if (x.isNaN) Double.NaN else x
+    case other => other
+  }
 
   /** `left OP right` in BSON total order — the `$expr` comparison the
     * wire pipeline runs, shared by the fake transport so the two agree;
@@ -836,8 +852,8 @@ final class FakeServerClient(rootDir: Option[String] = None)
     * right query (which may carry the non-null prune on a computed key).
     */
   private def stageJoin(driving: Iterator[BDoc], st: LookupStage): Iterator[BDoc] = {
-    import st.{keys, leftOuter, ranges, rightComputed, rightProject, rightQuery}
-    def canon(v: BsonValue): Any = v match {
+    import st.{doubleKeys, keys, leftOuter, ranges, rightComputed, rightProject, rightQuery}
+    def exact(v: BsonValue): Any = v match {
       case BInt32(x) => x.toLong
       case BInt64(x) => x
       // integral doubles inside the exact-long window equal their ints
@@ -845,6 +861,8 @@ final class FakeServerClient(rootDir: Option[String] = None)
         x.toLong
       case other => other
     }
+    val canons: Array[BsonValue => Any] = keys.indices.map(i =>
+      if (doubleKeys.contains(i)) LookupJoin.doubleKey _ else exact _).toArray
     // key outputs may be NESTED under a projected struct column; range
     // operands reference right DOC fields ($expr runs before the right
     // projection), like the key equalities
@@ -908,7 +926,7 @@ final class FakeServerClient(rootDir: Option[String] = None)
           var i = 0
           while (ok && i < nKeys) {
             rd.getPath(rightKeyFields(i)) match {
-              case Some(v) if v != BNull => kv(i) = canon(v)
+              case Some(v) if v != BNull => kv(i) = canons(i)(v)
               case _ => ok = false
             }
             i += 1
@@ -955,7 +973,7 @@ final class FakeServerClient(rootDir: Option[String] = None)
       var i = 0
       while (ok && i < nKeys) {
         val v = lookupOut(keyLeftOuts(i))
-        if ((v eq null) || v == BNull) ok = false else kv(i) = canon(v)
+        if ((v eq null) || v == BNull) ok = false else kv(i) = canons(i)(v)
         i += 1
       }
       val bucket =

@@ -249,4 +249,28 @@ class JoinDifferentialSpec extends SparkSpec {
     // integral Double one
     assert(multiset(rawShapes.head.join(l, r, c)).size > 10)
   }
+
+  test("a DOUBLE key joins on the value Spark reads: Int64 2^53+1 meets Double 2^53") {
+    val dir = Files.createTempDirectory("graft-jdiff-2p53").toString
+    val client = new FakeServerClient(Some(dir))
+    def docs(ks: BsonValue*) = ks.zipWithIndex.iterator.map { case (k, i) =>
+      InsertOne(BDoc("_id" -> BInt32(i), "k" -> k)) }
+    // each left key reads as the same Spark double as the right key at
+    // its position: 2^53+1 rounds to 2^53, -0.0 equals 0, NaN equals NaN
+    client.bulkWrite("db.bl", docs(BInt64(9007199254740993L), BDouble(-0.0),
+      BDouble(Double.NaN), BInt64(7L)), ordered = true)
+    client.bulkWrite("db.br", docs(BDouble(9007199254740992.0), BInt32(0),
+      BDouble(Double.NaN), BDouble(7.5)), ordered = true)
+    client.close()
+    def read(ns: String) = spark.read.format("graftserver").schema("_id INT, k DOUBLE")
+      .option("server_dir", dir).option("ns", ns).load()
+    val s = Shape("2^53", chained = false, (l, r, _) => l.join(r, l("k") === r("k"))
+      .select(l("_id").as("lid"), r("_id").as("rid"), l("k")), "k", Seq("lid", "rid"))
+    val (l, r) = (read("db.bl"), read("db.br"))
+    variants(s).foreach { case (name, q) =>
+      val expected = unpushedRows(name, q(l, r, r))
+      assert(pushed(name, s, q(l, r, r)) == expected, s"$name: $expected")
+    }
+    assert(multiset(s.join(l, r, r)).size == 3)
+  }
 }

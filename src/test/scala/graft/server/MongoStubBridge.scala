@@ -181,12 +181,23 @@ final class StubDriverBackend(val fake: FakeServerClient) {
     def projOf(d: BDoc): Seq[(String, String)] = d.fields.toSeq.collect {
       case (o, BString(ref)) if ref.startsWith("$") => (ref.drop(1), o)
     }
+    /** `{$toDouble: "<ref>"}` → the ref (a DOUBLE key's operand). */
+    object ToDouble {
+      def unapply(v: BsonValue): Option[String] = v match {
+        case d: BDoc => d.fields.toSeq match {
+          case Seq(("$toDouble", BString(ref))) => Some(ref)
+          case _ => None
+        }
+        case _ => None
+      }
+    }
+
     /** One rendered `$lookup`+`$unwind` pair → (from, rightQuery,
       * rightProject, keys as (left OUT, right OUT), leftOuter,
-      * unwind path). */
+      * unwind path, ranges, the `$toDouble` key indices). */
     def parseLookupUnwind(lk: BDoc, unwind: BDoc):
         (String, BQuery, Seq[(String, String)], Seq[(String, String)], Boolean,
-          String, Seq[LookupJoin.RangeKey]) = {
+          String, Seq[LookupJoin.RangeKey], Set[Int]) = {
       val from = lk.get("from") match {
         case Some(BString(c)) => c
         case other => throw new IllegalArgumentException(s"bad from: $other")
@@ -201,6 +212,7 @@ final class StubDriverBackend(val fake: FakeServerClient) {
       }
       var rightQuery: BQuery = BQuery.True
       var eqs: Seq[(String, String)] = Seq.empty // (left OUT, right FIELD)
+      var doubleKeys = Set.empty[Int] // eqs indices compared by $toDouble
       // (left OUT, op, right FIELD) — r17 base / r18 chained range
       // conjuncts; per-var `{$gt: ["$$rN", null]}` null guards skip
       var rngs: Seq[(String, String, String)] = Seq.empty
@@ -222,6 +234,10 @@ final class StubDriverBackend(val fake: FakeServerClient) {
               d.fields.toSeq match {
                 case Seq(("$eq", BArray(Vector(BString(rf), BString(lv)))))
                     if rf.startsWith("$") && lv.startsWith("$$") =>
+                  eqs :+= (letVars(lv.drop(2)), rf.drop(1))
+                case Seq(("$eq", BArray(Vector(ToDouble(rf), ToDouble(lv)))))
+                    if rf.startsWith("$") && lv.startsWith("$$") =>
+                  doubleKeys += eqs.size
                   eqs :+= (letVars(lv.drop(2)), rf.drop(1))
                 case Seq(("$gt", BArray(Vector(BString(lv), BNull))))
                     if lv.startsWith("$$") => // null guard — semantic only
@@ -256,7 +272,8 @@ final class StubDriverBackend(val fake: FakeServerClient) {
         }
       (from, rightQuery, rightProject,
         eqs.map { case (lo, rf) => (lo, outOf(rf)) }, leftOuter, path,
-        rngs.map { case (lo, op, rf) => LookupJoin.RangeKey(lo, op, outOf(rf)) })
+        rngs.map { case (lo, op, rf) => LookupJoin.RangeKey(lo, op, outOf(rf)) },
+        doubleKeys)
     }
 
     var i = 0
@@ -278,10 +295,11 @@ final class StubDriverBackend(val fake: FakeServerClient) {
       val leftProject =
         if (leftOuts.isEmpty) proj
         else proj.map { case (path, out) => (outCol("$" + path), out) }
-      val (from, rq, rp, keys, outer, path, ranges) =
+      val (from, rq, rp, keys, outer, path, ranges, doubleKeys) =
         parseLookupUnwind(bdoc(st(i + 1).get("$lookup"), "$lookup"),
           bdoc(st(i + 2).get("$unwind"), "$unwind"))
-      stages += LookupStage(leftProject, s"$db.$from", rq, rp, keys, outer, ranges)
+      stages += LookupStage(leftProject, s"$db.$from", rq, rp, keys, outer, ranges,
+        doubleKeys = doubleKeys)
       joinedField = path
       leftOuts = leftProject.map(_._2).toSet
       i += 3
