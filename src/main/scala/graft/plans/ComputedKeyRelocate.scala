@@ -98,8 +98,7 @@ object ComputedKeyRelocate extends Rule[LogicalPlan] {
     * future home (the rewrite threads the new attribute through each). */
   private def spineRel(p: LogicalPlan): Option[DataSourceV2Relation] = p match {
     case rel: DataSourceV2Relation
-        if rel.table.isInstanceOf[graft.server.GraftServerTable] ||
-          rel.table.isInstanceOf[graft.source.GraftTable] => Some(rel)
+        if rel.table.isInstanceOf[graft.source.GraftTable] => Some(rel)
     case Filter(_, ch) => spineRel(ch)
     case Project(pl, ch) if pl.forall(_.isInstanceOf[AttributeReference]) =>
       spineRel(ch)
@@ -160,10 +159,8 @@ object ComputedKeyRelocate extends Rule[LogicalPlan] {
       names.zip(dts).map { case (n, t) => StructField(n, t) })
     val newOpts = new CaseInsensitiveStringMap((rel.options.asScala.toMap +
       (ComputedCol.OptionKey -> ComputedCol.render(prior ++ computed))).asJava)
-    val newTable: org.apache.spark.sql.connector.catalog.Table =
-      if (rel.table.isInstanceOf[graft.server.GraftServerTable])
-        new graft.server.GraftServerTable(newSchema, newOpts.asScala.toMap)
-      else new graft.source.GraftTable(newSchema, newOpts.asScala.toMap)
+    val newTable = rel.table.asInstanceOf[graft.source.GraftTable]
+      .withSchema(newSchema, newOpts.asScala.toMap)
     val newAttrs = bins.map { case (name, id, b) =>
       AttributeReference(name, b.dataType, nullable = true)(exprId = id)
     }

@@ -54,7 +54,7 @@ object NestedExtractRelocate extends Rule[LogicalPlan] {
       val leaves = p.collectLeaves()
       leaves.nonEmpty && leaves.forall {
         case r: DataSourceV2Relation =>
-          r.table.isInstanceOf[graft.server.GraftServerTable]
+          graft.server.GraftServerSource.served(r.table)
         case _ => false
       }
     }
@@ -63,7 +63,7 @@ object NestedExtractRelocate extends Rule[LogicalPlan] {
 
   private def relocate(leg: LogicalPlan): LogicalPlan = leg match {
     case p @ Project(projectList, rel: DataSourceV2Relation)
-        if rel.table.isInstanceOf[graft.server.GraftServerTable] &&
+        if graft.server.GraftServerSource.served(rel.table) &&
           projectList.exists(isExtractAlias(_, rel)) =>
       val extracts = projectList.collect {
         case a @ Alias(chain, _) if isExtract(chain, rel) => a
@@ -97,8 +97,8 @@ object NestedExtractRelocate extends Rule[LogicalPlan] {
       }
       val newOpts = new CaseInsensitiveStringMap(
         (rel.options.asScala.toMap + ("column_mapping" -> mappingJson)).asJava)
-      val newTable = new graft.server.GraftServerTable(newSchema,
-        newOpts.asScala.toMap)
+      val newTable = rel.table.asInstanceOf[graft.source.GraftTable]
+        .withSchema(newSchema, newOpts.asScala.toMap)
       val newAttrs = derived.map { case (a, _) =>
         AttributeReference(a.name, a.dataType, nullable = true)(exprId = a.exprId)
       }

@@ -190,7 +190,7 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
   private[plans] def graftConnection(leg: LogicalPlan): Option[(String, String, String)] = {
     val leaves = leg.collectLeaves()
     val ids = leaves.map {
-      case r: DataSourceV2Relation if r.table.isInstanceOf[graft.server.GraftServerTable] =>
+      case r: DataSourceV2Relation if graft.server.GraftServerSource.served(r.table) =>
         val o = r.options
         val ns = Option(o.get("ns")).getOrElse("")
         Some((Option(o.get("client_factory")).getOrElse(""),
@@ -209,7 +209,7 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
   private def ownerOptions(j: Join, a: Attribute): Option[Map[String, String]] =
     j.collectLeaves().collectFirst {
       case r: DataSourceV2Relation
-          if r.table.isInstanceOf[graft.server.GraftServerTable] &&
+          if graft.server.GraftServerSource.served(r.table) &&
             r.outputSet.contains(a) =>
         import scala.jdk.CollectionConverters._
         r.options.asScala.toMap

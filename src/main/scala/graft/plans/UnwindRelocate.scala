@@ -241,9 +241,10 @@ object UnwindRelocate extends Rule[LogicalPlan] {
         sampleNode = Some(s); cur = ch
       case _ => return None
     }
-    val isServer = rel.table.isInstanceOf[graft.server.GraftServerTable]
-    val isFile = rel.table.isInstanceOf[graft.source.GraftTable]
-    if (!isServer && !isFile) return None
+    val table = rel.table match {
+      case t: graft.source.GraftTable => t
+      case _ => return None
+    }
     if (rel.options.containsKey(graft.query.Unwind.PathKey)) return None
     // COMPUTED columns (r17) and unwinds never combine: the unwound
     // readers/pipelines have no injection seam for derived fields —
@@ -401,9 +402,7 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     }
     val newOpts = new CaseInsensitiveStringMap((rel.options.asScala.toMap ++
       unwind.options + ("column_mapping" -> mappingJson)).asJava)
-    val newTable: org.apache.spark.sql.connector.catalog.Table =
-      if (isServer) new graft.server.GraftServerTable(newSchema, newOpts.asScala.toMap)
-      else new graft.source.GraftTable(newSchema, newOpts.asScala.toMap)
+    val newTable = table.withSchema(newSchema, newOpts.asScala.toMap)
     val elAttr = AttributeReference(elOut.name, elementType,
       nullable = true)(exprId = elOut.exprId)
     val posAttr = posOut.map(p => AttributeReference(p.name, p.dataType,

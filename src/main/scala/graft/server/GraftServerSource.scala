@@ -2,16 +2,18 @@ package graft.server
 
 import graft.bson._
 import graft.query.{BQuery, BQueryJson, Unwind}
-import graft.source.{AggPush, FieldResolve, GroupAggParse, GroupedAgg, Planners, Pushdown, SamplePush}
+import graft.source.{AggPush, FieldResolve, GraftScanBuilder, GraftTable, GroupAggParse, GroupedAgg, Planners, Pushdown, RowIteratorReader, SamplePush, ScanSpec, Transport}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter, IsNotNull, IsNull}
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.util
@@ -84,7 +86,7 @@ class GraftServerSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new GraftServerTable(schema, properties.asScala.toMap)
+    new GraftTable(schema, properties.asScala.toMap, ServerTransport)
 }
 
 object GraftServerSource {
@@ -156,6 +158,12 @@ object GraftServerSource {
     finally client.close()
   }
 
+  /** Whether a relation's table is a graftserver table. */
+  def served(t: Table): Boolean = t match {
+    case g: GraftTable => g.transport == ServerTransport
+    case _ => false
+  }
+
   /** `ensure_index` write option: comma-separated fields of ONE compound
     * ascending index (the file source's convention), created before any
     * write task runs. */
@@ -167,52 +175,189 @@ object GraftServerSource {
     }
 }
 
-final class GraftServerTable(tableSchema: StructType, properties: Map[String, String])
-    extends Table with SupportsRead with SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
+/** The served-collection transport of the shared scan skeleton
+  * ([[GraftScanBuilder]], [[GraftScan]]): pushed filters, projection,
+  * sort, limit and skip translate to the per-cursor knobs a server
+  * accepts ([[Find]]) or to one aggregate pipeline; split planning runs
+  * on the driver through [[ServerCollection.planSplits]]; each partition
+  * reader holds exactly one server cursor. A bare COUNT(*) is one
+  * collStats round-trip (core/.../splitter/MongoSplitterFactory.java:66-83).
+  */
+object ServerTransport extends Transport {
+  override val name = "graftserver"
+  override val targetOption = "ns"
+  override val metaCol: String = GraftServerSource.NsMetaCol
+  override val metaComment = "source namespace of this row"
+  override val truncates = false
 
-  /** Provenance metadata: `_ns` = the namespace a row's cursor read
-    * from — the lineage handle of a comma-`ns` multi-namespace union
-    * scan. Populated per partition by the reader; filters on it stay
-    * above the scan; a data column of the same name shadows it.
-    */
-  override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = GraftServerSource.NsMetaCol
-      override def dataType(): org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.StringType
-      override def isNullable: Boolean = false
-      override def comment(): String = "source namespace of this row"
-    })
+  override def newScanBuilder(schema: StructType, options: Map[String, String]): ScanBuilder =
+    new GraftServerScanBuilder(schema, options)
+  override def newWriteBuilder(info: LogicalWriteInfo, options: Map[String, String]): WriteBuilder =
+    new GraftServerWriteBuilder(info.schema(), options)
 
-  override def name(): String =
-    s"graftserver:${properties.getOrElse("ns", "?")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
+  /** `limit` and `collections` shape graftbson's per-partition cursors
+    * and per-entry scans; no server cursor or reader honours them, so
+    * accepting them would silently ignore them. */
+  override def checkOptions(options: Map[String, String]): Unit = {
+    if (options.contains("limit"))
+      throw new IllegalArgumentException(
+        "graftserver does not support the `limit` option (graftbson's " +
+          "per-partition cursor cap): use Spark's .limit(n) on the DataFrame")
+    if (options.contains("collections"))
+      throw new IllegalArgumentException(
+        "graftserver does not support the `collections` option (graftbson's " +
+          "multi-collection entries): list the namespaces in `ns`, " +
+          "comma-separated (ns=db.a,db.b)")
+  }
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftServerScanBuilder(tableSchema, properties ++ options.asScala)
+  /** Null tests on ARRAY-typed columns stay residual (r15 latent-
+    * divergence hunt): the wire form `{$eq/$ne: null}` element-matches on
+    * a live server (`{p: null}` matches `p=[1,null]` and missing fields),
+    * while Spark's IsNull/IsNotNull test the column value itself — Spark
+    * re-checks residuals, so the cost is one codegen'd row test, never
+    * correctness. This also covers an ARRAY-typed unwound ELEMENT
+    * (nested arrays) in the post-unwind $match. */
+  override def keepResidual(cols: Pushdown.Columns): Filter => Boolean = {
+    def arrayCol(a: String): Boolean =
+      FieldResolve.resolveName(cols.schema, a, cols.mapping)
+        .exists(_.dataType.isInstanceOf[ArrayType])
+    (f: Filter) => f match {
+      case IsNull(a) => arrayCol(a)
+      case IsNotNull(a) => arrayCol(a)
+      case _ => false
+    }
+  }
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new GraftServerWriteBuilder(info.schema(),
-      properties ++ info.options().asScala)
+  /** Under uniform storage every Long/Timestamp/String is stored as the
+    * ONE type this engine writes, so the read-semantics ReadLong /
+    * ReadTime / ReadStr (eq, regex) nodes rewrite to their exact BRACKET
+    * forms — renderable server-side (a $match/cursor query) instead of
+    * client-side residual re-checks, and the grouped/join pushdowns'
+    * fully-renderable gates then accept those filters too. */
+  override def finishQuery(q: BQuery, options: Map[String, String]): BQuery =
+    if (Pushdown.uniformStorage(options)) BQuery.uniformReadBracket(q) else q
+
+  override def optionQuery(options: Map[String, String]): BQuery =
+    GraftServerSource.optionQuery(options)
+
+  override def rendersFully(q: BQuery): Boolean = QueryDocs.plan(q).rendersFully
+
+  /** `splitter=single` over one namespace (the reference's
+    * create_input_splits=false / SingleMongoSplitter mode). */
+  override def singleCursor(options: Map[String, String]): Boolean =
+    options.get("splitter").contains("single") &&
+      GraftServerSource.nsList(options).size == 1
+
+  /** A pushed TopN's compound order wins over the option-level cursor
+    * sort. */
+  override val topNOverridesSort = true
+  /** The `$group` pipeline computes over the UNSAMPLED collection. */
+  override val groupedFoldSeesSample = false
+
+  /** The server sorts in BSON STORAGE order, so every order key must be
+    * cursor-order-safe ([[GraftServerScanBuilder.cursorOrderSafe]]); a
+    * COMPUTED key has no stored field (find-land has no `$set`). */
+  override def topNKeyOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
+    GraftServerScanBuilder.cursorOrderSafe(r.dataType, options, Some(r.docPath))
+  /** MIN/MAX probes are sorted limit-1 cursors and `$group` folds in
+    * the stored order. */
+  override def globalAggOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
+    GraftServerScanBuilder.cursorOrderSafe(r.dataType, options, Some(r.docPath))
+  override def minMaxOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
+    GraftServerScanBuilder.cursorOrderSafe(r.dataType, options, Some(r.docPath))
+  override def sumOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
+    GraftServerScanBuilder.sumValueSafe(r.dataType, options)
+
+  /** collStats per namespace — one bounded round-trip at plan time.
+    * Rows only when no query, limit, sample or unwind narrows or widens
+    * the scan (collStats counts the whole collection; a sample keeps a
+    * hash-dependent count). */
+  override def stats(spec: ScanSpec, options: Map[String, String]): (Long, Option[Long]) = {
+    val stats = GraftServerSource.withClient(options) { (client, _) =>
+      GraftServerSource.nsList(options).map(n => client.collStats(n))
+    }
+    (stats.map(s => s.count * s.avgObjSizeBytes).sum,
+      if (spec.query == BQuery.True && spec.limit.isEmpty && spec.sample.isEmpty &&
+          spec.unwind.isEmpty) Some(stats.map(_.count).sum)
+      else None)
+  }
+
+  /** Reported ONLY when the cursor's BSON order provably equals Spark's
+    * order over the read values; an unsafe type still sorts the cursor
+    * (server semantics) but makes no claim to Catalyst. */
+  override def reportsOrder(f: StructField, spec: ScanSpec,
+      options: Map[String, String]): Boolean =
+    spec.unwind.isEmpty && GraftServerScanBuilder.cursorOrderSafe(f.dataType, options)
+  override val runtimeFiltersUnderUnwind = false
+
+  override def describeHead(spec: ScanSpec, options: Map[String, String]): String =
+    s"graftserver ns=${options.getOrElse("ns", "?")} query=${spec.query}"
+  override val describeSep = " "
+  override val describeTopNOrderBy = "ORDER BY "
+  override val describesOffset = true
+  override val describesUnwoundTails = true
+
+  /** Driver-side planning: one bounded probe sequence through the shared
+    * strategy chain (chunks → splitVector → sampled size bounds).
+    * Optional empty-split pruning costs one `find(limit=1)` per split,
+    * the reference's opt-in filterEmptySplits trade. Every partition's
+    * cursor query carries the runtime IN-sets (read-semantics forms: the
+    * join compares READ values). */
+  override def planPartitions(spec: ScanSpec, options: Map[String, String],
+      runtimeIn: Map[String, Seq[BsonValue]]): Array[InputPartition] = {
+    val key = options.getOrElse("key", "_id")
+    val query = Pushdown.withRuntimeIn(spec.query, runtimeIn)
+    val nss = GraftServerSource.nsList(options)
+    def whole(ns: String): InputPartition =
+      GraftServerPartition(ns, BQuery.KeyRange(key, None, None), Seq.empty, query)
+    // a COMPUTED split key has no stored field the planners could probe
+    // (r17) — a key-range $match on it would silently match nothing
+    if (spec.computed.exists(_.out == key)) nss.map(whole).toArray
+    // one partition: bounded probes — no splits, no row-wise scans
+    else if (spec.agg.isDefined) Array(whole(GraftServerSource.ns(options)))
+    // one partition PER NAMESPACE: a `$group` pipeline round-trip each
+    // (the partial protocol folds the per-namespace group rows); an
+    // unwound ROW pipeline with a $sort/$skip/$limit tail (key-range
+    // splits would need the range rendered into its $match, a bracket
+    // form exact only under uniform keys; the tail bounds each
+    // pipeline's output anyway); or `splitter=single` — ONE cursor over
+    // the whole range, the mode that makes an accepted OFFSET sound
+    else if (spec.grouped.isDefined || spec.tailsPostUnwind ||
+        options.get("splitter").contains("single")) nss.map(whole).toArray
+    else GraftServerSource.withClient(options) { (client, _) =>
+      val target = options.get("split_size").map(_.toLong).getOrElse(8L * 1024 * 1024)
+      nss.flatMap { ns =>
+        val coll = new ServerCollection(client, ns)
+        var splits = coll.planSplits(key, target)
+        runtimeIn.get(key).foreach(vs => splits = Planners.pruneByValues(splits, vs))
+        if (options.get("filter_empty").exists(_.toBoolean) && spec.query != BQuery.True)
+          splits = Planners.pruneEmpty(splits, coll.stats(key), spec.query)
+        splits.map(s =>
+          GraftServerPartition(ns, s.range, s.preferredLocations, query): InputPartition)
+      }.toArray
+    }
+  }
+
+  override def createReader(p: InputPartition, spec: ScanSpec,
+      options: Map[String, String]): PartitionReader[InternalRow] = {
+    val part = p.asInstanceOf[GraftServerPartition]
+    if (spec.grouped.isDefined) new ServerGroupedAggReader(part, spec, options)
+    else if (spec.agg.isDefined) new ServerAggReader(spec, options)
+    else new GraftServerPartitionReader(part, spec, options)
+  }
+
+  override def microBatchStream(spec: ScanSpec, options: Map[String, String]): MicroBatchStream =
+    new GraftServerMicroBatchStream(spec, options)
 }
 
-/** Filter + projection + partial-limit pushdown, all translated to the
-  * per-cursor knobs a server accepts ([[Find]]); a bare COUNT(*) is
-  * answered from one collStats round-trip (the reference's count source,
-  * core/.../splitter/MongoSplitterFactory.java:66-83) without opening a
-  * single cursor. Residual filters Spark keeps are re-checked above the
-  * scan, exactly like the file source.
+/** graftserver's scan builder: the shared [[GraftScanBuilder]] plus join
+  * pushdown (SupportsPushDownJoin). Once a join is pushed, LIMIT, TopN,
+  * OFFSET, aggregates and samples push into the joined pipeline instead
+  * of the plain scan.
   */
 final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String, String])
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns with SupportsPushDownLimit
-    with SupportsPushDownOffset
-    with SupportsPushDownAggregates with SupportsPushDownTopN
-    with SupportsPushDownTableSample with SupportsPushDownJoin {
+    extends GraftScanBuilder(tableSchema, options, ServerTransport)
+    with SupportsPushDownJoin {
 
   // cross-instance access for pushDownJoin (ctor params are
   // instance-private in Scala)
@@ -220,238 +365,43 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   private[server] def joinOptions: Map[String, String] = options
   private[server] def joinMapping: Map[String, String] = mapping
 
-  // `limit` is graftbson's per-partition cursor cap; no server cursor or
-  // reader honours it, so accepting it would silently ignore it
-  if (options.contains("limit"))
-    throw new IllegalArgumentException(
-      "graftserver does not support the `limit` option (graftbson's " +
-        "per-partition cursor cap): use Spark's .limit(n) on the DataFrame")
-
-  /** Column-name remapping (`column_mapping`: Spark column -> dotted
-    * document field, the `mongo.columns.mapping` analog,
-    * HiveMongoInputFormat.java:211-240, r14 on the SERVER transport too)
-    * — pushed filters, sample keys, top-n orders, group keys, probes, and
-    * join keys all resolve through it (FieldResolve composes a mapped
-    * HEAD with a verbatim nested tail), and the readers decode by
-    * document path. Mapped columns need an explicit read schema
-    * (inference samples document names).
-    *
-    * DERIVED columns (r17, `computed_columns` — absorbed by
-    * ComputedKeyRelocate): materialized by a `$set` in pipeline-rendered
-    * paths (grouped aggregates, join legs) and injected by the readers
-    * on plain cursor reads. Pushdowns that would address the synthetic
-    * field in FIND-land (no `$set` exists there) refuse: filters on a
-    * computed column stay residual (Spark re-checks over the injected
-    * value — exact), plain-scan TopN / MIN-MAX probes / sample keys /
-    * split keys refuse outright.
-    */
-  private[server] val cols = Pushdown.Columns.of(tableSchema, options)
-  private val mapping = cols.mapping
-
-  /** `$unwind` directive (r14, injected by the UnwindRelocate rule when
-    * an explode() sits directly over this relation): the scan emits one
-    * row per array element. `unwind_element` names the element COLUMN
-    * (mapped to the array's doc path via column_mapping so group keys
-    * resolve); filters on it stay residual — pre-unwind the path holds
-    * the ARRAY, so a pushed element filter would carry mongo's
-    * element-match semantics, not Spark's row semantics. Row-count/
-    * row-position pushdowns (limit/offset/top-n/sample/probes) refuse:
-    * they would count/sort PARENT docs, not post-unwind rows.
-    */
-  private val unwind: Option[Unwind] = Unwind.fromOptions(options)
-  /** POST-unwind query (accepted element-column filters). */
-  private var unwindPost: BQuery = BQuery.True
-
-  private var required: StructType = tableSchema
-  private var pushedQuery: BQuery = BQuery.True
-  private var pushed: Array[Filter] = Array.empty
-  private var residuals: Array[Filter] = Array.empty
-  private var limit: Option[Int] = None
-  private var offset: Option[Int] = None
-  // compound order spec (col, descending)+ and the limit
-  private var topN: Option[(Seq[(String, Boolean)], Int)] = None
-  private var aggPushed: Option[Seq[AggPush]] = None
-  private var groupedAgg: Option[GroupedAgg] = None
-  private var sample: Option[SamplePush] = None
-
-  /** Pushed TABLESAMPLE — the same deterministic keyed Bernoulli as the
-    * file source ([[SamplePush]]), evaluated client-side by
-    * the partition reader over the cursor's documents (MQL has no md5,
-    * so the docs still cross the wire; the win is reproducibility — the
-    * server's own `$sample` stage is random — plus the removal of
-    * Spark's Sample node and a fraction-scaled size estimate). The
-    * `sample_key` option names an Int/Long/String column; int32/int64
-    * storages of one value render identically, so the predicate is
-    * storage-uniform for integer keys without any opt-in (a double
-    * STORAGE under a Long read would drop the row — the same
-    * read-refusal RowCodec gives it). Every row-count- or
-    * row-position-bearing pushdown refuses while a sample is pushed:
-    * the server-side `$group`/probe/top-n/limit/offset paths would all
-    * compute over the UNSAMPLED collection.
-    */
   override def pushTableSample(lower: Double, upper: Double,
-      withReplacement: Boolean, seed: Long): Boolean = {
-    // `sample_key` may name a nested subfield — the keep-predicate and
-    // the cursor projection both work on dotted paths
-    val keyCol = Pushdown.sampleKey(cols, options, unwind)
-    val eligible = !withReplacement && keyCol.isDefined &&
-      limit.isEmpty && offset.isEmpty && topN.isEmpty &&
-      aggPushed.isEmpty && groupedAgg.isEmpty && joined.isEmpty
-    if (!eligible) false
-    else {
-      sample = Some(SamplePush(keyCol.get.docPath, lower, upper, seed))
-      true
-    }
-  }
+      withReplacement: Boolean, seed: Long): Boolean =
+    joined.isEmpty && super.pushTableSample(lower, upper, withReplacement, seed)
 
-  /** `_ns` metadata predicates are not document queries (residual); the
-    * rest is [[Pushdown.splitFilters]], with two wire-only steps around
-    * it. Before: null tests on ARRAY-typed columns stay residual (r15
-    * latent-divergence hunt): the wire form `{$eq/$ne: null}`
-    * element-matches on a live server (`{p: null}` matches `p=[1,null]`
-    * and missing fields), while Spark's IsNull/IsNotNull test the column
-    * value itself — Spark re-checks residuals, so the cost is one
-    * codegen'd row test, never correctness. This also covers an
-    * ARRAY-typed unwound ELEMENT (nested arrays) in the post-unwind
-    * $match. After: under uniform storage every Long/Timestamp/String is
-    * stored as the ONE type this engine writes, so the read-semantics
-    * ReadLong / ReadTime / ReadStr (eq, regex) nodes rewrite to their exact
-    * BRACKET forms — renderable server-side (a $match/cursor query)
-    * instead of client-side residual re-checks, and the grouped/join
-    * pushdowns' fully-renderable gates then accept those filters too (a
-    * plain `WHERE _id > 5` no longer blocks the `$group` pipeline).
-    * Posexplode POS filters are element-scoped: post-unwind the
-    * synthetic pos field exists (includeArrayIndex on pipelines, a
-    * reader-injected match doc on the parent cursor), and int32 literals
-    * compare numerically against its int64 values on both the wire and
-    * this matcher.
-    */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    def arrayNullTest(f: Filter): Boolean = f match {
-      case org.apache.spark.sql.sources.IsNull(a) =>
-        FieldResolve.resolveName(tableSchema, a, mapping)
-          .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      case org.apache.spark.sql.sources.IsNotNull(a) =>
-        FieldResolve.resolveName(tableSchema, a, mapping)
-          .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      case _ => false
-    }
-    val split = Pushdown.splitFilters(cols, unwind, filters,
-      GraftServerSource.NsMetaCol, keepResidual = arrayNullTest)
-    def bracketed(q: BQuery): BQuery =
-      if (Pushdown.uniformStorage(options)) BQuery.uniformReadBracket(q) else q
-    unwindPost = bracketed(split.post)
-    pushedQuery = bracketed(split.query)
-    pushed = split.pushed
-    residuals = split.residual
-    residuals
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** Pushed per cursor (MongoInputSplit.java:291-296) — globally correct
-    * only with one partition, so reported partial; Spark re-applies the
-    * global limit.
-    */
+  /** Over a pushed join the `$limit` counts FINAL joined rows — checked
+    * BEFORE the unwind arm: with a driving-side unwind composed into the
+    * join (r15) it sits after the last `$unwind`, partial per pipeline (a
+    * pushed join TopN already carries its own $limit); the pipeline's
+    * rows are UNSAMPLED, so a carried sample refuses. */
   override def pushLimit(n: Int): Boolean =
-    // the cursor limit counts UNSAMPLED rows; the sampled prefix may be
-    // shorter than the limit needs
     if (sample.isDefined) false
     else if (joined.isDefined) {
-      // joined arm — checked BEFORE the unwind arm: with a driving-side
-      // unwind composed into the join (r15), the `$limit` counts FINAL
-      // joined rows after the last `$unwind`, partial per pipeline (a
-      // pushed join TopN already carries its own $limit); the
-      // pipeline's rows are UNSAMPLED, so a carried sample refuses
       if (joinedAgg.isDefined || joinTopN.isDefined ||
           joinSamples.nonEmpty || joinOffset.isDefined) false
       else { joinLimit = Some(n.toLong); true }
     }
-    else if (unwind.isDefined) {
-      // over an unwound scan the limit must count UNWOUND rows — the
-      // find() cursor cannot, but the unwound ROW pipeline's `$limit`
-      // tail can ([[ServerClient.unwoundRead]]); partial per namespace
-      if (unwoundTailOk) { limit = Some(n); true } else false
-    } else { limit = Some(n); true }
-  override def isPartiallyPushed(): Boolean = true
+    else super.pushLimit(n)
 
-  /** Offset (cursor skip) pushdown — the mongo.input.skip analog, same
-    * single-split caveat as the file source: Spark deletes an accepted
-    * OFFSET from the plan, so it is only sound when the scan provably
-    * runs as ONE cursor, which the `splitter=single` option guarantees
-    * (the reference's create_input_splits=false / SingleMongoSplitter
-    * mode). Residual filters refuse: skip must count POST-filter rows
-    * and residuals re-check above the scan.
-    */
+  /** OFFSET over a pushed join: a `$skip` tail counting FINAL joined rows
+    * — sound only as ONE pipeline (`splitter=single` on the DRIVING side
+    * guarantees it: the joined scan partitions by the driving side's
+    * options, which for a mirrored RIGHT OUTER join are the OTHER
+    * builder's, already recorded in drivingOpts), with no other tail
+    * claimed and no carried sample (the skip would count unsampled rows). */
   override def pushOffset(n: Int): Boolean =
     if (joined.isDefined) {
-      // OFFSET over a pushed join: a `$skip` tail counting FINAL joined
-      // rows — sound only as ONE pipeline (`splitter=single` on the
-      // DRIVING side guarantees it: the joined scan partitions by the
-      // driving side's options, which for a mirrored RIGHT OUTER join
-      // are the OTHER builder's, already recorded in drivingOpts), with
-      // no other tail claimed and no carried sample (the skip would
-      // count unsampled rows)
       if (drivingOpts.get("splitter").contains("single") &&
           joinedAgg.isEmpty && joinLimit.isEmpty && joinTopN.isEmpty &&
           joinSamples.isEmpty && joinOffset.isEmpty) {
         joinOffset = Some(n.toLong); true
       } else false
-    } else if (options.get("splitter").contains("single") &&
-        GraftServerSource.nsList(options).size == 1 && residuals.isEmpty &&
-        aggPushed.isEmpty && groupedAgg.isEmpty && topN.isEmpty &&
-        sample.isEmpty &&
-        // over an unwound scan the skip counts UNWOUND rows: the
-        // pipeline's `$skip` tail (same single-pipeline soundness rule)
-        (unwind.isEmpty || unwoundTailOk)) {
-      offset = Some(n); true
-    } else false
+    } else super.pushOffset(n)
 
-  /** ORDER BY k1[, k2, ...] LIMIT n per cursor (`cursor.sort().limit()`
-    * with a compound sort doc, MongoInputSplit.java:281-296), reported
-    * PARTIAL: each partition returns its local sorted top-n, a superset
-    * of its contribution to the global one, and Spark folds them. The
-    * server sorts in BSON STORAGE order, so EVERY order key must be of
-    * a Spark type all of whose readable storages share one
-    * consistently-ordered BSON bracket: Int/Double (numeric bracket,
-    * numeric order) and Boolean always; Long and Timestamp only under
-    * `assume_uniform_storage=true` (a BDate reads as a LongType's
-    * milliseconds but sorts in the date bracket; BTimestamp and BDate
-    * both read as TimestampType micros but sort in different brackets)
-    * — collections written by THIS engine are uniform
-    * (RowCodec.fromCatalyst: Long→int64, Timestamp→date), so the opt-in
-    * is honest for round-trip pipelines. Strings are refused outright
-    * (four storage brackets read as one string). Null ordering must
-    * match BSON's per key (nulls/missing first ascending, last
-    * descending — Spark's defaults). Residual filters refuse: they run
-    * above the scan and a pre-filter top-n might not survive them.
-    */
   override def pushTopN(
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
-      n: Int): Boolean = {
-    if (joined.isDefined) return pushJoinedTopN(orders, n)
-    if (aggPushed.isDefined || groupedAgg.isDefined ||
-        limit.isDefined || offset.isDefined || residuals.nonEmpty ||
-        sample.isDefined) return false
-    // over an unwound scan the top-n selects among UNWOUND rows: the
-    // `$sort`+`$limit` tail of the unwound ROW pipeline (order keys may
-    // be the element column — post-unwind its doc path holds the
-    // element — or parents; the bracket-safety gates below apply as-is)
-    if (unwind.isDefined && !unwoundTailOk) return false
-    // order keys may be NESTED subfields: `{"meta.score": -1}` is a
-    // legal cursor sort doc (dotted-path key extraction is core server
-    // behavior — the reference's MongoPathRetriever convention); the
-    // bracket-safety gate applies to the LEAF type. A COMPUTED order key
-    // has no stored field a cursor sort could walk (find-land has no
-    // $set) — refused; the joined arm's pipeline $sort runs after the
-    // $set and accepts them
-    topN = Pushdown.topNOrder(cols, orders, r =>
-        GraftServerScanBuilder.cursorOrderSafe(r.dataType, options, Some(r.docPath)))
-      .map(keys => (keys.map { case (r, desc) => (r.docPath, desc) }, n))
-    topN.isDefined
-  }
+      n: Int): Boolean =
+    if (joined.isDefined) pushJoinedTopN(orders, n) else super.pushTopN(orders, n)
 
   /** `ORDER BY ... LIMIT n` over a PUSHED JOIN: a `$sort`+`$limit` tail
     * on the lookup pipeline — "top 10 orders with customer names" never
@@ -474,29 +424,9 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     joinTopN.isDefined
   }
 
-  /** Aggregate pushdown, two strategies in preference order:
-    *
-    *  1. Whole-collection COUNT(*)/MIN/MAX with NO filter surface —
-    *     bounded PROBES: COUNT(*) is one collStats; MIN/MAX are one
-    *     sorted limit-1 cursor each (the index walk a server runs for
-    *     them). Zero documents scanned.
-    *  2. Everything else — the `$match`+`$group` PIPELINE
-    *     ([[pushGroupedAggregation]], `_id: null` when there is no
-    *     group-by): filtered global aggregates, SUM/COUNT(col), and
-    *     grouped aggregates all answer in one aggregate() round-trip per
-    *     namespace. (AVG arrives here too: Spark rewrites a
-    *     partial-pushdown AVG into SUM+COUNT before pushing.)
-    *
-    * Both report PARTIAL, so Spark's own final aggregate folds the
-    * returned row(s) — same protocol as the file source's per-file
-    * partials.
-    */
-  override def pushAggregation(aggregation: Aggregation): Boolean = {
-    if (joined.isDefined) return pushJoinedAggregation(aggregation)
-    if (aggregation.groupByExpressions.isEmpty && tryProbeAggregation(aggregation))
-      return true
-    pushGroupedAggregation(aggregation)
-  }
+  override def pushAggregation(aggregation: Aggregation): Boolean =
+    if (joined.isDefined) pushJoinedAggregation(aggregation)
+    else super.pushAggregation(aggregation)
 
   /** Aggregate pushed THROUGH a pushed join: the `$group` stage appends
     * to the `$lookup` pipeline (left outputs referenced at the top
@@ -518,65 +448,10 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     def sideOpts(r: FieldResolve.Ref): Map[String, String] =
       joinedColOpts.getOrElse(r.docPath.split('.').head, options)
     joinedAgg = GroupAggParse.parse(aggregation, Pushdown.Columns(joinedSchema).resolve,
-      r => GraftServerScanBuilder.GroupKeyTypes.contains(r.dataType),
-      r => GraftServerScanBuilder.aggValueSafe(r.dataType, sideOpts(r)),
+      r => Pushdown.GroupKeyTypes.contains(r.dataType),
+      r => GraftServerScanBuilder.cursorOrderSafe(r.dataType, sideOpts(r)),
       r => GraftServerScanBuilder.sumValueSafe(r.dataType, sideOpts(r))).map(GroupedAgg.of)
     joinedAgg.isDefined
-  }
-
-  private def tryProbeAggregation(aggregation: Aggregation): Boolean = {
-    val eligible =
-      pushedQuery == BQuery.True && !options.contains("query") &&
-        limit.isEmpty && sample.isEmpty && joined.isEmpty && unwind.isEmpty
-    if (!eligible) return false
-    // probe columns may be nested subfields — the sorted limit-1 probe
-    // cursor sorts and projects by dotted path natively
-    aggPushed = Pushdown.globalAgg(cols, aggregation, r =>
-      GraftServerScanBuilder.aggValueSafe(r.dataType, options, Some(r.docPath)))
-    aggPushed.isDefined
-  }
-
-  /** GROUPED / filtered-global aggregate pushdown — translated to one
-    * server-side `$match`+`$group` pipeline per namespace
-    * ([[QueryDocs.groupStages]]; server-side `aggregate()` is the
-    * reference's established pattern, SampleSplitter.java:79-88).
-    * Reported PARTIAL (the default), so the protocol only needs the
-    * server grouping to REFINE Spark's: Spark re-groups the returned
-    * rows on the read group values and folds the partials (sum of
-    * counts, min of mins, ...), which also makes the multi-namespace
-    * union and any storage-split group (int32 5 vs int64 5 reading as
-    * one Spark value) merge correctly. Eligibility: zero or more
-    * single-column group keys of read-faithful types (zero = the
-    * `_id: null` global pipeline — `SELECT count(*) ... WHERE x`
-    * answers in one round-trip instead of a scan); aggregates are
-    * COUNT(*) / COUNT(col) / MIN / MAX over the cursor-safe
-    * [[GraftServerScanBuilder.AggTypes]] plus SUM over exact numerics
-    * (AVG never reaches here by name: Spark rewrites a partial-pushdown
-    * AVG into SUM+COUNT first); the WHOLE pushed query must render
-    * server-side (a residual cannot be re-checked after grouping — the
-    * rows are gone); no limit/top-n/offset claimed the scan.
-    */
-  private def pushGroupedAggregation(aggregation: Aggregation): Boolean = {
-    if (limit.isDefined || offset.isDefined ||
-        topN.isDefined || residuals.nonEmpty ||
-        // the server-side $group computes over the UNSAMPLED collection
-        sample.isDefined || joined.isDefined) return false
-    // the POST-unwind $match sits between $unwind and $group — it must
-    // render fully too (its rows are gone after grouping)
-    if (!QueryDocs.plan(builderQuery).rendersFully ||
-        !QueryDocs.plan(unwindPost).rendersFully) return false
-    // group keys and aggregate inputs may be NESTED subfields — the
-    // resolver walks the nested StructType; `$group: {_id: "$meta.lang"}`
-    // is native MQL, and [[QueryDocs.groupStageDoc]] sanitizes the
-    // dotted names a compound `_id` / accumulator FIELD cannot carry.
-    // Zero aggregates + >=1 group key = SELECT DISTINCT: a `$group`
-    // with only `_id` answers it in #distinct-keys docs per namespace.
-    groupedAgg = GroupAggParse.parse(aggregation, cols.resolve,
-      r => GraftServerScanBuilder.GroupKeyTypes.contains(r.dataType),
-      r => GraftServerScanBuilder.aggValueSafe(r.dataType, options,
-        Some(r.docPath)),
-      r => GraftServerScanBuilder.sumValueSafe(r.dataType, options)).map(GroupedAgg.of)
-    groupedAgg.isDefined
   }
 
   // ---- join pushdown (SupportsPushDownJoin) ----
@@ -661,14 +536,6 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       // bracket-style); the lookup side re-checks below.
       QueryDocs.plan(builderQuery).isExact &&
       (unwind.isEmpty || QueryDocs.plan(unwindPost).rendersFully)
-
-  /** This side's full builder-time query: option-level AND pushed. */
-  private def builderQuery: BQuery =
-    BQuery.and(GraftServerSource.optionQuery(options), pushedQuery)
-
-  /** The query a plain scan or driving pipeline runs: [[builderQuery]]
-    * AND the pre-unwind parent prune (True without one). */
-  private def scanQuery: BQuery = BQuery.and(builderQuery, unwindPrune)
 
   // The LOOKUP side additionally needs no `$unwind` (element rows are
   // not parent-atomic across the join boundary) — pushDownJoin gates
@@ -998,43 +865,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
           limit = joinLimit, topN = joinTopN.map { case (s, n) => (s, n.toLong) },
           skip = joinOffset),
         joinedSchema, drivingOpts, joinedAgg, joinSamples)
-    case None =>
-      new GraftServerScan(required, scanQuery, limit, options, aggPushed, topN,
-        groupedAgg, offset, sample,
-        nsMeta = required.fieldNames.contains(GraftServerSource.NsMetaCol) &&
-          !tableSchema.fieldNames.contains(GraftServerSource.NsMetaCol),
-        unwind = unwind, unwindPost = unwindPost,
-        unwoundTails = unwind.isDefined &&
-          (limit.isDefined || topN.isDefined || offset.isDefined))
-  }
-
-  /** Eligibility of a row-count/-order tail (LIMIT / TopN / OFFSET) over
-    * an UNWOUND scan: those must count unwound rows, so the read becomes
-    * the [[ServerClient.unwoundRead]] aggregate pipeline — which needs
-    * BOTH queries fully server-renderable (rows are gone after the
-    * tail; no client-side residual or post re-check is possible) and no
-    * option-level cursor `sort` (a PARENT-cursor semantic the pipeline
-    * cannot honor).
-    */
-  private def unwoundTailOk: Boolean =
-    unwind.isDefined && residuals.isEmpty && !options.contains("sort") &&
-      QueryDocs.plan(builderQuery).rendersFully && QueryDocs.plan(unwindPost).rendersFully
-
-  /** Pre-unwind PARENT pruning ([[BQuery.parentPrune]]): under a
-    * non-outer `$unwind` with a pushed post-unwind match, parents with
-    * no satisfying element never cross the wire — `$elemMatch` can walk
-    * a multikey index where the post `$match` scans unwound rows. A
-    * prune, not a filter (the exact post match still runs), so it is
-    * conjoined only when it renders fully server-side: a client-side
-    * superset re-check would be pure overhead on top of the post match.
-    * Skipped for ARRAY/MAP-typed elements (nested-array `$elemMatch`
-    * traversal is a documented matcher/wire divergence) and for OUTER
-    * unwinds (a never-matching array still owes its null-element row
-    * to a null-matching post query).
-    */
-  private def unwindPrune: BQuery = {
-    val prune = Pushdown.unwindPrune(tableSchema, unwind, unwindPost)
-    if (QueryDocs.plan(prune).rendersFully) prune else BQuery.True
+    case None => super.build()
   }
 }
 
@@ -1137,7 +968,7 @@ final class GraftServerJoinReaderFactory(join: LookupJoin, schema: StructType,
 final class GraftServerJoinReader(p: GraftServerPartition, join: LookupJoin,
     schema: StructType, options: Map[String, String],
     grouped: Option[GroupedAgg], samples: Seq[SamplePush])
-    extends PartitionReader[InternalRow] {
+    extends RowIteratorReader {
 
   private val client = GraftServerSource.factory(options).create(options)
 
@@ -1228,54 +1059,42 @@ final class GraftServerJoinReader(p: GraftServerPartition, join: LookupJoin,
     }
   }
 
-  private var row: InternalRow = _
-
-  override def next(): Boolean =
-    if (cursor.hasNext) { row = RowCodec.toRow(cursor.next(), schema); true }
-    else false
-
-  override def get(): InternalRow = row
+  override protected val rows: Iterator[InternalRow] =
+    cursor.map(RowCodec.toRow(_, schema))
 
   override def close(): Unit = client.close()
 }
 
 object GraftServerScanBuilder {
-  /** Spark-type domains where the server's cursor order over the stored
-    * values IS Spark's order over the read values (same reasoning as the
-    * file source's TopN pushdown: exact long/µs/double keys; strings and
-    * floats refused).
+  /** Can the server's STORED order on a column of this Spark type — a
+    * cursor sort (TopN, the `sort` option), a `$min`/`$max` fold or a
+    * sorted limit-1 MIN/MAX probe — be trusted as Spark's order over the
+    * READ values? Int/Double share one consistently-ordered numeric
+    * bracket, Boolean its own, and DateType is single-bracket storage
+    * whose read (epoch-day floor) is monotone over it; Long and Timestamp
+    * span two brackets (date vs numeric / date vs timestamp) unless the
+    * caller asserts uniform storage — true for every collection this
+    * engine wrote (RowCodec stores Long→int64, Timestamp→date, always).
     *
-    * NaN caveat (DoubleType, latent — applies to the MIN/MAX probes, the
-    * `$group` `$min`/`$max` path, and TopN alike): BSON's total order
-    * places NaN BELOW all numbers while Spark orders NaN ABOVE every
-    * double, so a NaN-containing double column's pushed MIN comes back
-    * NaN where Spark's own would be the smallest real number (and a
-    * pushed MAX loses the NaN Spark would keep). Collections written by
-    * THIS engine normally carry no NaN (none of the catalog's writers
-    * emit one), but a foreign collection might — exclude NaN rows with a
-    * pushed `$ne` filter, or project the column through a no-op
-    * expression to keep the aggregate Spark-side, when that matters.
+    * STRINGS (r18) admit when the column's DOC field is declared in
+    * `ascii_columns` (plus uniform storage): the server orders in
+    * binary/BSON order (live: Spark's UTF-8 order for ANY strings;
+    * sandbox: UTF-16, exact over ASCII), and the readers VERIFY the
+    * returned values are ASCII ([[asciiCheck]]) — sound, because a value
+    * wrongly chosen must have won a comparison the orders disagree on,
+    * which needs BOTH operands non-ASCII. `docField` None (callers
+    * without doc-field resolution) keeps strings refused.
+    *
+    * NaN caveat (DoubleType, latent): BSON's total order places NaN
+    * BELOW all numbers while Spark orders NaN ABOVE every double, so a
+    * NaN-containing double column's pushed MIN comes back NaN where
+    * Spark's own would be the smallest real number (and a pushed MAX
+    * loses the NaN Spark would keep). Collections written by THIS engine
+    * normally carry no NaN, but a foreign collection might — exclude NaN
+    * rows with a pushed `$ne` filter, or project the column through a
+    * no-op expression to keep the operator Spark-side, when that matters.
     */
-  /** Can a server-evaluated MIN/MAX/SUM over a column of this Spark type
-    * be trusted as Spark's own aggregate over the READ values? The
-    * server's `$min`/`$max` walk the CROSS-BRACKET stored order and
-    * `$sum` skips non-numeric storages, so types readable from MORE THAN
-    * ONE bracket (LongType: int/long vs date; TimestampType: date vs
-    * timestamp) are only safe under `assume_uniform_storage` — the same
-    * gate the TopN path always had (r13: previously ungated here, a
-    * latent mixed-storage divergence). Int/Double/Boolean/Date are
-    * single-bracket (or single-order) reads and always safe.
-    */
-  /** MIN/MAX input gate. STRINGS (r18): admitted when the column's DOC
-    * field is declared in `ascii_columns` (plus uniform storage) — the
-    * server folds `$min`/`$max` in BSON order (live: binary = Spark's
-    * UTF-8 order for ANY strings; sandbox: UTF-16, exact over ASCII),
-    * and the reader VERIFIES the returned extremum is ASCII
-    * ([[asciiCheck]]): a fold result that differs between the orders
-    * must itself be non-ASCII (every comparison against an ASCII value
-    * agrees in both orders, so an ASCII winner beat every contender
-    * correctly) — the check is therefore sound, not just a heuristic. */
-  def aggValueSafe(dt: org.apache.spark.sql.types.DataType,
+  def cursorOrderSafe(dt: org.apache.spark.sql.types.DataType,
       options: Map[String, String],
       docField: Option[String] = None): Boolean = {
     import org.apache.spark.sql.types._
@@ -1331,290 +1150,17 @@ object GraftServerScanBuilder {
     dt == IntegerType || dt == DoubleType ||
       (dt == LongType && Pushdown.uniformStorage(options))
   }
-
-  val AggTypes: Set[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    // DateType is SINGLE-bracket: only BDate storage reads as a date
-    // (RowCodec), and epoch-day flooring is monotone over BSON date
-    // order — a stored-order min/max IS a read-order min/max
-    Set(IntegerType, LongType, DoubleType, BooleanType, TimestampType, DateType)
-  }
-
-  /** Types usable as a pushed GROUP key. Wider than [[AggTypes]]:
-    * grouping needs only read-value EQUALITY to be refined by the
-    * server's grouping (partial pushdown re-merges), not a faithful
-    * cross-bracket ORDER — so strings, unsafe for min/max/top-n, are
-    * fine as group keys.
-    */
-  val GroupKeyTypes: Set[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    // DateType: the server may split one read-day into several stored-
-    // millis groups — a strict REFINEMENT the partial protocol re-merges
-    Set(StringType, IntegerType, LongType, DoubleType, BooleanType,
-      TimestampType, DateType)
-  }
-
-  /** Can a server cursor sorted on a column of this Spark type be
-    * trusted as Spark order over READ values? Int/Double share one
-    * consistently-ordered numeric bracket, Boolean its own; Long and
-    * Timestamp span two brackets (date vs numeric / date vs timestamp)
-    * unless the caller asserts uniform storage — true for every
-    * collection this engine wrote (RowCodec stores Long→int64,
-    * Timestamp→date, always).
-    */
-  def cursorOrderSafe(dt: org.apache.spark.sql.types.DataType,
-      options: Map[String, String],
-      /** r18: a STRING order key admits when its DOC field is declared
-        * in `ascii_columns` (plus uniform storage) — the cursor order is
-        * the server's binary/BSON order (live: Spark-exact for any
-        * strings; sandbox: UTF-16, exact over ASCII), and the reader
-        * verifies the RETURNED key values are ASCII ([[asciiCheck]] —
-        * sound: a wrongly-included top-n member must have won a
-        * comparison the orders disagree on, which requires BOTH
-        * operands non-ASCII, so an all-ASCII result set is correct).
-        * None (callers without doc-field resolution) keeps strings
-        * refused. */
-      docField: Option[String] = None): Boolean = {
-    import org.apache.spark.sql.types._
-    // DateType: single-bracket storage whose read (epoch-day floor) is
-    // monotone over the cursor order — always safe (read-value ties are
-    // LIMIT's inherent nondeterminism, same as Spark's own TakeOrdered)
-    val always = Set[DataType](IntegerType, DoubleType, BooleanType, DateType)
-    val uniform = Set[DataType](LongType, TimestampType)
-    val uniformOk = Pushdown.uniformStorage(options)
-    if (dt == StringType)
-      uniformOk && docField.exists(f => asciiCols(options).contains(f))
-    else always.contains(dt) || (uniform.contains(dt) && uniformOk)
-  }
 }
 
-final class GraftServerScan(requiredSchema: StructType, query: BQuery,
-    limit: Option[Int], options: Map[String, String],
-    pushedAgg: Option[Seq[AggPush]] = None,
-    topN: Option[(Seq[(String, Boolean)], Int)] = None,
-    grouped: Option[GroupedAgg] = None,
-    offset: Option[Int] = None,
-    sample: Option[SamplePush] = None,
-    nsMeta: Boolean = false,
-    unwind: Option[Unwind] = None,
-    unwindPost: BQuery = BQuery.True,
-    /** A LIMIT/TopN/OFFSET tail counts UNWOUND rows: the read runs as
-      * the [[ServerClient.unwoundRead]] pipeline, one per namespace. */
-    unwoundTails: Boolean = false)
-    extends Scan with Batch with SupportsRuntimeV2Filtering
-    with SupportsReportStatistics with SupportsReportOrdering {
-
-  /** Spark column -> document field (column_mapping, r14 on the server
-    * transport) and the computed columns; pushdown resolution happened
-    * in the builder — the scan only needs them for runtime filters,
-    * ordering reports, description, and split planning. */
-  private val cols = Pushdown.Columns.of(requiredSchema, options)
-  private def sparkColFor(f: String) = graft.source.ColumnMapping.sparkColFor(cols.mapping, f)
-
-  /** collStats-based size report — the stats role collstats plays in the
-    * reference's planning (MongoSplitterFactory.java:66-83), surfaced to
-    * Catalyst so small server collections auto-broadcast in joins. One
-    * bounded round-trip per namespace at plan time. numRows only when no
-    * query narrows the scan (collStats counts the whole collection).
-    */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val stats = GraftServerSource.withClient(options) { (client, _) =>
-      GraftServerSource.nsList(options).map(n => client.collStats(n))
-    }
-    override def sizeInBytes(): java.util.OptionalLong = {
-      val raw = stats.map(s => s.count * s.avgObjSizeBytes).sum
-      java.util.OptionalLong.of(sample
-        .map(sp => (raw * math.max(sp.upper - sp.lower, 0.0)).toLong)
-        .getOrElse(raw))
-    }
-    override def numRows(): java.util.OptionalLong =
-      // a pushed sample keeps a hash-dependent row count — no exact claim
-      if (query == BQuery.True && limit.isEmpty && sample.isEmpty &&
-          unwind.isEmpty)
-        java.util.OptionalLong.of(stats.map(_.count).sum)
-      else java.util.OptionalLong.empty()
-  }
-
-  /** Per-partition cursor sort (`sort` option — cursor.sort parity,
-    * order within a partition, never global). Reported ONLY when the
-    * cursor's BSON order provably equals Spark's order over the read
-    * values ([[GraftServerScanBuilder.cursorOrderSafe]]); an unsafe type
-    * still sorts the cursor (server semantics) but makes no claim to
-    * Catalyst.
-    */
-  override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    options.get("sort").flatMap(sparkColFor) match {
-      case Some(c) if pushedAgg.isEmpty && topN.isEmpty && grouped.isEmpty &&
-          unwind.isEmpty &&
-          requiredSchema.fields.exists(f => f.name == c &&
-            GraftServerScanBuilder.cursorOrderSafe(f.dataType, options)) =>
-        Array(org.apache.spark.sql.connector.expressions.Expressions.sort(
-          org.apache.spark.sql.connector.expressions.Expressions.column(c),
-          org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-      case _ => Array.empty
-    }
-
-  /** Runtime IN-sets from Spark's dynamic filtering, keyed by column.
-    * Split-key values prune whole key-range partitions
-    * ([[Planners.pruneByValues]] — never drops a partition that could
-    * hold a matching read value); all values AND-compose into the cursor
-    * query, so the server also drops the rows (sound under the
-    * runtime-filter contract: the join would drop them anyway).
-    */
-  @volatile private var runtimeIn: Map[String, Seq[BsonValue]] = Map.empty
-
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    // a pushed limit/offset counts rows of the unnarrowed stream; a
-    // pushed top-n keeps DIFFERENT rows over a narrowed stream (the
-    // sort+limit sits below the join the runtime filter came from); a
-    // pushed (grouped) aggregate's probes/pipelines never scan row-wise
-    if (pushedAgg.isDefined || limit.isDefined || offset.isDefined ||
-        topN.isDefined || grouped.isDefined) Array.empty
-    else if (unwind.isDefined) Array.empty
-    else Pushdown.runtimeFilterAttributes(cols, options, requiredSchema)
-
-  override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
-    runtimeIn = Pushdown.runtimeIn(predicates)
-
-  /** The cursor query with runtime IN-sets AND-composed, read-semantics
-    * string/long forms first (the join compares READ values).
-    */
-  private def queryWithRuntime: BQuery = Pushdown.withRuntimeIn(query,
-    runtimeIn.toSeq.map { case (c, vs) => cols.mapping.getOrElse(c, c) -> vs })
-
-  /** Structured Streaming entry: the micro-batch TAILING stream
-    * ([[GraftServerMicroBatchStream]]). Pushed filters carry over to the
-    * per-batch cursors; row-count-bearing pushdowns (limit/offset/top-n/
-    * aggregates) don't compose with an unbounded stream and refuse.
-    */
-  override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    require(pushedAgg.isEmpty && grouped.isEmpty && topN.isEmpty &&
-      limit.isEmpty && offset.isEmpty && sample.isEmpty && !nsMeta &&
-      unwind.isEmpty,
-      "graftserver streaming read cannot carry limit/offset/top-n/aggregate/" +
-        "sample/unwind pushdowns or the _ns metadata column")
-    // COMPUTED columns (r17): the streaming reader has no injection
-    // seam — refuse loudly rather than stream an all-null derived
-    // column (the batch-only capture rule never fires on streaming
-    // relations; this guards a hand-set option)
-    require(cols.computed.isEmpty,
-      "graftserver streaming read does not support computed_columns")
-    new GraftServerMicroBatchStream(requiredSchema, query, options)
-  }
-
-  override def readSchema(): StructType =
-    Pushdown.aggReadSchema(grouped, pushedAgg, requiredSchema)
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graftserver ns=${options.getOrElse("ns", "?")} query=$query" +
-      (if (cols.computed.isEmpty) ""
-       else s" PushedComputed: [${cols.computed.map(_.describe).mkString(", ")}]") +
-      pushedAgg.map(a => s" PushedAggregates: [${a.mkString(", ")}]").getOrElse("") +
-      grouped.map(g => s" PushedGroupedAggregate: $g").getOrElse("") +
-      sample.map(sp => s" PushedSample: $sp").getOrElse("") +
-      offset.map(o => s" PushedOffset: $o").getOrElse("") +
-      topN.map { case (spec, n) =>
-        val order = spec.map { case (c, d) =>
-          s"$c ${if (d) "DESC" else "ASC"}" }.mkString(", ")
-        s" PushedTopN: ORDER BY $order LIMIT $n"
-      }.getOrElse("") +
-      unwind.map(u => " " + u.describe(unwindPost) +
-        (if (unwoundTails) " UnwoundTails" else "")).getOrElse("")
-
-  /** Driver-side planning: one bounded probe sequence through the shared
-    * strategy chain (chunks → splitVector → sampled size bounds). Optional
-    * empty-split pruning costs one `find(limit=1)` per split, the
-    * reference's opt-in filterEmptySplits trade.
-    */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val key = options.getOrElse("key", "_id")
-    // a COMPUTED split key has no stored field the planners could probe
-    // (r17) — a key-range $match on it would silently match nothing;
-    // plan ONE full-range cursor per namespace instead
-    if (cols.computed.exists(_.out == key))
-      return GraftServerSource.nsList(options).map(ns =>
-        GraftServerPartition(ns, BQuery.KeyRange(key, None, None),
-          Seq.empty): InputPartition).toArray
-    if (pushedAgg.isDefined)
-      // one partition: bounded probes — no splits, no row-wise scans
-      return Array(GraftServerPartition(
-        GraftServerSource.ns(options), BQuery.KeyRange(key, None, None), Seq.empty))
-    if (grouped.isDefined)
-      // one partition PER NAMESPACE: each runs its own $group pipeline
-      // round-trip, so a multi-ns union aggregates in parallel (the
-      // partial protocol folds the per-namespace group rows regardless)
-      return GraftServerSource.nsList(options).map(n =>
-        GraftServerPartition(n, BQuery.KeyRange(key, None, None),
-          Seq.empty): InputPartition).toArray
-    if (unwoundTails)
-      // unwound ROW pipeline with a $sort/$skip/$limit tail: one
-      // partition per namespace — key-range splits would need the range
-      // rendered into the pipeline's $match (a bracket form, exact only
-      // under uniform keys); the tail bounds each pipeline's output
-      // anyway, so per-ns partials keep the wire thin and Spark folds
-      return GraftServerSource.nsList(options).map(n =>
-        GraftServerPartition(n, BQuery.KeyRange(key, None, None),
-          Seq.empty): InputPartition).toArray
-    if (options.get("splitter").contains("single"))
-      // the reference's create_input_splits=false / SingleMongoSplitter
-      // mode: ONE cursor over the whole range — the mode that makes an
-      // accepted OFFSET (cursor skip) sound
-      return GraftServerSource.nsList(options).map(ns =>
-        GraftServerPartition(ns, BQuery.KeyRange(key, None, None),
-          Seq.empty): InputPartition).toArray
-    GraftServerSource.withClient(options) { (client, _) =>
-      val target = options.get("split_size").map(_.toLong).getOrElse(8L * 1024 * 1024)
-      GraftServerSource.nsList(options).flatMap { ns =>
-        val coll = new ServerCollection(client, ns)
-        var splits = coll.planSplits(key, target)
-        sparkColFor(key).flatMap(runtimeIn.get).foreach(vs =>
-          splits = Planners.pruneByValues(splits, vs))
-        if (options.get("filter_empty").exists(_.toBoolean) && query != BQuery.True)
-          splits = Planners.pruneEmpty(splits, coll.stats(key), query)
-        splits.map(s =>
-          GraftServerPartition(ns, s.range, s.preferredLocations): InputPartition)
-      }.toArray
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftServerReaderFactory(requiredSchema, queryWithRuntime, limit, options,
-      pushedAgg, topN, grouped, offset, sample, nsMeta, unwind, unwindPost,
-      unwoundTails)
-}
-
-/** One planned split: its namespace, key range, and the owning chunk's
-  * hosts as preferred locations. [[BQuery.KeyRange]] is a plain case
-  * class — the split serializes as data, the cursor is re-opened
-  * executor-side.
+/** One planned split: its namespace, key range, the owning chunk's
+  * hosts as preferred locations, and the cursor query (the scan's query
+  * with runtime IN-sets; a joined scan's pipeline carries its own).
+  * [[BQuery.KeyRange]] is a plain case class — the split serializes as
+  * data, the cursor is re-opened executor-side.
   */
 final case class GraftServerPartition(ns: String, range: BQuery.KeyRange,
-    hosts: Seq[String]) extends InputPartition {
+    hosts: Seq[String], query: BQuery = BQuery.True) extends InputPartition {
   override def preferredLocations(): Array[String] = hosts.toArray
-}
-
-final class GraftServerReaderFactory(requiredSchema: StructType, query: BQuery,
-    limit: Option[Int], options: Map[String, String],
-    pushedAgg: Option[Seq[AggPush]] = None,
-    topN: Option[(Seq[(String, Boolean)], Int)] = None,
-    grouped: Option[GroupedAgg] = None,
-    offset: Option[Int] = None,
-    sample: Option[SamplePush] = None,
-    nsMeta: Boolean = false,
-    unwind: Option[Unwind] = None,
-    unwindPost: BQuery = BQuery.True,
-    unwoundTails: Boolean = false)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    (grouped, pushedAgg) match {
-      case (Some(g), _) => new ServerGroupedAggReader(options, query, g,
-        p.asInstanceOf[GraftServerPartition].ns, unwind, unwindPost)
-      case (None, Some(items)) => new ServerAggReader(options, items)
-      case _ => new GraftServerPartitionReader(
-        p.asInstanceOf[GraftServerPartition], requiredSchema, query, limit,
-        options, topN, offset, sample, nsMeta, unwind, unwindPost,
-        unwoundTails)
-    }
 }
 
 /** The pushed GROUPED-aggregate reader: ONE `$match`+`$group` pipeline
@@ -1625,12 +1171,10 @@ final class GraftServerReaderFactory(requiredSchema: StructType, query: BQuery,
   * aggregate re-groups and folds them (which also merges groups across
   * the union).
   */
-final class ServerGroupedAggReader(options: Map[String, String],
-    query: BQuery, grouped: GroupedAgg, ns: String,
-    unwind: Option[Unwind] = None,
-    unwindPost: BQuery = BQuery.True)
-    extends PartitionReader[InternalRow] {
+final class ServerGroupedAggReader(p: GraftServerPartition, spec: ScanSpec,
+    options: Map[String, String]) extends RowIteratorReader {
 
+  private val grouped = spec.grouped.get
   private val client = GraftServerSource.factory(options).create(options)
 
   /** r18: MIN/MAX aliases over declared-ASCII string columns — the
@@ -1644,35 +1188,19 @@ final class ServerGroupedAggReader(options: Map[String, String],
     }
   }
 
-  private val it: Iterator[InternalRow] = {
+  override protected val rows: Iterator[InternalRow] = {
     val base: Iterator[InternalRow] =
       GraftServerScanBuilder.asciiVerifyDocs(
-        client.groupAggregate(ns, query,
-          grouped.groupCols.map(_._1), grouped.items.map(_._1), unwind,
-          unwindPost,
-          computed = graft.query.ComputedCol.fromOptions(options)),
+        client.groupAggregate(p.ns, p.query,
+          grouped.groupCols.map(_._1), grouped.items.map(_._1), spec.unwind,
+          spec.unwindPost, computed = spec.computed),
         asciiAggAliases)
         .map(d => RowCodec.toRow(Unwind.narrowPos(d), grouped.schema))
+    // filtered-GLOBAL pipeline with nothing matched: $group emits no doc;
+    // one empty partial keeps Spark's COUNT(*) fold at 0
     if (grouped.groupCols.nonEmpty || base.hasNext) base
-    else {
-      // filtered-GLOBAL pipeline with nothing matched: $group emits no
-      // doc, but Spark's final fold rewrites COUNT(*) as a SUM of the
-      // partial counts — zero partial rows would fold it to NULL instead
-      // of 0 (the q58 zero-partition lesson). Emit one sentinel partial:
-      // counts 0, min/max/sum NULL.
-      Iterator.single(InternalRow.fromSeq(grouped.items.map {
-        case (GroupAgg.CountAll(_) | GroupAgg.CountCol(_, _), _) => 0L: Any
-        case _ => null
-      }))
-    }
+    else Iterator.single(new GenericInternalRow(grouped.emptyPartial))
   }
-
-  private var row: InternalRow = _
-
-  override def next(): Boolean =
-    if (it.hasNext) { row = it.next(); true } else false
-
-  override def get(): InternalRow = row
 
   override def close(): Unit = client.close()
 }
@@ -1685,14 +1213,12 @@ final class ServerGroupedAggReader(options: Map[String, String],
   * the probe (Spark's Min/Max ignore nulls; BSON sorts them first), so
   * an all-null column folds to NULL via the empty probe.
   */
-final class ServerAggReader(options: Map[String, String],
-    items: Seq[AggPush])
-    extends PartitionReader[InternalRow] {
+final class ServerAggReader(spec: ScanSpec, options: Map[String, String])
+    extends RowIteratorReader {
 
+  private val items = spec.agg.get
   private val client = GraftServerSource.factory(options).create(options)
   private val nss = GraftServerSource.nsList(options)
-  private var done = false
-  private var row: InternalRow = _
 
   private def probeEdge(ns: String, col: String,
       dt: org.apache.spark.sql.types.DataType, descending: Boolean): Any = {
@@ -1744,25 +1270,17 @@ final class ServerAggReader(options: Map[String, String],
     v
   }
 
-  override def next(): Boolean =
-    if (done) false
-    else {
-      val values: Array[Any] = items.map {
-        case AggPush.RowCount => nss.map(n => client.collStats(n).count).sum: Any
-        case AggPush.MinOf(c, t) =>
-          asciiVerified(c,
-            fold(nss.map(n => probeEdge(n, c, t, descending = false)), lt))
-        case AggPush.MaxOf(c, t) =>
-          asciiVerified(c,
-            fold(nss.map(n => probeEdge(n, c, t, descending = true)),
-              (a, b) => lt(b, a)))
-      }.toArray
-      row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
-      done = true
-      true
-    }
-
-  override def get(): InternalRow = row
+  override protected lazy val rows: Iterator[InternalRow] =
+    Iterator.single(new GenericInternalRow(items.map {
+      case AggPush.RowCount => nss.map(n => client.collStats(n).count).sum: Any
+      case AggPush.MinOf(c, t) =>
+        asciiVerified(c,
+          fold(nss.map(n => probeEdge(n, c, t, descending = false)), lt))
+      case AggPush.MaxOf(c, t) =>
+        asciiVerified(c,
+          fold(nss.map(n => probeEdge(n, c, t, descending = true)),
+            (a, b) => lt(b, a)))
+    }.toArray))
 
   override def close(): Unit = client.close()
 }
@@ -1771,32 +1289,24 @@ final class ServerAggReader(options: Map[String, String],
   * mirror of the reference's per-split cursor, with the split range,
   * pushed query, projection, and partial limit all applied server-side.
   */
-final class GraftServerPartitionReader(p: GraftServerPartition,
-    requiredSchema: StructType, query: BQuery, limit: Option[Int],
-    options: Map[String, String],
-    topN: Option[(Seq[(String, Boolean)], Int)] = None,
-    offset: Option[Int] = None,
-    sample: Option[SamplePush] = None,
-    nsMeta: Boolean = false,
-    unwind: Option[Unwind] = None,
-    unwindPost: BQuery = BQuery.True,
-    unwoundTails: Boolean = false)
-    extends PartitionReader[InternalRow] {
+final class GraftServerPartitionReader(p: GraftServerPartition, spec: ScanSpec,
+    options: Map[String, String]) extends RowIteratorReader {
+  import spec.{offset, sample, topN, unwind, unwindPost}
 
   // `$unwind` (r14): the cursor streams PARENT docs (one array per
   // parent crosses the wire, never the flattened cross-product) and the
   // reader emits one row per element — the element column slot is
   // filled per element, every other slot decodes once per parent.
-  // EXCEPT in pipeline mode (unwoundTails): a LIMIT/TopN/OFFSET tail
+  // EXCEPT in pipeline mode (spec.tailsPostUnwind): a LIMIT/TopN/OFFSET tail
   // counts unwound rows, so the whole unwind+post+tail runs server-side
   // ([[ServerClient.unwoundRead]]) and the cursor streams PER-ELEMENT
   // docs — the reader decodes them like a plain scan
-  private val pipelineMode: Boolean = unwoundTails && unwind.isDefined
+  private val pipelineMode: Boolean = spec.tailsPostUnwind
 
   // `_ns` provenance: splice this partition's namespace in at the
   // requested position — constant per cursor
   private val nsCol =
-    new graft.source.MetaColumn(requiredSchema, GraftServerSource.NsMetaCol, nsMeta, p.ns)
+    new graft.source.MetaColumn(spec.required, GraftServerSource.NsMetaCol, spec.meta, p.ns)
   private val decodeSchema: StructType = nsCol.decodeSchema
   // under unwind, the element column decodes per ELEMENT, not per doc
   // posexplode: the pos COLUMN binds the element index (null for rows
@@ -1815,7 +1325,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
 
   // Spark column -> document field (column_mapping): decode and the
   // cursor projection address DOCUMENT paths
-  private val mapping = graft.source.ColumnMapping.fromOptions(options)
+  private val mapping = spec.mapping
 
   // DERIVED columns (r17): injected into each fetched document before
   // decode — the client-side mirror of the pipeline `$set`; only the
@@ -1823,8 +1333,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
   // arithmetic). Never combined with an unwind (the capture rule
   // refuses unwound relations; UnwindRelocate refuses computed ones).
   private val computedCols: Seq[graft.query.ComputedCol] =
-    graft.query.ComputedCol.fromOptions(options)
-      .filter(c => decodeSchema.fieldNames.contains(c.out))
+    spec.computed.filter(c => decodeSchema.fieldNames.contains(c.out))
 
   private val client = GraftServerSource.factory(options).create(options)
 
@@ -1832,7 +1341,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
     * values verify against the `ascii_columns` contract (sound — see
     * [[GraftServerScanBuilder.asciiCheck]]); the cursor projection must
     * carry them even when Spark pruned the column. */
-  private val asciiOrderFields: Seq[String] = topN.map(_._1.map(_._1))
+  private val asciiOrderFields: Seq[String] = topN.map(_.keys.map(_._1))
     .getOrElse(Nil)
     .filter(GraftServerScanBuilder.asciiCols(options).contains)
 
@@ -1841,10 +1350,10 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
     // pushed $sort/$skip/$limit tail, all server-side — per-element
     // docs cross the wire, already post-matched and tail-bounded.
     // Partitions in this mode are whole-namespace (no key range).
-    client.unwoundRead(p.ns, query, unwind.get, unwindPost,
-      sortSpec = topN.map(_._1).getOrElse(Nil),
+    client.unwoundRead(p.ns, p.query, unwind.get, unwindPost,
+      sortSpec = topN.map(_.sortSpec).getOrElse(Nil),
       skip = offset.map(_.toLong).getOrElse(0L),
-      limit = topN.map(_._2.toLong).orElse(limit.map(_.toLong)).getOrElse(-1L),
+      limit = spec.rowCap.map(_.toLong).getOrElse(-1L),
       projection = Some(GraftServerSource.pruneProjection(
         parentSchema.fieldNames.map(n => mapping.getOrElse(n, n)).toSeq ++
         // the per-element docs carry the element at its element field
@@ -1856,7 +1365,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
       .map(Unwind.narrowPos(_))
   else
     client.find(p.ns,
-      Find(BQuery.and(p.range, query),
+      Find(BQuery.and(p.range, p.query),
         // a pushed sample's key — and any doc path the POST-unwind
         // match reads (a mixed element-or-parent disjunction may
         // reference parents Spark pruned from the output) — must ride
@@ -1882,13 +1391,12 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
           .filterNot(p => unwind.exists(u => p != u.path && u.postOnly(p))))),
         // a pushed top-n's (compound) order wins; else the option-level
         // cursor sort
-        sortAscBy = topN.map(_._1.head._1).orElse(options.get("sort")),
+        sortAscBy = topN.map(_.keys.head._1).orElse(options.get("sort")),
         // cursor skip: only ever set on the provably-single-cursor plan
         skip = offset.map(_.toLong).getOrElse(0L),
-        limit = topN.map(_._2.toLong)
-          .orElse(limit.map(_.toLong)).getOrElse(-1L),
-        sortDescending = topN.exists(_._1.head._2),
-        thenBy = topN.map(_._1.tail).getOrElse(Nil)))
+        limit = spec.rowCap.map(_.toLong).getOrElse(-1L),
+        sortDescending = topN.exists(_.keys.head._2),
+        thenBy = topN.map(_.sortSpec.tail).getOrElse(Nil)))
 
   // r18: the `ascii_columns` contract verifies on the RETURNED top-n
   // keys (a bounded stream — the cursor carries the pushed $limit)
@@ -1941,16 +1449,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition,
       }
   }
 
-  private var row: InternalRow = _
-
-  override def next(): Boolean =
-    if (decoded.hasNext) {
-      row = nsCol.splice(decoded.next())
-      true
-    }
-    else false
-
-  override def get(): InternalRow = row
+  override protected val rows: Iterator[InternalRow] = decoded.map(nsCol.splice)
 
   override def close(): Unit = client.close()
 }

@@ -2,9 +2,9 @@ package graft.server
 
 import graft.bson._
 import graft.query.BQuery
+import graft.source.{GraftReaderFactory, ScanSpec}
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming READ source over the server transport: an
   * append-only TAILING scan by a monotonically-increasing numeric key —
@@ -36,11 +36,12 @@ import org.apache.spark.sql.types.StructType
   *    Distinct keys guarantee per-batch progress of at least one doc.
   *  - Pushed filters ride the per-batch cursor query exactly as in the
   *    batch scan; pushed limit/offset/top-n/aggregates are refused
-  *    ([[GraftServerScan.toMicroBatchStream]] guards — their row-count
-  *    semantics don't compose with an unbounded stream).
+  *    ([[graft.source.GraftScan.toMicroBatchStream]] guards — their
+  *    row-count semantics don't compose with an unbounded stream); rows
+  *    read through the shared [[GraftReaderFactory]], and `_ns` names
+  *    each row's namespace.
   */
-final class GraftServerMicroBatchStream(requiredSchema: StructType,
-    query: BQuery, options: Map[String, String])
+final class GraftServerMicroBatchStream(spec: ScanSpec, options: Map[String, String])
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
@@ -163,12 +164,12 @@ final class GraftServerMicroBatchStream(requiredSchema: StructType,
       else Some(GraftServerPartition(ns, BQuery.KeyRange(key,
         Some(BInt64(lo + 1)),
         if (hi == Long.MaxValue) None else Some(BInt64(hi + 1))),
-        Seq.empty): InputPartition)
+        Seq.empty, spec.query): InputPartition)
     }.toArray
   }
 
   override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new GraftServerReaderFactory(requiredSchema, query, None, options)
+    new GraftReaderFactory(spec, options, ServerTransport)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -6,14 +6,13 @@ import graft.query.{BQuery, BQueryJson, NumericNullEdge, RegexDialect, Unwind}
 import graft.store.BsonCollection
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.nio.file.{Files, Paths}
@@ -116,7 +115,7 @@ class GraftBsonSource extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new GraftTable(schema, properties.asScala.toMap)
+    new GraftTable(schema, properties.asScala.toMap, FileTransport)
 }
 
 object GraftBsonSource {
@@ -232,318 +231,33 @@ object GraftBsonSource {
   }
 }
 
-final class GraftTable(tableSchema: StructType, properties: Map[String, String])
-    extends Table with SupportsRead with SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
+/** The BSON dump-file transport of the shared scan skeleton
+  * ([[GraftScanBuilder]], [[GraftScan]]): the pushed and option-level
+  * queries evaluate in the reader with the engine's exact
+  * [[BQuery.matches]], so every query renders fully at the source;
+  * partitions are byte splits, key ranges (the pure planners over
+  * [[FileStats]]) or per-file aggregate partials.
+  */
+object FileTransport extends Transport {
+  override val name = "graftbson"
+  override val targetOption = "path"
+  override val metaCol: String = GraftBsonSource.FileMetaCol
+  override val metaComment = "source dump file of this row"
+  override val truncates = true
 
-  /** Provenance metadata: `_file` = the dump file a row was decoded
-    * from (`SELECT _id, _file FROM t` / `df.select($"_file")`) — the
-    * lineage handle a 100 TB landing zone needs for selective
-    * reprocessing and quarantine. Populated per partition by the
-    * reader; filters on it stay ABOVE the scan (pushFilters routes
-    * them to residuals — a metadata name is not a document field).
-    * A data column of the same name shadows it (Spark's rule).
-    */
-  override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = GraftBsonSource.FileMetaCol
-      override def dataType(): org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.StringType
-      override def isNullable: Boolean = false
-      override def comment(): String = "source dump file of this row"
-    })
+  override def newScanBuilder(schema: StructType, options: Map[String, String]): ScanBuilder =
+    new GraftScanBuilder(schema, options, this)
+  override def newWriteBuilder(info: LogicalWriteInfo, options: Map[String, String]): WriteBuilder =
+    new GraftWriteBuilder(info.schema(), info.queryId(), options)
 
-  override def name(): String = s"graftbson:${properties.getOrElse("path", "?")}"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ,
-      TableCapability.STREAMING_WRITE)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(tableSchema, properties ++ options.asScala)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new GraftWriteBuilder(info.schema(), info.queryId(),
-      properties ++ info.options().asScala)
-}
-
-final class GraftScanBuilder(tableSchema: StructType, options: Map[String, String])
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns with SupportsPushDownLimit
-    with SupportsPushDownOffset with SupportsPushDownAggregates
-    with SupportsPushDownTopN with SupportsPushDownTableSample {
-
-  /** Column-name remapping (`column_mapping`: Spark column -> dotted
-    * document field, the `mongo.columns.mapping` analog,
-    * HiveMongoInputFormat.java:211-240) and the DERIVED columns (r17,
-    * `computed_columns` — ComputedKeyRelocate, the file-transport arm):
-    * injected by the readers right after the pushed-query match —
-    * grouped-aggregate partials fold over them like any column. The
-    * pushed query itself evaluates on STORED docs, so [[Pushdown]] keeps
-    * filters on a computed column residual and refuses it as a TopN /
-    * min-max / sample key, mirroring the server transport's gates. */
-  private val cols = Pushdown.Columns.of(tableSchema, options)
-  private val mapping = cols.mapping
-
-  /** `$unwind` directive (r14): same contract as the server source —
-    * element/pos filters push as the POST-unwind match, LIMIT / TopN /
-    * OFFSET tails count unwound rows (the reader's tail stage), the
-    * parent prune drops non-contributing parents pre-unwind, and
-    * grouped-aggregate partials fold over unwound rows. */
-  private val unwind: Option[Unwind] = Unwind.fromOptions(options)
-  /** POST-unwind query (accepted element-column filters). */
-  private var unwindPost: BQuery = BQuery.True
-
-  private var required: StructType = tableSchema
-  private var pushedQuery: BQuery = BQuery.True
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Option[Int] = None
-  private var residualFilters: Array[Filter] = Array.empty
-
-  /** A predicate on the `_file` metadata column is not a document query
-    * (residual); the rest is [[Pushdown.splitFilters]]. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val split = Pushdown.splitFilters(cols, unwind, filters, GraftBsonSource.FileMetaCol)
-    unwindPost = split.post
-    pushedQuery = split.query
-    pushed = split.pushed
-    residualFilters = split.residual
-    residualFilters
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** Pushed TABLESAMPLE / df.sample / randomSplit window: accepted only
-    * as the DETERMINISTIC keyed Bernoulli of [[SamplePush]] (the
-    * `sample_key` option names an Int/Long/String column; no
-    * replacement), evaluated during the scan's row iteration right after
-    * the pushed query — so it composes with pushed filters (a
-    * deterministic per-row predicate commutes with them) and with the
-    * grouped-aggregate partials (the inner row scan samples before the
-    * fold). Row-POSITION-dependent pushdowns (limit/offset/top-n) and
-    * the zero-IO global aggregate (side-file counts know nothing of
-    * sampling) refuse while a sample is pushed, and vice versa.
-    */
-  private var sample: Option[SamplePush] = None
-
-  override def pushTableSample(lower: Double, upper: Double,
-      withReplacement: Boolean, seed: Long): Boolean = {
-    val keyCol = Pushdown.sampleKey(cols, options, unwind)
-    val eligible = !withReplacement && keyCol.isDefined &&
-      !options.contains("collections") && !options.contains("limit") &&
-      limit.isEmpty && offset.isEmpty && topN.isEmpty &&
-      aggPushed.isEmpty && groupedAgg.isEmpty
-    if (!eligible) false
-    else {
-      sample = Some(SamplePush(keyCol.get.docPath, lower, upper, seed))
-      true
-    }
-  }
-
-  /** Per-partition limit (the reference pushes limit per split,
-    * MongoInputSplit.java:291-296, which is only globally correct with one
-    * partition — so report partial and let Spark re-apply the global one).
-    */
-  override def pushLimit(n: Int): Boolean =
-    // sample-then-limit cannot be spelled limit-then-sample: the sampled
-    // prefix of a partition may be shorter than the limit needs. Over an
-    // UNWOUND scan the limit counts unwound rows (the reader's tail runs
-    // post-unwind) — option-level `limit`/`sort` and multi-collection
-    // entries CARRYING per-entry limits/sorts (which merge into the
-    // partitions) are PARENT-cursor semantics that cannot mix with an
-    // element-scoped tail, so those refuse
-    if (sample.isDefined || (unwind.isDefined &&
-        (options.contains("limit") || options.contains("sort") ||
-          options.get("collections").exists(json =>
-            MultiCollections.parse(json).exists(c =>
-              c.limit.isDefined || c.sort.isDefined))))) false
-    else { limit = Some(n); true }
-  override def isPartiallyPushed(): Boolean = true
-
-  /** TopN (ORDER BY k1[, k2, ...] LIMIT n) pushdown — the reference's
-    * per-split `cursor.sort().limit()` (MongoInputSplit.java:281-296),
-    * reported PARTIAL: each partition returns its own sorted top-n and
-    * Spark's global sort+limit folds them, which is exact because a
-    * partition's local top-n is a superset of its contribution to the
-    * global one. The reader selects by the values AS SPARK READS them
-    * (exact long/µs/double keys — NOT the BSON cross-type order, whose
-    * double-widened long comparison ties distinct values above 2^53 and
-    * sorts date-storage in the wrong bracket for a LongType read), so
-    * BOTH directions push; each key's null ordering must be Spark's
-    * default for its direction (ASC NULLS FIRST / DESC NULLS LAST — the
-    * orderings the bounded selector implements). String columns are
-    * refused: a string read can come from four storage brackets and the
-    * read-string order is not a cursor order any server could produce.
-    * Residual filters also refuse: they run ABOVE the scan, and a
-    * pre-filter top-n might not survive them.
-    */
-  private var topN: Option[(Seq[(String, Boolean, org.apache.spark.sql.types.DataType)], Int)] = None
-
-  // FloatType deliberately absent: RowCodec has no BSON -> FloatType read,
-  // so a FloatType column cannot be scanned at all
-  private val TopNTypes: Set[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    Set(IntegerType, LongType, DoubleType, BooleanType, TimestampType, DateType)
-  }
-
-  override def pushTopN(orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
-      n: Int): Boolean = {
-    // option-level `limit` is a PER-PARTITION cursor limit over cursor
-    // order; a pushed top-n would re-sort before it and change which
-    // rows it keeps — refuse rather than reorder an explicit option
-    // over an unwound scan the top-n selects among UNWOUND rows (the
-    // reader's bounded heap runs post-unwind; element-column keys read
-    // the element through its array-path mapping)
-    val eligible = residualFilters.isEmpty &&
-      aggPushed.isEmpty && groupedAgg.isEmpty && offset.isEmpty &&
-      sample.isEmpty &&
-      !options.contains("sort") && !options.contains("collections") &&
-      !options.contains("limit")
-    if (!eligible) return false
-    // STRING order keys (r18): admitted under uniform storage alone —
-    // the reader's bounded heap compares READ values itself, and its
-    // string comparator is CODE-POINT order (exactly Spark's
-    // UTF8String/UTF-8-byte order, GraftPartitionReader.cmpStrings), so
-    // the selection is Spark-exact for ANY strings — no ascii_columns
-    // declaration needed on this transport (unlike the server arm, where
-    // the CURSOR owns the order). Uniform storage is still required: a
-    // non-uniform string read spans four storage brackets the heap's
-    // BString-only key read rejects.
-    val stringOk = Pushdown.uniformStorage(options)
-    topN = Pushdown.topNOrder(cols, orders, r => TopNTypes.contains(r.dataType) ||
-        (r.dataType == org.apache.spark.sql.types.StringType && stringOk))
-      .map(keys => (keys.map { case (r, desc) => (r.docPath, desc, r.dataType) }, n))
-    topN.isDefined
-  }
-
-  /** Offset (skip) pushdown — the mongo.input.skip analog
-    * (MongoInputSplit.java:291-296 applies cursor skip per split). Unlike
-    * limit, Spark removes an accepted OFFSET from the plan entirely, so it
-    * is only accepted when the scan is provably ONE partition (the same
-    * single-split caveat the reference's skip has).
-    */
-  private var offset: Option[Int] = None
-  private def provablySinglePartition: Boolean =
-    !options.contains("collections") &&
-      options.get("splitter").contains("single") &&
-      options.get("path").exists(p => GraftBsonSource.dataFiles(p).size == 1)
-  override def pushOffset(n: Int): Boolean =
-    // over an unwound scan the skip counts UNWOUND rows (the reader's
-    // tail runs post-unwind) — same single-partition soundness rule
-    if (provablySinglePartition && aggPushed.isEmpty && groupedAgg.isEmpty &&
-        sample.isEmpty && (unwind.isEmpty ||
-          (!options.contains("limit") && !options.contains("sort")))) {
-      offset = Some(n); true
-    } else false
-
-  /** Aggregate pushdown (SupportsPushDownAggregates), two strategies in
-    * preference order:
-    *
-    *  1. Global COUNT(*)/MIN/MAX with NO filter surface — the zero- or
-    *     near-zero-IO path: COUNT(*) from `.splits` side files / header
-    *     walks (no body decode), MIN/MAX one projected single-field
-    *     pass. A pushed or option-level query would make the side-file
-    *     doc count wrong, so any filter refuses this path.
-    *  2. Everything else — GROUPED (or filtered-global) per-split
-    *     partials ([[pushGroupedAggregation]]): each byte-split decodes
-    *     ONLY the group-key and aggregate input columns (bodies
-    *     byte-skipped) and folds its rows into per-group partial rows.
-    *     (AVG arrives here as Spark's partial-pushdown SUM+COUNT
-    *     rewrite.)
-    *
-    * Both report PARTIAL: Spark's final aggregate re-groups and folds
-    * the partial rows, which keeps the pushdown correct for any number
-    * of files and partitions.
-    */
-  private var aggPushed: Option[Seq[AggPush]] = None
-  private var groupedAgg: Option[GroupedAgg] = None
-
-  override def pushAggregation(aggregation: Aggregation): Boolean = {
-    if (aggregation.groupByExpressions.isEmpty && tryGlobalAggregation(aggregation))
-      return true
-    pushGroupedAggregation(aggregation)
-  }
-
-  private def tryGlobalAggregation(aggregation: Aggregation): Boolean = {
-    val eligible =
-      pushedQuery == BQuery.True && !options.contains("query") &&
-      limit.isEmpty && offset.isEmpty && topN.isEmpty && sample.isEmpty &&
-      !options.contains("collections") && unwind.isEmpty &&
-      // the option-level PER-PARTITION cursor limit changes row counts
-      !options.contains("limit")
-    if (!eligible) return false
-    // MIN/MAX columns may be nested subfields — the single-field scan
-    // decodes just that subpath
-    aggPushed = Pushdown.globalAgg(cols, aggregation, r => AggPushTypes.contains(r.dataType))
-    aggPushed.isDefined
-  }
-
-  /** GROUPED / filtered-global aggregate pushdown: per-split partial
-    * rows over a projected decode of ONLY the group-key and aggregate
-    * input columns. Unlike the server path, pushed and option-level
-    * queries are ACCEPTED — the reader evaluates them with the engine's
-    * own exact [[BQuery.matches]] before folding (only residual filters
-    * refuse: they run above the scan and the rows are gone after
-    * grouping). Group keys group by the READ value (exact — Spark
-    * re-groups the same values); MIN/MAX fold under Spark's own
-    * interpreted ordering of read values (so even String and NaN-bearing
-    * Double keys are exact here, unlike the server's BSON-bracket
-    * caveats); SUM accumulates Long for integer columns (overflow
-    * faults, matching ANSI) and Double otherwise.
-    */
-  private def pushGroupedAggregation(aggregation: Aggregation): Boolean = {
-    val eligible = residualFilters.isEmpty &&
-      limit.isEmpty && offset.isEmpty && topN.isEmpty &&
-      !options.contains("collections") && !options.contains("limit")
-    if (!eligible) return false
-    // group keys and aggregate inputs may be NESTED subfields: the
-    // resolver walks the nested StructType and composes the dotted doc
-    // path; the reader's projected decode (Proj trie) then materializes
-    // ONLY those subpaths. Zero aggregates + >=1 group key = SELECT
-    // DISTINCT (each split emits its distinct keys as partial rows).
-    groupedAgg = GroupAggParse.parse(aggregation, cols.resolve,
-      r => GroupKeyTypes.contains(r.dataType),
-      r => GroupMinMaxTypes.contains(r.dataType)).map(GroupedAgg.of)
-    groupedAgg.isDefined
-  }
-
-  /** Spark-type domains where the fold in [[AggPartitionReader]] is
-    * exactly Spark's own Min/Max ordering (TypeUtils interpreted ordering).
-    */
-  private val AggPushTypes: Set[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    Set(IntegerType, LongType, DoubleType, FloatType, StringType, DateType)
-  }
-
-  /** Group-key types: grouping is by the READ value, so any readable
-    * atomic equality works; FloatType is absent because RowCodec has no
-    * BSON→Float read at all. */
-  private val GroupKeyTypes: Set[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    Set(StringType, IntegerType, LongType, DoubleType, BooleanType,
-      TimestampType, DateType)
-  }
-
-  /** Grouped MIN/MAX types: folded under Spark's interpreted ordering of
-    * read values — exact for every readable atomic type. */
-  private val GroupMinMaxTypes: Set[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    Set(IntegerType, LongType, DoubleType, StringType, BooleanType,
-      TimestampType, DateType)
-  }
-
-  override def build(): Scan = {
-    // AND-compose with the option-level query (mongo.input.query analog;
-    // $and composition semantics of HiveMongoInputFormat.java:104-123)
-    // dialect gates (r16): this transport evaluates option-level queries
-    // CLIENT-side, so a $regex outside the PCRE∩Java common subset and
-    // the numeric-segment null edge refuse loudly unless their options
-    // opt into the engine dialect (graft.query.Dialect) — a live-server
-    // scan instead ships them verbatim, server-authoritative
+  /** The option-level query (mongo.input.query analog; $and composition
+    * semantics of HiveMongoInputFormat.java:104-123). Dialect gates
+    * (r16): this transport evaluates it — and each `collections` entry's
+    * query — CLIENT-side, so a $regex outside the PCRE∩Java common subset
+    * and the numeric-segment null edge refuse loudly unless their options
+    * opt into the engine dialect (graft.query.Dialect); a live-server
+    * scan instead ships them verbatim, server-authoritative. */
+  override def optionQuery(options: Map[String, String]): BQuery = {
     val regexMode = options.getOrElse(RegexDialect.OptionKey, "portable")
     def gated(q: BQuery): BQuery = {
       NumericNullEdge.check(q, options.get(NumericNullEdge.OptionKey))
@@ -551,30 +265,245 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
     }
     options.get("collections").foreach(json =>
       MultiCollections.parse(json).foreach(c => gated(c.query)))
-    val optionQuery =
-      options.get("query").map(j => gated(BQueryJson.parse(j))).getOrElse(BQuery.True)
-    // option-level PER-PARTITION limit (mongo.input.limit analog — a
-    // cursor limit per split, explicitly not a global row bound; compose
-    // with Spark's own .limit for the global semantic)
-    val optionLimit = options.get("limit").map(_.toInt)
-    val effLimit = (limit ++ optionLimit ++ topN.map(_._2)).reduceOption(math.min)
-    // pre-unwind PARENT pruning: under a non-outer unwind with a pushed
-    // post-unwind match, parents with no satisfying element drop BEFORE
-    // the per-element flatten
-    val unwindPrune = Pushdown.unwindPrune(tableSchema, unwind, unwindPost)
-    new GraftScan(required,
-      BQuery.and(BQuery.and(optionQuery, pushedQuery), unwindPrune),
-      options, effLimit, mapping,
-      offset, aggPushed, topNSort = topN.map(_._1),
-      grouped = groupedAgg, sample = sample, unwind = unwind,
-      unwindPost = unwindPost,
-      tailsPostUnwind = unwind.isDefined &&
-        (limit.isDefined || topN.isDefined || offset.isDefined),
-      // the `_file` metadata column is live only when requested AND not
-      // shadowed by a data column of the same name (Spark's rule)
-      fileMeta = required.fieldNames.contains(GraftBsonSource.FileMetaCol) &&
-        !tableSchema.fieldNames.contains(GraftBsonSource.FileMetaCol))
+    options.get("query").map(j => gated(BQueryJson.parse(j))).getOrElse(BQuery.True)
   }
+
+  /** `splitter=single` over exactly one data file (the same single-split
+    * caveat the reference's skip has). */
+  override def singleCursor(options: Map[String, String]): Boolean =
+    !options.contains("collections") &&
+      options.get("splitter").contains("single") &&
+      options.get("path").exists(p => GraftBsonSource.dataFiles(p).size == 1)
+
+  /** The option-level `sort` is a per-partition PARENT order; a TopN
+    * would re-sort under it — refuse rather than reorder the option. */
+  override val topNOverridesSort = false
+  /** The grouped fold runs in the reader, after the sample window. */
+  override val groupedFoldSeesSample = true
+
+  /** TopN keys: the reader's bounded heap selects by the values AS SPARK
+    * READS them (exact long/µs/double keys — not the BSON cross-type
+    * order, whose double-widened long comparison ties distinct values
+    * above 2^53), so both directions push. STRING keys (r18) need
+    * uniform storage alone: the heap compares read strings in CODE-POINT
+    * order (Spark's UTF8String order, [[GraftPartitionReader.cmpStrings]])
+    * — no `ascii_columns` declaration, since no cursor owns the order —
+    * but a non-uniform string read spans four storage brackets the heap's
+    * BString-only key read rejects. FloatType is absent from every gate:
+    * RowCodec has no BSON -> FloatType read. */
+  private val TopNTypes: Set[DataType] =
+    Set(IntegerType, LongType, DoubleType, BooleanType, TimestampType, DateType)
+  override def topNKeyOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
+    TopNTypes.contains(r.dataType) ||
+      (r.dataType == StringType && Pushdown.uniformStorage(options))
+
+  /** Global MIN/MAX: folded by [[AggPartitionReader]] under Spark's own
+    * Min/Max ordering (TypeUtils interpreted ordering). */
+  private val AggPushTypes: Set[DataType] =
+    Set(IntegerType, LongType, DoubleType, FloatType, StringType, DateType)
+  override def globalAggOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
+    AggPushTypes.contains(r.dataType)
+
+  /** Grouped MIN/MAX fold under Spark's interpreted ordering of read
+    * values — exact for every readable atomic type (even String and
+    * NaN-bearing Double, unlike the server's BSON-bracket caveats). */
+  private val GroupMinMaxTypes: Set[DataType] =
+    Set(IntegerType, LongType, DoubleType, StringType, BooleanType, TimestampType, DateType)
+  override def minMaxOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
+    GroupMinMaxTypes.contains(r.dataType)
+
+  /** SUM accumulates an overflow-checked Long for integer columns (ANSI)
+    * and Double otherwise. */
+  override def sumOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
+    r.dataType == IntegerType || r.dataType == LongType || r.dataType == DoubleType
+
+  /** The data files' sizes; no row count without a walk. */
+  override def stats(spec: ScanSpec, options: Map[String, String]): (Long, Option[Long]) =
+    (allFiles(options).map(f => Files.size(Paths.get(f))).sum, None)
+
+  private def allFiles(options: Map[String, String]): Seq[String] =
+    options.get("collections") match {
+      case Some(json) => MultiCollections.parse(json).flatMap(c => GraftBsonSource.dataFiles(c.path))
+      case None => options.get("path").map(GraftBsonSource.dataFiles).getOrElse(Seq.empty)
+    }
+
+  /** The reader sorts a partition ascending with BSON null-first
+    * semantics, Spark's ASC NULLS FIRST, for any column type. */
+  override def reportsOrder(f: StructField, spec: ScanSpec,
+      options: Map[String, String]): Boolean = true
+  override val runtimeFiltersUnderUnwind = true
+
+  override def describeHead(spec: ScanSpec, options: Map[String, String]): String =
+    s"GraftScan PushedQuery: ${spec.query}, ReadSchema: ${spec.readSchema.simpleString}"
+  override val describeSep = ", "
+  override val describeTopNOrderBy = ""
+  override val describesOffset = false
+  override val describesUnwoundTails = false
+
+  private def pathOf(options: Map[String, String]): String =
+    options.getOrElse("path", throw new IllegalArgumentException("path option required"))
+  private def splitSizeOf(options: Map[String, String]): Long =
+    options.get("split_size").map(_.toLong).getOrElse(8L * 1024 * 1024)
+
+  override def planPartitions(spec: ScanSpec, options: Map[String, String],
+      runtimeIn: Map[String, Seq[BsonValue]]): Array[InputPartition] =
+    (spec.grouped, spec.agg) match {
+      case (Some(g), _) =>
+        // grouped partials per BYTE-SPLIT (the same parallelism a row
+        // scan gets — a grouped aggregate over one huge file must not
+        // serialize into one task); each split folds its rows into
+        // per-group partial rows over a projected decode
+        val parts = GraftBsonSource.dataFiles(pathOf(options)).flatMap(f =>
+          BsonFiles.planByteSplits(f, splitSizeOf(options)).map { case (s, e) =>
+            GroupedAggPartition(f, s, e, spec.query): InputPartition
+          })
+        if (parts.nonEmpty || g.groupCols.nonEmpty) parts.toArray
+        // empty collection + GLOBAL aggregate: one sentinel partition so
+        // the final fold sees a count-0 partial, not zero rows (the q58
+        // zero-partition COUNT lesson)
+        else Array(GroupedAggPartition("", 0L, 0L, spec.query))
+      case (None, Some(_)) =>
+        // one partial-aggregate row per data file; bodies only read when
+        // a MIN/MAX needs the projected field
+        val files = GraftBsonSource.dataFiles(pathOf(options))
+        // an EMPTY collection must still yield ONE partial row (count 0,
+        // min/max NULL): with zero partitions Spark's final fold sums an
+        // empty input and COUNT(*) would come back NULL instead of 0
+        // (found by the r11 all-tables empty twin)
+        if (files.isEmpty) Array(AggInputPartition(""))
+        else files.map(f => AggInputPartition(f): InputPartition).toArray
+      case _ => planRows(spec, options, runtimeIn)
+    }
+
+  /** Row partitions. The per-partition cursor limit is the least of
+    * Spark's pushed limit, a TopN's n and the option-level `limit`
+    * (mongo.input.limit analog — a cursor limit per split, explicitly
+    * not a global row bound); the per-partition cursor `sort` is the
+    * `sort` option (cursor.sort parity, MongoInputSplit.java:281 — NOT a
+    * global order). Multi-collection mode plans each entry with its own
+    * splitter and options, falling back to the scan-level ones
+    * (MultiMongoCollectionSplitter.calculateSplits:47-141 /
+    * MultiCollectionSplitBuilder semantics), then unions them. */
+  private def planRows(spec: ScanSpec, options: Map[String, String],
+      runtimeIn: Map[String, Seq[BsonValue]]): Array[InputPartition] = {
+    val limit = (spec.rowCap ++ options.get("limit").map(_.toInt)).reduceOption(math.min)
+    val sortKey = options.get("sort")
+    val defStrategy = options.getOrElse("splitter", "bytes")
+    val defSplitSize = splitSizeOf(options)
+    val defKey = options.getOrElse("key", "_id")
+    val defMinDocs = options.get("min_docs").map(_.toLong).getOrElse(1000L)
+    val defFilterEmpty = options.get("filter_empty").exists(_.toBoolean)
+    options.get("collections") match {
+      case Some(json) =>
+        MultiCollections.parse(json).flatMap { c =>
+          planCollection(options, GraftBsonSource.dataFiles(c.path),
+            c.splitter.getOrElse(defStrategy),
+            c.splitSize.getOrElse(defSplitSize),
+            c.key.getOrElse(defKey),
+            c.minDocs.getOrElse(defMinDocs),
+            c.filterEmpty.getOrElse(defFilterEmpty),
+            BQuery.and(spec.query, c.query),
+            c.limit.orElse(limit),
+            c.sort.orElse(sortKey))
+        }.toArray
+      case None =>
+        val rawPath = pathOf(options)
+        val files = GraftBsonSource.dataFiles(rawPath)
+        // never let a runtime filter narrow a scan that carries a pushed
+        // limit/offset (filterAttributes already advertises none)
+        val rt = if (limit.isDefined || spec.offset.isDefined) Map.empty[String, Seq[BsonValue]]
+          else runtimeIn
+        // row-level runtime narrowing: the IN-sets AND-compose into the
+        // per-partition query; the split-key values additionally prune
+        // whole key-range partitions inside Planners.plan
+        planCollection(options, routeToShards(rawPath, files, spec.query, rt),
+          defStrategy, defSplitSize, defKey, defMinDocs,
+          defFilterEmpty, Pushdown.withRuntimeIn(spec.query, rt), limit, sortKey,
+          runtimeKeyValues = rt.get(defKey)).toArray
+    }
+  }
+
+  /** mongos-parity query routing: a pushed `_id` equality — or a runtime
+    * `_id` IN-set from dynamic filtering — can only match inside the
+    * owning shards (ShardRouting co-locates every cross-width equal
+    * value; a hex string also probes its ObjectId representation, which
+    * reads as the same Spark string), so the scan plans exactly those
+    * shard files instead of all of them — the read-side mirror of the
+    * write path's model routing. */
+  private def routeToShards(rawPath: String, files: Seq[String], query: BQuery,
+      rt: Map[String, Seq[BsonValue]]): Seq[String] = {
+    val dir = GraftBsonSource.normalizePath(rawPath)
+    val nShards =
+      if (Files.isDirectory(Paths.get(dir))) new graft.store.BsonCollection(dir).shardCount
+      else 1
+    if (nShards <= 1) files
+    else {
+      // every stored _id a point value could equal: a read-semantics
+      // string probes all string-reading storages (BSON forbids a regex
+      // _id, so the probe set is complete); a typed Mongo string also
+      // matches symbol storage (same bracket)
+      def probesOf(v: BsonValue): Seq[BsonValue] = v match {
+        case BString(s) => BQuery.readEqProbes(s)
+        case other => Seq(other)
+      }
+      def owners(probes: Seq[BsonValue]): Set[String] =
+        probes.map(p => graft.store.BsonCollection.shardPath(dir, nShards,
+          graft.store.ShardRouting.idShard(p, nShards)).toString).toSet
+      val eqOwned = graft.store.BsonCollection.idEquality(query)
+        .map(v => owners(probesOf(v)))
+        .orElse(graft.store.BsonCollection.idReadEquality(query)
+          .map(v => owners(probesOf(v))))
+      val rtOwned = rt.get("_id").map(vs => vs.flatMap(probesOf)).map(owners)
+      Seq(eqOwned, rtOwned).flatten.foldLeft(files)((fs, owned) => fs.filter(owned))
+    }
+  }
+
+  /** Plan one collection's partitions under a given strategy — shared by
+    * the single-collection path and each entry of multi-collection mode
+    * (which may override the strategy per collection, matching
+    * MultiCollectionSplitBuilder's per-entry splitter/options,
+    * core/.../splitter/MultiCollectionSplitBuilder.java:1-148).
+    */
+  private def planCollection(options: Map[String, String], files: Seq[String],
+      strategy: String, splitSize: Long, key: String, minDocs: Long,
+      filterEmpty: Boolean, q: BQuery, lim: Option[Int], sort: Option[String],
+      runtimeKeyValues: Option[Seq[BsonValue]] = None): Seq[InputPartition] =
+    strategy match {
+      case "bytes" =>
+        files.flatMap { f =>
+          BsonFiles.planByteSplits(f, splitSize).map { case (s, e) =>
+            GraftInputPartition(f, s, e, q, lim, sort): InputPartition
+          }
+        }
+      case "single" =>
+        files.map(f => GraftInputPartition(f, 0L, Long.MaxValue, q, lim, sort): InputPartition)
+      case other =>
+        // key-range strategies via the pure planners + file-backed stats;
+        // chunk/shard maps arrive as option-level JSON (the config.chunks /
+        // shard-host metadata a live deployment would read from the
+        // server, MongoSplitterFactory.java:54-129)
+        val chunks = options.get("chunks").map(ShardMaps.parseChunks).getOrElse(Seq.empty)
+        val shardHosts = options.get("shard_hosts").map(ShardMaps.parseHosts).getOrElse(Map.empty)
+        files.flatMap { f =>
+          Planners.plan(new FileStats(f, key), key, other, q,
+            chunks = chunks, shardHosts = shardHosts,
+            targetSplitBytes = splitSize, minDocs = minDocs,
+            filterEmpty = filterEmpty, runtimeKeyValues = runtimeKeyValues)
+            .map { case (pq, locs) =>
+              GraftInputPartition(f, 0L, Long.MaxValue, pq, lim, sort, locs): InputPartition
+            }
+        }
+    }
+
+  override def createReader(p: InputPartition, spec: ScanSpec,
+      options: Map[String, String]): PartitionReader[InternalRow] = p match {
+    case a: AggInputPartition => new AggPartitionReader(a, spec)
+    case g: GroupedAggPartition => new GroupedAggPartitionReader(g, spec)
+    case r: GraftInputPartition => new GraftPartitionReader(r, spec)
+  }
+
+  override def microBatchStream(spec: ScanSpec, options: Map[String, String]): MicroBatchStream =
+    new GraftBsonMicroBatchStream(spec, options)
 }
 
 object MultiCollections {
@@ -708,332 +637,9 @@ object RuntimeFilters {
   }
 }
 
-final class GraftScan(requiredSchema: StructType, query: BQuery,
-    options: Map[String, String], limit: Option[Int] = None,
-    mapping: Map[String, String] = Map.empty,
-    offset: Option[Int] = None,
-    pushedAgg: Option[Seq[AggPush]] = None,
-    topNSort: Option[Seq[(String, Boolean, org.apache.spark.sql.types.DataType)]] = None,
-    grouped: Option[GroupedAgg] = None,
-    sample: Option[SamplePush] = None,
-    unwind: Option[Unwind] = None,
-    unwindPost: BQuery = BQuery.True,
-    /** Pushed limit/top-n/offset count UNWOUND rows: the reader's tail
-      * stage runs post-unwind (an option-level PARENT-scoped cursor
-      * limit keeps its pre-unwind semantics when this is false). */
-    tailsPostUnwind: Boolean = false,
-    fileMeta: Boolean = false)
-    extends Scan with Batch with SupportsReportStatistics
-    with SupportsReportOrdering with SupportsRuntimeV2Filtering {
-
-  /** Runtime IN-sets from Spark's dynamic filtering (join-key values
-    * observed on the other side at execution time), keyed by DOC field.
-    * Used at plan level only — shard routing and key-range partition
-    * pruning plus a row-level `$in` — all safe under the runtime-filter
-    * contract (rows the filter would drop are dropped by the join anyway,
-    * and pruning uses [[Planners.rangeMayHoldReadEq]], which never drops
-    * a partition that could hold a matching row). The reference has no
-    * analog — its filter-aware splits are static; this is the DSv2 form
-    * of re-planning them under the join's observed keys.
-    */
-  @volatile private var runtimeIn: Map[String, Seq[BsonValue]] = Map.empty
-
-  /** The mapping and the DERIVED columns (r17), which every partition's
-    * reader injects. */
-  private val cols = Pushdown.Columns(requiredSchema, mapping,
-    graft.query.ComputedCol.fromOptions(options))
-
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    // a pushed limit/offset counts rows of the UNFILTERED stream — any
-    // runtime narrowing under it would change which rows it keeps
-    if (pushedAgg.isDefined || grouped.isDefined ||
-        options.contains("collections") ||
-        limit.isDefined || offset.isDefined) Array.empty
-    else Pushdown.runtimeFilterAttributes(cols, options, readSchema())
-
-  // spark column -> doc field (column_mapping analog of the pushed
-  // filter translator)
-  override def filter(predicates: Array[Predicate]): Unit =
-    runtimeIn = Pushdown.runtimeIn(predicates).map { case (c, vs) =>
-      mapping.getOrElse(c, c) -> vs }
-
-  /** Structured Streaming entry: new dump FILES landing under `path`
-    * stream in as micro-batches ([[GraftBsonMicroBatchStream]]). Pushed
-    * filters ride each batch's split readers; row-count-bearing
-    * pushdowns and multi-collection mode refuse.
-    */
-  override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    require(pushedAgg.isEmpty && grouped.isEmpty && topNSort.isEmpty &&
-      limit.isEmpty && offset.isEmpty && sample.isEmpty && unwind.isEmpty &&
-      !options.contains("collections"),
-      "graftbson streaming read cannot carry limit/offset/top-n/aggregate/" +
-        "sample/unwind pushdowns or multi-collection mode")
-    // COMPUTED columns (r17): no injection seam in the streaming
-    // reader — refuse loudly rather than stream an all-null column
-    require(cols.computed.isEmpty,
-      "graftbson streaming read does not support computed_columns")
-    new GraftBsonMicroBatchStream(requiredSchema, query, options, mapping)
-  }
-
-  override def readSchema(): StructType =
-    Pushdown.aggReadSchema(grouped, pushedAgg, requiredSchema)
-  override def toBatch: Batch = this
-
-  /** Report the per-partition cursor sort (`sort` option) to Catalyst so
-    * a downstream `sortWithinPartitions` on the same key is elided —
-    * SupportsReportOrdering's contract is exactly the reference's
-    * per-split cursor.sort guarantee (order within a partition, not
-    * global). Only reported when the sort key survives projection under
-    * its SPARK column name (column_mapping may rename it) — the reader
-    * sorts ascending with BSON null-first semantics, Spark's ASC
-    * NULLS_FIRST.
-    */
-  override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    options.get("sort") match {
-      // a pushed aggregate replaces the scan output with the agg schema
-      // (count(*)/min/max or group+agg columns) — reporting the sort
-      // column would hand Spark a SortOrder it cannot resolve against
-      // this scan
-      case Some(_) if pushedAgg.isDefined || grouped.isDefined => Array.empty
-      // multi-collection entries may override sort per entry — a single
-      // scan-level ordering claim would be wrong for those partitions
-      // under a pushed unwind, a sort keyed at (or under) the unwound
-      // path resolves to the ELEMENT column, whose per-element values do
-      // not carry the parent-cursor order — no claim
-      case Some(docKey) if unwind.exists(_.postOnly(docKey)) => Array.empty
-      case Some(docKey) if !options.contains("collections") =>
-        ColumnMapping.sparkColFor(mapping, docKey) match {
-          case Some(c) if requiredSchema.fieldNames.contains(c) =>
-            Array(org.apache.spark.sql.connector.expressions.Expressions.sort(
-              org.apache.spark.sql.connector.expressions.Expressions.column(c),
-              org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-          case _ => Array.empty
-        }
-      case _ => Array.empty
-    }
-
-  override def description(): String =
-    s"GraftScan PushedQuery: $query, ReadSchema: ${readSchema().simpleString}" +
-      (if (cols.computed.isEmpty) ""
-       else s", PushedComputed: [${cols.computed.map(_.describe).mkString(", ")}]") +
-      pushedAgg.map(a => s", PushedAggregates: [${a.mkString(", ")}]").getOrElse("") +
-      grouped.map(g => s", PushedGroupedAggregate: $g").getOrElse("") +
-      sample.map(sp => s", PushedSample: $sp").getOrElse("") +
-      topNSort.map { spec =>
-        val order = spec.map { case (k, desc, _) =>
-          s"$k ${if (desc) "DESC" else "ASC"}" }.mkString(", ")
-        s", PushedTopN: $order LIMIT ${limit.getOrElse(-1)}" }.getOrElse("") +
-      unwind.map(u => ", " + u.describe(unwindPost)).getOrElse("")
-
-  /** Size estimate from the data files so Catalyst can pick broadcast
-    * joins for small collections (the stats role collstats plays in the
-    * reference's planning, MongoSplitterFactory.java:66-83). A pushed
-    * sample scales the estimate by its window — the sampled side of a
-    * join should look as small as it is.
-    */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val bytes: Long = {
-      val raw = allFiles.map(f => Files.size(Paths.get(f))).sum
-      sample.map(sp => (raw * math.max(sp.upper - sp.lower, 0.0)).toLong)
-        .getOrElse(raw)
-    }
-    override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
-    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
-  }
-
-  private def allFiles: Seq[String] = options.get("collections") match {
-    case Some(json) => MultiCollections.parse(json).flatMap(c => GraftBsonSource.dataFiles(c.path))
-    case None => options.get("path").map(GraftBsonSource.dataFiles).getOrElse(Seq.empty)
-  }
-
-  /** Per-PARTITION cursor-sort key (`sort` option) — cursor.sort parity
-    * with the reference (MongoInputSplit.java:281) — NOT a global order
-    * across partitions, exactly as in the reference; use Spark's orderBy
-    * for that. A pushed TopN rides its own [[GraftInputPartition
-    * .topNSpec]] channel instead (the two are mutually exclusive:
-    * pushTopN refuses when a `sort` option is set).
-    */
-  private val sortKey: Option[String] = options.get("sort")
-
-
-  /** Plan one collection's partitions under a given strategy — shared by
-    * the single-collection path and each entry of multi-collection mode
-    * (which may override the strategy per collection, matching
-    * MultiCollectionSplitBuilder's per-entry splitter/options,
-    * core/.../splitter/MultiCollectionSplitBuilder.java:1-148).
-    */
-  private def planCollection(files: Seq[String], strategy: String,
-      splitSize: Long, key: String, minDocs: Long, filterEmpty: Boolean,
-      q: BQuery, lim: Option[Int], sort: Option[String],
-      off: Option[Int],
-      runtimeKeyValues: Option[Seq[BsonValue]] = None): Seq[InputPartition] = {
-    strategy match {
-    case "bytes" =>
-      files.flatMap { f =>
-        BsonFiles.planByteSplits(f, splitSize).map { case (s, e) =>
-          GraftInputPartition(f, s, e, q, lim, mapping, sort,
-            topNSpec = topNSort, sample = sample,
-            unwind = unwind, unwindPost = unwindPost,
-            tailsPostUnwind = tailsPostUnwind,
-            computed = cols.computed): InputPartition
-        }
-      }
-    case "single" =>
-      files.map(f =>
-        GraftInputPartition(f, 0L, Long.MaxValue, q, lim, mapping, sort,
-          offset = off, topNSpec = topNSort, sample = sample,
-          unwind = unwind, unwindPost = unwindPost,
-          tailsPostUnwind = tailsPostUnwind,
-          computed = cols.computed): InputPartition)
-    case other =>
-      // key-range strategies via the pure planners + file-backed stats;
-      // chunk/shard maps arrive as option-level JSON (the config.chunks /
-      // shard-host metadata a live deployment would read from the server,
-      // MongoSplitterFactory.java:54-129)
-      val chunks = options.get("chunks").map(ShardMaps.parseChunks).getOrElse(Seq.empty)
-      val shardHosts = options.get("shard_hosts").map(ShardMaps.parseHosts).getOrElse(Map.empty)
-      files.flatMap { f =>
-        val stats = new FileStats(f, key)
-        Planners.plan(stats, key, other, q,
-          chunks = chunks, shardHosts = shardHosts,
-          targetSplitBytes = splitSize, minDocs = minDocs,
-          filterEmpty = filterEmpty, runtimeKeyValues = runtimeKeyValues)
-          .map { case (pq, locs) =>
-            GraftInputPartition(f, 0L, Long.MaxValue, pq, lim, mapping, sort,
-              locations = locs, topNSpec = topNSort,
-              sample = sample, unwind = unwind,
-              unwindPost = unwindPost,
-              tailsPostUnwind = tailsPostUnwind,
-              computed = cols.computed): InputPartition
-          }
-      }
-    }
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    grouped match {
-      case Some(g) =>
-        // grouped partials per BYTE-SPLIT (the same parallelism a row
-        // scan gets — a grouped aggregate over one huge file must not
-        // serialize into one task); each split folds its rows into
-        // per-group partial rows over a projected decode
-        val files = GraftBsonSource.dataFiles(options.getOrElse("path",
-          throw new IllegalArgumentException("path option required")))
-        val splitSize = options.get("split_size").map(_.toLong)
-          .getOrElse(8L * 1024 * 1024)
-        val parts = files.flatMap(f =>
-          BsonFiles.planByteSplits(f, splitSize).map { case (s, e) =>
-            GroupedAggPartition(f, s, e, query, g, mapping,
-              sample, unwind, unwindPost,
-              computed = cols.computed): InputPartition
-          })
-        return (
-          if (parts.nonEmpty || g.groupCols.nonEmpty) parts.toArray
-          // empty collection + GLOBAL aggregate: one sentinel partition
-          // so the final fold sees a count-0 partial, not zero rows
-          // (the q58 zero-partition COUNT lesson)
-          else Array(GroupedAggPartition("", 0L, 0L, query, g,
-            mapping, sample, computed = cols.computed): InputPartition))
-      case None => ()
-    }
-    pushedAgg match {
-      case Some(items) =>
-        // one partial-aggregate row per data file; bodies only read when a
-        // MIN/MAX needs the projected field
-        val files = GraftBsonSource.dataFiles(options.getOrElse("path",
-          throw new IllegalArgumentException("path option required")))
-        if (files.isEmpty)
-          // an EMPTY collection must still yield ONE partial row
-          // (count 0, min/max NULL): with zero partitions Spark's final
-          // fold sums an empty input and COUNT(*) would come back NULL
-          // instead of 0 (found by the r11 all-tables empty twin)
-          return Array(AggInputPartition("", items, mapping))
-        return files.map(f => AggInputPartition(f, items, mapping): InputPartition).toArray
-      case None => ()
-    }
-    val defStrategy = options.getOrElse("splitter", "bytes")
-    val defSplitSize = options.get("split_size").map(_.toLong).getOrElse(8L * 1024 * 1024)
-    val defKey = options.getOrElse("key", "_id")
-    val defMinDocs = options.get("min_docs").map(_.toLong).getOrElse(1000L)
-    val defFilterEmpty = options.get("filter_empty").exists(_.toBoolean)
-    // multi-collection mode: per-collection configs, each planned
-    // independently with its own splitter/options (falling back to the
-    // scan-level defaults) then unioned (MultiMongoCollectionSplitter
-    // .calculateSplits:47-141 / MultiCollectionSplitBuilder semantics)
-    options.get("collections") match {
-      case Some(json) =>
-        MultiCollections.parse(json).flatMap { c =>
-          planCollection(
-            GraftBsonSource.dataFiles(c.path),
-            c.splitter.getOrElse(defStrategy),
-            c.splitSize.getOrElse(defSplitSize),
-            c.key.getOrElse(defKey),
-            c.minDocs.getOrElse(defMinDocs),
-            c.filterEmpty.getOrElse(defFilterEmpty),
-            BQuery.and(query, c.query),
-            c.limit.orElse(limit),
-            c.sort.orElse(sortKey),
-            off = None)
-        }.toArray
-      case None =>
-        val rawPath = options.getOrElse("path",
-          throw new IllegalArgumentException("path option required"))
-        val files = GraftBsonSource.dataFiles(rawPath)
-        // belt-and-suspenders with filterAttributes: never let a runtime
-        // filter narrow a scan that carries a pushed limit/offset
-        val rt = if (limit.isDefined || offset.isDefined) Map.empty[String, Seq[BsonValue]]
-          else runtimeIn
-        // mongos-parity query routing: a pushed `_id` equality — or a
-        // runtime `_id` IN-set from dynamic filtering — can only match
-        // inside the owning shards (ShardRouting co-locates every
-        // cross-width equal value; a hex string also probes its ObjectId
-        // representation, which reads as the same Spark string), so the
-        // scan plans exactly those shard files instead of all of them —
-        // the read-side mirror of the write path's model routing
-        val routed = {
-          val dir = GraftBsonSource.normalizePath(rawPath)
-          val nShards =
-            if (Files.isDirectory(Paths.get(dir)))
-              new graft.store.BsonCollection(dir).shardCount
-            else 1
-          if (nShards <= 1) files
-          else {
-            // every stored _id a point value could equal: a read-semantics
-            // string probes all string-reading storages (BSON forbids a
-            // regex _id, so the probe set is complete); a typed Mongo
-            // string also matches symbol storage (same bracket)
-            def probesOf(v: BsonValue): Seq[BsonValue] = v match {
-              case BString(s) => BQuery.readEqProbes(s)
-              case other => Seq(other)
-            }
-            def owners(probes: Seq[BsonValue]): Set[String] =
-              probes.map(p => graft.store.BsonCollection.shardPath(dir, nShards,
-                graft.store.ShardRouting.idShard(p, nShards)).toString).toSet
-            val eqOwned = graft.store.BsonCollection.idEquality(query)
-              .map(v => owners(probesOf(v)))
-              .orElse(graft.store.BsonCollection.idReadEquality(query)
-                .map(v => owners(probesOf(v))))
-            val rtOwned = rt.get("_id").map(vs => vs.flatMap(probesOf))
-              .map(owners)
-            Seq(eqOwned, rtOwned).flatten
-              .foldLeft(files)((fs, owned) => fs.filter(owned))
-          }
-        }
-        // row-level runtime narrowing: the IN-sets AND-compose into the
-        // per-partition query; the split-key values additionally prune
-        // whole key-range partitions inside Planners.plan
-        planCollection(routed, defStrategy, defSplitSize, defKey, defMinDocs,
-          defFilterEmpty, Pushdown.withRuntimeIn(query, rt), limit, sortKey, offset,
-          runtimeKeyValues = rt.get(defKey)).toArray
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(requiredSchema, fileMeta)
-}
-
-final case class AggInputPartition(path: String, items: Seq[AggPush],
-    mapping: Map[String, String]) extends InputPartition
+/** One file of a pushed global COUNT(*)/MIN/MAX; path "" is the
+  * empty-collection sentinel. */
+final case class AggInputPartition(path: String) extends InputPartition
 
 /** One partial-aggregate row per file. COUNT(*)-only pushes touch zero
   * document bytes (side-file / header-walk count via [[FileStats]]); a
@@ -1042,16 +648,14 @@ final case class AggInputPartition(path: String, items: Seq[AggPush],
   * row scan, with the fold running under Spark's own interpreted
   * ordering for the column type.
   */
-final class AggPartitionReader(p: AggInputPartition)
-    extends PartitionReader[InternalRow] {
+final class AggPartitionReader(p: AggInputPartition, spec: ScanSpec)
+    extends RowIteratorReader {
   import org.apache.spark.sql.types._
 
-  private var done = false
-  private var row: InternalRow = _
+  private val items = spec.agg.get
 
-  override def next(): Boolean = {
-    if (done) return false
-    val scanCols: Seq[(String, DataType)] = p.items.collect {
+  override protected lazy val rows: Iterator[InternalRow] = {
+    val scanCols: Seq[(String, DataType)] = items.collect {
       case AggPush.MinOf(c, t) => (c, t)
       case AggPush.MaxOf(c, t) => (c, t)
     }.distinct
@@ -1059,13 +663,13 @@ final class AggPartitionReader(p: AggInputPartition)
       if (p.path.isEmpty) {
         // the empty-collection sentinel partition: zero docs, so COUNT
         // folds to 0 and MIN/MAX to NULL
-        p.items.map {
+        items.map {
           case AggPush.RowCount => 0L: Any
           case _ => null
         }
       } else if (scanCols.isEmpty) {
         val n = new FileStats(p.path, "_id").count
-        p.items.map(_ => n)
+        items.map(_ => n)
       } else {
         val schema = StructType(scanCols.map { case (c, t) => StructField(c, t) })
         val idx = scanCols.map(_._1).zipWithIndex.toMap
@@ -1076,11 +680,11 @@ final class AggPartitionReader(p: AggInputPartition)
         val maxs = Array.fill[Any](scanCols.size)(null)
         var n = 0L
         val reader = new GraftPartitionReader(
+          GraftInputPartition(p.path, 0L, Long.MaxValue, BQuery.True),
           // scan columns are doc paths (builder-composed) — identity
           // entries route each through getPath (dotted subfields decode
           // just their subpath)
-          GraftInputPartition(p.path, 0L, Long.MaxValue, BQuery.True,
-            mapping = scanCols.map(c => c._1 -> c._1).toMap), schema)
+          ScanSpec(schema, mapping = scanCols.map(c => c._1 -> c._1).toMap))
         try {
           while (reader.next()) {
             val r = reader.get()
@@ -1100,18 +704,15 @@ final class AggPartitionReader(p: AggInputPartition)
             }
           }
         } finally reader.close()
-        p.items.map {
+        items.map {
           case AggPush.RowCount => n
           case AggPush.MinOf(c, _) => mins(idx(c))
           case AggPush.MaxOf(c, _) => maxs(idx(c))
         }
       }
-    row = InternalRow.fromSeq(values)
-    done = true
-    true
+    Iterator.single(InternalRow.fromSeq(values))
   }
 
-  override def get(): InternalRow = row
   override def close(): Unit = ()
 }
 
@@ -1307,31 +908,14 @@ final class FileStats(path: String, key: String) extends Planners.CollectionStat
   }
 }
 
+/** One partition of a plain file scan: the file and its byte range, the
+  * per-partition query (a planned key range, runtime IN-sets, a
+  * `collections` entry's query), the cursor limit and sort (a
+  * `collections` entry may override both), and the locations. */
 final case class GraftInputPartition(path: String, start: Long, end: Long,
     query: BQuery, limit: Option[Int] = None,
-    mapping: Map[String, String] = Map.empty,
     sortKey: Option[String] = None,
-    locations: Seq[String] = Seq.empty,
-    offset: Option[Int] = None,
-    /** Set for a pushed TopN: (doc field, descending, read type) per
-      * order key — select by the values AS SPARK READS them with a
-      * limit-bounded selection buffer. */
-    topNSpec: Option[Seq[(String, Boolean, org.apache.spark.sql.types.DataType)]] = None,
-    /** Set for a pushed TABLESAMPLE: deterministic keyed Bernoulli,
-      * applied right after the pushed query (commutes with it). */
-    sample: Option[SamplePush] = None,
-    /** Set for a pushed `$unwind`: one row per element (or map entry). */
-    unwind: Option[Unwind] = None,
-    /** Accepted element-column filters, evaluated POST-unwind. */
-    unwindPost: BQuery = BQuery.True,
-    /** Pushed limit/top-n/offset count UNWOUND rows (tail stage runs
-      * post-unwind); false = a PARENT-scoped option cursor limit. */
-    tailsPostUnwind: Boolean = false,
-    /** DERIVED columns (r17): injected into each doc right after the
-      * pushed-query match — the file-transport mirror of the server's
-      * `$set` position (query/sample/TopN on computed fields are
-      * refused or residual at the builder, so the order is free). */
-    computed: Seq[graft.query.ComputedCol] = Nil)
+    locations: Seq[String] = Seq.empty)
     extends InputPartition {
   /** Chunk/shard locality surfaced to Spark's scheduler (the reference's
     * MongoInputSplit.getLocations:125-131 / ShardChunkMongoSplitter:98-119).
@@ -1339,27 +923,10 @@ final case class GraftInputPartition(path: String, start: Long, end: Long,
   override def preferredLocations(): Array[String] = locations.toArray
 }
 
-final class GraftReaderFactory(requiredSchema: StructType,
-    fileMeta: Boolean = false)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case a: AggInputPartition => new AggPartitionReader(a)
-      case g: GroupedAggPartition => new GroupedAggPartitionReader(g)
-      case p: GraftInputPartition =>
-        new GraftPartitionReader(p, requiredSchema, fileMeta)
-    }
-}
-
 /** One byte-split of a pushed grouped aggregation: path "" is the
   * empty-collection sentinel (GLOBAL aggregates only). */
 final case class GroupedAggPartition(path: String, start: Long, end: Long,
-    query: BQuery, grouped: GroupedAgg,
-    mapping: Map[String, String],
-    sample: Option[SamplePush] = None,
-    unwind: Option[Unwind] = None,
-    unwindPost: BQuery = BQuery.True,
-    computed: Seq[graft.query.ComputedCol] = Nil) extends InputPartition
+    query: BQuery) extends InputPartition
 
 /** Folds one byte-split's rows into per-group PARTIAL rows. The inner
   * row scan decodes ONLY the group-key and aggregate input columns
@@ -1376,12 +943,12 @@ final case class GroupedAggPartition(path: String, start: Long, end: Long,
   * columns) seeds the empty group so an empty split still emits its
   * count-0 partial.
   */
-final class GroupedAggPartitionReader(p: GroupedAggPartition)
-    extends PartitionReader[InternalRow] {
+final class GroupedAggPartitionReader(p: GroupedAggPartition, spec: ScanSpec)
+    extends RowIteratorReader {
   import org.apache.spark.sql.types._
   import GroupedAggPartitionReader.FlushGroups
 
-  private val g = p.grouped
+  private val g = spec.grouped.get
   // inner scan schema: group columns, then the distinct aggregate input
   // columns not already among them (table types — the decode types)
   private val extraInputs: Seq[(String, DataType)] =
@@ -1397,17 +964,14 @@ final class GroupedAggPartitionReader(p: GroupedAggPartition)
   private val inner: GraftPartitionReader =
     if (p.path.isEmpty) null
     else new GraftPartitionReader(
+      GraftInputPartition(p.path, p.start, p.end, p.query),
       // column names here ARE doc paths (the builder composed
       // column_mapping and nested subpaths already) — identity entries
       // make the decoder resolve each by getPath, so a dotted group key
       // decodes just its subfield through the Proj trie
-      GraftInputPartition(p.path, p.start, p.end, p.query,
-        mapping = innerSchema.fieldNames.map(c => c -> c).toMap,
-        sample = p.sample,
-        unwind = p.unwind,
-        unwindPost = p.unwindPost,
-        computed = p.computed),
-      innerSchema)
+      ScanSpec(innerSchema, unwind = spec.unwind, unwindPost = spec.unwindPost,
+        sample = spec.sample, computed = spec.computed,
+        mapping = innerSchema.fieldNames.map(c => c -> c).toMap))
 
   private def cloned(v: Any): Any = v match {
     case s: org.apache.spark.unsafe.types.UTF8String => s.clone()
@@ -1420,11 +984,6 @@ final class GroupedAggPartitionReader(p: GroupedAggPartition)
       c -> org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(t)
         .asInstanceOf[Ordering[Any]]
     }
-
-  private def newStates(): Array[Any] = g.items.map {
-    case (GroupAgg.CountAll(_) | GroupAgg.CountCol(_, _), _) => 0L: Any
-    case _ => null
-  }.toArray
 
   private def absorb(states: Array[Any], r: InternalRow): Unit = {
     var i = 0
@@ -1473,9 +1032,7 @@ final class GroupedAggPartitionReader(p: GroupedAggPartition)
   }
 
   private var exhausted = p.path.isEmpty && g.groupCols.nonEmpty
-  private var batch: Iterator[InternalRow] = Iterator.empty
   private var sentinelDone = false
-  private var current: InternalRow = _
 
   /** Read inner rows into a fresh group map until the flush cap or EOF,
     * then emit the map as partial rows. */
@@ -1483,7 +1040,7 @@ final class GroupedAggPartitionReader(p: GroupedAggPartition)
     val map = scala.collection.mutable.LinkedHashMap.empty[Vector[Any], Array[Any]]
     if (g.groupCols.isEmpty && !sentinelDone) {
       // seed the global group: an empty split still emits count-0
-      map.put(Vector.empty, newStates())
+      map.put(Vector.empty, g.emptyPartial)
       sentinelDone = true
     }
     if (inner != null) {
@@ -1492,7 +1049,7 @@ final class GroupedAggPartitionReader(p: GroupedAggPartition)
         val r = inner.get()
         val key = Vector.tabulate(g.groupCols.length)(i =>
           if (r.isNullAt(i)) null else cloned(r.get(i, g.groupCols(i)._2)))
-        absorb(map.getOrElseUpdate(key, newStates()), r)
+        absorb(map.getOrElseUpdate(key, g.emptyPartial), r)
         if (map.size >= FlushGroups) go = false
       }
       if (go) exhausted = true
@@ -1502,12 +1059,9 @@ final class GroupedAggPartitionReader(p: GroupedAggPartition)
     }
   }
 
-  override def next(): Boolean = {
-    while (!batch.hasNext && !exhausted) batch = nextBatch()
-    if (batch.hasNext) { current = batch.next(); true } else false
-  }
+  override protected val rows: Iterator[InternalRow] =
+    Iterator.continually(()).takeWhile(_ => !exhausted).flatMap(_ => nextBatch())
 
-  override def get(): InternalRow = current
   override def close(): Unit = if (inner != null) inner.close()
 }
 
@@ -1518,13 +1072,15 @@ object GroupedAggPartitionReader {
   val FlushGroups: Int = 1 << 17
 }
 
-final class GraftPartitionReader(p: GraftInputPartition,
-    requiredSchema: StructType, fileMeta: Boolean = false)
-    extends PartitionReader[InternalRow] {
+/** One file partition's rows: projected decode, the partition query,
+  * computed columns, the sample window, the cursor sort, the unwind and
+  * the pushed tail, in that order. */
+final class GraftPartitionReader(p: GraftInputPartition, spec: ScanSpec)
+    extends RowIteratorReader {
   // `_file` provenance: decoded rows splice this partition's path in at
   // the requested position — constant per partition
   private val fileCol =
-    new MetaColumn(requiredSchema, GraftBsonSource.FileMetaCol, fileMeta, p.path)
+    new MetaColumn(spec.required, GraftBsonSource.FileMetaCol, spec.meta, p.path)
   private val decodeSchema: StructType = fileCol.decodeSchema
   // projected decode: only required columns, remapped paths and query
   // fields are materialized; everything else is byte-skipped — at EVERY
@@ -1532,17 +1088,17 @@ final class GraftPartitionReader(p: GraftInputPartition,
   // pruned nested schema or a dotted column_mapping decodes only the
   // subfields it names, [[graft.bson.BsonCodec.Proj]])
   private val needed: Set[String] =
-    GraftPartitionReader.schemaPaths(decodeSchema, p.mapping) ++
-      p.mapping.values ++
+    GraftPartitionReader.schemaPaths(decodeSchema, spec.mapping) ++
+      spec.mapping.values ++
       BQuery.fieldPaths(p.query) ++
       p.sortKey ++
-      p.topNSpec.toSeq.flatten.map(_._1) ++
-      p.sample.map(_.key) ++
-      p.unwind.map(_.path) ++
-      BQuery.fieldPaths(p.unwindPost) ++
+      spec.topN.toSeq.flatMap(_.keys.map(_._1)) ++
+      spec.sample.map(_.key) ++
+      spec.unwind.map(_.path) ++
+      BQuery.fieldPaths(spec.unwindPost) ++
       // COMPUTED columns (r17): the SOURCE fields must decode (the
       // synthetic out names never exist in storage)
-      p.computed.map(_.field)
+      spec.computed.map(_.field)
   // keep the raw handle: with limit pushdown / early task kill the iterator
   // is never drained, so close() must release the file descriptor
   private val raw = BsonFiles.readRange(p.path, p.start, p.end, Some(needed))
@@ -1555,9 +1111,9 @@ final class GraftPartitionReader(p: GraftInputPartition,
   // and TopN orders on computed fields are refused at the builder, so
   // the remaining stages see the derived fields like stored ones
   private val matched =
-    if (p.computed.isEmpty) matched0
-    else matched0.map(d => graft.query.ComputedCol.injectAll(p.computed, d))
-  private val base = p.sample.map(sp => matched.filter(sp.keep)).getOrElse(matched)
+    if (spec.computed.isEmpty) matched0
+    else matched0.map(d => graft.query.ComputedCol.injectAll(spec.computed, d))
+  private val base = spec.sample.map(sp => matched.filter(sp.keep)).getOrElse(matched)
   // per-PARTITION sort (the reference's cursor.sort semantics,
   // MongoInputSplit.java:281 — explicitly NOT a global order; use
   // Spark's own orderBy for that). A pushed TopN instead selects by the
@@ -1568,45 +1124,40 @@ final class GraftPartitionReader(p: GraftInputPartition,
   // option-level cursor sort: PARENT order (never set with a pushed
   // top-n — the builder refuses the combination)
   private val sortedParents: Iterator[BDoc] = p.sortKey match {
-    case Some(key) if p.topNSpec.isEmpty =>
+    case Some(key) if spec.topN.isEmpty =>
       base.toVector.sortBy(d => d.getPath(key).getOrElse(BNull))(BsonOrdering).iterator
     case _ => base
   }
   // option-level PARENT-scoped cursor limit keeps its pre-unwind
   // semantics; pushed tails run post-unwind instead (tailsPostUnwind)
   private val parents: Iterator[BDoc] =
-    if (p.unwind.isDefined && !p.tailsPostUnwind)
+    if (spec.unwind.isDefined && !spec.tailsPostUnwind)
       p.limit.map(sortedParents.take).getOrElse(sortedParents)
     else sortedParents
   // `$unwind` (r14): the shared rule emits one doc per element or map
   // entry and applies the post-unwind match; the pos lands as the int32
   // the pos column decodes
   private val unwoundDocs: Iterator[BDoc] =
-    Unwind.expandAll(p.unwind, p.unwindPost, parents, narrow = true)
+    Unwind.expandAll(spec.unwind, spec.unwindPost, parents, narrow = true)
   // pushed tail stage — top-n (READ-value bounded heap), then offset
   // (skip; single-partition plans only), then limit. Counts UNWOUND
   // rows when the unwind is pushed with tails, rows otherwise.
   private val docs: Iterator[BDoc] = {
-    val t0 = p.topNSpec match {
-      case Some(spec) =>
-        GraftPartitionReader.topNSelect(unwoundDocs, spec,
+    val t0 = spec.topN match {
+      case Some(t) =>
+        GraftPartitionReader.topNSelect(unwoundDocs, t.keys,
           p.limit.getOrElse(Int.MaxValue))
       case None => unwoundDocs
     }
-    val t1 = p.offset.map(t0.drop).getOrElse(t0)
-    if (p.unwind.isEmpty || p.tailsPostUnwind)
+    val t1 = spec.offset.map(t0.drop).getOrElse(t0)
+    if (spec.unwind.isEmpty || spec.tailsPostUnwind)
       p.limit.map(t1.take).getOrElse(t1)
     else t1
   }
-  private var current: InternalRow = _
 
-  override def next(): Boolean =
-    if (docs.hasNext) {
-      current = fileCol.splice(RowCodec.toRow(docs.next(), decodeSchema, p.mapping))
-      true
-    } else false
+  override protected val rows: Iterator[InternalRow] =
+    docs.map(d => fileCol.splice(RowCodec.toRow(d, decodeSchema, spec.mapping)))
 
-  override def get(): InternalRow = current
   override def close(): Unit = raw.close()
 }
 

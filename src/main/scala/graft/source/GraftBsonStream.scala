@@ -1,10 +1,8 @@
 package graft.source
 
 import graft.files.BsonFiles
-import graft.query.BQuery
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming READ over a BSON dump directory: new dump FILES
   * landing under `path` stream in as micro-batches — the ingest shape
@@ -24,15 +22,15 @@ import org.apache.spark.sql.types.StructType
   *  - Batches read `(start, end]` by path order; each file is
   *    byte-split exactly like the batch scan (same `split_size`), so a
   *    batch over one huge dump still gets full split parallelism, and
-  *    pushed filters ride each split's reader.
+  *    pushed filters ride each split's reader (the shared
+  *    [[GraftReaderFactory]] over the scan's [[ScanSpec]]; `_file`
+  *    names each row's dump file).
   *  - `max_files_per_batch` bounds a micro-batch (admission control via
   *    [[ReadMaxFiles]], the same limit class Spark's own file stream
   *    uses); Trigger.AvailableNow is implemented natively so caps hold
   *    and the query terminates at the start-time target.
   */
-final class GraftBsonMicroBatchStream(requiredSchema: StructType,
-    query: BQuery, options: Map[String, String],
-    mapping: Map[String, String])
+final class GraftBsonMicroBatchStream(spec: ScanSpec, options: Map[String, String])
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
@@ -96,13 +94,13 @@ final class GraftBsonMicroBatchStream(requiredSchema: StructType,
       .getOrElse(8L * 1024 * 1024)
     sortedFiles().filter(f => f > lo && f <= hi).flatMap { f =>
       BsonFiles.planByteSplits(f, splitSize).map { case (s, e) =>
-        GraftInputPartition(f, s, e, query, None, mapping): InputPartition
+        GraftInputPartition(f, s, e, spec.query): InputPartition
       }
     }.toArray
   }
 
   override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new GraftReaderFactory(requiredSchema)
+    new GraftReaderFactory(spec, options, FileTransport)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -32,6 +32,18 @@ object Pushdown {
   def uniformStorage(opts: Map[String, String]): Boolean =
     opts.get("assume_uniform_storage").exists(_.toBoolean)
 
+  /** Types usable as a pushed GROUP key, on either transport: grouping
+    * needs only read-value EQUALITY to be refined by the source's
+    * grouping (the partial protocol re-merges, e.g. one read day split
+    * into several stored-millis groups), not a faithful order — so
+    * strings are fine. FloatType is absent because RowCodec has no
+    * BSON→Float read at all. */
+  val GroupKeyTypes: Set[DataType] = {
+    import org.apache.spark.sql.types._
+    Set(StringType, IntegerType, LongType, DoubleType, BooleanType,
+      TimestampType, DateType)
+  }
+
   /** A scan's column surface: the read schema, the `column_mapping`
     * (Spark column -> dotted doc field) and the DERIVED
     * `computed_columns`, which have no stored field: the pushed query and
@@ -375,6 +387,15 @@ final case class GroupedAgg(
   def schema: StructType = StructType(
     groupCols.map { case (c, dt) => StructField(c, dt) } ++
       items.map { case (g, dt) => StructField(g.alias, dt) })
+  /** The partial states of a group that absorbed no rows — counts 0,
+    * MIN/MAX/SUM null: the row a GLOBAL aggregate over nothing emits, so
+    * Spark's final fold (which rewrites COUNT(*) as a SUM of partials)
+    * returns 0, not NULL (the q58 zero-partition lesson). A fresh array
+    * per call: a fold updates it in place. */
+  def emptyPartial: Array[Any] = items.map {
+    case (GroupAgg.CountAll(_) | GroupAgg.CountCol(_, _), _) => 0L: Any
+    case _ => null
+  }.toArray
   override def toString: String =
     (if (groupCols.isEmpty) "GLOBAL"
      else s"GROUP BY ${groupCols.map(_._1).mkString(", ")}") +

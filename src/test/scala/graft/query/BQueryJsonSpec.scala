@@ -81,7 +81,7 @@ class BQueryJsonSpec extends AnyFunSuite {
       "s" -> BString("a"), "x" -> BInt32(1))))
 
     val p = graft.source.GraftInputPartition("/tmp/x.bson", 0L, 1000L, query,
-      limit = Some(7), mapping = Map("a" -> "b.c"))
+      limit = Some(7), sortKey = Some("b.c"))
     val pBack = roundTrip(p)
     assert(pBack == p)
 

@@ -247,8 +247,8 @@ class GraftServerSourceSpec extends SparkSpec {
 
     val schema = StructType(Seq(
       StructField("_id", LongType), StructField("o_totalprice", DoubleType)))
-    val scan = new GraftServerScan(schema, BQuery.True, None,
-      serverOpts(dir, "db.rt") + ("split_size" -> "4096"))
+    val scan = new graft.source.GraftScan(graft.source.ScanSpec(schema),
+      serverOpts(dir, "db.rt") + ("split_size" -> "4096"), ServerTransport)
     val before = scan.planInputPartitions().length
     assert(before > 2, s"need several key-range partitions, got $before")
     assert(scan.filterAttributes().map(_.describe()).toSeq === Seq("_id"))
@@ -262,7 +262,7 @@ class GraftServerSourceSpec extends SparkSpec {
     assert(after.map(_.asInstanceOf[GraftServerPartition]).exists(p =>
       graft.source.Planners.rangeMayHoldReadEq(p.range, BInt64(1L))))
     // cursor narrowing: the reader-factory query carries the IN-set
-    val factory = scan.createReaderFactory().asInstanceOf[GraftServerReaderFactory]
+    val factory = scan.createReaderFactory()
     val reader = factory.createReader(after.head)
     try {
       var n = 0
@@ -820,6 +820,20 @@ class GraftServerSourceSpec extends SparkSpec {
         .option("limit", "1").load().collect()
     }
     assert(e.getMessage.contains("`limit` option") && e.getMessage.contains(".limit(n)"),
+      e.getMessage)
+  }
+
+  test("the graftbson-only `collections` option is rejected, pointing to the comma `ns` form") {
+    import spark.implicits._
+    val dir = freshDir()
+    Seq("db.ca", "db.cb").foreach(ns =>
+      Seq((1L, 1), (2L, 2)).toDF("_id", "v").write.format("graftserver")
+        .options(serverOpts(dir, ns)).mode("append").save())
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graftserver").options(serverOpts(dir, "db.ca"))
+        .option("collections", """[{"path": "db.cb"}]""").load().collect()
+    }
+    assert(e.getMessage.contains("`collections` option") && e.getMessage.contains("ns=db.a,db.b"),
       e.getMessage)
   }
 

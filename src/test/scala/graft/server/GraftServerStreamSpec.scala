@@ -116,6 +116,25 @@ class GraftServerStreamSpec extends SparkSpec {
       Seq(1L, 3L))
   }
 
+  test("the _ns metadata column streams with each row's namespace") {
+    import spark.implicits._
+    val dir = freshDir()
+    val ckpt = freshDir()
+    writeDocs(dir, "db.m1", Seq((1L, "a"), (2L, "b")))
+    writeDocs(dir, "db.m2", Seq((3L, "c")))
+    val q = spark.readStream.format("graftserver")
+      .options(serverOpts(dir, "db.m1,db.m2"))
+      .schema("_id LONG, s STRING")
+      .load()
+      .select($"_id", $"_ns")
+      .writeStream.format("memory").queryName("nsmeta")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(spark.table("nsmeta").as[(Long, String)].collect().sorted.toSeq ==
+      Seq(1L -> "db.m1", 2L -> "db.m1", 3L -> "db.m2"))
+  }
+
   test("offset JSON round-trips, including namespaces with dots") {
     val o = ServerStreamOffset(Map("db.coll" -> 42L, "db2.c" -> -1L))
     assert(ServerStreamOffset.fromJson(o.json) == o)

@@ -110,6 +110,25 @@ class GraftBsonStreamSpec extends SparkSpec {
     assert(drain(dir, ckpt, filterS = Some("keep")).sorted == Seq(1L, 3L))
   }
 
+  test("the _file metadata column streams with each row's dump file") {
+    import spark.implicits._
+    val dir = freshDir()
+    val ckpt = freshDir()
+    writeDump(dir, "dump-001.bson", Seq((1L, "a"), (2L, "b")))
+    writeDump(dir, "dump-002.bson", Seq((3L, "c")))
+    val q = spark.readStream.format("graftbson").option("path", dir)
+      .schema("_id LONG, s STRING")
+      .load()
+      .select($"_id", $"_file")
+      .writeStream.format("memory").queryName("filemeta")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val got = spark.table("filemeta").as[(Long, String)].collect()
+      .map { case (k, f) => k -> new java.io.File(f).getName }.sorted.toSeq
+    assert(got == Seq(1L -> "dump-001.bson", 2L -> "dump-001.bson", 3L -> "dump-002.bson"))
+  }
+
   test("offset JSON round-trips, including quotes and backslashes in paths") {
     val o = FileTailOffset("""/tmp/we"ird\path/dump-1.bson""")
     assert(FileTailOffset.fromJson(o.json) == o)

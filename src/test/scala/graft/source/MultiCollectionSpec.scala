@@ -44,7 +44,8 @@ class MultiCollectionSpec extends SparkSpec {
     val scan = new GraftScanBuilder(df.schema,
       Map("collections" ->
         s"""[{"path": "$dirA", "splitter": "size", "split_size": 4096, "min_docs": 50},
-            |{"path": "$dirB", "splitter": "single", "limit": 7}]""".stripMargin))
+            |{"path": "$dirB", "splitter": "single", "limit": 7}]""".stripMargin),
+      FileTransport)
       .build().toBatch
     val parts = scan.planInputPartitions().collect { case p: GraftInputPartition => p }
     val aParts = parts.filter(_.path.startsWith(dirA))

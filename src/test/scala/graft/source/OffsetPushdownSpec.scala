@@ -23,27 +23,26 @@ class OffsetPushdownSpec extends SparkSpec {
   test("builder accepts offset only for splitter=single with one file") {
     val dir = fixture(10)
     val single = new GraftScanBuilder(null,
-      Map("path" -> dir, "splitter" -> "single"))
+      Map("path" -> dir, "splitter" -> "single"), FileTransport)
     assert(single.pushOffset(3))
 
-    val multi = new GraftScanBuilder(null, Map("path" -> dir)) // default: byte splits
+    val multi = new GraftScanBuilder(null, Map("path" -> dir), FileTransport) // default: byte splits
     assert(!multi.pushOffset(3))
 
     val collections = new GraftScanBuilder(null,
       Map("path" -> dir, "splitter" -> "single",
-        "collections" -> s"""[{"path": "$dir"}]"""))
+        "collections" -> s"""[{"path": "$dir"}]"""), FileTransport)
     assert(!collections.pushOffset(3))
   }
 
   test("reader applies offset before limit, after the per-partition sort") {
     val dir = fixture(100)
     val p = GraftInputPartition(s"$dir/data.bson", 0L, Long.MaxValue,
-      graft.query.BQuery.True, limit = Some(5), sortKey = Some("_id"),
-      offset = Some(10))
+      graft.query.BQuery.True, limit = Some(5), sortKey = Some("_id"))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("_id",
         org.apache.spark.sql.types.IntegerType)))
-    val r = new GraftPartitionReader(p, schema)
+    val r = new GraftPartitionReader(p, ScanSpec(schema, offset = Some(10)))
     val got = Iterator.continually(r).takeWhile(_.next()).map(_.get().getInt(0)).toList
     r.close()
     assert(got === (10 until 15).toList)

@@ -29,7 +29,7 @@ class RuntimeFilterSpec extends SparkSpec {
   private def scanFor(dir: String, opts: Map[String, String]): GraftScan = {
     val schema = StructType(Seq(
       StructField("_id", LongType), StructField("v", IntegerType)))
-    new GraftScan(schema, BQuery.True, opts + ("path" -> dir))
+    new GraftScan(ScanSpec(schema), opts + ("path" -> dir), FileTransport)
   }
 
   test("key-range partitions prune to the runtime IN-set") {
@@ -61,7 +61,7 @@ class RuntimeFilterSpec extends SparkSpec {
       .mode("append").save(dir)
     val schema = StructType(Seq(
       StructField("_id", LongType), StructField("name", StringType)))
-    val scan = new GraftScan(schema, BQuery.True, Map("path" -> dir))
+    val scan = new GraftScan(ScanSpec(schema), Map("path" -> dir), FileTransport)
     val before = scan.planInputPartitions().length
     assert(before >= 8, s"expected >=8 shard partitions, got $before")
     scan.filter(Array(inPredicate("_id", Seq(17L, 18L), LongType)))
@@ -96,9 +96,9 @@ class RuntimeFilterSpec extends SparkSpec {
     assert(scan.planInputPartitions().length == before)
 
     val limited = new GraftScan(
-      StructType(Seq(StructField("_id", LongType), StructField("v", IntegerType))),
-      BQuery.True, Map("path" -> dir, "splitter" -> "sample", "split_size" -> "8192"),
-      limit = Some(10))
+      ScanSpec(StructType(Seq(StructField("_id", LongType), StructField("v", IntegerType))),
+        limit = Some(10)),
+      Map("path" -> dir, "splitter" -> "sample", "split_size" -> "8192"), FileTransport)
     assert(limited.filterAttributes().isEmpty,
       "pushed limit counts unfiltered rows; runtime narrowing must be off")
     limited.filter(Array(inPredicate("_id", Seq(5L), LongType)))

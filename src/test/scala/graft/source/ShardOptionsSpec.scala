@@ -29,9 +29,9 @@ class ShardOptionsSpec extends SparkSpec {
 
   test("chunks option plans one ranged partition per chunk with locality") {
     val dir = fixture()
-    val scan = new GraftScan(null, graft.query.BQuery.True,
+    val scan = new GraftScan(ScanSpec(null),
       Map("path" -> dir, "splitter" -> "chunks",
-        "chunks" -> chunksJson, "shard_hosts" -> hostsJson))
+        "chunks" -> chunksJson, "shard_hosts" -> hostsJson), FileTransport)
     val parts = scan.planInputPartitions().map(_.asInstanceOf[GraftInputPartition])
     assert(parts.length === 3)
     assert(parts.map(_.preferredLocations().toSeq).toSeq ===
@@ -57,8 +57,8 @@ class ShardOptionsSpec extends SparkSpec {
 
   test("shard splitter: one unbounded partition per shard, hosts surfaced") {
     val dir = fixture()
-    val scan = new GraftScan(null, graft.query.BQuery.True,
-      Map("path" -> dir, "splitter" -> "shard", "shard_hosts" -> hostsJson))
+    val scan = new GraftScan(ScanSpec(null),
+      Map("path" -> dir, "splitter" -> "shard", "shard_hosts" -> hostsJson), FileTransport)
     val parts = scan.planInputPartitions().map(_.asInstanceOf[GraftInputPartition])
     assert(parts.length === 3)
     assert(parts.flatMap(_.preferredLocations()).toSet === Set("h0a", "h0b", "h1", "h2"))
