@@ -129,29 +129,6 @@ object GraftServerSource {
     Class.forName(opts.getOrElse("client_factory", classOf[DirServerFactory].getName))
       .getDeclaredConstructor().newInstance().asInstanceOf[ServerClientFactory]
 
-  /** Option-level JSON query (mongo.input.query analog). The
-    * `regex_dialect` gate applies here (r16): out-of-subset `$regex`
-    * patterns refuse under the default mode, stay client-side Java
-    * residuals under `java`, or become verbatim server-authoritative
-    * [[BQuery.RegexServer]] nodes under `server` — see
-    * [[graft.query.RegexDialect]]. The numeric-segment null edge gate
-    * applies when the bound factory is NOT a live transport (r17,
-    * ADVICE r16): the sandbox/file-backed double evaluates this query
-    * client-side with the engine matcher, so `{"m.0": null}`-class
-    * predicates refuse there exactly as on the file transport unless
-    * `numeric_null_paths=engine` opts in; a live server receives the
-    * verbatim wire form and its own rule applies. */
-  def optionQuery(opts: Map[String, String]): BQuery =
-    opts.get("query").map { j =>
-      val q = BQueryJson.parse(j)
-      if (!factory(opts).liveTransport)
-        graft.query.NumericNullEdge.check(q,
-          opts.get(graft.query.NumericNullEdge.OptionKey))
-      graft.query.RegexDialect.forTransport(q,
-        opts.getOrElse(graft.query.RegexDialect.OptionKey, "portable"),
-        serverTransport = true)
-    }.getOrElse(BQuery.True)
-
   def withClient[A](opts: Map[String, String])(f: (ServerClient, String) => A): A = {
     val client = factory(opts).create(opts)
     try f(client, ns(opts))
@@ -237,8 +214,28 @@ object ServerTransport extends Transport {
   override def finishQuery(q: BQuery, options: Map[String, String]): BQuery =
     if (Pushdown.uniformStorage(options)) BQuery.uniformReadBracket(q) else q
 
-  override def optionQuery(options: Map[String, String]): BQuery =
-    GraftServerSource.optionQuery(options)
+  /** Option-level JSON query (mongo.input.query analog). The
+    * `regex_dialect` gate applies here (r16): out-of-subset `$regex`
+    * patterns refuse under the default mode, stay client-side Java
+    * residuals under `java`, or become verbatim server-authoritative
+    * [[BQuery.RegexServer]] nodes under `server` — see
+    * [[graft.query.RegexDialect]]. The numeric-segment null edge gate
+    * applies when the bound factory is NOT a live transport (r17,
+    * ADVICE r16): the sandbox/file-backed double evaluates this query
+    * client-side with the engine matcher, so `{"m.0": null}`-class
+    * predicates refuse there exactly as on the file transport unless
+    * `numeric_null_paths=engine` opts in; a live server receives the
+    * verbatim wire form and its own rule applies. */
+  override def optionQuery(opts: Map[String, String]): BQuery =
+    opts.get("query").map { j =>
+      val q = BQueryJson.parse(j)
+      if (!GraftServerSource.factory(opts).liveTransport)
+        graft.query.NumericNullEdge.check(q,
+          opts.get(graft.query.NumericNullEdge.OptionKey))
+      graft.query.RegexDialect.forTransport(q,
+        opts.getOrElse(graft.query.RegexDialect.OptionKey, "portable"),
+        serverTransport = true)
+    }.getOrElse(BQuery.True)
 
   override def rendersFully(q: BQuery): Boolean = QueryDocs.plan(q).rendersFully
 
