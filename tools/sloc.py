@@ -3,12 +3,16 @@
 
 Usage:
     python3 tools/sloc.py [ROOT]
+    python3 tools/sloc.py BEFORE AFTER
 
 A substantive line holds code: it is neither blank nor wholly inside a
 comment (`// ...` line comments, `/* ... */` and `/** ... */` blocks).
 String literals, triple-quoted ones included, are code, so a `//` or `/*`
-inside a string opens no comment. Prints one `<lines>  <path>` row per file
-under ROOT (default `src/main`, relative to the repo root), then the total.
+inside a string opens no comment. With one root, prints one
+`<lines>  <path>` row per file under ROOT (default `src/main`, relative to
+the repo root), then the total. With two roots (say `src/main` of two
+checkouts), prints one `<before> -> <after>  <change>  <path>` row per file
+under either root (0 where a file is absent), then the totals.
 """
 import os
 import sys
@@ -83,19 +87,33 @@ def substantive(text):
     return count
 
 
-def main():
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(repo, 'src', 'main')
-    rows = []
+def counts(root):
+    """{path relative to root: substantive lines} for every source file."""
+    out = {}
     for d, _, files in os.walk(root):
         for f in files:
             if f.endswith('.scala') or f.endswith('.java'):
                 p = os.path.join(d, f)
                 with open(p, encoding='utf-8') as fh:
-                    rows.append((substantive(fh.read()), os.path.relpath(p, root)))
-    for lines, path in sorted(rows, key=lambda r: r[1]):
-        print(f'{lines:6d}  {path}')
-    print(f'{sum(r[0] for r in rows):6d}  total')
+                    out[os.path.relpath(p, root)] = substantive(fh.read())
+    return out
+
+
+def main():
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if len(sys.argv) > 2:
+        before, after = counts(sys.argv[1]), counts(sys.argv[2])
+        for path in sorted(set(before) | set(after)):
+            b, a = before.get(path, 0), after.get(path, 0)
+            print(f'{b:6d} -> {a:6d}  {a - b:+6d}  {path}')
+        b, a = sum(before.values()), sum(after.values())
+        print(f'{b:6d} -> {a:6d}  {a - b:+6d}  total')
+        return
+    root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(repo, 'src', 'main')
+    rows = counts(root)
+    for path in sorted(rows):
+        print(f'{rows[path]:6d}  {path}')
+    print(f'{sum(rows.values()):6d}  total')
 
 
 if __name__ == '__main__':
