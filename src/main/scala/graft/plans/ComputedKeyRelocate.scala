@@ -81,7 +81,7 @@ object ComputedKeyRelocate extends Rule[LogicalPlan] {
   }
 
   private def eligible(rel: DataSourceV2Relation): Boolean =
-    graft.source.Pushdown.uniformStorage(rel.options.asScala.toMap) &&
+    graft.source.ReadModel.uniform(rel.options.asScala.toMap) &&
       !rel.options.containsKey(graft.query.Unwind.PathKey)
       // multi-collection file scans ADMIT since r18: entries share the
       // scan-level schema/column_mapping (CollectionConf has no mapping

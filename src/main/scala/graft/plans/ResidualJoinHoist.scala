@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.query.FilterTranslator
+import graft.source.ReadModel
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -215,10 +216,10 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
         r.options.asScala.toMap
     }
 
-  /** `x = y` across the two legs with bracket-safe key types on BOTH
-    * sides — the mirror of GraftServerScanBuilder.joinKeySafe, applied
-    * pre-pushdown so the rule only strips a join down to equalities the
-    * `$lookup` can actually take.
+  /** `x = y` across the two legs with an exact key type on BOTH sides —
+    * the join pushdown's own gate ([[graft.source.ReadModel]]'s Stored
+    * EQUAL cell), applied pre-pushdown so the rule only strips a join
+    * down to equalities the `$lookup` can actually take.
     */
   private def isSafeEqui(j: Join, c: Expression): Boolean = c match {
     case EqualTo(x, y) =>
@@ -228,19 +229,17 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
             (j.left.outputSet.contains(xa) && j.right.outputSet.contains(ya)) ||
               (j.right.outputSet.contains(xa) && j.left.outputSet.contains(ya))
           cross &&
-            ownerOptions(j, xa).exists(o => keyTypeSafe(x.dataType, o)) &&
-            ownerOptions(j, ya).exists(o => keyTypeSafe(y.dataType, o))
+            ownerOptions(j, xa).exists(o => exact(ReadModel.Equal, x.dataType, o, None)) &&
+            ownerOptions(j, ya).exists(o => exact(ReadModel.Equal, y.dataType, o, None))
         case _ => false
       }
     case _ => false
   }
 
   /** `x OP y` across the two legs with RANGE-orderable key types on
-    * BOTH sides — the mirror of GraftServerScanBuilder.rangeKeySafe
-    * (aggregation `$lt`/`$gt` compare in BSON total order, exact only
-    * over uniform-stored orderable brackets), applied pre-hoist so a
-    * conjunct the scan can spell into the `$lookup` `$expr` is never
-    * stripped out of the condition. */
+    * BOTH sides — the join pushdown's own gate (the Stored RANGE cell),
+    * applied pre-hoist so a conjunct the scan can spell into the
+    * `$lookup` `$expr` is never stripped out of the condition. */
   private def isSafeRange(j: Join, c: Expression): Boolean = {
     def sides(x: Expression, y: Expression): Boolean =
       (keyRoot(x), keyRoot(y)) match {
@@ -250,9 +249,9 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
               (j.right.outputSet.contains(xa) && j.left.outputSet.contains(ya))
           cross &&
             ownerOptions(j, xa).exists(o =>
-              rangeTypeSafe(x.dataType, o, docFieldOf(o, x))) &&
+              exact(ReadModel.Range, x.dataType, o, docFieldOf(o, x))) &&
             ownerOptions(j, ya).exists(o =>
-              rangeTypeSafe(y.dataType, o, docFieldOf(o, y)))
+              exact(ReadModel.Range, y.dataType, o, docFieldOf(o, y)))
         case _ => false
       }
     c match {
@@ -275,21 +274,11 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
-  private def rangeTypeSafe(dt: DataType, opts: Map[String, String],
-      docField: Option[String] = None): Boolean = {
-    import org.apache.spark.sql.types._
-    val ordered = Set[DataType](IntegerType, LongType, DoubleType,
-      TimestampType, DateType)
-    val uniform = graft.source.Pushdown.uniformStorage(opts)
-    // STRING range operands (r18): admitted only under the side's
-    // ascii_columns declaration — mirror of rangeKeySafe's reasoning
-    // (ASCII makes UTF-8-byte, UTF-16-unit, and server-binary orders
-    // coincide; the sandbox evaluator fails loud on violations)
-    if (dt == StringType)
-      uniform && docField.exists(f =>
-        graft.server.GraftServerScanBuilder.asciiCols(opts).contains(f))
-    else ordered.contains(dt) && uniform
-  }
+  /** The join pushdown's operand gate: a `$lookup` compares stored
+    * values. */
+  private def exact(c: ReadModel.Comparison, dt: DataType,
+      opts: Map[String, String], docField: Option[String]): Boolean =
+    ReadModel.exact(c, dt, ReadModel.Stored, opts, docField)
 
   /** The base attribute of a join-key expression: a bare column or a
     * nested-struct extraction chain over one.
@@ -298,14 +287,6 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
     case a: Attribute => Some(a)
     case GetStructField(child, _, _) => keyRoot(child)
     case _ => None
-  }
-
-  private def keyTypeSafe(dt: DataType, opts: Map[String, String]): Boolean = {
-    import org.apache.spark.sql.types._
-    val always = Set[DataType](IntegerType, DoubleType, BooleanType)
-    val uniform = Set[DataType](LongType, TimestampType, StringType, DateType)
-    always.contains(dt) || (uniform.contains(dt) &&
-      graft.source.Pushdown.uniformStorage(opts))
   }
 
   // ---- source-translatability probe ----

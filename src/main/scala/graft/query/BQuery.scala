@@ -395,19 +395,29 @@ object BQuery {
     @transient private lazy val target =
       org.apache.spark.unsafe.types.UTF8String.fromString(s)
     def matches(d: BDoc): Boolean =
-      d.getPath(path).flatMap(readString).exists { rs =>
-        val c = org.apache.spark.unsafe.types.UTF8String.fromString(rs)
-          .compareTo(target)
-        op match {
-          case ReadStrOp.Eq => c == 0
-          case ReadStrOp.Lt => c < 0
-          case ReadStrOp.Lte => c <= 0
-          case ReadStrOp.Gt => c > 0
-          case ReadStrOp.Gte => c >= 0
-        }
-      }
+      d.getPath(path).flatMap(readString).exists(rs => op.holds(
+        org.apache.spark.unsafe.types.UTF8String.fromString(rs).compareTo(target)))
   }
-  sealed trait ReadStrOp
+  /** The operator of a read-value comparison ([[ReadStrCmp]],
+    * [[ReadLongCmp]], [[ReadTimeCmp]]). */
+  sealed trait ReadStrOp {
+    /** Whether a comparison result (read value vs literal) satisfies it. */
+    def holds(c: Int): Boolean = this match {
+      case ReadStrOp.Eq => c == 0
+      case ReadStrOp.Lt => c < 0
+      case ReadStrOp.Lte => c <= 0
+      case ReadStrOp.Gt => c > 0
+      case ReadStrOp.Gte => c >= 0
+    }
+    /** The same comparison as a BSON bracket node against `v`. */
+    def bracket(path: String, v: BsonValue): BQuery = this match {
+      case ReadStrOp.Eq => Eq(path, v)
+      case ReadStrOp.Lt => Lt(path, v)
+      case ReadStrOp.Lte => Lte(path, v)
+      case ReadStrOp.Gt => Gt(path, v)
+      case ReadStrOp.Gte => Gte(path, v)
+    }
+  }
   object ReadStrOp {
     case object Eq extends ReadStrOp
     case object Lt extends ReadStrOp
@@ -454,16 +464,7 @@ object BQuery {
     */
   final case class ReadLongCmp(path: String, x: Long, op: ReadStrOp) extends BQuery {
     def matches(d: BDoc): Boolean =
-      d.getPath(path).flatMap(readLong).exists { rl =>
-        val c = java.lang.Long.compare(rl, x)
-        op match {
-          case ReadStrOp.Eq => c == 0
-          case ReadStrOp.Lt => c < 0
-          case ReadStrOp.Lte => c <= 0
-          case ReadStrOp.Gt => c > 0
-          case ReadStrOp.Gte => c >= 0
-        }
-      }
+      d.getPath(path).flatMap(readLong).exists(rl => op.holds(java.lang.Long.compare(rl, x)))
   }
 
   /** Spark-read-semantics IN over longs (see [[ReadLongCmp]]). */
@@ -495,16 +496,8 @@ object BQuery {
     */
   final case class ReadTimeCmp(path: String, micros: Long, op: ReadStrOp) extends BQuery {
     def matches(d: BDoc): Boolean =
-      d.getPath(path).flatMap(readMicros).exists { us =>
-        val c = java.lang.Long.compare(us, micros)
-        op match {
-          case ReadStrOp.Eq => c == 0
-          case ReadStrOp.Lt => c < 0
-          case ReadStrOp.Lte => c <= 0
-          case ReadStrOp.Gt => c > 0
-          case ReadStrOp.Gte => c >= 0
-        }
-      }
+      d.getPath(path).flatMap(readMicros)
+        .exists(us => op.holds(java.lang.Long.compare(us, micros)))
   }
 
   /** Spark-read-semantics IN over timestamp micros (see [[ReadTimeCmp]]). */
@@ -549,39 +542,16 @@ object BQuery {
     case And(qs) => And(qs.map(uniformReadBracket))
     case Or(qs) => Or(qs.map(uniformReadBracket))
     case Nor(qs) => Nor(qs.map(uniformReadBracket))
-    case ReadTimeCmp(p, us, op) if us % 1000L == 0 =>
-      val d = BDate(us / 1000L)
-      op match {
-        case ReadStrOp.Eq => Eq(p, d)
-        case ReadStrOp.Lt => Lt(p, d)
-        case ReadStrOp.Lte => Lte(p, d)
-        case ReadStrOp.Gt => Gt(p, d)
-        case ReadStrOp.Gte => Gte(p, d)
-      }
+    case ReadTimeCmp(p, us, op) if us % 1000L == 0 => op.bracket(p, BDate(us / 1000L))
     case ReadTimeIn(p, us) if us.forall(_ % 1000L == 0) =>
       In(p, us.map(x => BDate(x / 1000L)))
-    case ReadLongCmp(p, x, op) =>
-      val v = BInt64(x)
-      op match {
-        case ReadStrOp.Eq => Eq(p, v)
-        case ReadStrOp.Lt => Lt(p, v)
-        case ReadStrOp.Lte => Lte(p, v)
-        case ReadStrOp.Gt => Gt(p, v)
-        case ReadStrOp.Gte => Gte(p, v)
-      }
+    case ReadLongCmp(p, x, op) => op.bracket(p, BInt64(x))
     case ReadLongIn(p, xs) => In(p, xs.map(BInt64.apply))
-    case ReadStrCmp(p, s, ReadStrOp.Eq) => Eq(p, BString(s))
-    case ReadStrCmp(p, s, op) if s.forall(_ < 0x80) =>
-      // ASCII-bounded range: trichotomy against the bound agrees across
-      // UTF-8-byte, UTF-16-unit, and server binary orders (see above)
-      val v = BString(s)
-      op match {
-        case ReadStrOp.Lt => Lt(p, v)
-        case ReadStrOp.Lte => Lte(p, v)
-        case ReadStrOp.Gt => Gt(p, v)
-        case ReadStrOp.Gte => Gte(p, v)
-        case ReadStrOp.Eq => Eq(p, v) // unreachable (matched above)
-      }
+    // equality, or an ASCII-bounded range: trichotomy against the bound
+    // agrees across UTF-8-byte, UTF-16-unit, and server binary orders
+    // (see above)
+    case ReadStrCmp(p, s, op) if op == ReadStrOp.Eq || s.forall(_ < 0x80) =>
+      op.bracket(p, BString(s))
     case ReadStrIn(p, ss) => In(p, ss.map(BString.apply))
     case ReadStrRegex(p, pattern) => Regex(p, pattern)
     case other => other

@@ -2,7 +2,7 @@ package graft.server
 
 import graft.bson._
 import graft.query.{BQuery, BQueryJson, Unwind}
-import graft.source.{AggPush, FieldResolve, GraftScanBuilder, GraftTable, GroupAggParse, GroupedAgg, Planners, Pushdown, RowIteratorReader, SamplePush, ScanSpec, Transport}
+import graft.source.{AggPush, FieldResolve, GraftScanBuilder, GraftTable, GroupAggParse, GroupedAgg, Planners, Pushdown, ReadModel, RowIteratorReader, SamplePush, ScanSpec, Transport}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -212,7 +212,7 @@ object ServerTransport extends Transport {
     * client-side residual re-checks, and the grouped/join pushdowns'
     * fully-renderable gates then accept those filters too. */
   override def finishQuery(q: BQuery, options: Map[String, String]): BQuery =
-    if (Pushdown.uniformStorage(options)) BQuery.uniformReadBracket(q) else q
+    if (ReadModel.uniform(options)) BQuery.uniformReadBracket(q) else q
 
   /** Option-level JSON query (mongo.input.query analog). The
     * `regex_dialect` gate applies here (r16): out-of-subset `$regex`
@@ -251,19 +251,9 @@ object ServerTransport extends Transport {
   /** The `$group` pipeline computes over the UNSAMPLED collection. */
   override val groupedFoldSeesSample = false
 
-  /** The server sorts in BSON STORAGE order, so every order key must be
-    * cursor-order-safe ([[GraftServerScanBuilder.cursorOrderSafe]]); a
-    * COMPUTED key has no stored field (find-land has no `$set`). */
-  override def topNKeyOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
-    GraftServerScanBuilder.cursorOrderSafe(r.dataType, options, Some(r.docPath))
-  /** MIN/MAX probes are sorted limit-1 cursors and `$group` folds in
-    * the stored order. */
-  override def globalAggOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
-    GraftServerScanBuilder.cursorOrderSafe(r.dataType, options, Some(r.docPath))
-  override def minMaxOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
-    GraftServerScanBuilder.cursorOrderSafe(r.dataType, options, Some(r.docPath))
-  override def sumOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
-    GraftServerScanBuilder.sumValueSafe(r.dataType, options)
+  /** The cursor sorts, MIN/MAX probes are sorted limit-1 cursors, and
+    * `$group` folds and sums, all over STORED values. */
+  override val evaluator: ReadModel.Evaluator = ReadModel.Stored
 
   /** collStats per namespace — one bounded round-trip at plan time.
     * Rows only when no query, limit, sample or unwind narrows or widens
@@ -279,12 +269,8 @@ object ServerTransport extends Transport {
       else None)
   }
 
-  /** Reported ONLY when the cursor's BSON order provably equals Spark's
-    * order over the read values; an unsafe type still sorts the cursor
-    * (server semantics) but makes no claim to Catalyst. */
-  override def reportsOrder(f: StructField, spec: ScanSpec,
-      options: Map[String, String]): Boolean =
-    spec.unwind.isEmpty && GraftServerScanBuilder.cursorOrderSafe(f.dataType, options)
+  /** An unwound read makes no order claim. */
+  override val sortSurvivesUnwind = false
   override val runtimeFiltersUnderUnwind = false
 
   override def describeHead(spec: ScanSpec, options: Map[String, String]): String =
@@ -415,7 +401,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
         joinTopN.isDefined || joinSamples.nonEmpty || joinOffset.isDefined)
       return false
     joinTopN = Pushdown.topNOrder(Pushdown.Columns(joinedSchema), orders, r =>
-        GraftServerScanBuilder.cursorOrderSafe(r.dataType,
+        ReadModel.exact(ReadModel.Order, r.dataType, ReadModel.Stored,
           joinedColOpts.getOrElse(r.docPath.split('.').head, options)))
       .map(keys => (keys.map { case (r, desc) => (r.docPath, desc) }, n))
     joinTopN.isDefined
@@ -444,10 +430,12 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     // pick the top-level vs `__j.` home (QueryDocs.lookupTail)
     def sideOpts(r: FieldResolve.Ref): Map[String, String] =
       joinedColOpts.getOrElse(r.docPath.split('.').head, options)
+    // no doc field: a joined output name is not the stored field that
+    // `ascii_columns` names
+    def ok(c: ReadModel.Comparison)(r: FieldResolve.Ref) =
+      ReadModel.exact(c, r.dataType, ReadModel.Stored, sideOpts(r))
     joinedAgg = GroupAggParse.parse(aggregation, Pushdown.Columns(joinedSchema).resolve,
-      r => Pushdown.GroupKeyTypes.contains(r.dataType),
-      r => GraftServerScanBuilder.cursorOrderSafe(r.dataType, sideOpts(r)),
-      r => GraftServerScanBuilder.sumValueSafe(r.dataType, sideOpts(r))).map(GroupedAgg.of)
+      ok(ReadModel.Group), ok(ReadModel.Order), ok(ReadModel.Sum)).map(GroupedAgg.of)
     joinedAgg.isDefined
   }
 
@@ -560,17 +548,6 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       case _ => false
     }
 
-  private def joinKeySafe(dt: org.apache.spark.sql.types.DataType,
-      opts: Map[String, String]): Boolean = {
-    import org.apache.spark.sql.types._
-    val always = Set[DataType](IntegerType, DoubleType, BooleanType)
-    // DateType is uniform-gated for EQUALITY: two different stored
-    // millis within one day read as the same Spark date but never $eq —
-    // engine writes store canonical midnight millis, so the opt-in holds
-    val uniform = Set[DataType](LongType, TimestampType, StringType, DateType)
-    always.contains(dt) || (uniform.contains(dt) && Pushdown.uniformStorage(opts))
-  }
-
   /** The condition as a conjunction of column equalities and RANGE
     * comparisons (possibly NESTED refs — `meta.k = _id` arrives as
     * multi-part field names), or None on anything else. Pairs carry the
@@ -651,49 +628,6 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       if (eqs.contains(None) || eqs.isEmpty || rngs.contains(None)) None
       else Some((eqs.flatten, rngs.flatten))
     }
-  }
-
-  /** Orderable types of a pushed range-join operand: aggregation
-    * `$lt`/`$gt` compare stored values in BSON TOTAL order, so the
-    * comparison agrees with Spark's typed comparison only when both
-    * operands stay inside ONE bracket where BSON order = read order —
-    * uniform-stored numerics (value order), timestamps/dates (millis
-    * order; dates store canonical midnight). Unlike equality (where
-    * cross-bracket `$eq` and Spark both say false), Int/Double need the
-    * uniform opt-in TOO: a cross-bracket `$gt` is TRUE half the time
-    * where Spark's null comparison drops the row.
-    *
-    * STRINGS (r18): admitted only when the operand's DOC FIELD is
-    * declared in its side's `ascii_columns` option (comma-separated doc
-    * paths the caller asserts hold ASCII-only stored strings). The r14
-    * classifier's reasoning, column-vs-column: Spark orders strings by
-    * UTF-8 BYTES (code points) — exactly a real server's binary
-    * collation, so the LIVE wire is always Spark-exact — but the
-    * ENGINE matcher (fake transport, residual re-checks) compares
-    * UTF-16 units, which diverges from both exactly when a
-    * supplementary character meets [U+E000, U+FFFF]. With every value
-    * of ONE side ASCII, the first deciding position pits an ASCII unit
-    * against anything — identical under all three orders — so the
-    * comparison is exact; the declaration asserts it for BOTH sides
-    * and the sandbox evaluator FAILS LOUD on a non-ASCII operand
-    * ([[LookupJoin.rangeMatches]]) rather than silently diverging (a
-    * live server cannot check, but there the binary order is exact
-    * regardless, so a wrong declaration never corrupts live results).
-    * `docField` None = the caller cannot resolve the operand's origin
-    * doc field (chained-stage left operands) — strings refuse there
-    * and the r14 hoist re-checks them Spark-side.
-    */
-  private def rangeKeySafe(dt: org.apache.spark.sql.types.DataType,
-      opts: Map[String, String],
-      docField: Option[String] = None): Boolean = {
-    import org.apache.spark.sql.types._
-    val ordered = Set[DataType](IntegerType, LongType, DoubleType,
-      TimestampType, DateType)
-    val uniform = Pushdown.uniformStorage(opts)
-    if (dt == StringType)
-      uniform && docField.exists(f =>
-        GraftServerScanBuilder.asciiCols(opts).contains(f))
-    else ordered.contains(dt) && uniform
   }
 
   /** Push one `$lookup` stage: stage 0 over this plain scan, or — on an
@@ -782,14 +716,21 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
         def docField(p: Seq[(String, String, org.apache.spark.sql.types.DataType)],
             out: String): Option[String] =
           scala.util.Try(LookupJoin.fieldOf(pairs(p), out)).toOption
+        // both operands of every conjunct must compare exactly on the
+        // stored values ([[ReadModel]]'s Stored EQUAL and RANGE cells; a
+        // chained left operand has no known doc field, so its strings
+        // refuse and the residual-join hoist re-checks them in Spark)
+        def exact(c: ReadModel.Comparison, dt: org.apache.spark.sql.types.DataType,
+            opts: Map[String, String], field: Option[String] = None) =
+          ReadModel.exact(c, dt, ReadModel.Stored, opts, field)
         orientCond(condition, lp, rp) match {
           case Some((refs, rngRefs)) if refs.forall { case (l, r) =>
-              joinKeySafe(l.dataType, leftOpts(l.name)) &&
-                joinKeySafe(r.dataType, o.joinOptions) } &&
+              exact(ReadModel.Equal, l.dataType, leftOpts(l.name)) &&
+                exact(ReadModel.Equal, r.dataType, o.joinOptions) } &&
               rngRefs.forall { case (l, _, r) =>
-                rangeKeySafe(l.dataType, leftOpts(l.name),
+                exact(ReadModel.Range, l.dataType, leftOpts(l.name),
                   if (chained) None else docField(lp, l.name)) &&
-                  rangeKeySafe(r.dataType, o.joinOptions, docField(rp, r.name)) } =>
+                  exact(ReadModel.Range, r.dataType, o.joinOptions, docField(rp, r.name)) } =>
             // roles: the driving builder feeds the pipeline, the lookup
             // builder is the stage's right side
             val (driving, lookup) = if (mirrored) (o, this) else (this, o)
@@ -927,7 +868,7 @@ final class GraftServerJoinScan(join: LookupJoin, schema: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val ns = GraftServerSource.ns(options)
     val key = options.getOrElse("key", "_id")
-    if (!Pushdown.uniformStorage(options) || options.get("splitter").contains("single") ||
+    if (!ReadModel.uniform(options) || options.get("splitter").contains("single") ||
         // a COMPUTED split key has no stored field to probe (r17)
         join.leftComputed.exists(_.out == key))
       return Array(GraftServerPartition(ns,
@@ -1063,46 +1004,6 @@ final class GraftServerJoinReader(p: GraftServerPartition, join: LookupJoin,
 }
 
 object GraftServerScanBuilder {
-  /** Can the server's STORED order on a column of this Spark type — a
-    * cursor sort (TopN, the `sort` option), a `$min`/`$max` fold or a
-    * sorted limit-1 MIN/MAX probe — be trusted as Spark's order over the
-    * READ values? Int/Double share one consistently-ordered numeric
-    * bracket, Boolean its own, and DateType is single-bracket storage
-    * whose read (epoch-day floor) is monotone over it; Long and Timestamp
-    * span two brackets (date vs numeric / date vs timestamp) unless the
-    * caller asserts uniform storage — true for every collection this
-    * engine wrote (RowCodec stores Long→int64, Timestamp→date, always).
-    *
-    * STRINGS (r18) admit when the column's DOC field is declared in
-    * `ascii_columns` (plus uniform storage): the server orders in
-    * binary/BSON order (live: Spark's UTF-8 order for ANY strings;
-    * sandbox: UTF-16, exact over ASCII), and the readers VERIFY the
-    * returned values are ASCII ([[asciiCheck]]) — sound, because a value
-    * wrongly chosen must have won a comparison the orders disagree on,
-    * which needs BOTH operands non-ASCII. `docField` None (callers
-    * without doc-field resolution) keeps strings refused.
-    *
-    * NaN caveat (DoubleType, latent): BSON's total order places NaN
-    * BELOW all numbers while Spark orders NaN ABOVE every double, so a
-    * NaN-containing double column's pushed MIN comes back NaN where
-    * Spark's own would be the smallest real number (and a pushed MAX
-    * loses the NaN Spark would keep). Collections written by THIS engine
-    * normally carry no NaN, but a foreign collection might — exclude NaN
-    * rows with a pushed `$ne` filter, or project the column through a
-    * no-op expression to keep the operator Spark-side, when that matters.
-    */
-  def cursorOrderSafe(dt: org.apache.spark.sql.types.DataType,
-      options: Map[String, String],
-      docField: Option[String] = None): Boolean = {
-    import org.apache.spark.sql.types._
-    val always = Set[DataType](IntegerType, DoubleType, BooleanType, DateType)
-    val uniform = Set[DataType](LongType, TimestampType)
-    val uniformOk = Pushdown.uniformStorage(options)
-    if (dt == StringType)
-      uniformOk && docField.exists(f => asciiCols(options).contains(f))
-    else always.contains(dt) || (uniform.contains(dt) && uniformOk)
-  }
-
   /** Fail-loud arm of the `ascii_columns` contract on ORDERED pushdown
     * RESULTS (r18): a returned min/max/top-n key value that is
     * non-ASCII proves the declaration false AND is exactly the case
@@ -1130,23 +1031,6 @@ object GraftServerScanBuilder {
     else docs.map { d =>
       fields.foreach(f => d.getPath(f).foreach(asciiCheck(_, f))); d
     }
-
-  /** Doc field paths the caller asserts hold ASCII-only stored strings
-    * (the `ascii_columns` option, comma-separated) — the r18 string
-    * range-join admission; see the rangeKeySafe scaladoc for why ASCII
-    * makes UTF-8-byte, UTF-16-unit, and server-binary orders coincide. */
-  def asciiCols(opts: Map[String, String]): Set[String] =
-    opts.get("ascii_columns").map(_.split(',').iterator
-      .map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-
-  /** SUM inputs: exact numerics; LongType only under uniform storage (a
-    * BDate-backed long reads as its millis but `$sum` would SKIP it). */
-  def sumValueSafe(dt: org.apache.spark.sql.types.DataType,
-      options: Map[String, String]): Boolean = {
-    import org.apache.spark.sql.types._
-    dt == IntegerType || dt == DoubleType ||
-      (dt == LongType && Pushdown.uniformStorage(options))
-  }
 }
 
 /** One planned split: its namespace, key range, the owning chunk's
@@ -1178,7 +1062,7 @@ final class ServerGroupedAggReader(p: GraftServerPartition, spec: ScanSpec,
     * returned extrema verify against the contract (sound: an ASCII
     * winner won every comparison under both orders). */
   private val asciiAggAliases: Seq[String] = {
-    val declared = GraftServerScanBuilder.asciiCols(options)
+    val declared = ReadModel.asciiCols(options)
     grouped.items.collect {
       case (GroupAgg.MinOf(c, a), _) if declared.contains(c) => a
       case (GroupAgg.MaxOf(c, a), _) if declared.contains(c) => a
@@ -1260,7 +1144,7 @@ final class ServerAggReader(spec: ScanSpec, options: Map[String, String])
   private def asciiVerified(c: String, v: Any): Any = {
     v match {
       case s: org.apache.spark.unsafe.types.UTF8String
-          if GraftServerScanBuilder.asciiCols(options).contains(c) =>
+          if ReadModel.asciiCols(options).contains(c) =>
         GraftServerScanBuilder.asciiCheck(graft.bson.BString(s.toString), c)
       case _ => ()
     }
@@ -1340,7 +1224,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition, spec: ScanSpec,
     * carry them even when Spark pruned the column. */
   private val asciiOrderFields: Seq[String] = topN.map(_.keys.map(_._1))
     .getOrElse(Nil)
-    .filter(GraftServerScanBuilder.asciiCols(options).contains)
+    .filter(ReadModel.asciiCols(options).contains)
 
   private val rawCursor0: Iterator[BDoc] = if (pipelineMode)
     // unwound ROW pipeline: $match + $unwind + $match(post) + the

@@ -3,7 +3,7 @@ package graft.source
 import org.apache.spark.sql.connector.expressions.{Expression, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
 
 /** Nested-field resolution for pushdown eligibility checks, shared by the
   * file and server scan builders: a DSv2 `NamedReference` may carry
@@ -64,7 +64,7 @@ object FieldResolve {
   * server's joined (`$lookup`-tail) grouping, and the file source's
   * per-split partial folds, so an aggregate kind lands ONCE. Callers
   * supply the column resolver (their schema + mapping) and their
-  * source-specific type gates; the SUM partial-type rule (int/long fold
+  * [[ReadModel]] type gates; the SUM partial-type rule (int/long fold
   * as LongType, double as DoubleType — Spark's partial-sum layout) and
   * the COUNT(col) any-type rule are shared policy.
   */
@@ -85,16 +85,14 @@ object GroupAggParse {
     * and parses; zero of both does not. Gates take the full resolved
     * [[FieldResolve.Ref]] so a caller can apply PER-COLUMN policies
     * (e.g. the joined server path gates each column by its ORIGIN
-    * side's storage options); `sumOk` defaults to the shared
-    * exact-numeric rule.
+    * side's storage options). The gates are [[ReadModel]]'s GROUP,
+    * ORDER and SUM cells, whose SUM admits only numeric inputs.
     */
   def parse(aggregation: Aggregation,
       resolve: Expression => Option[FieldResolve.Ref],
       groupKeyOk: FieldResolve.Ref => Boolean,
       minMaxOk: FieldResolve.Ref => Boolean,
-      sumOk: FieldResolve.Ref => Boolean =
-        r => r.dataType == IntegerType || r.dataType == LongType ||
-          r.dataType == DoubleType): Option[Parsed] = {
+      sumOk: FieldResolve.Ref => Boolean): Option[Parsed] = {
     val groupRefs = aggregation.groupByExpressions.toSeq.map(e =>
       resolve(e).filter(groupKeyOk))
     if (groupRefs.contains(None)) return None
@@ -115,11 +113,7 @@ object GroupAggParse {
           resolve(m.column).filter(minMaxOk).map(r =>
             (GroupAgg.MaxOf(r.docPath, s"max(${r.docPath})"), r.dataType, Some(r)))
         case sm: aggregate.Sum if !sm.isDistinct =>
-          resolve(sm.column)
-            .filter(r => sumOk(r) &&
-              (r.dataType == LongType || r.dataType == DoubleType ||
-                r.dataType == IntegerType))
-            .map(r => (GroupAgg.SumOf(r.docPath, s"sum(${r.docPath})"),
+          resolve(sm.column).filter(sumOk).map(r => (GroupAgg.SumOf(r.docPath, s"sum(${r.docPath})"),
               (if (r.dataType == DoubleType) DoubleType else LongType): DataType,
               Some(r)))
         case _ => None

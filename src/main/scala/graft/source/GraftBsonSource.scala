@@ -281,41 +281,11 @@ object FileTransport extends Transport {
   /** The grouped fold runs in the reader, after the sample window. */
   override val groupedFoldSeesSample = true
 
-  /** TopN keys: the reader's bounded heap selects by the values AS SPARK
-    * READS them (exact long/µs/double keys — not the BSON cross-type
-    * order, whose double-widened long comparison ties distinct values
-    * above 2^53), so both directions push. STRING keys (r18) need
-    * uniform storage alone: the heap compares read strings in CODE-POINT
-    * order (Spark's UTF8String order, [[GraftPartitionReader.cmpStrings]])
-    * — no `ascii_columns` declaration, since no cursor owns the order —
-    * but a non-uniform string read spans four storage brackets the heap's
-    * BString-only key read rejects. FloatType is absent from every gate:
-    * RowCodec has no BSON -> FloatType read. */
-  private val TopNTypes: Set[DataType] =
-    Set(IntegerType, LongType, DoubleType, BooleanType, TimestampType, DateType)
-  override def topNKeyOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
-    TopNTypes.contains(r.dataType) ||
-      (r.dataType == StringType && Pushdown.uniformStorage(options))
-
-  /** Global MIN/MAX: folded by [[AggPartitionReader]] under Spark's own
-    * Min/Max ordering (TypeUtils interpreted ordering). */
-  private val AggPushTypes: Set[DataType] =
-    Set(IntegerType, LongType, DoubleType, FloatType, StringType, DateType)
-  override def globalAggOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
-    AggPushTypes.contains(r.dataType)
-
-  /** Grouped MIN/MAX fold under Spark's interpreted ordering of read
-    * values — exact for every readable atomic type (even String and
-    * NaN-bearing Double, unlike the server's BSON-bracket caveats). */
-  private val GroupMinMaxTypes: Set[DataType] =
-    Set(IntegerType, LongType, DoubleType, StringType, BooleanType, TimestampType, DateType)
-  override def minMaxOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
-    GroupMinMaxTypes.contains(r.dataType)
-
-  /** SUM accumulates an overflow-checked Long for integer columns (ANSI)
-    * and Double otherwise. */
-  override def sumOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean =
-    r.dataType == IntegerType || r.dataType == LongType || r.dataType == DoubleType
+  /** TopN keys and every aggregate fold compare the values AS SPARK
+    * READS them: the reader's bounded heap and the folds under Spark's
+    * interpreted ordering ([[AggPartitionReader]],
+    * [[GroupedAggPartitionReader]]). */
+  override val evaluator: ReadModel.Evaluator = ReadModel.Read
 
   /** The data files' sizes; no row count without a walk. */
   override def stats(spec: ScanSpec, options: Map[String, String]): (Long, Option[Long]) =
@@ -327,10 +297,9 @@ object FileTransport extends Transport {
       case None => options.get("path").map(GraftBsonSource.dataFiles).getOrElse(Seq.empty)
     }
 
-  /** The reader sorts a partition ascending with BSON null-first
-    * semantics, Spark's ASC NULLS FIRST, for any column type. */
-  override def reportsOrder(f: StructField, spec: ScanSpec,
-      options: Map[String, String]): Boolean = true
+  /** The reader sorts a partition's PARENTS ascending in BSON order
+    * (null first), before it unwinds them. */
+  override val sortSurvivesUnwind = true
   override val runtimeFiltersUnderUnwind = true
 
   override def describeHead(spec: ScanSpec, options: Map[String, String]): String =
@@ -1188,7 +1157,7 @@ object GraftPartitionReader {
     * NULLS FIRST). Storage RowCodec would reject throws here too — the
     * read was going to fail on the same doc anyway.
     */
-  private def readKey(v: BsonValue, dt: DataType): Any = (dt: @unchecked) match {
+  private[source] def readKey(v: BsonValue, dt: DataType): Any = (dt: @unchecked) match {
     case DoubleType => v match {
       case BInt32(x) => x.toDouble
       case BInt64(x) => x.toDouble

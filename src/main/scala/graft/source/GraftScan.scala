@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.util
@@ -22,10 +22,11 @@ import scala.jdk.CollectionConverters._
   * [[GraftScanBuilder]], [[GraftScan]] and [[GraftReaderFactory]] hold
   * everything the BSON dump files (`graftbson`) and the served
   * collections (`graftserver`) share. A `Transport` supplies only what
-  * really differs, as data: its names and metadata column, its type
-  * gates, how its option-level query is gated, whether a query renders
-  * fully at the source, how it spells a plan, and its partition planning
-  * and readers. Shared code never asks which transport it serves.
+  * really differs, as data: its names and metadata column, the
+  * [[ReadModel]] evaluator its pushes run on, how its option-level
+  * query is gated, whether a query renders fully at the source, how it
+  * spells a plan, and its partition planning and readers. Shared code
+  * never asks which transport it serves.
   */
 trait Transport extends Serializable {
   /** Format short name: the table-name prefix and error-message prefix. */
@@ -63,18 +64,17 @@ trait Transport extends Serializable {
   /** Whether a grouped aggregate folds after the sample window (a
     * client-side fold), so the two compose. */
   def groupedFoldSeesSample: Boolean
-  def topNKeyOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean
-  def globalAggOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean
-  def minMaxOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean
-  def sumOk(r: FieldResolve.Ref, options: Map[String, String]): Boolean
+  /** The evaluator a pushed TopN and every pushed aggregate run on; their
+    * type gates are [[ReadModel]]'s cells for it. */
+  def evaluator: ReadModel.Evaluator
 
   // ---- scan ----
 
   /** Stored bytes and, when known exactly, rows of the scanned target. */
   def stats(spec: ScanSpec, options: Map[String, String]): (Long, Option[Long])
-  /** Whether the per-partition cursor order on this column of the read
-    * schema may be reported to Catalyst. */
-  def reportsOrder(f: StructField, spec: ScanSpec, options: Map[String, String]): Boolean
+  /** Whether the option-level cursor `sort` still orders a partition's
+    * rows under a pushed unwind. */
+  def sortSurvivesUnwind: Boolean
   /** Whether runtime IN-sets may narrow an unwound scan. */
   def runtimeFiltersUnderUnwind: Boolean
   /** Plan spelling: the head naming target and query, the separator
@@ -311,17 +311,18 @@ class GraftScanBuilder(tableSchema: StructType, options: Map[String, String],
   /** ORDER BY k1[, k2, ...] LIMIT n per partition (`cursor.sort().limit()`,
     * MongoInputSplit.java:281-296), reported PARTIAL: each partition
     * returns its local top-n, a superset of its contribution to the
-    * global one, and Spark folds them. Every key passes the transport's
-    * order gate. Residual filters refuse (a pre-filter top-n might not
-    * survive them), and so do the option-level cursor limit and
-    * multi-collection entries. */
+    * global one, and Spark folds them. Every key passes
+    * [[ReadModel.topNKey]] on the transport's evaluator. Residual
+    * filters refuse (a pre-filter top-n might not survive them), and so
+    * do the option-level cursor limit and multi-collection entries. */
   override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
     val eligible = residuals.isEmpty && aggPushed.isEmpty && groupedAgg.isEmpty &&
       limit.isEmpty && offset.isEmpty && sample.isEmpty &&
       !optCollections && !optLimit && (!optSort || transport.topNOverridesSort) &&
       (unwind.isEmpty || unwoundTailOk)
     if (!eligible) return false
-    topN = Pushdown.topNOrder(cols, orders, r => transport.topNKeyOk(r, options))
+    topN = Pushdown.topNOrder(cols, orders,
+      r => ReadModel.topNKey(r, transport.evaluator, options))
       .map(keys => TopN(keys.map { case (r, desc) => (r.docPath, desc, r.dataType) }, n))
     topN.isDefined
   }
@@ -347,13 +348,15 @@ class GraftScanBuilder(tableSchema: StructType, options: Map[String, String],
       limit.isEmpty && offset.isEmpty && topN.isEmpty && sample.isEmpty &&
       !optCollections && unwind.isEmpty && !optLimit
     if (!eligible) return false
-    aggPushed = Pushdown.globalAgg(cols, aggregation, r => transport.globalAggOk(r, options))
+    aggPushed = Pushdown.globalAgg(cols, aggregation,
+      r => ReadModel.exact(ReadModel.Order, r, transport.evaluator, options))
     aggPushed.isDefined
   }
 
   /** Grouped partials: group keys group by the READ value (exact — Spark
-    * re-groups the same values), aggregates pass the transport's MIN/MAX
-    * and SUM gates. The whole query, and the post-unwind match between
+    * re-groups the same values); keys, MIN/MAX and SUM pass
+    * [[ReadModel]]'s GROUP, ORDER and SUM cells on the transport's
+    * evaluator. The whole query, and the post-unwind match between
     * `$unwind` and the fold, must run at the source: rows are gone after
     * grouping, so a residual cannot be re-checked. */
   private def pushGroupedAggregation(aggregation: Aggregation): Boolean = {
@@ -362,10 +365,10 @@ class GraftScanBuilder(tableSchema: StructType, options: Map[String, String],
       (sample.isEmpty || transport.groupedFoldSeesSample) &&
       transport.rendersFully(builderQuery) && transport.rendersFully(unwindPost)
     if (!eligible) return false
+    def ok(c: ReadModel.Comparison)(r: FieldResolve.Ref) =
+      ReadModel.exact(c, r, transport.evaluator, options)
     groupedAgg = GroupAggParse.parse(aggregation, cols.resolve,
-      r => Pushdown.GroupKeyTypes.contains(r.dataType),
-      r => transport.minMaxOk(r, options),
-      r => transport.sumOk(r, options)).map(GroupedAgg.of)
+      ok(ReadModel.Group), ok(ReadModel.Order), ok(ReadModel.Sum)).map(GroupedAgg.of)
     groupedAgg.isDefined
   }
 
@@ -430,8 +433,11 @@ final class GraftScan(val spec: ScanSpec, options: Map[String, String],
     * partition, ASC NULLS FIRST, never global). Only when the sort key
     * survives projection under its SPARK column name, no aggregate or
     * TopN replaced the row stream, no `collections` entry may override
-    * the sort, and an unwound element (whose values do not carry the
-    * parent-cursor order) is not the key. */
+    * the sort, an unwound element (whose values do not carry the
+    * parent-cursor order) is not the key, and the cursor's order over
+    * STORED values is Spark's over the values it reads
+    * ([[ReadModel.Stored]], with no `ascii_columns` doc field: STRING
+    * never). */
   override def outputOrdering(): Array[SortOrder] =
     options.get("sort") match {
       case Some(docKey) if spec.agg.isEmpty && spec.grouped.isEmpty &&
@@ -439,7 +445,8 @@ final class GraftScan(val spec: ScanSpec, options: Map[String, String],
           !options.contains("collections") =>
         ColumnMapping.sparkColFor(spec.mapping, docKey)
           .flatMap(c => spec.required.fields.find(_.name == c))
-          .filter(f => transport.reportsOrder(f, spec, options)) match {
+          .filter(f => (spec.unwind.isEmpty || transport.sortSurvivesUnwind) &&
+            ReadModel.exact(ReadModel.Order, f.dataType, ReadModel.Stored, options)) match {
           case Some(f) => Array(Expressions.sort(Expressions.column(f.name),
             SortDirection.ASCENDING))
           case None => Array.empty

@@ -19,30 +19,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, Struc
   * only its own state, rendering and evaluation.
   *
   * Transport differences arrive as DATA, never as a branch on the
-  * caller: each transport's type gates (predicates over the resolved
-  * column) and its provenance metadata column name (`_file` / `_ns`).
+  * caller: the type gates (predicates over the resolved column, asked
+  * of [[ReadModel]]) and its provenance metadata column name (`_file` /
+  * `_ns`).
   * A refused pushdown is `None`; Spark then keeps the operator.
   */
 object Pushdown {
-
-  /** `assume_uniform_storage`: the caller asserts every column is stored
-    * as the ONE BSON type this engine writes for its Spark type
-    * (RowCodec.fromCatalyst: Long→int64, Timestamp→date, String→string),
-    * which is what makes several order/equality gates exact. */
-  def uniformStorage(opts: Map[String, String]): Boolean =
-    opts.get("assume_uniform_storage").exists(_.toBoolean)
-
-  /** Types usable as a pushed GROUP key, on either transport: grouping
-    * needs only read-value EQUALITY to be refined by the source's
-    * grouping (the partial protocol re-merges, e.g. one read day split
-    * into several stored-millis groups), not a faithful order — so
-    * strings are fine. FloatType is absent because RowCodec has no
-    * BSON→Float read at all. */
-  val GroupKeyTypes: Set[DataType] = {
-    import org.apache.spark.sql.types._
-    Set(StringType, IntegerType, LongType, DoubleType, BooleanType,
-      TimestampType, DateType)
-  }
 
   /** A scan's column surface: the read schema, the `column_mapping`
     * (Spark column -> dotted doc field) and the DERIVED

@@ -247,6 +247,23 @@ class AggPushdownSpec extends SparkSpec {
     assert(sorted.select($"k").as[Long].collect().toSeq === Seq(10L, 20L, 30L))
   }
 
+  test("global MIN/MAX over BOOLEAN and TIMESTAMP take the projected global pass") {
+    import spark.implicits._
+    val dir = freshDir()
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val rows = Seq((1L, Option(true), ts("2024-03-01 10:00:00.123")),
+      (2L, Option(false), ts("2023-12-31 23:59:59.999")),
+      (3L, None, ts("2024-07-15 00:00:00")))
+    rows.toDF("_id", "b", "t").write.format("graftbson").mode("append").save(dir)
+    def agg(df: org.apache.spark.sql.DataFrame) =
+      df.agg(min($"b"), max($"b"), min($"t"), max($"t"))
+    val pushed = agg(spark.read.format("graftbson")
+      .schema("_id LONG, b BOOLEAN, t TIMESTAMP").load(dir))
+    assert(plan(pushed).contains("PushedAggregates: [MIN(b), MAX(b), MIN(t), MAX(t)]"),
+      s"global MIN/MAX not pushed:\n${plan(pushed)}")
+    assert(pushed.head === agg(rows.toDF("_id", "b", "t")).head)
+  }
+
   test("min/max skip missing fields exactly like a row scan") {
     import spark.implicits._
     val dir = freshDir()

@@ -191,4 +191,41 @@ class GridFsAndExtrasSpec extends SparkSpec {
     assert(unsorted.queryExecution.executedPlan.toString.contains("Sort ["),
       "without a reported ordering the sort must remain")
   }
+
+  /** `v` of a one-partition read over `values` (read as `ddl`, no
+    * uniform storage) with the `sort` option on `v` and a
+    * sortWithinPartitions on the same column: the option may report its
+    * order only where the BSON order of the stored values is Spark's
+    * order of the values it reads. */
+  private def sortOptionRead(values: Seq[BsonValue], ddl: String): Seq[Any] = {
+    val dir = freshDir()
+    BsonFiles.write(s"$dir/data.bson", values.zipWithIndex.map { case (v, i) =>
+      BDoc("_id" -> BInt32(i), "v" -> v) }.iterator)
+    spark.read.format("graftbson").schema(s"_id INT, v $ddl")
+      .option("sort", "v").load(dir)
+      .sortWithinPartitions("v").select("v").collect().map(_.get(0)).toSeq
+  }
+
+  test("sort option over LONG with Int64 and Date storage returns Spark's order") {
+    assert(sortOptionRead(Seq(BInt64(5L), BDate(1L), BInt64(3L)), "LONG") ===
+      Seq(1L, 3L, 5L))
+  }
+
+  test("sort option over STRING with String and ObjectId storage returns Spark's order") {
+    val oid = "000000000000000000000001"
+    assert(sortOptionRead(Seq(BString("b"), BObjectId(oid), BString("c")), "STRING") ===
+      Seq(oid, "b", "c"))
+  }
+
+  test("sort option over STRING returns Spark's code-point order past U+E000") {
+    val emoji = new String(Character.toChars(0x1F600))
+    assert(sortOptionRead(Seq(BString(emoji), BString("\uE000")), "STRING") ===
+      Seq("\uE000", emoji))
+  }
+
+  test("sort option over LONG above 2^53 returns Spark's order") {
+    val big = 1L << 53
+    assert(sortOptionRead(Seq(BInt64(big + 1), BInt64(big)), "LONG") ===
+      Seq(big, big + 1))
+  }
 }

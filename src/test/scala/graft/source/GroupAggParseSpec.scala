@@ -30,7 +30,7 @@ class GroupAggParseSpec extends AnyFunSuite {
   private def parse(a: Aggregation) =
     GroupAggParse.parse(a,
       e => FieldResolve.resolve(schema, e),
-      _ => true, _ => true)
+      _ => true, _ => true, _ => true)
 
   test("wire-name collision between group keys refuses the pushdown") {
     val nested = ref("a", "b")
