@@ -113,7 +113,8 @@ object GroupAggParse {
           resolve(m.column).filter(minMaxOk).map(r =>
             (GroupAgg.MaxOf(r.docPath, s"max(${r.docPath})"), r.dataType, Some(r)))
         case sm: aggregate.Sum if !sm.isDistinct =>
-          resolve(sm.column).filter(sumOk).map(r => (GroupAgg.SumOf(r.docPath, s"sum(${r.docPath})"),
+          resolve(sm.column).filter(sumOk).map(r =>
+            (GroupAgg.SumOf(r.docPath, s"sum(${r.docPath})"),
               (if (r.dataType == DoubleType) DoubleType else LongType): DataType,
               Some(r)))
         case _ => None

@@ -19,9 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, Struc
   * only its own state, rendering and evaluation.
   *
   * Transport differences arrive as DATA, never as a branch on the
-  * caller: the type gates (predicates over the resolved column, asked
-  * of [[ReadModel]]) and its provenance metadata column name (`_file` /
-  * `_ns`).
+  * caller: the type gates (predicates over the resolved column, which
+  * the builders ask of [[ReadModel]]) and the transport's provenance
+  * metadata column name (`_file` / `_ns`).
   * A refused pushdown is `None`; Spark then keeps the operator.
   */
 object Pushdown {
