@@ -32,7 +32,9 @@ object RowCodec {
     new GenericInternalRow(values.asInstanceOf[Array[Any]])
   }
 
-  private def toCatalyst(v: BsonValue, dt: DataType): Any = (v, dt) match {
+  /** One stored value as Spark reads it into `dt` (null for BNull); a
+    * storage the type does not read throws. */
+  private[graft] def toCatalyst(v: BsonValue, dt: DataType): Any = (v, dt) match {
     case (BNull, _) => null
     case (BInt32(x), IntegerType) => x
     case (BInt32(x), LongType) => x.toLong

@@ -167,13 +167,13 @@ object ConnectorQueries {
       },
       Some("SELECT doc_id, CAST(length(coalesce(text, '')) AS BIGINT) AS n_chars_m FROM documents ORDER BY doc_id")),
 
-    // Scan-level aggregate pushdown (SupportsPushDownAggregates): the
-    // collstats analog — COUNT(*) answered from the collection's .splits
-    // side files without reading document bodies, MIN/MAX from one
-    // projected single-field pass per file; Spark's final aggregate folds
-    // the per-file partial rows. The plan's scan reports
-    // PushedAggregates: [COUNT(*), MIN(...), MAX(...)]
-    // (AggPushdownSpec pins the plan shape and the zero-body-IO count).
+    // Scan-level aggregate pushdown (SupportsPushDownAggregates): a
+    // global aggregate folds per byte-split over a projected decode of
+    // its input columns; Spark's final aggregate folds the partial rows.
+    // The plan's scan reports
+    // PushedGroupedAggregate: GLOBAL [count(*), min(...), max(...)]
+    // (AggPushdownSpec pins the plan shape, and the zero-body-IO count
+    // of a bare COUNT(*), which reads the .splits side files).
     CatalogQuery(
       "q58_agg_pushdown",
       (s, d) => {
@@ -259,11 +259,11 @@ object ConnectorQueries {
         |GROUP BY 1 ORDER BY 1
         |""".stripMargin)),
 
-    // Server-side aggregate probes: COUNT(*) from one collStats, MIN/MAX
-    // from one sorted limit-1 index walk each — zero documents scanned
-    // after the write (the reference's collstats sizing,
+    // Server-side global aggregate: COUNT(*)/MIN/MAX as one
+    // `$group {_id: null}` pipeline per namespace (a bare COUNT(*) alone
+    // would read collStats, the reference's collstats sizing,
     // core/.../splitter/MongoSplitterFactory.java:66-83). The plan shows
-    // PushedAggregates on the graftserver scan.
+    // PushedGroupedAggregate: GLOBAL on the graftserver scan.
     CatalogQuery(
       "q70_server_agg_probes",
       (s, d) => {
@@ -377,10 +377,9 @@ object ConnectorQueries {
 
     // Filtered GLOBAL aggregate pushdown through the server source
     // (round-12): `agg(...) WHERE f` plans as ONE `$match`+`$group
-    // {_id: null}` pipeline round-trip — the generalization of q70's
-    // probes to a filtered scan (the probes refuse any filter; the
-    // pipeline answers it server-side, SampleSplitter.java:79-88's
-    // aggregate() pattern). AVG rides Spark's partial-pushdown rewrite
+    // {_id: null}` pipeline round-trip, q70's pipeline under a filter
+    // (answered server-side, SampleSplitter.java:79-88's aggregate()
+    // pattern). AVG rides Spark's partial-pushdown rewrite
     // into SUM+COUNT partials, folded exactly. The plan shows
     // `PushedGroupedAggregate: GLOBAL` (GraftServerSourceSpec pins the
     // shape, the one-round-trip bound, and the zero-cursor property);

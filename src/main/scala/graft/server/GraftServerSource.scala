@@ -2,7 +2,7 @@ package graft.server
 
 import graft.bson._
 import graft.query.{BQuery, BQueryJson, Unwind}
-import graft.source.{AggPush, FieldResolve, GraftScanBuilder, GraftTable, GroupAggParse, GroupedAgg, Planners, Pushdown, ReadModel, RowIteratorReader, SamplePush, ScanSpec, Transport}
+import graft.source.{FieldResolve, GraftScanBuilder, GraftTable, GroupAggParse, GroupedAgg, Planners, Pushdown, ReadModel, RowIteratorReader, SamplePush, ScanSpec, Transport}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -158,7 +158,8 @@ object GraftServerSource {
   * accepts ([[Find]]) or to one aggregate pipeline; split planning runs
   * on the driver through [[ServerCollection.planSplits]]; each partition
   * reader holds exactly one server cursor. A bare COUNT(*) is one
-  * collStats round-trip (core/.../splitter/MongoSplitterFactory.java:66-83).
+  * collStats round-trip per namespace
+  * (core/.../splitter/MongoSplitterFactory.java:66-83).
   */
 object ServerTransport extends Transport {
   override val name = "graftserver"
@@ -251,8 +252,8 @@ object ServerTransport extends Transport {
   /** The `$group` pipeline computes over the UNSAMPLED collection. */
   override val groupedFoldSeesSample = false
 
-  /** The cursor sorts, MIN/MAX probes are sorted limit-1 cursors, and
-    * `$group` folds and sums, all over STORED values. */
+  /** The cursor sorts and `$group`'s folds and sums all compare STORED
+    * values. */
   override val evaluator: ReadModel.Evaluator = ReadModel.Stored
 
   /** collStats per namespace — one bounded round-trip at plan time.
@@ -264,9 +265,7 @@ object ServerTransport extends Transport {
       GraftServerSource.nsList(options).map(n => client.collStats(n))
     }
     (stats.map(s => s.count * s.avgObjSizeBytes).sum,
-      if (spec.query == BQuery.True && spec.limit.isEmpty && spec.sample.isEmpty &&
-          spec.unwind.isEmpty) Some(stats.map(_.count).sum)
-      else None)
+      if (spec.wholeTarget) Some(stats.map(_.count).sum) else None)
   }
 
   /** An unwound read makes no order claim. */
@@ -296,10 +295,9 @@ object ServerTransport extends Transport {
     // a COMPUTED split key has no stored field the planners could probe
     // (r17) — a key-range $match on it would silently match nothing
     if (spec.computed.exists(_.out == key)) nss.map(whole).toArray
-    // one partition: bounded probes — no splits, no row-wise scans
-    else if (spec.agg.isDefined) Array(whole(GraftServerSource.ns(options)))
-    // one partition PER NAMESPACE: a `$group` pipeline round-trip each
-    // (the partial protocol folds the per-namespace group rows); an
+    // one partition PER NAMESPACE: a `$group` pipeline round-trip (or,
+    // for a bare COUNT(*), a collStats) each — the partial protocol
+    // folds the per-namespace group rows; an
     // unwound ROW pipeline with a $sort/$skip/$limit tail (key-range
     // splits would need the range rendered into its $match, a bracket
     // form exact only under uniform keys; the tail bounds each
@@ -325,7 +323,6 @@ object ServerTransport extends Transport {
       options: Map[String, String]): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[GraftServerPartition]
     if (spec.grouped.isDefined) new ServerGroupedAggReader(part, spec, options)
-    else if (spec.agg.isDefined) new ServerAggReader(spec, options)
     else new GraftServerPartitionReader(part, spec, options)
   }
 
@@ -509,8 +506,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * parents atomically. */
   private def cleanAsDriving: Boolean =
     residuals.isEmpty && limit.isEmpty && offset.isEmpty && topN.isEmpty &&
-      aggPushed.isEmpty && groupedAgg.isEmpty &&
-      joined.isEmpty && !options.contains("sort") &&
+      groupedAgg.isEmpty && joined.isEmpty && !options.contains("sort") &&
       GraftServerSource.nsList(options).size == 1 &&
       // the WHOLE query must render server-side: rows are joined away,
       // so there is no client re-check point for an unrenderable
@@ -979,26 +975,17 @@ final class GraftServerJoinReader(p: GraftServerPartition, join: LookupJoin,
     // joined rows by the sampled side's key window equals sampling that
     // side before the join (MQL has no md5 — the window is evaluated
     // here, exactly like the plain scan's sample)
-    val kept =
-      if (samples.isEmpty) raw
-      else raw.filter(d => samples.forall(_.keep(d)))
-    grouped match {
-      case Some(g) if g.groupCols.isEmpty && !kept.hasNext =>
-        // GLOBAL aggregate over a join that matched nothing: $group
-        // emits no doc, but Spark's final fold rewrites COUNT(*) as a
-        // SUM of partials — zero partials would fold to NULL instead
-        // of 0 (the q58 zero-partition lesson). One count-0 sentinel.
-        Iterator.single(BDoc((g.items.map {
-          case (GroupAgg.CountAll(a), _) => a -> (BInt64(0L): BsonValue)
-          case (GroupAgg.CountCol(_, a), _) => a -> (BInt64(0L): BsonValue)
-          case (other, _) => other.alias -> (BNull: BsonValue)
-        }): _*))
-      case _ => kept
-    }
+    if (samples.isEmpty) raw
+    else raw.filter(d => samples.forall(_.keep(d)))
   }
 
-  override protected val rows: Iterator[InternalRow] =
-    cursor.map(RowCodec.toRow(_, schema))
+  // a GLOBAL aggregate over a join that matched nothing: Spark's final
+  // fold rewrites COUNT(*) as a SUM of partials, and zero partials would
+  // fold to NULL instead of 0 (the q58 zero-partition lesson)
+  override protected val rows: Iterator[InternalRow] = {
+    val decoded = cursor.map(RowCodec.toRow(_, schema))
+    grouped.fold(decoded)(_.orEmpty(decoded))
+  }
 
   override def close(): Unit = client.close()
 }
@@ -1048,9 +1035,13 @@ final case class GraftServerPartition(ns: String, range: BQuery.KeyRange,
   * round-trip for ITS namespace ([[ServerClient.groupAggregate]]; a
   * multi-ns union plans one such partition per namespace, so the
   * pipelines run in parallel); the server computes the group rows and
-  * only #groups docs cross the wire. Rows are partial — Spark's final
-  * aggregate re-groups and folds them (which also merges groups across
-  * the union).
+  * only #groups docs cross the wire. A bare COUNT(*) is one collStats
+  * instead. Rows are partial — Spark's final aggregate re-groups and
+  * folds them (which also merges groups across the union).
+  *
+  * A global MIN/MAX is one `$group` too: on a live server with an index
+  * on the column, a sorted limit-1 cursor would walk the index instead
+  * of the collection (unmeasured here; no query has run against one).
   */
 final class ServerGroupedAggReader(p: GraftServerPartition, spec: ScanSpec,
     options: Map[String, String]) extends RowIteratorReader {
@@ -1069,99 +1060,18 @@ final class ServerGroupedAggReader(p: GraftServerPartition, spec: ScanSpec,
     }
   }
 
-  override protected val rows: Iterator[InternalRow] = {
-    val base: Iterator[InternalRow] =
+  override protected val rows: Iterator[InternalRow] =
+    if (spec.bareCount) {
+      // this namespace's stored doc count: one collStats, no cursor
+      val n = client.collStats(p.ns).count
+      Iterator.single(new GenericInternalRow(Array.fill[Any](grouped.items.size)(n)))
+    } else grouped.orEmpty(
       GraftServerScanBuilder.asciiVerifyDocs(
         client.groupAggregate(p.ns, p.query,
           grouped.groupCols.map(_._1), grouped.items.map(_._1), spec.unwind,
           spec.unwindPost, computed = spec.computed),
         asciiAggAliases)
-        .map(d => RowCodec.toRow(Unwind.narrowPos(d), grouped.schema))
-    // filtered-GLOBAL pipeline with nothing matched: $group emits no doc;
-    // one empty partial keeps Spark's COUNT(*) fold at 0
-    if (grouped.groupCols.nonEmpty || base.hasNext) base
-    else Iterator.single(new GenericInternalRow(grouped.emptyPartial))
-  }
-
-  override def close(): Unit = client.close()
-}
-
-/** The pushed-aggregate reader: COUNT(*) from one collStats call (what
-  * the reference reads when it sizes a collection,
-  * core/.../splitter/MongoSplitterFactory.java:66-83); MIN/MAX from one
-  * sorted limit-1 cursor each — the server walks the index, one doc
-  * crosses the wire. Explicit nulls and missing fields are excluded from
-  * the probe (Spark's Min/Max ignore nulls; BSON sorts them first), so
-  * an all-null column folds to NULL via the empty probe.
-  */
-final class ServerAggReader(spec: ScanSpec, options: Map[String, String])
-    extends RowIteratorReader {
-
-  private val items = spec.agg.get
-  private val client = GraftServerSource.factory(options).create(options)
-  private val nss = GraftServerSource.nsList(options)
-
-  private def probeEdge(ns: String, col: String,
-      dt: org.apache.spark.sql.types.DataType, descending: Boolean): Any = {
-    val nonNull = BQuery.and(
-      BQuery.Exists(col, yes = true), BQuery.Ne(col, BNull))
-    client.find(ns, Find(nonNull, projection = Some(Seq(col)),
-        sortAscBy = Some(col), limit = 1L, sortDescending = descending))
-      .toSeq.headOption
-      // read by PATH (identity mapping entry): a dotted probe column
-      // comes back NESTED from a server projection ({"a.b": 1} returns
-      // {a: {b: ...}})
-      .map(d => RowCodec.toRow(d,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(col, dt))),
-        Map(col -> col)).get(0, dt))
-      .orNull
-  }
-
-  /** Spark-order comparison over the read values of the admitted types
-    * (each column's probes share one Spark type, so no cross-type arms).
-    * Strings (r18, ascii-declared columns) compare as UTF8String —
-    * Spark's own UTF-8-byte order — for the cross-namespace fold of the
-    * per-ns probe results. */
-  private def lt(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Int, y: Int) => x < y
-    case (x: Long, y: Long) => x < y
-    case (x: Double, y: Double) => x < y
-    case (x: Boolean, y: Boolean) => !x && y
-    case (x: org.apache.spark.unsafe.types.UTF8String,
-          y: org.apache.spark.unsafe.types.UTF8String) => x.compareTo(y) < 0
-    case _ => false
-  }
-
-  private def fold(vs: Seq[Any], keepLeft: (Any, Any) => Boolean): Any = {
-    val present = vs.filter(_ != null)
-    if (present.isEmpty) null
-    else present.reduce((a, b) => if (keepLeft(a, b)) a else b)
-  }
-
-  // r18: a declared-ASCII string probe result verifies against the
-  // contract (sound — an ASCII extremum is provably correct)
-  private def asciiVerified(c: String, v: Any): Any = {
-    v match {
-      case s: org.apache.spark.unsafe.types.UTF8String
-          if ReadModel.asciiCols(options).contains(c) =>
-        GraftServerScanBuilder.asciiCheck(graft.bson.BString(s.toString), c)
-      case _ => ()
-    }
-    v
-  }
-
-  override protected lazy val rows: Iterator[InternalRow] =
-    Iterator.single(new GenericInternalRow(items.map {
-      case AggPush.RowCount => nss.map(n => client.collStats(n).count).sum: Any
-      case AggPush.MinOf(c, t) =>
-        asciiVerified(c,
-          fold(nss.map(n => probeEdge(n, c, t, descending = false)), lt))
-      case AggPush.MaxOf(c, t) =>
-        asciiVerified(c,
-          fold(nss.map(n => probeEdge(n, c, t, descending = true)),
-            (a, b) => lt(b, a)))
-    }.toArray))
+        .map(d => RowCodec.toRow(Unwind.narrowPos(d), grouped.schema)))
 
   override def close(): Unit = client.close()
 }

@@ -18,8 +18,8 @@ final case class Find(
     sortAscBy: Option[String] = None,
     skip: Long = 0L,
     limit: Long = -1L,
-    /** Reverse the `sortAscBy` order — `cursor.sort({k: -1})`, the
-      * index-walk-backwards a server runs for MAX(k). */
+    /** Reverse the `sortAscBy` order — `cursor.sort({k: -1})`, an
+      * index walk backwards on a server. */
     sortDescending: Boolean = false,
     /** Secondary sort keys after `sortAscBy`, each (column, descending)
       * — the compound cursor sort doc `{k1: ±1, k2: ±1, ...}` of a
@@ -552,36 +552,7 @@ final class FakeServerClient(rootDir: Option[String] = None)
     val needed: Option[Set[String]] = q.projection.map(p =>
       p.toSet ++ BQuery.fieldPaths(q.query) ++ q.sortSpec.map(_._1))
     val matching = coll(ns).readAll(needed).filter(q.query.matches)
-    val docs: Iterator[BDoc] = q.sortSpec match {
-      case Seq() => matching
-      case spec =>
-        // compound cursor sort: later keys break earlier-key ties, each
-        // in its own ±1 direction (the server's sort-doc semantics)
-        val cmp: Ordering[BDoc] = (a, b) => {
-          var r = 0
-          val it = spec.iterator
-          while (r == 0 && it.hasNext) {
-            val (k, desc) = it.next()
-            val c = BsonOrdering.compare(
-              a.getPath(k).getOrElse(BNull), b.getPath(k).getOrElse(BNull))
-            r = if (desc) -c else c
-          }
-          r
-        }
-        // a bounded cursor (skip+limit) keeps only that many docs in a
-        // heap instead of sorting the whole store — the index-walk cost
-        // shape of a real server's sort-with-limit; stability (file
-        // order on ties) matches the full stable sort exactly
-        val bound =
-          if (q.limit >= 0) q.skip + q.limit
-          else -1L
-        if (bound >= 0 && bound < Int.MaxValue)
-          FakeServerClient.stableTopK(matching, cmp, bound.toInt)
-        else matching.toVector.sorted(cmp).iterator
-    }
-    var it: Iterator[BDoc] = docs.drop(
-      math.min(q.skip, Int.MaxValue.toLong).toInt)
-    if (q.limit >= 0) it = it.take(math.min(q.limit, Int.MaxValue.toLong).toInt)
+    val it = FakeServerClient.cursorTail(matching, q.sortSpec, q.skip, q.limit)
     q.projection match {
       // dotted paths re-NEST, exactly like a real server's {"a.b": 1}
       // projection (consumers read projected values by path)
@@ -748,29 +719,7 @@ final class FakeServerClient(rootDir: Option[String] = None)
         u.path ++ sortSpec.map(_._1))
     val post = coll(ns).readAll(needed).filter(query.matches)
       .flatMap(u.expander(postQuery))
-    val sorted = sortSpec match {
-      case Seq() => post
-      case spec =>
-        val cmp: Ordering[BDoc] = (a, b) => {
-          var r = 0
-          val it = spec.iterator
-          while (r == 0 && it.hasNext) {
-            val (k, desc) = it.next()
-            val c = BsonOrdering.compare(
-              a.getPath(k).getOrElse(BNull), b.getPath(k).getOrElse(BNull))
-            r = if (desc) -c else c
-          }
-          r
-        }
-        // bounded tail: keep skip+limit rows in a heap, not the full set
-        val bound = if (limit >= 0) skip + limit else -1L
-        if (bound >= 0 && bound < Int.MaxValue)
-          FakeServerClient.stableTopK(post, cmp, bound.toInt)
-        else post.toVector.sorted(cmp).iterator
-    }
-    var it: Iterator[BDoc] = sorted.drop(
-      math.min(skip, Int.MaxValue.toLong).toInt)
-    if (limit >= 0) it = it.take(math.min(limit, Int.MaxValue.toLong).toInt)
+    val it = FakeServerClient.cursorTail(post, sortSpec, skip, limit)
     projection match {
       case Some(fields) => it.map(QueryDocs.projector(fields))
       case None => it
@@ -820,21 +769,7 @@ final class FakeServerClient(rootDir: Option[String] = None)
         // $sort over the joined output names (missing right side of a
         // left-outer row sorts as null), then the partial $limit — kept
         // bounded: only n rows live in the heap, not the full join
-        val cmp: Ordering[BDoc] = (a, b) => {
-          var r = 0
-          val it = spec.iterator
-          while (r == 0 && it.hasNext) {
-            val (k, desc) = it.next()
-            val c = BsonOrdering.compare(
-              a.getPath(k).getOrElse(BNull), b.getPath(k).getOrElse(BNull))
-            r = if (desc) -c else c
-          }
-          r
-        }
-        if (n < Int.MaxValue)
-          FakeServerClient.stableTopK(rows, cmp, math.max(0L, n).toInt)
-        else rows.toVector.sorted(cmp).iterator
-          .take(math.min(n, Int.MaxValue.toLong).toInt)
+        FakeServerClient.cursorTail(rows, spec, 0L, n)
       case _ => rows
     }
   }
@@ -1099,6 +1034,38 @@ final class FakeServerClient(rootDir: Option[String] = None)
 }
 
 object FakeServerClient {
+  /** A cursor's tail: `$sort` by `spec` (none when empty), `$skip`, then
+    * `$limit` (none when negative). The sort is compound over stored
+    * values: later keys break earlier-key ties, each in its own ±1
+    * direction (the server's sort-doc semantics); a missing field sorts
+    * as null. A bounded sort (skip+limit) keeps only that many docs in a
+    * heap ([[stableTopK]]) instead of sorting the whole input — the
+    * index-walk cost shape of a real server's sort-with-limit; stability
+    * (input order on ties) matches the full stable sort exactly. */
+  private[server] def cursorTail(docs: Iterator[BDoc], spec: Seq[(String, Boolean)],
+      skip: Long, limit: Long): Iterator[BDoc] = {
+    val sorted =
+      if (spec.isEmpty) docs
+      else {
+        val cmp: Ordering[BDoc] = (a, b) => {
+          var r = 0
+          val it = spec.iterator
+          while (r == 0 && it.hasNext) {
+            val (k, desc) = it.next()
+            val c = BsonOrdering.compare(
+              a.getPath(k).getOrElse(BNull), b.getPath(k).getOrElse(BNull))
+            r = if (desc) -c else c
+          }
+          r
+        }
+        val bound = if (limit >= 0) skip + limit else -1L
+        if (bound >= 0 && bound < Int.MaxValue) stableTopK(docs, cmp, bound.toInt)
+        else docs.toVector.sorted(cmp).iterator
+      }
+    val kept = sorted.drop(math.min(skip, Int.MaxValue.toLong).toInt)
+    if (limit >= 0) kept.take(math.min(limit, Int.MaxValue.toLong).toInt) else kept
+  }
+
   /** The first `k` docs of a STABLE sort under `cmp`, computed with a
     * bounded heap (O(n log k) and k live docs) instead of materializing
     * and sorting the whole input — the cost shape of a real server's

@@ -236,7 +236,7 @@ object GraftBsonSource {
   * queries evaluate in the reader with the engine's exact
   * [[BQuery.matches]], so every query renders fully at the source;
   * partitions are byte splits, key ranges (the pure planners over
-  * [[FileStats]]) or per-file aggregate partials.
+  * [[FileStats]]) or aggregate partials.
   */
 object FileTransport extends Transport {
   override val name = "graftbson"
@@ -282,9 +282,9 @@ object FileTransport extends Transport {
   override val groupedFoldSeesSample = true
 
   /** TopN keys and every aggregate fold compare the values AS SPARK
-    * READS them: the reader's bounded heap and the folds under Spark's
-    * interpreted ordering ([[AggPartitionReader]],
-    * [[GroupedAggPartitionReader]]). */
+    * READS them, under Spark's interpreted ordering: the reader's bounded
+    * heap ([[GraftPartitionReader.topNSelect]]) and the folds
+    * ([[GroupedAggPartitionReader]]). */
   override val evaluator: ReadModel.Evaluator = ReadModel.Read
 
   /** The data files' sizes; no row count without a walk. */
@@ -316,32 +316,24 @@ object FileTransport extends Transport {
 
   override def planPartitions(spec: ScanSpec, options: Map[String, String],
       runtimeIn: Map[String, Seq[BsonValue]]): Array[InputPartition] =
-    (spec.grouped, spec.agg) match {
-      case (Some(g), _) =>
+    spec.grouped match {
+      case Some(g) =>
         // grouped partials per BYTE-SPLIT (the same parallelism a row
         // scan gets — a grouped aggregate over one huge file must not
         // serialize into one task); each split folds its rows into
-        // per-group partial rows over a projected decode
+        // per-group partial rows over a projected decode. A bare
+        // COUNT(*) reads each whole file's stored doc count instead.
         val parts = GraftBsonSource.dataFiles(pathOf(options)).flatMap(f =>
-          BsonFiles.planByteSplits(f, splitSizeOf(options)).map { case (s, e) =>
-            GroupedAggPartition(f, s, e, spec.query): InputPartition
+          if (spec.bareCount) Seq(GroupedAggPartition(f, 0L, Long.MaxValue, spec.query))
+          else BsonFiles.planByteSplits(f, splitSizeOf(options)).map { case (s, e) =>
+            GroupedAggPartition(f, s, e, spec.query)
           })
-        if (parts.nonEmpty || g.groupCols.nonEmpty) parts.toArray
+        if (parts.nonEmpty || g.groupCols.nonEmpty) parts.toArray[InputPartition]
         // empty collection + GLOBAL aggregate: one sentinel partition so
         // the final fold sees a count-0 partial, not zero rows (the q58
         // zero-partition COUNT lesson)
         else Array(GroupedAggPartition("", 0L, 0L, spec.query))
-      case (None, Some(_)) =>
-        // one partial-aggregate row per data file; bodies only read when
-        // a MIN/MAX needs the projected field
-        val files = GraftBsonSource.dataFiles(pathOf(options))
-        // an EMPTY collection must still yield ONE partial row (count 0,
-        // min/max NULL): with zero partitions Spark's final fold sums an
-        // empty input and COUNT(*) would come back NULL instead of 0
-        // (found by the r11 all-tables empty twin)
-        if (files.isEmpty) Array(AggInputPartition(""))
-        else files.map(f => AggInputPartition(f): InputPartition).toArray
-      case _ => planRows(spec, options, runtimeIn)
+      case None => planRows(spec, options, runtimeIn)
     }
 
   /** Row partitions. The per-partition cursor limit is the least of
@@ -466,7 +458,6 @@ object FileTransport extends Transport {
 
   override def createReader(p: InputPartition, spec: ScanSpec,
       options: Map[String, String]): PartitionReader[InternalRow] = p match {
-    case a: AggInputPartition => new AggPartitionReader(a, spec)
     case g: GroupedAggPartition => new GroupedAggPartitionReader(g, spec)
     case r: GraftInputPartition => new GraftPartitionReader(r, spec)
   }
@@ -604,85 +595,6 @@ object RuntimeFilters {
       case _ => None
     }
   }
-}
-
-/** One file of a pushed global COUNT(*)/MIN/MAX; path "" is the
-  * empty-collection sentinel. */
-final case class AggInputPartition(path: String) extends InputPartition
-
-/** One partial-aggregate row per file. COUNT(*)-only pushes touch zero
-  * document bytes (side-file / header-walk count via [[FileStats]]); a
-  * MIN/MAX makes one projected single-field pass through the existing
-  * reader so null handling and value decoding are byte-identical to a
-  * row scan, with the fold running under Spark's own interpreted
-  * ordering for the column type.
-  */
-final class AggPartitionReader(p: AggInputPartition, spec: ScanSpec)
-    extends RowIteratorReader {
-  import org.apache.spark.sql.types._
-
-  private val items = spec.agg.get
-
-  override protected lazy val rows: Iterator[InternalRow] = {
-    val scanCols: Seq[(String, DataType)] = items.collect {
-      case AggPush.MinOf(c, t) => (c, t)
-      case AggPush.MaxOf(c, t) => (c, t)
-    }.distinct
-    val values: Seq[Any] =
-      if (p.path.isEmpty) {
-        // the empty-collection sentinel partition: zero docs, so COUNT
-        // folds to 0 and MIN/MAX to NULL
-        items.map {
-          case AggPush.RowCount => 0L: Any
-          case _ => null
-        }
-      } else if (scanCols.isEmpty) {
-        val n = new FileStats(p.path, "_id").count
-        items.map(_ => n)
-      } else {
-        val schema = StructType(scanCols.map { case (c, t) => StructField(c, t) })
-        val idx = scanCols.map(_._1).zipWithIndex.toMap
-        val ords = scanCols.map { case (_, t) =>
-          org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(t)
-        }
-        val mins = Array.fill[Any](scanCols.size)(null)
-        val maxs = Array.fill[Any](scanCols.size)(null)
-        var n = 0L
-        val reader = new GraftPartitionReader(
-          GraftInputPartition(p.path, 0L, Long.MaxValue, BQuery.True),
-          // scan columns are doc paths (builder-composed) — identity
-          // entries route each through getPath (dotted subfields decode
-          // just their subpath)
-          ScanSpec(schema, mapping = scanCols.map(c => c._1 -> c._1).toMap))
-        try {
-          while (reader.next()) {
-            val r = reader.get()
-            n += 1
-            var i = 0
-            while (i < scanCols.size) {
-              if (!r.isNullAt(i)) {
-                val v = r.get(i, scanCols(i)._2) match {
-                  // copy unsafe-backed values that outlive the iteration
-                  case s: org.apache.spark.unsafe.types.UTF8String => s.clone()
-                  case other => other
-                }
-                if (mins(i) == null || ords(i).compare(v, mins(i)) < 0) mins(i) = v
-                if (maxs(i) == null || ords(i).compare(v, maxs(i)) > 0) maxs(i) = v
-              }
-              i += 1
-            }
-          }
-        } finally reader.close()
-        items.map {
-          case AggPush.RowCount => n
-          case AggPush.MinOf(c, _) => mins(idx(c))
-          case AggPush.MaxOf(c, _) => maxs(idx(c))
-        }
-      }
-    Iterator.single(InternalRow.fromSeq(values))
-  }
-
-  override def close(): Unit = ()
 }
 
 /** File-backed [[Planners.CollectionStats]] with BOUNDED planning IO — the
@@ -892,8 +804,9 @@ final case class GraftInputPartition(path: String, start: Long, end: Long,
   override def preferredLocations(): Array[String] = locations.toArray
 }
 
-/** One byte-split of a pushed grouped aggregation: path "" is the
-  * empty-collection sentinel (GLOBAL aggregates only). */
+/** One byte-split of a pushed grouped aggregation (a whole file for a
+  * bare COUNT(*)): path "" is the empty-collection sentinel (GLOBAL
+  * aggregates only). */
 final case class GroupedAggPartition(path: String, start: Long, end: Long,
     query: BQuery) extends InputPartition
 
@@ -910,7 +823,9 @@ final case class GroupedAggPartition(path: String, start: Long, end: Long,
   * SUM uses an overflow-checked long for integer columns (ANSI
   * semantics) and IEEE double otherwise; a GLOBAL aggregation (no group
   * columns) seeds the empty group so an empty split still emits its
-  * count-0 partial.
+  * count-0 partial. A bare COUNT(*) ([[ScanSpec.bareCount]]) seeds it
+  * with the file's stored doc count ([[FileStats]]: the `.splits` side
+  * file or a header walk) and reads no document body.
   */
 final class GroupedAggPartitionReader(p: GroupedAggPartition, spec: ScanSpec)
     extends RowIteratorReader {
@@ -930,8 +845,9 @@ final class GroupedAggPartitionReader(p: GroupedAggPartition, spec: ScanSpec)
   private val colType: Map[String, DataType] =
     (g.groupCols ++ extraInputs).toMap
 
+  private val counted = spec.bareCount && p.path.nonEmpty
   private val inner: GraftPartitionReader =
-    if (p.path.isEmpty) null
+    if (p.path.isEmpty || counted) null
     else new GraftPartitionReader(
       GraftInputPartition(p.path, p.start, p.end, p.query),
       // column names here ARE doc paths (the builder composed
@@ -1009,7 +925,10 @@ final class GroupedAggPartitionReader(p: GroupedAggPartition, spec: ScanSpec)
     val map = scala.collection.mutable.LinkedHashMap.empty[Vector[Any], Array[Any]]
     if (g.groupCols.isEmpty && !sentinelDone) {
       // seed the global group: an empty split still emits count-0
-      map.put(Vector.empty, g.emptyPartial)
+      map.put(Vector.empty, if (counted) {
+        val n = new FileStats(p.path, "_id").count
+        Array.fill[Any](g.items.size)(n)
+      } else g.emptyPartial)
       sentinelDone = true
     }
     if (inner != null) {
@@ -1152,131 +1071,51 @@ object GraftPartitionReader {
     }.toSet
   }
 
-  /** The sort key AS SPARK READS the stored value (mirrors RowCodec's
-    * conversions for the TopN-eligible types); None sorts first (ASC
-    * NULLS FIRST). Storage RowCodec would reject throws here too — the
-    * read was going to fail on the same doc anyway.
-    */
-  private[source] def readKey(v: BsonValue, dt: DataType): Any = (dt: @unchecked) match {
-    case DoubleType => v match {
-      case BInt32(x) => x.toDouble
-      case BInt64(x) => x.toDouble
-      case BDouble(x) => x
-      case other => throw new IllegalArgumentException(
-        s"cannot read BSON $other as Spark type $dt")
-    }
-    case IntegerType | LongType => v match {
-      case BInt32(x) => x.toLong
-      case BInt64(x) if dt == LongType => x
-      case BDate(ms) if dt == LongType => ms
-      case other => throw new IllegalArgumentException(
-        s"cannot read BSON $other as Spark type $dt")
-    }
-    case TimestampType => v match {
-      case BDate(ms) => ms * 1000L
-      case BTimestamp(s, _) => s.toLong * 1000000L
-      case other => throw new IllegalArgumentException(
-        s"cannot read BSON $other as Spark type $dt")
-    }
-    case BooleanType => v match {
-      case BBool(b) => if (b) 1L else 0L
-      case other => throw new IllegalArgumentException(
-        s"cannot read BSON $other as Spark type $dt")
-    }
-    case DateType => v match {
-      case BDate(ms) => Math.floorDiv(ms, 86400000L) // epoch days, as long
-      case other => throw new IllegalArgumentException(
-        s"cannot read BSON $other as Spark type $dt")
-    }
-    case StringType => v match {
-      // uniform storage (the string-key admission gate): engine writes
-      // store strings as BString only — any other bracket fails loud
-      case BString(s) => s
-      case other => throw new IllegalArgumentException(
-        s"cannot read BSON $other as Spark type $dt")
-    }
-  }
-
-  /** CODE-POINT string comparison — exactly Spark's UTF8String (UTF-8
-    * byte) order, NOT Java's UTF-16 unit order: the two differ when a
-    * supplementary character (a surrogate pair, units 0xD800–0xDFFF)
-    * meets a char in [0xE000, 0xFFFF]. At the first differing unit,
-    * when both units are ≥ 0xD800 the standard rank fix (surrogates
-    * +0x2000, [0xE000,0xFFFF] −0x800) restores code-point order; any
-    * other pair already agrees. Makes the file transport's pushed
-    * string TOP-N Spark-exact for ARBITRARY strings — no ASCII bound.
-    */
-  private[source] def cmpStrings(x: String, y: String): Int = {
-    val n = math.min(x.length, y.length)
-    var i = 0
-    while (i < n) {
-      var a = x.charAt(i).toInt
-      var b = y.charAt(i).toInt
-      if (a != b) {
-        if (a >= 0xD800 && b >= 0xD800) {
-          a = if (a >= 0xE000) a - 0x800 else a + 0x2000
-          b = if (b >= 0xE000) b - 0x800 else b + 0x2000
-        }
-        return a - b
-      }
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  private def cmpKeys(dt: DataType, a: Option[Any], b: Option[Any]): Int = (a, b) match {
-    case (None, None) => 0
-    case (None, _) => -1
-    case (_, None) => 1
-    case (Some(x), Some(y)) =>
-      if (dt == DoubleType)
-        java.lang.Double.compare(x.asInstanceOf[Double], y.asInstanceOf[Double])
-      else if (dt == StringType)
-        cmpStrings(x.asInstanceOf[String], y.asInstanceOf[String])
-      else java.lang.Long.compare(x.asInstanceOf[Long], y.asInstanceOf[Long])
-  }
-
   /** Bounded top-n selection under a (possibly compound) order spec:
     * O(m log n) time, O(n) memory — never materializes the partition the
-    * way a full sort would. Per key: ASC is NULLS FIRST, DESC is NULLS
-    * LAST (Spark's defaults — the only orderings pushTopN accepts), and
-    * DESC is the exact negation of the None-first ascending comparator.
+    * way a full sort would. Each key is the value Spark reads
+    * ([[RowCodec.toCatalyst]]), compared under Spark's interpreted
+    * ordering for its type, as the aggregate folds do. Per key: ASC is
+    * NULLS FIRST, DESC is NULLS LAST (Spark's defaults — the only
+    * orderings pushTopN accepts), and DESC is the exact negation of the
+    * nulls-first ascending comparator.
     */
   private[source] def topNSelect(docs: Iterator[BDoc],
       spec: Seq[(String, Boolean, DataType)], n: Int): Iterator[BDoc] = {
-    def keysOf(d: BDoc): Array[Option[Any]] = {
-      val ks = new Array[Option[Any]](spec.length)
+    val ords = spec.map(k =>
+      org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(k._3)).toArray
+    def keysOf(d: BDoc): Array[Any] = {
+      val ks = new Array[Any](spec.length)
       var i = 0
       while (i < spec.length) {
-        ks(i) = d.getPath(spec(i)._1) match {
-          case None | Some(BNull) => None
-          case Some(v) => Some(readKey(v, spec(i)._3))
-        }
+        ks(i) = d.getPath(spec(i)._1).map(RowCodec.toCatalyst(_, spec(i)._3)).orNull
         i += 1
       }
       ks
     }
-    def cmp(a: Array[Option[Any]], b: Array[Option[Any]]): Int = {
+    def cmp(a: Array[Any], b: Array[Any]): Int = {
       var i = 0
       while (i < spec.length) {
-        val (_, desc, dt) = spec(i)
-        val c0 = cmpKeys(dt, a(i), b(i))
-        val c = if (desc) -c0 else c0
+        val c0 =
+          if (a(i) == null) { if (b(i) == null) 0 else -1 }
+          else if (b(i) == null) 1
+          else ords(i).compare(a(i), b(i))
+        val c = if (spec(i)._2) -c0 else c0
         if (c != 0) return c
         i += 1
       }
       0
     }
-    val heap = new java.util.PriorityQueue[(Array[Option[Any]], BDoc)](
+    val heap = new java.util.PriorityQueue[(Array[Any], BDoc)](
       math.max(1, math.min(n, 1024)),
-      (a: (Array[Option[Any]], BDoc), b: (Array[Option[Any]], BDoc)) =>
+      (a: (Array[Any], BDoc), b: (Array[Any], BDoc)) =>
         cmp(b._1, a._1)) // max-heap: worst kept element on top
     docs.foreach { d =>
       val k = keysOf(d)
       if (heap.size < n) heap.add((k, d))
       else if (cmp(k, heap.peek()._1) < 0) { heap.poll(); heap.add((k, d)) }
     }
-    val out = new Array[(Array[Option[Any]], BDoc)](heap.size)
+    val out = new Array[(Array[Any], BDoc)](heap.size)
     var i = 0
     while (!heap.isEmpty) { out(i) = heap.poll(); i += 1 }
     // heap drains worst-first; reverse-in-place gives spec order
@@ -1580,10 +1419,6 @@ final class GraftDataWriter(partitionId: Int, taskId: Long,
   import graft.store.{ShardRouting, WriteModels}
 
   private val conf = WriteModels.WriteConf.fromOptions(options)
-  // templated update DSL (JSONPigReplace analog): overrides keys/update_op
-  private val templates: Option[(graft.query.UpdateDsl.Template, graft.query.UpdateDsl.Template)] =
-    for (q <- options.get("query_template"); u <- options.get("update_template"))
-      yield (graft.query.UpdateDsl.parse(q), graft.query.UpdateDsl.parse(u))
 
   // attempt temp files live in the job dir on the SHARED collection path
   // (never executor-local java.io.tmpdir — the apply tasks must be able to
@@ -1609,18 +1444,7 @@ final class GraftDataWriter(partitionId: Int, taskId: Long,
     appenders.getOrElseUpdate(k, new BsonFiles.Appender(tmpFile(k).toString))
 
   override def write(record: InternalRow): Unit = {
-    val doc = conf.remap(RowCodec.toBson(record, writeSchema))
-    val model = templates match {
-      case Some((qt, ut)) =>
-        BDoc(
-          "__op" -> BString(conf.mode),
-          "q" -> qt.bind(doc),
-          "u" -> ut.bind(doc),
-          "upsert" -> BBool(conf.mode == "upsert"),
-          "multi" -> BBool(conf.multi))
-      case None => WriteModels.toDoc(conf.mode, doc, conf.keys, conf.updateOp,
-        conf.multi, conf.idColumn)
-    }
+    val model = conf.model(RowCodec.toBson(record, writeSchema))
     seq += 1
     // route through the SAME decision the store's local bulkWrite uses —
     // one routing truth, no writer/apply divergence

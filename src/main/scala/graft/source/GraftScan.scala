@@ -112,8 +112,8 @@ final case class TopN(keys: Seq[(String, Boolean, DataType)], n: Int) {
   *    prune; `unwind`/`unwindPost`: a pushed `$unwind` and its
   *    post-unwind match;
   *  - `limit` (Spark's pushed LIMIT), `offset`, `topN`: the row tails;
-  *  - `agg`/`grouped`: a pushed global or grouped aggregate; `sample`: a
-  *    pushed TABLESAMPLE.
+  *  - `grouped`: a pushed aggregate (a global one has no group columns);
+  *    `sample`: a pushed TABLESAMPLE.
   *
   * A partition keeps only what differs per partition.
   */
@@ -125,7 +125,6 @@ final case class ScanSpec(
     limit: Option[Int] = None,
     offset: Option[Int] = None,
     topN: Option[TopN] = None,
-    agg: Option[Seq[AggPush]] = None,
     grouped: Option[GroupedAgg] = None,
     sample: Option[SamplePush] = None,
     computed: Seq[ComputedCol] = Nil,
@@ -136,10 +135,19 @@ final case class ScanSpec(
     * semantics when this is false). */
   def tailsPostUnwind: Boolean =
     unwind.isDefined && (limit.isDefined || topN.isDefined || offset.isDefined)
-  def readSchema: StructType = Pushdown.aggReadSchema(grouped, agg, required)
+  def readSchema: StructType = grouped.map(_.schema).getOrElse(required)
   def cols: Pushdown.Columns = Pushdown.Columns(required, mapping, computed)
   /** TopN's n, or the pushed limit (never both: Spark pushes one). */
   def rowCap: Option[Int] = topN.map(_.n).orElse(limit)
+  /** The scan reads every stored doc once: no query, unwind, sample or
+    * limit narrows or widens it. */
+  def wholeTarget: Boolean =
+    query == BQuery.True && unwind.isEmpty && sample.isEmpty && limit.isEmpty
+  /** A bare COUNT(*) of every stored doc, which each transport answers
+    * from its stored doc count without reading a body (graftbson's
+    * [[FileStats]], graftserver's collStats). */
+  def bareCount: Boolean = wholeTarget && grouped.exists(g =>
+    g.groupCols.isEmpty && g.items.forall(_._1.isInstanceOf[GroupAgg.CountAll]))
 }
 
 /** The table of either format: its metadata column, capabilities, scan
@@ -223,7 +231,6 @@ class GraftScanBuilder(tableSchema: StructType, options: Map[String, String],
   protected var limit: Option[Int] = None
   protected var offset: Option[Int] = None
   protected var topN: Option[TopN] = None
-  protected var aggPushed: Option[Seq[AggPush]] = None
   protected var groupedAgg: Option[GroupedAgg] = None
   protected var sample: Option[SamplePush] = None
 
@@ -272,8 +279,7 @@ class GraftScanBuilder(tableSchema: StructType, options: Map[String, String],
     val keyCol = Pushdown.sampleKey(cols, options, unwind)
     val eligible = !withReplacement && keyCol.isDefined &&
       !optCollections && !optLimit &&
-      limit.isEmpty && offset.isEmpty && topN.isEmpty &&
-      aggPushed.isEmpty && groupedAgg.isEmpty
+      limit.isEmpty && offset.isEmpty && topN.isEmpty && groupedAgg.isEmpty
     if (eligible) sample = Some(SamplePush(keyCol.get.docPath, lower, upper, seed))
     eligible
   }
@@ -303,8 +309,7 @@ class GraftScanBuilder(tableSchema: StructType, options: Map[String, String],
     * scan provably runs as ONE cursor. */
   override def pushOffset(n: Int): Boolean =
     if (transport.singleCursor(options) && residuals.isEmpty &&
-        aggPushed.isEmpty && groupedAgg.isEmpty && topN.isEmpty &&
-        sample.isEmpty && (unwind.isEmpty || unwoundTailOk)) {
+        groupedAgg.isEmpty && topN.isEmpty && sample.isEmpty && (unwind.isEmpty || unwoundTailOk)) {
       offset = Some(n); true
     } else false
 
@@ -312,54 +317,36 @@ class GraftScanBuilder(tableSchema: StructType, options: Map[String, String],
     * MongoInputSplit.java:281-296), reported PARTIAL: each partition
     * returns its local top-n, a superset of its contribution to the
     * global one, and Spark folds them. Every key passes
-    * [[ReadModel.topNKey]] on the transport's evaluator. Residual
+    * [[ReadModel]]'s ORDER cell on the transport's evaluator. Residual
     * filters refuse (a pre-filter top-n might not survive them), and so
     * do the option-level cursor limit and multi-collection entries. */
   override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
-    val eligible = residuals.isEmpty && aggPushed.isEmpty && groupedAgg.isEmpty &&
+    val eligible = residuals.isEmpty && groupedAgg.isEmpty &&
       limit.isEmpty && offset.isEmpty && sample.isEmpty &&
       !optCollections && !optLimit && (!optSort || transport.topNOverridesSort) &&
       (unwind.isEmpty || unwoundTailOk)
     if (!eligible) return false
     topN = Pushdown.topNOrder(cols, orders,
-      r => ReadModel.topNKey(r, transport.evaluator, options))
+      r => ReadModel.exact(ReadModel.Order, r, transport.evaluator, options))
       .map(keys => TopN(keys.map { case (r, desc) => (r.docPath, desc, r.dataType) }, n))
     topN.isDefined
   }
 
-  /** Aggregate pushdown, two strategies in preference order:
+  /** Aggregate pushdown: grouped (or global: no group keys) partials,
+    * folded per byte-split or answered by one `$match`+`$group` pipeline
+    * per namespace; a bare COUNT(*) ([[ScanSpec.bareCount]]) reads each
+    * file's or namespace's stored doc count instead. (AVG arrives here
+    * as Spark's SUM+COUNT rewrite.) Reported PARTIAL: Spark's final
+    * aggregate re-groups and folds the partial rows, for any number of
+    * partitions.
     *
-    *  1. a global COUNT(*)/MIN/MAX with NO filter surface — the zero- or
-    *     near-zero-IO path (side-file counts and projected single-field
-    *     passes, or one collStats and sorted limit-1 probes);
-    *  2. everything else — GROUPED (or filtered-global) partials, folded
-    *     per byte-split or answered by one `$match`+`$group` pipeline per
-    *     namespace. (AVG arrives here as Spark's SUM+COUNT rewrite.)
-    *
-    * Both report PARTIAL: Spark's final aggregate re-groups and folds the
-    * partial rows, for any number of partitions.
-    */
-  override def pushAggregation(aggregation: Aggregation): Boolean =
-    (aggregation.groupByExpressions.isEmpty && pushGlobalAggregation(aggregation)) ||
-      pushGroupedAggregation(aggregation)
-
-  private def pushGlobalAggregation(aggregation: Aggregation): Boolean = {
-    val eligible = pushedQuery == BQuery.True && !options.contains("query") &&
-      limit.isEmpty && offset.isEmpty && topN.isEmpty && sample.isEmpty &&
-      !optCollections && unwind.isEmpty && !optLimit
-    if (!eligible) return false
-    aggPushed = Pushdown.globalAgg(cols, aggregation,
-      r => ReadModel.exact(ReadModel.Order, r, transport.evaluator, options))
-    aggPushed.isDefined
-  }
-
-  /** Grouped partials: group keys group by the READ value (exact — Spark
-    * re-groups the same values); keys, MIN/MAX and SUM pass
-    * [[ReadModel]]'s GROUP, ORDER and SUM cells on the transport's
-    * evaluator. The whole query, and the post-unwind match between
-    * `$unwind` and the fold, must run at the source: rows are gone after
-    * grouping, so a residual cannot be re-checked. */
-  private def pushGroupedAggregation(aggregation: Aggregation): Boolean = {
+    * Group keys group by the READ value (exact — Spark re-groups the
+    * same values); keys, MIN/MAX and SUM pass [[ReadModel]]'s GROUP,
+    * ORDER and SUM cells on the transport's evaluator. The whole query,
+    * and the post-unwind match between `$unwind` and the fold, must run
+    * at the source: rows are gone after grouping, so a residual cannot
+    * be re-checked. */
+  override def pushAggregation(aggregation: Aggregation): Boolean = {
     val eligible = residuals.isEmpty && limit.isEmpty && offset.isEmpty &&
       topN.isEmpty && !optCollections && !optLimit &&
       (sample.isEmpty || transport.groupedFoldSeesSample) &&
@@ -374,7 +361,7 @@ class GraftScanBuilder(tableSchema: StructType, options: Map[String, String],
 
   override def build(): Scan = new GraftScan(
     ScanSpec(required, scanQuery, unwind, unwindPost, limit, offset, topN,
-      aggPushed, groupedAgg, sample, cols.computed, mapping,
+      groupedAgg, sample, cols.computed, mapping,
       // live only when requested AND not shadowed by a data column of the
       // same name (Spark's rule)
       meta = required.fieldNames.contains(transport.metaCol) &&
@@ -401,7 +388,7 @@ final class GraftScan(val spec: ScanSpec, options: Map[String, String],
   override def filterAttributes(): Array[NamedReference] =
     // a pushed limit/offset/top-n counts or keeps rows of the UNFILTERED
     // stream; a pushed aggregate never scans row-wise
-    if (spec.agg.isDefined || spec.grouped.isDefined || spec.limit.isDefined ||
+    if (spec.grouped.isDefined || spec.limit.isDefined ||
         spec.offset.isDefined || spec.topN.isDefined ||
         options.contains("collections") || options.contains("limit") ||
         (spec.unwind.isDefined && !transport.runtimeFiltersUnderUnwind)) Array.empty
@@ -440,7 +427,7 @@ final class GraftScan(val spec: ScanSpec, options: Map[String, String],
     * never). */
   override def outputOrdering(): Array[SortOrder] =
     options.get("sort") match {
-      case Some(docKey) if spec.agg.isEmpty && spec.grouped.isEmpty &&
+      case Some(docKey) if spec.grouped.isEmpty &&
           spec.topN.isEmpty && !spec.unwind.exists(_.postOnly(docKey)) &&
           !options.contains("collections") =>
         ColumnMapping.sparkColFor(spec.mapping, docKey)
@@ -459,7 +446,6 @@ final class GraftScan(val spec: ScanSpec, options: Map[String, String],
     transport.describeHead(spec, options) +
       (if (spec.computed.isEmpty) ""
        else s"${sep}PushedComputed: [${spec.computed.map(_.describe).mkString(", ")}]") +
-      spec.agg.map(a => s"${sep}PushedAggregates: [${a.mkString(", ")}]").getOrElse("") +
       spec.grouped.map(g => s"${sep}PushedGroupedAggregate: $g").getOrElse("") +
       spec.sample.map(sp => s"${sep}PushedSample: $sp").getOrElse("") +
       spec.offset.filter(_ => transport.describesOffset)
@@ -488,7 +474,7 @@ final class GraftScan(val spec: ScanSpec, options: Map[String, String],
     * unrequested trailing value is never read).
     */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    require(spec.agg.isEmpty && spec.grouped.isEmpty && spec.topN.isEmpty &&
+    require(spec.grouped.isEmpty && spec.topN.isEmpty &&
       spec.limit.isEmpty && spec.offset.isEmpty && spec.sample.isEmpty &&
       spec.unwind.isEmpty && !options.contains("collections") && !options.contains("limit"),
       s"${transport.name} streaming read cannot carry limit/offset/top-n/aggregate/" +

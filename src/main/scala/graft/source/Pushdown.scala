@@ -3,19 +3,19 @@ package graft.source
 import graft.bson.{BDate, BInt64, BString, BsonValue}
 import graft.query.{BQuery, ComputedCol, FilterTranslator}
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NamedReference, NullOrdering, SortDirection, SortOrder}
-import org.apache.spark.sql.connector.expressions.aggregate
-import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.sources.{Filter, IsNotNull, IsNull}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** The pushdown core shared by the graftbson and graftserver scan
   * builders — the reference's one engine-like capability, filter /
   * projection / sort / limit / skip pushed into the cursor
   * (MongoInputSplit.java:272-299). Pure functions from Spark's pushed
-  * filters, TopN orders, sample keys and global COUNT(*)/MIN/MAX to the
-  * engine's [[BQuery]]s, pushdown specs and residuals; each builder keeps
+  * filters, TopN orders and sample keys to the engine's [[BQuery]]s,
+  * pushdown specs and residuals; each builder keeps
   * only its own state, rendering and evaluation.
   *
   * Transport differences arrive as DATA, never as a branch on the
@@ -135,39 +135,6 @@ object Pushdown {
     if (spec.isEmpty || spec.contains(None)) None else Some(spec.flatten)
   }
 
-  /** Whole-collection COUNT(*)/MIN/MAX items ([[AggPush]]): MIN/MAX
-    * columns may be nested subfields and must pass `typeOk`; a COMPUTED
-    * column has no stored field a single-field scan or sorted probe could
-    * walk (the grouped path handles it). Anything else refuses. */
-  def globalAgg(cols: Columns, aggregation: Aggregation,
-      typeOk: FieldResolve.Ref => Boolean): Option[Seq[AggPush]] = {
-    def named(e: Expression): Option[FieldResolve.Ref] =
-      cols.resolve(e).filter(r => typeOk(r) && !cols.isComputed(r.docPath))
-    val items: Seq[Option[AggPush]] = aggregation.aggregateExpressions.toSeq.map {
-      case _: aggregate.CountStar => Some(AggPush.RowCount)
-      case m: aggregate.Min => named(m.column).map(r => AggPush.MinOf(r.docPath, r.dataType))
-      case m: aggregate.Max => named(m.column).map(r => AggPush.MaxOf(r.docPath, r.dataType))
-      case _ => None
-    }
-    if (items.isEmpty || items.contains(None)) None else Some(items.flatten)
-  }
-
-  /** The read schema of a scan carrying a pushed aggregate: Spark's
-    * grouped-pushdown layout (group columns first, then the aggregate
-    * columns — V2ScanRelationPushDown's zip order), or the global
-    * items' `count(*)`/`min(c)`/`max(c)` columns. */
-  def aggReadSchema(grouped: Option[GroupedAgg], pushedAgg: Option[Seq[AggPush]],
-      required: StructType): StructType = (grouped, pushedAgg) match {
-    case (Some(g), _) => g.schema
-    case (None, Some(items)) =>
-      StructType(items.map {
-        case AggPush.RowCount => StructField("count(*)", LongType, nullable = false)
-        case AggPush.MinOf(c, t) => StructField(s"min($c)", t)
-        case AggPush.MaxOf(c, t) => StructField(s"max($c)", t)
-      })
-    case _ => required
-  }
-
   /** Pre-unwind PARENT prune ([[BQuery.parentPrune]]) of a pushed
     * post-unwind match: parents with no satisfying element drop BEFORE
     * the per-element flatten — a prune, never the filter (the exact post
@@ -253,26 +220,6 @@ object ColumnMapping {
   def sparkColFor(mapping: Map[String, String], f: String): Option[String] =
     mapping.find(_._2 == f).map(_._1)
       .orElse(if (mapping.contains(f)) None else Some(f))
-}
-
-/** A scan-level aggregate accepted by the global COUNT(*)/MIN/MAX path
-  * ([[Pushdown.globalAgg]]) — the collstats/$sample analog (SURVEY §4):
-  * the file source answers COUNT(*) from `.splits` side files / 4-byte
-  * header walks without touching document bodies and streams MIN/MAX
-  * through one single-field projected decode; the server answers with
-  * one collStats and sorted limit-1 probes.
-  */
-sealed trait AggPush extends Serializable
-object AggPush {
-  case object RowCount extends AggPush {
-    override def toString = "COUNT(*)"
-  }
-  final case class MinOf(col: String, dt: DataType) extends AggPush {
-    override def toString = s"MIN($col)"
-  }
-  final case class MaxOf(col: String, dt: DataType) extends AggPush {
-    override def toString = s"MAX($col)"
-  }
 }
 
 /** A pushed TABLESAMPLE (SupportsPushDownTableSample), shared by both
@@ -378,6 +325,11 @@ final case class GroupedAgg(
     case (GroupAgg.CountAll(_) | GroupAgg.CountCol(_, _), _) => 0L: Any
     case _ => null
   }.toArray
+  /** `rows`, or the one [[emptyPartial]] row when a GLOBAL aggregate
+    * produced none (a `$group` over nothing emits no doc). */
+  def orEmpty(rows: Iterator[InternalRow]): Iterator[InternalRow] =
+    if (groupCols.nonEmpty || rows.hasNext) rows
+    else Iterator.single(new GenericInternalRow(emptyPartial))
   override def toString: String =
     (if (groupCols.isEmpty) "GLOBAL"
      else s"GROUP BY ${groupCols.map(_._1).mkString(", ")}") +

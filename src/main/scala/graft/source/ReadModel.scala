@@ -19,8 +19,7 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, DateType, 
   *  - Comparisons: per evaluator, comparison and type, what makes the
   *    comparison exact ([[exact]]).
   *
-  * `ReadModelSpec` checks the storage tables against RowCodec and the
-  * TopN heap's key read.
+  * `ReadModelSpec` checks the storage tables against RowCodec.
   */
 object ReadModel {
 
@@ -62,18 +61,11 @@ object ReadModel {
     options.get("ascii_columns").map(_.split(',').iterator
       .map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
 
-  /** The storages a column of type `dt` may hold under these options. */
-  def storages(dt: DataType, options: Map[String, String]): Set[Storage] = {
-    val all = Reads.getOrElse(dt, Set.empty)
-    if (uniform(options)) all.intersect(Writes.get(dt).toSet) else all
-  }
-
   /** Who compares: [[Stored]] is the server cursor's sort, `$group`
     * `$min`/`$max`, `$sum`, a `$lookup` `$expr` and graftbson's
     * option-level `sort`, all over stored BSON values
     * ([[graft.bson.BsonOrdering]]); [[Read]] is graftbson's TopN heap and
-    * its global and grouped folds, over the values Spark reads, in
-    * Spark's order. */
+    * its aggregate folds, over the values Spark reads, in Spark's order. */
   sealed trait Evaluator extends Serializable
   case object Stored extends Evaluator
   case object Read extends Evaluator
@@ -159,16 +151,4 @@ object ReadModel {
   def exact(c: Comparison, r: FieldResolve.Ref, e: Evaluator,
       options: Map[String, String]): Boolean =
     exact(c, r.dataType, e, options, Some(r.docPath))
-
-  /** The storages graftbson's TopN heap reads a key from
-    * (`GraftPartitionReader.readKey`): RowCodec's, but STRING from
-    * BString alone. */
-  def heapReads(dt: DataType): Set[Storage] =
-    if (dt == StringType) storage(classOf[BString]) else Reads.getOrElse(dt, Set.empty)
-
-  /** A TopN order key: an exact order and, on [[Read]], a heap that reads
-    * every storage the column may hold. */
-  def topNKey(r: FieldResolve.Ref, e: Evaluator, options: Map[String, String]): Boolean =
-    exact(Order, r, e, options) &&
-      (e == Stored || storages(r.dataType, options).subsetOf(heapReads(r.dataType)))
 }

@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.bson._
-import graft.query.{BQuery, UpdateModel}
+import graft.query.{BQuery, UpdateDsl, UpdateModel}
 
 import scala.collection.immutable.ListMap
 
@@ -14,11 +14,14 @@ import scala.collection.immutable.ListMap
 object WriteModels {
   /** The write options both sinks read: `mode`
     * (insert|replace|update|upsert), `keys`, `update_op`, `multi`,
-    * `id_column`, and the write-side `column_mapping` (Spark column ->
+    * `id_column`, the write-side `column_mapping` (Spark column ->
     * possibly dotted document field, the reverse of the read-side
-    * mongo.columns.mapping analog). */
+    * mongo.columns.mapping analog), and the `query_template` /
+    * `update_template` pair (the JSONPigReplace analog), which overrides
+    * `keys` and `update_op` when both are set. */
   final case class WriteConf(mode: String, keys: Seq[String], updateOp: String,
-      multi: Boolean, idColumn: Option[String], mapping: Map[String, String]) {
+      multi: Boolean, idColumn: Option[String], mapping: Map[String, String],
+      templates: Option[(UpdateDsl.Template, UpdateDsl.Template)]) {
 
     /** Move each mapped column to its document field — applied BEFORE key
       * extraction, so `keys`/`id_column` address document-space names.
@@ -35,8 +38,15 @@ object WriteModels {
       }
     }
 
-    /** The write-model doc ([[toDoc]]) of one encoded row. */
-    def model(row: BDoc): BDoc = toDoc(mode, remap(row), keys, updateOp, multi, idColumn)
+    /** The write-model doc of one encoded row: the templates bound to
+      * the remapped row, or [[toDoc]]. */
+    def model(row: BDoc): BDoc = {
+      val doc = remap(row)
+      templates match {
+        case Some((q, u)) => envelope(mode, q.bind(doc), u.bind(doc), multi)
+        case None => toDoc(mode, doc, keys, updateOp, multi, idColumn)
+      }
+    }
   }
   object WriteConf {
     def fromOptions(options: Map[String, String]): WriteConf = WriteConf(
@@ -45,8 +55,15 @@ object WriteModels {
       options.getOrElse("update_op", "set"),
       options.get("multi").exists(_.toBoolean),
       options.get("id_column"),
-      graft.source.ColumnMapping.fromOptions(options))
+      graft.source.ColumnMapping.fromOptions(options),
+      for (q <- options.get("query_template"); u <- options.get("update_template"))
+        yield (UpdateDsl.parse(q), UpdateDsl.parse(u)))
   }
+
+  /** The update-model envelope [[fromDoc]] decodes. */
+  private def envelope(mode: String, q: BDoc, u: BDoc, multi: Boolean): BDoc =
+    BDoc("__op" -> BString(mode), "q" -> q, "u" -> u,
+      "upsert" -> BBool(mode == "upsert"), "multi" -> BBool(multi))
 
   def toDoc(mode: String, row: BDoc, keys: Seq[String], updateOp: String,
       multi: Boolean, idColumn: Option[String]): BDoc = {
@@ -76,10 +93,7 @@ object WriteModels {
           case (_, "pushAll") => BDoc("$pushAll" -> rest)
           case (_, other) => throw new IllegalArgumentException(s"unknown update_op $other")
         }
-        BDoc(
-          "__op" -> BString(m), "q" -> q, "u" -> u,
-          "upsert" -> BBool(m == "upsert"),
-          "multi" -> BBool(multi))
+        envelope(m, q, u, multi)
     }
   }
 

@@ -473,11 +473,12 @@ class ComputedKeySpec extends SparkSpec {
     val tExp = le.withColumn("bkt", pmod($"v", lit(7L)))
       .orderBy($"bkt".asc_nulls_first, $"_id".asc).limit(5)
     assert(sortedRows(t) == sortedRows(tExp))
-    // MIN/MAX probes refuse on a computed column; the grouped-pipeline
-    // global aggregate (or Spark) still answers exactly
+    // MIN/MAX on a computed column: the global `$group` pipeline (or
+    // Spark) answers exactly
     val mm = ee.withColumn("bkt", pmod($"v", lit(7L)))
       .agg(min($"bkt").as("lo"), max($"bkt").as("hi"))
-    assert(!planOf(mm).contains("PushedAggregates"), planOf(mm))
+    assert(planOf(mm).contains("PushedGroupedAggregate: GLOBAL [min(bkt), max(bkt)]"),
+      planOf(mm))
     val mmExp = le.withColumn("bkt", pmod($"v", lit(7L)))
       .agg(min($"bkt").as("lo"), max($"bkt").as("hi"))
     assert(sortedRows(mm) == sortedRows(mmExp))

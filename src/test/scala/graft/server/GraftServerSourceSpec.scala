@@ -131,27 +131,50 @@ class GraftServerSourceSpec extends SparkSpec {
       .mode("append").save()
 
     val df = spark.read.format("graftserver")
-      .options(serverOpts(dir, "db.supp_count")).load()
+      .options(serverOpts(dir, "db.supp_count"))
+      .option("client_factory", classOf[CountingServerFactory].getName).load()
     val counted = df.agg(count(lit(1)).as("n"))
     val plan = counted.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregates: [COUNT(*)]"),
+    assert(plan.contains("PushedGroupedAggregate: GLOBAL [count(*)]"),
       s"aggregate not pushed:\n$plan")
+    CountingServerFactory.reset()
     assert(counted.as[Long].first() ===
       graft.Tables.supplier(spark, sf0001).count())
-    // a filter must refuse the pushdown (the probes are unfiltered)
+    // no cursor and no pipeline: collStats alone answers it
+    assert(CountingServerFactory.count("groupAggregate") == 0 &&
+      CountingServerFactory.count("find") == 0 &&
+      CountingServerFactory.count("collStats") > 0,
+      s"counts: ${CountingServerFactory.snapshot()}")
+    // a filter leaves collStats (it counts the whole collection): a LONG
+    // compare without uniform storage stays in Spark over a cursor...
+    val want = graft.Tables.supplier(spark, sf0001).filter($"s_suppkey" > 10).count()
     val filtered = df.filter($"_id" > 10).agg(count(lit(1)).as("n"))
-    assert(!filtered.queryExecution.executedPlan.toString.contains("PushedAggregates"))
-    assert(filtered.as[Long].first() ===
-      graft.Tables.supplier(spark, sf0001).filter($"s_suppkey" > 10).count())
+    CountingServerFactory.reset()
+    assert(filtered.as[Long].first() === want)
+    assert(CountingServerFactory.count("groupAggregate") == 0 &&
+      CountingServerFactory.count("find") > 0,
+      s"counts: ${CountingServerFactory.snapshot()}")
+    // ...and with it, renders into one $match+$group pipeline
+    val pushed = spark.read.format("graftserver")
+      .options(serverOpts(dir, "db.supp_count") + ("assume_uniform_storage" -> "true"))
+      .option("client_factory", classOf[CountingServerFactory].getName).load()
+      .filter($"_id" > 10).agg(count(lit(1)).as("n"))
+    assert(pushed.queryExecution.executedPlan.toString
+      .contains("PushedGroupedAggregate: GLOBAL [count(*)]"))
+    CountingServerFactory.reset()
+    assert(pushed.as[Long].first() === want)
+    assert(CountingServerFactory.count("groupAggregate") == 1 &&
+      CountingServerFactory.count("find") == 0,
+      s"counts: ${CountingServerFactory.snapshot()}")
   }
 
-  test("MIN/MAX are answered by sorted limit-1 probes; nulls excluded") {
+  test("global MIN/MAX are answered by one $group; nulls excluded") {
     import spark.implicits._
     val dir = freshDir()
     graft.Tables.orders(spark, sf0001)
       .select($"o_orderkey", $"o_totalprice",
-        // null for odd keys: the probe must skip nulls (BSON sorts them
-        // FIRST ascending — an unfiltered sorted cursor would return one)
+        // null for odd keys: $min must skip nulls (BSON sorts them FIRST
+        // ascending)
         when($"o_orderkey" % 2 === 0, $"o_totalprice").as("maybe"))
       .write.format("graftserver")
       .options(serverOpts(dir, "db.minmax")).option("id_column", "o_orderkey")
@@ -163,8 +186,8 @@ class GraftServerSourceSpec extends SparkSpec {
       min($"o_totalprice").as("lo"), max($"o_totalprice").as("hi"),
       count(lit(1)).as("n"), min($"maybe").as("m"))
     val plan = agg.queryExecution.executedPlan.toString
-    assert(plan.contains("MIN(o_totalprice)") && plan.contains("MAX(o_totalprice)")
-        && plan.contains("MIN(maybe)"),
+    assert(plan.contains("PushedGroupedAggregate: GLOBAL " +
+        "[min(o_totalprice), max(o_totalprice), count(*), min(maybe)]"),
       s"min/max not pushed:\n$plan")
     val row = agg.first()
     val base = graft.Tables.orders(spark, sf0001)
@@ -196,11 +219,12 @@ class GraftServerSourceSpec extends SparkSpec {
     // pushed COUNT(*) sums per-namespace collStats
     val counted = union.agg(count(lit(1)).as("n"))
     assert(counted.queryExecution.executedPlan.toString
-      .contains("PushedAggregates: [COUNT(*)]"))
+      .contains("PushedGroupedAggregate: GLOBAL [count(*)]"))
     assert(counted.as[Long].first() === cust.count())
     // MIN folds across namespaces
     val m = union.agg(min($"c_acctbal").as("m"))
-    assert(m.queryExecution.executedPlan.toString.contains("MIN(c_acctbal)"))
+    assert(m.queryExecution.executedPlan.toString
+      .contains("PushedGroupedAggregate: GLOBAL [min(c_acctbal)]"))
     assert(m.as[Double].first() ===
       cust.agg(min($"c_acctbal")).as[Double].first())
     // writes refuse the union form
@@ -705,8 +729,7 @@ class GraftServerSourceSpec extends SparkSpec {
       .schema("_id INT, v LONG").load()
     val agg = base.agg(min($"v").as("mn"), max($"v").as("mx"), sum($"v").as("s"))
     val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("PushedAggregates") &&
-      !plan.contains("PushedGroupedAggregate"), plan)
+    assert(!plan.contains("PushedGroupedAggregate"), plan)
     val r = agg.collect().head
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((100L, 500L, 600L)),
       s"Spark read semantics must win: $r")

@@ -199,6 +199,12 @@ class JoinPushdownSpec extends SparkSpec {
     assert(planOf(empty).contains("PushedGroupedAggregate: GLOBAL"), planOf(empty))
     val r = empty.collect().head
     assert(r.getLong(0) == 0L && r.isNullAt(1))
+    // and equals Spark's answer over in-memory copies of both sides
+    def local(df: org.apache.spark.sql.DataFrame) =
+      spark.createDataFrame(spark.sparkContext.parallelize(df.collect().toSeq), df.schema)
+    val (ln, lc) = (local(none), local(c))
+    assert(r == ln.join(lc, ln("custkey") === lc("_id"))
+      .agg(count(lit(1)).as("n"), max($"price").as("m")).collect().head)
   }
 
   test("partial limit pushes through the join; limit+agg never combine") {

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Scan-level aggregate pushdown (SupportsPushDownAggregates): global
-  * COUNT(*)/MIN/MAX land in the source as per-file partial rows — the
-  * collstats analog. COUNT(*)-only pushes must read ZERO document bodies
-  * (proved here by corrupting a body and counting anyway).
+  * and grouped aggregates land in the source as per-split partial rows.
+  * A bare COUNT(*) reads each file's stored doc count — the collstats
+  * analog — and must read ZERO document bodies (proved here by
+  * corrupting a body and counting anyway).
   */
 class AggPushdownSpec extends SparkSpec {
 
@@ -17,6 +18,15 @@ class AggPushdownSpec extends SparkSpec {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Whether the scan answers a bare COUNT(*) from stored doc counts. */
+  private def bareCount(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.sparkPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.exists {
+      case g: GraftScan => g.spec.bareCount
+      case _ => false
+    }
 
   test("count/min/max push down and match a row-scan aggregate") {
     import spark.implicits._
@@ -27,7 +37,8 @@ class AggPushdownSpec extends SparkSpec {
     val df = spark.read.format("graftbson").load(dir)
       .agg(count(lit(1)).as("n"), min($"k").as("mn"), max($"k").as("mx"),
         max($"v").as("mv"))
-    assert(plan(df).contains("PushedAggregates: [COUNT(*), MIN(k), MAX(k), MAX(v)]"),
+    assert(plan(df).contains(
+        "PushedGroupedAggregate: GLOBAL [count(*), min(k), max(k), max(v)]"),
       s"aggregates not pushed:\n${plan(df)}")
     val r = df.head
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)) ===
@@ -56,7 +67,8 @@ class AggPushdownSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType)))
     val df = spark.read.format("graftbson").schema(schema).load(dir)
       .agg(count(lit(1)).as("n"))
-    assert(plan(df).contains("PushedAggregates: [COUNT(*)]"))
+    assert(plan(df).contains("PushedGroupedAggregate: GLOBAL [count(*)]"))
+    assert(bareCount(df))
     assert(df.head.getLong(0) === 200L,
       "pushed COUNT(*) must come from headers/side file, not body decode")
     // sanity: a real row scan over the same corrupted file DOES fail
@@ -70,22 +82,22 @@ class AggPushdownSpec extends SparkSpec {
     val dir = freshDir()
     Seq((1L, 5L), (2L, 6L)).toDF("_id", "k")
       .write.format("graftbson").mode("append").save(dir)
-    // the zero-IO probe path (PushedAggregates) must refuse all three —
-    // side-file counts ignore filters — but each now rides the grouped
-    // per-split partial path instead of a full un-pushed scan
+    // the zero-IO stored count must refuse all three — side-file counts
+    // ignore filters — but each rides the grouped per-split partial path
+    // instead of a full un-pushed scan (the stored count would read 2)
     val filtered = spark.read.format("graftbson").load(dir)
       .filter($"k" > 5L).agg(count(lit(1)).as("n"))
-    assert(!plan(filtered).contains("PushedAggregates"))
+    assert(!bareCount(filtered))
     assert(plan(filtered).contains("PushedGroupedAggregate: GLOBAL"))
     assert(filtered.head.getLong(0) === 1L)
     val grouped = spark.read.format("graftbson").load(dir)
       .groupBy($"k").agg(count(lit(1)).as("n"))
-    assert(!plan(grouped).contains("PushedAggregates"))
+    assert(!bareCount(grouped))
     assert(plan(grouped).contains("PushedGroupedAggregate: GROUP BY k"))
     assert(grouped.count() === 2L)
     val optionQ = spark.read.format("graftbson")
       .option("query", """{"k": 5}""").load(dir).agg(count(lit(1)).as("n"))
-    assert(!plan(optionQ).contains("PushedAggregates"))
+    assert(!bareCount(optionQ))
     assert(plan(optionQ).contains("PushedGroupedAggregate: GLOBAL"))
     assert(optionQ.head.getLong(0) === 1L)
   }
@@ -200,8 +212,8 @@ class AggPushdownSpec extends SparkSpec {
     val df2 = spark.read.format("graftbson")
       .schema("_id LONG, k LONG").load(dir2)
       .agg(count(lit(1)).as("n"))
-    // (no filter: the probe path covers this; force the grouped path
-    // with a filter instead)
+    // (no filter: the stored count covers this; the filter forces the
+    // fold)
     val df3 = spark.read.format("graftbson")
       .schema("_id LONG, k LONG").load(dir2)
       .filter($"k" > 0L).agg(count(lit(1)).as("n"))
@@ -238,7 +250,7 @@ class AggPushdownSpec extends SparkSpec {
     // SortOrder against the scan output at planning time
     val df = spark.read.format("graftbson").option("sort", "k").load(dir)
       .agg(count(lit(1)).as("n"), max($"k").as("mx"))
-    assert(plan(df).contains("PushedAggregates"))
+    assert(plan(df).contains("PushedGroupedAggregate: GLOBAL [count(*), max(k)]"))
     val r = df.head
     assert((r.getLong(0), r.getLong(1)) === ((3L, 30L)))
     // the ordering claim itself still works when no aggregate is pushed
@@ -259,7 +271,8 @@ class AggPushdownSpec extends SparkSpec {
       df.agg(min($"b"), max($"b"), min($"t"), max($"t"))
     val pushed = agg(spark.read.format("graftbson")
       .schema("_id LONG, b BOOLEAN, t TIMESTAMP").load(dir))
-    assert(plan(pushed).contains("PushedAggregates: [MIN(b), MAX(b), MIN(t), MAX(t)]"),
+    assert(plan(pushed).contains(
+        "PushedGroupedAggregate: GLOBAL [min(b), max(b), min(t), max(t)]"),
       s"global MIN/MAX not pushed:\n${plan(pushed)}")
     assert(pushed.head === agg(rows.toDF("_id", "b", "t")).head)
   }

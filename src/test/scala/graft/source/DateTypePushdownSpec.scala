@@ -42,9 +42,10 @@ class DateTypePushdownSpec extends SparkSpec {
     val got = g.collect().map(r =>
       r.getDate(0).toString -> (r.getLong(1), r.getDate(2).toString)).toMap
     assert(got == expect)
-    // global MIN/MAX over the date column (side-file/probe path)
+    // global MIN/MAX over the date column
     val mm = rd.load(dir).agg(min($"day").as("mn"), max($"day").as("mx"))
-    assert(planOf(mm).contains("PushedAggregates: [MIN(day), MAX(day)]"), planOf(mm))
+    assert(planOf(mm).contains("PushedGroupedAggregate: GLOBAL [min(day), max(day)]"),
+      planOf(mm))
     val r0 = mm.collect().head
     assert(r0.getDate(0).toString == "2024-01-01" &&
       r0.getDate(1).toString == "2024-01-09")

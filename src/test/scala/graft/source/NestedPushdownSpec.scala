@@ -176,7 +176,8 @@ class NestedPushdownSpec extends SparkSpec {
     val df = spark.read.format("graftbson").schema(readSchema).load(dir)
       .agg(min($"meta.score").as("mn"), max($"meta.score").as("mx"))
     val plan = planOf(df)
-    assert(plan.contains("PushedAggregates: [MIN(meta.score), MAX(meta.score)]"), plan)
+    assert(plan.contains("PushedGroupedAggregate: GLOBAL [min(meta.score), max(meta.score)]"),
+      plan)
     val r = df.collect().head
     assert(r.getDouble(0) == 1.5 && r.getDouble(1) == 60.0, r.toString)
   }
@@ -191,7 +192,8 @@ class NestedPushdownSpec extends SparkSpec {
       .schema(readSchema).load()
       .agg(min($"meta.score").as("mn"), max($"meta.score").as("mx"))
     val plan = planOf(df)
-    assert(plan.contains("PushedAggregates: [MIN(meta.score), MAX(meta.score)]"), plan)
+    assert(plan.contains("PushedGroupedAggregate: GLOBAL [min(meta.score), max(meta.score)]"),
+      plan)
     val r = df.collect().head
     assert(r.getDouble(0) == 1.5 && r.getDouble(1) == 60.0, r.toString)
   }

@@ -8,9 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The drift guard of [[ReadModel]]: its storage tables must say what
-  * RowCodec and graftbson's TopN heap really read and write, or every
-  * gate derived from them goes stale when a read rule changes. Needs no
-  * Spark session.
+  * RowCodec really reads and writes, or every gate derived from them
+  * goes stale when a read rule changes. Needs no Spark session.
   */
 class ReadModelSpec extends AnyFunSuite {
 
@@ -44,15 +43,6 @@ class ReadModelSpec extends AnyFunSuite {
     for ((dt, x) <- values) {
       val written = RowCodec.toBson(InternalRow(x), schema(dt)).fields("v")
       assert(written.getClass === ReadModel.Writes(dt), s"$dt wrote $written")
-    }
-  }
-
-  test("the TopN heap reads a key from a storage iff the model lists it") {
-    for (dt <- ReadModel.Compared; v <- samples) {
-      val reads = scala.util.Try(GraftPartitionReader.readKey(v, dt)).isSuccess
-      assert(reads === ReadModel.heapReads(dt).contains(v.getClass),
-        s"the heap ${if (reads) "reads" else "does not read"} " +
-          s"${v.getClass.getSimpleName} as $dt, the model says otherwise")
     }
   }
 

@@ -75,7 +75,7 @@ class SqlDdlSpec extends SparkSpec {
       spark.sql(s"CREATE TABLE agg_docs USING graftbson OPTIONS (path '$dir')")
       val df = spark.sql("SELECT count(*), min(i), max(i) FROM agg_docs")
       assert(df.queryExecution.executedPlan.toString
-        .contains("PushedAggregates: [COUNT(*), MIN(i), MAX(i)]"))
+        .contains("PushedGroupedAggregate: GLOBAL [count(*), min(i), max(i)]"))
       val r = df.head
       assert((r.getLong(0), r.getInt(1), r.getInt(2)) === ((1000L, 0, 999)))
     }

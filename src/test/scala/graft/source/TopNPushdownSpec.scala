@@ -34,7 +34,7 @@ class TopNPushdownSpec extends SparkSpec {
     assert(got == expected, s"got $got\nexpected $expected")
   }
 
-  test("descending pushes (nulls-last selection); string and option-sort orders refuse") {
+  test("descending and string orders push; option-sort orders refuse") {
     import spark.implicits._
     val dir = freshDir()
     (0L until 500L).map(i => (i, s"s${i % 97}", (i % 13).toInt))
@@ -50,15 +50,18 @@ class TopNPushdownSpec extends SparkSpec {
       (0L until 500L).map(i => (i, (i % 13).toInt))
         .sortBy { case (id, v) => (-v, -id) }.take(5).map(_._1))
 
-    // string order: ObjectId/Regex storage reads as a string but sorts in
-    // its own BSON bracket — refusal keeps the local top-n exact
-    val str = df.orderBy($"s").limit(5)
-    assert(!planOf(str).contains("PushedTopN"), "string order must not push")
-    assert(str.count() == 5)
-    // one string key poisons a compound order too
-    val mixed = df.orderBy($"v", $"s").limit(5)
-    assert(!planOf(mixed).contains("PushedTopN"))
-    assert(mixed.count() == 5)
+    // string order: the heap compares the strings Spark reads, so a
+    // string key pushes alone and in a compound order
+    val str = df.orderBy($"s", $"_id").limit(5)
+    assert(planOf(str).contains("PushedTopN: s ASC, _id ASC LIMIT 5"), planOf(str))
+    assert(str.collect().map(_.getLong(0)).toSeq ===
+      (0L until 500L).map(i => (i, s"s${i % 97}")).sortBy(_.swap).take(5).map(_._1))
+    val mixed = df.orderBy($"v", $"s", $"_id").limit(5)
+    assert(planOf(mixed).contains("PushedTopN: v ASC, s ASC, _id ASC LIMIT 5"),
+      planOf(mixed))
+    assert(mixed.collect().map(_.getLong(0)).toSeq ===
+      (0L until 500L).map(i => (i, (i % 13).toInt, s"s${i % 97}"))
+        .sortBy { case (id, v, s) => (v, s, id) }.take(5).map(_._1))
 
     val optSorted = spark.read.format("graftbson").option("sort", "v").load(dir)
       .orderBy($"v").limit(5)
@@ -85,6 +88,35 @@ class TopNPushdownSpec extends SparkSpec {
     val q = df.orderBy($"a".desc, $"b".asc).limit(4).select($"_id")
     assert(planOf(q).contains("PushedTopN: a DESC, b ASC LIMIT 4"), planOf(q))
     assert(q.collect().map(_.getLong(0)).toSeq === Seq(4L, 3L, 2L, 1L))
+  }
+
+  test("string TopN over mixed String/ObjectId/Symbol storage keeps Spark's order") {
+    import graft.bson._
+    import graft.files.BsonFiles
+    val dir = freshDir()
+    // one STRING column over three storages, each read as a string: BSON
+    // orders them by bracket, Spark by the strings read — and by code
+    // point, so the supplementary character sorts above U+FFFD
+    val docs = Seq(
+      BDoc("_id" -> BInt64(1L), "s" -> BString("m")),
+      BDoc("_id" -> BInt64(2L), "s" -> BObjectId("000000000000000000000001")),
+      BDoc("_id" -> BInt64(3L), "s" -> BSymbol("zeta")),
+      BDoc("_id" -> BInt64(4L), "s" -> BString("ffff")),
+      BDoc("_id" -> BInt64(5L)), // missing: null
+      BDoc("_id" -> BInt64(6L), "s" -> BSymbol("a")),
+      BDoc("_id" -> BInt64(7L), "s" -> BObjectId("ffffffffffffffffffffffff")),
+      BDoc("_id" -> BInt64(8L), "s" -> BString("\uD83D\uDE00")),
+      BDoc("_id" -> BInt64(9L), "s" -> BString("\uFFFD")))
+    BsonFiles.write(s"$dir/data.bson", docs.iterator)
+    import spark.implicits._
+    val df = spark.read.format("graftbson").schema("_id LONG, s STRING").load(dir)
+    val local = spark.createDataFrame(
+      spark.sparkContext.parallelize(df.collect().toSeq), df.schema)
+    for (o <- Seq($"s".asc, $"s".desc)) {
+      val q = df.orderBy(o).limit(6)
+      assert(planOf(q).contains("PushedTopN: s"), planOf(q))
+      assert(q.collect().toSeq == local.orderBy(o).limit(6).collect().toSeq, o.toString)
+    }
   }
 
   test("longs above 2^53 keep exact order (no double-widened compare)") {

@@ -118,8 +118,8 @@ class UnwindFileSpec extends SparkSpec {
       pr.queryExecution.executedPlan.toString)
     assert(pr.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 5L, 5L, 9L))
     // limit/top-n tails now count UNWOUND rows (the reader's tail stage
-    // runs post-unwind); a STRING element key still refuses the top-n
-    // (four storage brackets — the plain-scan rule)
+    // runs post-unwind); a STRING element key pushes the top-n too (the
+    // heap compares the strings Spark reads — the plain-scan rule)
     val e = t(dir).select($"_id", explode($"tags").as("tag"))
     assert(e.limit(3).count() == 3)
     val top = e.orderBy($"_id".desc).limit(2)
@@ -127,7 +127,8 @@ class UnwindFileSpec extends SparkSpec {
       top.queryExecution.executedPlan.toString)
     assert(top.collect().map(_.getLong(0)).toSeq == Seq(5L, 5L))
     val topS = e.orderBy($"tag".asc).limit(2)
-    assert(!topS.queryExecution.executedPlan.toString.contains("PushedTopN"))
+    assert(topS.queryExecution.executedPlan.toString.contains("PushedTopN: tags ASC LIMIT 2"),
+      topS.queryExecution.executedPlan.toString)
     assert(topS.collect().map(_.getString(1)).toSeq == Seq("x", "x"))
   }
 

@@ -78,6 +78,26 @@ class WriteSemanticsSpec extends SparkSpec {
     assert(m(BInt64(2L)) === BInt64(50L), "qty=50 must not match $lt 10")
   }
 
+  test("query_template operator documents select by comparison on graftserver too") {
+    import spark.implicits._
+    val dir = freshDir()
+    val opts = Map("server_dir" -> dir, "ns" -> "db.qty")
+    Seq((1L, 5L), (2L, 50L)).toDF("_id", "qty")
+      .write.format("graftserver").options(opts).mode("append").save()
+    Seq(10L).toDF("threshold")
+      .write.format("graftserver").options(opts)
+      .option("mode", "update")
+      .option("query_template", """{"qty": {"$lt": "$threshold"}}""")
+      .option("update_template", """{"$inc": {"qty": -1}}""")
+      .mode("append").save()
+    val client = new graft.server.FakeServerClient(Some(dir))
+    val m = try client.find("db.qty", graft.server.Find())
+      .map(d => d.get("_id").get -> d.get("qty").get).toMap
+    finally client.close()
+    assert(m(BInt64(1L)) === BInt32(4) || m(BInt64(1L)) === BInt64(4L), s"got $m")
+    assert(m(BInt64(2L)) === BInt64(50L), "qty=50 must not match $lt 10")
+  }
+
   test("unordered bulk errors fail the commit unless explicitly ignored") {
     import spark.implicits._
     val dir = freshDir()
