@@ -38,6 +38,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // grouped-aggregate composition runs $match+$unwind+$group as one
     // server pipeline)
     ext.injectOptimizerRule(_ => graft.plans.UnwindRelocate)
+    // a global ORDER BY over an input within the broadcast threshold sorts
+    // in one task, with no range exchange: sized by Spark's estimate at
+    // plan time, by measured query stages under AQE
+    ext.injectPreCBORule(_ => graft.plans.SmallSort)
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.SmallSort)
     ext.injectFunction((
       FunctionIdentifier("objectid_to_seconds"),
       new ExpressionInfo(classOf[ObjectIdToSeconds].getName, "objectid_to_seconds"),

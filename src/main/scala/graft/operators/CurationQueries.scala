@@ -213,23 +213,23 @@ object CurationQueries {
           .select($"doc_id", $"source",
             explode(tokenCounts(coalesce($"text", lit("")))).as("t"))
           .select($"doc_id", $"source", $"t.tok".as("tok"), $"t.cnt".as("cnt"))
-        // corpus term frequencies; cache: vocab-bounded frame read by two
-        // bounded actions (the N collect and the scoring join's vocab
-        // TakeOrdered subtree) — uncached, each would replay the corpus
-        // tokenize pass. Same clearCache()-per-query lifetime as q36.
-        val cf = tc(docs).groupBy($"tok")
-          .agg(sum($"cnt").as("cf")).cache()
-        // bounded collect (1 row): total instance count → bits(N)
-        val n = cf.agg(coalesce(sum($"cf"), lit(0L))).collect().head.getLong(0)
-        val wN = if (n <= 0) 1L else java.lang.Long.toBinaryString(n).length.toLong
+        // corpus term frequencies, read by the vocab and by N below; the
+        // two reads share one exchange (ReusedExchange), so the corpus
+        // tokenize pass runs once for both
+        val cf = tc(docs).groupBy($"tok").agg(sum($"cnt").as("cf"))
+        // one row: bits(N) of the total instance count, 1 when N <= 0
+        val wN = cf.agg(coalesce(sum($"cf"), lit(0L)).as("n"))
+          .select(when($"n" <= 0L, lit(1L))
+            .otherwise(length(bin($"n")).cast("long")).as("wN"))
         val vocab = cf.orderBy($"cf".desc, $"tok")
           .limit(SurpV)
           .select($"tok", length(bin($"cf")).cast("long").as("w"))
         tc(docs)
           .join(broadcast(vocab), Seq("tok"), "left")
+          .crossJoin(broadcast(wN))
           .groupBy($"doc_id", $"source")
           .agg(sum($"cnt").as("n_tok"),
-            sum($"cnt" * (lit(wN) - coalesce($"w", lit(1L)))).as("surp"))
+            sum($"cnt" * ($"wN" - coalesce($"w", lit(1L)))).as("surp"))
           .select($"source", idiv($"surp", $"n_tok").as("mean_bits"))
           .groupBy($"source", $"mean_bits")
           .agg(count(lit(1)).as("n_docs"))
@@ -404,7 +404,7 @@ object CurationQueries {
     // both frequency tables then aggregate off that small cached frame
     // (cache justified: pair-vocab-bounded, read by the cf AND bf
     // consumers — uncached each would replay a corpus tokenize pass;
-    // same clearCache()-per-query lifetime as q36/q102). Vocabularies
+    // same clearCache()-per-query lifetime as q36). Vocabularies
     // are capped top-V (TakeOrdered) so the scoring joins broadcast ≤V
     // rows at any corpus size; scoring is one more corpus pass with a
     // single doc-keyed exchange of map-side-combined partials. All-long

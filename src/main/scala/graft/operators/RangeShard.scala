@@ -2,51 +2,39 @@ package graft.operators
 
 import graft.functions.Portable
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Range-shard layout planning over a LONG sort key: derive R boundaries,
   * assign every row a shard, never globally sort the corpus — the
   * planning step behind `repartitionByRange`-style ordered output.
   *
-  * Two interchangeable paths behind [[assign]]:
+  * Two paths behind [[assign]], picked by one probe of the key: its
+  * histogram `v.groupBy(key).count()`, collected with a limit of
+  * `maxExactKeys + 1` rows.
   *
-  *  - EXACT (small key domains): the key's full histogram pre-collapses
-  *    map-side (≤ |domain| rows per task cross one bounded exchange),
-  *    a single-partition window computes exact cumulative ranks, and
-  *    shard(v) = floor(R · cum_before(v) / N) joins back by broadcast.
+  *  - EXACT (the probe came back whole): the probe IS the exact
+  *    histogram, so the driver computes
+  *    shard(v) = floor(R · cum_before(v) / N) per key with the same
+  *    integer arithmetic the oracle uses, and assignment is row-local:
+  *    a comparison against ≤ R (lower bound, shard id) pairs, no join.
   *    Bit-deterministic at any parallelism — the oracle-pinned q94 path.
-  *  - SAMPLED (high-cardinality domains, where the histogram frame
-  *    itself would be data-scale): the shape of Spark's RangePartitioner
+  *  - SAMPLED (more distinct keys than the cap, where the histogram
+  *    would itself be data-scale): the shape of Spark's RangePartitioner
   *    reservoir, made DETERMINISTIC — a hash-threshold row sample
   *    (md5 of the row id, the q79 sampling convention: reproducible
   *    across runs, partitionings, and engines) whose sorted quantiles
-  *    become the boundaries; assignment is then a row-local comparison
-  *    against ≤ R−1 literal boundaries, no join at all. Balance is
-  *    approximate (sampling error ~ 1/√sample per shard) but the
+  *    become the boundaries, compared row-locally the same way. Balance
+  *    is approximate (sampling error ~ 1/√sample per shard) but the
   *    invariants — identical keys co-locate, every row assigned exactly
   *    once, shards contiguous — hold unconditionally.
   *
-  * [[assign]] picks the path from an approx-distinct probe of the key
-  * (one cheap map-side-sketch pass), so callers state only intent; the
-  * threshold is the point where "bounded exchange" stops being true of
-  * the histogram.
+  * Scale trade: the probe shuffles each partition's distinct keys
+  * (map-side combined), where an approx-distinct probe would write one
+  * sketch per partition; in exchange the exact arm needs no second pass
+  * over the corpus, no window over an unpartitioned frame and no join.
+  * The probe's driver side stays capped at `maxExactKeys + 1` rows.
   */
 object RangeShard {
-
-  /** Exact (key → shard_id) frame, bounded by the key domain; broadcast
-    * back onto the corpus by the caller (one row per distinct key).
-    */
-  def exactShards(v: DataFrame, key: String, r: Long): DataFrame = {
-    val h = v.groupBy(col(key)).agg(count(lit(1)).as("c"))
-    val wBefore = Window.orderBy(col(key))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.orderBy(col(key))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    h.withColumn("cumb", coalesce(sum(col("c")).over(wBefore), lit(0L)))
-      .withColumn("tot", sum(col("c")).over(wAll))
-      .select(col(key), Portable.idiv(lit(r) * col("cumb"), col("tot")).as("shard_id"))
-  }
 
   /** Deterministic sampled boundaries: ≤ r−1 ascending distinct keys;
     * shard i = keys in [b(i−1), b(i)). Sample membership hashes the ROW
@@ -69,34 +57,50 @@ object RangeShard {
     else (1 until r).map(i => sample(((i.toLong * s) / r).toInt)).distinct
   }
 
-  /** Row-local shard id from explicit boundaries: the count of
-    * boundaries ≤ key. Identical keys co-locate by construction; with
-    * b ascending the shards are contiguous key ranges.
+  /** Exact shard starts from a key histogram: (first key, shard id) for
+    * every shard after shard 0, ascending, where
+    * shard(k) = floor(r · cum_before(k) / N). Ids can skip: a key
+    * heavier than N/r jumps the cumulative count past whole shards.
     */
-  def shardOf(key: Column, boundaries: Seq[Long]): Column =
-    boundaries.foldLeft(lit(0L)) { (acc, b) =>
-      acc + when(key >= b, lit(1L)).otherwise(lit(0L))
+  private def exactStarts(hist: Seq[(Long, Long)], r: Long): Seq[(Long, Long)] = {
+    val n = hist.map(_._2).sum
+    val sorted = hist.sortBy(_._1)
+    val ids = sorted.zip(sorted.scanLeft(0L)(_ + _._2)).map {
+      case ((k, _), cumBefore) => (k, Math.multiplyExact(r, cumBefore) / n)
     }
+    ids.zip((0L, 0L) +: ids).collect { case ((k, s), (_, prev)) if s != prev => (k, s) }
+  }
+
+  /** Row-local shard id from ascending (lower bound, shard id) pairs: the
+    * id of the last bound ≤ key, 0 below the first bound (and for a NULL
+    * key). Identical keys co-locate by construction; the shards are
+    * contiguous key ranges.
+    */
+  def shardOf(key: Column, starts: Seq[(Long, Long)]): Column =
+    starts.foldLeft(lit(0L)) { case (acc, (b, s)) => when(key >= b, lit(s)).otherwise(acc) }
 
   /** `v` plus a `shard_id` column, exact or sampled by key cardinality.
-    * `maxExactKeys` marks where the histogram frame stops being a
-    * bounded exchange (default 64 K distinct keys ≈ a few MB of
-    * (key, count) pairs — comfortably broadcastable).
+    * `key` must be a LONG column. `maxExactKeys` caps the probe's rows on
+    * the driver (default 64 K distinct keys ≈ a few MB of (key, count)
+    * pairs).
     *
     * Callers must coalesce NULL keys first (q94 coalesces text before
     * tokenizing): the two arms cannot treat them identically — the
-    * exact arm's equi-join DROPS a null-keyed row while the sampled
-    * arm's comparison chain sends it to shard 0 — so null keys would
-    * make the arm choice observable.
+    * exact arm DROPS a null-keyed row while the sampled arm's comparison
+    * chain sends it to shard 0 — so null keys would make the arm choice
+    * observable.
     */
   def assign(v: DataFrame, key: String, idCol: String, r: Long,
-      maxExactKeys: Long = 1L << 16, targetSample: Int = 4096): DataFrame = {
-    val nKeys = v.agg(approx_count_distinct(col(key))).head().getLong(0)
-    if (nKeys <= maxExactKeys)
-      v.join(broadcast(exactShards(v, key, r)), key)
-    else {
+      maxExactKeys: Int = 1 << 16, targetSample: Int = 4096): DataFrame = {
+    val probe = v.groupBy(col(key)).count().limit(maxExactKeys + 1).collect()
+    if (probe.length > maxExactKeys) {
       val bounds = sampledBoundaries(v, key, idCol, r.toInt, targetSample)
-      v.withColumn("shard_id", shardOf(col(key), bounds))
+      val starts = bounds.zipWithIndex.map { case (b, i) => (b, i + 1L) }
+      v.withColumn("shard_id", shardOf(col(key), starts))
+    } else {
+      val hist = probe.filterNot(_.isNullAt(0)).map(row => (row.getLong(0), row.getLong(1)))
+      v.filter(col(key).isNotNull)
+        .withColumn("shard_id", shardOf(col(key), exactStarts(hist.toSeq, r)))
     }
   }
 }

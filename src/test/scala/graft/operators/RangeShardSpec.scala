@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** [[RangeShard]]: the exact path is pinned by the q94 oracle; this
@@ -69,6 +70,27 @@ class RangeShardSpec extends SparkSpec {
     val got = assigned.select($"k", $"shard_id").distinct().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === expect)
+  }
+
+  test("exact arm: a heavy key skips shard ids, a null key is dropped") {
+    // key 1 holds 100 of the 150 non-null rows, so key 2's cum_before
+    // (100) jumps straight to shard floor(8 * 100 / 150) = 5
+    val keys = Seq.fill(100)(Option(1L)) ++ (2L to 6L).flatMap(k => Seq.fill(10)(Option(k))) ++
+      Seq.fill(5)(Option.empty[Long])
+    val v = keys.zipWithIndex.map { case (k, i) => (i.toLong, k) }.toDF("id", "k")
+    val assigned = RangeShard.assign(v, "k", "id", R)
+    // the window formula over the key histogram, computed here in Spark
+    val h = v.filter($"k".isNotNull).groupBy($"k").agg(count(lit(1)).as("c"))
+    val before = Window.orderBy($"k").rowsBetween(Window.unboundedPreceding, -1)
+    val expect = h
+      .withColumn("cumb", coalesce(sum($"c").over(before), lit(0L)))
+      .select($"k", (lit(R.toLong) * $"cumb" / lit(150L)).cast("long").as("shard_id"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = assigned.select($"k", $"shard_id").distinct().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === expect)
+    assert(got(2L) === 5L, "key 2 must skip shards 1-4")
+    assert(assigned.count() === 150L, "null-keyed rows are dropped")
   }
 
   test("empty and all-one-key inputs degrade gracefully") {

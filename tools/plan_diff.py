@@ -15,11 +15,18 @@ dropped. Then, in every line:
     that the plans of the seeding writes also advance, so two runs of the
     same code can differ in it);
   - temp dirs `graft-conn123...`  become `graft-*`;
-  - UUIDs                         become `<uuid>`.
+  - UUIDs                         become `<uuid>`;
+  - JVM identity hashes `[J@1f4e` become `[J@<id>`, and lambda class
+    names `$$Lambda$7055/0x00..`  become `$$Lambda` (array and closure
+    literals print them, and they change from run to run).
 
 Everything else, scan `description()` strings included, must match byte for
-byte. Prints one unified diff per query that differs and a summary line;
-exits 0 when every query is identical, 1 otherwise.
+byte. Prints one unified diff per query that differs, each followed by the
+query's exchange counts on both sides when they differ; then one line per
+side with its exchange counts over all queries (range, hash and single
+partitioning shuffles, broadcasts; an executed dump counts its final plan
+only); then a summary line. Exits 0 when every query is identical, 1
+otherwise.
 """
 import difflib
 import re
@@ -32,12 +39,20 @@ PLAN_ID = re.compile(r"plan_id=\d+")
 TEMP_DIR = re.compile(r"graft-[A-Za-z_]*-?\d+")
 UUID = re.compile(
     r"[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}")
+IDENTITY = re.compile(r"(?<=[\w\[;$])@[0-9a-f]+\b")
+LAMBDA = re.compile(r"\$\$Lambda\$\d+/0x[0-9a-f]+")
+EXCHANGE_NODE = re.compile(r"\b(Exchange|BroadcastExchange) \((\d+)\)")
+DETAIL_HEAD = re.compile(r"^\((\d+)\) ")
+KINDS = (("range", "rangepartitioning"), ("hash", "hashpartitioning"),
+         ("single", "SinglePartition"))
 
 
 def normalize(line):
     line = EXPR_ID.sub("#N", line)
     line = PLAN_ID.sub("plan_id=N", line)
     line = TEMP_DIR.sub("graft-*", line)
+    line = LAMBDA.sub("$$Lambda", line)
+    line = IDENTITY.sub("@<id>", line)
     return UUID.sub("<uuid>", line)
 
 
@@ -63,6 +78,37 @@ def sections(path):
     return out
 
 
+def exchanges(lines):
+    """Exchange counts by kind of one query's FormattedMode plan."""
+    first_detail = next((i for i, l in enumerate(lines) if DETAIL_HEAD.match(l)),
+                        len(lines))
+    tree, args, current = lines[:first_detail], {}, None
+    for line in lines[first_detail:]:
+        m = DETAIL_HEAD.match(line)
+        if m:
+            current = m.group(1)
+        elif current and line.startswith("Arguments: "):
+            args[current] = line[len("Arguments: "):]
+    final = [i for i, l in enumerate(tree) if "== Final Plan ==" in l]
+    if final:
+        end = next((i for i, l in enumerate(tree) if "== Initial Plan ==" in l), len(tree))
+        tree = tree[final[0]:end]
+    counts = dict.fromkeys([k for k, _ in KINDS] + ["broadcast"], 0)
+    for line in tree:
+        for node, nid in EXCHANGE_NODE.findall(line):
+            if node == "BroadcastExchange":
+                counts["broadcast"] += 1
+            else:
+                kind = next((k for k, a in KINDS if args.get(nid, "").startswith(a)), None)
+                if kind:
+                    counts[kind] += 1
+    return counts
+
+
+def show(counts):
+    return " ".join(f"{k}={v}" for k, v in counts.items())
+
+
 def main(argv):
     if len(argv) != 3:
         sys.stderr.write(__doc__)
@@ -79,6 +125,15 @@ def main(argv):
             sys.stdout.writelines(l + "\n" for l in difflib.unified_diff(
                 before[name], after[name], f"{argv[1]}:{name}",
                 f"{argv[2]}:{name}", lineterm=""))
+            b, a = exchanges(before[name]), exchanges(after[name])
+            if b != a:
+                print(f"{name}: exchanges {show(b)} -> {show(a)}")
+    for path, side in ((argv[1], before), (argv[2], after)):
+        total = dict.fromkeys(exchanges([]), 0)
+        for lines in side.values():
+            for k, v in exchanges(lines).items():
+                total[k] += v
+        print(f"exchanges {path}: {show(total)}")
     total = len(set(before) | set(after))
     print(f"plan_diff: {total - len(differing)}/{total} queries identical"
           + (f"; differ: {', '.join(differing)}" if differing else ""))
