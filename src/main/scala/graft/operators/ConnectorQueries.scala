@@ -167,13 +167,11 @@ object ConnectorQueries {
       },
       Some("SELECT doc_id, CAST(length(coalesce(text, '')) AS BIGINT) AS n_chars_m FROM documents ORDER BY doc_id")),
 
-    // Scan-level aggregate pushdown (SupportsPushDownAggregates): a
-    // global aggregate folds per byte-split over a projected decode of
-    // its input columns; Spark's final aggregate folds the partial rows.
-    // The plan's scan reports
-    // PushedGroupedAggregate: GLOBAL [count(*), min(...), max(...)]
-    // (AggPushdownSpec pins the plan shape, and the zero-body-IO count
-    // of a bare COUNT(*), which reads the .splits side files).
+    // A global aggregate over a BSON dump: graftbson has no `$group` to
+    // push to, so Spark's partial and final aggregates fold the pruned
+    // scan (a projected decode of the three columns). Only a bare
+    // COUNT(*) pushes, read from the .splits side files with zero body
+    // IO (AggPushdownSpec pins both plan shapes).
     CatalogQuery(
       "q58_agg_pushdown",
       (s, d) => {
@@ -449,15 +447,13 @@ object ConnectorQueries {
         |GROUP BY 1, 2 ORDER BY 1, 2
         |""".stripMargin)),
 
-    // Grouped aggregate pushdown on the FILE source (round-12): parity
-    // with q121's server pipeline — the scan plans per-byte-split
-    // partial rows (group key + aggregate inputs decoded, every other
-    // column byte-skipped; AggPushdownSpec proves the bounded decode
-    // with a corrupted non-key column), the pushed filter is evaluated
-    // by the reader's exact matcher, and Spark's final aggregate folds
-    // the partials. The plan shows `PushedGroupedAggregate` on the
-    // graftbson scan; the oracle pins the values, incl. the NULL-twin
-    // group and AVG via the SUM+COUNT rewrite.
+    // Grouped aggregate over a BSON dump, the file-side counterpart of
+    // q121's server pipeline: the pushed filter runs in the reader's
+    // exact matcher over a projected decode (group key + aggregate
+    // inputs; every other column byte-skipped, which AggPushdownSpec
+    // proves with a corrupted non-key column), and Spark's partial and
+    // final aggregates fold the rows. The oracle pins the values, incl.
+    // the NULL-twin group and AVG.
     CatalogQuery(
       "q126_file_group_pushdown",
       (s, d) => {
@@ -532,10 +528,9 @@ object ConnectorQueries {
         |WHERE o_totalprice > 10000.0 ORDER BY 1, 2
         |""".stripMargin)),
 
-    // DISTINCT pushdown on the FILE source (round-12): each byte-split
-    // emits its distinct keys as partial rows over a key-column-only
-    // projected decode (bodies byte-skipped) with the pushed filter
-    // evaluated by the reader's exact matcher; Spark dedups the union.
+    // DISTINCT over a BSON dump: a key-column-only projected decode
+    // (bodies byte-skipped) with the pushed filter evaluated by the
+    // reader's exact matcher; Spark's aggregate dedups the keys.
     CatalogQuery(
       "q129_file_distinct",
       (s, d) => {
@@ -635,10 +630,9 @@ object ConnectorQueries {
     // df.sample over the file source plans as a DETERMINISTIC keyed
     // Bernoulli inside the scan — keep iff md5-prefix60("42:<_id>") <
     // floor(0.25·2^60) — so the Sample node disappears from the plan and
-    // the window composes below the pushed filter AND the grouped-
-    // aggregate partials (the inner per-split fold samples before
-    // folding; SamplePushdownSpec pins plan shape, window disjointness,
-    // and the mutual refusals with limit/top-n/offset). Unlike Spark's
+    // the window composes below the pushed filter, and Spark's aggregate
+    // folds the sampled rows (SamplePushdownSpec pins plan shape, window
+    // disjointness, and the mutual refusals with limit/top-n/offset). Unlike Spark's
     // per-partition-seeded Sample, the kept set is reproducible across
     // runs, partitionings and engines — which is exactly what lets THIS
     // oracle exist: DuckDB computes the identical predicate. At 100 TB
@@ -861,10 +855,9 @@ object ConnectorQueries {
     // evaluate (BQuery matcher), and render (verbatim wire docs; the
     // stub parser inverts them with matches-parity, MongoDriverSpec).
     // The entry reads an array-bearing collection through an option
-    // query combining all four and aggregates; the option query rides
-    // the grouped-aggregate pushdown's exact matcher, so this also
-    // pins array ops under the pushed-partials path. The oracle spells
-    // the same predicate with DuckDB list functions.
+    // query combining all four and aggregates; the option query runs in
+    // the reader's exact matcher. The oracle spells the same predicate
+    // with DuckDB list functions.
     CatalogQuery(
       "q136_query_array_ops",
       (s, d) => {
@@ -988,12 +981,11 @@ object ConnectorQueries {
         |GROUP BY 1 ORDER BY 1
         |""".stripMargin)),
 
-    // NESTED grouped-aggregate pushdown, FILE source (round-13): the
-    // per-byte-split partial fold decodes ONLY the dotted subpaths it
-    // needs — `meta.nat` and `meta.bal` compile into the Proj trie and
-    // every sibling subfield is byte-skipped (NestedPushdownSpec proves
-    // it with a corrupted-sibling fixture). Same partial protocol as
-    // q126, one level down.
+    // NESTED grouped aggregate over a BSON dump (round-13): Spark prunes
+    // the scan to the dotted subpaths it needs — `meta.nat` and
+    // `meta.bal` compile into the Proj trie and every sibling subfield
+    // is byte-skipped (NestedPushdownSpec proves it with a
+    // corrupted-sibling fixture) — and folds them as in q126.
     CatalogQuery(
       "q141_file_nested_group",
       (s, d) => {
@@ -1315,8 +1307,8 @@ object ConnectorQueries {
         |""".stripMargin)),
 
     // `$unwind` pushdown, FILE transport (round-14): same rewrite — the
-    // per-byte-split grouped partials fold over unwound rows, so the
-    // flatten never materializes Spark-side (UnwindFileSpec pins it).
+    // reader unwinds, so no Spark Generate runs, and Spark's aggregate
+    // folds the unwound rows (UnwindFileSpec pins it).
     CatalogQuery(
       "q151_file_unwind_group",
       (s, d) => {
@@ -1474,8 +1466,8 @@ object ConnectorQueries {
     // TABLESAMPLE over an unwound scan (round-14): the deterministic
     // keyed window keys PARENTS (each parent's element rows are kept or
     // dropped atomically with it — the keyed-window sampling unit), so
-    // the sample, the unwind, AND the grouped partials all compose in
-    // one reader pass per byte-split. A reproducible "sample 25% of
+    // the sample and the unwind compose in one reader pass per
+    // byte-split, under Spark's aggregate. A reproducible "sample 25% of
     // docs, count exploded tags" — the ablation primitive over the
     // corpus's flattened shape. UnwindFileSpec pins parent atomicity
     // and the element-key refusal on both transports.
@@ -1620,9 +1612,9 @@ object ConnectorQueries {
         |""".stripMargin)),
 
     // explode(array<struct>) element-subfield keys, FILE transport
-    // (r15): same rewrite — per-byte-split grouped partials fold over
-    // unwound struct elements, the subfield filter evaluates per
-    // element (UnwindFileSpec pins shape + semantics).
+    // (r15): same rewrite — the reader unwinds struct elements and
+    // evaluates the subfield filter per element; Spark folds them
+    // (UnwindFileSpec pins shape + semantics).
     CatalogQuery(
       "q161_file_unwind_struct",
       (s, d) => {
@@ -1756,7 +1748,7 @@ object ConnectorQueries {
         |""".stripMargin)),
 
     // MAP explode pushdown, FILE transport (r15): same rewrite — the
-    // per-split grouped partials fold over kv entry docs.
+    // reader unwinds kv entry docs; Spark folds them.
     CatalogQuery(
       "q165_file_unwind_map",
       (s, d) => {
@@ -2063,10 +2055,9 @@ object ConnectorQueries {
         |""".stripMargin)),
 
     // The FILE-transport arm of the derived-bin surface (r17): the same
-    // pmod bin over a BSON dump folds into PER-SPLIT grouped partials
-    // (the reader injects the derived field right after the pushed
-    // query, mirroring the server's $set position) — the q63-style bin
-    // discipline over the reference's native dump files.
+    // pmod bin over a BSON dump — the q63-style bin discipline over the
+    // reference's native dump files. With no `$group` to push to, the
+    // bin stays a Spark expression and Spark folds it.
     CatalogQuery(
       "q174_file_computed_bin",
       (s, d) => {
@@ -2124,12 +2115,10 @@ object ConnectorQueries {
         |""".stripMargin)),
 
     // The FILE-transport arm of the date bins (r18): `date_trunc(hour)`
-    // over a BSON dump of events folds into per-split grouped partials —
-    // the reader injects the truncated instant at the same stage
-    // position as the server's `$set {$dateTrunc}`. Hour truncation is
-    // immune to BSON's millisecond floor (a micros value never crosses
-    // an hour boundary when ms-floored), so the dump read matches the
-    // parquet oracle exactly.
+    // over a BSON dump of events, computed and folded by Spark. Hour
+    // truncation is immune to BSON's millisecond floor (a micros value
+    // never crosses an hour boundary when ms-floored), so the dump read
+    // matches the parquet oracle exactly.
     CatalogQuery(
       "q176_file_date_trunc_bin",
       (s, d) => {

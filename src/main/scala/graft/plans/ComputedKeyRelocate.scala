@@ -12,7 +12,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.CollectionConverters._
 
 /** Optimizer rule (r17; date bins r18): absorb an EXACT bin expression —
-  * `pmod(col, n)` / `col % n` over a graft relation's Int/Long column,
+  * `pmod(col, n)` / `col % n` over a graftserver relation's Int/Long column,
   * or the calendar bins `year/month/dayofmonth(col)` (Date or Timestamp)
   * and `date_trunc(unit, col)` under the engine's pinned UTC zone
   * (the treasury-canonical `groupBy(year(date))`,
@@ -33,6 +33,11 @@ import scala.jdk.CollectionConverters._
   *    materializing the bin;
   *  - plain reads compute the value at decode (reader-injected; the
   *    wire never ships it).
+  *
+  * graftbson relations are left alone: with no `$group` or `$lookup` to
+  * push, a bin there enables nothing and would only move Spark's
+  * generated arithmetic into the reader's per-doc injection. A
+  * user-set `computed_columns` option still reads on both transports.
   *
   * The surface is deliberately the two functions whose server
   * arithmetic is EXACT for every int64 (`$mod`-based; see
@@ -81,21 +86,13 @@ object ComputedKeyRelocate extends Rule[LogicalPlan] {
   }
 
   private def eligible(rel: DataSourceV2Relation): Boolean =
-    graft.source.ReadModel.uniform(rel.options.asScala.toMap) &&
+    graft.server.GraftServerSource.served(rel.table) &&
+      graft.source.ReadModel.uniform(rel.options.asScala.toMap) &&
       !rel.options.containsKey(graft.query.Unwind.PathKey)
-      // multi-collection file scans ADMIT since r18: entries share the
-      // scan-level schema/column_mapping (CollectionConf has no mapping
-      // override, so the capture is unambiguous) and every per-entry
-      // partition already threads the injection seam; per-entry QUERIES
-      // evaluate on STORED docs before injection — exactly the
-      // find-land residual discipline, unchanged by the absorb. The
-      // one genuine ambiguity — a per-entry key/sort override naming a
-      // new bin — refuses name-by-name in [[absorb]].
 
-  /** The graft relation (either transport — the file arm evaluates the
-    * SAME stored-value arithmetic at its injection seam) under a chain
-    * of Filters / attribute-only Projects that do not prune the bins'
-    * future home (the rewrite threads the new attribute through each). */
+  /** The graft relation under a chain of Filters / attribute-only
+    * Projects that do not prune the bins' future home (the rewrite
+    * threads the new attribute through each). */
   private def spineRel(p: LogicalPlan): Option[DataSourceV2Relation] = p match {
     case rel: DataSourceV2Relation
         if rel.table.isInstanceOf[graft.source.GraftTable] => Some(rel)
@@ -134,17 +131,6 @@ object ComputedKeyRelocate extends Rule[LogicalPlan] {
         names.exists(n => prior.exists(_.out == n)) ||
         names.exists(existing.valuesIterator.toSet.contains))
       return None
-    // multi-collection scans (r18): a per-entry key/sort OVERRIDE naming
-    // a new bin would plan splits / cursor-sort on a field that exists
-    // only post-injection — refuse the capture (malformed collections
-    // JSON refuses conservatively; the scan will fail loud on it anyway)
-    Option(rel.options.get("collections")).foreach { json =>
-      val overrides: Set[String] =
-        try graft.source.MultiCollections.parse(json)
-          .flatMap(c => c.key.toSeq ++ c.sort.toSeq).toSet
-        catch { case _: Exception => return None }
-      if (names.exists(overrides.contains)) return None
-    }
     val computed = bins.map { case (name, _, b) =>
       ComputedCol(name, b.fn, existing.getOrElse(b.src.name, b.src.name), b.n,
         b.dataType match {

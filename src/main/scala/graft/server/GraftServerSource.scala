@@ -249,8 +249,8 @@ object ServerTransport extends Transport {
   /** A pushed TopN's compound order wins over the option-level cursor
     * sort. */
   override val topNOverridesSort = true
-  /** The `$group` pipeline computes over the UNSAMPLED collection. */
-  override val groupedFoldSeesSample = false
+  /** Grouped and global aggregates fold in one `$group` pipeline. */
+  override val foldsAggregates = true
 
   /** The cursor sorts and `$group`'s folds and sums all compare STORED
     * values. */

@@ -1039,9 +1039,9 @@ object FakeServerClient {
     * values: later keys break earlier-key ties, each in its own ±1
     * direction (the server's sort-doc semantics); a missing field sorts
     * as null. A bounded sort (skip+limit) keeps only that many docs in a
-    * heap ([[stableTopK]]) instead of sorting the whole input — the
-    * index-walk cost shape of a real server's sort-with-limit; stability
-    * (input order on ties) matches the full stable sort exactly. */
+    * heap ([[graft.source.TopN.stableTopK]]) instead of sorting the whole
+    * input — the index-walk cost shape of a real server's sort-with-limit;
+    * stability (input order on ties) matches the full stable sort exactly. */
   private[server] def cursorTail(docs: Iterator[BDoc], spec: Seq[(String, Boolean)],
       skip: Long, limit: Long): Iterator[BDoc] = {
     val sorted =
@@ -1059,41 +1059,12 @@ object FakeServerClient {
           r
         }
         val bound = if (limit >= 0) skip + limit else -1L
-        if (bound >= 0 && bound < Int.MaxValue) stableTopK(docs, cmp, bound.toInt)
+        if (bound >= 0 && bound < Int.MaxValue)
+          graft.source.TopN.stableTopK(docs, cmp, bound.toInt)
         else docs.toVector.sorted(cmp).iterator
       }
     val kept = sorted.drop(math.min(skip, Int.MaxValue.toLong).toInt)
     if (limit >= 0) kept.take(math.min(limit, Int.MaxValue.toLong).toInt) else kept
-  }
-
-  /** The first `k` docs of a STABLE sort under `cmp`, computed with a
-    * bounded heap (O(n log k) and k live docs) instead of materializing
-    * and sorting the whole input — the cost shape of a real server's
-    * index-walk sort-with-limit. Ties keep input order (the sequence
-    * number joins the heap key), so the result is element-for-element
-    * identical to `input.toVector.sorted(cmp).take(k)`.
-    */
-  private[server] def stableTopK(docs: Iterator[BDoc], cmp: Ordering[BDoc],
-      k: Int): Iterator[BDoc] = {
-    if (k <= 0) return Iterator.empty
-    val ord = new java.util.Comparator[(BDoc, Long)] {
-      override def compare(a: (BDoc, Long), b: (BDoc, Long)): Int = {
-        val c = cmp.compare(a._1, b._1)
-        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-      }
-    }
-    // max-heap of the k smallest (cmp, seq) pairs
-    val heap = new java.util.PriorityQueue[(BDoc, Long)](k + 1, ord.reversed())
-    var seq = 0L
-    docs.foreach { d =>
-      heap.add((d, seq))
-      seq += 1
-      if (heap.size > k) heap.poll()
-    }
-    val arr = new Array[BDoc](heap.size)
-    var i = heap.size - 1
-    while (i >= 0) { arr(i) = heap.poll()._1; i -= 1 }
-    arr.iterator
   }
 
   /** What a real server computes from a `$group` stage over `docs` —

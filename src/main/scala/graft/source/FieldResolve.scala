@@ -61,8 +61,8 @@ object FieldResolve {
 
 /** One shared parser from Spark's pushed [[Aggregation]] to the engine's
   * [[GroupAgg]] items — used by the server's plain grouped pipeline, the
-  * server's joined (`$lookup`-tail) grouping, and the file source's
-  * per-split partial folds, so an aggregate kind lands ONCE. Callers
+  * server's joined (`$lookup`-tail) grouping, and the bare COUNT(*) both
+  * transports answer from stored counts, so an aggregate kind lands ONCE. Callers
   * supply the column resolver (their schema + mapping) and their
   * [[ReadModel]] type gates; the SUM partial-type rule (int/long fold
   * as LongType, double as DoubleType — Spark's partial-sum layout) and
@@ -71,13 +71,10 @@ object FieldResolve {
 object GroupAggParse {
 
   /** `groupCols` in group-by order; `items` in aggregate order with each
-    * partial's Spark type; `inputRefs` = the distinct aggregate INPUT
-    * columns (for the file source's projected decode).
-    */
+    * partial's Spark type. */
   final case class Parsed(
       groupCols: Seq[FieldResolve.Ref],
-      items: Seq[(GroupAgg, DataType)],
-      inputRefs: Seq[FieldResolve.Ref])
+      items: Seq[(GroupAgg, DataType)])
 
   /** None when any group key or aggregate fails its resolver/type gate
     * (the caller then refuses the pushdown and Spark keeps the
@@ -96,35 +93,29 @@ object GroupAggParse {
     val groupRefs = aggregation.groupByExpressions.toSeq.map(e =>
       resolve(e).filter(groupKeyOk))
     if (groupRefs.contains(None)) return None
-    val parsed: Seq[Option[(GroupAgg, DataType, Option[FieldResolve.Ref])]] =
+    val parsed: Seq[Option[(GroupAgg, DataType)]] =
       aggregation.aggregateExpressions.toSeq.map {
         case _: aggregate.CountStar =>
-          Some((GroupAgg.CountAll("count(*)"), LongType: DataType,
-            None: Option[FieldResolve.Ref]))
+          Some((GroupAgg.CountAll("count(*)"), LongType))
         case c: aggregate.Count if !c.isDistinct =>
           // COUNT(col) needs only null/missing discrimination — any type
           resolve(c.column).map(r =>
-            (GroupAgg.CountCol(r.docPath, s"count(${r.docPath})"),
-              LongType: DataType, Some(r)))
+            (GroupAgg.CountCol(r.docPath, s"count(${r.docPath})"), LongType))
         case m: aggregate.Min =>
           resolve(m.column).filter(minMaxOk).map(r =>
-            (GroupAgg.MinOf(r.docPath, s"min(${r.docPath})"), r.dataType, Some(r)))
+            (GroupAgg.MinOf(r.docPath, s"min(${r.docPath})"), r.dataType))
         case m: aggregate.Max =>
           resolve(m.column).filter(minMaxOk).map(r =>
-            (GroupAgg.MaxOf(r.docPath, s"max(${r.docPath})"), r.dataType, Some(r)))
+            (GroupAgg.MaxOf(r.docPath, s"max(${r.docPath})"), r.dataType))
         case sm: aggregate.Sum if !sm.isDistinct =>
           resolve(sm.column).filter(sumOk).map(r =>
             (GroupAgg.SumOf(r.docPath, s"sum(${r.docPath})"),
-              (if (r.dataType == DoubleType) DoubleType else LongType): DataType,
-              Some(r)))
+              if (r.dataType == DoubleType) DoubleType else LongType))
         case _ => None
       }
     if (parsed.contains(None) || (parsed.isEmpty && groupRefs.isEmpty)) None
     else {
-      val items = parsed.flatten
-      val out = Parsed(groupRefs.flatten,
-        items.map(i => (i._1, i._2)),
-        items.flatMap(_._3).distinctBy(_.docPath))
+      val out = Parsed(groupRefs.flatten, parsed.flatten)
       // the server renderer spells dotted names dot-free on the wire
       // (`.`→`~`, QueryDocs.wireName) inside a compound `$group` `_id`
       // and as accumulator field names — a column literally named `a~b`

@@ -236,7 +236,7 @@ object GraftBsonSource {
   * queries evaluate in the reader with the engine's exact
   * [[BQuery.matches]], so every query renders fully at the source;
   * partitions are byte splits, key ranges (the pure planners over
-  * [[FileStats]]) or aggregate partials.
+  * [[FileStats]]) or, for a bare COUNT(*), stored doc counts.
   */
 object FileTransport extends Transport {
   override val name = "graftbson"
@@ -278,13 +278,14 @@ object FileTransport extends Transport {
   /** The option-level `sort` is a per-partition PARENT order; a TopN
     * would re-sort under it — refuse rather than reorder the option. */
   override val topNOverridesSort = false
-  /** The grouped fold runs in the reader, after the sample window. */
-  override val groupedFoldSeesSample = true
+  /** No `$group` to push to: Spark's partial and final aggregates fold
+    * over the pruned, filtered scan, faster than a reader-side copy of
+    * them; only a bare COUNT(*) reads the stored doc counts. */
+  override val foldsAggregates = false
 
-  /** TopN keys and every aggregate fold compare the values AS SPARK
-    * READS them, under Spark's interpreted ordering: the reader's bounded
-    * heap ([[GraftPartitionReader.topNSelect]]) and the folds
-    * ([[GroupedAggPartitionReader]]). */
+  /** TopN keys compare the values AS SPARK READS them, under Spark's
+    * interpreted ordering: the reader's bounded heap
+    * ([[GraftPartitionReader.topNSelect]]). */
   override val evaluator: ReadModel.Evaluator = ReadModel.Read
 
   /** The data files' sizes; no row count without a walk. */
@@ -316,25 +317,14 @@ object FileTransport extends Transport {
 
   override def planPartitions(spec: ScanSpec, options: Map[String, String],
       runtimeIn: Map[String, Seq[BsonValue]]): Array[InputPartition] =
-    spec.grouped match {
-      case Some(g) =>
-        // grouped partials per BYTE-SPLIT (the same parallelism a row
-        // scan gets — a grouped aggregate over one huge file must not
-        // serialize into one task); each split folds its rows into
-        // per-group partial rows over a projected decode. A bare
-        // COUNT(*) reads each whole file's stored doc count instead.
-        val parts = GraftBsonSource.dataFiles(pathOf(options)).flatMap(f =>
-          if (spec.bareCount) Seq(GroupedAggPartition(f, 0L, Long.MaxValue, spec.query))
-          else BsonFiles.planByteSplits(f, splitSizeOf(options)).map { case (s, e) =>
-            GroupedAggPartition(f, s, e, spec.query)
-          })
-        if (parts.nonEmpty || g.groupCols.nonEmpty) parts.toArray[InputPartition]
-        // empty collection + GLOBAL aggregate: one sentinel partition so
-        // the final fold sees a count-0 partial, not zero rows (the q58
-        // zero-partition COUNT lesson)
-        else Array(GroupedAggPartition("", 0L, 0L, spec.query))
-      case None => planRows(spec, options, runtimeIn)
-    }
+    if (spec.grouped.isDefined) {
+      // the one pushed aggregate, a bare COUNT(*): each file's stored doc
+      // count; an empty collection gets one sentinel partition so the
+      // final fold sees a count-0 partial, not zero rows (the q58
+      // zero-partition COUNT lesson)
+      val files = GraftBsonSource.dataFiles(pathOf(options))
+      (if (files.isEmpty) Seq("") else files).map(CountPartition(_)).toArray
+    } else planRows(spec, options, runtimeIn)
 
   /** Row partitions. The per-partition cursor limit is the least of
     * Spark's pushed limit, a TopN's n and the option-level `limit`
@@ -458,7 +448,7 @@ object FileTransport extends Transport {
 
   override def createReader(p: InputPartition, spec: ScanSpec,
       options: Map[String, String]): PartitionReader[InternalRow] = p match {
-    case g: GroupedAggPartition => new GroupedAggPartitionReader(g, spec)
+    case c: CountPartition => new CountPartitionReader(c, spec)
     case r: GraftInputPartition => new GraftPartitionReader(r, spec)
   }
 
@@ -804,160 +794,20 @@ final case class GraftInputPartition(path: String, start: Long, end: Long,
   override def preferredLocations(): Array[String] = locations.toArray
 }
 
-/** One byte-split of a pushed grouped aggregation (a whole file for a
-  * bare COUNT(*)): path "" is the empty-collection sentinel (GLOBAL
-  * aggregates only). */
-final case class GroupedAggPartition(path: String, start: Long, end: Long,
-    query: BQuery) extends InputPartition
+/** One data file of a bare COUNT(*) ([[ScanSpec.bareCount]]); path ""
+  * is the empty-collection sentinel, which counts 0. */
+final case class CountPartition(path: String) extends InputPartition
 
-/** Folds one byte-split's rows into per-group PARTIAL rows. The inner
-  * row scan decodes ONLY the group-key and aggregate input columns
-  * (everything else is byte-skipped by the projected decoder) and
-  * evaluates the pushed/option query with the engine's exact
-  * [[BQuery.matches]]. Memory is bounded: when the group map passes
-  * [[GroupedAggPartitionReader.FlushGroups]] distinct groups, the
-  * current partials are EMITTED and the map reset — correct under the
-  * PARTIAL protocol (Spark re-groups and folds), so a high-cardinality
-  * key degrades to more partial rows, never to an unbounded hash map.
-  * MIN/MAX fold under Spark's own interpreted ordering of read values;
-  * SUM uses an overflow-checked long for integer columns (ANSI
-  * semantics) and IEEE double otherwise; a GLOBAL aggregation (no group
-  * columns) seeds the empty group so an empty split still emits its
-  * count-0 partial. A bare COUNT(*) ([[ScanSpec.bareCount]]) seeds it
-  * with the file's stored doc count ([[FileStats]]: the `.splits` side
-  * file or a header walk) and reads no document body.
-  */
-final class GroupedAggPartitionReader(p: GroupedAggPartition, spec: ScanSpec)
+/** A bare COUNT(*) over one file: its stored doc count ([[FileStats]]:
+  * the `.splits` side file or a header walk) in every COUNT(*) slot of
+  * one partial row, with no document body read. */
+final class CountPartitionReader(p: CountPartition, spec: ScanSpec)
     extends RowIteratorReader {
-  import org.apache.spark.sql.types._
-  import GroupedAggPartitionReader.FlushGroups
-
-  private val g = spec.grouped.get
-  // inner scan schema: group columns, then the distinct aggregate input
-  // columns not already among them (table types — the decode types)
-  private val extraInputs: Seq[(String, DataType)] =
-    g.inputTypes.toSeq.filterNot { case (c, _) => g.groupCols.exists(_._1 == c) }
-      .sortBy(_._1)
-  private val innerSchema = StructType(
-    (g.groupCols ++ extraInputs).map { case (c, t) => StructField(c, t) })
-  private val colIdx: Map[String, Int] =
-    (g.groupCols ++ extraInputs).map(_._1).zipWithIndex.toMap
-  private val colType: Map[String, DataType] =
-    (g.groupCols ++ extraInputs).toMap
-
-  private val counted = spec.bareCount && p.path.nonEmpty
-  private val inner: GraftPartitionReader =
-    if (p.path.isEmpty || counted) null
-    else new GraftPartitionReader(
-      GraftInputPartition(p.path, p.start, p.end, p.query),
-      // column names here ARE doc paths (the builder composed
-      // column_mapping and nested subpaths already) — identity entries
-      // make the decoder resolve each by getPath, so a dotted group key
-      // decodes just its subfield through the Proj trie
-      ScanSpec(innerSchema, unwind = spec.unwind, unwindPost = spec.unwindPost,
-        sample = spec.sample, computed = spec.computed,
-        mapping = innerSchema.fieldNames.map(c => c -> c).toMap))
-
-  private def cloned(v: Any): Any = v match {
-    case s: org.apache.spark.unsafe.types.UTF8String => s.clone()
-    case other => other
+  override protected val rows: Iterator[InternalRow] = Iterator.single {
+    val n = if (p.path.isEmpty) 0L else new FileStats(p.path, "_id").count
+    InternalRow.fromSeq(Seq.fill(spec.grouped.get.items.size)(n))
   }
-
-  // per-item fold state factory + updater
-  private val orderings: Map[String, Ordering[Any]] =
-    colType.map { case (c, t) =>
-      c -> org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(t)
-        .asInstanceOf[Ordering[Any]]
-    }
-
-  private def absorb(states: Array[Any], r: InternalRow): Unit = {
-    var i = 0
-    while (i < g.items.length) {
-      g.items(i)._1 match {
-        case GroupAgg.CountAll(_) =>
-          states(i) = states(i).asInstanceOf[Long] + 1L
-        case GroupAgg.CountCol(c, _) =>
-          if (!r.isNullAt(colIdx(c)))
-            states(i) = states(i).asInstanceOf[Long] + 1L
-        case GroupAgg.MinOf(c, _) =>
-          val j = colIdx(c)
-          if (!r.isNullAt(j)) {
-            val v = cloned(r.get(j, colType(c)))
-            if (states(i) == null || orderings(c).compare(v, states(i)) < 0)
-              states(i) = v
-          }
-        case GroupAgg.MaxOf(c, _) =>
-          val j = colIdx(c)
-          if (!r.isNullAt(j)) {
-            val v = cloned(r.get(j, colType(c)))
-            if (states(i) == null || orderings(c).compare(v, states(i)) > 0)
-              states(i) = v
-          }
-        case GroupAgg.SumOf(c, _) =>
-          val j = colIdx(c)
-          if (!r.isNullAt(j)) {
-            if (g.items(i)._2 == LongType) {
-              val v = colType(c) match {
-                case IntegerType => r.getInt(j).toLong
-                case _ => r.getLong(j)
-              }
-              states(i) =
-                if (states(i) == null) v
-                else Math.addExact(states(i).asInstanceOf[Long], v)
-            } else {
-              val v = r.getDouble(j)
-              states(i) =
-                if (states(i) == null) v
-                else states(i).asInstanceOf[Double] + v
-            }
-          }
-      }
-      i += 1
-    }
-  }
-
-  private var exhausted = p.path.isEmpty && g.groupCols.nonEmpty
-  private var sentinelDone = false
-
-  /** Read inner rows into a fresh group map until the flush cap or EOF,
-    * then emit the map as partial rows. */
-  private def nextBatch(): Iterator[InternalRow] = {
-    val map = scala.collection.mutable.LinkedHashMap.empty[Vector[Any], Array[Any]]
-    if (g.groupCols.isEmpty && !sentinelDone) {
-      // seed the global group: an empty split still emits count-0
-      map.put(Vector.empty, if (counted) {
-        val n = new FileStats(p.path, "_id").count
-        Array.fill[Any](g.items.size)(n)
-      } else g.emptyPartial)
-      sentinelDone = true
-    }
-    if (inner != null) {
-      var go = true
-      while (go && inner.next()) {
-        val r = inner.get()
-        val key = Vector.tabulate(g.groupCols.length)(i =>
-          if (r.isNullAt(i)) null else cloned(r.get(i, g.groupCols(i)._2)))
-        absorb(map.getOrElseUpdate(key, g.emptyPartial), r)
-        if (map.size >= FlushGroups) go = false
-      }
-      if (go) exhausted = true
-    } else exhausted = true
-    map.iterator.map { case (key, states) =>
-      InternalRow.fromSeq(key ++ states)
-    }
-  }
-
-  override protected val rows: Iterator[InternalRow] =
-    Iterator.continually(()).takeWhile(_ => !exhausted).flatMap(_ => nextBatch())
-
-  override def close(): Unit = if (inner != null) inner.close()
-}
-
-object GroupedAggPartitionReader {
-  /** Distinct groups held in one split's map before a flush — bounds
-    * reader memory independent of key cardinality (a flush just emits
-    * more partial rows for Spark to fold). */
-  val FlushGroups: Int = 1 << 17
+  override def close(): Unit = ()
 }
 
 /** One file partition's rows: projected decode, the partition query,
@@ -992,7 +842,7 @@ final class GraftPartitionReader(p: GraftInputPartition, spec: ScanSpec)
   private val raw = BsonFiles.readRange(p.path, p.start, p.end, Some(needed))
   // pushed query first, then the deterministic sample window (the two
   // commute; sampling early keeps the heavier stages below — top-n
-  // selection, grouped-agg folds — on the sampled stream only)
+  // selection — on the sampled stream only)
   private val matched0 = raw.filter(p.query.matches)
   // COMPUTED columns inject right after the pushed-query match (the
   // file-transport mirror of the server's `$set` position); sample keys
@@ -1071,12 +921,11 @@ object GraftPartitionReader {
     }.toSet
   }
 
-  /** Bounded top-n selection under a (possibly compound) order spec:
-    * O(m log n) time, O(n) memory — never materializes the partition the
-    * way a full sort would. Each key is the value Spark reads
-    * ([[RowCodec.toCatalyst]]), compared under Spark's interpreted
-    * ordering for its type, as the aggregate folds do. Per key: ASC is
-    * NULLS FIRST, DESC is NULLS LAST (Spark's defaults — the only
+  /** Bounded top-n selection under a (possibly compound) order spec
+    * ([[TopN.stableTopK]]: O(m log n) time, O(n) memory). Each doc's
+    * keys are read once: the value Spark reads ([[RowCodec.toCatalyst]]),
+    * compared under Spark's interpreted ordering for its type. Per key:
+    * ASC is NULLS FIRST, DESC is NULLS LAST (Spark's defaults — the only
     * orderings pushTopN accepts), and DESC is the exact negation of the
     * nulls-first ascending comparator.
     */
@@ -1093,33 +942,21 @@ object GraftPartitionReader {
       }
       ks
     }
-    def cmp(a: Array[Any], b: Array[Any]): Int = {
+    val cmp: Ordering[(Array[Any], BDoc)] = (x, y) => {
+      val (a, b) = (x._1, y._1)
+      var c = 0
       var i = 0
-      while (i < spec.length) {
+      while (c == 0 && i < spec.length) {
         val c0 =
           if (a(i) == null) { if (b(i) == null) 0 else -1 }
           else if (b(i) == null) 1
           else ords(i).compare(a(i), b(i))
-        val c = if (spec(i)._2) -c0 else c0
-        if (c != 0) return c
+        c = if (spec(i)._2) -c0 else c0
         i += 1
       }
-      0
+      c
     }
-    val heap = new java.util.PriorityQueue[(Array[Any], BDoc)](
-      math.max(1, math.min(n, 1024)),
-      (a: (Array[Any], BDoc), b: (Array[Any], BDoc)) =>
-        cmp(b._1, a._1)) // max-heap: worst kept element on top
-    docs.foreach { d =>
-      val k = keysOf(d)
-      if (heap.size < n) heap.add((k, d))
-      else if (cmp(k, heap.peek()._1) < 0) { heap.poll(); heap.add((k, d)) }
-    }
-    val out = new Array[(Array[Any], BDoc)](heap.size)
-    var i = 0
-    while (!heap.isEmpty) { out(i) = heap.poll(); i += 1 }
-    // heap drains worst-first; reverse-in-place gives spec order
-    out.reverse.iterator.map(_._2)
+    TopN.stableTopK(docs.map(d => (keysOf(d), d)), cmp, n).map(_._2)
   }
 }
 
@@ -1146,10 +983,15 @@ final class GraftWriteBuilder(writeSchema: StructType, queryId: String,
 /** Native Structured Streaming SINK: every micro-batch epoch runs the
   * SAME two-phase staged commit the batch path uses ([[GraftBatchWrite]]
   * with an epoch-scoped job dir), and epoch commit is IDEMPOTENT across
-  * replays via a durable marker (`.graft-stream-epochs/e<id>` on the
-  * collection path): Spark re-commits the last epoch after a recovery,
-  * and the marker turns the replay into a no-op — exactly-once into the
-  * collection. The marker rename is one more entry in the commit's
+  * replays via a durable marker (`.graft-stream-epochs/<queryId>/e<id>`
+  * on the collection path): Spark re-commits the last epoch after a
+  * recovery, and the marker turns the replay into a no-op — exactly-once
+  * into the collection. The marker is keyed by the write's query id,
+  * which Spark sets from `StreamingQuery.id` and keeps across restarts
+  * from one checkpoint: a restart still finds its own markers, and a
+  * second query (another checkpoint) into the same collection never
+  * mistakes its epochs for replays of the first one's. The marker
+  * rename is one more entry in the commit's
   * `_promote.json` manifest, so marker and data promote in ONE
   * all-or-nothing transaction: a coordinator crash at any point either
   * rolls the whole epoch (data + marker) forward at the next collection
@@ -1169,7 +1011,7 @@ final class GraftStreamingWrite(writeSchema: StructType, queryId: String,
       .getOrElse(new BsonCollection(path).shardCount)
 
   private def marker(epochId: Long): java.nio.file.Path =
-    Paths.get(path, ".graft-stream-epochs", s"e$epochId")
+    Paths.get(path, ".graft-stream-epochs", queryId, s"e$epochId")
   private def epochQueryId(epochId: Long): String = s"$queryId-e$epochId"
   private def epochJobDir(epochId: Long): java.nio.file.Path =
     Paths.get(path, ".graft-pending", epochQueryId(epochId))

@@ -61,9 +61,10 @@ trait Transport extends Serializable {
   /** Whether a pushed TopN replaces the option-level cursor `sort`
     * (otherwise that option refuses it). */
   def topNOverridesSort: Boolean
-  /** Whether a grouped aggregate folds after the sample window (a
-    * client-side fold), so the two compose. */
-  def groupedFoldSeesSample: Boolean
+  /** Whether the source folds a pushed aggregate (a `$group`); without
+    * one, only a bare COUNT(*) ([[ScanSpec.bareCount]]) pushes, and Spark
+    * folds every other aggregate over the pruned, filtered scan. */
+  def foldsAggregates: Boolean
   /** The evaluator a pushed TopN and every pushed aggregate run on; their
     * type gates are [[ReadModel]]'s cells for it. */
   def evaluator: ReadModel.Evaluator
@@ -100,6 +101,35 @@ final case class TopN(keys: Seq[(String, Boolean, DataType)], n: Int) {
   def sortSpec: Seq[(String, Boolean)] = keys.map(k => (k._1, k._2))
   override def toString: String =
     keys.map { case (k, desc, _) => s"$k ${if (desc) "DESC" else "ASC"}" }.mkString(", ")
+}
+object TopN {
+  /** The first `k` items of a STABLE sort under `cmp`, kept in a bounded
+    * heap (O(n log k) time, k live items) instead of sorting the whole
+    * input: graftbson's TopN reader and the fake server's sort-with-limit
+    * cursor tail. Ties keep input order (the sequence number joins the
+    * heap key), so the result is element-for-element identical to
+    * `items.toVector.sorted(cmp).take(k)`.
+    */
+  def stableTopK[A](items: Iterator[A], cmp: Ordering[A], k: Int): Iterator[A] = {
+    if (k <= 0) return Iterator.empty
+    val ord: java.util.Comparator[(A, Long)] = (a, b) => {
+      val c = cmp.compare(a._1, b._1)
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+    }
+    // max-heap of the k smallest (cmp, seq) pairs; a later item ties
+    // after every kept one, so it enters only when strictly smaller
+    val heap = new java.util.PriorityQueue[(A, Long)](math.min(k, 1024), ord.reversed())
+    var seq = 0L
+    items.foreach { x =>
+      if (heap.size < k) heap.add((x, seq))
+      else if (cmp.compare(x, heap.peek()._1) < 0) { heap.poll(); heap.add((x, seq)) }
+      seq += 1
+    }
+    // the heap drains worst-first
+    var out = List.empty[A]
+    while (!heap.isEmpty) out = heap.poll()._1 :: out
+    out.iterator
+  }
 }
 
 /** Everything a pushed plain scan carries, on either transport, from the
@@ -146,8 +176,7 @@ final case class ScanSpec(
   /** A bare COUNT(*) of every stored doc, which each transport answers
     * from its stored doc count without reading a body (graftbson's
     * [[FileStats]], graftserver's collStats). */
-  def bareCount: Boolean = wholeTarget && grouped.exists(g =>
-    g.groupCols.isEmpty && g.items.forall(_._1.isInstanceOf[GroupAgg.CountAll]))
+  def bareCount: Boolean = wholeTarget && grouped.exists(_.countOnly)
 }
 
 /** The table of either format: its metadata column, capabilities, scan
@@ -333,40 +362,42 @@ class GraftScanBuilder(tableSchema: StructType, options: Map[String, String],
   }
 
   /** Aggregate pushdown: grouped (or global: no group keys) partials,
-    * folded per byte-split or answered by one `$match`+`$group` pipeline
-    * per namespace; a bare COUNT(*) ([[ScanSpec.bareCount]]) reads each
-    * file's or namespace's stored doc count instead. (AVG arrives here
-    * as Spark's SUM+COUNT rewrite.) Reported PARTIAL: Spark's final
-    * aggregate re-groups and folds the partial rows, for any number of
-    * partitions.
+    * answered by one `$match`+`$group` pipeline per namespace on a
+    * transport that [[Transport.foldsAggregates]]; a bare COUNT(*)
+    * ([[ScanSpec.bareCount]]) reads each file's or namespace's stored doc
+    * count instead, on either transport. (AVG arrives here as Spark's
+    * SUM+COUNT rewrite.) Reported PARTIAL: Spark's final aggregate
+    * re-groups and folds the partial rows, for any number of partitions.
     *
     * Group keys group by the READ value (exact — Spark re-groups the
     * same values); keys, MIN/MAX and SUM pass [[ReadModel]]'s GROUP,
     * ORDER and SUM cells on the transport's evaluator. The whole query,
     * and the post-unwind match between `$unwind` and the fold, must run
     * at the source: rows are gone after grouping, so a residual cannot
-    * be re-checked. */
+    * be re-checked. A `$group` computes over the unsampled collection,
+    * so a pushed sample refuses. */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     val eligible = residuals.isEmpty && limit.isEmpty && offset.isEmpty &&
-      topN.isEmpty && !optCollections && !optLimit &&
-      (sample.isEmpty || transport.groupedFoldSeesSample) &&
+      topN.isEmpty && sample.isEmpty && !optCollections && !optLimit &&
       transport.rendersFully(builderQuery) && transport.rendersFully(unwindPost)
     if (!eligible) return false
     def ok(c: ReadModel.Comparison)(r: FieldResolve.Ref) =
       ReadModel.exact(c, r, transport.evaluator, options)
     groupedAgg = GroupAggParse.parse(aggregation, cols.resolve,
       ok(ReadModel.Group), ok(ReadModel.Order), ok(ReadModel.Sum)).map(GroupedAgg.of)
+      .filter(g => transport.foldsAggregates || spec(Some(g)).bareCount)
     groupedAgg.isDefined
   }
 
-  override def build(): Scan = new GraftScan(
+  private def spec(grouped: Option[GroupedAgg]): ScanSpec =
     ScanSpec(required, scanQuery, unwind, unwindPost, limit, offset, topN,
-      groupedAgg, sample, cols.computed, mapping,
+      grouped, sample, cols.computed, mapping,
       // live only when requested AND not shadowed by a data column of the
       // same name (Spark's rule)
       meta = required.fieldNames.contains(transport.metaCol) &&
-        !tableSchema.fieldNames.contains(transport.metaCol)),
-    options, transport)
+        !tableSchema.fieldNames.contains(transport.metaCol))
+
+  override def build(): Scan = new GraftScan(spec(groupedAgg), options, transport)
 }
 
 /** The plain scan of either transport over its [[ScanSpec]]. */

@@ -284,10 +284,9 @@ object SamplePush {
   }
 }
 
-/** One aggregate inside a pushed GROUPED aggregation — shared by the
-  * file source (folded into per-split partial rows by
-  * [[GroupedAggPartitionReader]]) and the server source (rendered into
-  * the `$group` pipeline, `graft.server.QueryDocs.groupStages`).
+/** One aggregate inside a pushed GROUPED aggregation, rendered into the
+  * server's `$group` pipeline (`graft.server.QueryDocs.groupStages`); the
+  * file source takes only a bare COUNT(*) ([[GroupedAgg.countOnly]]).
   */
 sealed trait GroupAgg extends Serializable { def alias: String }
 object GroupAgg {
@@ -300,27 +299,26 @@ object GroupAgg {
   final case class SumOf(col: String, alias: String) extends GroupAgg
 }
 
-/** A pushed grouped aggregation on either transport: group columns (doc
-  * paths with their Spark types — empty for a filtered-GLOBAL aggregate),
-  * each aggregate with its partial-result Spark type, and the TABLE types
-  * of every aggregate input column (the file source's projected decode;
-  * the server's `$group` pipeline does not need them). The pushdown is
-  * PARTIAL: each file byte-split folds its rows into per-group partial
-  * rows, each server namespace answers one `$match`+`$group` round-trip,
-  * and Spark's final aggregate re-groups and merges them.
+/** A pushed grouped aggregation: group columns (doc paths with their
+  * Spark types — empty for a GLOBAL aggregate) and each aggregate with
+  * its partial-result Spark type. The pushdown is PARTIAL: each server
+  * namespace answers one `$match`+`$group` round-trip (each file or
+  * namespace one stored count for a bare COUNT(*)), and Spark's final
+  * aggregate re-groups and merges the partial rows.
   */
 final case class GroupedAgg(
     groupCols: Seq[(String, DataType)],
-    items: Seq[(GroupAgg, DataType)],
-    inputTypes: Map[String, DataType] = Map.empty) {
+    items: Seq[(GroupAgg, DataType)]) {
+  /** GLOBAL COUNT(*)s only: what a stored doc count answers. */
+  def countOnly: Boolean =
+    groupCols.isEmpty && items.forall(_._1.isInstanceOf[GroupAgg.CountAll])
   def schema: StructType = StructType(
     groupCols.map { case (c, dt) => StructField(c, dt) } ++
       items.map { case (g, dt) => StructField(g.alias, dt) })
   /** The partial states of a group that absorbed no rows — counts 0,
     * MIN/MAX/SUM null: the row a GLOBAL aggregate over nothing emits, so
     * Spark's final fold (which rewrites COUNT(*) as a SUM of partials)
-    * returns 0, not NULL (the q58 zero-partition lesson). A fresh array
-    * per call: a fold updates it in place. */
+    * returns 0, not NULL (the q58 zero-partition lesson). */
   def emptyPartial: Array[Any] = items.map {
     case (GroupAgg.CountAll(_) | GroupAgg.CountCol(_, _), _) => 0L: Any
     case _ => null
@@ -337,6 +335,5 @@ final case class GroupedAgg(
 }
 object GroupedAgg {
   def of(p: GroupAggParse.Parsed): GroupedAgg =
-    GroupedAgg(p.groupCols.map(r => (r.docPath, r.dataType)), p.items,
-      p.inputRefs.map(r => r.docPath -> r.dataType).toMap)
+    GroupedAgg(p.groupCols.map(r => (r.docPath, r.dataType)), p.items)
 }

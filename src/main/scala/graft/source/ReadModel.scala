@@ -64,8 +64,9 @@ object ReadModel {
   /** Who compares: [[Stored]] is the server cursor's sort, `$group`
     * `$min`/`$max`, `$sum`, a `$lookup` `$expr` and graftbson's
     * option-level `sort`, all over stored BSON values
-    * ([[graft.bson.BsonOrdering]]); [[Read]] is graftbson's TopN heap and
-    * its aggregate folds, over the values Spark reads, in Spark's order. */
+    * ([[graft.bson.BsonOrdering]]); [[Read]] is graftbson's TopN heap,
+    * over the values Spark reads, in Spark's order. graftbson folds no
+    * aggregate (Spark does), so [[Read]] has only an ORDER row. */
   sealed trait Evaluator extends Serializable
   case object Stored extends Evaluator
   case object Read extends Evaluator
@@ -119,8 +120,8 @@ object ReadModel {
     *    (Spark's final aggregate re-merges partial groups, such as one
     *    read day split over several stored millis) — every type does.
     *
-    * Read compares what Spark compares, so only SUM is limited: to the
-    * numeric types, which fold as an overflow-checked long or a double.
+    * Read compares what Spark compares: its one row, ORDER, is exact for
+    * every type. A comparison an evaluator has no row for is never exact.
     */
   private val Cells: Map[(Evaluator, Comparison), Map[DataType, Need]] = Map(
     //                      INT      LONG     DOUBLE   STRING   BOOLEAN  TIMESTAMP DATE
@@ -129,18 +130,14 @@ object ReadModel {
     (Stored, Range) -> row(Uniform, Uniform, Uniform, Ascii,   Never,   Uniform,  Uniform),
     (Stored, Sum)   -> row(Always,  Uniform, Always,  Never,   Never,   Never,    Never),
     (Stored, Group) -> all,
-    (Read, Equal)   -> all,
-    (Read, Order)   -> all,
-    (Read, Range)   -> all,
-    (Read, Sum)     -> row(Always,  Always,  Always,  Never,   Never,   Never,    Never),
-    (Read, Group)   -> all)
+    (Read, Order)   -> all)
 
   /** Whether comparison `c` on evaluator `e` is exact for a column of type
     * `dt` under these options; `docField` is the stored field the column
     * reads, where the caller knows it (`ascii_columns` names doc fields). */
   def exact(c: Comparison, dt: DataType, e: Evaluator, options: Map[String, String],
       docField: Option[String] = None): Boolean =
-    Cells((e, c)).getOrElse(dt, Never) match {
+    Cells.get((e, c)).flatMap(_.get(dt)).getOrElse(Never) match {
       case Always => true
       case Uniform => uniform(options)
       case Ascii => uniform(options) && docField.exists(asciiCols(options).contains)

@@ -5,11 +5,13 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-/** Scan-level aggregate pushdown (SupportsPushDownAggregates): global
-  * and grouped aggregates land in the source as per-split partial rows.
-  * A bare COUNT(*) reads each file's stored doc count — the collstats
-  * analog — and must read ZERO document bodies (proved here by
-  * corrupting a body and counting anyway).
+/** Scan-level aggregate pushdown (SupportsPushDownAggregates) on
+  * graftbson: only a bare COUNT(*) pushes. It reads each file's stored
+  * doc count — the collstats analog — and must read ZERO document bodies
+  * (proved here by corrupting a body and counting anyway). Every other
+  * aggregate folds in Spark's partial and final aggregates over the
+  * pruned, filter-pushed scan, and must agree with the same aggregate
+  * over an in-memory DataFrame.
   */
 class AggPushdownSpec extends SparkSpec {
 
@@ -18,6 +20,9 @@ class AggPushdownSpec extends SparkSpec {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  private def pushedAgg(df: org.apache.spark.sql.DataFrame): Boolean =
+    plan(df).contains("PushedGroupedAggregate")
 
   /** Whether the scan answers a bare COUNT(*) from stored doc counts. */
   private def bareCount(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -37,9 +42,7 @@ class AggPushdownSpec extends SparkSpec {
     val df = spark.read.format("graftbson").load(dir)
       .agg(count(lit(1)).as("n"), min($"k").as("mn"), max($"k").as("mx"),
         max($"v").as("mv"))
-    assert(plan(df).contains(
-        "PushedGroupedAggregate: GLOBAL [count(*), min(k), max(k), max(v)]"),
-      s"aggregates not pushed:\n${plan(df)}")
+    assert(!pushedAgg(df), s"only a bare COUNT(*) pushes:\n${plan(df)}")
     val r = df.head
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)) ===
       ((4L, -3L, 10L, 9.0)))
@@ -83,26 +86,26 @@ class AggPushdownSpec extends SparkSpec {
     Seq((1L, 5L), (2L, 6L)).toDF("_id", "k")
       .write.format("graftbson").mode("append").save(dir)
     // the zero-IO stored count must refuse all three — side-file counts
-    // ignore filters — but each rides the grouped per-split partial path
-    // instead of a full un-pushed scan (the stored count would read 2)
+    // ignore filters (the stored count would read 2) — and Spark counts
+    // the filtered scan's rows instead
     val filtered = spark.read.format("graftbson").load(dir)
       .filter($"k" > 5L).agg(count(lit(1)).as("n"))
     assert(!bareCount(filtered))
-    assert(plan(filtered).contains("PushedGroupedAggregate: GLOBAL"))
+    assert(!pushedAgg(filtered), plan(filtered))
     assert(filtered.head.getLong(0) === 1L)
     val grouped = spark.read.format("graftbson").load(dir)
       .groupBy($"k").agg(count(lit(1)).as("n"))
     assert(!bareCount(grouped))
-    assert(plan(grouped).contains("PushedGroupedAggregate: GROUP BY k"))
+    assert(!pushedAgg(grouped), plan(grouped))
     assert(grouped.count() === 2L)
     val optionQ = spark.read.format("graftbson")
       .option("query", """{"k": 5}""").load(dir).agg(count(lit(1)).as("n"))
     assert(!bareCount(optionQ))
-    assert(plan(optionQ).contains("PushedGroupedAggregate: GLOBAL"))
+    assert(!pushedAgg(optionQ), plan(optionQ))
     assert(optionQ.head.getLong(0) === 1L)
   }
 
-  // ---- round-12: grouped / filtered-global per-split partials
+  // ---- grouped and filtered-global aggregates fold in Spark
 
   test("grouped aggregate pushes per-split partials and matches a plain scan") {
     import spark.implicits._
@@ -117,8 +120,7 @@ class AggPushdownSpec extends SparkSpec {
       .groupBy($"g")
       .agg(count(lit(1)).as("n"), count($"v").as("nv"), min($"s").as("mns"),
         max($"v").as("mxv"), sum($"v").as("sv"), avg($"v").as("av"))
-    assert(plan(df).contains("PushedGroupedAggregate: GROUP BY g"),
-      s"grouped aggregate not pushed:\n${plan(df)}")
+    assert(!pushedAgg(df), plan(df))
     val got = df.collect().map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0))) ->
       r.toSeq.drop(1)).toMap
     val expect = src.groupBy($"g")
@@ -140,8 +142,7 @@ class AggPushdownSpec extends SparkSpec {
     val one = spark.read.format("graftbson")
       .schema("_id LONG, g LONG, s STRING").load(dir)
       .select($"g").distinct()
-    assert(plan(one).contains("PushedGroupedAggregate: GROUP BY g []"),
-      s"distinct not pushed:\n${plan(one)}")
+    assert(!pushedAgg(one), plan(one))
     assert(one.collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet
       == Set(Some(10L), Some(20L), None))
     // compound distinct, with a pushed filter underneath
@@ -149,8 +150,7 @@ class AggPushdownSpec extends SparkSpec {
       .schema("_id LONG, g LONG, s STRING").load(dir)
       .filter($"_id" < 6L)
       .select($"g", $"s").distinct()
-    assert(plan(two).contains("PushedGroupedAggregate: GROUP BY g, s []"),
-      s"filtered compound distinct not pushed:\n${plan(two)}")
+    assert(!pushedAgg(two), plan(two))
     assert(two.count() == 5L, "(10,a) (10,b) (20,a) (null,a) (20,null)")
   }
 
@@ -180,9 +180,11 @@ class AggPushdownSpec extends SparkSpec {
     assert(hits === 100, s"corruption marker found $hits times")
     Files.write(data, bytes)
     val schema = "_id LONG, g LONG, d STRUCT<_1: LONG, _2: STRING>"
+    // Spark's aggregate prunes the scan to `g`, so the reader's projected
+    // decode skips `d`
     val df = spark.read.format("graftbson").schema(schema).load(dir)
       .groupBy($"g").agg(count(lit(1)).as("n"))
-    assert(plan(df).contains("PushedGroupedAggregate: GROUP BY g"))
+    assert(!pushedAgg(df), plan(df))
     val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(0L -> 33L, 1L -> 34L, 2L -> 33L),
       "grouped COUNT must byte-skip the corrupted non-key column")
@@ -202,7 +204,7 @@ class AggPushdownSpec extends SparkSpec {
       .schema("_id LONG, k LONG").load(dir)
       .filter($"k" > 100L)
       .agg(count(lit(1)).as("n"), sum($"k").as("s"), min($"k").as("mn"))
-    assert(plan(df).contains("PushedGroupedAggregate: GLOBAL"))
+    assert(!pushedAgg(df), plan(df))
     val r = df.head
     assert(r.getLong(0) === 0L)
     assert(r.isNullAt(1) && r.isNullAt(2))
@@ -212,32 +214,15 @@ class AggPushdownSpec extends SparkSpec {
     val df2 = spark.read.format("graftbson")
       .schema("_id LONG, k LONG").load(dir2)
       .agg(count(lit(1)).as("n"))
-    // (no filter: the stored count covers this; the filter forces the
-    // fold)
+    // (no filter: the stored count covers this; the filter hands the
+    // count to Spark)
     val df3 = spark.read.format("graftbson")
       .schema("_id LONG, k LONG").load(dir2)
       .filter($"k" > 0L).agg(count(lit(1)).as("n"))
+    assert(bareCount(df2), plan(df2))
+    assert(!pushedAgg(df3), plan(df3))
     assert(df2.head.getLong(0) === 0L)
     assert(df3.head.getLong(0) === 0L)
-  }
-
-  test("flush-on-cap emits extra partials that still fold exactly") {
-    import spark.implicits._
-    val dir = freshDir()
-    // more distinct groups than the flush cap is impractical here; pin
-    // the protocol instead: every row its own group, several splits
-    (1 to 1000).map(i => (i.toLong, i.toLong % 7, 1.0 * i))
-      .toDF("_id", "g", "v")
-      .write.format("graftbson").option("shards", "4").mode("append").save(dir)
-    val df = spark.read.format("graftbson")
-      .schema("_id LONG, g LONG, v DOUBLE").load(dir)
-      .groupBy($"g").agg(count(lit(1)).as("n"), sum($"_id").as("s"))
-    assert(plan(df).contains("PushedGroupedAggregate"))
-    val got = df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val expect = (1 to 1000).groupBy(_ % 7).map { case (g, xs) =>
-      g.toLong -> (xs.size.toLong, xs.map(_.toLong).sum)
-    }
-    assert(got === expect)
   }
 
   test("global aggregate over a sort-option table plans (no stale ordering claim)") {
@@ -247,10 +232,15 @@ class AggPushdownSpec extends SparkSpec {
       .write.format("graftbson").mode("append").save(dir)
     // with an aggregate pushed, readSchema() is the agg schema — the scan
     // must stop reporting the `sort` column or Spark fails to resolve the
-    // SortOrder against the scan output at planning time
+    // SortOrder against the scan output at planning time; a bare COUNT(*)
+    // is the one aggregate that still pushes here
+    val bare = spark.read.format("graftbson").option("sort", "k").load(dir)
+      .agg(count(lit(1)).as("n"))
+    assert(bareCount(bare), plan(bare))
+    assert(bare.head.getLong(0) === 3L)
     val df = spark.read.format("graftbson").option("sort", "k").load(dir)
       .agg(count(lit(1)).as("n"), max($"k").as("mx"))
-    assert(plan(df).contains("PushedGroupedAggregate: GLOBAL [count(*), max(k)]"))
+    assert(!pushedAgg(df), plan(df))
     val r = df.head
     assert((r.getLong(0), r.getLong(1)) === ((3L, 30L)))
     // the ordering claim itself still works when no aggregate is pushed
@@ -271,9 +261,7 @@ class AggPushdownSpec extends SparkSpec {
       df.agg(min($"b"), max($"b"), min($"t"), max($"t"))
     val pushed = agg(spark.read.format("graftbson")
       .schema("_id LONG, b BOOLEAN, t TIMESTAMP").load(dir))
-    assert(plan(pushed).contains(
-        "PushedGroupedAggregate: GLOBAL [min(b), max(b), min(t), max(t)]"),
-      s"global MIN/MAX not pushed:\n${plan(pushed)}")
+    assert(!pushedAgg(pushed), plan(pushed))
     assert(pushed.head === agg(rows.toDF("_id", "b", "t")).head)
   }
 
@@ -287,5 +275,32 @@ class AggPushdownSpec extends SparkSpec {
       .agg(min($"k").as("mn"), max($"k").as("mx"), count(lit(1)).as("n")).head
     assert((pushed.getLong(0), pushed.getLong(1), pushed.getLong(2)) ===
       ((-9L, 4L, 3L)))
+  }
+
+  test("only a bare COUNT(*) pushes: grouped, global, DISTINCT and filtered counts fold in Spark") {
+    import spark.implicits._
+    val dir = freshDir()
+    val src = Seq[(Long, java.lang.Long, String, java.lang.Double)](
+      (1L, 10L, "a", 1.5), (2L, 10L, "b", 2.5), (3L, 20L, null, 4.0),
+      (4L, null, "a", null), (5L, 20L, "c", -8.0))
+      .toDF("_id", "g", "s", "v")
+    src.write.format("graftbson").option("shards", "2").mode("append").save(dir)
+    val read = () => spark.read.format("graftbson")
+      .schema("_id LONG, g LONG, s STRING, v DOUBLE").load(dir)
+    val shapes: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "grouped" -> (_.groupBy($"g").agg(count(lit(1)), sum($"v"), min($"s"), max($"v"))),
+      "global" -> (_.agg(count(lit(1)), count($"s"), min($"g"), max($"v"), sum($"g"))),
+      "distinct" -> (_.select($"g", $"s").distinct()),
+      "filtered count" -> (_.filter($"v" > 0.0).agg(count(lit(1)))))
+    shapes.foreach { case (name, shape) =>
+      val df = shape(read())
+      assert(!pushedAgg(df), s"$name:\n${plan(df)}")
+      assert(df.collect().map(_.toString).sorted.toSeq ===
+        shape(src).collect().map(_.toString).sorted.toSeq, name)
+    }
+    val bare = read().agg(count(lit(1)))
+    assert(plan(bare).contains("PushedGroupedAggregate: GLOBAL [count(*)]"), plan(bare))
+    assert(bareCount(bare))
+    assert(bare.head.getLong(0) === 5L)
   }
 }

@@ -156,9 +156,9 @@ class GraftBsonStreamSpec extends SparkSpec {
       .schema("_id LONG, s STRING").load(dir)
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
     assert(got == Seq((1L, "a"), (2L, "b"), (3L, "c")))
-    // epoch markers recorded; pending dirs swept
-    assert(Files.list(java.nio.file.Paths.get(dir, ".graft-stream-epochs"))
-      .count() >= 2)
+    // epoch markers recorded under the query's id; pending dirs swept
+    assert(Files.list(java.nio.file.Paths.get(dir, ".graft-stream-epochs",
+      q.id.toString)).count() >= 2)
 
     // restart with the same checkpoint: nothing replays into the store
     val q2 = in.toDF().toDF("_id", "s")
@@ -228,7 +228,7 @@ class GraftBsonStreamSpec extends SparkSpec {
     val newDoc = graft.bson.BsonCodec.encode(
       graft.bson.BDoc("_id" -> graft.bson.BInt64(3L)))
     Files.write(staged, Files.readAllBytes(shard) ++ newDoc)
-    val marker = java.nio.file.Paths.get(dir, ".graft-stream-epochs", "e2")
+    val marker = java.nio.file.Paths.get(dir, ".graft-stream-epochs", "crash-q", "e2")
     val stagedMarker = marker.resolveSibling(".e2.stage-crash")
     Files.createDirectories(marker.getParent)
     Files.createFile(stagedMarker)
@@ -268,7 +268,7 @@ class GraftBsonStreamSpec extends SparkSpec {
     // promoteAll leaves an orphaned empty stage file and no manifest —
     // pre-r14, nothing ever deleted it (cleanupStages sweeps only
     // .apply-* names in the collection dir, not the epoch-marker dir)
-    val epochDir = java.nio.file.Paths.get(dir, ".graft-stream-epochs")
+    val epochDir = java.nio.file.Paths.get(dir, ".graft-stream-epochs", "leak-q")
     Files.createDirectories(epochDir)
     val orphan1 = epochDir.resolve(".e1.stage-deadbeef")
     Files.createFile(orphan1)
@@ -288,5 +288,30 @@ class GraftBsonStreamSpec extends SparkSpec {
       .schema("_id LONG").load(dir)
       .collect().map(_.getLong(0)).toSeq
     assert(got == Seq(1L), s"sweeps must not affect the data: $got")
+  }
+
+  test("streaming SINK: a second query into the same collection keeps its own epochs") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sq = spark.sqlContext
+    val dir = freshDir()
+    def run(ckpt: String, batches: Seq[Seq[(Long, String)]]): Unit = {
+      val in = MemoryStream[(Long, String)]
+      val q = in.toDF().toDF("_id", "s")
+        .writeStream.format("graftbson")
+        .option("path", dir).option("checkpointLocation", ckpt)
+        .start()
+      batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      q.stop()
+    }
+    // query A writes epochs 0 and 1; query B (another checkpoint) starts
+    // at epoch 0 again — a marker keyed by epoch alone took B's epoch 0
+    // for a replay of A's and dropped it
+    run(freshDir(), Seq(Seq((1L, "a")), Seq((2L, "b"))))
+    run(freshDir(), Seq(Seq((3L, "c"))))
+    val got = spark.read.format("graftbson")
+      .schema("_id LONG, s STRING").load(dir)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == Seq(1L, 2L, 3L), s"got $got")
   }
 }

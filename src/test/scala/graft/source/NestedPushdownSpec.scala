@@ -49,10 +49,12 @@ class NestedPushdownSpec extends SparkSpec {
     val dir = freshDir()
     seedRows(spark).write.format("graftbson")
       .option("id_column", "_id").mode("append").save(dir)
+    // Spark folds over the pruned scan, which decodes only the two
+    // subfields through the Proj trie
     val df = spark.read.format("graftbson").schema(readSchema).load(dir)
       .groupBy($"meta.lang").agg(count(lit(1)).as("n"), sum($"meta.score").as("s"))
     val plan = planOf(df)
-    assert(plan.contains("PushedGroupedAggregate: GROUP BY meta.lang"), plan)
+    assert(!plan.contains("PushedGroupedAggregate"), plan)
     val got = df.collect().map(r =>
       (if (r.isNullAt(0)) "NULL" else r.getString(0)) ->
         (r.getLong(1), r.getDouble(2))).toMap
@@ -176,8 +178,8 @@ class NestedPushdownSpec extends SparkSpec {
     val df = spark.read.format("graftbson").schema(readSchema).load(dir)
       .agg(min($"meta.score").as("mn"), max($"meta.score").as("mx"))
     val plan = planOf(df)
-    assert(plan.contains("PushedGroupedAggregate: GLOBAL [min(meta.score), max(meta.score)]"),
-      plan)
+    assert(!plan.contains("PushedGroupedAggregate") &&
+      plan.contains("ReadSchema: struct<meta:struct<score:double>>"), plan)
     val r = df.collect().head
     assert(r.getDouble(0) == 1.5 && r.getDouble(1) == 60.0, r.toString)
   }
@@ -241,7 +243,7 @@ class NestedPushdownSpec extends SparkSpec {
       .load(dir)
       .groupBy($"m.lang").agg(count(lit(1)).as("n"), sum($"m.score").as("s"))
     val plan = planOf(df)
-    assert(plan.contains("PushedGroupedAggregate: GROUP BY meta.lang"), plan)
+    assert(!plan.contains("PushedGroupedAggregate"), plan)
     val got = df.collect().map(r =>
       (if (r.isNullAt(0)) "NULL" else r.getString(0)) ->
         (r.getLong(1), r.getDouble(2))).toMap
@@ -313,7 +315,7 @@ class NestedPushdownSpec extends SparkSpec {
       .schema("_id LONG, meta STRUCT<lang: STRING, score: DOUBLE, big: STRING>")
       .load(dir)
       .groupBy($"meta.lang").agg(count(lit(1)).as("n"))
-    assert(planOf(df).contains("PushedGroupedAggregate"), planOf(df))
+    assert(!planOf(df).contains("PushedGroupedAggregate"), planOf(df))
     assert(df.collect().map(_.getLong(1)).sum == 40L)
   }
 }
