@@ -2,7 +2,7 @@ package graft.server
 
 import graft.bson._
 import graft.query.{BQuery, BQueryJson, Unwind}
-import graft.source.{FieldResolve, GraftScanBuilder, GraftTable, GroupAggParse, GroupedAgg, Planners, Pushdown, ReadModel, RowIteratorReader, SamplePush, ScanSpec, Transport}
+import graft.source.{FieldResolve, GraftScan, GraftScanBuilder, GraftTable, GroupAggParse, GroupedAgg, Planners, Pushdown, ReadModel, RowIteratorReader, SamplePush, ScanSpec, Transport}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -256,28 +256,48 @@ object ServerTransport extends Transport {
     * values. */
   override val evaluator: ReadModel.Evaluator = ReadModel.Stored
 
-  /** collStats per namespace — one bounded round-trip at plan time.
-    * Rows only when no query, limit, sample or unwind narrows or widens
+  /** Rows only when no query, limit, sample or unwind narrows or widens
     * the scan (collStats counts the whole collection; a sample keeps a
     * hash-dependent count). */
   override def stats(spec: ScanSpec, options: Map[String, String]): (Long, Option[Long]) = {
-    val stats = GraftServerSource.withClient(options) { (client, _) =>
-      GraftServerSource.nsList(options).map(n => client.collStats(n))
-    }
-    (stats.map(s => s.count * s.avgObjSizeBytes).sum,
-      if (spec.wholeTarget) Some(stats.map(_.count).sum) else None)
+    val (bytes, docs) = collStatsSum(options, GraftServerSource.nsList(options))
+    (bytes, if (spec.wholeTarget) Some(docs) else None)
   }
+
+  /** Stored bytes and docs summed over `nss`: one client, one bounded
+    * collStats round-trip per namespace at plan time. Sizes the plain
+    * and the joined scan. */
+  private[server] def collStatsSum(options: Map[String, String],
+      nss: Seq[String]): (Long, Long) =
+    GraftServerSource.withClient(options) { (client, _) =>
+      nss.map(client.collStats).foldLeft((0L, 0L)) { case ((bytes, docs), s) =>
+        (bytes + s.count * s.avgObjSizeBytes, docs + s.count) }
+    }
+
+  /** Key-range partitions of each of `nss` on one client, through the
+    * shared strategy chain at the `split_size` target (8 MB by default),
+    * pruned by the runtime IN-sets on `key` and, under `filter_empty`, by
+    * one `find(limit=1)` probe of `probe` per split. Splits the plain and
+    * the joined scan. */
+  private[server] def rangePartitions(options: Map[String, String], nss: Seq[String],
+      key: String, query: BQuery = BQuery.True, probe: BQuery = BQuery.True,
+      runtimeIn: Map[String, Seq[BsonValue]] = Map.empty): Array[InputPartition] =
+    GraftServerSource.withClient(options) { (client, _) =>
+      val target = options.get("split_size").map(_.toLong).getOrElse(8L * 1024 * 1024)
+      nss.flatMap { ns =>
+        val coll = new ServerCollection(client, ns)
+        var splits = coll.planSplits(key, target)
+        runtimeIn.get(key).foreach(vs => splits = Planners.pruneByValues(splits, vs))
+        if (options.get("filter_empty").exists(_.toBoolean) && probe != BQuery.True)
+          splits = Planners.pruneEmpty(splits, coll.stats(key), probe)
+        splits.map(s =>
+          GraftServerPartition(ns, s.range, s.preferredLocations, query): InputPartition)
+      }.toArray
+    }
 
   /** An unwound read makes no order claim. */
   override val sortSurvivesUnwind = false
   override val runtimeFiltersUnderUnwind = false
-
-  override def describeHead(spec: ScanSpec, options: Map[String, String]): String =
-    s"graftserver ns=${options.getOrElse("ns", "?")} query=${spec.query}"
-  override val describeSep = " "
-  override val describeTopNOrderBy = "ORDER BY "
-  override val describesOffset = true
-  override val describesUnwoundTails = true
 
   /** Driver-side planning: one bounded probe sequence through the shared
     * strategy chain (chunks → splitVector → sampled size bounds).
@@ -305,18 +325,7 @@ object ServerTransport extends Transport {
     // the whole range, the mode that makes an accepted OFFSET sound
     else if (spec.grouped.isDefined || spec.tailsPostUnwind ||
         options.get("splitter").contains("single")) nss.map(whole).toArray
-    else GraftServerSource.withClient(options) { (client, _) =>
-      val target = options.get("split_size").map(_.toLong).getOrElse(8L * 1024 * 1024)
-      nss.flatMap { ns =>
-        val coll = new ServerCollection(client, ns)
-        var splits = coll.planSplits(key, target)
-        runtimeIn.get(key).foreach(vs => splits = Planners.pruneByValues(splits, vs))
-        if (options.get("filter_empty").exists(_.toBoolean) && spec.query != BQuery.True)
-          splits = Planners.pruneEmpty(splits, coll.stats(key), spec.query)
-        splits.map(s =>
-          GraftServerPartition(ns, s.range, s.preferredLocations, query): InputPartition)
-      }.toArray
-    }
+    else rangePartitions(options, nss, key, query, spec.query, runtimeIn)
   }
 
   override def createReader(p: InputPartition, spec: ScanSpec,
@@ -825,57 +834,29 @@ final class GraftServerJoinScan(join: LookupJoin, schema: StructType,
   override def toBatch: Batch = this
 
   override def description(): String =
-    s"graftserver ns=${options.getOrElse("ns", "?")} query=${join.leftQuery}" +
-      locally {
-        val cc = join.leftComputed ++ join.stages.flatMap(_.rightComputed)
-        if (cc.isEmpty) ""
-        else s" PushedComputed: [${cc.map(_.describe).mkString(", ")}]"
-      } +
-      join.unwind.map(u => " " + u.describe(join.unwindPost)).getOrElse("") +
-      s" PushedJoin: ${join.stages.mkString(" THEN ")}" +
-      grouped.map(g => s" PushedGroupedAggregate: $g").getOrElse("") +
-      join.limit.map(n => s" PushedLimit: $n").getOrElse("") +
-      join.topN.map { case (spec, n) =>
-        val order = spec.map { case (c, d) =>
-          s"$c ${if (d) "DESC" else "ASC"}" }.mkString(", ")
-        s" PushedTopN: ORDER BY $order LIMIT $n"
-      }.getOrElse("") +
-      (if (samples.isEmpty) ""
-       else s" PushedSample: ${samples.mkString(", ")}") +
-      join.skip.map(n => s" PushedOffset: $n").getOrElse("")
+    GraftScan.describe(ServerTransport, options, join.leftQuery, readSchema(),
+      join.leftComputed ++ join.stages.flatMap(_.rightComputed), join.unwind,
+      join.unwindPost, Some(join.stages.mkString(" THEN ")), samples, grouped,
+      join.topN, join.limit, join.skip, unwoundTails = false)
 
   /** All sides' collStats — the joined size estimate is conservative
     * (inner joins usually shrink), but keeps a small joined scan
     * broadcast-able in an OUTER Spark join above it. */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val bytes = GraftServerSource.withClient(options) { (client, ns) =>
-      (ns +: join.stages.map(_.rightNs))
-        .map { n => val s = client.collStats(n); s.count * s.avgObjSizeBytes }
-        .sum
-    }
-    override def sizeInBytes(): java.util.OptionalLong = {
-      val frac = samples.map(sp => math.max(sp.upper - sp.lower, 0.0)).product
-      java.util.OptionalLong.of((bytes * frac).toLong)
-    }
-    override def numRows(): java.util.OptionalLong =
-      java.util.OptionalLong.empty()
-  }
+  override def estimateStatistics(): Statistics = GraftScan.statistics(samples)(
+    (ServerTransport.collStatsSum(options,
+      GraftServerSource.ns(options) +: join.stages.map(_.rightNs))._1, None))
 
+  /** Key-range splits of the driving collection, the plain scan's; ONE
+    * pipeline when the split range could not render exactly in its
+    * `$match` (storage not uniform), under `splitter=single`, or over a
+    * COMPUTED split key, which has no stored field to probe (r17). */
   override def planInputPartitions(): Array[InputPartition] = {
     val ns = GraftServerSource.ns(options)
     val key = options.getOrElse("key", "_id")
     if (!ReadModel.uniform(options) || options.get("splitter").contains("single") ||
-        // a COMPUTED split key has no stored field to probe (r17)
         join.leftComputed.exists(_.out == key))
-      return Array(GraftServerPartition(ns,
-        BQuery.KeyRange(key, None, None), Seq.empty))
-    GraftServerSource.withClient(options) { (client, _) =>
-      val target = options.get("split_size").map(_.toLong)
-        .getOrElse(8L * 1024 * 1024)
-      new ServerCollection(client, ns).planSplits(key, target)
-        .map(s => GraftServerPartition(ns, s.range,
-          s.preferredLocations): InputPartition).toArray
-    }
+      Array(GraftServerPartition(ns, BQuery.KeyRange(key, None, None), Seq.empty))
+    else ServerTransport.rangePartitions(options, Seq(ns), key)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

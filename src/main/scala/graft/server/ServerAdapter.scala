@@ -1011,7 +1011,7 @@ final class FakeServerClient(rootDir: Option[String] = None)
     try {
       encoded.foreach { case (idOpt, bytes) =>
         idOpt match {
-          case Some(id) if ids.contains(id) =>
+          case Some(id) if BsonCollection.idLookups(id).exists(ids.contains) =>
             if (ordered)
               throw new IllegalStateException(s"duplicate key _id=$id on insert")
             else errors += s"duplicate key _id=$id"

@@ -303,13 +303,6 @@ object FileTransport extends Transport {
   override val sortSurvivesUnwind = true
   override val runtimeFiltersUnderUnwind = true
 
-  override def describeHead(spec: ScanSpec, options: Map[String, String]): String =
-    s"GraftScan PushedQuery: ${spec.query}, ReadSchema: ${spec.readSchema.simpleString}"
-  override val describeSep = ", "
-  override val describeTopNOrderBy = ""
-  override val describesOffset = false
-  override val describesUnwoundTails = false
-
   private def pathOf(options: Map[String, String]): String =
     options.getOrElse("path", throw new IllegalArgumentException("path option required"))
   private def splitSizeOf(options: Map[String, String]): Long =

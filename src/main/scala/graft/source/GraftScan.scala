@@ -24,9 +24,10 @@ import scala.jdk.CollectionConverters._
   * collections (`graftserver`) share. A `Transport` supplies only what
   * really differs, as data: its names and metadata column, the
   * [[ReadModel]] evaluator its pushes run on, how its option-level
-  * query is gated, whether a query renders fully at the source, how it
-  * spells a plan, and its partition planning and readers. Shared code
-  * never asks which transport it serves.
+  * query is gated, whether a query renders fully at the source, and its
+  * partition planning and readers. Shared code never asks which
+  * transport it serves, and every scan spells its plan through
+  * [[GraftScan.describe]].
   */
 trait Transport extends Serializable {
   /** Format short name: the table-name prefix and error-message prefix. */
@@ -78,15 +79,6 @@ trait Transport extends Serializable {
   def sortSurvivesUnwind: Boolean
   /** Whether runtime IN-sets may narrow an unwound scan. */
   def runtimeFiltersUnderUnwind: Boolean
-  /** Plan spelling: the head naming target and query, the separator
-    * before each pushed part, the TopN order prefix, and the two parts
-    * only some plans show. */
-  def describeHead(spec: ScanSpec, options: Map[String, String]): String
-  def describeSep: String
-  def describeTopNOrderBy: String
-  def describesOffset: Boolean
-  def describesUnwoundTails: Boolean
-
   /** Partitions of a scan; `runtimeIn` = Spark's runtime IN-sets by doc field. */
   def planPartitions(spec: ScanSpec, options: Map[String, String],
       runtimeIn: Map[String, Seq[BsonValue]]): Array[InputPartition]
@@ -99,8 +91,6 @@ trait Transport extends Serializable {
 final case class TopN(keys: Seq[(String, Boolean, DataType)], n: Int) {
   /** (doc path, descending) per key — a cursor's compound sort. */
   def sortSpec: Seq[(String, Boolean)] = keys.map(k => (k._1, k._2))
-  override def toString: String =
-    keys.map { case (k, desc, _) => s"$k ${if (desc) "DESC" else "ASC"}" }.mkString(", ")
 }
 object TopN {
   /** The first `k` items of a STABLE sort under `cmp`, kept in a bounded
@@ -436,14 +426,8 @@ final class GraftScan(val spec: ScanSpec, options: Map[String, String],
     * targets (the stats role collstats plays in the reference's planning,
     * MongoSplitterFactory.java:66-83). A pushed sample scales it by its
     * window — the sampled side of a join should look as small as it is. */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val (bytes, rows) = transport.stats(spec, options)
-    override def sizeInBytes(): util.OptionalLong = util.OptionalLong.of(
-      spec.sample.map(sp => (bytes * math.max(sp.upper - sp.lower, 0.0)).toLong)
-        .getOrElse(bytes))
-    override def numRows(): util.OptionalLong =
-      rows.fold(util.OptionalLong.empty())(util.OptionalLong.of)
-  }
+  override def estimateStatistics(): Statistics =
+    GraftScan.statistics(spec.sample.toSeq)(transport.stats(spec, options))
 
   /** Report the per-partition cursor sort (`sort` option) to Catalyst so
     * a downstream `sortWithinPartitions` on the same key is elided — the
@@ -472,21 +456,11 @@ final class GraftScan(val spec: ScanSpec, options: Map[String, String],
       case _ => Array.empty
     }
 
-  override def description(): String = {
-    val sep = transport.describeSep
-    transport.describeHead(spec, options) +
-      (if (spec.computed.isEmpty) ""
-       else s"${sep}PushedComputed: [${spec.computed.map(_.describe).mkString(", ")}]") +
-      spec.grouped.map(g => s"${sep}PushedGroupedAggregate: $g").getOrElse("") +
-      spec.sample.map(sp => s"${sep}PushedSample: $sp").getOrElse("") +
-      spec.offset.filter(_ => transport.describesOffset)
-        .map(o => s"${sep}PushedOffset: $o").getOrElse("") +
-      spec.topN.map(t => s"${sep}PushedTopN: ${transport.describeTopNOrderBy}$t LIMIT ${t.n}")
-        .getOrElse("") +
-      spec.unwind.map(u => sep + u.describe(spec.unwindPost) +
-        (if (spec.tailsPostUnwind && transport.describesUnwoundTails) " UnwoundTails"
-         else "")).getOrElse("")
-  }
+  override def description(): String =
+    GraftScan.describe(transport, options, spec.query, spec.readSchema, spec.computed,
+      spec.unwind, spec.unwindPost, None, spec.sample.toSeq, spec.grouped,
+      spec.topN.map(t => (t.sortSpec, t.n.toLong)), spec.limit.map(_.toLong),
+      spec.offset.map(_.toLong), spec.tailsPostUnwind)
 
   override def planInputPartitions(): Array[InputPartition] =
     transport.planPartitions(spec, options, runtimeIn)
@@ -517,6 +491,52 @@ final class GraftScan(val spec: ScanSpec, options: Map[String, String],
       else spec.copy(required = spec.required.add(transport.metaCol, StringType,
         nullable = false), meta = true)
     transport.microBatchStream(streamed, options)
+  }
+}
+
+object GraftScan {
+  /** A scan's size estimate from `stats` (stored bytes and, when known
+    * exactly, rows), taken once, on first use; each pushed sample scales
+    * the bytes by its window. */
+  def statistics(samples: Seq[SamplePush])(stats: => (Long, Option[Long])): Statistics =
+    new Statistics {
+      private lazy val (bytes, rows) = stats
+      override def sizeInBytes(): util.OptionalLong = util.OptionalLong.of(
+        (bytes * samples.map(sp => math.max(sp.upper - sp.lower, 0.0)).product).toLong)
+      override def numRows(): util.OptionalLong =
+        rows.fold(util.OptionalLong.empty())(util.OptionalLong.of)
+    }
+
+  /** The one plan spelling of every graft scan, the plain scan of either
+    * transport and graftserver's joined scan alike: a head naming the
+    * transport, its target (`path=` / `ns=`; a `collections` scan lists
+    * its entries' paths), the pushed query and the read schema, then each
+    * pushed part that is present, once, in one fixed order. `join` is the
+    * joined scan's stage chain; `unwoundTails` marks LIMIT/TopN/OFFSET
+    * tails that count unwound rows ([[ScanSpec.tailsPostUnwind]]). */
+  def describe(transport: Transport, options: Map[String, String], query: BQuery,
+      readSchema: StructType, computed: Seq[ComputedCol], unwind: Option[Unwind],
+      unwindPost: BQuery, join: Option[String], samples: Seq[SamplePush],
+      grouped: Option[GroupedAgg], topN: Option[(Seq[(String, Boolean)], Long)],
+      limit: Option[Long], offset: Option[Long], unwoundTails: Boolean): String = {
+    val target = options.get("collections")
+      .map(MultiCollections.parse(_).map(_.path).mkString(","))
+      .getOrElse(options.getOrElse(transport.targetOption, "?"))
+    (Seq(s"${transport.name} ${transport.targetOption}=$target", s"PushedQuery: $query",
+        s"ReadSchema: ${readSchema.simpleString}") ++
+      Some(computed).filter(_.nonEmpty)
+        .map(cc => s"PushedComputed: [${cc.map(_.describe).mkString(", ")}]") ++
+      unwind.map(_.describe(unwindPost)) ++
+      join.map(j => s"PushedJoin: $j") ++
+      Some(samples).filter(_.nonEmpty).map(sp => s"PushedSample: ${sp.mkString(", ")}") ++
+      grouped.map(g => s"PushedGroupedAggregate: $g") ++
+      topN.map { case (keys, n) =>
+        val order = keys.map { case (k, desc) => s"$k ${if (desc) "DESC" else "ASC"}" }
+        s"PushedTopN: ORDER BY ${order.mkString(", ")} LIMIT $n"
+      } ++
+      limit.map(n => s"PushedLimit: $n") ++
+      offset.map(n => s"PushedOffset: $n") ++
+      Some("UnwoundTails").filter(_ => unwoundTails)).mkString(" ")
   }
 }
 

@@ -218,10 +218,11 @@ object BsonCollection {
 
   /** Map keys that could hold a doc whose `_id` EQUALS `v` under BSON
     * comparison semantics: numbers compare cross-width (BInt32(5) ==
-    * BInt64(5)), so a point lookup must probe every exactly-equal-valued
-    * width; non-numeric ids are exact.
+    * BInt64(5)), so a point lookup, and an insert's uniqueness check (a
+    * unique index compares numbers by value), must probe every
+    * exactly-equal-valued width; non-numeric ids are exact.
     */
-  private[store] def idLookups(v: BsonValue): Seq[BsonValue] = {
+  private[graft] def idLookups(v: BsonValue): Seq[BsonValue] = {
     val variants = v match {
       case BInt32(x) => Seq(BInt64(x.toLong), BDouble(x.toDouble))
       case BInt64(x) =>

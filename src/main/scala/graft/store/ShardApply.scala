@@ -450,7 +450,7 @@ object ShardApply {
       case InsertOne(doc) =>
         doc.get("_id") match {
           case Some(id) =>
-            if (byId.contains(id)) {
+            if (BsonCollection.idLookups(id).exists(byId.contains)) {
               if (ordered) throw new IllegalStateException(s"duplicate key _id=$id on insert")
               else errors += s"duplicate key _id=$id"
             } else {

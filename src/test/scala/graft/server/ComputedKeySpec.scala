@@ -197,7 +197,7 @@ class ComputedKeySpec extends SparkSpec {
     // the filter must NOT render into the find-land query (no $set
     // there) — it re-checks above the scan over the injected value
     assert(plan.contains("PushedComputed") && plan.contains("Filter"), plan)
-    assert(!plan.contains("query=Eq(bkt"), plan)
+    assert(!plan.contains("PushedQuery: Eq(bkt"), plan)
     val le = localCopy(e(dir))
     val exp = le.withColumn("bkt", pmod($"v", lit(7L)))
       .filter($"bkt" === 3L).select($"_id", $"bkt")

@@ -91,7 +91,7 @@ class UnwindPushdownSpec extends SparkSpec {
     assert(plan.contains("PushedUnwind: tags"), plan)
     assert(plan.contains("PostUnwindMatch:"),
       s"element filter must become the post-unwind match:\n$plan")
-    assert(plan.contains("query=") && plan.contains("Exists(v,true)"),
+    assert(plan.contains("PushedQuery:") && plan.contains("Exists(v,true)"),
       s"parent filter must reach the cursor query:\n$plan")
     assert(f.collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 5L))
 

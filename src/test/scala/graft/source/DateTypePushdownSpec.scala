@@ -51,7 +51,7 @@ class DateTypePushdownSpec extends SparkSpec {
       r0.getDate(1).toString == "2024-01-09")
     // date TopN (ties on day broken by _id ASC keep it deterministic)
     val top = rd.load(dir).orderBy($"day".desc, $"_id".asc).limit(4).select($"_id")
-    assert(planOf(top).contains("PushedTopN: day DESC"), planOf(top))
+    assert(planOf(top).contains("PushedTopN: ORDER BY day DESC"), planOf(top))
     assert(top.collect().map(_.getLong(0)).toSeq == Seq(8L, 17L, 26L, 7L))
   }
 

@@ -142,7 +142,7 @@ class FilterDifferentialSpec extends SparkSpec {
       assert(multiset(file, f) == expected, s"case $k graftbson: $f")
       assert(multiset(server, f) == expected, s"case $k graftserver: $f")
       val plan = file.filter(f).queryExecution.executedPlan.toString
-      if (!plan.contains("PushedQuery: True,")) pushedCases += 1
+      if (!plan.contains("PushedQuery: True ReadSchema:")) pushedCases += 1
     }
     // the generated filters must actually reach the pushed query
     assert(pushedCases >= Cases / 4, s"only $pushedCases of $Cases cases pushed a filter")

@@ -131,7 +131,7 @@ class NestedPushdownSpec extends SparkSpec {
       .orderBy($"meta.score".desc).limit(5)
       .select($"_id")
     val plan = planOf(df)
-    assert(plan.contains("PushedTopN: meta.score DESC"), plan)
+    assert(plan.contains("PushedTopN: ORDER BY meta.score DESC"), plan)
     val got = df.collect().map(_.getLong(0)).toSeq
     assert(got == Seq(40L, 39L, 38L, 37L, 36L), s"got $got")
   }

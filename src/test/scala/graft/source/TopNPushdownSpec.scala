@@ -26,7 +26,7 @@ class TopNPushdownSpec extends SparkSpec {
       .write.format("graftbson").option("shards", "4").mode("append").save(dir)
     val df = spark.read.format("graftbson").load(dir)
     val q = df.orderBy($"v").limit(7).select($"_id", $"v")
-    assert(planOf(q).contains("PushedTopN: v ASC LIMIT 7"), planOf(q))
+    assert(planOf(q).contains("PushedTopN: ORDER BY v ASC LIMIT 7"), planOf(q))
 
     val expected = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
       .sortBy(_._2).take(7).toSeq
@@ -44,7 +44,7 @@ class TopNPushdownSpec extends SparkSpec {
 
     // DESC selects by the read value with nulls last — Spark's default
     val desc = df.orderBy($"v".desc, $"_id".desc).limit(5)
-    assert(planOf(desc).contains("PushedTopN: v DESC, _id DESC LIMIT 5"),
+    assert(planOf(desc).contains("PushedTopN: ORDER BY v DESC, _id DESC LIMIT 5"),
       planOf(desc))
     assert(desc.collect().map(_.getLong(0)).toSeq ===
       (0L until 500L).map(i => (i, (i % 13).toInt))
@@ -53,11 +53,11 @@ class TopNPushdownSpec extends SparkSpec {
     // string order: the heap compares the strings Spark reads, so a
     // string key pushes alone and in a compound order
     val str = df.orderBy($"s", $"_id").limit(5)
-    assert(planOf(str).contains("PushedTopN: s ASC, _id ASC LIMIT 5"), planOf(str))
+    assert(planOf(str).contains("PushedTopN: ORDER BY s ASC, _id ASC LIMIT 5"), planOf(str))
     assert(str.collect().map(_.getLong(0)).toSeq ===
       (0L until 500L).map(i => (i, s"s${i % 97}")).sortBy(_.swap).take(5).map(_._1))
     val mixed = df.orderBy($"v", $"s", $"_id").limit(5)
-    assert(planOf(mixed).contains("PushedTopN: v ASC, s ASC, _id ASC LIMIT 5"),
+    assert(planOf(mixed).contains("PushedTopN: ORDER BY v ASC, s ASC, _id ASC LIMIT 5"),
       planOf(mixed))
     assert(mixed.collect().map(_.getLong(0)).toSeq ===
       (0L until 500L).map(i => (i, (i % 13).toInt, s"s${i % 97}"))
@@ -86,7 +86,7 @@ class TopNPushdownSpec extends SparkSpec {
     // a DESC (nulls last), b ASC (nulls first): a=20 first; within a=10
     // the missing-b row leads
     val q = df.orderBy($"a".desc, $"b".asc).limit(4).select($"_id")
-    assert(planOf(q).contains("PushedTopN: a DESC, b ASC LIMIT 4"), planOf(q))
+    assert(planOf(q).contains("PushedTopN: ORDER BY a DESC, b ASC LIMIT 4"), planOf(q))
     assert(q.collect().map(_.getLong(0)).toSeq === Seq(4L, 3L, 2L, 1L))
   }
 
@@ -114,7 +114,7 @@ class TopNPushdownSpec extends SparkSpec {
       spark.sparkContext.parallelize(df.collect().toSeq), df.schema)
     for (o <- Seq($"s".asc, $"s".desc)) {
       val q = df.orderBy(o).limit(6)
-      assert(planOf(q).contains("PushedTopN: s"), planOf(q))
+      assert(planOf(q).contains("PushedTopN: ORDER BY s"), planOf(q))
       assert(q.collect().toSeq == local.orderBy(o).limit(6).collect().toSeq, o.toString)
     }
   }

@@ -194,8 +194,8 @@ class UnwindDifferentialSpec extends SparkSpec {
   private def multiset(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   /** Every graft plan must carry the pushed unwind; counts the plans
-    * that reached the server's pipeline forms (graftbson pushes no
-    * aggregate). */
+    * with a pushed aggregate (graftbson pushes none) and those whose
+    * LIMIT/TopN tail counts unwound rows. */
   private final class PlanTally {
     var grouped = 0
     var tails = 0
@@ -228,6 +228,7 @@ class UnwindDifferentialSpec extends SparkSpec {
     assert(serverTally.grouped > 0 && serverTally.tails > 0,
       s"server pipelines not reached: ${serverTally.grouped} grouped, ${serverTally.tails} tails")
     assert(fileTally.grouped == 0, s"${fileTally.grouped} graftbson aggregates pushed")
+    assert(fileTally.tails > 0, "no graftbson unwound LIMIT/TopN tail pushed")
   }
 
   test("raw BSON docs (mixed numeric storage, scalars at the array) agree across transports") {

@@ -129,7 +129,7 @@ class UnwindFileSpec extends SparkSpec {
       top.queryExecution.executedPlan.toString)
     assert(top.collect().map(_.getLong(0)).toSeq == Seq(5L, 5L))
     val topS = e.orderBy($"tag".asc).limit(2)
-    assert(topS.queryExecution.executedPlan.toString.contains("PushedTopN: tags ASC LIMIT 2"),
+    assert(topS.queryExecution.executedPlan.toString.contains("PushedTopN: ORDER BY tags ASC LIMIT 2"),
       topS.queryExecution.executedPlan.toString)
     assert(topS.collect().map(_.getString(1)).toSeq == Seq("x", "x"))
   }

@@ -22,11 +22,22 @@ dropped. Then, in every line:
 
 Everything else, scan `description()` strings included, must match byte for
 byte. Prints one unified diff per query that differs, each followed by the
-query's exchange counts on both sides when they differ; then one line per
-side with its exchange counts over all queries (range, hash and single
-partitioning shuffles, broadcasts; an executed dump counts its final plan
-only); then a summary line. Exits 0 when every query is identical, 1
-otherwise.
+query's exchange counts on both sides when they differ, and its pushed-part
+counts when they differ; then one line per side with its exchange counts
+over all queries (range, hash and single partitioning shuffles, broadcasts;
+an executed dump counts its final plan only), one line per side with its
+pushed-part counts, and a summary line. Exits 0 when every query is
+identical, 1 otherwise.
+
+A pushed part is a `Pushed*:` label other than the `PushedQuery:` head, or
+the `UnwoundTails` marker, counted over every graft scan description line
+(either spelling: `graftbson path=...`, `graftserver ns=...`, and the older
+`GraftScan PushedQuery: ...`). A change that only re-spells descriptions
+shows identical part counts.
+
+Only dumps taken with SPARK_GRAFT_PLAN_EXEC=0 repeat from run to run. An
+executed dump prints the final adaptive plan, whose broadcast build sides
+can differ between two runs of the same code.
 """
 import difflib
 import re
@@ -45,6 +56,8 @@ EXCHANGE_NODE = re.compile(r"\b(Exchange|BroadcastExchange) \((\d+)\)")
 DETAIL_HEAD = re.compile(r"^\((\d+)\) ")
 KINDS = (("range", "rangepartitioning"), ("hash", "hashpartitioning"),
          ("single", "SinglePartition"))
+DESCRIPTION = re.compile(r"^(GraftScan PushedQuery: |graft\w+ (path|ns)=)")
+PART = re.compile(r"\b(Pushed(?!Query:)[A-Z]\w*):|\b(UnwoundTails)\b")
 
 
 def normalize(line):
@@ -105,6 +118,16 @@ def exchanges(lines):
     return counts
 
 
+def parts(lines):
+    """Pushed-part counts of one query's graft scan descriptions."""
+    counts = {}
+    for line in lines:
+        if DESCRIPTION.match(line):
+            for pushed, tails in PART.findall(line):
+                counts[pushed or tails] = counts.get(pushed or tails, 0) + 1
+    return counts
+
+
 def show(counts):
     return " ".join(f"{k}={v}" for k, v in counts.items())
 
@@ -128,12 +151,22 @@ def main(argv):
             b, a = exchanges(before[name]), exchanges(after[name])
             if b != a:
                 print(f"{name}: exchanges {show(b)} -> {show(a)}")
+            b, a = parts(before[name]), parts(after[name])
+            if b != a:
+                print(f"{name}: pushed parts {show(dict(sorted(b.items())))} -> "
+                      f"{show(dict(sorted(a.items())))}")
     for path, side in ((argv[1], before), (argv[2], after)):
         total = dict.fromkeys(exchanges([]), 0)
         for lines in side.values():
             for k, v in exchanges(lines).items():
                 total[k] += v
         print(f"exchanges {path}: {show(total)}")
+    for path, side in ((argv[1], before), (argv[2], after)):
+        total = {}
+        for lines in side.values():
+            for k, v in parts(lines).items():
+                total[k] = total.get(k, 0) + v
+        print(f"pushed parts {path}: {show(dict(sorted(total.items())))}")
     total = len(set(before) | set(after))
     print(f"plan_diff: {total - len(differing)}/{total} queries identical"
           + (f"; differ: {', '.join(differing)}" if differing else ""))
