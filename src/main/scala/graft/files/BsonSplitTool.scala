@@ -1,11 +1,12 @@
 package graft.files
 
 import java.nio.file.{Files, Paths}
-import java.util.zip.GZIPOutputStream
 
 /** Standalone pre-split tool: cut a BSON dump into per-split files at doc
   * boundaries, optionally gzip-compressing each — the CLI surface of the
   * reference's BSONSplitter Tool (core/.../splitter/BSONSplitter.run:477-585).
+  * Documents are copied as their checked frames, one at a time, never
+  * decoded.
   *
   * Usage: BsonSplitTool <input.bson> <outDir> [targetSplitBytes] [gzip]
   */
@@ -23,31 +24,28 @@ object BsonSplitTool {
   def run(input: String, outDir: String, targetSplitBytes: Long, gzip: Boolean): Int = {
     Files.createDirectories(Paths.get(outDir))
     val name = Paths.get(input).getFileName.toString.stripSuffix(".bson")
-    var part = 0
-    var docs = BsonFiles.readAll(input)
-    val buffer = new scala.collection.mutable.ArrayBuffer[graft.bson.BDoc]()
+    var parts = 0
+    var part: BsonFiles.Appender = null
     var bytes = 0L
-    def flush(): Unit = if (buffer.nonEmpty) {
-      val path = f"$outDir/$name-part-$part%05d.bson"
-      BsonFiles.write(path, buffer.iterator)
-      if (gzip) {
-        val gz = new GZIPOutputStream(Files.newOutputStream(Paths.get(path + ".gz")))
-        try gz.write(Files.readAllBytes(Paths.get(path))) finally gz.close()
-        Files.delete(Paths.get(path))
-        val side = Paths.get(path).resolveSibling("." + Paths.get(path).getFileName + ".splits")
-        Files.deleteIfExists(side)
+    val in = BsonFiles.frames(input, 0L)
+    try {
+      var frame = in.nextFrame()
+      while (frame != null) {
+        if (part != null && bytes + frame.length > targetSplitBytes) { part.close(); part = null }
+        if (part == null) {
+          part = new BsonFiles.Appender(
+            f"$outDir/$name-part-$parts%05d.bson" + (if (gzip) ".gz" else ""))
+          parts += 1
+          bytes = 0L
+        }
+        part.appendFrame(frame)
+        bytes += frame.length
+        frame = in.nextFrame()
       }
-      part += 1
-      buffer.clear()
-      bytes = 0L
+    } finally {
+      in.close()
+      if (part != null) part.close()
     }
-    docs.foreach { d =>
-      val enc = graft.bson.BsonCodec.encode(d)
-      if (bytes + enc.length > targetSplitBytes && buffer.nonEmpty) flush()
-      buffer += d
-      bytes += enc.length
-    }
-    flush()
-    part
+    parts
   }
 }

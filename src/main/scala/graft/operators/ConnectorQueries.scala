@@ -170,7 +170,7 @@ object ConnectorQueries {
     // A global aggregate over a BSON dump: graftbson has no `$group` to
     // push to, so Spark's partial and final aggregates fold the pruned
     // scan (a projected decode of the three columns). Only a bare
-    // COUNT(*) pushes, read from the .splits side files with zero body
+    // COUNT(*) pushes, read from the dumps' side files with zero body
     // IO (AggPushdownSpec pins both plan shapes).
     CatalogQuery(
       "q58_agg_pushdown",

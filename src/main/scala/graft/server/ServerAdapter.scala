@@ -1024,10 +1024,9 @@ final class FakeServerClient(rootDir: Option[String] = None)
     } finally {
       out.close()
       known.fileBytes = fileSize
-      // the .splits side file (written by staged applies) no longer covers
-      // the appended tail — drop it; readers fall back to header walks
-      F.deleteIfExists(
-        dataPath.resolveSibling("." + dataPath.getFileName + ".splits"))
+      // the side file (written by staged applies) no longer covers the
+      // appended tail — drop it; readers fall back to header walks
+      F.deleteIfExists(graft.files.BsonFiles.sideFile(dataPath))
     }
     BulkResult(inserted, 0, 0, 0, errors.result())
   }

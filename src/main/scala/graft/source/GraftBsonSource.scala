@@ -53,7 +53,7 @@ class GraftBsonSource extends TableProvider with DataSourceRegister {
     // collection. Head-biased sampling mis-infers any field that only
     // appears later (schema drift). Budget is spread over files by size;
     // within a file, docs are decoded at evenly spaced offsets snapped to
-    // doc boundaries by the .splits/resync machinery. Compressed files
+    // doc boundaries by the side-file/resync machinery. Compressed files
     // (unseekable) fall back to head sampling of their share.
     val budget = 1000
     val sizes = files.map(f => f -> Files.size(Paths.get(f)))
@@ -71,7 +71,7 @@ class GraftBsonSource extends TableProvider with DataSourceRegister {
         // ONE boundary pass (side file or sequential header skim), then
         // decodes at evenly spaced known offsets — never a random resync
         // walk per sample (O(samples x docs) on files without a side file)
-        val offs = BsonFiles.docOffsets(f)
+        val offs = BsonFiles.layout(f).offsets
         if (offs.size >= want) {
           (0 until want)
             .map(k => offs((k.toLong * offs.size / want).toInt.min(offs.size - 1)))
@@ -585,7 +585,7 @@ object RuntimeFilters {
   * planners issue O(#splits) server commands: splitVector / $sample /
   * collstats, not a full scan). Sources of cheap truth, in order:
   *
-  *  - the `.splits` side file (doc-boundary offsets every 64 docs) gives
+  *  - the side file (doc-boundary offsets every 64 docs) gives
   *    count and sample positions at zero data IO;
   *  - without it, one header-only walk reads 4 bytes per doc (seeking over
   *    bodies), still a tiny fraction of the file;
@@ -613,91 +613,16 @@ final class FileStats(path: String, key: String) extends Planners.CollectionStat
   /** Total bytes of the data file this provider actually read. */
   def bytesTouched: Long = _bytesTouched
 
-  /** (stride, doc-start offsets of every stride-th doc). The side file's
-    * stride is not recorded in it, so it is DERIVED by header-walking the
-    * first segment (bounded: exactly stride headers) — a writer using a
-    * non-default splitsEvery must not silently halve/double the count.
-    */
-  private lazy val bounds: (Int, Vector[Long]) =
-    BsonFiles.readSplitsFile(path) match {
-      case Some(offs) if offs.size >= 2 =>
-        val stride = countDocsBetween(offs(0), offs(1))
-        (stride, offs)
-      case Some(offs) if offs.nonEmpty => (64, offs) // single segment: walk covers it
-      case _ => (1, headerWalk(0L, Long.MaxValue))
-    }
-
-  /** Number of docs in [from, to) by header walk (4 bytes per doc).
-    * Buffered skim (read 4-byte length, skip payload) — the former
-    * per-document seek+read pair cost two syscalls per doc; the
-    * `_bytesTouched` accounting (4 logical bytes per header) is
-    * unchanged, so planning-IO gates still see the same number. */
-  private def countDocsBetween(from: Long, to: Long): Int = {
-    val fin = new java.io.FileInputStream(path)
-    try {
-      fin.getChannel.position(from)
-      val in = new java.io.BufferedInputStream(fin, 1 << 20)
-      val lenBuf = new Array[Byte](4)
-      var pos = from
-      var n = 0
-      while (pos < to) {
-        if (in.readNBytes(lenBuf, 0, 4) < 4)
-          throw new IllegalStateException(s"corrupt BSON doc header at $pos in $path")
-        _bytesTouched += 4
-        val len = (lenBuf(0) & 0xff) | ((lenBuf(1) & 0xff) << 8) |
-          ((lenBuf(2) & 0xff) << 16) | ((lenBuf(3) & 0xff) << 24)
-        require(len >= BsonFiles.MinDocSize && len <= BsonFiles.MaxDocSize &&
-          pos + len <= fileLen,
-          s"corrupt BSON doc header at $pos in $path (len=$len)")
-        in.skipNBytes(len - 4)
-        pos += len
-        n += 1
-      }
-      n
-    } finally fin.close()
+  /** The boundary index and doc count ([[BsonFiles.layout]]): the side
+    * file plus two bounded header walks (4 bytes per header), or one
+    * header walk; a compressed dump is streamed once. */
+  private lazy val layout: BsonFiles.Layout = {
+    val l = BsonFiles.layout(path)
+    _bytesTouched += (if (compressed) fileLen else 4 * l.headersRead)
+    l
   }
 
-  /** Doc-start offsets from `from`, reading ONLY the 4-byte length
-    * headers — buffered skim like [[countDocsBetween]]. */
-  private def headerWalk(from: Long, maxDocs: Long): Vector[Long] = {
-    val out = Vector.newBuilder[Long]
-    val fin = new java.io.FileInputStream(path)
-    try {
-      fin.getChannel.position(from)
-      val in = new java.io.BufferedInputStream(fin, 1 << 20)
-      val lenBuf = new Array[Byte](4)
-      var pos = from
-      var n = 0L
-      while (pos < fileLen && n < maxDocs) {
-        if (in.readNBytes(lenBuf, 0, 4) < 4)
-          throw new IllegalStateException(s"corrupt BSON doc header at $pos in $path")
-        _bytesTouched += 4
-        out += pos
-        val len = (lenBuf(0) & 0xff) | ((lenBuf(1) & 0xff) << 8) |
-          ((lenBuf(2) & 0xff) << 16) | ((lenBuf(3) & 0xff) << 24)
-        // same validation as BsonFiles.walkToBoundary — a stale side file
-        // landing mid-document must fail, not hang on len == 0
-        require(len >= BsonFiles.MinDocSize && len <= BsonFiles.MaxDocSize &&
-          pos + len <= fileLen,
-          s"corrupt BSON doc header at $pos in $path (len=$len)")
-        in.skipNBytes(len - 4)
-        pos += len
-        n += 1
-      }
-    } finally fin.close()
-    out.result()
-  }
-
-  override lazy val count: Long =
-    if (compressed) { // no random access into gzip: one streaming pass
-      _bytesTouched += fileLen
-      val it = BsonFiles.readAll(path)
-      try it.size.toLong finally it.close()
-    } else bounds match {
-      case (1, offs) => offs.size.toLong
-      case (stride, offs) =>
-        (offs.size - 1).toLong * stride + headerWalk(offs.last, Long.MaxValue).size
-    }
+  override lazy val count: Long = layout.count
 
   override def avgObjSizeBytes: Long =
     if (count == 0) 0L else math.max(1L, fileLen / count)
@@ -709,27 +634,14 @@ final class FileStats(path: String, key: String) extends Planners.CollectionStat
       val step = math.max(1, all.size / n)
       all.grouped(step).map(_.head).take(n).toSeq
     } else {
-      val (_, offs) = bounds
+      val offs = layout.offsets
       val step = math.max(1, offs.size / n)
-      val picks = offs.grouped(step).map(_.head).take(n)
-      val raf = new java.io.RandomAccessFile(path, "r")
-      val keyHead = key.split('.').head
-      try {
-        picks.flatMap { pos =>
-          raf.seek(pos)
-          val lenBuf = new Array[Byte](4)
-          raf.readFully(lenBuf)
-          val len = java.nio.ByteBuffer.wrap(lenBuf)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-          val bytes = new Array[Byte](len)
-          raf.seek(pos)
-          raf.readFully(bytes)
-          _bytesTouched += len + 4
-          BsonCodec.readDocProjected(
-            java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN),
-            BsonCodec.Proj.fromPaths(Seq(key))).getPath(key)
-        }.toVector.sorted(BsonOrdering)
-      } finally raf.close()
+      val proj = BsonCodec.Proj.fromPaths(Seq(key))
+      offs.grouped(step).map(_.head).take(n).flatMap { pos =>
+        val frame = BsonFiles.frameAt(path, pos)
+        _bytesTouched += frame.length + 4
+        BsonFiles.decode(frame, proj).getPath(key)
+      }.toVector.sorted(BsonOrdering)
     }
 
   /** Streaming projected key scan (paginating/pruning probes only). */
@@ -791,13 +703,13 @@ final case class GraftInputPartition(path: String, start: Long, end: Long,
   * is the empty-collection sentinel, which counts 0. */
 final case class CountPartition(path: String) extends InputPartition
 
-/** A bare COUNT(*) over one file: its stored doc count ([[FileStats]]:
-  * the `.splits` side file or a header walk) in every COUNT(*) slot of
-  * one partial row, with no document body read. */
+/** A bare COUNT(*) over one file: its stored doc count
+  * ([[BsonFiles.countDocs]]: the side file or a header walk) in every
+  * COUNT(*) slot of one partial row, with no document body read. */
 final class CountPartitionReader(p: CountPartition, spec: ScanSpec)
     extends RowIteratorReader {
   override protected val rows: Iterator[InternalRow] = Iterator.single {
-    val n = if (p.path.isEmpty) 0L else new FileStats(p.path, "_id").count
+    val n = if (p.path.isEmpty) 0L else BsonFiles.countDocs(p.path)
     InternalRow.fromSeq(Seq.fill(spec.grouped.get.items.size)(n))
   }
   override def close(): Unit = ()
@@ -1302,8 +1214,7 @@ final class GraftDataWriter(partitionId: Int, taskId: Long,
     appenders.keysIterator.foreach { k =>
       val tmp = tmpFile(k)
       val seg = segFile(k)
-      Files.deleteIfExists(
-        tmp.resolveSibling("." + tmp.getFileName + ".splits"))
+      Files.deleteIfExists(BsonFiles.sideFile(tmp))
       try Files.move(tmp, seg, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch {
         case _: java.nio.file.AtomicMoveNotSupportedException =>
@@ -1317,10 +1228,7 @@ final class GraftDataWriter(partitionId: Int, taskId: Long,
   override def abort(): Unit = {
     if (!closed) { appenders.valuesIterator.foreach(_.close()); closed = true }
     appenders.keysIterator.foreach { k =>
-      val tmp = tmpFile(k)
-      Files.deleteIfExists(tmp)
-      Files.deleteIfExists(
-        tmp.resolveSibling("." + tmp.getFileName + ".splits"))
+      BsonFiles.deleteWithSideFile(tmpFile(k))
     }
   }
 

@@ -84,8 +84,9 @@ final class BsonCollection(val dir: String) {
       .flatMap(p => BsonFiles.readRange(p.toString, 0L,
         Files.size(p), fields))
 
-  /** Total stored bytes + doc count from ONE header skim per shard (file
-    * size IS the sum of encoded doc lengths) — no decode, no re-encode.
+  /** Total stored bytes + doc count ([[BsonFiles.countDocs]]: side file
+    * and header walks, per shard; file size IS the sum of encoded doc
+    * lengths) — no decode, no re-encode.
     */
   def sizeStats(): (Long, Long) = {
     var bytes = 0L
@@ -103,10 +104,7 @@ final class BsonCollection(val dir: String) {
     * (truncate-for-overwrite semantics — the rewrite re-declares layout).
     */
   def truncate(): Unit = {
-    shardPaths.foreach { p =>
-      Files.deleteIfExists(p)
-      Files.deleteIfExists(p.resolveSibling("." + p.getFileName + ".splits"))
-    }
+    shardPaths.foreach(BsonFiles.deleteWithSideFile)
     Files.deleteIfExists(metaPath)
   }
 

@@ -145,19 +145,14 @@ object ShardApply {
     Staged(t.shard, t.shardFile, staged.toString, res)
   }
 
-  /** Promote a staged shard file (and its .splits side file) over the
-    * live shard — metadata-only renames, run by the coordinator once
-    * every shard's apply has succeeded.
+  /** Promote a staged shard file (and its side file) over the live
+    * shard — metadata-only renames, run by the coordinator once every
+    * shard's apply has succeeded.
     */
   def promote(st: Staged): Unit = {
-    val staged = Paths.get(st.stagedFile)
-    val dataPath = Paths.get(st.shardFile)
-    val stagedSide = staged.resolveSibling("." + staged.getFileName + ".splits")
-    val side = dataPath.resolveSibling("." + dataPath.getFileName + ".splits")
-    Files.move(staged, dataPath, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(stagedSide))
-      Files.move(stagedSide, side, StandardCopyOption.REPLACE_EXISTING)
+    Files.move(Paths.get(st.stagedFile), Paths.get(st.shardFile),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    moveOrphanedSideFile(st.shardFile, st.stagedFile)
   }
 
   /** Crash-safe promote of a whole job: write the `_promote.json`
@@ -191,18 +186,15 @@ object ShardApply {
     Files.deleteIfExists(manifest)
   }
 
-  /** Complete the side-file half of a promote whose data rename already
-    * ran (crash or race between the two renames): move the staged
-    * `.splits` into place if it still exists. Shared by the coordinator's
-    * race tolerance and the recoverer.
+  /** The side-file half of a promote, run after its data rename (by
+    * [[promote]] itself, or after a crash or race between the two
+    * renames): move the staged side file into place if it still exists.
     */
   private def moveOrphanedSideFile(dataFile: String, stageFile: String): Unit = {
-    val stage = Paths.get(stageFile)
-    val stagedSide = stage.resolveSibling("." + stage.getFileName + ".splits")
-    val dataPath = Paths.get(dataFile)
-    val side = dataPath.resolveSibling("." + dataPath.getFileName + ".splits")
+    val stagedSide = BsonFiles.sideFile(Paths.get(stageFile))
     if (Files.exists(stagedSide))
-      try Files.move(stagedSide, side, StandardCopyOption.REPLACE_EXISTING)
+      try Files.move(stagedSide, BsonFiles.sideFile(Paths.get(dataFile)),
+        StandardCopyOption.REPLACE_EXISTING)
       catch { case _: java.nio.file.NoSuchFileException => () }
   }
 
@@ -250,7 +242,7 @@ object ShardApply {
   /** Roll an interrupted promote forward. For each manifest entry: a
     * still-existing stage file means its rename never ran — complete it;
     * a missing stage file means that shard already promoted (the rename
-    * is atomic, there is no third state). A staged `.splits` side file
+    * is atomic, there is no third state). A staged side file
     * surviving alone (crash between the data and side renames) is also
     * moved into place. Idempotent, and safe under concurrent recovery: a
     * lost race on any rename means another recoverer just promoted that
@@ -360,9 +352,8 @@ object ShardApply {
         val it = stream.iterator()
         while (it.hasNext) {
           val f = it.next()
-          val n = f.getFileName.toString
-          if (n.startsWith(s".apply-$jobTag-") ||
-              n.startsWith(s"..apply-$jobTag-")) // stage .splits side files
+          // a stage file or its side file
+          if (BsonFiles.dataFileName(f.getFileName.toString).startsWith(s".apply-$jobTag-"))
             Files.deleteIfExists(f)
         }
       } finally stream.close()
@@ -415,14 +406,11 @@ object ShardApply {
     dataPath.resolveSibling(
       s".apply-local-${stageCounter.incrementAndGet()}-${dataPath.getFileName}")
 
-  /** Delete a stage file and its .splits side file. */
-  def discardStage(staged: Path): Unit = {
-    Files.deleteIfExists(staged)
-    Files.deleteIfExists(staged.resolveSibling("." + staged.getFileName + ".splits"))
-  }
+  /** Delete a stage file and its side file. */
+  def discardStage(staged: Path): Unit = BsonFiles.deleteWithSideFile(staged)
 
   /** The core apply: read the base shard, fold the models, write the new
-    * contents to `staged` (plus its .splits side file) WITHOUT touching
+    * contents to `staged` (plus its side file) WITHOUT touching
     * the base. On any thrown error the partial stage file is deleted.
     */
   def applyToStage(dataPath: Path, staged: Path, models: Iterator[WriteModel],
