@@ -71,8 +71,8 @@ object GraftConf {
       .config("spark.sql.files.openCostInBytes", ScanOpenCostBytes.toString)
       .config(JoinPushdownConf, "true")
       .config(CodegenCacheConf, CodegenCacheEntries.toString)
-      // the engine's optimizer rules + SQL functions (r14: includes
-      // ResidualJoinHoist, which must run in the operator-optimization
+      // the engine's optimizer rules + SQL functions (includes
+      // PrepareJoinLegs, which must run in the operator-optimization
       // batch — experimental.extraOptimizations would be too late, it
       // executes after the V2 pushdown)
       .config("spark.sql.extensions", classOf[graft.GraftExtensions].getName)

@@ -14,20 +14,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.ObjectIdRangeRule)
-    // residual-tolerant join pushdown: hoists untranslatable predicates
-    // above a pushable graftserver equi-join (runs in the operator
-    // optimization batch, BEFORE the early-scan pushdown that needs the
-    // join inputs to be bare scans)
-    ext.injectOptimizerRule(_ => graft.plans.ResidualJoinHoist)
-    // rename-only Projects inside a pushable join's legs pull above the
-    // join (Spark's pushDownJoin needs attribute-only leg projections —
-    // a pre-join select(as(...)) would silently demote the pushed join)
-    ext.injectOptimizerRule(_ => graft.plans.AliasPullup)
-    // nested ORDER BY / filter keys over a pushable join: absorb the
-    // extraction Project NestedColumnAliasing builds into the relation
-    // as a column_mapping-derived flat column, keeping the join inputs
-    // attribute-only (pushable)
-    ext.injectOptimizerRule(_ => graft.plans.NestedExtractRelocate)
+    // the legs of a join of graftserver relations on one connection
+    // (graft.server.JoinPush) are made bare for Spark's pushDownJoin, in
+    // the operator optimization batch, BEFORE the early-scan pushdown:
+    // untranslatable predicates hoist above the join, rename-only
+    // Projects pull above it, and nested-extraction Projects absorb into
+    // the relation as column_mapping-derived flat columns
+    ext.injectOptimizerRule(_ => graft.plans.PrepareJoinLegs)
     // pmod / % bin expressions over a graftserver column absorb into the
     // relation as a derived `$set` column (computed_columns), so
     // derived-bin group keys fold server-side and derived-bin join keys

@@ -3,10 +3,9 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Optimizer rule (r15): pull RENAME-only Projects out of a pushable
-  * join's legs. Spark 4.1's `V2ScanRelationPushDown.pushDownJoin` only
+/** The second rewrite of [[PrepareJoinLegs]] (r15): pull RENAME-only
+  * Projects out of a pushable join's legs. Spark 4.1's `V2ScanRelationPushDown.pushDownJoin` only
   * fires when each join input is a bare scan under ATTRIBUTE-ONLY
   * projections (the rule mints its own `ColumnWithAlias` renames for
   * output dedup, but never consumes a plan-level Alias) — so the
@@ -23,21 +22,13 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * `coalesce(x, 0)` evaluated above an outer join would turn a
   * null-extended row's NULL into 0).
   *
-  * Scoped to joins whose legs all bottom out in graftserver relations
-  * on one connection (the only joins the engine pushes) — foreign
-  * plans are never perturbed. Stable in the fixed-point batch: pulled
-  * Projects contain no Alias over a join leg anymore, and the
-  * re-inserted pruning Projects are attribute-only.
+  * Scoped by the rule's gate to joins whose legs all bottom out in
+  * graftserver relations on one connection (the only joins the engine
+  * pushes) — foreign plans are never perturbed. Stable in the
+  * fixed-point batch: pulled Projects contain no Alias over a join leg
+  * anymore, and the re-inserted pruning Projects are attribute-only.
   */
-object AliasPullup extends Rule[LogicalPlan] {
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      try conf.getConfString(graft.GraftConf.JoinPushdownConf, "false").toBoolean
-      catch { case _: Exception => false }
-    if (!enabled) plan
-    else plan.transformUp { case j: Join => rewrite(j) }
-  }
+object AliasPullup {
 
   /** A leg of shape `Project(attrs-and-renames, child)` with at least
     * one rename: (stripped leg, rename map alias-exprId -> underlying
@@ -65,15 +56,12 @@ object AliasPullup extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  private def rewrite(j: Join): LogicalPlan = {
+  private[plans] def rewrite(j: Join): LogicalPlan = {
     // only the join types the engine can push (semi/anti joins output
     // the LEFT side only — a concatenated projection would reference
     // missing right attributes; full-outer never pushes)
     if (j.joinType != Inner && j.joinType != LeftOuter &&
         j.joinType != RightOuter) return j
-    val lConn = ResidualJoinHoist.graftConnection(j.left)
-    if (lConn.isEmpty || lConn != ResidualJoinHoist.graftConnection(j.right))
-      return j
     val l = peel(j.left)
     val r = peel(j.right)
     if (l.isEmpty && r.isEmpty) return j

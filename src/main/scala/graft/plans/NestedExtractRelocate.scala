@@ -2,15 +2,14 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import scala.jdk.CollectionConverters._
 
-/** Optimizer rule: keep a graftserver JOIN pushable when Catalyst's
-  * NestedColumnAliasing has rewritten a nested order/filter key into an
+/** The third rewrite of [[PrepareJoinLegs]]: keep a graftserver JOIN
+  * pushable when Catalyst's NestedColumnAliasing has rewritten a nested order/filter key into an
   * extraction Project INSIDE a join input — `ORDER BY meta.score LIMIT n`
   * over a join becomes `Project(..., meta._1 AS _extract__1, rel)` below
   * the Join, and Spark's pushDownJoin requires ATTRIBUTE-ONLY projections
@@ -29,42 +28,27 @@ import scala.jdk.CollectionConverters._
   * ExtractValue left for NestedColumnAliasing to alias, and this rule
   * only matches Projects containing extraction aliases. The derived
   * column reuses the alias's exprId, so every parent reference resolves
-  * unchanged. Fires only under a Join whose legs are graftserver
-  * relations on one connection (the only place the projection shape
-  * costs anything); plain scans keep Spark's own nested-schema pruning.
+  * unchanged. The rule's gate admits only a Join whose legs are
+  * graftserver relations on one connection (the only place the
+  * projection shape costs anything); plain scans keep Spark's own
+  * nested-schema pruning.
   */
-object NestedExtractRelocate extends Rule[LogicalPlan] {
+object NestedExtractRelocate {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      try conf.getConfString(graft.GraftConf.JoinPushdownConf, "false").toBoolean
-      catch { case _: Exception => false }
-    if (!enabled) plan
-    else plan.transformUp {
-      case j: Join if graftLegs(j) =>
-        val newLeft = relocate(j.left)
-        val newRight = relocate(j.right)
-        if (newLeft.eq(j.left) && newRight.eq(j.right)) j
-        else j.copy(left = newLeft, right = newRight)
-    }
-  }
-
-  private def graftLegs(j: Join): Boolean = {
-    def ok(p: LogicalPlan): Boolean = {
-      val leaves = p.collectLeaves()
-      leaves.nonEmpty && leaves.forall {
-        case r: DataSourceV2Relation =>
-          graft.server.GraftServerSource.served(r.table)
-        case _ => false
-      }
-    }
-    ok(j.left) && ok(j.right)
+  private[plans] def rewrite(j: Join): LogicalPlan = {
+    val newLeft = relocate(j.left)
+    val newRight = relocate(j.right)
+    if (newLeft.eq(j.left) && newRight.eq(j.right)) j
+    else j.copy(left = newLeft, right = newRight)
   }
 
   private def relocate(leg: LogicalPlan): LogicalPlan = leg match {
     case p @ Project(projectList, rel: DataSourceV2Relation)
         if graft.server.GraftServerSource.served(rel.table) &&
-          projectList.exists(isExtractAlias(_, rel)) =>
+          projectList.exists {
+            case Alias(chain, _) => isExtract(chain, rel)
+            case _ => false
+          } =>
       val extracts = projectList.collect {
         case a @ Alias(chain, _) if isExtract(chain, rel) => a
       }
@@ -76,7 +60,7 @@ object NestedExtractRelocate extends Rule[LogicalPlan] {
       if (names.exists(schemaNames.contains) || names.distinct.size != names.size)
         return leg
       val derived = extracts.flatMap { a =>
-        docPathOf(a.child).map { path =>
+        chainPath(a.child).map { path =>
           val head = path.split('.').head
           val mapped = existing.get(head)
             .map(h => (h +: path.split('.').toSeq.tail).mkString("."))
@@ -113,32 +97,11 @@ object NestedExtractRelocate extends Rule[LogicalPlan] {
     case _ => leg
   }
 
-  private def isExtractAlias(e: NamedExpression, rel: DataSourceV2Relation): Boolean =
-    e match {
-      case Alias(chain, _) => isExtract(chain, rel)
-      case _ => false
-    }
-
-  /** A pure GetStructField chain rooted at one of the relation's own
-    * struct columns (no arrays, no maps — those change row counts or
-    * need element semantics the flat mapping cannot spell).
+  /** A GetStructField chain, at least one extraction deep, rooted at one
+    * of the relation's own struct columns (no arrays, no maps — those
+    * change row counts or need element semantics the flat mapping cannot
+    * spell).
     */
   private def isExtract(e: Expression, rel: DataSourceV2Relation): Boolean =
-    e match {
-      case GetStructField(child, _, _) => isExtract(child, rel) ||
-        (child match {
-          case a: AttributeReference => rel.outputSet.contains(a)
-          case _ => false
-        })
-      case _ => false
-    }
-
-  /** Dotted document path of the chain (field names from the struct
-    * schemas, root column first). */
-  private def docPathOf(e: Expression): Option[String] = e match {
-    case a: AttributeReference => Some(a.name)
-    case g @ GetStructField(child, ord, _) =>
-      docPathOf(child).map(_ + "." + g.childSchema(ord).name)
-    case _ => None
-  }
+    e.isInstanceOf[GetStructField] && chainRoot(e).exists(rel.outputSet.contains)
 }

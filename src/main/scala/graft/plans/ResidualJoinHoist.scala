@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.query.FilterTranslator
+import graft.server.JoinPush
 import graft.source.ReadModel
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -8,11 +9,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project, Sample}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.types.DataType
-import org.apache.spark.sql.{sources => v1}
+import org.apache.spark.sql.types.{ArrayType, DataType}
 
 /** Transparent passthrough marker for a RESIDUAL predicate hoisted above a
   * pushable join. Evaluation and codegen forward to the child; the ONLY
@@ -37,12 +35,12 @@ case class Recheck(child: Expression) extends UnaryExpression {
   override def prettyName: String = "recheck"
 }
 
-/** Optimizer rule (operator-optimization batch, BEFORE the early-scan
-  * pushdown): make an equi-join of two graftserver collections pushable
-  * even when a RESIDUAL predicate rides along — the reference's
-  * decomposePredicate discipline (hive/.../MongoStorageHandler.java:
-  * 100-128: push what translates, re-check the rest above) applied to the
-  * join pipeline.
+/** The first rewrite of [[PrepareJoinLegs]] (operator-optimization
+  * batch, BEFORE the early-scan pushdown): make an equi-join of two
+  * graftserver collections pushable even when a RESIDUAL predicate
+  * rides along — the reference's decomposePredicate discipline
+  * (hive/.../MongoStorageHandler.java:100-128: push what translates,
+  * re-check the rest above) applied to the join pipeline.
   *
   * Spark 4.1's V2ScanRelationPushDown.pushDownJoin only fires when BOTH
   * join inputs are bare scan holders (its PhysicalOperation match
@@ -71,34 +69,23 @@ case class Recheck(child: Expression) extends UnaryExpression {
   * NON-preserved side, non-deterministic predicates, and subqueries are
   * never hoisted.
   *
-  * The rule is deliberately narrow: it fires only when DSv2 join pushdown
-  * is enabled, both legs bottom out in graftserver relations on ONE
-  * server+database, and at least one bracket-safe key equality remains in
-  * the condition (the pushed `$lookup` needs its `$expr` keys). When the
-  * later pushdown still refuses (e.g. an output-name collision), the cost
-  * is bounded: the re-check evaluates after the Spark join instead of
-  * before it.
+  * The rewrite is deliberately narrow: it sees only joins whose legs
+  * bottom out in graftserver relations on ONE connection (the rule's
+  * gate), and fires only while at least one operand-safe key equality
+  * remains in the condition (the pushed `$lookup` needs its `$expr`
+  * keys). When the later pushdown still refuses (e.g. an output-name
+  * collision), the cost is bounded: the re-check evaluates after the
+  * Spark join instead of before it.
   */
-object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
+object ResidualJoinHoist extends PredicateHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      try conf.getConfString(graft.GraftConf.JoinPushdownConf, "false").toBoolean
-      catch { case _: Exception => false }
-    if (!enabled) plan
-    else plan.transformUp { case j: Join => rewrite(j) }
-  }
-
-  private def rewrite(j: Join): LogicalPlan = {
+  private[plans] def rewrite(j: Join): LogicalPlan = {
     if (j.condition.isEmpty) return j
     if (j.joinType != Inner && j.joinType != LeftOuter && j.joinType != RightOuter)
       return j
-    val lConn = graftConnection(j.left)
-    val rConn = graftConnection(j.right)
-    if (lConn.isEmpty || lConn != rConn) return j
 
     val conjuncts = splitConjunctivePredicates(j.condition.get)
-    val equis = conjuncts.filter(isSafeEqui(j, _))
+    val equis = conjuncts.filter(isKey(j, ReadModel.Equal))
     if (equis.isEmpty) return j
     val rest = conjuncts.filterNot(equis.contains)
     // cross-side extras are only extractable from an INNER condition;
@@ -110,7 +97,7 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
     val crossSide = rest.filter(c =>
       !c.references.subsetOf(j.left.outputSet) &&
         !c.references.subsetOf(j.right.outputSet) &&
-        !isSafeRange(j, c))
+        !isKey(j, ReadModel.Range)(c))
     val (condPins, condKeep) =
       if (j.joinType == Inner && crossSide.forall(hoistable))
         rest.partition(c => crossSide.contains(c) && hoistable(c))
@@ -181,28 +168,7 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
     case other => Recheck(other)
   }
 
-  // ---- graftserver leg detection ----
-
-  /** The (factory, location, database) connection id shared by EVERY
-    * graftserver leaf under the leg — None when any leaf is something
-    * else (never hoist around a foreign source's join input).
-    * Shared with [[AliasPullup]]'s scope gate.
-    */
-  private[plans] def graftConnection(leg: LogicalPlan): Option[(String, String, String)] = {
-    val leaves = leg.collectLeaves()
-    val ids = leaves.map {
-      case r: DataSourceV2Relation if graft.server.GraftServerSource.served(r.table) =>
-        val o = r.options
-        val ns = Option(o.get("ns")).getOrElse("")
-        Some((Option(o.get("client_factory")).getOrElse(""),
-          Option(o.get("uri")).getOrElse(Option(o.get("server_dir")).getOrElse("")),
-          ns.split('.').headOption.getOrElse("")))
-      case _ => None
-    }
-    if (ids.isEmpty || ids.contains(None)) None
-    else if (ids.flatten.distinct.size == 1) ids.head
-    else None
-  }
+  // ---- join keys ----
 
   /** Options of the graftserver leaf that owns `a` (None when the
     * attribute was aliased on the way up — conservatively unsafe).
@@ -216,54 +182,31 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
         r.options.asScala.toMap
     }
 
-  /** `x = y` across the two legs with an exact key type on BOTH sides —
-    * the join pushdown's own gate ([[graft.source.ReadModel]]'s Stored
-    * EQUAL cell), applied pre-pushdown so the rule only strips a join
-    * down to equalities the `$lookup` can actually take.
-    */
-  private def isSafeEqui(j: Join, c: Expression): Boolean = c match {
-    case EqualTo(x, y) =>
-      (keyRoot(x), keyRoot(y)) match {
-        case (Some(xa), Some(ya)) =>
-          val cross =
-            (j.left.outputSet.contains(xa) && j.right.outputSet.contains(ya)) ||
-              (j.right.outputSet.contains(xa) && j.left.outputSet.contains(ya))
-          cross &&
-            ownerOptions(j, xa).exists(o => exact(ReadModel.Equal, x.dataType, o, None)) &&
-            ownerOptions(j, ya).exists(o => exact(ReadModel.Equal, y.dataType, o, None))
-        case _ => false
-      }
-    case _ => false
+  /** What a key conjunct compares: EQUAL for `x = y`, RANGE for `x < y`
+    * and the like. */
+  private def keyKind(c: Expression): Option[ReadModel.Comparison] = c match {
+    case _: EqualTo => Some(ReadModel.Equal)
+    case _: LessThan | _: LessThanOrEqual | _: GreaterThan | _: GreaterThanOrEqual =>
+      Some(ReadModel.Range)
+    case _ => None
   }
 
-  /** `x OP y` across the two legs with RANGE-orderable key types on
-    * BOTH sides — the join pushdown's own gate (the Stored RANGE cell),
-    * applied pre-hoist so a conjunct the scan can spell into the
-    * `$lookup` `$expr` is never stripped out of the condition. */
-  private def isSafeRange(j: Join, c: Expression): Boolean = {
-    def sides(x: Expression, y: Expression): Boolean =
-      (keyRoot(x), keyRoot(y)) match {
-        case (Some(xa), Some(ya)) =>
-          val cross =
-            (j.left.outputSet.contains(xa) && j.right.outputSet.contains(ya)) ||
-              (j.right.outputSet.contains(xa) && j.left.outputSet.contains(ya))
-          cross &&
-            ownerOptions(j, xa).exists(o =>
-              exact(ReadModel.Range, x.dataType, o, docFieldOf(o, x))) &&
-            ownerOptions(j, ya).exists(o =>
-              exact(ReadModel.Range, y.dataType, o, docFieldOf(o, y)))
-        case _ => false
-      }
-    c match {
-      case LessThan(x, y) => sides(x, y)
-      case LessThanOrEqual(x, y) => sides(x, y)
-      case GreaterThan(x, y) => sides(x, y)
-      case GreaterThanOrEqual(x, y) => sides(x, y)
-      case _ => false
+  /** `c` compares one leg's column (or nested field) with the other's as
+    * `kind`, and both operands pass the join pushdown's own gate
+    * ([[JoinPush.operand]]) applied pre-pushdown: the hoist strips a join
+    * down only to equalities the `$lookup` can take, and never strips a
+    * range the scan can spell into the `$lookup` `$expr`. */
+  private def isKey(j: Join, kind: ReadModel.Comparison)(c: Expression): Boolean =
+    keyKind(c).contains(kind) && {
+      val roots = c.children.flatMap(chainRoot)
+      roots.size == 2 &&
+        roots.exists(j.left.outputSet.contains) && roots.exists(j.right.outputSet.contains) &&
+        c.children.zip(roots).forall { case (e, a) =>
+          ownerOptions(j, a).exists(o => JoinPush.operand(kind, e.dataType, o, docFieldOf(o, e)))
+        }
     }
-  }
 
-  /** The DOC field a BARE-attribute range operand reads (through the
+  /** The DOC field a BARE-attribute operand reads (through the
     * relation's column_mapping) — the name the `ascii_columns`
     * declaration uses; nested extractions stay None (strings refuse). */
   private def docFieldOf(opts: Map[String, String],
@@ -274,95 +217,25 @@ object ResidualJoinHoist extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
-  /** The join pushdown's operand gate: a `$lookup` compares stored
-    * values. */
-  private def exact(c: ReadModel.Comparison, dt: DataType,
-      opts: Map[String, String], docField: Option[String]): Boolean =
-    ReadModel.exact(c, dt, ReadModel.Stored, opts, docField)
-
-  /** The base attribute of a join-key expression: a bare column or a
-    * nested-struct extraction chain over one.
-    */
-  private def keyRoot(e: Expression): Option[Attribute] = e match {
-    case a: Attribute => Some(a)
-    case GetStructField(child, _, _) => keyRoot(child)
-    case _ => None
-  }
-
   // ---- source-translatability probe ----
 
   /** True when the source would hand this conjunct back as a residual:
-    * either it has no v1 `sources.Filter` shape at all (arithmetic, UDF,
+    * either Spark's own v1 translation (the one its V2 filter pushdown
+    * applies) gives it no `sources.Filter` shape at all (arithmetic, UDF,
     * casts), the engine's own [[FilterTranslator]] refuses it, or it is
     * a null test on an ARRAY-typed column — the scan's type-aware
     * arrayNullTest keeps those residual (`{$eq/$ne: null}` element-
-    * matches on a live server), which the name-level translate probe
+    * matches on a live server), which the name-level translation
     * cannot see (r17: a user-written `arr IS NOT NULL` in a leg used to
     * silently forfeit the join push). A false negative here (claiming
     * translatable when the source would refuse) just leaves the status
     * quo; a false positive hoists a pushable filter — both are correct,
     * so the probe may be approximate.
     */
-  private def sourceResidual(e: Expression): Boolean = {
-    def arrayTyped(x: Expression): Boolean =
-      x.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]
-    e match {
-      case IsNull(x) if arrayTyped(x) => true
-      case IsNotNull(x) if arrayTyped(x) => true
-      case _ =>
-        toV1(e) match {
-          case Some(f) => FilterTranslator.translate(f).isEmpty
-          case None => true
-        }
-    }
-  }
-
-  private def colName(e: Expression): Option[String] = e match {
-    case a: Attribute => Some(a.name)
-    case GetStructField(child, _, Some(name)) => colName(child).map(_ + "." + name)
-    case g @ GetStructField(child, ord, None) =>
-      colName(child).map(_ + "." + g.childSchema(ord).name)
-    case _ => None
-  }
-
-  private def ext(l: Literal): Any =
-    CatalystTypeConverters.convertToScala(l.value, l.dataType)
-
-  /** Mirror of Spark's v1 filter translation for the shapes the engine's
-    * translator understands (attribute-vs-literal comparisons, IN, null
-    * tests, string predicates, AND/OR/NOT). Anything else is residual by
-    * construction — Spark itself cannot hand it to a v1 source.
-    */
-  private def toV1(e: Expression): Option[v1.Filter] = e match {
-    case EqualTo(a, l: Literal) => colName(a).map(v1.EqualTo(_, ext(l)))
-    case EqualTo(l: Literal, a) => colName(a).map(v1.EqualTo(_, ext(l)))
-    case EqualNullSafe(a, l: Literal) => colName(a).map(v1.EqualNullSafe(_, ext(l)))
-    case EqualNullSafe(l: Literal, a) => colName(a).map(v1.EqualNullSafe(_, ext(l)))
-    case GreaterThan(a, l: Literal) => colName(a).map(v1.GreaterThan(_, ext(l)))
-    case GreaterThan(l: Literal, a) => colName(a).map(v1.LessThan(_, ext(l)))
-    case GreaterThanOrEqual(a, l: Literal) => colName(a).map(v1.GreaterThanOrEqual(_, ext(l)))
-    case GreaterThanOrEqual(l: Literal, a) => colName(a).map(v1.LessThanOrEqual(_, ext(l)))
-    case LessThan(a, l: Literal) => colName(a).map(v1.LessThan(_, ext(l)))
-    case LessThan(l: Literal, a) => colName(a).map(v1.GreaterThan(_, ext(l)))
-    case LessThanOrEqual(a, l: Literal) => colName(a).map(v1.LessThanOrEqual(_, ext(l)))
-    case LessThanOrEqual(l: Literal, a) => colName(a).map(v1.GreaterThanOrEqual(_, ext(l)))
-    case In(a, list) if list.forall(_.isInstanceOf[Literal]) =>
-      colName(a).map(v1.In(_, list.map(x => ext(x.asInstanceOf[Literal])).toArray))
-    case InSet(a, set) =>
-      // InSet holds INTERNAL values; convert through the child type
-      colName(a).map(n => v1.In(n, set.toArray.map(
-        CatalystTypeConverters.convertToScala(_, a.dataType))))
-    case IsNull(a) => colName(a).map(v1.IsNull)
-    case IsNotNull(a) => colName(a).map(v1.IsNotNull)
-    case StartsWith(a, Literal(s, _)) if s != null =>
-      colName(a).map(v1.StringStartsWith(_, s.toString))
-    case EndsWith(a, Literal(s, _)) if s != null =>
-      colName(a).map(v1.StringEndsWith(_, s.toString))
-    case Contains(a, Literal(s, _)) if s != null =>
-      colName(a).map(v1.StringContains(_, s.toString))
-    case And(x, y) => for (fx <- toV1(x); fy <- toV1(y)) yield v1.And(fx, fy)
-    case Or(x, y) => for (fx <- toV1(x); fy <- toV1(y)) yield v1.Or(fx, fy)
-    case Not(x) => toV1(x).map(v1.Not)
-    case _ => None
+  private def sourceResidual(e: Expression): Boolean = e match {
+    case IsNull(x) if x.dataType.isInstanceOf[ArrayType] => true
+    case IsNotNull(x) if x.dataType.isInstanceOf[ArrayType] => true
+    case _ =>
+      org.apache.spark.sql.graft.Bridge.v1Filter(e).forall(FilterTranslator.translate(_).isEmpty)
   }
 }

@@ -165,10 +165,7 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     // Attribute input (incl. an already-wrapped one — idempotence) never
     // had the problem
     if (!arr0.isInstanceOf[AttributeReference]) return None
-    val joinPushdown =
-      try conf.getConfString(graft.GraftConf.JoinPushdownConf, "false").toBoolean
-      catch { case _: Exception => false }
-    if (!joinPushdown) return None
+    if (!graft.server.JoinPush.enabled(conf)) return None
     val isMapInput =
       arr0.dataType.isInstanceOf[org.apache.spark.sql.types.MapType]
     def vacuous(c: Expression): Boolean = (c match {
@@ -188,7 +185,7 @@ object UnwindRelocate extends Rule[LogicalPlan] {
         val ch2 = strip(ch)
         keep.reduceOption(And).map(Filter(_, ch2)).getOrElse(ch2)
       case pr: Project => pr.copy(child = strip(pr.child))
-      case jn: Join if ResidualJoinHoist.graftConnection(jn).isDefined =>
+      case jn: Join if graft.server.JoinPush.legConnection(jn).isDefined =>
         sawGraftJoin = true
         jn.copy(left = strip(jn.left), right = strip(jn.right))
       case other => other
@@ -262,9 +259,10 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     }
     // every project entry must be an attribute or an extraction alias
     // (anything computed would need its own relocation)
+    def onRel(e: Expression): Boolean = chainRoot(e).exists(rel.outputSet.contains)
     val plOk = pl.forall {
       case _: AttributeReference => true
-      case Alias(chain, _) => isExtract(chain, rel)
+      case Alias(chain, _) => onRel(chain)
       case _ => false
     }
     if (!plOk) return None
@@ -278,7 +276,7 @@ object UnwindRelocate extends Rule[LogicalPlan] {
           org.apache.spark.sql.types.StringType, vt, _), Some(_)) => vt
       case _ => return None
     }
-    val arrPath = docPathOf(arr, rel).getOrElse(return None)
+    val arrPath = (if (onRel(arr)) chainPath(arr) else None).getOrElse(return None)
     // if the array column itself (or a struct holding it) survives above
     // the explode, the unwound document cannot carry both the element
     // and the original array at one path — leave the Generate to Spark
@@ -535,23 +533,4 @@ object UnwindRelocate extends Rule[LogicalPlan] {
     case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
     case other => Seq(other)
   }
-
-  /** A pure GetStructField chain rooted at one of the relation's own
-    * struct columns. */
-  private def isExtract(e: Expression, rel: DataSourceV2Relation): Boolean =
-    e match {
-      case a: AttributeReference => rel.outputSet.contains(a)
-      case GetStructField(child, _, _) => isExtract(child, rel)
-      case _ => false
-    }
-
-  /** Dotted document path of a column / nested-struct chain rooted at
-    * the relation's own output. */
-  private def docPathOf(e: Expression, r: DataSourceV2Relation): Option[String] =
-    e match {
-      case a: AttributeReference if r.outputSet.contains(a) => Some(a.name)
-      case g @ GetStructField(child, ord, _) =>
-        docPathOf(child, r).map(_ + "." + g.childSchema(ord).name)
-      case _ => None
-    }
 }

@@ -95,12 +95,6 @@ final case class Unwind(path: String, outer: Boolean = false, mapKv: Boolean = f
     !elementField.contains('.') && BQuery.fieldPaths(post).forall(p =>
       atOrUnder(p, elementField) || posField.contains(p))
 
-  /** The post-unwind match as a test of one row of a parent. */
-  def postFilter(post: BQuery): (BDoc, Elem) => Boolean =
-    if (post == BQuery.True) (_, _) => true
-    else if (elementOnly(post)) (d, e) => post.matches(elementDoc(d, e, narrow = false))
-    else (d, e) => post.matches(doc(d, e))
-
   /** Parent → its unwound documents that pass `post`. `narrow` injects the
     * pos as the int32 the pos column decodes, instead of the wire int64. */
   def expander(post: BQuery, narrow: Boolean = false): BDoc => Iterator[BDoc] =

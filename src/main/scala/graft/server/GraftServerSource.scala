@@ -125,8 +125,11 @@ object GraftServerSource {
     distinct.filterNot(hasProjectedAncestor)
   }
 
+  /** The `client_factory` a scan names none: the sandbox server. */
+  val DefaultFactory: String = classOf[DirServerFactory].getName
+
   def factory(opts: Map[String, String]): ServerClientFactory =
-    Class.forName(opts.getOrElse("client_factory", classOf[DirServerFactory].getName))
+    Class.forName(opts.getOrElse("client_factory", DefaultFactory))
       .getDeclaredConstructor().newInstance().asInstanceOf[ServerClientFactory]
 
   def withClient[A](opts: Map[String, String])(f: (ServerClient, String) => A): A = {
@@ -407,7 +410,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
         joinTopN.isDefined || joinSamples.nonEmpty || joinOffset.isDefined)
       return false
     joinTopN = Pushdown.topNOrder(Pushdown.Columns(joinedSchema), orders, r =>
-        ReadModel.exact(ReadModel.Order, r.dataType, ReadModel.Stored,
+        JoinPush.operand(ReadModel.Order, r.dataType,
           joinedColOpts.getOrElse(r.docPath.split('.').head, options)))
       .map(keys => (keys.map { case (r, desc) => (r.docPath, desc) }, n))
     joinTopN.isDefined
@@ -439,7 +442,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     // no doc field: a joined output name is not the stored field that
     // `ascii_columns` names
     def ok(c: ReadModel.Comparison)(r: FieldResolve.Ref) =
-      ReadModel.exact(c, r.dataType, ReadModel.Stored, sideOpts(r))
+      JoinPush.operand(c, r.dataType, sideOpts(r))
     joinedAgg = GroupAggParse.parse(aggregation, Pushdown.Columns(joinedSchema).resolve,
       ok(ReadModel.Group), ok(ReadModel.Order), ok(ReadModel.Sum)).map(GroupedAgg.of)
     joinedAgg.isDefined
@@ -498,11 +501,6 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   // MIRRORED (right outer) join
   private var drivingOpts: Map[String, String] = options
 
-  private def connectionId: (String, String, String) = (
-    options.getOrElse("client_factory", classOf[DirServerFactory].getName),
-    options.getOrElse("uri", options.getOrElse("server_dir", "")),
-    QueryDocs.nsParts(GraftServerSource.ns(options))._1)
-
   /** Usable as the DRIVING side: a pushed `$unwind` composes (r15) —
     * the pipeline becomes `$match`+`$unwind`+`$match(post)`+`$lookup`,
     * per-ELEMENT rows feeding the join — provided the post-unwind
@@ -549,7 +547,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
         // mirrored (right-outer) join makes IT the driving side, which
         // pushDownJoin gates per join type
         (cleanAsDriving || chainableForJoin) && o.cleanAsDriving &&
-          connectionId == o.connectionId
+          JoinPush.connection(options) == JoinPush.connection(o.joinOptions)
       case _ => false
     }
 
@@ -721,21 +719,18 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
         def docField(p: Seq[(String, String, org.apache.spark.sql.types.DataType)],
             out: String): Option[String] =
           scala.util.Try(LookupJoin.fieldOf(pairs(p), out)).toOption
-        // both operands of every conjunct must compare exactly on the
-        // stored values ([[ReadModel]]'s Stored EQUAL and RANGE cells; a
+        // both operands of every conjunct must pass the operand gate (a
         // chained left operand has no known doc field, so its strings
         // refuse and the residual-join hoist re-checks them in Spark)
-        def exact(c: ReadModel.Comparison, dt: org.apache.spark.sql.types.DataType,
-            opts: Map[String, String], field: Option[String] = None) =
-          ReadModel.exact(c, dt, ReadModel.Stored, opts, field)
         orientCond(condition, lp, rp) match {
           case Some((refs, rngRefs)) if refs.forall { case (l, r) =>
-              exact(ReadModel.Equal, l.dataType, leftOpts(l.name)) &&
-                exact(ReadModel.Equal, r.dataType, o.joinOptions) } &&
+              JoinPush.operand(ReadModel.Equal, l.dataType, leftOpts(l.name)) &&
+                JoinPush.operand(ReadModel.Equal, r.dataType, o.joinOptions) } &&
               rngRefs.forall { case (l, _, r) =>
-                exact(ReadModel.Range, l.dataType, leftOpts(l.name),
+                JoinPush.operand(ReadModel.Range, l.dataType, leftOpts(l.name),
                   if (chained) None else docField(lp, l.name)) &&
-                  exact(ReadModel.Range, r.dataType, o.joinOptions, docField(rp, r.name)) } =>
+                  JoinPush.operand(ReadModel.Range, r.dataType, o.joinOptions,
+                    docField(rp, r.name)) } =>
             // roles: the driving builder feeds the pipeline, the lookup
             // builder is the stage's right side
             val (driving, lookup) = if (mirrored) (o, this) else (this, o)
@@ -1067,10 +1062,9 @@ final class GraftServerPartitionReader(p: GraftServerPartition, spec: ScanSpec,
 
   // `$unwind` (r14): the cursor streams PARENT docs (one array per
   // parent crosses the wire, never the flattened cross-product) and the
-  // reader emits one row per element — the element column slot is
-  // filled per element, every other slot decodes once per parent.
-  // EXCEPT in pipeline mode (spec.tailsPostUnwind): a LIMIT/TopN/OFFSET tail
-  // counts unwound rows, so the whole unwind+post+tail runs server-side
+  // reader emits one row per element ([[Unwind.expandAll]], as the file
+  // reader does). EXCEPT in pipeline mode (spec.tailsPostUnwind): a
+  // LIMIT/TopN/OFFSET tail counts unwound rows, so the whole unwind+post+tail runs server-side
   // ([[ServerClient.unwoundRead]]) and the cursor streams PER-ELEMENT
   // docs — the reader decodes them like a plain scan
   private val pipelineMode: Boolean = spec.tailsPostUnwind
@@ -1080,20 +1074,10 @@ final class GraftServerPartitionReader(p: GraftServerPartition, spec: ScanSpec,
   private val nsCol =
     new graft.source.MetaColumn(spec.required, GraftServerSource.NsMetaCol, spec.meta, p.ns)
   private val decodeSchema: StructType = nsCol.decodeSchema
-  // under unwind, the element column decodes per ELEMENT, not per doc
-  // posexplode: the pos COLUMN binds the element index (null for rows
-  // that are not elements)
-  private val elIdx: Int = unwind.flatMap(_.element)
-    .map(decodeSchema.fieldNames.indexOf(_)).getOrElse(-1)
-  private val posIdx: Int = unwind.flatMap(_.pos)
-    .map(decodeSchema.fieldNames.indexOf(_)).getOrElse(-1)
-  private val parentSchema: StructType = StructType(
-    decodeSchema.fields.zipWithIndex
-      .filterNot { case (_, i) => i == elIdx || i == posIdx }
-      .map(_._1))
-  private val elType: org.apache.spark.sql.types.DataType =
-    if (elIdx < 0) org.apache.spark.sql.types.NullType
-    else decodeSchema.fields(elIdx).dataType
+  // the columns read from the parent doc: all but the element and pos
+  // columns, which hold per-row values
+  private val parentCols: Seq[String] = decodeSchema.fieldNames.toSeq
+    .filterNot(n => unwind.exists(u => u.element.contains(n) || u.pos.contains(n)))
 
   // Spark column -> document field (column_mapping): decode and the
   // cursor projection address DOCUMENT paths
@@ -1127,12 +1111,13 @@ final class GraftServerPartitionReader(p: GraftServerPartition, spec: ScanSpec,
       skip = offset.map(_.toLong).getOrElse(0L),
       limit = spec.rowCap.map(_.toLong).getOrElse(-1L),
       projection = Some(GraftServerSource.pruneProjection(
-        parentSchema.fieldNames.map(n => mapping.getOrElse(n, n)).toSeq ++
+        parentCols.map(n => mapping.getOrElse(n, n)) ++
         // the per-element docs carry the element at its element field
         // (a MAP unwind's kv entry, which the key/value mappings read —
         // the map path itself is never a column post-unwind)
         Seq(unwind.get.elementField) ++
-        (if (posIdx >= 0) unwind.get.posField else None) ++
+        unwind.get.posField.filter(_ =>
+          unwind.get.pos.exists(decodeSchema.fieldNames.contains)) ++
         asciiOrderFields)))
       .map(Unwind.narrowPos(_))
   else
@@ -1152,7 +1137,7 @@ final class GraftServerPartitionReader(p: GraftServerPartition, spec: ScanSpec,
         projection = Some(GraftServerSource.pruneProjection(
           // a COMPUTED column's value is reader-injected; the cursor
           // fetches its SOURCE field instead of the synthetic name
-          (parentSchema.fieldNames.toSeq
+          (parentCols
             .filterNot(n => computedCols.exists(_.out == n))
             .map(n => mapping.getOrElse(n, n)) ++
           computedCols.map(_.field) ++
@@ -1184,42 +1169,11 @@ final class GraftServerPartitionReader(p: GraftServerPartition, spec: ScanSpec,
     else sampled.map(d => graft.query.ComputedCol.injectAll(computedCols, d))
   }
 
-  /** Post-unwind row stream: parent slots decode ONCE, the element and
-    * pos slots are bound per row of the shared enumerator
-    * ([[Unwind.elements]]), which also decides the post-unwind match.
-    */
+  // pipeline mode's per-element docs hold the element AT the unwound
+  // path, where the element column's mapping entry points
   private val decoded: Iterator[InternalRow] =
-      (if (pipelineMode) None else unwind) match {
-    // plain docs — and pipeline mode, whose per-element docs hold the
-    // element AT the unwound path (the element column's mapping entry
-    // points there, so the plain decode reads it)
-    case None => cursor.map(d => RowCodec.toRow(d, decodeSchema, mapping))
-    // MAP explode (r15): per-entry kv docs (key/value columns decode
-    // through their __graft_kv.k/.v mapping entries)
-    case Some(u) if u.mapKv =>
-      cursor.flatMap(u.expander(unwindPost, narrow = true))
-        .map(RowCodec.toRow(_, decodeSchema, mapping))
-    case Some(u) =>
-      val keep = u.postFilter(unwindPost)
-      val elSchema = StructType(Seq(org.apache.spark.sql.types.StructField("e", elType)))
-      def decodeEl(v: BsonValue): Any =
-        if (v == BNull) null else RowCodec.toRow(BDoc("e" -> v), elSchema).get(0, elType)
-      cursor.flatMap { d =>
-        val parent = RowCodec.toRow(d, parentSchema, mapping)
-        u.elements(d).filter(keep(d, _)).map { e =>
-          val vals = new Array[Any](decodeSchema.length)
-          var i = 0
-          var j = 0
-          while (i < decodeSchema.length) {
-            if (i == elIdx) vals(i) = decodeEl(e.value.orElse(d.getPath(u.path)).getOrElse(BNull))
-            else if (i == posIdx) vals(i) = if (e.index < 0) null else e.index
-            else { vals(i) = parent.get(j, parentSchema.fields(j).dataType); j += 1 }
-            i += 1
-          }
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-        }
-      }
-  }
+    (if (pipelineMode) cursor else Unwind.expandAll(unwind, unwindPost, cursor, narrow = true))
+      .map(RowCodec.toRow(_, decodeSchema, mapping))
 
   override protected val rows: Iterator[InternalRow] = decoded.map(nsCol.splice)
 

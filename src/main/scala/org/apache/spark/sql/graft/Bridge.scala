@@ -22,6 +22,12 @@ object Bridge {
       : org.apache.spark.sql.connector.expressions.Literal[Any] =
     org.apache.spark.sql.connector.expressions.LiteralValue(value, dataType)
 
+  /** Spark's own v1 filter translation, as its V2 filter pushdown applies
+    * it (nested columns included) — `translateFilter` is protected[sql]. */
+  def v1Filter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = true)
+
   /** Register a native expression builder as a SQL function on a session. */
   def registerFunction(spark: SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit =

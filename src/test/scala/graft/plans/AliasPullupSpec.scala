@@ -60,6 +60,29 @@ class AliasPullupSpec extends SparkSpec {
     assert(q.collect().map(_.getLong(0)).sorted.toSeq == exp)
   }
 
+  test("a leg naming the default client_factory shares the other leg's connection: the rename pulls up") {
+    import spark.implicits._
+    val dir = freshDir()
+    seed(dir)
+    // the same server twice: once by default, once by the factory's name
+    def query(): DataFrame = {
+      val oo = o(dir).select($"_id".as("okey"), $"custkey")
+      val cc = spark.read.format("graftserver")
+        .options(Map("server_dir" -> dir, "ns" -> "db.c",
+          "assume_uniform_storage" -> "true",
+          "client_factory" -> classOf[graft.server.DirServerFactory].getName))
+        .schema("_id LONG, name STRING").load()
+      oo.join(cc, $"custkey" === cc("_id")).select($"okey", $"name")
+    }
+    val q = query()
+    assert(planOf(q).contains("PushedJoin: INNER db.c"), planOf(q))
+    spark.conf.set(graft.GraftConf.JoinPushdownConf, "false")
+    val exp = try query().collect().map(_.toString).sorted.toSeq
+      finally spark.conf.set(graft.GraftConf.JoinPushdownConf, "true")
+    assert(q.collect().map(_.toString).sorted.toSeq == exp)
+    assert(exp.size == (0 until 40).count(_ % 8 <= 4))
+  }
+
   test("renames on BOTH legs and in the join condition pull together") {
     import spark.implicits._
     val dir = freshDir()

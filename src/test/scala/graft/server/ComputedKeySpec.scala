@@ -205,7 +205,7 @@ class ComputedKeySpec extends SparkSpec {
     assert(q.count() > 0)
   }
 
-  test("FILE transport: derived-bin group folds into per-split partials; gates mirror") {
+  test("FILE transport: derived bins stay in Spark; group, filter and TopN rows exact") {
     import spark.implicits._
     val dir = freshDir()
     graft.files.BsonFiles.write(s"$dir/data.bson",
@@ -401,7 +401,7 @@ class ComputedKeySpec extends SparkSpec {
         weekofyear($"ts").as("wk")).agg(count(lit(1)).as("n"))))
   }
 
-  test("MULTI-COLLECTION scans admit computed bins (r18); per-entry key/sort overrides refuse") {
+  test("MULTI-COLLECTION scans leave computed bins in Spark; per-entry query/sort/key rows exact") {
     import spark.implicits._
     val d1 = freshDir(); val d2 = freshDir()
     def writeColl(dir: String, off: Int): Unit =

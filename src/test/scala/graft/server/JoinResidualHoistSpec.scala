@@ -149,6 +149,31 @@ class JoinResidualHoistSpec extends SparkSpec {
     assert(sortedRows(notIn) == sortedRows(notInExp))
   }
 
+  test("a leg naming the default client_factory shares the other leg's connection: UDF residual hoists") {
+    import spark.implicits._
+    val dir = freshDir()
+    seed(dir)
+    val odd = udf((x: Long) => x % 2 == 1)
+    // the same server twice: once by default, once by the factory's name
+    def query(): DataFrame = {
+      val o = serverDf(dir, "db.o", "_id LONG, custkey LONG, suppkey LONG, price DOUBLE")
+      val c = spark.read.format("graftserver")
+        .options(Map("server_dir" -> dir, "ns" -> "db.c",
+          "assume_uniform_storage" -> "true",
+          "client_factory" -> classOf[DirServerFactory].getName))
+        .schema("_id LONG, name STRING, disc DOUBLE").load()
+      o.filter(odd(o("suppkey"))).join(c, o("custkey") === c("_id"))
+        .select(o("_id").as("okey"), $"name")
+    }
+    val q = query()
+    assert(planOf(q).contains("PushedJoin: INNER db.c") && planOf(q).contains("recheck("),
+      planOf(q))
+    spark.conf.set(graft.GraftConf.JoinPushdownConf, "false")
+    val exp = try sortedRows(query()) finally spark.conf.set(graft.GraftConf.JoinPushdownConf, "true")
+    assert(sortedRows(q) == exp)
+    assert(exp.nonEmpty)
+  }
+
   test("LEFT OUTER: preserved-side residual hoists; lookup-side residual refuses") {
     import spark.implicits._
     val dir = freshDir()

@@ -33,7 +33,7 @@ class AggPushdownSpec extends SparkSpec {
       case _ => false
     }
 
-  test("count/min/max push down and match a row-scan aggregate") {
+  test("count/min/max fold in Spark (only a bare COUNT(*) pushes) and match a row-scan aggregate") {
     import spark.implicits._
     val dir = freshDir()
     Seq((1L, 10L, 2.5), (2L, -3L, 9.0), (3L, 7L, -1.5), (4L, 0L, 4.25))
@@ -80,7 +80,7 @@ class AggPushdownSpec extends SparkSpec {
     }
   }
 
-  test("filters, group-by, and option queries leave the probe path for grouped partials") {
+  test("filters, group-by, and option queries refuse the stored count; Spark counts the rows") {
     import spark.implicits._
     val dir = freshDir()
     Seq((1L, 5L), (2L, 6L)).toDF("_id", "k")
@@ -107,7 +107,7 @@ class AggPushdownSpec extends SparkSpec {
 
   // ---- grouped and filtered-global aggregates fold in Spark
 
-  test("grouped aggregate pushes per-split partials and matches a plain scan") {
+  test("grouped aggregate folds in Spark and matches a plain scan") {
     import spark.implicits._
     val dir = freshDir()
     val src = Seq[(Long, java.lang.Long, String, java.lang.Double)](
@@ -131,7 +131,7 @@ class AggPushdownSpec extends SparkSpec {
     assert(got.contains(None), "the NULL group must survive")
   }
 
-  test("SELECT DISTINCT pushes as a zero-aggregate group-by (per-split distinct keys)") {
+  test("SELECT DISTINCT folds in Spark, with and without a pushed filter") {
     import spark.implicits._
     val dir = freshDir()
     val src = Seq[(Long, java.lang.Long, String)](

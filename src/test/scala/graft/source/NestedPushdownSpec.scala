@@ -44,7 +44,7 @@ class NestedPushdownSpec extends SparkSpec {
           (r.getLong(1), r.getDouble(2))).toMap
   }
 
-  test("FILE: GROUP BY meta.lang pushes as a grouped aggregate over the Proj-trie decode") {
+  test("FILE: GROUP BY meta.lang folds in Spark over the Proj-trie decode") {
     import spark.implicits._
     val dir = freshDir()
     seedRows(spark).write.format("graftbson")

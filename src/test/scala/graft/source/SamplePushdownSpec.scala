@@ -130,7 +130,7 @@ class SamplePushdownSpec extends SparkSpec {
     assert(!planOf(optLimited).contains("PushedSample"))
   }
 
-  test("grouped-aggregate partials fold over the SAMPLED stream (file source)") {
+  test("grouped aggregate folds in Spark over the pushed SAMPLED stream (file source)") {
     import spark.implicits._
     val dir = freshDir()
     (0L until 3000L).map(i => (i, (i % 7).toInt, i.toDouble / 8.0))

@@ -131,6 +131,7 @@ class ScanDescriptionSpec extends SparkSpec {
     val j = o.join(c, o("ck") === c("_id")).select(o("_id"), $"name").limit(7)
     val d = described(j)
     assert(d == "graftserver ns=db.o PushedQuery: Exists(ck,true) " +
+      // keys included: Spark builds a joined scan before pruneColumns and requires this width
       "ReadSchema: struct<_id:bigint,ck:bigint,_id_1:bigint,name:string> " +
       "PushedJoin: INNER db.c ON ck = _id_1 " +
       "PushedLimit: 7", d)

@@ -47,7 +47,7 @@ class UnwindFileSpec extends SparkSpec {
       Seq(3L, 4L))
   }
 
-  test("explode + GROUP BY folds per-split partials over unwound rows") {
+  test("explode + GROUP BY: the unwind pushes and Spark folds the unwound rows") {
     import spark.implicits._
     val dir = freshDir()
     seed(dir)
